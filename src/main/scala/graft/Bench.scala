@@ -147,6 +147,28 @@ object Bench {
     } else java.nio.file.Files.writeString(p, json)
   }
 
+  /** In-run board write that never replaces an existing file: when
+    * `path` is taken the board lands at the first free numbered sibling
+    * (`BENCH_LOCAL_c8_sf0.1.json` → `BENCH_LOCAL_c8_sf0.1-2.json`,
+    * `-3`, …). Files are created exclusively, so two concurrent runs
+    * cannot take the same name. `SPARK_GRAFT_BOARD_FORCE=1` overwrites
+    * `path` (deliberate resets). Returns the file written. */
+  private[graft] def writeBoardNew(path: String, json: String): java.nio.file.Path = {
+    import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
+    if (sys.env.get("SPARK_GRAFT_BOARD_FORCE").exists(_ == "1"))
+      Files.writeString(Paths.get(path), json)
+    else {
+      val (stem, ext) =
+        if (path.endsWith(".json")) (path.stripSuffix(".json"), ".json") else (path, "")
+      Iterator.from(1)
+        .map(n => Paths.get(if (n == 1) path else s"$stem-$n$ext"))
+        .find { p =>
+          try { Files.writeString(p, json, StandardOpenOption.CREATE_NEW); true }
+          catch { case _: FileAlreadyExistsException => false }
+        }.get
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length == 4 && args(0) == "--merge") {
       val merged = mergeArtifacts(
@@ -400,13 +422,16 @@ object Bench {
     // r5/r6 one, but r8 rotated two PQ-family flagships in and three
     // near-zero rows out (see benchExclude) — round-over-round compare
     // the per-query rows, not the slim total, across that boundary.
-    // Default output is a scratch name, NOT the stall-reference board:
-    // through r14 both defaulted to the same file, so every plain
-    // `runMain graft.Bench` overwrote the curated min-of-2 reference
-    // with a single-run board (the r14 driver run did exactly that,
-    // clobbering the committed 357 s pair with a 439 s cold run). The
-    // reference board is only ever written by the --merge CLI.
-    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL_out.json")
+    // Default output is named after the core count and data dir, NOT
+    // the stall-reference board: through r14 both defaulted to the same
+    // file, so every plain `runMain graft.Bench` overwrote the curated
+    // min-of-2 reference with a single-run board, and in r15 an 8-core
+    // run overwrote the 32-core board through the shared
+    // `BENCH_LOCAL_out.json`. The reference board is only ever written
+    // by the --merge CLI, and an existing file is never replaced
+    // (writeBoardNew picks a numbered sibling).
+    val benchOut = sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_OUT", s"BENCH_LOCAL_c${cpus}_$sfName.json")
     val full =
       s"""{"metric":"total","value":${fmt(totalOf(results))},"unit":"sec",""" +
         s""""failed":$nFailed,"sf":"$sfName","queries":${toJson(results)},""" +
@@ -424,7 +449,7 @@ object Bench {
           s"$refPath with a single-run board; writing $benchOut.rejected")
         benchOut + ".rejected"
       } else benchOut
-    try writeBoardGuarded(outTarget, full, strict = false)
+    try System.err.println(s"[bench] board written to ${writeBoardNew(outTarget, full)}")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $outTarget: ${e.getMessage}") }
     val slim = results.filter { case (name, _) =>

@@ -107,18 +107,34 @@ final case class ArrowSpaceModel private[api] (
       .limit(k)
   }
 
+  /** The feature Laplacian as one broadcast per model, shared by every
+    * [[searchBatch]] call instead of a fresh (never released) broadcast
+    * per call. */
+  @transient private lazy val laplacianBc =
+    items.sparkSession.sparkContext.broadcast(featureLaplacian)
+
   /** Batch λ-aware search: top-k for MANY queries in one distributed
     * pass — queries (query_id, qvec[, qlambda]) join against the item
     * table, score with the same blended kernel, and a per-query window
     * keeps the top k. This is the shape that scales: one shuffle keyed
     * by query_id regardless of query count; broadcast the smaller side.
     * Query λs are computed per-row against the broadcast F×F Laplacian.
+    *
+    * The query table is sized before the broadcast decision in one of
+    * two ways. A table the driver already holds (built from local rows,
+    * e.g. `Seq(...).toDF`) optimizes to a `LocalRelation`: its row count
+    * is read from the plan, its λs and input checks are evaluated on the
+    * driver while planning (so a bad row fails this call, not the later
+    * action), and no Spark job runs until the caller's action. Every
+    * other table (Parquet, a stream, any computed pipeline) is
+    * materialized once with `localCheckpoint` and its rows are counted —
+    * it is never broadcast on an estimate.
     */
   def searchBatch(queries: DataFrame, tau: Double, topk: Int = -1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = items.sparkSession
     val k = if (topk > 0) topk else params.topk
-    val bcLap = spark.sparkContext.broadcast(featureLaplacian)
+    val bcLap = laplacianBc
     val bcTau = this.tau
     val nF = nFeatures
     val lamQ = F.udf { (v: Seq[Double]) =>
@@ -160,19 +176,31 @@ final case class ArrowSpaceModel private[api] (
         queries
           .select(F.col("query_id"), F.col("qvec").cast("array<double>").as("qvec"))
           .withColumn("qlambda", lamQ(F.col("qvec")))
-    // materialize ONCE (also truncates an expensive upstream lineage:
-    // without this the gate's count job and the scored join would each
-    // re-run the caller's pipeline + the per-query λ synthesis), then
-    // gate the broadcast on MEASURED rows AND bytes — the candIdsSized
+    // Gate the broadcast on EXACT rows AND bytes — the candIdsSized
     // pattern in Dedup.minhashNearDupPairs — not on Catalyst stats,
     // which a UDF-projected frame doesn't have. Rows alone is not
     // enough: 100k × 4096-dim vectors is ~3.3 GB, a driver/executor
     // OOM, so wide-query tables fall back to the scored shuffle.
-    val qck = q.localCheckpoint()
-    val nQ = qck.count()
+    // Driver-resident rows are sized from the optimized plan: Catalyst
+    // has already evaluated the λ UDF and the checks into a
+    // LocalRelation, whose row count is exact, and the DataFrame is
+    // rebuilt on that plan so the UDF is not evaluated again. Anything
+    // else is materialized ONCE (which also truncates an expensive
+    // upstream lineage: without it the count job and the scored join
+    // would each re-run the caller's pipeline + the per-query λ
+    // synthesis) and counted.
+    val (qRows, nQ) = q.queryExecution.optimizedPlan match {
+      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if !local.isStreaming =>
+        (org.apache.spark.sql.graftshim.Shim.ofPlan(spark, local),
+          local.data.length.toLong)
+      case _ =>
+        val ck = q.localCheckpoint()
+        (ck, ck.count())
+    }
     val qBytes = nQ * (nF.toLong * 8L + 64L) // vec payload + row overhead
     val qSized =
-      if (nQ <= 100000L && qBytes <= 128L * 1024 * 1024) F.broadcast(qck) else qck
+      if (nQ <= 100000L && qBytes <= 128L * 1024 * 1024) F.broadcast(qRows) else qRows
     val scored = items
       .join(qSized)
       .withColumn(
@@ -188,7 +216,7 @@ final case class ArrowSpaceModel private[api] (
     // silently null out, a fractional double would merge two queries
     // into one group), so non-integral query_id columns take the
     // any-key window form instead.
-    val integralKey = qck.schema("query_id").dataType match {
+    val integralKey = qRows.schema("query_id").dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.ShortType |
@@ -201,7 +229,7 @@ final case class ArrowSpaceModel private[api] (
         // branches return the caller's input dtypes (ADVICE r9: an
         // Int-keyed caller must not see LongType query_id/id only when
         // the heap branch happened to run)
-        val qidT = qck.schema("query_id").dataType
+        val qidT = qRows.schema("query_id").dataType
         val idT = scored.schema("id").dataType
         graft.scale.Skew.heapTopKPerKey(scored, "query_id", "score", "id", k)
           .withColumn("query_id", F.col("query_id").cast(qidT))

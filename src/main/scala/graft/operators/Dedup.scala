@@ -685,18 +685,23 @@ object Dedup {
     */
   private[graft] def minhashAppendSegment(
       survivors: DataFrame, path: String, seg: Long,
-      shingleLen: Int, numHashes: Int, bands: Int): Unit =
+      shingleLen: Int, numHashes: Int, bands: Int,
+      survivorRows: Option[Long] = None): Unit =
     minhashAppendSegmentFromSigs(
       survivors, minhashSignatures(survivors, shingleLen, numHashes),
-      path, seg, shingleLen, numHashes, bands)
+      path, seg, shingleLen, numHashes, bands, survivorRows)
 
   /** [[minhashAppendSegment]] with caller-supplied survivor signatures
     * (the gate's single per-batch pass, filtered to the admitted ids) —
     * the written segment is identical to the recompute-from-text form
-    * because signatures are a pure function of the document. */
+    * because signatures are a pure function of the document.
+    * `survivorRows`, when the caller has already counted `survivors`,
+    * bounds the band rows (≤ one signature per survivor × `bands`) so
+    * the salted band write skips its own count job. */
   private[graft] def minhashAppendSegmentFromSigs(
       survivors: DataFrame, sigsS: DataFrame, path: String, seg: Long,
-      shingleLen: Int, numHashes: Int, bands: Int): Unit = {
+      shingleLen: Int, numHashes: Int, bands: Int,
+      survivorRows: Option[Long] = None): Unit = {
     val add = MinhashIndex(
       bandKeys(sigsS, numHashes, bands)
         .select("band", "bh", "doc_id", "sig"),
@@ -729,7 +734,8 @@ object Dedup {
     // replayed through the gate no longer serializes each band's
     // write behind a single task
     SegmentTiers.saltedRepartition(
-        add.bandRows, "band", Seq("doc_id"), bandFoldTargetRows)
+        add.bandRows, "band", Seq("doc_id"), bandFoldTargetRows,
+        knownRows = survivorRows.map(_ * bands))
       .withColumn("seg", F.lit(seg))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

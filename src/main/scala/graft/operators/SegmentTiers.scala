@@ -79,22 +79,37 @@ private[graft] object SegmentTiers {
     * xxhash64, never rand(): retried/replayed tasks must reproduce the
     * same row-to-partition assignment (the SPARK-38388 class, guide
     * §2.5).
+    *
+    * `knownRows` is the caller's row count of `df` (or any upper bound
+    * on it). At or under `targetRows` no key can need a second salt, so
+    * the count aggregation and its broadcast are skipped and the rows
+    * hash on (key, 0) — the placement the counted path gives every
+    * nsalt = 1 key, hence the same rows and files in every leaf.
     */
   def saltedRepartition(
       df: DataFrame, keyCol: String, saltCols: Seq[String],
-      targetRows: Long): DataFrame = {
+      targetRows: Long, knownRows: Option[Long] = None): DataFrame = {
     require(targetRows > 0, s"targetRows must be positive; got $targetRows")
-    val counts = df.groupBy(keyCol)
-      .agg(F.count(F.lit(1)).as("__n"))
-      .select(F.col(keyCol),
-        F.greatest(F.lit(1L),
-          F.expr(s"(__n + ${targetRows - 1L}) DIV $targetRows"))
-          .as("__nsalt"))
-    df.join(F.broadcast(counts), keyCol)
-      .withColumn("__salt",
-        F.pmod(F.xxhash64(saltCols.map(F.col): _*), F.col("__nsalt"))
-          .cast("int"))
-      .repartition(F.col(keyCol), F.col("__salt"))
-      .drop("__nsalt", "__salt")
+    if (knownRows.exists(_ <= targetRows)) {
+      // same columns, order and rows as the equi-join below (key first;
+      // a null key never matches its count row)
+      val key = F.col(keyCol)
+      df.where(key.isNotNull)
+        .select(key +: df.columns.filter(_ != keyCol).map(F.col).toSeq: _*)
+        .repartition(key, F.lit(0))
+    } else {
+      val counts = df.groupBy(keyCol)
+        .agg(F.count(F.lit(1)).as("__n"))
+        .select(F.col(keyCol),
+          F.greatest(F.lit(1L),
+            F.expr(s"(__n + ${targetRows - 1L}) DIV $targetRows"))
+            .as("__nsalt"))
+      df.join(F.broadcast(counts), keyCol)
+        .withColumn("__salt",
+          F.pmod(F.xxhash64(saltCols.map(F.col): _*), F.col("__nsalt"))
+            .cast("int"))
+        .repartition(F.col(keyCol), F.col("__salt"))
+        .drop("__nsalt", "__salt")
+    }
   }
 }

@@ -445,18 +445,18 @@ object StreamingOps {
     // must not leak the three per-batch persisted frames across batch
     // retries in a long-running stream JVM
     try {
-      survivorsCached.count()
+      val nSurvivors = Some(survivorsCached.count())
       if (shareSigs) {
         // survivor signatures = the shared pass filtered to admitted ids
         val sigsS = batchCaches(1).join(
           survivorsCached.select("doc_id"), Seq("doc_id"), "left_semi")
         Dedup.minhashAppendSegmentFromSigs(
           survivorsCached, sigsS, indexPath, batchId,
-          state.shingleLen, state.numHashes, state.bands)
+          state.shingleLen, state.numHashes, state.bands, nSurvivors)
       } else
         Dedup.minhashAppendSegment(
           survivorsCached, indexPath, batchId,
-          state.shingleLen, state.numHashes, state.bands)
+          state.shingleLen, state.numHashes, state.bands, nSurvivors)
       survivorsCached
         .withColumn("seg", F.lit(batchId))
         // bounded file count per batch segment — the gate's output is
@@ -751,14 +751,15 @@ object StreamingOps {
         .select(F.col("bid").as("id")).distinct()
       val admitted = within.join(rejected, Seq("id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.core.Debug.timed(s"egate[$batchId] decide+count") {
+      val nAdmitted = graft.core.Debug.timed(s"egate[$batchId] decide+count") {
         admitted.count()
       }
       if (pruneState) probeSideRows.unpersist(blocking = false)
       within.unpersist(blocking = false)
       graft.core.Debug.timed(s"egate[$batchId] writes") {
         ivfAppendSegment(
-          admitted.select("id", "vec", "cluster"), indexPath, batchId)
+          admitted.select("id", "vec", "cluster"), indexPath, batchId,
+          knownRows = Some(nAdmitted))
         admitted.select("id", "vec")
           .withColumn("seg", F.lit(batchId))
           .coalesce(8)
@@ -1544,11 +1545,13 @@ object StreamingOps {
     * its own (seg, cluster) leaves instead of appending duplicates —
     * assignment is deterministic (frozen centroids), hence a retry
     * touches the same leaves. Factored out so the replay law is
-    * directly testable.
+    * directly testable. `knownRows` is the caller's count of `assigned`,
+    * when it has one: the salted write then skips its own count job.
     */
   private[graft] def ivfAppendSegment(
       assigned: DataFrame, indexPath: String, seg: Long,
-      targetFileRows: Long = 4000000L): Unit =
+      targetFileRows: Long = 4000000L,
+      knownRows: Option[Long] = None): Unit =
     // cluster-aligned shuffle before the partitioned write, mirroring
     // the minhash gate's band alignment (r11: −19..23% CPU there):
     // without it every input task emits a file into every touched
@@ -1561,7 +1564,7 @@ object StreamingOps {
     // keep one file per leaf per segment — identical layout at
     // micro-batch sizes.
     graft.operators.SegmentTiers.saltedRepartition(
-        assigned, "cluster", Seq("id"), targetFileRows)
+        assigned, "cluster", Seq("id"), targetFileRows, knownRows)
       .withColumn("seg", org.apache.spark.sql.functions.lit(seg))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into `private[sql]` Spark internals: wrap a raw Catalyst
@@ -14,6 +15,13 @@ object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over an already-optimized logical plan, so the rules
+    * that produced it (e.g. the driver-side evaluation that folds a
+    * projection into a `LocalRelation`) do not run a second time. */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Register a native function builder under `name` for SQL use. */
   def registerFunction(

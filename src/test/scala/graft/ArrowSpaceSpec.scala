@@ -166,6 +166,48 @@ class ArrowSpaceSpec extends SparkSpec {
     assert(model.searchBatch(good, 0.62, 3).count() == 3L)
   }
 
+  /** Six queries near the items, as a driver-local table and as the
+    * same rows read back from Parquet. */
+  lazy val (localQueries, parquetQueries) = {
+    val s = spark
+    import s.implicits._
+    val local = (0 until 6).map(i =>
+      (i.toLong, items(i % items.length).map(_ * (1.0 + 0.03 * i))))
+      .toDF("query_id", "qvec")
+    val dir = java.nio.file.Files.createTempDirectory("graft-batch-q").toString
+    local.write.mode("overwrite").parquet(s"$dir/q")
+    (local, s.read.parquet(s"$dir/q"))
+  }
+
+  def batchRows(q: org.apache.spark.sql.DataFrame, tau: Double): Seq[(Long, Long, Double, Int)] =
+    model.searchBatch(q, tau, 3).collect().toSeq.map(r => (
+      r.getAs[Long]("query_id"), r.getAs[Long]("id"),
+      r.getAs[Double]("score"), r.getAs[Int]("rank"))).sorted
+
+  test("batch search: driver-local and Parquet-read queries return identical rows") {
+    for (tau <- Seq(1.0, 0.8, 0.6)) {
+      val local = batchRows(localQueries, tau)
+      assert(local.size == 6 * 3, s"tau=$tau: ${local.size} rows")
+      assert(local == batchRows(parquetQueries, tau), s"tau=$tau: sources disagree")
+    }
+  }
+
+  test("batch search: driver-local queries are sized from the plan, Parquet queries are measured") {
+    import org.apache.spark.graftspec.JobCount
+    val sc = spark.sparkContext
+    batchRows(localQueries, 0.8) // first-use work stays out of the counts
+    val (outL, planL) = JobCount(sc)(model.searchBatch(localQueries, 0.8, 3))
+    val (_, runL) = JobCount(sc)(outL.collect())
+    assert(planL == 0, s"driver-local queries ran $planL jobs before the action")
+    assert(runL >= 1 && runL <= 3, s"driver-local search ran $runL jobs")
+    val (outP, planP) = JobCount(sc)(model.searchBatch(parquetQueries, 0.8, 3))
+    val (_, runP) = JobCount(sc)(outP.collect())
+    // the measured path, as before: localCheckpoint + count inside
+    // searchBatch, then the same scored plan at the action
+    assert(planP == 3, s"Parquet queries ran $planP jobs in searchBatch")
+    assert(runP == 3, s"Parquet-sourced search ran $runP jobs")
+  }
+
   test("fluent Builder facade matches direct builder output") {
     val (m2, _) = graft.api.Builder()
       .withLambdaGraph(eps = 0.05, k = 5, topk = 3, p = 2.0, sigma = Some(0.05))

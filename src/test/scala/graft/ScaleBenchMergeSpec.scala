@@ -166,4 +166,15 @@ class ScaleBenchMergeSpec extends AnyFunSuite {
     Bench.writeBoardGuarded(board.toString, refresh, strict = true)
     assert(java.nio.file.Files.readString(board) == refresh)
   }
+
+  test("in-run board writes never replace a file: numbered siblings") {
+    val dir = java.nio.file.Files.createTempDirectory("boardnew")
+    val path = dir.resolve("BENCH_LOCAL_c4_sf0.01.json").toString
+    val boards = (1 to 3).map(i => benchArtifact(Seq((s"q$i", i.toDouble)), Seq((s"q$i", 1.0))))
+    val written = boards.map(b => Bench.writeBoardNew(path, b).getFileName.toString)
+    assert(written == Seq("BENCH_LOCAL_c4_sf0.01.json",
+      "BENCH_LOCAL_c4_sf0.01-2.json", "BENCH_LOCAL_c4_sf0.01-3.json"))
+    written.zip(boards).foreach { case (name, b) =>
+      assert(java.nio.file.Files.readString(dir.resolve(name)) == b, name) }
+  }
 }

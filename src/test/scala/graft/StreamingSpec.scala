@@ -1640,5 +1640,31 @@ class StreamingSpec extends SparkSpec {
       .select(F.col("id").cast("long")).collect().map(_.getLong(0)).sorted
     assert(rows.length == 73 && rows.toSet.size == 73,
       s"replayed salted segment duplicated rows: ${rows.length}")
+    // a caller-known row count at or under the target skips the count
+    // job; every leaf must still get the same rows in the same files as
+    // the counted write of the same frame
+    def leafLayout(seg: Long, cluster: Int): Set[Set[Long]] = {
+      val p = new org.apache.hadoop.fs.Path(
+        s"$dir/applists/seg=$seg/cluster=$cluster")
+      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+      fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .map(f => s.read.parquet(f.toString).select("id").as[Long].collect().toSet)
+        .toSet
+    }
+    StreamingOps.ivfAppendSegment(df, dir, seg = 1L, targetFileRows = 40L)
+    StreamingOps.ivfAppendSegment(df, dir, seg = 2L, targetFileRows = 40L,
+      knownRows = Some(33L))
+    for (c <- Seq(0, 1)) {
+      val counted = leafLayout(1L, c)
+      assert(counted.size == 1 && counted.head.size == (if (c == 0) 30 else 3),
+        s"counted write at target 40: cluster $c files $counted")
+      assert(leafLayout(2L, c) == counted,
+        s"known-count write differs from the counted write in cluster $c")
+    }
+    // a known count above the target keeps the counted (salted) path
+    StreamingOps.ivfAppendSegment(df, dir, seg = 3L, targetFileRows = 10L,
+      knownRows = Some(33L))
+    assert(leafLayout(3L, 0) == leafLayout(0L, 0) && leafLayout(3L, 1) == leafLayout(0L, 1),
+      "a known count above the target changed the salted layout")
   }
 }
