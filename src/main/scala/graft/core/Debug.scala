@@ -16,8 +16,6 @@ object Debug {
     org.apache.logging.log4j.core.config.Configurator.setLevel("graft", level)
   }
 
-  def isDebug: Boolean = flag.get()
-
   /** Debug-gated stage log — the engine's counterpart of the crate's
     * `dbg_println` build-stage traces (reference src/helpers.rs:12-21,
     * observed in suggested_eps.md:3-11). */

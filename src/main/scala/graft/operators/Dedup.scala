@@ -43,15 +43,6 @@ object Dedup {
           idx => F.concat_ws(" ", F.slice(t, idx + 1, F.lit(n))))))
   }
 
-  /** MinHash signature. Each shingle string is hashed ONCE (xxhash64),
-    * then the family of `numHashes` functions is derived by re-hashing
-    * the resulting longs with per-function seeds. One pass per row, no
-    * explode; the heavy string hashing is O(shingles), not
-    * O(shingles × numHashes).
-    */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    minhashFromHashes(F.transform(shingleCol, s => F.xxhash64(s)), numHashes)
-
   /** Signature from pre-hashed shingles (array<long>) — materialize
     * the base hashes in a column first so the string hashing runs
     * once; the function family re-hashes the 8-byte longs with

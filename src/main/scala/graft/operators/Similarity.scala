@@ -4,6 +4,7 @@ import graft.functions.VectorFunctions._
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Similarity-search operators over an embedding column
   * (SURVEY.md §7.2 step 11): brute-force cosine top-k as the exact
@@ -226,26 +227,18 @@ object Similarity {
     */
   def sq8TopK(
       index: Sq8Index, emb: DataFrame, query: Array[Double], k: Int,
-      rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(query.length == index.mins.length,
-      s"query has ${query.length} dims but index was encoded for " +
-        s"${index.mins.length}")
-    val q = F.typedLit(query)
-    val cand = index.codes
-      .select(F.col("id"),
-        F.round(graft.functions.VectorFunctions.sq8Cosine(
-          F.col("codes"), q, F.typedLit(index.mins),
-          F.typedLit(index.maxs)), 4).as("approx"))
-      .orderBy(F.col("approx").desc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+      rerank: Int): DataFrame =
+    codecTopK(sq8Codec(index), emb, query, k, rerank)
+
+  /** SQ8's share of the codec pipeline: the asymmetric dequantized
+    * cosine of the d-byte codes against the full-precision query. */
+  private[operators] final case class Sq8Query(q: Array[Double])
+
+  private def sq8Codec(index: Sq8Index): Codec[Sq8Query] =
+    Codec(index.codes, index.mins.length, hamming = false,
+      graft.functions.VectorFunctions.sq8Cosine(F.col("codes"), F.col("q"),
+        F.typedLit(index.mins), F.typedLit(index.maxs)),
+      q => { val p = Sq8Query(q); _ => p })
 
   /** Persist an SQ8 index: the codes table as Parquet (a BINARY column
     * compresses to ~d bytes/row — the slim sidecar a 100 TB corpus
@@ -291,29 +284,8 @@ object Similarity {
     */
   def sq8TopKBatch(
       index: Sq8Index, emb: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val qs = queries.select(
-      F.col("qid").cast("long"),
-      F.col("qvec").cast("array<double>"))
-    val approx = index.codes
-      .crossJoin(F.broadcast(qs))
-      .select(F.col("qid"), F.col("id"),
-        F.round(graft.functions.VectorFunctions.sq8Cosine(
-          F.col("codes"), F.col("qvec"), F.typedLit(index.mins),
-          F.typedLit(index.maxs)), 4).as("approx"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(approx, "qid", "approx", "id", rerank)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+      rerank: Int): DataFrame =
+    codecTopKBatch(sq8Codec(index), emb, queries, k, rerank)
 
   // ------------------------------------------------------- binary codec
 
@@ -435,23 +407,17 @@ object Similarity {
     */
   def binaryTopK(
       index: BinaryIndex, emb: DataFrame, query: Array[Double], k: Int,
-      rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(query.length == index.dims,
-      s"query has ${query.length} dims but index was encoded for ${index.dims}")
-    val q = F.typedLit(query)
-    val cand = index.codes
-      .select(F.col("id"),
-        hammingCol(F.col("bits"), F.typedLit(packSignBits(query))).as("ham"))
-      .orderBy(F.col("ham").asc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+      rerank: Int): DataFrame =
+    codecTopK(binaryCodec(index), emb, query, k, rerank)
+
+  /** The 1-bit codecs' payload: the query's packed sign bits — raw
+    * signs once per query, or residual signs once per probed list. */
+  private[operators] final case class BitsQuery(qbits: Array[Long])
+
+  private def binaryCodec(index: BinaryIndex): Codec[BitsQuery] =
+    Codec(index.codes, index.dims, hamming = true,
+      hammingCol(F.col("bits"), F.col("qbits")),
+      q => { val p = BitsQuery(packSignBits(q)); _ => p })
 
   /** [[binaryTopK]] with the measured modal-corpus trap defused: when
     * the Hamming cut's LAST distance ties beyond the cut (the whole
@@ -482,23 +448,193 @@ object Similarity {
     */
   def binaryTopKTieAware(
       index: BinaryIndex, emb: DataFrame, query: Array[Double], k: Int,
-      rerank: Int, expandCap: Int = 0): DataFrame = {
+      rerank: Int, expandCap: Int = 0): DataFrame =
+    codecTopK(binaryCodec(index), emb, query, k, rerank,
+      widen = Some(Widen(expandCap, "binaryTopKTieAware")))
+
+  // ------------------------------------------- codec search pipeline
+
+  /** What one ANN codec contributes to the shared IVFADC pipeline
+    * (Jégou et al. TPAMI'11: probe the lists, scan the codes, cut to
+    * `rerank`, rerank with exact cosine, take top k). Every other step
+    * lives once, in [[codecTopK]] and [[codecTopKBatch]].
+    *  - `codes`: (id, code columns), or (id, cluster, code columns) for
+    *    list-relative codes, which then serve as their own lists;
+    *  - `dims`: the query width the codes were encoded for;
+    *  - `hamming`: the approx score is an integer Hamming distance cut
+    *    ascending; otherwise a cosine estimate, rounded to 4 decimals
+    *    before the descending cut so candidate sets are stable across
+    *    engines (ties break on id either way);
+    *  - `approx`: the score over the code columns and payload fields;
+    *  - `payload`: per-query state, built once per query, then the
+    *    payload row of one probed list given its centroid (null on
+    *    flat faces, whose codecs ignore it). Payload classes are
+    *    `private[operators]`, not `private`: Spark's generated
+    *    serializer calls their accessors, which `private` hides.
+    */
+  private final case class Codec[P <: Product](
+      codes: DataFrame, dims: Int, hamming: Boolean, approx: Column,
+      payload: Array[Double] => Array[Double] => P)
+
+  /** IVF scope of a codec search: `nprobe` of `ivf`'s lists,
+    * intersected with an optional predicate-kept id set. */
+  private final case class Probe(
+      ivf: IvfIndex, nprobe: Int, kept: Option[DataFrame] = None)
+
+  /** Tie-aware widening of the candidate cut; `face` names the public
+    * entry point in the capped-tie warning. */
+  private final case class Widen(expandCap: Int, face: String) {
+    /** The widening cap: `expandCap`, or ≤ 0 for the measured default. */
+    def cap(rerank: Int): Int = {
+      val cap = if (expandCap > 0) expandCap
+        else DefaultExpandCapMultiple * rerank
+      require(cap >= rerank, s"expandCap ($cap) must be >= rerank ($rerank)")
+      cap
+    }
+  }
+
+  private def requireCut(k: Int, rerank: Int, probe: Option[Probe]): Unit = {
     require(k > 0, s"k must be positive; got $k")
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(query.length == index.dims,
-      s"query has ${query.length} dims but index was encoded for ${index.dims}")
-    val cap = if (expandCap > 0) expandCap
-      else DefaultExpandCapMultiple * rerank
-    require(cap >= rerank,
-      s"expandCap ($cap) must be >= rerank ($rerank)")
-    val q = F.typedLit(query)
-    val ham = index.codes
+    probe.foreach(p => require(p.nprobe > 0 && p.nprobe <= p.ivf.k,
+      s"need 0 < nprobe <= nLists; got nprobe=${p.nprobe} nLists=${p.ivf.k}"))
+  }
+
+  // a wrong-width query must fail loudly: the scoring kernels truncate
+  // to the shorter array and would return a silently wrong answer
+  private def requireDims(label: String, n: Int, dims: Int): Unit =
+    require(n == dims, s"$label has $n dims but index was encoded for $dims")
+
+  // centroids are index-ordered by construction (ivfBuild / ivfLoad
+  // both emit 0..k-1); fall back to a scan if a construction breaks that
+  private def centroidOf(
+      cents: Array[(Int, Array[Double])], c: Int): Array[Double] =
+    if (c < cents.length && cents(c)._1 == c) cents(c)._2
+    else cents.find(_._1 == c).get._2
+
+  /** The codes attached to the (kept) lists — a corpus-sized id join on
+    * the slim (id, cluster) lists, done ONCE before any probe join. */
+  private def listCodes(c: Codec[_], p: Probe): DataFrame =
+    if (c.codes.columns.contains("cluster")) withKept(c.codes, p.kept)
+    else withKept(p.ivf.assigned.select("id", "cluster"), p.kept)
+      .join(c.codes, "id")
+
+  private def approxCol(c: Codec[_]): Column =
+    (if (c.hamming) c.approx else F.round(c.approx, 4)).as("approx")
+
+  /** Single-query core of every codec face: the payload rides as a
+    * broadcast row (one per probed list for IVF faces, whose list
+    * filter sits below the code scan), candidates are cut by
+    * TakeOrderedAndProject (or widened over the frontier tie class),
+    * then re-scored against the EXACT vectors through a broadcast
+    * candidate join. Output: (id, score) — exact round-4 cosines,
+    * (score DESC, id ASC).
+    */
+  private def codecTopK[P <: Product : TypeTag](
+      c: Codec[P], emb: DataFrame, query: Array[Double], k: Int,
+      rerank: Int, probe: Option[Probe] = None,
+      widen: Option[Widen] = None): DataFrame = {
+    requireCut(k, rerank, probe)
+    requireDims("query", query.length, c.dims)
+    val spark = c.codes.sparkSession
+    import spark.implicits._
+    val pay = c.payload(query)
+    val scan = probe match {
+      case None => c.codes.crossJoin(F.broadcast(Seq(pay(null)).toDF()))
+      case Some(p) =>
+        val probes = ivfProbes(p.ivf, query, p.nprobe)
+        val rows = probes.toSeq
+          .map(l => (l, pay(centroidOf(p.ivf.centroids, l))))
+          .toDF("cluster", "p").select(F.col("cluster"), F.col("p.*"))
+        listCodes(c, p).where(F.col("cluster").isin(probes.toSeq: _*))
+          .join(F.broadcast(rows), "cluster")
+    }
+    val scored = scan.select(F.col("id"), approxCol(c))
+    val cand = widen match {
+      case Some(w) => tieAwareCandidates(scored, rerank, w)
+      case None =>
+        scored.orderBy(
+          if (c.hamming) F.col("approx").asc else F.col("approx").desc,
+          F.col("id").asc)
+          .limit(rerank).select("id")
+    }
+    emb.join(F.broadcast(cand), "id")
       .select(F.col("id"),
-        hammingCol(F.col("bits"), F.typedLit(packSignBits(query))).as("ham"))
-    emb.join(F.broadcast(tieAwareCandidates(ham, rerank, cap)), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
+        F.round(cosine(F.col("vec"), F.typedLit(query)), 4).as("score"))
       .orderBy(F.col("score").desc, F.col("id").asc)
       .limit(k)
+  }
+
+  /** Batch core of every codec face. Queries need (qid, qvec); output
+    * (qid, id, score) — exact round-4 cosines, (score DESC, id ASC)
+    * per qid, each qid equal to the single-query core at the same
+    * parameters whenever the probe selectors agree (batch probes
+    * auto-route hierarchically, see [[autoProbesFor]]).
+    *
+    * SAME physical shape as the proven [[ivfTopKBatch]]: probe
+    * selection and the per-query payload run in ONE executor flatMap,
+    * and the payload rides THROUGH the probe rows (row-local access in
+    * the fan-out join's projection); the codes attach to the lists
+    * corpus-side BEFORE the one cluster join, which scores in its own
+    * projection. Flat faces cross-join a broadcast payload side
+    * instead. Candidates are born in that join and never shuffle before
+    * the bounded-heap per-qid cut (or the widened tie-aware cut); one
+    * exact rerank join serves all queries' survivors. Earlier cuts that
+    * joined (probed × lists) first, shuffled the Q×candidate rows by id
+    * to fetch codes, and read the payload from a broadcast relation per
+    * candidate row measured 2× (SQ8) to 10× (PQ) SLOWER at the 40×
+    * bench than the scans they exist to beat.
+    */
+  private def codecTopKBatch[P <: Product : TypeTag](
+      c: Codec[P], emb: DataFrame, queries: DataFrame, k: Int,
+      rerank: Int, probe: Option[Probe] = None,
+      widen: Option[Widen] = None): DataFrame = {
+    requireCut(k, rerank, probe)
+    val spark = c.codes.sparkSession
+    import spark.implicits._
+    val qs = queries
+      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
+    val typed = qs.as[(Long, Array[Double])]
+    val dims = c.dims
+    val pay = c.payload
+    val scan = probe match {
+      case None =>
+        val rows = typed.map { case (qid, qv) =>
+            requireDims(s"query $qid", qv.length, dims)
+            (qid, pay(qv)(null))
+          }
+          .toDF("qid", "p").select(F.col("qid"), F.col("p.*"))
+        c.codes.crossJoin(F.broadcast(rows))
+      case Some(p) =>
+        val bcC = spark.sparkContext.broadcast(p.ivf.centroids)
+        val bcH = spark.sparkContext.broadcast(p.ivf.hier)
+        val nprobe = p.nprobe
+        val rows = typed.flatMap { case (qid, qv) =>
+            requireDims(s"query $qid", qv.length, dims)
+            val perList = pay(qv)
+            val cents = bcC.value
+            autoProbesFor(cents, bcH.value, qv, nprobe)
+              .map(l => (qid, l, perList(centroidOf(cents, l))))
+          }
+          .toDF("qid", "cluster", "p")
+          .select(F.col("qid"), F.col("cluster"), F.col("p.*"))
+        rows.join(listCodes(c, p), "cluster")
+    }
+    val scored = scan.select(F.col("qid"), F.col("id"), approxCol(c))
+    val cand = widen match {
+      case Some(w) => tieAwareCandidatesBatch(scored, rerank, w)
+      case None =>
+        graft.scale.Skew.heapTopKPerKey(
+          scored, "qid", "approx", "id", rerank, desc = !c.hamming)
+          .select("qid", "id")
+    }
+    val rescored = cand
+      .join(emb.select(F.col("id"), F.col("vec")), "id")
+      .join(F.broadcast(qs), "qid")
+      .select(F.col("qid"), F.col("id"),
+        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
+    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
+      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
   }
 
   /** Default tie-class widening cap, as a multiple of `rerank`
@@ -517,67 +653,67 @@ object Similarity {
     * 0.40 at 320k). */
   private[graft] val DefaultExpandCapMultiple = 64
 
-  /** Shared widened-cut core of [[binaryTopKTieAware]] and
-    * [[ivfBinaryTopKTieAware]] — same frontier probe and tie-class
-    * expansion over whichever (id, ham) frame the caller scoped (the
-    * whole corpus, or the probed lists), so the two faces cannot
-    * drift. */
+  /** Widened cut of the single-query core ([[binaryTopKTieAware]],
+    * [[ivfBinaryTopKTieAware]]) — frontier probe and tie-class
+    * expansion over whichever (id, approx Hamming) frame the core
+    * scoped (the whole corpus, or the probed lists). */
   private def tieAwareCandidates(
-      ham: DataFrame, rerank: Int, cap: Int): DataFrame = {
+      ham: DataFrame, rerank: Int, w: Widen): DataFrame = {
+    val cap = w.cap(rerank)
     // the rerank-th distance: max ham inside the would-be cut (one
     // TakeOrdered job over rerank rows)
-    val dMaxRow = ham.orderBy(F.col("ham").asc, F.col("id").asc)
-      .limit(rerank).agg(F.max("ham")).head
+    val dMaxRow = ham.orderBy(F.col("approx").asc, F.col("id").asc)
+      .limit(rerank).agg(F.max("approx")).head
     if (dMaxRow.isNullAt(0)) ham.select("id") // corpus smaller than rerank
     else {
       val dMax = dMaxRow.getLong(0)
-      val nLe = ham.where(F.col("ham") <= dMax).count()
+      val nLe = ham.where(F.col("approx") <= dMax).count()
       if (nLe <= rerank) {
         // no frontier tie beyond the cut — the plain cut is exact
-        ham.orderBy(F.col("ham").asc, F.col("id").asc)
+        ham.orderBy(F.col("approx").asc, F.col("id").asc)
           .limit(rerank).select("id")
       } else {
         val take = math.min(nLe, cap.toLong).toInt
         if (nLe > cap)
           org.apache.logging.log4j.LogManager.getLogger("graft").warn(
-            s"binaryTopKTieAware: the Hamming frontier at distance " +
+            s"${w.face}: the Hamming frontier at distance " +
               s"$dMax ties across $nLe rows but expandCap=$cap — the " +
               "cut inside the tie is deterministic-by-id, not " +
               "similarity-ranked. Raise expandCap toward the tie-class " +
               "size, or use sq8/PQ codes: 1-bit signs cannot rank " +
               "within a mode.")
-        ham.where(F.col("ham") <= dMax)
-          .orderBy(F.col("ham").asc, F.col("id").asc)
+        ham.where(F.col("approx") <= dMax)
+          .orderBy(F.col("approx").asc, F.col("id").asc)
           .limit(take).select("id")
       }
     }
   }
 
-  /** Batch widening core shared by the flat and composed tie-aware
-    * batch faces (so they cannot drift — the same reason the single
-    * faces share [[tieAwareCandidates]]): per-qid frontier distance =
-    * max ham inside the would-be rerank cut, widened cut keeps every
-    * row at/inside the frontier capped at `cap`, cut-inside-the-tie
-    * deterministic by id. Takes the UNPERSISTED (qid, id, ham) frame,
-    * owns its persist/unpersist (released in a finally — a throw
-    * mid-probe must not leak the largest frame in the face), and emits
-    * the capped-tie diagnostic from the already-materialized candidate
-    * frame (≤ cap·|queries| rows — never an extra pass over ham).
+  /** Widened cut of the batch core (every tie-aware batch face):
+    * per-qid frontier distance = max ham inside the would-be rerank
+    * cut, widened cut keeps every row at/inside the frontier capped at
+    * `cap`, cut-inside-the-tie deterministic by id. Takes the
+    * UNPERSISTED (qid, id, approx Hamming) frame, owns its
+    * persist/unpersist (released in a finally — a throw mid-probe must
+    * not leak the largest frame in the face), and emits the capped-tie
+    * diagnostic from the already-materialized candidate frame
+    * (≤ cap·|queries| rows — never an extra pass over ham).
     */
   private def tieAwareCandidatesBatch(
-      hamRaw: DataFrame, rerank: Int, cap: Int, face: String): DataFrame = {
+      hamRaw: DataFrame, rerank: Int, w: Widen): DataFrame = {
+    val cap = w.cap(rerank)
     val ham = hamRaw
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand =
       try {
         val dmax = graft.scale.Skew
-          .heapTopKPerKey(ham, "qid", "ham", "id", rerank, desc = false)
-          .groupBy("qid").agg(F.max("ham").as("dmax"))
+          .heapTopKPerKey(ham, "qid", "approx", "id", rerank, desc = false)
+          .groupBy("qid").agg(F.max("approx").as("dmax"))
           .localCheckpoint()
         val inFront = ham.join(F.broadcast(dmax), "qid")
-          .where(F.col("ham") <= F.col("dmax"))
+          .where(F.col("approx") <= F.col("dmax"))
         graft.scale.Skew
-          .heapTopKPerKey(inFront, "qid", "ham", "id", cap, desc = false)
+          .heapTopKPerKey(inFront, "qid", "approx", "id", cap, desc = false)
           .select("qid", "id")
           .localCheckpoint()
       } finally ham.unpersist(blocking = false)
@@ -585,7 +721,7 @@ object Similarity {
       .agg(F.count(F.lit(1)).as("n")).where(F.col("n") >= cap).count()
     if (nAtCap > 0)
       org.apache.logging.log4j.LogManager.getLogger("graft").warn(
-        s"$face: $nAtCap queries' Hamming frontiers " +
+        s"${w.face}: $nAtCap queries' Hamming frontiers " +
           s"tie up to (or beyond) expandCap=$cap — their cut inside " +
           "the tie is deterministic-by-id, not similarity-ranked. " +
           "Raise expandCap toward the tie-class size, or use sq8/PQ " +
@@ -606,42 +742,8 @@ object Similarity {
     */
   def binaryTopKBatch(
       index: BinaryIndex, emb: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qs = queries.select(
-      F.col("qid").cast("long"),
-      F.col("qvec").cast("array<double>"))
-    val dims = index.dims
-    val qbits = qs
-      .as[(Long, Array[Double])]
-      .map { case (qid, qv) =>
-        // fail like the single-query face — a dims mismatch must not
-        // silently drop the qid from the output (zip_with would pad
-        // with NULL and the null hamming rows would just vanish)
-        require(qv.length == dims,
-          s"query $qid has ${qv.length} dims but index was encoded " +
-            s"for $dims")
-        (qid, packSignBits(qv))
-      }
-      .toDF("qid", "qbits")
-    val ham = index.codes
-      .crossJoin(F.broadcast(qbits))
-      .select(F.col("qid"), F.col("id"),
-        hammingCol(F.col("bits"), F.col("qbits")).as("ham"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(ham, "qid", "ham", "id", rerank, desc = false)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+      rerank: Int): DataFrame =
+    codecTopKBatch(binaryCodec(index), emb, queries, k, rerank)
 
   /** Batch face of [[binaryTopKTieAware]] — the production shape for
     * mining workloads on modal corpora, where the fixed-rerank batch
@@ -661,42 +763,9 @@ object Similarity {
     */
   def binaryTopKBatchTieAware(
       index: BinaryIndex, emb: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int, expandCap: Int = 0): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val cap = if (expandCap > 0) expandCap
-      else DefaultExpandCapMultiple * rerank
-    require(cap >= rerank,
-      s"expandCap ($cap) must be >= rerank ($rerank)")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qs = queries.select(
-      F.col("qid").cast("long"),
-      F.col("qvec").cast("array<double>"))
-    val dims = index.dims
-    val qbits = qs
-      .as[(Long, Array[Double])]
-      .map { case (qid, qv) =>
-        require(qv.length == dims,
-          s"query $qid has ${qv.length} dims but index was encoded " +
-            s"for $dims")
-        (qid, packSignBits(qv))
-      }
-      .toDF("qid", "qbits")
-    val ham = index.codes
-      .crossJoin(F.broadcast(qbits))
-      .select(F.col("qid"), F.col("id"),
-        hammingCol(F.col("bits"), F.col("qbits")).as("ham"))
-    val cand = tieAwareCandidatesBatch(
-      ham, rerank, cap, "binaryTopKBatchTieAware")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+      rerank: Int, expandCap: Int = 0): DataFrame =
+    codecTopKBatch(binaryCodec(index), emb, queries, k, rerank,
+      widen = Some(Widen(expandCap, "binaryTopKBatchTieAware")))
 
   /** Persist / load a binary index: codes Parquet + a dims sidecar
     * (same filesystem rules as [[sq8Save]]). */
@@ -811,36 +880,16 @@ object Similarity {
     */
   def ivfBinaryResidualTopK(
       ivf: IvfIndex, index: BinaryResidualIndex, emb: DataFrame,
-      query: Array[Double], k: Int, nprobe: Int, rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    // same guard as the batch sibling (ADVICE r13): nprobe <= 0 would
-    // silently yield an empty probe set and an empty result
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    require(query.length == index.dims,
-      s"query has ${query.length} dims but index was encoded for ${index.dims}")
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    val centMap = ivf.centroids.toMap
-    val qbits = ivfProbes(ivf, query, nprobe).toSeq.map { c =>
-      val cv = centMap(c)
-      (c, packSignBits(Array.tabulate(query.length)(i => query(i) - cv(i))))
-    }.toDF("cluster", "qbits")
-    val q = F.typedLit(query)
-    val cand = index.codes
-      .join(F.broadcast(qbits), "cluster") // prunes to probed lists AND
-                                           // attaches the per-list qbits
-      .select(F.col("id"),
-        hammingCol(F.col("bits"), F.col("qbits")).as("ham"))
-      .orderBy(F.col("ham").asc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+      query: Array[Double], k: Int, nprobe: Int, rerank: Int): DataFrame =
+    codecTopK(residualBinaryCodec(index), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe)))
+
+  private def residualBinaryCodec(
+      index: BinaryResidualIndex): Codec[BitsQuery] =
+    Codec(index.codes, index.dims, hamming = true,
+      hammingCol(F.col("bits"), F.col("qbits")),
+      q => cv => BitsQuery(
+        packSignBits(Array.tabulate(q.length)(i => q(i) - cv(i)))))
 
   /** Batch face of [[ivfBinaryResidualTopK]] — the
     * [[ivfBinaryTopKBatch]] shape with per-(qid, probed list)
@@ -859,22 +908,14 @@ object Similarity {
     */
   def ivfBinaryResidualTopKBatch(
       ivf: IvfIndex, index: BinaryResidualIndex, emb: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val (qs, ham) = residualHamBatch(ivf, index, queries, nprobe)
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(ham, "qid", "ham", "id", rerank, desc = false)
-      .select("qid", "id")
-    residualRerank(cand, emb, qs, k)
-  }
+      queries: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame =
+    codecTopKBatch(residualBinaryCodec(index), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** Tie-aware batch face of the residual codec — the fifth column of
     * the tie-aware matrix (VERDICT r13 #4): the
-    * [[ivfBinaryResidualTopKBatch]] probe shape (shared
-    * [[residualHamBatch]], so the plain and widened faces cannot
+    * [[ivfBinaryResidualTopKBatch]] probe shape (the shared
+    * [[codecTopKBatch]] core, so the plain and widened faces cannot
     * drift) feeds the SAME batch widening core as every other
     * tie-aware face ([[tieAwareCandidatesBatch]]): per-qid Hamming
     * frontier + capped tie-class widening, cut-inside-the-tie
@@ -890,70 +931,10 @@ object Similarity {
   def ivfBinaryResidualTopKBatchTieAware(
       ivf: IvfIndex, index: BinaryResidualIndex, emb: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int, rerank: Int,
-      expandCap: Int = 0): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val cap = if (expandCap > 0) expandCap
-      else DefaultExpandCapMultiple * rerank
-    require(cap >= rerank,
-      s"expandCap ($cap) must be >= rerank ($rerank)")
-    val (qs, ham) = residualHamBatch(ivf, index, queries, nprobe)
-    val cand = tieAwareCandidatesBatch(
-      ham, rerank, cap, "ivfBinaryResidualTopKBatchTieAware")
-    residualRerank(cand, emb, qs, k)
-  }
-
-  /** The residual batch faces' shared probe + scoring frame: per
-    * (qid, probed list) residual query bits packed on the executors,
-    * one codes join on cluster scoring every (candidate, query) pair.
-    * Returns (qs, ham) — the normalized queries and the (qid, id,
-    * ham) frame the candidate cut runs over. */
-  private def residualHamBatch(
-      ivf: IvfIndex, index: BinaryResidualIndex,
-      queries: DataFrame, nprobe: Int): (DataFrame, DataFrame) = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val bcM = spark.sparkContext.broadcast(ivf.centroids.toMap)
-    val bcH = spark.sparkContext.broadcast(ivf.hier)
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    val dims = index.dims
-    val probed = qs
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        require(qv.length == dims,
-          s"query $qid has ${qv.length} dims but index was encoded " +
-            s"for $dims")
-        autoProbesFor(bcC.value, bcH.value, qv, nprobe).map { c =>
-          val cv = bcM.value(c)
-          (qid, c,
-            packSignBits(Array.tabulate(qv.length)(i => qv(i) - cv(i))))
-        }
-      }
-      .toDF("qid", "cluster", "qbits")
-    val ham = probed
-      .join(index.codes, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        hammingCol(F.col("bits"), F.col("qbits")).as("ham"))
-    (qs, ham)
-  }
-
-  /** Exact rerank shared by the residual batch faces: candidates join
-    * the embeddings, queries re-attach via broadcast, bounded-heap
-    * per-qid cut on (score DESC, id ASC). */
-  private def residualRerank(
-      cand: DataFrame, emb: DataFrame, qs: DataFrame, k: Int): DataFrame = {
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+      expandCap: Int = 0): DataFrame =
+    codecTopKBatch(residualBinaryCodec(index), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)),
+      Some(Widen(expandCap, "ivfBinaryResidualTopKBatchTieAware")))
 
   /** Composed IVF + binary: the probed lists bound WHICH rows scan,
     * the 1-bit codes bound WHAT the scan reads (dims/8 bytes/row) —
@@ -967,7 +948,8 @@ object Similarity {
   def ivfBinaryTopK(
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame,
       query: Array[Double], k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfBinaryTopKImpl(ivf, bin, emb, query, k, nprobe, rerank, None)
+    codecTopK(binaryCodec(bin), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** FILTERED [[ivfBinaryTopK]] — see [[ivfSq8TopKWhere]]: the
     * predicate-matching id set intersects the probed lists BEFORE the
@@ -979,8 +961,8 @@ object Similarity {
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, query: Array[Double], k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfBinaryTopKImpl(ivf, bin, emb, query, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
+    codecTopK(binaryCodec(bin), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** [[ivfBinaryTopK]] with [[binaryTopKTieAware]]'s widening applied
     * INSIDE the probed lists — the composed face's documented caveat
@@ -996,8 +978,9 @@ object Similarity {
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame,
       query: Array[Double], k: Int, nprobe: Int, rerank: Int,
       expandCap: Int = 0): DataFrame =
-    ivfBinaryTieAwareImpl(ivf, bin, emb, query, k, nprobe, rerank,
-      expandCap, None)
+    codecTopK(binaryCodec(bin), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe)),
+      Some(Widen(expandCap, "ivfBinaryTopKTieAware")))
 
   /** FILTERED [[ivfBinaryTopKTieAware]] — the predicate-matching id
     * set intersects the probed lists BEFORE the frontier probe (the
@@ -1012,35 +995,9 @@ object Similarity {
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, query: Array[Double], k: Int, nprobe: Int,
       rerank: Int, expandCap: Int = 0): DataFrame =
-    ivfBinaryTieAwareImpl(ivf, bin, emb, query, k, nprobe, rerank,
-      expandCap, Some(keptIds(meta, pred)))
-
-  private def ivfBinaryTieAwareImpl(
-      ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame,
-      query: Array[Double], k: Int, nprobe: Int, rerank: Int,
-      expandCap: Int, kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(query.length == bin.dims,
-      s"query has ${query.length} dims but index was encoded for ${bin.dims}")
-    val cap = if (expandCap > 0) expandCap
-      else DefaultExpandCapMultiple * rerank
-    require(cap >= rerank,
-      s"expandCap ($cap) must be >= rerank ($rerank)")
-    val probes = ivfProbes(ivf, query, nprobe)
-    val q = F.typedLit(query)
-    val sel = withKept(ivf.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select("id"), kept)
-    val ham = bin.codes
-      .join(sel, "id")
-      .select(F.col("id"),
-        hammingCol(F.col("bits"), F.typedLit(packSignBits(query))).as("ham"))
-    emb.join(F.broadcast(tieAwareCandidates(ham, rerank, cap)), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+    codecTopK(binaryCodec(bin), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))),
+      Some(Widen(expandCap, "ivfBinaryTopKTieAwareWhere")))
 
   /** Batch face of [[ivfBinaryTopKTieAware]] — completing the
     * tie-aware matrix (VERDICT r12 #5: mining workloads are batch,
@@ -1062,8 +1019,9 @@ object Similarity {
   def ivfBinaryTopKBatchTieAware(
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, rerank: Int, expandCap: Int = 0): DataFrame =
-    ivfBinaryBatchTieAwareImpl(ivf, bin, emb, queries, k, nprobe, rerank,
-      expandCap, None, "ivfBinaryTopKBatchTieAware")
+    codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)),
+      Some(Widen(expandCap, "ivfBinaryTopKBatchTieAware")))
 
   /** FILTERED [[ivfBinaryTopKBatchTieAware]] — one predicate-filtered
     * id join on the slim lists before the bits attach, so every qid's
@@ -1072,84 +1030,9 @@ object Similarity {
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, queries: DataFrame, k: Int, nprobe: Int,
       rerank: Int, expandCap: Int = 0): DataFrame =
-    ivfBinaryBatchTieAwareImpl(ivf, bin, emb, queries, k, nprobe, rerank,
-      expandCap, Some(keptIds(meta, pred)), "ivfBinaryTopKBatchTieAwareWhere")
-
-  // `face` is the public entry point's name, threaded through so the
-  // capped-tie warning attributes itself to the face the caller
-  // actually invoked (ADVICE r13: the literal name misattributed the
-  // filtered face's warnings)
-  private def ivfBinaryBatchTieAwareImpl(
-      ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerank: Int, expandCap: Int,
-      kept: Option[DataFrame], face: String): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val cap = if (expandCap > 0) expandCap
-      else DefaultExpandCapMultiple * rerank
-    require(cap >= rerank,
-      s"expandCap ($cap) must be >= rerank ($rerank)")
-    val spark = bin.codes.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val bcH = spark.sparkContext.broadcast(ivf.hier)
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    val dims = bin.dims
-    val probed = qs
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        require(qv.length == dims,
-          s"query $qid has ${qv.length} dims but index was encoded " +
-            s"for $dims")
-        val qbits = packSignBits(qv)
-        autoProbesFor(bcC.value, bcH.value, qv, nprobe)
-          .map(c => (qid, c, qbits))
-      }
-      .toDF("qid", "cluster", "qbits")
-    val withBits = withKept(ivf.assigned.select("id", "cluster"), kept)
-      .join(bin.codes, "id")
-    val ham = probed
-      .join(withBits, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        hammingCol(F.col("bits"), F.col("qbits")).as("ham"))
-    val cand = tieAwareCandidatesBatch(ham, rerank, cap, face)
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
-
-  private def ivfBinaryTopKImpl(
-      ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame,
-      query: Array[Double], k: Int, nprobe: Int, rerank: Int,
-      kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(query.length == bin.dims,
-      s"query has ${query.length} dims but index was encoded for ${bin.dims}")
-    val probes = ivfProbes(ivf, query, nprobe)
-    val q = F.typedLit(query)
-    val sel = withKept(ivf.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select("id"), kept)
-    val cand = bin.codes
-      .join(sel, "id") // slim (id, bits) ⋈ (id) — bounds WHAT the scan reads
-      .select(F.col("id"),
-        hammingCol(F.col("bits"), F.typedLit(packSignBits(query))).as("ham"))
-      .orderBy(F.col("ham").asc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+    codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))),
+      Some(Widen(expandCap, "ivfBinaryTopKBatchTieAwareWhere")))
 
   /** Batch face of [[ivfBinaryTopK]] — the [[ivfSq8TopKBatch]] shape
     * with bit codes: probe selection on the executors, bits attached
@@ -1163,7 +1046,8 @@ object Similarity {
   def ivfBinaryTopKBatch(
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfBinaryTopKBatchImpl(ivf, bin, emb, queries, k, nprobe, rerank, None)
+    codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** Batch face of [[ivfBinaryTopKWhere]] — one predicate-filtered id
     * join on the slim lists before the bits attach; per-qid parity
@@ -1174,52 +1058,8 @@ object Similarity {
       ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, queries: DataFrame, k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfBinaryTopKBatchImpl(ivf, bin, emb, queries, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfBinaryTopKBatchImpl(
-      ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerank: Int, kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val spark = bin.codes.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val bcH = spark.sparkContext.broadcast(ivf.hier)
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    val dims = bin.dims
-    val probed = qs
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        // fail like the single-query face, not a silent qid drop
-        require(qv.length == dims,
-          s"query $qid has ${qv.length} dims but index was encoded " +
-            s"for $dims")
-        val qbits = packSignBits(qv)
-        autoProbesFor(bcC.value, bcH.value, qv, nprobe)
-          .map(c => (qid, c, qbits))
-      }
-      .toDF("qid", "cluster", "qbits")
-    val withBits = withKept(ivf.assigned.select("id", "cluster"), kept)
-      .join(bin.codes, "id")
-    val ham = probed
-      .join(withBits, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        hammingCol(F.col("bits"), F.col("qbits")).as("ham"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(ham, "qid", "ham", "id", rerank, desc = false)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+    codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** One-shot SQ8 cosine top-k — the memory-bound ANN scale path (the
     * standard "SQ8" codec of the public ANN literature, e.g. faiss's
@@ -1238,8 +1078,7 @@ object Similarity {
   def sq8TopK(
       emb: DataFrame, query: Array[Double], k: Int,
       rerank: Int = 100): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
+    requireCut(k, rerank, None) // before the encode pays its scan
     sq8TopK(sq8Encode(emb, persist = false), emb, query, k, rerank)
   }
 
@@ -1321,57 +1160,30 @@ object Similarity {
   def pqRelease(index: PqIndex): Unit =
     index.codes.unpersist(blocking = false)
 
-  /** PQ top-k: asymmetric-distance scoring over the m-byte codes — the
-    * per-subspace dot/norm² lookup tables (m·ksub doubles) are
-    * computed ONCE on the driver and ride into the codegen scan as
-    * literals, so each row costs m byte-indexed table reads, never a
-    * loop over the original dims — cut to `rerank` candidates on the
-    * round-4 approx score (id tie-break, the engine's stable-candidate
-    * convention), then re-scored against the EXACT vectors in `emb`
-    * via a broadcast candidate join. The approx score IS
-    * cosine(query, reconstruction), so recall depends only on
-    * quantization error, not on a separate scoring approximation.
-    *
-    * Output: (id, score) — exact round-4 cosines of the reranked
-    * top-k, (score DESC, id ASC).
-    */
-  /** Per-query ADC lookup tables: lutDot[s·ksub+j] = ⟨q_s, c_sj⟩,
-    * lutN2[s·ksub+j] = ‖c_sj‖² — m·ksub doubles, computed once per
-    * query on the driver. */
-  private def pqLuts(
-      index: PqIndex, query: Array[Double]): (Array[Double], Array[Double]) =
-    pqLutsOf(index.books, query)
-
-  private def pqLutsOf(
-      books: Array[Array[Array[Double]]],
-      query: Array[Double]): (Array[Double], Array[Double]) = {
+  /** Per-query ADC dot table: lutDot[s·ksub+j] = ⟨q_s, c_sj⟩ — m·ksub
+    * doubles, computed once per query (driver-side for single
+    * queries, in the probe flatMap for batches). Also the per-list
+    * cross table of [[pqResidualBuild]] (q = a centroid). */
+  private def lutDotOf(
+      books: Array[Array[Array[Double]]], q: Array[Double]): Array[Double] = {
     val m = books.length
     val ksub = books.headOption.map(_.length).getOrElse(0)
     val dsub = books.headOption.flatMap(_.headOption).map(_.length).getOrElse(0)
-    require(query.length == m * dsub,
-      s"query has ${query.length} dims but index was encoded for ${m * dsub}")
-    val lutDot = new Array[Double](m * ksub)
-    val lutN2 = new Array[Double](m * ksub)
+    val out = new Array[Double](m * ksub)
     var s = 0
     while (s < m) {
       var j = 0
       while (j < ksub) {
         val c = books(s)(j)
         var d = 0.0
-        var n2 = 0.0
         var f = 0
-        while (f < dsub) {
-          d += query(s * dsub + f) * c(f)
-          n2 += c(f) * c(f)
-          f += 1
-        }
-        lutDot(s * ksub + j) = d
-        lutN2(s * ksub + j) = n2
+        while (f < dsub) { d += q(s * dsub + f) * c(f); f += 1 }
+        out(s * ksub + j) = d
         j += 1
       }
       s += 1
     }
-    (lutDot, lutN2)
+    out
   }
 
   /** Query-independent half of the ADC tables: lutN2[s·ksub+j] =
@@ -1380,9 +1192,6 @@ object Similarity {
     * place. The batch paths carry only the per-query dot LUT through
     * their probe/broadcast rows — half the payload of shipping both
     * tables per query. */
-  private def codebookNorms(index: PqIndex): Array[Double] =
-    codebookNormsOf(index.books)
-
   private def codebookNormsOf(
       books: Array[Array[Array[Double]]]): Array[Double] = {
     val m = books.length
@@ -1405,36 +1214,47 @@ object Similarity {
     out
   }
 
+  /** PQ top-k: asymmetric-distance scoring over the m-byte codes — the
+    * per-subspace dot/norm² lookup tables (m·ksub doubles) are
+    * computed ONCE on the driver and ride into the codegen scan as a
+    * broadcast payload row and a literal, so each row costs m
+    * byte-indexed table reads, never a loop over the original dims —
+    * cut to `rerank` candidates on the round-4 approx score (id
+    * tie-break, the engine's stable-candidate convention), then
+    * re-scored against the EXACT vectors in `emb`
+    * via a broadcast candidate join. The approx score IS
+    * cosine(query, reconstruction), so recall depends only on
+    * quantization error, not on a separate scoring approximation.
+    *
+    * Output: (id, score) — exact round-4 cosines of the reranked
+    * top-k, (score DESC, id ASC).
+    */
   def pqTopK(
       index: PqIndex, emb: DataFrame, query: Array[Double], k: Int,
       rerank: Int): DataFrame =
-    pqTopKImpl(index, emb, query, query, k, rerank)
+    codecTopK(pqCodec(index, None), emb, query, k, rerank)
 
-  /** `lutQuery` drives the ADC candidate cut (it must live in the
-    * CODES' coordinate system), `rerankQuery` the exact rerank (the
-    * `emb` frame's system) — identical for plain PQ; OPQ passes the
-    * rotated query for the first and the raw query for the second, so
-    * the rerank scan never computes a rotation. */
-  private def pqTopKImpl(
-      index: PqIndex, emb: DataFrame, lutQuery: Array[Double],
-      rerankQuery: Array[Double], k: Int, rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val (lutDot, lutN2) = pqLuts(index, lutQuery)
-    val qnorm = math.sqrt(lutQuery.map(x => x * x).sum)
-    val q = F.typedLit(rerankQuery)
-    val cand = index.codes
-      .select(F.col("id"),
-        F.round(graft.functions.VectorFunctions.pqAdcCosine(
-          F.col("codes"), F.typedLit(lutDot), F.typedLit(lutN2),
-          F.lit(qnorm)), 4).as("approx"))
-      .orderBy(F.col("approx").desc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
+  /** PQ's (and OPQ's) payload: the per-query ADC dot table and ‖q‖. */
+  private[operators] final case class LutQuery(lutd: Array[Double], qnorm: Double)
+
+  /** The ADC codec over `index`'s codes. `rot` (OPQ) rotates the query
+    * into the codes' coordinates for the tables only: the exact rerank
+    * keeps the raw query against the raw vectors (cosine is
+    * rotation-invariant), so the rerank scan never computes a rotation.
+    * lutN2 is query-independent ([[codebookNormsOf]]) — one literal,
+    * not a per-query payload column. */
+  private def pqCodec(
+      index: PqIndex, rot: Option[Array[Array[Double]]]): Codec[LutQuery] = {
+    val books = index.books
+    Codec(index.codes, index.m * index.dsub, hamming = false,
+      graft.functions.VectorFunctions.pqAdcCosine(F.col("codes"),
+        F.col("lutd"), F.typedLit(codebookNormsOf(books)), F.col("qnorm")),
+      q => {
+        val lq = rot.fold(q)(rotateVec(q, _))
+        val p = LutQuery(lutDotOf(books, lq),
+          math.sqrt(graft.functions.VectorKernels.normSq(lq)))
+        _ => p
+      })
   }
 
   /** Persist a PQ index: the m-byte codes as Parquet plus the
@@ -1488,73 +1308,7 @@ object Similarity {
   def pqTopKBatch(
       index: PqIndex, emb: DataFrame, queries: DataFrame, k: Int,
       rerank: Int): DataFrame =
-    pqTopKBatchImpl(index, emb,
-      queries.select(F.col("qid"), F.col("qvec"),
-        F.col("qvec").as("qlut")),
-      k, rerank)
-
-  /** Batch sibling of [[pqTopKImpl]]: `qlut` drives the per-query ADC
-    * tables (codes' coordinates), `qvec` the exact rerank (`emb`'s
-    * coordinates) — equal for plain PQ, split for OPQ. */
-  private def pqTopKBatchImpl(
-      index: PqIndex, emb: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    val m = index.m
-    val ksub = index.ksub
-    val dsub = index.dsub
-    val bcBooks = spark.sparkContext.broadcast(index.books)
-    val luts = queries
-      .select(F.col("qid").cast("long"),
-        F.col("qvec").cast("array<double>"),
-        F.col("qlut").cast("array<double>"))
-      .as[(Long, Array[Double], Array[Double])]
-      .map { case (qid, qv, q) =>
-        require(q.length == m * dsub,
-          s"query $qid has ${q.length} dims but index was encoded for ${m * dsub}")
-        val books = bcBooks.value
-        val lutDot = new Array[Double](m * ksub)
-        var s = 0
-        while (s < m) {
-          var j = 0
-          while (j < ksub) {
-            val c = books(s)(j)
-            var d = 0.0
-            var f = 0
-            while (f < dsub) {
-              d += q(s * dsub + f) * c(f)
-              f += 1
-            }
-            lutDot(s * ksub + j) = d
-            j += 1
-          }
-          s += 1
-        }
-        (qid, qv, lutDot, math.sqrt(q.map(x => x * x).sum))
-      }
-      .toDF("qid", "qvec", "lutd", "qnorm")
-    // lutN2 is query-independent ([[codebookNorms]]) — one literal,
-    // not a per-query broadcast column
-    val approx = index.codes
-      .crossJoin(F.broadcast(luts.select("qid", "lutd", "qnorm")))
-      .select(F.col("qid"), F.col("id"),
-        F.round(graft.functions.VectorFunctions.pqAdcCosine(
-          F.col("codes"), F.col("lutd"), F.typedLit(codebookNorms(index)),
-          F.col("qnorm")), 4).as("approx"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(approx, "qid", "approx", "id", rerank)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(luts.select("qid", "qvec")), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+    codecTopKBatch(pqCodec(index, None), emb, queries, k, rerank)
 
   // ---- OPQ: rotated product quantization ---------------------------
 
@@ -1748,10 +1502,6 @@ object Similarity {
   def rotateQuery(q: Array[Double], rot: Array[Array[Double]]): Array[Double] =
     rotateVec(q, rot)
 
-  private def rotatedFrame(
-      emb: DataFrame, rot: Array[Array[Double]]): DataFrame =
-    rotateEmbeddings(emb, rot)
-
   /** [[pqBuild]] behind the parametric OPQ rotation: fit the rotation,
     * rotate the corpus, train per-subspace codebooks there. Same m /
     * ksub / training contracts as plain PQ — the rotation only changes
@@ -1761,7 +1511,7 @@ object Similarity {
       trainPerCode: Int = 256, pcaIters: Int = 60): OpqIndex = {
     val rot = opqRotation(emb, m, pcaIters)
     OpqIndex(
-      pqBuild(rotatedFrame(emb, rot), m, ksub, iters,
+      pqBuild(rotateEmbeddings(emb, rot), m, ksub, iters,
         persist = true, trainPerCode),
       rot)
   }
@@ -1785,7 +1535,7 @@ object Similarity {
     require(rot.length % m == 0,
       s"opqBuild: ${rot.length} dims do not split into $m subspaces")
     OpqIndex(
-      pqBuild(rotatedFrame(emb, rot), m, ksub, iters,
+      pqBuild(rotateEmbeddings(emb, rot), m, ksub, iters,
         persist = true, trainPerCode),
       rot)
   }
@@ -1807,20 +1557,15 @@ object Similarity {
   def opqTopK(
       index: OpqIndex, emb: DataFrame, query: Array[Double], k: Int,
       rerank: Int): DataFrame =
-    pqTopKImpl(index.pq, emb, rotateVec(query, index.rot), query,
-      k, rerank)
+    codecTopK(pqCodec(index.pq, Some(index.rot)), emb, query, k, rerank)
 
   /** Batch face: per-query ADC tables from the rotated queries, exact
     * rerank on raw vectors — see [[opqTopK]]. */
   def opqTopKBatch(
       index: OpqIndex, emb: DataFrame, queries: DataFrame, k: Int,
       rerank: Int): DataFrame =
-    pqTopKBatchImpl(index.pq, emb,
-      queries.select(
-        F.col("qid"), F.col("qvec"),
-        rotateCol(F.col("qvec").cast("array<double>"), index.rot)
-          .as("qlut")),
-      k, rerank)
+    codecTopKBatch(pqCodec(index.pq, Some(index.rot)), emb, queries, k,
+      rerank)
 
   def opqRelease(index: OpqIndex): Unit = pqRelease(index.pq)
 
@@ -1888,7 +1633,8 @@ object Similarity {
   def ivfPqTopK(
       ivf: IvfIndex, pq: PqIndex, emb: DataFrame, query: Array[Double],
       k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfPqTopKImpl(ivf, pq, emb, query, k, nprobe, rerank, None)
+    codecTopK(pqCodec(pq, None), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** FILTERED [[ivfPqTopK]] — see [[ivfSq8TopKWhere]]: the predicate-
     * matching id set intersects the probed lists BEFORE the ADC cut,
@@ -1900,35 +1646,8 @@ object Similarity {
       ivf: IvfIndex, pq: PqIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, query: Array[Double], k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfPqTopKImpl(ivf, pq, emb, query, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfPqTopKImpl(
-      ivf: IvfIndex, pq: PqIndex, emb: DataFrame, query: Array[Double],
-      k: Int, nprobe: Int, rerank: Int, kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val probes = ivfProbes(ivf, query, nprobe)
-    val (lutDot, lutN2) = pqLuts(pq, query)
-    val qnorm = math.sqrt(query.map(x => x * x).sum)
-    val q = F.typedLit(query)
-    val sel = withKept(ivf.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select("id"), kept)
-    val cand = pq.codes
-      .join(sel, "id") // both sides carry only (id[, codes]) — slim join
-      .select(F.col("id"),
-        F.round(graft.functions.VectorFunctions.pqAdcCosine(
-          F.col("codes"), F.typedLit(lutDot), F.typedLit(lutN2),
-          F.lit(qnorm)), 4).as("approx"))
-      .orderBy(F.col("approx").desc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+    codecTopK(pqCodec(pq, None), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** IVF+SQ8 — the composed scale shape faiss calls IndexIVFScalarQuantizer:
     * the inverted lists prune WHICH rows are scanned (`nprobe` of the
@@ -1953,7 +1672,8 @@ object Similarity {
   def ivfSq8TopK(
       ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, query: Array[Double],
       k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfSq8TopKImpl(ivf, sq8, emb, query, k, nprobe, rerank, None)
+    codecTopK(sq8Codec(sq8), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** FILTERED [[ivfSq8TopK]] — the metadata predicate applied INSIDE
     * the code-pruned probed scan (the IDSelector face of
@@ -1973,36 +1693,8 @@ object Similarity {
       ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, meta: DataFrame,
       pred: Column, query: Array[Double], k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfSq8TopKImpl(ivf, sq8, emb, query, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfSq8TopKImpl(
-      ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, query: Array[Double],
-      k: Int, nprobe: Int, rerank: Int, kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(query.length == sq8.mins.length,
-      s"query has ${query.length} dims but index was encoded for " +
-        s"${sq8.mins.length}")
-    val probes = ivfProbes(ivf, query, nprobe)
-    val q = F.typedLit(query)
-    val sel = withKept(ivf.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select("id"), kept)
-    val cand = sq8.codes
-      .join(sel, "id") // slim (id, codes) ⋈ (id) — bounds WHAT the scan reads
-      .select(F.col("id"),
-        F.round(graft.functions.VectorFunctions.sq8Cosine(
-          F.col("codes"), q, F.typedLit(sq8.mins),
-          F.typedLit(sq8.maxs)), 4).as("approx"))
-      .orderBy(F.col("approx").desc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+    codecTopK(sq8Codec(sq8), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** MANY queries against the composed IVF+SQ8 index — the batch cell
     * that bounds the `sq8TopKBatch` all-codes scan: probe selection on
@@ -2022,7 +1714,8 @@ object Similarity {
   def ivfSq8TopKBatch(
       ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfSq8TopKBatchImpl(ivf, sq8, emb, queries, k, nprobe, rerank, None)
+    codecTopKBatch(sq8Codec(sq8), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** Batch face of [[ivfSq8TopKWhere]]: one predicate-filtered id join
     * applied to the slim (id, cluster) lists BEFORE the codes attach
@@ -2038,59 +1731,8 @@ object Similarity {
       ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, meta: DataFrame,
       pred: Column, queries: DataFrame, k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfSq8TopKBatchImpl(ivf, sq8, emb, queries, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfSq8TopKBatchImpl(
-      ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerank: Int, kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val spark = sq8.codes.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val bcH = spark.sparkContext.broadcast(ivf.hier)
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    // SAME physical shape as the proven ivfTopKBatch: the query vector
-    // rides THROUGH the probe rows (row-local access in the fan-out
-    // join's projection), and codes attach to the lists corpus-side —
-    // a corpus-sized id equi-join — BEFORE the one probe fan-out join,
-    // which scores in its own projection. The first cut instead joined
-    // (probed × lists) first, shuffled the Q×candidates rows by id to
-    // fetch codes, and read qvec from a broadcast hash relation per
-    // candidate row; measured at the 40× bench that made the "pruned"
-    // path 2× SLOWER than the all-codes scan it exists to beat.
-    // Candidates now never shuffle: born in the cluster join, cut by
-    // the salted partial top-k below it.
-    val probed = qs
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        autoProbesFor(bcC.value, bcH.value, qv, nprobe)
-          .map(c => (qid, c, qv))
-      }
-      .toDF("qid", "cluster", "qvec")
-    val withCodes = withKept(ivf.assigned.select("id", "cluster"), kept)
-      .join(sq8.codes, "id")
-    val approx = probed
-      .join(withCodes, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(graft.functions.VectorFunctions.sq8Cosine(
-          F.col("codes"), F.col("qvec"), F.typedLit(sq8.mins),
-          F.typedLit(sq8.maxs)), 4).as("approx"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(approx, "qid", "approx", "id", rerank)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+    codecTopKBatch(sq8Codec(sq8), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** MANY queries against the composed IVF+PQ index — the last cell
     * of the batch matrix and the full IndexIVFPQ serving shape: probe
@@ -2111,7 +1753,8 @@ object Similarity {
   def ivfPqTopKBatch(
       ivf: IvfIndex, pq: PqIndex, emb: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfPqTopKBatchImpl(ivf, pq, emb, queries, k, nprobe, rerank, None)
+    codecTopKBatch(pqCodec(pq, None), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** Batch face of [[ivfPqTopKWhere]] — the [[ivfSq8TopKBatchWhere]]
     * composition on the m-byte ADC scan: one predicate-filtered id
@@ -2124,90 +1767,8 @@ object Similarity {
       ivf: IvfIndex, pq: PqIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, queries: DataFrame, k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfPqTopKBatchImpl(ivf, pq, emb, queries, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfPqTopKBatchImpl(
-      ivf: IvfIndex, pq: PqIndex, emb: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerank: Int, kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val spark = pq.codes.sparkSession
-    import spark.implicits._
-    val m = pq.m
-    val ksub = pq.ksub
-    val dsub = pq.dsub
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val bcH = spark.sparkContext.broadcast(ivf.hier)
-    val bcBooks = spark.sparkContext.broadcast(pq.books)
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    // SAME physical shape as the proven ivfTopKBatch: the per-query
-    // ADC lookup tables are built IN the probe flatMap (executors, no
-    // driver loop) and ride THROUGH the probe rows — row-local access
-    // in the fan-out join's projection, 2·m·ksub doubles × nprobe rows
-    // per query of shuffle, paid once. Codes attach to the lists
-    // corpus-side (a corpus-sized id equi-join) BEFORE the one probe
-    // fan-out join, which scores ADC in its own projection. The first
-    // cut instead shuffled the Q×candidates rows by id to fetch codes
-    // and probed a several-hundred-MB broadcast LUT relation per
-    // candidate row — measured at the 40× bitext bench that cost ~10×
-    // the float-scanning path it exists to beat. Candidates now never
-    // shuffle: born in the cluster join, cut by the salted partial
-    // top-k below it.
-    // lutN2 is QUERY-INDEPENDENT (‖c_sj‖² is a codebook property), so
-    // it rides as one typedLit read in place by the kernel — only the
-    // per-query dot LUT (m·ksub doubles) is carried through the probe
-    // rows, halving the widest shuffled payload
-    val probed = qs
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, q) =>
-        require(q.length == m * dsub,
-          s"query $qid has ${q.length} dims but index was encoded for ${m * dsub}")
-        val books = bcBooks.value
-        val lutDot = new Array[Double](m * ksub)
-        var s = 0
-        while (s < m) {
-          var j = 0
-          while (j < ksub) {
-            val c = books(s)(j)
-            var d = 0.0
-            var f = 0
-            while (f < dsub) {
-              d += q(s * dsub + f) * c(f)
-              f += 1
-            }
-            lutDot(s * ksub + j) = d
-            j += 1
-          }
-          s += 1
-        }
-        val qnorm = math.sqrt(q.map(x => x * x).sum)
-        autoProbesFor(bcC.value, bcH.value, q, nprobe)
-          .map(c => (qid, c, lutDot, qnorm))
-      }
-      .toDF("qid", "cluster", "lutd", "qnorm")
-    val withCodes = withKept(ivf.assigned.select("id", "cluster"), kept)
-      .join(pq.codes, "id")
-    val approx = probed
-      .join(withCodes, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(graft.functions.VectorFunctions.pqAdcCosine(
-          F.col("codes"), F.col("lutd"), F.typedLit(codebookNorms(pq)),
-          F.col("qnorm")), 4).as("approx"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(approx, "qid", "approx", "id", rerank)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+    codecTopKBatch(pqCodec(pq, None), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** Residual-encoded IVF+PQ — the published IVFADC composition
     * (Jégou et al., "Product quantization for nearest neighbor
@@ -2308,21 +1869,7 @@ object Similarity {
       // rotated) and ‖c‖² (rotation-invariant) — nLists·(m·ksub+1)
       // doubles total
       val clusterDf = centsByC.zipWithIndex.map { case (cv0, c) =>
-        val cv = rot.fold(cv0)(rotateVec(cv0, _))
-        val cross = new Array[Double](m * ksub)
-        var s = 0
-        while (s < m) {
-          var j = 0
-          while (j < ksub) {
-            val b = books(s)(j)
-            var d = 0.0
-            var f = 0
-            while (f < dsub) { d += cv(s * dsub + f) * b(f); f += 1 }
-            cross(s * ksub + j) = d
-            j += 1
-          }
-          s += 1
-        }
+        val cross = lutDotOf(books, rot.fold(cv0)(rotateVec(cv0, _)))
         var cn2 = 0.0
         var f = 0
         while (f < dims) { cn2 += cv0(f) * cv0(f); f += 1 }
@@ -2353,22 +1900,6 @@ object Similarity {
   def pqResidualRelease(index: PqResidualIndex): Unit =
     index.codes.unpersist(blocking = false)
 
-  /** ⟨q, c⟩ for every list as one small literal (ivf.k doubles) —
-    * probed entries are read by `element_at(…, cluster+1)`, the rest
-    * ride dead. */
-  private def queryCentroidDots(
-      ivf: IvfIndex, query: Array[Double]): Array[Double] = {
-    val out = new Array[Double](ivf.k)
-    ivf.centroids.foreach { case (c, cv) =>
-      var d = 0.0
-      var f = 0
-      val lim = math.min(query.length, cv.length)
-      while (f < lim) { d += query(f) * cv(f); f += 1 }
-      out(c) = d
-    }
-    out
-  }
-
   /** Residual IVF+PQ top-k: probed lists bound WHICH rows scan, m-byte
     * residual codes bound WHAT the scan reads, and the score is the
     * stored-norm quotient above — candidates cut to `rerank` on the
@@ -2382,7 +1913,32 @@ object Similarity {
   def ivfPqrTopK(
       ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame,
       query: Array[Double], k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfPqrTopKImpl(ivf, pqr, emb, query, k, nprobe, rerank, None)
+    codecTopK(pqrCodec(pqr), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe)))
+
+  /** Residual PQ's payload: the dot table of the (rotated) query, plus
+    * ⟨q, c⟩ of the probed list — one scalar per probe row. */
+  private[operators] final case class ResLutQuery(
+      lutd: Array[Double], qdotc: Double, qnorm: Double)
+
+  /** The residual-ADC codec: the stored-norm quotient above. A rotated
+    * index builds its tables from Rq (⟨q, Rᵀb⟩ = ⟨Rq, b⟩); probes,
+    * ⟨q, c⟩ and ‖q‖ stay in raw coordinates. */
+  private def pqrCodec(pqr: PqResidualIndex): Codec[ResLutQuery] = {
+    val (books, rot) = (pqr.books, pqr.rot)
+    Codec(pqr.codes, pqr.m * pqr.dsub, hamming = false,
+      F.when(F.col("qnorm") === 0.0 || F.col("n2hat") <= 0.0, F.lit(0.0))
+        .otherwise(
+          (F.col("qdotc") + graft.functions.VectorFunctions.pqAdcSum(
+            F.col("codes"), F.col("lutd")))
+            / (F.col("qnorm") * F.sqrt(F.col("n2hat")))),
+      q => {
+        val lut = lutDotOf(books, rot.fold(q)(rotateVec(q, _)))
+        val qnorm = math.sqrt(graft.functions.VectorKernels.normSq(q))
+        cv =>
+          ResLutQuery(lut, graft.functions.VectorKernels.dot(q, cv), qnorm)
+      })
+  }
 
   /** FILTERED [[ivfPqrTopK]] — see [[ivfSq8TopKWhere]]: the
     * predicate-matching id set intersects the probed lists BEFORE the
@@ -2393,44 +1949,8 @@ object Similarity {
       ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, query: Array[Double], k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfPqrTopKImpl(ivf, pqr, emb, query, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfPqrTopKImpl(
-      ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame,
-      query: Array[Double], k: Int, nprobe: Int, rerank: Int,
-      kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val probes = ivfProbes(ivf, query, nprobe)
-    // rotated index ⇒ LUTs from Rq (⟨q, Rᵀb⟩ = ⟨Rq, b⟩); probes,
-    // ⟨q,c⟩ and ‖q‖ stay in raw coordinates
-    val (lutDot, _) = pqLutsOf(pqr.books,
-      pqr.rot.fold(query)(rotateVec(query, _)))
-    val qnorm = math.sqrt(query.map(x => x * x).sum)
-    val qdotc = queryCentroidDots(ivf, query)
-    val q = F.typedLit(query)
-    val sel = withKept(ivf.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select("id", "cluster"), kept)
-    val approxCol =
-      if (qnorm == 0.0) F.lit(0.0)
-      else F.when(F.col("n2hat") <= 0.0, F.lit(0.0)).otherwise(
-        (F.element_at(F.typedLit(qdotc), F.col("cluster") + 1)
-          + graft.functions.VectorFunctions.pqAdcSum(
-            F.col("codes"), F.typedLit(lutDot)))
-          / (F.lit(qnorm) * F.sqrt(F.col("n2hat"))))
-    val cand = pqr.codes
-      .join(sel, "id") // slim (id, codes, n2hat) ⋈ (id, cluster)
-      .select(F.col("id"), F.round(approxCol, 4).as("approx"))
-      .orderBy(F.col("approx").desc, F.col("id").asc)
-      .limit(rerank)
-      .select("id")
-    emb.join(F.broadcast(cand), "id")
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+    codecTopK(pqrCodec(pqr), emb, query, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** MANY queries against the residual IVF+PQ index — the
     * [[ivfPqTopKBatch]] physical shape (probe selection + per-query
@@ -2446,7 +1966,8 @@ object Similarity {
   def ivfPqrTopKBatch(
       ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame =
-    ivfPqrTopKBatchImpl(ivf, pqr, emb, queries, k, nprobe, rerank, None)
+    codecTopKBatch(pqrCodec(pqr), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe)))
 
   /** Batch face of [[ivfPqrTopKWhere]] — one predicate-filtered id
     * join on the slim lists before the residual codes attach; per-qid
@@ -2457,90 +1978,8 @@ object Similarity {
       ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame, meta: DataFrame,
       pred: Column, queries: DataFrame, k: Int, nprobe: Int,
       rerank: Int): DataFrame =
-    ivfPqrTopKBatchImpl(ivf, pqr, emb, queries, k, nprobe, rerank,
-      Some(keptIds(meta, pred)))
-
-  private def ivfPqrTopKBatchImpl(
-      ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int, rerank: Int,
-      kept: Option[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    require(nprobe > 0 && nprobe <= ivf.k,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=${ivf.k}")
-    val spark = pqr.codes.sparkSession
-    import spark.implicits._
-    val m = pqr.m
-    val ksub = pqr.ksub
-    val dsub = pqr.dsub
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val bcH = spark.sparkContext.broadcast(ivf.hier)
-    val bcBooks = spark.sparkContext.broadcast(pqr.books)
-    val bcRot = spark.sparkContext.broadcast(pqr.rot)
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    val probed = qs
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        require(qv.length == m * dsub,
-          s"query $qid has ${qv.length} dims but index was encoded for ${m * dsub}")
-        val books = bcBooks.value
-        // rotated index ⇒ LUTs from Rq (see the single-query face);
-        // probes / ⟨q,c⟩ / ‖q‖ stay on the raw qv below
-        val lq = bcRot.value.fold(qv)(rotateVec(qv, _))
-        val lutDot = new Array[Double](m * ksub)
-        var s = 0
-        while (s < m) {
-          var j = 0
-          while (j < ksub) {
-            val c = books(s)(j)
-            var d = 0.0
-            var f = 0
-            while (f < dsub) { d += lq(s * dsub + f) * c(f); f += 1 }
-            lutDot(s * ksub + j) = d
-            j += 1
-          }
-          s += 1
-        }
-        val qnorm = math.sqrt(qv.map(x => x * x).sum)
-        val cents = bcC.value
-        autoProbesFor(cents, bcH.value, qv, nprobe).map { c =>
-          // centroids are index-ordered by construction (ivfBuild /
-          // ivfLoad both emit (0..k-1)); fall back to a scan if a
-          // future construction breaks that
-          val cv =
-            if (c < cents.length && cents(c)._1 == c) cents(c)._2
-            else cents.find(_._1 == c).get._2
-          var d = 0.0
-          var f = 0
-          val lim = math.min(qv.length, cv.length)
-          while (f < lim) { d += qv(f) * cv(f); f += 1 }
-          (qid, c, lutDot, d, qnorm)
-        }
-      }
-      .toDF("qid", "cluster", "lutd", "qdotc", "qnorm")
-    val withCodes = withKept(ivf.assigned.select("id", "cluster"), kept)
-      .join(pqr.codes, "id")
-    val approx = probed
-      .join(withCodes, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(
-          F.when(F.col("qnorm") === 0.0 || F.col("n2hat") <= 0.0, F.lit(0.0))
-            .otherwise(
-              (F.col("qdotc") + graft.functions.VectorFunctions.pqAdcSum(
-                F.col("codes"), F.col("lutd")))
-                / (F.col("qnorm") * F.sqrt(F.col("n2hat")))), 4).as("approx"))
-    val cand = graft.scale.Skew
-      .heapTopKPerKey(approx, "qid", "approx", "id", rerank)
-      .select("qid", "id")
-    val rescored = cand
-      .join(emb.select(F.col("id"), F.col("vec")), "id")
-      .join(F.broadcast(qs), "qid")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(rescored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+    codecTopKBatch(pqrCodec(pqr), emb, queries, k, rerank,
+      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** Persist a residual index: (id, codes, n2hat) Parquet + the
     * codebook sidecar in [[pqSave]]'s format, plus a `rotation.json`
@@ -3131,12 +2570,7 @@ object Similarity {
         var j = 0
         while (j < lists.length) {
           val g = lists(j)
-          // centroids are index-ordered by construction (dense global
-          // ids); fall back to a scan if a future construction breaks
-          // that — same defensive lookup as the ADC probe paths
-          val cv =
-            if (g < centroids.length && centroids(g)._1 == g) centroids(g)._2
-            else centroids.find(_._1 == g).get._2
+          val cv = centroidOf(centroids, g)
           cand += ((1.0 - graft.functions.VectorKernels.cosine(query, cv), g))
           j += 1
         }
@@ -3270,13 +2704,9 @@ object Similarity {
       query: Array[Double], k: Int, nprobe: Int): DataFrame = {
     val probes = ivfProbes(index, query, nprobe)
     val q = F.typedLit(query)
-    // distinct: multi-valued metadata (several rows per id, e.g. one
-    // per tag) must not duplicate a candidate — a duplicated (id,
-    // score) pair would burn top-k slots and under-return distinct
-    // neighbors
     index.assigned
       .where(F.col("cluster").isin(probes.toSeq: _*))
-      .join(meta.where(pred).select("id").distinct(), Seq("id"))
+      .join(keptIds(meta, pred), Seq("id"))
       .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
       .orderBy(F.col("score").desc, F.col("id").asc)
       .limit(k)
@@ -3302,10 +2732,7 @@ object Similarity {
           .map(c => (qid, c, qv))
       }
       .toDF("qid", "cluster", "qvec")
-    // distinct for the same reason as [[ivfTopKWhere]]: multi-valued
-    // metadata must not duplicate probed candidates
-    val kept = index.assigned
-      .join(meta.where(pred).select("id").distinct(), Seq("id"))
+    val kept = index.assigned.join(keptIds(meta, pred), Seq("id"))
     val scored = probed
       .join(kept, "cluster")
       .select(F.col("qid"), F.col("id"),

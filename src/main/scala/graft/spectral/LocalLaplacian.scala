@@ -17,18 +17,6 @@ final case class LocalLaplacian(dim: Int, edges: Array[LapEdge]) extends Seriali
   def nnodes: Int = dim
   def shape: (Int, Int) = (dim, dim)
 
-  /** Raw Rayleigh energy E(x) = xᵀLx / xᵀx via the edge identity
-    * xᵀLx = Σ w_fg (x_f − x_g)² (TAUMODE.md:18,26). 0 for the zero
-    * vector or an empty graph.
-    */
-  def rayleigh(x: Array[Double]): Double = {
-    var xx = 0.0
-    var i = 0
-    while (i < x.length) { xx += x(i) * x(i); i += 1 }
-    if (xx == 0.0) return 0.0
-    dirichlet(x) / xx
-  }
-
   /** Unnormalized Dirichlet energy xᵀLx = Σ w_fg (x_f − x_g)². */
   def dirichlet(x: Array[Double]): Double = {
     var acc = 0.0

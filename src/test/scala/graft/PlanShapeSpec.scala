@@ -241,6 +241,115 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("every IVF codec face: list filter/join below the approx score, no cartesian; batch cut before any id shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, CartesianProductExec}
+    import graft.operators.Similarity
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(29)
+    val emb = (0 until 300).map { i =>
+      (i.toLong, Array.tabulate(16)(f => math.sin((i % 4) * 0.9 + f * 0.4) +
+        rng.nextGaussian() * 0.1))
+    }.toDF("id", "vec")
+    val ivf = Similarity.ivfBuild(emb, nLists = 4)
+    val sq8 = Similarity.sq8Encode(emb)
+    val bin = Similarity.binaryEncode(emb)
+    val pq = Similarity.pqBuild(emb, m = 4, ksub = 16)
+    val pqr = Similarity.pqResidualBuild(ivf, m = 4, ksub = 16)
+    val res = Similarity.binaryResidualEncode(ivf)
+    try {
+      val q = Array.tabulate(16)(f => math.sin(0.9 + f * 0.4))
+      val qs = emb.where(F.col("id") < 3)
+        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
+      // (face, output frame, the approx kernel's printed name)
+      val singles = Seq(
+        ("ivfSq8TopK", Similarity.ivfSq8TopK(ivf, sq8, emb, q, 5, 2, 20),
+          "graft_sq8_cosine"),
+        ("ivfPqTopK", Similarity.ivfPqTopK(ivf, pq, emb, q, 5, 2, 20),
+          "graft_pq_adc_cosine"),
+        ("ivfPqrTopK", Similarity.ivfPqrTopK(ivf, pqr, emb, q, 5, 2, 20),
+          "graft_pq_adc_sum"),
+        ("ivfBinaryTopK", Similarity.ivfBinaryTopK(ivf, bin, emb, q, 5, 2, 20),
+          "bit_count"),
+        ("ivfBinaryResidualTopK",
+          Similarity.ivfBinaryResidualTopK(ivf, res, emb, q, 5, 2, 20),
+          "bit_count"))
+      val batches = Seq(
+        ("ivfSq8TopKBatch", Similarity.ivfSq8TopKBatch(ivf, sq8, emb, qs, 5, 2, 20),
+          "graft_sq8_cosine"),
+        ("ivfPqTopKBatch", Similarity.ivfPqTopKBatch(ivf, pq, emb, qs, 5, 2, 20),
+          "graft_pq_adc_cosine"),
+        ("ivfPqrTopKBatch", Similarity.ivfPqrTopKBatch(ivf, pqr, emb, qs, 5, 2, 20),
+          "graft_pq_adc_sum"),
+        ("ivfBinaryTopKBatch",
+          Similarity.ivfBinaryTopKBatch(ivf, bin, emb, qs, 5, 2, 20), "bit_count"),
+        ("ivfBinaryResidualTopKBatch",
+          Similarity.ivfBinaryResidualTopKBatch(ivf, res, emb, qs, 5, 2, 20),
+          "bit_count"))
+      def physical(df: org.apache.spark.sql.DataFrame): SparkPlan =
+        df.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+      def onCluster(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+        e.references.exists(_.name == "cluster")
+      def listBound(p: SparkPlan): Boolean = p match {
+        case j: BaseJoinExec => (j.leftKeys ++ j.rightKeys).exists(onCluster)
+        case f: FilterExec => f.condition.exists {
+          case i: In => onCluster(i.value)
+          case i: InSet => onCluster(i.child)
+          case _ => false
+        }
+        case _ => false
+      }
+      for ((name, df, kernel) <- singles ++ batches) {
+        val plan = physical(df)
+        val scorers = plan.collect {
+          case n if n.expressions.exists(_.toString.contains(kernel)) => n
+        }
+        assert(scorers.nonEmpty, s"$name: no $kernel in\n$plan")
+        // WHICH rows: the probed-list bound sits under every node that
+        // evaluates the approx kernel — never a full codes scan
+        assert(scorers.forall(_.exists(listBound)),
+          s"$name: approx scored above no cluster filter/join\n$plan")
+        assert(plan.collect { case c: CartesianProductExec => c }.isEmpty,
+          s"$name: cartesian product\n$plan")
+      }
+      for ((name, df, _) <- batches) {
+        val plan = physical(df)
+        // the candidate cut is the innermost group limit; nothing under
+        // it may shuffle (qid, id) candidate rows by id
+        val cuts = plan.collect {
+          case w if w.nodeName == "WindowGroupLimit" &&
+            !w.children.exists(_.exists(_.nodeName == "WindowGroupLimit")) => w
+        }
+        assert(cuts.nonEmpty, s"$name: no WindowGroupLimit\n$plan")
+        val idShuffles = cuts.flatMap(_.collect {
+          case e: ShuffleExchangeExec if (e.outputPartitioning match {
+            case h: HashPartitioning =>
+              h.expressions.exists(_.references.exists(_.name == "id")) &&
+                e.child.output.exists(_.name == "qid")
+            case _ => false
+          }) => e
+        })
+        assert(idShuffles.isEmpty,
+          s"$name: candidates shuffled by id before the cut\n$plan")
+      }
+    } finally {
+      Similarity.ivfRelease(ivf)
+      Similarity.sq8Release(sq8)
+      Similarity.binaryRelease(bin)
+      Similarity.pqRelease(pq)
+      Similarity.pqResidualRelease(pqr)
+      Similarity.binaryResidualRelease(res)
+    }
+  }
+
   test("zorderFrame: one range exchange on the Morton key, sort stays partition-local") {
     val s = spark
     import s.implicits._

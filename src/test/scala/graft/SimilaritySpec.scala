@@ -2048,4 +2048,123 @@ class SimilaritySpec extends SparkSpec {
           .toString, Seq(1L).toDF("id")))
     assert(bad.getMessage.contains("codes/"))
   }
+
+  test("codec guard table: k, rerank, nprobe and query dims throw on every codec face") {
+    val s = spark
+    import s.implicits._
+    val dims = 8
+    val corpus = (0L until 96L).map(i =>
+      (i, Array.tabulate(dims)(f => math.sin(i * 0.37 + f * 0.9)))).toDF("id", "vec")
+    val meta = corpus.select(F.col("id"), (F.col("id") % 2).as("lab"))
+    val pred = F.col("lab") === 0L
+    val ivf = Similarity.ivfBuild(corpus, nLists = 4)
+    val sq8 = Similarity.sq8Encode(corpus, persist = false)
+    val bin = Similarity.binaryEncode(corpus, persist = false)
+    val pq = Similarity.pqBuild(corpus, m = 2, ksub = 8, persist = false)
+    val opq = Similarity.opqBuild(corpus, m = 2, ksub = 8)
+    val pqr = Similarity.pqResidualBuild(ivf, m = 2, ksub = 8, persist = false)
+    val res = Similarity.binaryResidualEncode(ivf, persist = false)
+    try {
+      def qs(q: Array[Double]) = Seq((7L, q)).toDF("qid", "qvec")
+      // (k, rerank, nprobe, query) => the face's output frame
+      type Face = (Int, Int, Int, Array[Double]) => org.apache.spark.sql.DataFrame
+      val flat: Seq[(String, Face)] = Seq(
+        ("sq8TopK", (k, r, _, q) => Similarity.sq8TopK(sq8, corpus, q, k, r)),
+        ("sq8TopKBatch", (k, r, _, q) =>
+          Similarity.sq8TopKBatch(sq8, corpus, qs(q), k, r)),
+        ("binaryTopK", (k, r, _, q) => Similarity.binaryTopK(bin, corpus, q, k, r)),
+        ("binaryTopKTieAware", (k, r, _, q) =>
+          Similarity.binaryTopKTieAware(bin, corpus, q, k, r)),
+        ("binaryTopKBatch", (k, r, _, q) =>
+          Similarity.binaryTopKBatch(bin, corpus, qs(q), k, r)),
+        ("binaryTopKBatchTieAware", (k, r, _, q) =>
+          Similarity.binaryTopKBatchTieAware(bin, corpus, qs(q), k, r)),
+        ("pqTopK", (k, r, _, q) => Similarity.pqTopK(pq, corpus, q, k, r)),
+        ("pqTopKBatch", (k, r, _, q) =>
+          Similarity.pqTopKBatch(pq, corpus, qs(q), k, r)),
+        ("opqTopK", (k, r, _, q) => Similarity.opqTopK(opq, corpus, q, k, r)),
+        ("opqTopKBatch", (k, r, _, q) =>
+          Similarity.opqTopKBatch(opq, corpus, qs(q), k, r)))
+      val probed: Seq[(String, Face)] = Seq(
+        ("ivfSq8TopK", (k, r, p, q) =>
+          Similarity.ivfSq8TopK(ivf, sq8, corpus, q, k, p, r)),
+        ("ivfSq8TopKWhere", (k, r, p, q) =>
+          Similarity.ivfSq8TopKWhere(ivf, sq8, corpus, meta, pred, q, k, p, r)),
+        ("ivfSq8TopKBatch", (k, r, p, q) =>
+          Similarity.ivfSq8TopKBatch(ivf, sq8, corpus, qs(q), k, p, r)),
+        ("ivfSq8TopKBatchWhere", (k, r, p, q) =>
+          Similarity.ivfSq8TopKBatchWhere(ivf, sq8, corpus, meta, pred, qs(q), k, p, r)),
+        ("ivfPqTopK", (k, r, p, q) =>
+          Similarity.ivfPqTopK(ivf, pq, corpus, q, k, p, r)),
+        ("ivfPqTopKWhere", (k, r, p, q) =>
+          Similarity.ivfPqTopKWhere(ivf, pq, corpus, meta, pred, q, k, p, r)),
+        ("ivfPqTopKBatch", (k, r, p, q) =>
+          Similarity.ivfPqTopKBatch(ivf, pq, corpus, qs(q), k, p, r)),
+        ("ivfPqTopKBatchWhere", (k, r, p, q) =>
+          Similarity.ivfPqTopKBatchWhere(ivf, pq, corpus, meta, pred, qs(q), k, p, r)),
+        ("ivfPqrTopK", (k, r, p, q) =>
+          Similarity.ivfPqrTopK(ivf, pqr, corpus, q, k, p, r)),
+        ("ivfPqrTopKWhere", (k, r, p, q) =>
+          Similarity.ivfPqrTopKWhere(ivf, pqr, corpus, meta, pred, q, k, p, r)),
+        ("ivfPqrTopKBatch", (k, r, p, q) =>
+          Similarity.ivfPqrTopKBatch(ivf, pqr, corpus, qs(q), k, p, r)),
+        ("ivfPqrTopKBatchWhere", (k, r, p, q) =>
+          Similarity.ivfPqrTopKBatchWhere(ivf, pqr, corpus, meta, pred, qs(q), k, p, r)),
+        ("ivfBinaryTopK", (k, r, p, q) =>
+          Similarity.ivfBinaryTopK(ivf, bin, corpus, q, k, p, r)),
+        ("ivfBinaryTopKWhere", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKWhere(ivf, bin, corpus, meta, pred, q, k, p, r)),
+        ("ivfBinaryTopKTieAware", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKTieAware(ivf, bin, corpus, q, k, p, r)),
+        ("ivfBinaryTopKTieAwareWhere", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKTieAwareWhere(ivf, bin, corpus, meta, pred, q, k, p, r)),
+        ("ivfBinaryTopKBatch", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKBatch(ivf, bin, corpus, qs(q), k, p, r)),
+        ("ivfBinaryTopKBatchWhere", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKBatchWhere(ivf, bin, corpus, meta, pred, qs(q), k, p, r)),
+        ("ivfBinaryTopKBatchTieAware", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKBatchTieAware(ivf, bin, corpus, qs(q), k, p, r)),
+        ("ivfBinaryTopKBatchTieAwareWhere", (k, r, p, q) =>
+          Similarity.ivfBinaryTopKBatchTieAwareWhere(
+            ivf, bin, corpus, meta, pred, qs(q), k, p, r)),
+        ("ivfBinaryResidualTopK", (k, r, p, q) =>
+          Similarity.ivfBinaryResidualTopK(ivf, res, corpus, q, k, p, r)),
+        ("ivfBinaryResidualTopKBatch", (k, r, p, q) =>
+          Similarity.ivfBinaryResidualTopKBatch(ivf, res, corpus, qs(q), k, p, r)),
+        ("ivfBinaryResidualTopKBatchTieAware", (k, r, p, q) =>
+          Similarity.ivfBinaryResidualTopKBatchTieAware(
+            ivf, res, corpus, qs(q), k, p, r)))
+      val good = Array.tabulate(dims)(f => math.cos(f * 0.3))
+      // a guard may fire eagerly at the call or, for batch faces, inside
+      // the executor flatMap (then the task failure wraps it)
+      def rejects(thunk: => org.apache.spark.sql.DataFrame): Option[Throwable] =
+        try { thunk.collect(); None }
+        catch {
+          case e: Throwable =>
+            Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+              .find(_.isInstanceOf[IllegalArgumentException])
+        }
+      val rows = flat.map { case (n, f) => (n, f, false) } ++
+        probed.map { case (n, f) => (n, f, true) }
+      // every (face, guard) miss is listed, not just the first
+      val misses = rows.flatMap { case (name, face, ivfFace) =>
+        assert(face(3, 10, 2, good).count() > 0, s"$name: valid call returned nothing")
+        val guards = Seq[(String, () => Boolean)](
+          ("k = 0", () => rejects(face(0, 10, 2, good)).isDefined),
+          ("rerank < k", () => rejects(face(5, 4, 2, good)).isDefined),
+          ("wrong dims", () => rejects(face(3, 10, 2, good.init)).exists(
+            _.getMessage.contains(
+              s"has ${dims - 1} dims but index was encoded for $dims")))) ++
+          (if (!ivfFace) Nil else Seq[(String, () => Boolean)](
+            ("nprobe = 0", () => rejects(face(3, 10, 0, good)).isDefined),
+            ("nprobe > nLists",
+              () => rejects(face(3, 10, ivf.k + 1, good)).isDefined)))
+        guards.collect { case (guard, holds) if !holds() => s"$name: $guard accepted" }
+      }
+      assert(misses.isEmpty, misses.mkString("\n"))
+    } finally {
+      Similarity.ivfRelease(ivf)
+      Similarity.opqRelease(opq)
+    }
+  }
 }
