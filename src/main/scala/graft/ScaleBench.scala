@@ -1583,10 +1583,8 @@ object ScaleBench {
             } finally hq.stop()
           }
           if (rows.contains(s"s_heavy_longstream_$tag")) {
-            val cmsP = new org.apache.hadoop.fs.Path(s"$side/cms")
-            val fs = cmsP.getFileSystem(spark.sessionState.newHadoopConf())
-            val segs = fs.listStatus(cmsP)
-              .count(_.getPath.getName.startsWith("seg=")).toLong
+            val segs = graft.operators.SegmentTiers
+              .segCount(spark, s"$side/cms").toLong
             val t0 = System.nanoTime()
             val rep = graft.streaming.StreamingOps
               .heavyTokensOf(spark, side, phi = 0.001).count()

@@ -296,7 +296,7 @@ object ArrowSpaceModel {
   /** Load a model persisted by [[ArrowSpaceModel.save]]. */
   def load(spark: SparkSession, path: String): ArrowSpaceModel = {
     val items = spark.read.parquet(s"$path/items")
-    val raw = readSidecar(spark, s"$path/meta.json")
+    val raw = sidecarText(spark, s"$path/meta.json")
     val meta = ujsonParse(raw)
     val params = GraphParams(
       eps = meta("eps"), k = meta("k").toInt, topk = meta("topk").toInt,
@@ -321,13 +321,23 @@ object ArrowSpaceModel {
     finally out.close()
   }
 
-  private def readSidecar(spark: SparkSession, file: String): String = {
+  /** The one sidecar reader: the file's text, None when absent (one
+    * open, no separate existence probe). */
+  private[graft] def readSidecar(
+      spark: SparkSession, file: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    val in =
+      try fs.open(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
     finally in.close()
   }
+
+  /** [[readSidecar]] for a sidecar the layout cannot lack. */
+  private[graft] def sidecarText(spark: SparkSession, file: String): String =
+    readSidecar(spark, file).getOrElse(
+      throw new java.io.FileNotFoundException(s"no sidecar at $file"))
 
   /** JSON number literal: sign, integer, optional fraction, optional
     * signed exponent — negative exponents included (τ can fall back to

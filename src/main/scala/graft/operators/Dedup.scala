@@ -619,13 +619,7 @@ object Dedup {
 
   def minhashIndexLoad(
       spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex = {
-    val txt = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
+    val txt = graft.api.ArrowSpaceModel.sidecarText(spark, s"$path/meta.json")
     def intOf(name: String): Int =
       ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(txt).get.group(1).toInt
     MinhashIndex(
@@ -648,25 +642,11 @@ object Dedup {
   // is EXACT at any size and a rebuild is never semantically required —
   // compaction ([[minhashCompactAppends]]) is purely a small-files fold.
 
-  private[graft] def gateSwapMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/bands_swap_marker")
-
   /** Rows per file/task for the band-aligned layout writes (append
     * segments and folds): band rows are ~100 B, so 4M rows ≈ 400 MB
     * files (guide §6's 128 MB–1 GB window) and one fold task per 4M
     * rows of a band's history (guide §2.5). */
   private val bandFoldTargetRows = 4000000L
-
-  // "dir holds appended segments" must mean seg= SUBDIRS, not mere
-  // non-emptiness: a zero-survivor gate batch commits an appends dir
-  // containing only _SUCCESS (Spark writes the marker even for an
-  // empty partitioned frame), and treating that as has-appends sends
-  // the next batch's read into schema inference over zero parquet
-  // files — killing the stream until someone hand-deletes the dir.
-  private[graft] def hasSegDirs(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("seg="))
 
   /** Write `survivors`' band rows + shingles as append segment `seg`
     * beside a saved [[minhashIndexSave]] layout. Idempotent under
@@ -746,53 +726,9 @@ object Dedup {
     */
   def minhashIndexLoadWithAppends(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      maxSegExclusive: Long = Long.MaxValue): MinhashIndex = {
-    val base = minhashIndexLoad(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(s"$path/bands_appends")
-    val sp = new org.apache.hadoop.fs.Path(s"$path/shingles_appends")
-    val fs = bp.getFileSystem(spark.sessionState.newHadoopConf())
-    // "appends present" = both frames hold seg= partitions: the bands
-    // dir alone is not enough — a compaction crash between the two
-    // swap renames leaves bands_appends merged while shingles_appends
-    // is briefly absent, and a zero-survivor batch leaves either dir
-    // with only _SUCCESS inside (see [[hasSegDirs]]).
-    var hasAppends = hasSegDirs(fs, bp) && hasSegDirs(fs, sp)
-    if (!hasAppends && fs.exists(gateSwapMarkerPath(path))) {
-      var waited = 0
-      while (!hasAppends && fs.exists(gateSwapMarkerPath(path)) &&
-          waited < 10000) {
-        Thread.sleep(200); waited += 200
-        hasAppends = hasSegDirs(fs, bp) && hasSegDirs(fs, sp)
-      }
-      if (!hasAppends && fs.exists(gateSwapMarkerPath(path)))
-        throw new IllegalStateException(
-          s"minhashIndexLoadWithAppends($path): bands_appends / " +
-            "shingles_appends did not both appear while a compaction " +
-            "swap marker is present and did not clear within 10 s — a " +
-            "compaction likely crashed between its swap renames. The " +
-            "pre-swap segments are under bands_appends_old / " +
-            "shingles_appends_old; restore them or finish the " +
-            "compaction, then delete bands_swap_marker.")
-    }
-    if (!hasAppends) base
-    else {
-      // read-side backstop, same contract as ivfLoad / the sidecar
-      // readers (VERDICT r13 #6): warn when another writer let seg=
-      // leaves accumulate past 4× the default fold cadence
-      graft.streaming.StreamingOps.warnUncompacted(
-        spark, s"$path/bands_appends", "minhashIndexLoadWithAppends")
-      val keep = (df: DataFrame) =>
-        df.where(F.col("seg").cast("long") < maxSegExclusive)
-      val ab = keep(spark.read.parquet(s"$path/bands_appends"))
-        .select("band", "bh", "doc_id", "sig")
-      val ash = keep(spark.read.parquet(s"$path/shingles_appends"))
-        .select("doc_id", "sh")
-      MinhashIndex(
-        base.bandRows.select("band", "bh", "doc_id", "sig").unionByName(ab),
-        base.refShingles.select("doc_id", "sh").unionByName(ash),
-        base.numHashes, base.bands, base.shingleLen)
-    }
-  }
+      maxSegExclusive: Long = Long.MaxValue): MinhashIndex =
+    loadWithAppends(spark, path, minhashIndexLoad(spark, path), None,
+      maxSegExclusive, "minhashIndexLoadWithAppends")
 
   /** Per-epoch cache of the gate's BASE layout — the meta sidecar
     * parse and the two base directory listings (`bands`, `shingles`),
@@ -855,45 +791,46 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxSegExclusive: Long): MinhashIndex = {
     val entry = gateMinhashBase(spark, path)
-    val base = entry.base
+    loadWithAppends(spark, path, entry.base,
+      Some((entry.bandsAppSchema, entry.shinglesAppSchema)),
+      maxSegExclusive, "minhashIndexLoadWithAppendsCached")
+  }
+
+  /** The body of both loads: `base` ∪ the append segments below
+    * `maxSegExclusive`, read with the `(bands, shingles)` appends
+    * schemas when the caller holds them (skipping footer inference).
+    * "Appends present" = BOTH dirs hold seg= leaves: a compaction
+    * between its two swap renames leaves bands_appends merged while
+    * shingles_appends is briefly absent, and a zero-survivor batch
+    * leaves either dir with only _SUCCESS inside. */
+  private def loadWithAppends(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      base: MinhashIndex,
+      schemas: Option[(org.apache.spark.sql.types.StructType,
+        org.apache.spark.sql.types.StructType)],
+      maxSegExclusive: Long, reader: String): MinhashIndex = {
     val bp = new org.apache.hadoop.fs.Path(s"$path/bands_appends")
     val sp = new org.apache.hadoop.fs.Path(s"$path/shingles_appends")
     val fs = bp.getFileSystem(spark.sessionState.newHadoopConf())
-    var hasAppends = hasSegDirs(fs, bp) && hasSegDirs(fs, sp)
-    if (!hasAppends && fs.exists(gateSwapMarkerPath(path))) {
-      var waited = 0
-      while (!hasAppends && fs.exists(gateSwapMarkerPath(path)) &&
-          waited < 10000) {
-        Thread.sleep(200); waited += 200
-        hasAppends = hasSegDirs(fs, bp) && hasSegDirs(fs, sp)
-      }
-      if (!hasAppends && fs.exists(gateSwapMarkerPath(path)))
-        throw new IllegalStateException(
-          s"minhashIndexLoadWithAppendsCached($path): bands_appends / " +
-            "shingles_appends did not both appear while a compaction " +
-            "swap marker is present and did not clear within 10 s — a " +
-            "compaction likely crashed between its swap renames. The " +
-            "pre-swap segments are under bands_appends_old / " +
-            "shingles_appends_old; restore them or finish the " +
-            "compaction, then delete bands_swap_marker.")
+    val segs = SegmentTiers.awaitSwap(
+        fs, SegmentTiers.swapMarker(s"$path/bands"), s"$reader($path)") {
+      val b = SegmentTiers.segLeaves(fs, bp)
+      if (b.nonEmpty && SegmentTiers.hasSegs(fs, sp)) b else Nil
     }
-    if (!hasAppends) base
+    if (segs.isEmpty) base
     else {
-      graft.streaming.StreamingOps.warnUncompacted(
-        spark, s"$path/bands_appends", "minhashIndexLoadWithAppendsCached")
-      val keep = (df: DataFrame) =>
-        df.where(F.col("seg").cast("long") < maxSegExclusive)
-      val ab = keep(
-        spark.read.schema(entry.bandsAppSchema)
-          .parquet(s"$path/bands_appends"))
-        .select("band", "bh", "doc_id", "sig")
-      val ash = keep(
-        spark.read.schema(entry.shinglesAppSchema)
-          .parquet(s"$path/shingles_appends"))
-        .select("doc_id", "sh")
+      // read-side backstop, same contract as ivfLoad / the sidecar
+      // readers (VERDICT r13 #6)
+      SegmentTiers.warnUncompacted(bp.toString, segs.size, reader)
+      def read(p: org.apache.hadoop.fs.Path,
+          schema: Option[org.apache.spark.sql.types.StructType]) =
+        schema.fold(spark.read)(spark.read.schema).parquet(p.toString)
+          .where(F.col("seg").cast("long") < maxSegExclusive)
       MinhashIndex(
-        base.bandRows.select("band", "bh", "doc_id", "sig").unionByName(ab),
-        base.refShingles.select("doc_id", "sh").unionByName(ash),
+        base.bandRows.select("band", "bh", "doc_id", "sig").unionByName(
+          read(bp, schemas.map(_._1)).select("band", "bh", "doc_id", "sig")),
+        base.refShingles.select("doc_id", "sh").unionByName(
+          read(sp, schemas.map(_._2)).select("doc_id", "sh")),
         base.numHashes, base.bands, base.shingleLen)
     }
   }
@@ -901,12 +838,11 @@ object Dedup {
   /** Fold the gate's append segments below `maxSegExclusive` into one
     * merged segment — a small-files compaction, semantics-free (band
     * rows are per-document; queries before and after read the same
-    * set). Mirrors [[graft.operators.Similarity.ivfCompactAppends]]'s
-    * replay safety and swap protocol: the in-flight batch's segment is
-    * never folded (a replayed batch overlays its own leaves instead of
-    * duplicating rows already merged), the merged segment takes a
+    * set). The shared [[SegmentTiers.fold]], as for
+    * [[graft.operators.Similarity.ivfCompactAppends]]: the in-flight
+    * batch's segment is never folded, the merged segment takes a
     * NEGATIVE id no real batch can rewrite, and both directory swaps
-    * happen inside one marker bracket that
+    * happen under `bands_swap_marker`, which
     * [[minhashIndexLoadWithAppends]] waits on. Returns the merged
     * band-file count (0 = nothing eligible).
     */
@@ -914,101 +850,44 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxSegExclusive: Long = Long.MaxValue,
       tiered: Boolean = false): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val bp = new org.apache.hadoop.fs.Path(s"$path/bands_appends")
-    val sp = new org.apache.hadoop.fs.Path(s"$path/shingles_appends")
-    val fs = bp.getFileSystem(conf)
-    if (!hasSegDirs(fs, bp) || !hasSegDirs(fs, sp)) return 0
-    // fold-set selection on directory metadata (one listing + a
-    // contentSummary per seg dir — segment count is bounded by the
-    // cadence plus the geometric tier ladder). `tiered` (the in-stream
-    // cadence folds) rewrites only the SegmentTiers selection;
-    // explicit maintenance calls keep the full-fold law (one merged
-    // segment afterwards).
-    val segSizes: Seq[(Long, Long)] = fs.listStatus(bp).toSeq
-      .filter(_.getPath.getName.startsWith("seg="))
-      .flatMap { st =>
-        scala.util.Try(st.getPath.getName.substring(4).toLong).toOption
-          .map(id => id -> fs.getContentSummary(st.getPath).getLength)
-      }
-    val eligible = segSizes.filter(_._1 < maxSegExclusive)
-    if (eligible.isEmpty) return 0
-    val foldIds: Seq[Long] =
-      if (tiered) SegmentTiers.select(eligible) else eligible.map(_._1)
-    if (foldIds.isEmpty) return 0
-    val foldSet = foldIds.toSet
-    val inFold = (df: DataFrame) =>
-      df.where(F.col("seg").cast("long").isin(foldIds: _*))
-    val curB = inFold(spark.read.parquet(bp.toString))
-    // the merged id must never collide with ANY existing segment —
-    // surviving tiers included — nor with a future batch id (those are
-    // >= 0 and monotone under one checkpoint)
-    val mergedSeg = math.min(-1L, segSizes.map(_._1).min - 1L)
-    val curS = inFold(spark.read.parquet(sp.toString))
-    val tmpB = new org.apache.hadoop.fs.Path(s"$path/bands_appends_tmp")
-    val tmpS = new org.apache.hadoop.fs.Path(s"$path/shingles_appends_tmp")
-    Seq(tmpB, tmpS).foreach(p => if (fs.exists(p)) fs.delete(p, true))
-    // band-aligned shuffle so each band leaf gets one file — the same
-    // reasoning as the IVF fold's cluster repartition. Salted within
-    // band (guide §2.5): the band key space is only `bands` values
-    // wide, so an unsalted fold of a big corpus runs on ≤ bands tasks
-    // with each band's whole history behind one of them.
-    SegmentTiers.saltedRepartition(
-        curB.select("band", "bh", "doc_id", "sig"), "band",
-        Seq("doc_id"), bandFoldTargetRows)
-      .withColumn("seg", F.lit(mergedSeg))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", bandFoldTargetRows)
-      .partitionBy("seg", "band")
-      .parquet(tmpB.toString)
-    curS.select("doc_id", "sh")
-      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-      .withColumn("seg", F.lit(mergedSeg))
-      .write.mode("overwrite").partitionBy("seg")
-      .parquet(tmpS.toString)
-    val marker = gateSwapMarkerPath(path)
-    fs.create(marker, true).close()
-    def swap(live: org.apache.hadoop.fs.Path,
-        tmp: org.apache.hadoop.fs.Path, oldName: String): Unit = {
-      val old = new org.apache.hadoop.fs.Path(s"$path/$oldName")
-      if (fs.exists(old)) fs.delete(old, true)
-      // checked renames (VERDICT r13 #1): an unchecked false rename
-      // here would report a successful fold over an untouched layout
-      require(fs.rename(live, old),
-        s"minhashCompactAppends($path): rename $live -> $old failed; " +
-          "appends untouched, marker left for diagnosis")
-      // every segment NOT in the fold set carries over verbatim: the
-      // in-flight (>= maxSegExclusive) dirs as before, plus — under
-      // the tiered policy — the surviving merged tiers the fold
-      // deliberately left cold
-      fs.listStatus(old).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("seg=") &&
-            scala.util.Try(nm.substring(4).toLong).toOption
-              .exists(id => !foldSet.contains(id)))
-          require(
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(tmp, nm)),
-            s"minhashCompactAppends($path): carrying unfolded segment " +
-              s"$nm into $tmp failed; pre-fold segments survive under " +
-              s"$old, marker left for diagnosis")
-      }
-      require(fs.rename(tmp, live),
-        s"minhashCompactAppends($path): rename $tmp -> $live failed; " +
-          s"pre-fold segments survive under $old, marker left for diagnosis")
-      fs.delete(old, true)
-    }
-    swap(bp, tmpB, "bands_appends_old")
-    swap(sp, tmpS, "shingles_appends_old")
-    fs.delete(marker, false)
-    spark.read.parquet(bp.toString).inputFiles.length
+    def dir(name: String)(write: (DataFrame, Long, String) => Unit) =
+      SegmentTiers.FoldDir(new org.apache.hadoop.fs.Path(s"$path/$name"),
+        new org.apache.hadoop.fs.Path(s"$path/${name}_tmp"),
+        new org.apache.hadoop.fs.Path(s"$path/${name}_old"), write)
+    SegmentTiers.fold(spark, s"minhashCompactAppends($path)",
+      SegmentTiers.swapMarker(s"$path/bands"), Seq(
+        // band-aligned shuffle so each band leaf gets one file — the same
+        // reasoning as the IVF fold's cluster repartition. Salted within
+        // band (guide §2.5): the band key space is only `bands` values
+        // wide, so an unsalted fold of a big corpus runs on ≤ bands tasks
+        // with each band's whole history behind one of them.
+        dir("bands_appends") { (cur, merged, tmp) =>
+          SegmentTiers.saltedRepartition(
+              cur.select("band", "bh", "doc_id", "sig"), "band",
+              Seq("doc_id"), bandFoldTargetRows)
+            .withColumn("seg", F.lit(merged))
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", bandFoldTargetRows)
+            .partitionBy("seg", "band")
+            .parquet(tmp)
+        },
+        dir("shingles_appends") { (cur, merged, tmp) =>
+          cur.select("doc_id", "sh")
+            .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
+            .withColumn("seg", F.lit(merged))
+            .write.mode("overwrite").partitionBy("seg")
+            .parquet(tmp)
+        }),
+      maxSegExclusive, tiered)
   }
 
   /** Remove documents from a PERSISTED layout in place — the takedown
     * operator (GDPR erasure, licensing retraction, contaminated-drop
     * rollback): anti-join every stored frame — base bands, base
     * shingles, and every streamed append segment — on `doc_id`,
-    * rewrite into staging siblings, then swap all four directories
-    * inside one marker bracket. Band rows are per-document, so removal
+    * rewrite into staging siblings, then swap the changed directories
+    * under one marker ([[SegmentTiers.removeRows]]). Band rows are
+    * per-document, so removal
     * is EXACT: the post-removal layout equals a cold
     * [[minhashIndexBuild]] over the surviving corpus (the same law
     * [[minhashIndexRemove]] pins for the in-memory form), and removed
@@ -1030,89 +909,19 @@ object Dedup {
     */
   def minhashLayoutRemove(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val key = ids.select(F.col("doc_id").cast("long").as("doc_id"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    key.count()
-    try {
-      val live = Seq(
-        ("bands", Seq("band")), ("shingles", Nil),
+      ids: DataFrame): Long =
+    SegmentTiers.removeRows(spark, s"minhashLayoutRemove($path)", path,
+      SegmentTiers.swapMarker(s"$path/bands"), ids, "doc_id",
+      Seq(("bands", Seq("band")), ("shingles", Nil),
         ("bands_appends", Seq("seg", "band")),
-        ("shingles_appends", Seq("seg")))
-      var removed = 0L
-      // (src, Some(tmp) = swap in the rewrite, None = rewrite emptied
-      // the dir — delete it: a partitioned parquet dir with zero rows
-      // is unreadable (no schema), and an absent appends dir is the
-      // well-defined "no appends" state
-      val staged = live.flatMap { case (dir, parts) =>
-        val src = new org.apache.hadoop.fs.Path(s"$path/$dir")
-        // appends dirs need seg= leaves to be readable at all — a
-        // zero-survivor batch leaves just _SUCCESS (see [[hasSegDirs]])
-        val readable =
-          if (dir.endsWith("_appends")) hasSegDirs(fs, src)
-          else fs.exists(src)
-        if (!readable) None
-        else {
-          val before = spark.read.parquet(src.toString)
-          // the scaladoc promises "number of band rows removed" — only
-          // the two bands dirs feed that count, so only they pay the
-          // (row-group-metadata-speed) before-count job (ADVICE r14:
-          // counting the shingles dirs too was a wasted Spark job per
-          // removal); with the anti-join count below it yields the
-          // removed-row count without the old second semi-join scan
-          val countsRemoved = dir == "bands" || dir == "bands_appends"
-          val beforeCount = if (countsRemoved) before.count() else 0L
-          val kept = before.join(key, Seq("doc_id"), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val nKept = kept.count()
-          // accumulate across base AND streamed append segments, as
-          // [[graft.operators.Similarity.ivfLayoutRemove]] does
-          if (countsRemoved)
-            removed += beforeCount - nKept
-          if (dir == "bands")
-            require(nKept > 0L,
-              s"minhashLayoutRemove($path): removal would empty the base " +
-                "index — delete the layout instead of removing every document")
-          val out =
-            if (nKept == 0L) Some((src, None))
-            else {
-              val tmp = new org.apache.hadoop.fs.Path(s"$path/${dir}_remove_tmp")
-              if (fs.exists(tmp)) fs.delete(tmp, true)
-              val w = kept.write.mode("overwrite")
-              (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-                .parquet(tmp.toString)
-              Some((src, Some(tmp)))
-            }
-          kept.unpersist(blocking = false)
-          out
-        }
-      }
-      val marker = gateSwapMarkerPath(path)
-      fs.create(marker, true).close()
-      staged.foreach {
-        case (src, Some(tmp)) =>
-          val old = new org.apache.hadoop.fs.Path(src.toString + "_remove_old")
-          if (fs.exists(old)) fs.delete(old, true)
-          // HDFS rename returns false instead of throwing on some
-          // failures; unchecked, a false here would report a
-          // SUCCESSFUL erasure over untouched data
-          require(fs.rename(src, old),
-            s"minhashLayoutRemove($path): rename $src -> $old failed; " +
-              "layout untouched, marker left for diagnosis")
-          require(fs.rename(tmp, src),
-            s"minhashLayoutRemove($path): rename $tmp -> $src failed; " +
-              s"pre-swap data survives under $old, marker left for diagnosis")
-          fs.delete(old, true)
-        case (src, None) =>
-          fs.delete(src, true)
-      }
-      fs.delete(marker, false)
-      removed
-    } finally key.unpersist(blocking = false)
-  }
+        ("shingles_appends", Seq("seg"))),
+      // the scaladoc promises "number of band rows removed" — only the
+      // two bands dirs feed that count, so only they pay the
+      // before-count job (ADVICE r14: counting the shingles dirs too
+      // was a wasted Spark job per removal)
+      counted = _.startsWith("bands"),
+      guard = ("bands", s"minhashLayoutRemove($path): removal would empty " +
+        "the base index — delete the layout instead of removing every document"))
 
   /** [[minhashNearDupAgainst]] with the reference side PREBUILT: the
     * corpus pays its signature pass, the reference contributes its

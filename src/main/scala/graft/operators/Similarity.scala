@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.VectorFunctions._
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
+import graft.api.ArrowSpaceModel.{readSidecar, sidecarText}
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import scala.reflect.runtime.universe.TypeTag
 
@@ -256,13 +257,7 @@ object Similarity {
   }
 
   def sq8Load(spark: org.apache.spark.sql.SparkSession, path: String): Sq8Index = {
-    val txt = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/stats.json")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
+    val txt = sidecarText(spark, s"$path/stats.json")
     def arr(name: String): Array[Double] =
       ("\"" + name + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt).get
         .group(1).split(",").map(_.toDouble)
@@ -1270,13 +1265,7 @@ object Similarity {
   }
 
   def pqLoad(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex = {
-    val txt = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/books.json")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
+    val txt = sidecarText(spark, s"$path/books.json")
     def intOf(name: String): Int =
       ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(txt).get.group(1).toInt
     val (m, ksub, dsub) = (intOf("m"), intOf("ksub"), intOf("dsub"))
@@ -1592,13 +1581,7 @@ object Similarity {
   def rotationLoad(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Double]] = {
-    val txt = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/rotation.json")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
+    val txt = sidecarText(spark, s"$path/rotation.json")
     val dims = "\"dims\":(\\d+)".r.findFirstMatchIn(txt).get.group(1).toInt
     val flat = "-?\\d+(?:\\.\\d+(?:[eE][+-]?\\d+)?)?".r
       .findAllIn(txt.substring(txt.indexOf("\"rot\":")))
@@ -2927,8 +2910,8 @@ object Similarity {
       if (fs.exists(p)) fs.delete(p, true)
       // a stale swap marker beside a deliberately-removed applists would
       // make the next load wait-and-throw; a re-save starts clean
-      if (fs.exists(swapMarkerPath(path)))
-        fs.delete(swapMarkerPath(path), false)
+      val marker = SegmentTiers.swapMarker(s"$path/applists")
+      if (fs.exists(marker)) fs.delete(marker, false)
     }
     val cent = index.centroids
       .map { case (c, v) => s"""[$c,[${v.mkString(",")}]]""" }
@@ -3030,39 +3013,19 @@ object Similarity {
     // a compaction swap makes applists briefly absent between its two
     // renames; the marker distinguishes that window from a genuinely
     // append-free layout, so a racing load WAITS for the swap instead
-    // of silently dropping every appended vector (ADVICE r10). A
-    // marker that never clears means a compaction crashed mid-swap —
-    // fail actionably (the pre-swap segments survive under
-    // applists_compact_old) rather than serve a silently smaller index.
-    // seg=-leaf check, not bare existence (the zero-row batch class,
-    // ADVICE r11 generalized): a zero-ADMIT gate batch commits an
-    // applists dir holding only _SUCCESS — an empty partitioned write
-    // is a no-op — and schema inference over zero files kills the read
-    def liveAppends(): Boolean =
-      fs.exists(ap) && graft.operators.Dedup.hasSegDirs(fs, ap)
-    var hasAppends = liveAppends()
-    if (!hasAppends && fs.exists(swapMarkerPath(path))) {
-      var waited = 0
-      while (!hasAppends && fs.exists(swapMarkerPath(path)) && waited < 10000) {
-        Thread.sleep(200); waited += 200
-        hasAppends = liveAppends()
-      }
-      if (!hasAppends && fs.exists(swapMarkerPath(path)))
-        throw new IllegalStateException(
-          s"ivfLoad($path): applists is absent but a compaction swap " +
-            "marker is present and did not clear within 10 s — a " +
-            "compaction likely crashed between its swap renames. The " +
-            "pre-swap segments are under applists_compact_old; restore " +
-            "them (rename back to applists) or finish the compaction, " +
-            "then delete applists_swap_marker.")
-    }
+    // of silently dropping every appended vector (ADVICE r10), and a
+    // marker that never clears fails actionably. seg=-leaf check, not
+    // bare existence: a zero-ADMIT gate batch commits an applists dir
+    // holding only _SUCCESS (see SegmentTiers.segLeaves)
+    val segs = SegmentTiers.awaitSwap(fs,
+      SegmentTiers.swapMarker(s"$path/applists"), s"ivfLoad($path)")(
+      SegmentTiers.segLeaves(fs, ap))
+    val hasAppends = segs.nonEmpty
     // read-side backstop: segments folded by NOBODY (another writer's
     // stream with compaction disabled) accumulate unbounded seg= leaves
-    // that every load lists and merges — warn past 4× the default
-    // cadence, same contract as the sidecar readers (VERDICT r13 #6)
+    // that every load lists and merges (VERDICT r13 #6)
     if (hasAppends)
-      graft.streaming.StreamingOps.warnUncompacted(
-        spark, s"$path/applists", "ivfLoad")
+      SegmentTiers.warnUncompacted(ap.toString, segs.size, "ivfLoad")
     val assigned =
       if (hasAppends)
         base.unionByName(
@@ -3091,116 +3054,44 @@ object Similarity {
     * would be the real scale bug. The merged segment takes seg = -1 -
     * (previous most-negative), so it can never collide with a future
     * micro-batch id (those are >= 0 and monotone under one
-    * checkpoint). Readers racing the swap see either the old segments
-    * or the merged one — the brief applists-absent window between
-    * delete and rename can drop appends from a CONCURRENT ivfLoad;
-    * run compaction from the ingest hook (sequential with writes) and
-    * let the serve loop's periodic reload pick up the result.
+    * checkpoint). Only segments below `maxSegExclusive` fold (ADVICE
+    * r10): called from the ingest hook with the CURRENT batch id, the
+    * in-flight segment stays its own dir, so a replay after a
+    * post-compaction crash overlays its own leaves instead of
+    * duplicating folded rows. `tiered` (the in-stream cadence folds)
+    * rewrites only the [[SegmentTiers.select]] subset, so a big cold
+    * merged segment is not re-copied on every fold. The swap runs
+    * behind `applists_swap_marker`, which [[ivfLoad]] waits on; an
+    * in-flight scan over the OLD files still fails and must retry,
+    * which the reloading serve face does ([[SegmentTiers.fold]]).
     * Returns the number of files after compaction (0 = no appends).
     */
-  /** Marker sidecar present for the duration of a compaction swap —
-    * [[ivfLoad]] checks it before concluding an absent `applists`
-    * means "no appends", closing the silent-data-loss window a
-    * concurrent load racing the two swap renames would otherwise hit
-    * (it would serve base-only with no signal, ADVICE r10).
-    */
-  private def swapMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/applists_swap_marker")
-
   def ivfCompactAppends(
       spark: org.apache.spark.sql.SparkSession, path: String,
       targetFileRows: Int = 4000000,
       maxSegExclusive: Long = Long.MaxValue,
-      tiered: Boolean = false): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val ap = new org.apache.hadoop.fs.Path(s"$path/applists")
-    val fs = ap.getFileSystem(conf)
-    if (!fs.exists(ap) || fs.listStatus(ap).isEmpty) return 0
-    // fold only segments strictly below `maxSegExclusive` (ADVICE r10):
-    // called from the ingest hook with the CURRENT batch id, this keeps
-    // the in-flight batch's segment as its own directory, so a replay
-    // of that batch after a post-compaction crash overlays its own
-    // leaves (dynamic partition overwrite) instead of duplicating rows
-    // that were already folded into the merged segment.
-    // `tiered` (the in-stream cadence folds) additionally rewrites only
-    // the [[graft.operators.SegmentTiers]] selection — committed real
-    // segments plus the ratio-eligible merged tiers — so a big cold
-    // merged segment is not re-copied on every fold (that was O(N²)
-    // fold I/O over a stream's life); explicit maintenance calls keep
-    // the full-fold law (one merged segment afterwards).
-    val segSizes: Seq[(Long, Long)] = fs.listStatus(ap).toSeq
-      .filter(_.getPath.getName.startsWith("seg="))
-      .flatMap { st =>
-        scala.util.Try(st.getPath.getName.substring(4).toLong).toOption
-          .map(id => id -> fs.getContentSummary(st.getPath).getLength)
-      }
-    val eligible = segSizes.filter(_._1 < maxSegExclusive)
-    if (eligible.isEmpty) return 0 // nothing eligible to fold
-    val foldIds: Seq[Long] =
-      if (tiered) graft.operators.SegmentTiers.select(eligible)
-      else eligible.map(_._1)
-    if (foldIds.isEmpty) return 0
-    val foldSet = foldIds.toSet
-    val all = spark.read.parquet(s"$path/applists")
-    val cur = all.where(F.col("seg").cast("long").isin(foldIds: _*))
-    // never collide with ANY existing segment, surviving tiers included
-    val mergedSeg = math.min(-1L, segSizes.map(_._1).min - 1L)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/applists_compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // cluster-aligned shuffle so each list leaf gets ONE file (bounded
-    // by maxRecordsPerFile) — without it every input segment task
-    // re-emits a file per touched cluster and the "compaction" can
-    // leave the file count unchanged. Salted within cluster (guide
-    // §2.5): a hot list's fold otherwise serializes behind one task.
-    graft.operators.SegmentTiers.saltedRepartition(
-        cur.select("id", "vec", "cluster"), "cluster", Seq("id"),
-        targetFileRows.toLong)
-      .withColumn("seg", F.lit(mergedSeg))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", targetFileRows.toLong)
-      .partitionBy("seg", "cluster")
-      .parquet(tmp.toString)
-    // rename-based swap: two metadata renames instead of a recursive
-    // delete in the readers' path. The marker brackets the swap so a
-    // concurrent ivfLoad in the applists-absent instant WAITS instead
-    // of silently serving base-only; an in-flight scan over the OLD
-    // files still fails and must retry, which the reloading serve
-    // face does.
-    val marker = swapMarkerPath(path)
-    fs.create(marker, true).close()
-    val old = new org.apache.hadoop.fs.Path(s"$path/applists_compact_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    // HDFS rename returns false instead of throwing on some failures;
-    // unchecked, a false first rename leaves the live dir in place, the
-    // second rename then also fails (destination exists), delete(old)
-    // no-ops, and the method reports a successful compaction over an
-    // untouched layout — the same silent-false-success class
-    // codesLayoutRemove closed (VERDICT r13 #1). Fail loud; the marker
-    // + *_old/*_tmp siblings then document the crashed swap.
-    require(fs.rename(ap, old),
-      s"ivfCompactAppends($path): rename $ap -> $old failed; " +
-        "appends untouched, marker left for diagnosis")
-    // every segment NOT in the fold set carries over verbatim — the
-    // in-flight (>= maxSegExclusive) dirs, plus the surviving merged
-    // tiers a tiered fold deliberately left cold
-    fs.listStatus(old).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("seg=") &&
-          scala.util.Try(nm.substring(4).toLong).toOption
-            .exists(id => !foldSet.contains(id)))
-        require(
-          fs.rename(st.getPath, new org.apache.hadoop.fs.Path(tmp, nm)),
-          s"ivfCompactAppends($path): carrying unfolded segment $nm " +
-            s"into $tmp failed; pre-fold segments survive under $old, " +
-            "marker left for diagnosis")
-    }
-    require(fs.rename(tmp, ap),
-      s"ivfCompactAppends($path): rename $tmp -> $ap failed; " +
-        s"pre-fold segments survive under $old, marker left for diagnosis")
-    fs.delete(marker, false)
-    fs.delete(old, true)
-    spark.read.parquet(s"$path/applists").inputFiles.length
-  }
+      tiered: Boolean = false): Int =
+    SegmentTiers.fold(spark, s"ivfCompactAppends($path)",
+      SegmentTiers.swapMarker(s"$path/applists"), Seq(SegmentTiers.FoldDir(
+        new org.apache.hadoop.fs.Path(s"$path/applists"),
+        new org.apache.hadoop.fs.Path(s"$path/applists_compact_tmp"),
+        new org.apache.hadoop.fs.Path(s"$path/applists_compact_old"),
+        // cluster-aligned shuffle so each list leaf gets ONE file
+        // (bounded by maxRecordsPerFile) — without it every input
+        // segment task re-emits a file per touched cluster and the
+        // "compaction" can leave the file count unchanged. Salted
+        // within cluster (guide §2.5): a hot list's fold otherwise
+        // serializes behind one task.
+        (cur, merged, tmp) =>
+          SegmentTiers.saltedRepartition(
+              cur.select("id", "vec", "cluster"), "cluster", Seq("id"),
+              targetFileRows.toLong)
+            .withColumn("seg", F.lit(merged))
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", targetFileRows.toLong)
+            .partitionBy("seg", "cluster")
+            .parquet(tmp))),
+      maxSegExclusive, tiered)
 
   /** Remove vectors from a PERSISTED IVF layout in place — the
     * takedown sibling of [[graft.operators.Dedup.minhashLayoutRemove]]
@@ -3220,69 +3111,16 @@ object Similarity {
   def ivfLayoutRemove(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/lists")),
       s"ivfLayoutRemove($path): no saved IVF layout there")
-    val key = ids.select(F.col("id").cast("long").as("id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    key.count()
-    try {
-      var removed = 0L
-      val staged = Seq(
-        ("lists", Seq("cluster")), ("applists", Seq("seg", "cluster")))
-        .flatMap { case (dir, parts) =>
-          val src = new org.apache.hadoop.fs.Path(s"$path/$dir")
-          if (!fs.exists(src)) None
-          else {
-            val before = spark.read.parquet(src.toString)
-            // removed = total - kept: the no-filter parquet count reads
-            // row-group metadata only, so this replaces a second full
-            // semi-join scan of the layout with a near-free count —
-            // the anti-join partitions `before`, so the arithmetic is
-            // exactly the old semi-join count
-            val beforeCount = before.count()
-            val kept = before.join(key, Seq("id"), "left_anti")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val nKept = kept.count()
-            removed += beforeCount - nKept
-            if (dir == "lists") require(nKept > 0L,
-              s"ivfLayoutRemove($path): removal would empty the index — " +
-                "delete the layout instead of removing every vector")
-            val out =
-              if (nKept == 0L) Some((src, Option.empty[org.apache.hadoop.fs.Path]))
-              else {
-                val tmp = new org.apache.hadoop.fs.Path(s"$path/${dir}_remove_tmp")
-                if (fs.exists(tmp)) fs.delete(tmp, true)
-                kept.write.mode("overwrite").partitionBy(parts: _*)
-                  .parquet(tmp.toString)
-                Some((src, Some(tmp)))
-              }
-            kept.unpersist(blocking = false)
-            out
-          }
-        }
-      val marker = swapMarkerPath(path)
-      fs.create(marker, true).close()
-      staged.foreach {
-        case (src, Some(tmp)) =>
-          val old = new org.apache.hadoop.fs.Path(src.toString + "_remove_old")
-          if (fs.exists(old)) fs.delete(old, true)
-          // see codesLayoutRemove: an unchecked false rename would
-          // report a successful erasure over untouched data
-          require(fs.rename(src, old),
-            s"ivfLayoutRemove($path): rename $src -> $old failed; " +
-              "layout untouched, marker left for diagnosis")
-          require(fs.rename(tmp, src),
-            s"ivfLayoutRemove($path): rename $tmp -> $src failed; " +
-              s"pre-swap data survives under $old, marker left for diagnosis")
-          fs.delete(old, true)
-        case (src, None) =>
-          fs.delete(src, true)
-      }
-      fs.delete(marker, false)
-      removed
-    } finally key.unpersist(blocking = false)
+    SegmentTiers.removeRows(spark, s"ivfLayoutRemove($path)", path,
+      SegmentTiers.swapMarker(s"$path/applists"), ids, "id",
+      Seq(("lists", Seq("cluster")), ("applists", Seq("seg", "cluster"))),
+      counted = _ => true,
+      guard = ("lists", s"ivfLayoutRemove($path): removal would empty " +
+        "the index — delete the layout instead of removing every vector"))
   }
 
   /** Remove vectors from a persisted CODEC layout in place — the
@@ -3309,55 +3147,15 @@ object Similarity {
   def codesLayoutRemove(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame): Long = {
-    val conf = spark.sessionState.newHadoopConf()
     val src = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = src.getFileSystem(conf)
-    require(fs.exists(src),
+    require(src.getFileSystem(spark.sessionState.newHadoopConf()).exists(src),
       s"codesLayoutRemove($path): no codes/ there — not a saved codec " +
         "layout (sq8Save/binarySave/pqSave/opqSave write codes/)")
-    val key = ids.select(F.col("id").cast("long").as("id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    key.count()
-    try {
-      val before = spark.read.parquet(src.toString)
-      // removed = total - kept (one anti-join scan + a metadata-speed
-      // no-filter parquet count, replacing the old second semi-join
-      // scan; identical arithmetic — the anti-join partitions `before`)
-      val beforeCount = before.count()
-      val kept = before.join(key, Seq("id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nKept = kept.count()
-      val removed = beforeCount - nKept
-      if (removed == 0L) { // nothing to erase — skip the rewrite
-        kept.unpersist(blocking = false)
-        return 0L
-      }
-      require(nKept > 0L,
-        s"codesLayoutRemove($path): removal would empty the index — " +
-          "delete the layout instead of removing every vector")
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/codes_remove_tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      kept.write.mode("overwrite").parquet(tmp.toString)
-      kept.unpersist(blocking = false)
-      val marker = new org.apache.hadoop.fs.Path(s"$path/codes_swap_marker")
-      fs.create(marker, true).close()
-      val old = new org.apache.hadoop.fs.Path(s"$path/codes_remove_old")
-      if (fs.exists(old)) fs.delete(old, true)
-      // HDFS rename returns false instead of throwing on some
-      // failures; an unchecked false here would delete the marker and
-      // report a SUCCESSFUL erasure while every removed id is still
-      // retrievable — the worst possible takedown outcome. Fail loud;
-      // the marker + *_old dir then document the crashed swap.
-      require(fs.rename(src, old),
-        s"codesLayoutRemove($path): rename $src -> $old failed; " +
-          "codes are untouched, marker left for diagnosis")
-      require(fs.rename(tmp, src),
-        s"codesLayoutRemove($path): rename $tmp -> $src failed; " +
-          s"pre-swap codes survive under $old, marker left for diagnosis")
-      fs.delete(old, true)
-      fs.delete(marker, false)
-      removed
-    } finally key.unpersist(blocking = false)
+    SegmentTiers.removeRows(spark, s"codesLayoutRemove($path)", path,
+      SegmentTiers.swapMarker(s"$path/codes"), ids, "id",
+      Seq(("codes", Nil)), counted = _ => true,
+      guard = ("codes", s"codesLayoutRemove($path): removal would empty " +
+        "the index — delete the layout instead of removing every vector"))
   }
 
   /** Drop-vs-drop EMBEDDING drift: occupancy PSI over the frozen
@@ -3432,7 +3230,7 @@ object Similarity {
     val base = spark.read.parquet(s"$path/lists").select("id", "vec")
     val ap = new org.apache.hadoop.fs.Path(s"$path/applists")
     val (folded, excluded) =
-      if (fs.exists(ap) && fs.listStatus(ap).nonEmpty) {
+      if (SegmentTiers.hasSegs(fs, ap)) {
         val appends = spark.read.parquet(s"$path/applists")
         val inc = appends.where(F.col("seg").cast("long") < maxSegExclusive)
           .select("id", "vec")
@@ -3470,23 +3268,13 @@ object Similarity {
       }
     } finally ivfRelease(fresh)
     // the swap: old layout intact (and serving) until here, then two
-    // metadata renames; readers in the window fail loudly and retry
-    val old = new org.apache.hadoop.fs.Path(s"${path}__rebuild_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    // checked renames (VERDICT r13 #1): an unchecked false on the first
-    // rename would cascade — the second rename fails too (root still
-    // exists), delete(old) no-ops, and the method would return fresh.k
-    // claiming a successful rebuild while the STALE layout still
-    // serves, on exactly the drift signal that demanded the rebuild.
-    require(fs.rename(root, old),
-      s"ivfRebuild($path): rename $root -> $old failed; the old " +
-        s"layout is untouched and still serves, the fresh layout " +
-        s"survives under $stagingP for diagnosis")
-    require(fs.rename(stagingP, root),
-      s"ivfRebuild($path): rename $stagingP -> $root failed; the " +
-        s"pre-rebuild layout survives under $old — restore it (or " +
-        s"finish the swap by hand) before serving resumes")
-    fs.delete(old, true)
+    // checked metadata renames; readers in the window fail loudly and
+    // retry. An unchecked false on the first rename would claim a
+    // successful rebuild while the STALE layout still serves, on
+    // exactly the drift signal that demanded the rebuild.
+    SegmentTiers.swap(fs, s"ivfRebuild($path)", None, Seq(SegmentTiers.Move(
+      root, new org.apache.hadoop.fs.Path(s"${path}__rebuild_old"),
+      Some(stagingP))))
     fresh.k
   }
 
@@ -3539,19 +3327,6 @@ object Similarity {
   def ivfResizeLists(index: IvfIndex, targetListSize: Int = FineMineListTarget): IvfIndex = {
     val rows = index.assigned.select("id", "vec")
     ivfBuildAuto(rows, suggestLists(rows.count(), targetListSize))
-  }
-
-  private def readSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
   }
 
   /** Per-embedding L2 norms: (id, norm). */

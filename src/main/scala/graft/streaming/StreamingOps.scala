@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.spectral.LocalLaplacian
+import graft.operators.SegmentTiers
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -373,7 +374,8 @@ object StreamingOps {
         // segments behind by design, and counting those would make
         // every subsequent batch re-trigger the fold
         if (compactEverySegs > 0 &&
-            realSegCount(spark, s"$indexPath/bands_appends")
+            SegmentTiers.segCount(
+              spark, s"$indexPath/bands_appends", realOnly = true)
               >= compactEverySegs) {
           graft.operators.Dedup.minhashCompactAppends(
             spark, indexPath, maxSegExclusive = batchId, tiered = true)
@@ -541,7 +543,8 @@ object StreamingOps {
           cosineThreshold, nprobe)
         // REAL (seg >= 0) segments only — see minhashGateStream's hook
         if (compactEverySegs > 0 &&
-            realSegCount(spark, s"$indexPath/applists")
+            SegmentTiers.segCount(
+              spark, s"$indexPath/applists", realOnly = true)
               >= compactEverySegs) {
           graft.operators.Similarity.ivfCompactAppends(
             spark, indexPath, maxSegExclusive = batchId, tiered = true)
@@ -800,8 +803,12 @@ object StreamingOps {
         .select("id", "vec", "cluster"))
     val ap = new org.apache.hadoop.fs.Path(s"$indexPath/applists")
     val fs = ap.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasAppends = SegmentTiers.awaitSwap(fs,
+      SegmentTiers.swapMarker(s"$indexPath/applists"),
+      s"embedGateStateScan($indexPath)")(SegmentTiers.segLeaves(fs, ap))
+      .nonEmpty
     val state =
-      if (fs.exists(ap) && graft.operators.Dedup.hasSegDirs(fs, ap)) {
+      if (hasAppends) {
         val apReader = cachedState match {
           case Some(st) => spark.read.schema(
             st.listsSchema.add("seg", org.apache.spark.sql.types.LongType))
@@ -856,7 +863,7 @@ object StreamingOps {
         // same fold cadence as the gate's: committed segments only
         // (seg < batchId — a replayed batch overlays its own leaf)
         if (compactEverySegs > 0 &&
-            segCount(spark, sidecarPath) >= compactEverySegs) {
+            SegmentTiers.segCount(spark, sidecarPath) >= compactEverySegs) {
           profileCompact(spark, sidecarPath, maxSegExclusive = batchId)
           ()
         }
@@ -865,60 +872,13 @@ object StreamingOps {
       .outputMode(OutputMode.Append())
       .start()
 
-  private def segCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count(_.getPath.getName.startsWith("seg="))
-  }
-
-  /** REAL (seg >= 0, i.e. per-micro-batch) segment dirs only — the
-    * fold-cadence trigger for the tiered compactions, which leave
-    * negative merged tiers behind by design. */
-  private def realSegCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count { st =>
-      val nm = st.getPath.getName
-      nm.startsWith("seg=") &&
-        scala.util.Try(nm.substring(4).toLong).toOption.exists(_ >= 0)
-    }
-  }
-
-  /** Read-side backstop to the ingest-side fold cadence: state folded
-    * by OTHER writers (or a stream run with compaction disabled) can
-    * still accumulate unbounded `seg=` leaves; warn loudly past 4× the
-    * default cadence so the cost is attributable before it hurts.
-    * Shared with the two biggest state-table readers outside this
-    * file — [[graft.operators.Similarity.ivfLoad]] and
-    * [[graft.operators.Dedup.minhashIndexLoadWithAppends]] (VERDICT
-    * r13 #6: the same other-writer accumulation risk applies there). */
-  private[graft] def warnUncompacted(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      reader: String): Unit = {
-    val segs = segCount(spark, path)
-    if (segs > 4 * defaultCompactEverySegs)
-      org.apache.logging.log4j.LogManager.getLogger("graft").warn(
-        s"$reader: $path holds $segs uncompacted seg= leaves — every " +
-          "read lists and merges all of them. Fold with the matching " +
-          "*Compact face, or leave the stream's compactEverySegs at " +
-          s"its default ($defaultCompactEverySegs).")
-  }
-
   /** The merged profile over every sidecar [[profileStream]] has
     * committed so far — same output shape as
     * [[graft.operators.Profile.profile]]. */
   def profileOf(
       spark: org.apache.spark.sql.SparkSession,
       sidecarPath: String): DataFrame = {
-    awaitNoSwap(
-      new org.apache.hadoop.fs.Path(sidecarPath)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      sidecarPath)
-    warnUncompacted(spark, sidecarPath, "profileOf")
+    sidecarLeaves(spark, sidecarPath, "profileOf")
     graft.operators.Profile.mergeShards(
       spark.read.parquet(sidecarPath).drop("seg"))
   }
@@ -953,7 +913,7 @@ object StreamingOps {
           .partitionBy("seg")
           .parquet(sidecarPath)
         if (compactEverySegs > 0 &&
-            segCount(spark, sidecarPath) >= compactEverySegs) {
+            SegmentTiers.segCount(spark, sidecarPath) >= compactEverySegs) {
           histCompact(spark, sidecarPath, maxSegExclusive = batchId)
           ()
         }
@@ -970,16 +930,11 @@ object StreamingOps {
       spark: org.apache.spark.sql.SparkSession,
       sidecarPath: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(sidecarPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    awaitNoSwap(fs, sidecarPath)
-    if (!fs.exists(p) || !graft.operators.Dedup.hasSegDirs(fs, p))
+    if (sidecarLeaves(spark, sidecarPath, "histOf").isEmpty)
       Seq.empty[(Int, Long)].toDF("bucket", "n")
-    else {
-      warnUncompacted(spark, sidecarPath, "histOf")
+    else
       graft.operators.Profile.histMerge(
         spark.read.parquet(sidecarPath).drop("seg"))
-    }
   }
 
   /** Fold [[histStream]]'s committed segments into one merged segment
@@ -988,7 +943,7 @@ object StreamingOps {
   def histCompact(
       spark: org.apache.spark.sql.SparkSession, sidecarPath: String,
       maxSegExclusive: Long = Long.MaxValue): Int =
-    compactSegDir(spark, sidecarPath, maxSegExclusive, outFiles = 1)(
+    compactSegDir(spark, sidecarPath, maxSegExclusive)(
       graft.operators.Profile.histMerge)
 
   /** Streaming heavy-hitters over the token stream — the unbounded
@@ -1059,7 +1014,8 @@ object StreamingOps {
             .partitionBy("seg")
             .parquet(s"$sidecarPath/cms")
           if (compactEverySegs > 0 &&
-              segCount(spark, s"$sidecarPath/cms") >= compactEverySegs) {
+              SegmentTiers.segCount(
+                spark, s"$sidecarPath/cms") >= compactEverySegs) {
             heavyTokensCompact(spark, sidecarPath,
               maxSegExclusive = batchId)
             ()
@@ -1081,13 +1037,14 @@ object StreamingOps {
       sidecarPath: String,
       phi: Double): DataFrame = {
     import spark.implicits._
-    locally {
-      val fs = new org.apache.hadoop.fs.Path(sidecarPath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      awaitNoSwap(fs, s"$sidecarPath/tops")
-      awaitNoSwap(fs, s"$sidecarPath/cms")
-    }
-    warnUncompacted(spark, s"$sidecarPath/cms", "heavyTokensOf")
+    // a zero-token batch writes its cms row but an EMPTY tops frame —
+    // which leaves no seg= leaf at all (an empty partitioned write is
+    // a no-op), so until the first token arrives the tops dir holds
+    // only _SUCCESS and a bare read dies on schema inference. No seg
+    // leaves = no candidates, which is also the correct answer.
+    val topsHasSegs =
+      sidecarLeaves(spark, s"$sidecarPath/tops", "heavyTokensOf").nonEmpty
+    sidecarLeaves(spark, s"$sidecarPath/cms", "heavyTokensOf")
     val cmsRows = spark.read.parquet(s"$sidecarPath/cms")
       .select("sketch", "n_tokens", "phi").collect()
     require(cmsRows.nonEmpty, s"heavyTokensOf($sidecarPath): no sidecars")
@@ -1105,15 +1062,6 @@ object StreamingOps {
         .readFrom(r.getAs[Array[Byte]](0)))
       .reduce { (a, b) => a.mergeInPlace(b); a }
     val minCount = math.max(1L, math.ceil(phi * totalN).toLong)
-    // a zero-token batch writes its cms row but an EMPTY tops frame —
-    // which leaves no seg= leaf at all (an empty partitioned write is
-    // a no-op), so until the first token arrives the tops dir holds
-    // only _SUCCESS and a bare read dies on schema inference. No seg
-    // leaves = no candidates, which is also the correct answer.
-    val topsHasSegs = graft.operators.Dedup.hasSegDirs(
-      new org.apache.hadoop.fs.Path(s"$sidecarPath/tops")
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      new org.apache.hadoop.fs.Path(s"$sidecarPath/tops"))
     val lbs =
       if (!topsHasSegs) Array.empty[(String, Long)]
       else spark.read.parquet(s"$sidecarPath/tops")
@@ -1149,89 +1097,43 @@ object StreamingOps {
     * cadence explicitly. */
   val defaultCompactEverySegs: Int = 64
 
-  // SIBLING of the sidecar dir, never inside it — an in-dir marker
-  // would ride the live→old rename away mid-swap, exactly when
-  // readers need to see it
-  private[graft] def sidecarSwapMarker(path: String) =
-    new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "_swap_marker")
-
-  /** Readers wait out an in-flight compaction swap (the live dir is
-    * briefly absent between its two renames); a marker that never
-    * clears means a crashed compaction — fail with the recovery path
-    * rather than serve a half-swapped table. */
-  private def awaitNoSwap(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val marker = sidecarSwapMarker(path)
-    var waited = 0
-    while (fs.exists(marker) && waited < 10000) {
-      Thread.sleep(200); waited += 200
-    }
-    if (fs.exists(marker))
-      throw new IllegalStateException(
-        s"sidecar compaction marker at $marker did not clear within " +
-          "10 s — a compaction likely crashed between its swap " +
-          "renames. The pre-swap segments are under the *_old sibling " +
-          "dirs; restore them or finish the fold, then delete the marker.")
+  /** Sidecar readers wait out any in-flight fold of `path` — the
+    * marker alone decides, so a sidecar is never read mid-swap — then
+    * list its seg leaves (warning past the uncompacted backstop). */
+  private def sidecarLeaves(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      reader: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    SegmentTiers.awaitSwap(fs, SegmentTiers.swapMarker(path),
+      s"$reader($path)")(Nil)
+    val segs = SegmentTiers.segLeaves(fs, p)
+    SegmentTiers.warnUncompacted(path, segs.size, reader)
+    segs
   }
 
   /** Fold one partitioned sidecar dir's `seg < maxSegExclusive`
     * leaves into a single merged segment via `fold` (which sees the
-    * seg-stripped rows and must return the same schema), behind the
-    * marker + rename-swap protocol every compaction here uses.
-    * Segments at/above the bound carry over verbatim, so an in-flight
-    * batch's replay still overlays its own leaf. Returns the merged
-    * file count (0 = nothing eligible). */
+    * seg-stripped rows and must return the same schema) — the shared
+    * [[SegmentTiers.fold]] with `<path>_tmp` / `<path>_old` siblings,
+    * under `<path>_swap_marker`. Segments at/above the bound carry over
+    * verbatim, so an in-flight batch's replay still overlays its own
+    * leaf. Returns the merged file count (0 = nothing eligible). */
   private def compactSegDir(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      maxSegExclusive: Long, outFiles: Int)(
-      fold: DataFrame => DataFrame): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(conf)
-    if (!graft.operators.Dedup.hasSegDirs(fs, live)) return 0
-    val cur = spark.read.parquet(path)
-      .where(F.col("seg").cast("long") < maxSegExclusive)
-    val minSegRow = cur.agg(F.min(F.col("seg").cast("long"))).head
-    if (minSegRow.isNullAt(0)) return 0
-    val mergedSeg = math.min(-1L, minSegRow.getLong(0) - 1L)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    fold(cur.drop("seg"))
-      .withColumn("seg", F.lit(mergedSeg))
-      .coalesce(outFiles)
-      .write.mode("overwrite").partitionBy("seg")
-      .parquet(tmp.toString)
-    val marker = sidecarSwapMarker(path)
-    fs.create(marker, true).close()
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    // checked renames (VERDICT r13 #1): HDFS rename returns false
-    // instead of throwing on some failures, and an unchecked false
-    // here would report a successful fold over an untouched sidecar —
-    // fail loud; the marker + _old/_tmp siblings document the crash.
-    require(fs.rename(live, old),
-      s"compactSegDir($path): rename $live -> $old failed; " +
-        "sidecar untouched, marker left for diagnosis")
-    // excluded (>= maxSegExclusive) segment dirs carry over verbatim
-    fs.listStatus(old).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("seg=") &&
-          scala.util.Try(nm.substring(4).toLong).toOption
-            .exists(_ >= maxSegExclusive))
-        require(
-          fs.rename(st.getPath, new org.apache.hadoop.fs.Path(tmp, nm)),
-          s"compactSegDir($path): carrying in-flight segment $nm into " +
-            s"$tmp failed; pre-fold segments survive under $old, " +
-            "marker left for diagnosis")
-    }
-    require(fs.rename(tmp, live),
-      s"compactSegDir($path): rename $tmp -> $live failed; " +
-        s"pre-fold segments survive under $old, marker left for diagnosis")
-    fs.delete(old, true)
-    fs.delete(marker, false)
-    spark.read.parquet(path).inputFiles.length
-  }
+      maxSegExclusive: Long)(fold: DataFrame => DataFrame): Int =
+    SegmentTiers.fold(spark, s"compactSegDir($path)",
+      SegmentTiers.swapMarker(path),
+      Seq(SegmentTiers.FoldDir(
+        new org.apache.hadoop.fs.Path(path),
+        new org.apache.hadoop.fs.Path(path + "_tmp"),
+        new org.apache.hadoop.fs.Path(path + "_old"),
+        (cur, merged, tmp) => fold(cur.drop("seg"))
+          .withColumn("seg", F.lit(merged))
+          .coalesce(1)
+          .write.mode("overwrite").partitionBy("seg")
+          .parquet(tmp))),
+      maxSegExclusive, tiered = false)
 
   /** Fold [[profileStream]]'s committed sidecar segments (below
     * `maxSegExclusive`) into ONE merged segment — counts/moments add
@@ -1247,7 +1149,7 @@ object StreamingOps {
   def profileCompact(
       spark: org.apache.spark.sql.SparkSession, sidecarPath: String,
       maxSegExclusive: Long = Long.MaxValue): Int =
-    compactSegDir(spark, sidecarPath, maxSegExclusive, outFiles = 1)(
+    compactSegDir(spark, sidecarPath, maxSegExclusive)(
       graft.operators.Profile.mergeShardsToShard)
 
   /** Fold [[heavyTokensStream]]'s committed sidecars: per-batch tops
@@ -1265,10 +1167,10 @@ object StreamingOps {
       maxSegExclusive: Long = Long.MaxValue): Int = {
     import spark.implicits._
     val tops = compactSegDir(
-      spark, s"$sidecarPath/tops", maxSegExclusive, outFiles = 1)(
+      spark, s"$sidecarPath/tops", maxSegExclusive)(
       _.groupBy("token").agg(F.sum("n").as("n")))
     val cms = compactSegDir(
-      spark, s"$sidecarPath/cms", maxSegExclusive, outFiles = 1) { cur =>
+      spark, s"$sidecarPath/cms", maxSegExclusive) { cur =>
       val rows = cur.select("sketch", "n_tokens", "phi").collect()
       val merged = rows
         .map(r => org.apache.spark.util.sketch.CountMinSketch
@@ -1563,7 +1465,7 @@ object StreamingOps {
     // ceil(n/targetFileRows) tasks while lists at or under the target
     // keep one file per leaf per segment — identical layout at
     // micro-batch sizes.
-    graft.operators.SegmentTiers.saltedRepartition(
+    SegmentTiers.saltedRepartition(
         assigned, "cluster", Seq("id"), targetFileRows, knownRows)
       .withColumn("seg", org.apache.spark.sql.functions.lit(seg))
       .write.mode("overwrite")
@@ -1690,7 +1592,8 @@ object StreamingOps {
           } else false
         }
         if (!rebuilt && compactEverySegs > 0 &&
-            realSegCount(spark, s"$indexPath/applists")
+            SegmentTiers.segCount(
+              spark, s"$indexPath/applists", realOnly = true)
               >= compactEverySegs) {
           // fold only segments BELOW the current batch id (ADVICE
           // r10): the in-flight batch's segment stays its own

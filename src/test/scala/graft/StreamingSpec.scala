@@ -1186,6 +1186,20 @@ class StreamingSpec extends SparkSpec {
     assert(!fs.exists(ap) ||
       !fs.listStatus(ap).exists(_.getPath.getName.startsWith("seg=")),
       "fixture no longer reproduces the zero-admit appends dir")
+    // a takedown and a rebuild over that layout must treat the appends
+    // dir as holding no segments, not infer a schema from zero files.
+    // Base 7 is nobody's near-duplicate, so removing it leaves every
+    // later decision as it was; the rebuild (a new quantizer) runs on a
+    // copy so the batches below still probe the original lists
+    assert(Similarity.ivfLayoutRemove(s, dir, Seq(7L).toDF("id")) == 1L)
+    val rebuilt = java.nio.file.Files.createTempDirectory("graft_egate2_reb")
+      .resolve("idx").toString
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir),
+      fs, new org.apache.hadoop.fs.Path(rebuilt), false,
+      s.sessionState.newHadoopConf())
+    Similarity.ivfRebuild(s, rebuilt, targetListSize = 8)
+    assert(Similarity.ivfLoad(s, rebuilt).assigned.select("id").collect()
+      .map(_.getLong(0)).toSet == (0L until 7L).toSet)
     StreamingOps.embedGateBatch(
       b1.toDF("id", "vec"), 1L, dir, out, 0.95, 2)
     def appendRows() = s.read.parquet(s"$dir/applists")
@@ -1519,7 +1533,7 @@ class StreamingSpec extends SparkSpec {
     // a crashed swap is loud for readers: marker present and stuck
     val fs = new org.apache.hadoop.fs.Path(side)
       .getFileSystem(s.sessionState.newHadoopConf())
-    fs.create(StreamingOps.sidecarSwapMarker(side), true).close()
+    fs.create(graft.operators.SegmentTiers.swapMarker(side), true).close()
     val e = intercept[IllegalStateException](StreamingOps.profileOf(s, side))
     assert(e.getMessage.contains("compaction"))
   }

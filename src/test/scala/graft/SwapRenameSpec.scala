@@ -15,12 +15,29 @@ class FailRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = FailRenameFileSystem.uri
   override def rename(src: Path, dst: Path): Boolean =
     if (FailRenameFileSystem.failWhen(src, dst)) false
+    else if (FailRenameFileSystem.countSwapRename(src, dst)) false
     else super.rename(src, dst)
 }
 
 object FailRenameFileSystem {
   val uri: java.net.URI = java.net.URI.create("failrename:///")
   @volatile var failWhen: (Path, Path) => Boolean = (_, _) => false
+
+  /** Layout renames seen since the last reset — Spark's own commit
+    * renames (out of `_temporary` / `.spark-staging` dirs) excluded. */
+  val swapRenames = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Fail the N-th counted rename (1-based); 0 = never. */
+  @volatile var failNth: Int = 0
+
+  private def isCommit(p: Path): Boolean = {
+    val s = p.toString
+    s.contains("/_temporary") || s.contains(".spark-staging")
+  }
+
+  /** Count a layout rename; true = this is the one to fail. */
+  def countSwapRename(src: Path, dst: Path): Boolean =
+    !isCommit(src) && !isCommit(dst) &&
+      swapRenames.incrementAndGet() == failNth
 }
 
 /** The swap-rename law (VERDICT r13 #1): every directory-swap in the
@@ -163,7 +180,7 @@ class SwapRenameSpec extends SparkSpec {
     assert(ex.getMessage.contains("marker left"),
       s"wrong failure message: ${ex.getMessage}")
     val fs = fsOf(dir)
-    val marker = graft.streaming.StreamingOps.sidecarSwapMarker(dir)
+    val marker = graft.operators.SegmentTiers.swapMarker(dir)
     assert(fs.exists(marker), "failed swap did not leave its marker")
     fs.delete(marker, false)
     assert(profRows() == before, "failed fold disturbed the sidecar")
@@ -199,10 +216,228 @@ class SwapRenameSpec extends SparkSpec {
     assert(ex.getMessage.contains("marker left"),
       s"wrong failure message: ${ex.getMessage}")
     val fs = fsOf(dir)
-    val marker = Dedup.gateSwapMarkerPath(dir)
+    val marker = graft.operators.SegmentTiers.swapMarker(s"$dir/bands")
     assert(fs.exists(marker), "failed swap did not leave its marker")
     fs.delete(marker, false)
     assert(bands() == before, "failed fold disturbed the band state")
+  }
+
+  // ---- the N-th-rename sweep over every layout write path ---------
+  //
+  // Each path runs once clean to count its layout renames R (and check
+  // the post-op rows), then once per N in 1..R on a fresh copy of the
+  // fixture with the N-th rename forced false. Every failing run must
+  // throw the checked-rename error with the swap marker left (where
+  // the path has one), and the documented recovery — undoSwap on the
+  // marker, or restoring `__rebuild_old` for the unmarked rebuild —
+  // must give back exactly the pre-op rows.
+
+  /** Copy a fixture layout dir into a fresh root under the same name,
+    * so each sweep run starts from identical bytes with no siblings. */
+  private def copyLayout(dir: String): String = {
+    val src = java.nio.file.Paths.get(dir.stripPrefix("failrename:"))
+    val dst = java.nio.file.Files.createTempDirectory("graft-sweep")
+      .resolve(src.getFileName)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      java.nio.file.Files.copy(p, dst.resolve(src.relativize(p)))
+    } finally walk.close()
+    "failrename:" + dst
+  }
+
+  /** The documented recovery of a swap that failed with its marker
+    * left, driven from the marker's move log (one `live, old, staged,
+    * carried` line per move): for each move, last first, whose `_old`
+    * sibling exists, the carried leaves go back into it, the
+    * half-swapped live dir is dropped and `_old` is renamed live;
+    * staged rewrites are deleted, then the marker. */
+  private def undoSwap(fs: org.apache.hadoop.fs.FileSystem, marker: Path): Unit = {
+    val in = fs.open(marker)
+    val log = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    log.split("\n").filter(_.nonEmpty).reverse.foreach { line =>
+      val Array(live, old, staged, carried) =
+        line.split("\t", -1).map(x => if (x.isEmpty) None else Some(x))
+      val (lp, op) = (new Path(live.get), new Path(old.get))
+      if (fs.exists(op)) {
+        for (dir <- Seq(lp) ++ staged.map(new Path(_));
+             nm <- carried.toSeq.flatMap(_.split(","))
+             if fs.exists(new Path(dir, nm)))
+          assert(fs.rename(new Path(dir, nm), new Path(op, nm)))
+        if (fs.exists(lp)) fs.delete(lp, true)
+        assert(fs.rename(op, lp))
+      }
+      staged.foreach(st => fs.delete(new Path(st), true))
+    }
+    fs.delete(marker, false)
+  }
+
+  /** `rows` keys each row by its id, so a takedown's expected post-op
+    * rows are the pre-op rows minus `removed`. */
+  private def sweep(fixture: String, renames: Int,
+      marker: String => Option[Path], removed: Set[Long],
+      rows: String => Seq[(Long, String)])(
+      op: String => Any): Unit = {
+    registerScheme()
+    val pre = rows(fixture)
+    assert(pre.exists(r => removed(r._1)) || removed.isEmpty,
+      "fixture lacks the rows the takedown removes")
+    val clean = copyLayout(fixture)
+    FailRenameFileSystem.swapRenames.set(0)
+    op(clean)
+    val total = FailRenameFileSystem.swapRenames.get
+    assert(total == renames, s"$total layout renames, expected $renames")
+    assert(rows(clean) == pre.filterNot(r => removed(r._1)),
+      "clean run left the wrong rows")
+    assert(marker(clean).forall(m => !fsOf(clean).exists(m)),
+      "a completed swap left its marker")
+    for (n <- 1 to total) {
+      val dir = copyLayout(fixture)
+      val fs = fsOf(dir)
+      FailRenameFileSystem.swapRenames.set(0)
+      FailRenameFileSystem.failNth = n
+      val ex =
+        try intercept[IllegalArgumentException](op(dir))
+        finally FailRenameFileSystem.failNth = 0
+      assert(ex.getMessage.contains("failed"), s"rename $n: ${ex.getMessage}")
+      marker(dir) match {
+        case Some(m) =>
+          assert(fs.exists(m), s"rename $n of $total: marker not left")
+          undoSwap(fs, m)
+        case None =>
+          val old = new Path(dir + "__rebuild_old")
+          if (fs.exists(old)) {
+            if (fs.exists(new Path(dir))) fs.delete(new Path(dir), true)
+            assert(fs.rename(old, new Path(dir)))
+          }
+          fs.delete(new Path(dir + "__rebuild_tmp"), true)
+      }
+      assert(rows(dir) == pre,
+        s"rename $n of $total: recovery did not restore the pre-op rows")
+    }
+  }
+
+  private def ivfRows(dir: String): Seq[(Long, String)] =
+    ivfIds(dir).map(_ -> "")
+
+  private def ivfMarker(dir: String) =
+    Some(graft.operators.SegmentTiers.swapMarker(s"$dir/applists"))
+
+  /** A saved minhash gate layout with two committed append segments. */
+  private def minhashFixture(prefix: String): String = {
+    val s = spark
+    import s.implicits._
+    import graft.operators.Dedup
+    val rng = new scala.util.Random(7)
+    val vocab = Vector("data", "spark", "query", "join", "scan", "table",
+      "row", "batch", "agg", "filter", "merge", "sort", "hash", "key")
+    def doc(): String =
+      Seq.fill(40)(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    val dir = tmp(prefix)
+    val built = Dedup.minhashIndexBuild(
+      (0L until 12L).map(i => (i, doc())).toDF("doc_id", "text"))
+    Dedup.minhashIndexSave(built, dir)
+    Dedup.minhashIndexRelease(built)
+    for (seg <- 0 to 1)
+      graft.streaming.StreamingOps.minhashGateBatch(
+        Seq((100L + seg, doc())).toDF("doc_id", "text"), seg.toLong,
+        dir, tmp(prefix + "-out"), 0.8)
+    assert(graft.operators.SegmentTiers.segCount(s, s"$dir/bands_appends") == 2)
+    dir
+  }
+
+  private def minhashRows(dir: String): Seq[(Long, String)] = {
+    val idx = graft.operators.Dedup.minhashIndexLoadWithAppends(spark, dir)
+    (idx.bandRows.select("doc_id", "band", "bh").collect()
+      .map(r => (r.getLong(0), s"b${r.getInt(1)}:${r.getInt(2)}")) ++
+      idx.refShingles.select("doc_id").collect().map(r => (r.getLong(0), "s")))
+      .sorted.toSeq
+  }
+
+  private def minhashMarker(dir: String) =
+    Some(graft.operators.SegmentTiers.swapMarker(s"$dir/bands"))
+
+  test("rename sweep: ivfCompactAppends fails loudly at every rename and recovers") {
+    sweep(ivfFixture("graft-sweep-icomp"), 3, ivfMarker, Set.empty, ivfRows) {
+      d => graft.operators.Similarity.ivfCompactAppends(spark, d, maxSegExclusive = 1L)
+    }
+  }
+
+  test("rename sweep: minhashCompactAppends fails loudly at every rename and recovers") {
+    sweep(minhashFixture("graft-sweep-mcomp"), 6, minhashMarker, Set.empty,
+      minhashRows) {
+      d => graft.operators.Dedup.minhashCompactAppends(spark, d, maxSegExclusive = 1L)
+    }
+  }
+
+  test("rename sweep: sidecar compactSegDir fails loudly at every rename and recovers") {
+    val s = spark
+    import s.implicits._
+    val F = org.apache.spark.sql.functions
+    val dir = tmp("graft-sweep-hist") + "/sidecar"
+    for (seg <- 0 to 1)
+      graft.operators.Profile.histShard(
+          (1L to 20L).map(i => (i, i * (1.5 + seg))).toDF("id", "score"),
+          "score", 0.0, 60.0, 6)
+        .withColumn("seg", F.lit(seg))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("seg")
+        .parquet(dir)
+    // the histogram fold is exact (per-bucket sum), so a recovered
+    // and a completed fold both read the pre-op rows
+    sweep(dir, 3, d => Some(graft.operators.SegmentTiers.swapMarker(d)),
+      Set.empty,
+      d => graft.streaming.StreamingOps.histOf(s, d).collect()
+        .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).toString))
+        .sorted.toSeq) {
+      d => graft.streaming.StreamingOps.histCompact(s, d, maxSegExclusive = 1L)
+    }
+  }
+
+  test("rename sweep: ivfLayoutRemove fails loudly at every rename and recovers") {
+    val s = spark
+    import s.implicits._
+    // 100 and 101 are the only appended rows: the applists move is a
+    // delete, the lists move a staged rewrite
+    sweep(ivfFixture("graft-sweep-irm"), 3, ivfMarker, Set(3L, 100L, 101L),
+      ivfRows) {
+      d => graft.operators.Similarity.ivfLayoutRemove(
+        s, d, Seq(3L, 100L, 101L).toDF("id"))
+    }
+  }
+
+  test("rename sweep: minhashLayoutRemove fails loudly at every rename and recovers") {
+    val s = spark
+    import s.implicits._
+    sweep(minhashFixture("graft-sweep-mrm"), 8, minhashMarker, Set(3L, 100L),
+      minhashRows) {
+      d => graft.operators.Dedup.minhashLayoutRemove(
+        s, d, Seq(3L, 100L).toDF("doc_id"))
+    }
+  }
+
+  test("rename sweep: codesLayoutRemove fails loudly at every rename and recovers") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.Similarity
+    val dir = tmp("graft-sweep-codes")
+    Similarity.sq8Save(Similarity.sq8Encode(
+      (0L until 30L).map(i => (i, vec(i.toInt))).toDF("id", "vec"),
+      persist = false), dir)
+    sweep(dir, 2,
+      d => Some(graft.operators.SegmentTiers.swapMarker(s"$d/codes")),
+      Set(3L, 7L),
+      d => s.read.parquet(s"$d/codes").select("id").collect()
+        .map(r => (r.getLong(0), "")).sorted.toSeq) {
+      d => Similarity.codesLayoutRemove(s, d, Seq(3L, 7L).toDF("id"))
+    }
+  }
+
+  test("rename sweep: ivfRebuild fails loudly at every rename and recovers") {
+    sweep(ivfFixture("graft-sweep-reb"), 2, _ => None, Set.empty, ivfRows) {
+      d => graft.operators.Similarity.ivfRebuild(spark, d, targetListSize = 5)
+    }
   }
 
   /** Run `body` with renames into a matching destination forced false,
