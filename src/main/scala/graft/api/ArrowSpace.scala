@@ -200,7 +200,7 @@ final case class ArrowSpaceModel private[api] (
     }
     val qBytes = nQ * (nF.toLong * 8L + 64L) // vec payload + row overhead
     val qSized =
-      if (nQ <= 100000L && qBytes <= 128L * 1024 * 1024) F.broadcast(qRows) else qRows
+      if (graft.core.DriverLocal.Default.fits(nQ, qBytes)) F.broadcast(qRows) else qRows
     val scored = items
       .join(qSized)
       .withColumn(

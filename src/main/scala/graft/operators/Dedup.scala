@@ -66,8 +66,6 @@ object Dedup {
       docs: DataFrame, shingleLen: Int, numHashes: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
     docs
       // null text carries no signature: the row is excluded from
       // near-dup entirely (the compiled loop would NPE; the Column
@@ -76,52 +74,61 @@ object Dedup {
       .where(F.col("text").isNotNull)
       .select(F.col("doc_id").cast("long"), F.col("text"))
       .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          // TextOps.tokensOf replicates the Column path's trim/split
-          // exactly, so the shingle SET is the one [[shingles]] builds
-          // (duplicates need no dedup: min over repeats is the min)
-          val toks = TextOps.tokensOf(text)
-          val nSh = math.max(1, toks.length - shingleLen + 1)
-          // inner xxhash64 state per shingle (string hash, then the
-          // long-lane rehash with the default seed) — shared by lanes
-          val inner = new Array[Long](nSh)
-          if (toks.length < shingleLen)
-            inner(0) = XXH64.hashLong(
-              XXH64.hashUTF8String(UTF8String.fromString(toks.mkString(" ")), 42L), 42L)
-          else {
-            val sb = new java.lang.StringBuilder
-            var i = 0
-            while (i < nSh) {
-              sb.setLength(0)
-              var t = i
-              while (t < i + shingleLen) {
-                if (t > i) sb.append(' ')
-                sb.append(toks(t))
-                t += 1
-              }
-              inner(i) = XXH64.hashLong(
-                XXH64.hashUTF8String(UTF8String.fromString(sb.toString), 42L), 42L)
-              i += 1
-            }
-          }
-          val sig = new Array[Long](numHashes)
-          var j = 0
-          while (j < numHashes) {
-            var mn = Long.MaxValue
-            var i = 0
-            while (i < inner.length) {
-              val v = XXH64.hashInt(j, inner(i))
-              if (v < mn) mn = v
-              i += 1
-            }
-            sig(j) = mn
-            j += 1
-          }
-          (id, sig)
-        }
-      }
+      .mapPartitions(_.map { case (id, text) =>
+        (id, signatureOf(text, shingleLen, numHashes))
+      })
       .toDF("doc_id", "sig")
+  }
+
+  /** The per-document kernel of [[minhashSignatures]]: the `numHashes`
+    * min-lanes of `text`'s `shingleLen`-word shingles. Also run on the
+    * driver by the streaming gates' bounded path, so both paths sign a
+    * document with the same code. */
+  private[graft] def signatureOf(
+      text: String, shingleLen: Int, numHashes: Int): Array[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.types.UTF8String
+    // TextOps.tokensOf replicates the Column path's trim/split exactly,
+    // so the shingle SET is the one [[shingles]] builds (duplicates
+    // need no dedup: min over repeats is the min)
+    val toks = TextOps.tokensOf(text)
+    val nSh = math.max(1, toks.length - shingleLen + 1)
+    // inner xxhash64 state per shingle (string hash, then the long-lane
+    // rehash with the default seed) — shared by lanes
+    val inner = new Array[Long](nSh)
+    if (toks.length < shingleLen)
+      inner(0) = XXH64.hashLong(
+        XXH64.hashUTF8String(UTF8String.fromString(toks.mkString(" ")), 42L), 42L)
+    else {
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < nSh) {
+        sb.setLength(0)
+        var t = i
+        while (t < i + shingleLen) {
+          if (t > i) sb.append(' ')
+          sb.append(toks(t))
+          t += 1
+        }
+        inner(i) = XXH64.hashLong(
+          XXH64.hashUTF8String(UTF8String.fromString(sb.toString), 42L), 42L)
+        i += 1
+      }
+    }
+    val sig = new Array[Long](numHashes)
+    var j = 0
+    while (j < numHashes) {
+      var mn = Long.MaxValue
+      var i = 0
+      while (i < inner.length) {
+        val v = XXH64.hashInt(j, inner(i))
+        if (v < mn) mn = v
+        i += 1
+      }
+      sig(j) = mn
+      j += 1
+    }
+    sig
   }
 
   /** LSH band keys for a (doc_id, sig) frame: explode `bands` rows per
@@ -134,9 +141,22 @@ object Dedup {
     val rows = numHashes / bands
     sigs
       .withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))))
-      .withColumn("bh",
-        F.hash(F.col("band"),
-          F.slice(F.col("sig"), F.col("band") * rows + 1, F.lit(rows))))
+      .withColumn("bh", bandHash(F.col("band"), F.col("sig"), rows))
+  }
+
+  /** The band key of [[bandKeys]]: hash of (band, that band's `rows`
+    * signature lanes). Evaluated per band row by [[bandKeys]] and per
+    * document over all bands by [[bandHashes]]. */
+  private def bandHash(band: Column, sig: Column, rows: Int): Column =
+    F.hash(band, F.slice(sig, band * rows + 1, F.lit(rows)))
+
+  /** Every band key of a signature, in band order, as one array — the
+    * [[bandKeys]] explosion folded into a projection, so a driver-local
+    * frame evaluates it at planning time. */
+  private[graft] def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
+      b => bandHash(b, sig, numHashes / bands))
   }
 
   /** Signature-agreement Jaccard estimate: fraction of matching
@@ -236,10 +256,15 @@ object Dedup {
         F.col(idA),
         F.col(idB),
         F.col("est_jaccard"),
-        F.round(
-          F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double") /
-            F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))), 4).as("jaccard"))
+        exactJaccard(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
       .orderBy(F.col("jaccard").desc, F.col(idA).asc, F.col(idB).asc)
+
+  /** Exact shingle-set Jaccard, rounded to 4 — the verify of every
+    * MinHash near-dup face. */
+  private[graft] def exactJaccard(shA: Column, shB: Column): Column =
+    F.round(
+      F.size(F.array_intersect(shA, shB)).cast("double") /
+        F.size(F.array_union(shA, shB)), 4)
 
   /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
     *

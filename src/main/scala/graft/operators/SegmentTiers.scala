@@ -199,16 +199,51 @@ private[graft] object SegmentTiers {
         throw new IllegalStateException(
           s"$reader: swap marker $marker is present and did not clear " +
             "within 10 s — a compaction or takedown likely crashed " +
-            "between its swap renames. The pre-swap data is under the " +
-            "`_old` sibling dirs and the marker lists every move " +
-            "(live, old, staged, carried seg= leaves): move the carried " +
-            "leaves back into `_old`, rename `_old` to the live name, " +
-            "then delete the marker.")
+            s"between its swap renames. $recovery")
       Thread.sleep(200); waited += 200
       got = probe
     }
     got
   }
+
+  /** The by-hand recovery of a crashed swap, named by every error that
+    * finds its marker. */
+  private val recovery =
+    "The pre-swap data is under the `_old` sibling dirs and the marker " +
+      "lists every move (live, old, staged, carried seg= leaves): move " +
+      "the carried leaves back into `_old`, rename `_old` to the live " +
+      "name, delete the staged dirs, then delete the marker."
+
+  /** An earlier swap's marker at the start of a fold, takedown or swap.
+    * When its move log shows every rename done (the swap stopped
+    * between its last rename and the commit), finish that commit: the
+    * live dirs already hold the swapped-in layout. Otherwise refuse and
+    * touch nothing — starting over would delete or overwrite the only
+    * copy of the pre-swap data (the `_old` siblings, the staged dirs
+    * holding carried segments) and the marker that says where it is. */
+  def resumeOrRefuse(fs: FileSystem, who: String, marker: Path): Unit =
+    if (fs.exists(marker)) {
+      val in = fs.open(marker)
+      val log = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val moves = log.split("\n").filter(_.nonEmpty).map { line =>
+        val f = line.split("\t", -1)
+        Move(new Path(f(0)), new Path(f(1)),
+          Some(f(2)).filter(_.nonEmpty).map(new Path(_)))
+      }
+      // an empty log (or a marker some other writer left) names no
+      // moves to check, so nothing proves the swap finished
+      val done = moves.nonEmpty && moves.forall { m =>
+        fs.exists(m.old) && m.staged.fold(!fs.exists(m.live))(st =>
+          fs.exists(m.live) && !fs.exists(st))
+      }
+      if (!done)
+        throw new IllegalStateException(
+          s"$who: swap marker $marker is left by an earlier swap that did " +
+            s"not finish; refusing to start over it, nothing was changed. " +
+            recovery)
+      fs.delete(marker, false)
+      moves.foreach(m => fs.delete(m.old, true))
+    }
 
   /** One dir of a [[swap]]: `live` is replaced by `staged`, or removed
     * when `staged` is None (a partitioned parquet dir with zero rows
@@ -225,9 +260,12 @@ private[graft] object SegmentTiers {
     * `_old` sibling survives until the commit (the marker delete), so
     * a failure at any rename leaves the full pre-swap state behind the
     * marker, whose move log ([[awaitSwap]]'s error spells out the
-    * recovery) says what to put back. `who` prefixes every error. */
+    * recovery) says what to put back — and a later swap over that
+    * marker refuses to start ([[resumeOrRefuse]]). `who` prefixes every
+    * error. */
   def swap(fs: FileSystem, who: String, marker: Option[Path],
       moves: Seq[Move]): Unit = {
+    marker.foreach(resumeOrRefuse(fs, who, _))
     // stale siblings of an earlier committed swap go BEFORE the marker:
     // with the marker present, every `_old` dir is this swap's own
     moves.foreach(m => if (fs.exists(m.old)) fs.delete(m.old, true))
@@ -285,6 +323,7 @@ private[graft] object SegmentTiers {
   def fold(spark: SparkSession, who: String, marker: Path,
       dirs: Seq[FoldDir], maxSegExclusive: Long, tiered: Boolean): Int = {
     val fs = dirs.head.live.getFileSystem(spark.sessionState.newHadoopConf())
+    resumeOrRefuse(fs, who, marker)
     val leaves = segLeaves(fs, dirs.head.live)
     if (leaves.isEmpty || dirs.tail.exists(d => !hasSegs(fs, d.live))) return 0
     val eligible = leaves.filter(_._1 < maxSegExclusive)
@@ -328,6 +367,7 @@ private[graft] object SegmentTiers {
       dirs: Seq[(String, Seq[String])], counted: String => Boolean,
       guard: (String, String)): Long = {
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    resumeOrRefuse(fs, who, marker)
     val key = ids.select(F.col(keyCol).cast("long").as(keyCol)).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     key.count()

@@ -3113,10 +3113,14 @@ object Similarity {
       ids: DataFrame): Long = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = SegmentTiers.swapMarker(s"$path/applists")
+    // a crashed swap can leave `lists` absent: name its marker, not a
+    // missing layout
+    SegmentTiers.resumeOrRefuse(fs, s"ivfLayoutRemove($path)", marker)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/lists")),
       s"ivfLayoutRemove($path): no saved IVF layout there")
     SegmentTiers.removeRows(spark, s"ivfLayoutRemove($path)", path,
-      SegmentTiers.swapMarker(s"$path/applists"), ids, "id",
+      marker, ids, "id",
       Seq(("lists", Seq("cluster")), ("applists", Seq("seg", "cluster"))),
       counted = _ => true,
       guard = ("lists", s"ivfLayoutRemove($path): removal would empty " +
@@ -3148,11 +3152,15 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame): Long = {
     val src = new org.apache.hadoop.fs.Path(s"$path/codes")
-    require(src.getFileSystem(spark.sessionState.newHadoopConf()).exists(src),
+    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = SegmentTiers.swapMarker(s"$path/codes")
+    // a crashed swap can leave `codes` absent: name its marker first
+    SegmentTiers.resumeOrRefuse(fs, s"codesLayoutRemove($path)", marker)
+    require(fs.exists(src),
       s"codesLayoutRemove($path): no codes/ there — not a saved codec " +
         "layout (sq8Save/binarySave/pqSave/opqSave write codes/)")
     SegmentTiers.removeRows(spark, s"codesLayoutRemove($path)", path,
-      SegmentTiers.swapMarker(s"$path/codes"), ids, "id",
+      marker, ids, "id",
       Seq(("codes", Nil)), counted = _ => true,
       guard = ("codes", s"codesLayoutRemove($path): removal would empty " +
         "the index — delete the layout instead of removing every vector"))

@@ -347,12 +347,31 @@ object StreamingOps {
     * are per-document, so the appended state is EXACT at any size and
     * no drift-triggered rebuild exists to need.
     *
+    * Two paths decide a batch, with the same decisions and the same
+    * written layout. A batch within [[graft.core.DriverLocal.Default]]
+    * (≤ 100k rows and ≤ 128 MB read, the bound `searchBatch` uses for
+    * its query table) is read by one job and decided on the driver:
+    * exact and within-batch near-dup stages on the driver's copy, then
+    * one scan of the stored band rows against the broadcast batch keys
+    * and one scan of the candidate refs' stored shingles — about 8
+    * Spark jobs a batch with its writes, where the distributed stages
+    * ran ~47 (a job costs scheduling and planning, which dominates a
+    * micro-batch of a few hundred rows). A larger batch runs the
+    * distributed stages, after a read job that stops early (each of its
+    * tasks stops at its share of the bound) — as does a batch whose
+    * within-batch stage has over `DriverLocal.MaxPairs` candidate pairs
+    * or whose state scan returns more than the bound; those fall back
+    * before anything is written.
+    *
     * 100 TB shape: per batch the stream side pays one signature pass
     * over its own rows; the state side contributes stored band rows to
     * the candidate equi-join (pruned by band on the saved layout) and
     * stored shingles to the bounded verify — cost scales with the
-    * batch's candidate mass, not with corpus size. State on disk grows
-    * with admitted documents only (duplicates are never appended).
+    * batch's candidate mass, not with corpus size, on either path: the
+    * driver path bounds what the driver holds by the batch, and a
+    * backfill replayed through the gate takes the distributed stages.
+    * State on disk grows with admitted documents only (duplicates are
+    * never appended).
     *
     * Returns the started query; callers own its lifecycle.
     */
@@ -389,16 +408,38 @@ object StreamingOps {
 
   /** One gate micro-batch, factored out so the replay law is testable
     * directly: calling this twice with the same `batchId` leaves the
-    * saved state and the output byte-for-byte row-identical. */
+    * saved state and the output byte-for-byte row-identical. A batch
+    * that fits `bound` (and keys its rows by a unique integral
+    * `doc_id`) is read once and decided on the driver
+    * ([[GateLocal.minhash]]) unless a stage of it is over the bound;
+    * any other batch takes the distributed stages below. Both make
+    * the same decisions and write the same layout. */
   private[graft] def minhashGateBatch(
       batch: DataFrame, batchId: Long, indexPath: String,
-      outPath: String, jaccardThreshold: Double): Unit = {
+      outPath: String, jaccardThreshold: Double,
+      bound: graft.core.DriverLocal.Bound = graft.core.DriverLocal.Default)
+      : Unit = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
     // per-epoch cached base listings + per-batch appends (identical
     // union to minhashIndexLoadWithAppends — see the cache's scaladoc)
     val state = Dedup.minhashIndexLoadWithAppendsCached(
       spark, indexPath, maxSegExclusive = batchId)
+    val decided = GateLocal.read(batch, "doc_id", bound).exists(rows =>
+      GateLocal.minhash(spark, rows, batch.schema, batchId, indexPath,
+        outPath, jaccardThreshold, state, bound))
+    if (!decided)
+      minhashGateDistributed(batch, batchId, indexPath, outPath,
+        jaccardThreshold, state)
+  }
+
+  /** The distributed stages of [[minhashGateBatch]]: batches over the
+    * driver-local bound. */
+  private def minhashGateDistributed(
+      batch: DataFrame, batchId: Long, indexPath: String,
+      outPath: String, jaccardThreshold: Double,
+      state: graft.operators.Dedup.MinhashIndex): Unit = {
+    import graft.operators.Dedup
     // ONE signature pass per micro-batch, shared by the within-batch
     // self-dedup, the against-state probe, and the append segment
     // (signatures are a pure function of the document, so the shared
@@ -459,20 +500,27 @@ object StreamingOps {
         Dedup.minhashAppendSegment(
           survivorsCached, indexPath, batchId,
           state.shingleLen, state.numHashes, state.bands, nSurvivors)
-      survivorsCached
-        .withColumn("seg", F.lit(batchId))
-        // bounded file count per batch segment — the gate's output is
-        // read as a whole corpus downstream, not per-task
-        .coalesce(8)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg")
-        .parquet(outPath)
+      writeGateOutput(survivorsCached, batchId, outPath)
     } finally {
       survivorsCached.unpersist(blocking = false)
       batchCaches.foreach(_.unpersist(blocking = false))
     }
   }
+
+  /** Land a gate batch's admitted rows as output segment `seg=batchId`:
+    * a dynamic-partition overwrite, so a replayed batch rewrites its
+    * own leaf. */
+  private[streaming] def writeGateOutput(
+      admitted: DataFrame, batchId: Long, outPath: String): Unit =
+    admitted
+      .withColumn("seg", F.lit(batchId))
+      // bounded file count per batch segment — the gate's output is
+      // read as a whole corpus downstream, not per-task
+      .coalesce(8)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("seg")
+      .parquet(outPath)
 
   /** Streaming SEMANTIC dedup gate — the embedding sibling of
     * [[minhashGateStream]] (VERDICT r12 #3: SemDeDup existed only as
@@ -513,14 +561,30 @@ object StreamingOps {
     *
     * `nprobe` ≤ 0 routes to [[graft.operators.Similarity
     * .suggestNprobe]] (sizing-matched — the r12 default contract).
-    * Admitted rows append to the layout and to `outPath` as
+    * Admitted rows append to `outPath` and to the layout as
     * `seg=batchId` (both dynamic-partition overwrites). Compaction
     * every `compactEverySegs` segments via [[graft.operators
     * .Similarity.ivfCompactAppends]], folding only committed
-    * segments. 100 TB shape: per batch the gate pays one assignment
-    * pass over its own rows plus a probe-pruned scan of nprobe/k of
-    * the stored lists — cost scales with the batch and the probed
-    * fraction, never the whole corpus; state grows with ADMITTED
+    * segments.
+    *
+    * Two paths decide a batch, with the same decisions and the same
+    * written layout. A batch within [[graft.core.DriverLocal.Default]]
+    * (≤ 100k rows and ≤ 128 MB read) is read by one job and decided on
+    * the driver: assignment and within-cell pairs on the driver's copy,
+    * then ONE scan of the probed lists (always statically pruned —
+    * the probed set is known without a job) whose ambiguous pairs the
+    * driver reranks exactly — about 6 Spark jobs a batch with its
+    * writes, where the distributed stages ran ~20 (~33 while the
+    * output write recomputed the decision). A larger batch runs the
+    * distributed stages, after a read job that stops early — as does a
+    * batch with over `DriverLocal.MaxPairs` within-cell pairs or whose
+    * lists scan returns more than the bound; those fall back before
+    * anything is written.
+    *
+    * 100 TB shape: per batch the gate pays one assignment pass over
+    * its own rows plus a probe-pruned scan of nprobe/k of the stored
+    * lists — cost scales with the batch and the probed fraction, never
+    * the whole corpus, on either path; state grows with ADMITTED
     * vectors only.
     *
     * Returns the started query; callers own its lifecycle.
@@ -620,31 +684,49 @@ object StreamingOps {
 
   /** One semantic-gate micro-batch, factored out so the replay law is
     * testable directly: same `batchId` twice ⇒ byte-identical state
-    * and output. */
+    * and output. A batch that fits `bound` (unique non-null ids,
+    * non-null vectors) is read once and decided on the driver
+    * ([[GateLocal.embed]]) unless a stage of it is over the bound;
+    * any other batch takes the distributed stages below. Both make
+    * the same decisions and write the same layout. */
   private[graft] def embedGateBatch(
       batch: DataFrame, batchId: Long, indexPath: String,
-      outPath: String, cosineThreshold: Double, nprobe: Int): Unit = {
+      outPath: String, cosineThreshold: Double, nprobe: Int,
+      bound: graft.core.DriverLocal.Bound = graft.core.DriverLocal.Default)
+      : Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    import graft.operators.Similarity
     val st = gateIvfState(spark, indexPath)
     val np =
       if (nprobe > 0) math.min(nprobe, st.k)
-      else Similarity.suggestNprobe(st.k)
+      else graft.operators.Similarity.suggestNprobe(st.k)
+    val rows = batch.select(F.col("id").cast("long").as("id"),
+      F.col("vec").cast("array<double>").as("vec"))
+    val decided = GateLocal.read(rows, "id", bound)
+      .filter(_.forall(!_.isNullAt(1)))
+      .exists(local => GateLocal.embed(spark, local, batchId, indexPath,
+        outPath, cosineThreshold, np, st, bound))
+    if (!decided)
+      embedGateDistributed(rows, batchId, indexPath, outPath,
+        cosineThreshold, np, st)
+  }
+
+  /** The distributed stages of [[embedGateBatch]]: batches over the
+    * driver-local bound. `batch` is (id long, vec array<double>). */
+  private def embedGateDistributed(
+      batch: DataFrame, batchId: Long, indexPath: String,
+      outPath: String, cosineThreshold: Double, np: Int,
+      st: GateIvfState): Unit = {
+    val spark = batch.sparkSession
+    import spark.implicits._
     val model = st.model
     val assigned = graft.scale.DeterministicKMeans.assign(
-        batch.select(F.col("id").cast("long").as("id"),
-          F.col("vec").cast("array<double>").as("vec")),
-        model, idCol = "id", vecCol = "vec")
+        batch, model, idCol = "id", vecCol = "vec")
       .select("id", "vec", "cluster")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nBatch = graft.core.Debug.timed(s"egate[$batchId] assign+count") {
       assigned.count()
     }
     try {
-      val cos = (a: org.apache.spark.sql.Column,
-          b: org.apache.spark.sql.Column) =>
-        F.round(graft.functions.VectorFunctions.cosine(a, b), 4)
       // stage 2: within-batch losers (smaller-id same-cell near-dup)
       val losers = assigned
         .select(F.col("cluster"),
@@ -652,7 +734,7 @@ object StreamingOps {
         .join(assigned.select(F.col("cluster"),
           F.col("id").as("id_b"), F.col("vec").as("vec_b")), "cluster")
         .where(F.col("id_a") < F.col("id_b"))
-        .where(cos(F.col("vec_a"), F.col("vec_b")) >= cosineThreshold)
+        .where(gateCos(F.col("vec_a"), F.col("vec_b")) >= cosineThreshold)
         .select(F.col("id_b").as("id")).distinct()
       // the within-batch survivor set is read by THREE consumers (the
       // probe-row encode, the exact-rerank broadcast, and the admitted
@@ -674,23 +756,7 @@ object StreamingOps {
       val probeRows = within.select("id", "vec")
         .as[(Long, Array[Double])]
         .flatMap { case (i, v) =>
-          // every ADMITTED row flows through here before any write, so
-          // this is the gate's dims guard: the cosine kernel silently
-          // truncates to the shorter operand, and a mismatched vector
-          // would otherwise get a wrong verdict AND poison the
-          // persisted layout (same fail-loud contract as the batch
-          // search faces)
-          require(v.length == dimsExpected,
-            s"vector $i has ${v.length} dims but the gate's index was " +
-              s"built for $dimsExpected")
-          val probes = bcCent.value
-            .map { case (c, cv) =>
-              (c, 1.0 - graft.functions.VectorKernels.cosine(v, cv))
-            }
-            .sortBy { case (c, d) => (d, c) }
-            .take(np).map(_._1)
-          val (codes, lo, hi, err) = graft.functions.Sq8Kernels.encodeScalar(v)
-          probes.map(c => (i, codes, lo, hi, err, c))
+          gateProbeRows(i, v, bcCent.value, np, dimsExpected)
         }
         .toDF("bid", "bcode", "blo", "bhi", "berr", "cluster")
       // the batch's probed clusters (bounded by k), collected so the
@@ -720,37 +786,12 @@ object StreamingOps {
         } else (probeRows, None)
       val state = embedGateStateScan(spark, indexPath, batchId,
         probedClusters, Some(st))
-      // broadcast budget in BYTES, not rows: ~200 MB of HashedRelation
-      // stays inside default driver headroom; each probe row is now
-      // dims code bytes + 3 doubles + ids, not the 8·dims-byte vector
-      val budgetRows = 200000000L / math.max(1, dimsExpected + 96)
-      val probeSide =
-        if (nBatch * np <= budgetRows) F.broadcast(probeSideRows)
-        else probeSideRows
-      // code-space pass with a THREE-WAY verdict per pair, so the
-      // exact rerank touches only the ambiguous error band around the
-      // threshold (err is an exact bound, so the bands are sound):
-      //   approx >= T + err + 1e-4  ⇒ DEFINITE reject (svec null —
-      //     the stored vector never leaves the scan);
-      //   within ±(err + 1e-4) of T ⇒ ambiguous — carry svec and
-      //     apply the EXACT round-4 predicate against the broadcast
-      //     batch vectors (identical to the pre-compression gate);
-      //   below                     ⇒ definite non-reject (filtered).
-      // 1e-4 covers the ≤ 5e-5 round-4 shift on the exact side.
-      val ca = graft.functions.VectorFunctions.sq8CosineScalar(
-        F.col("bcode"), F.col("vec"), F.col("blo"), F.col("bhi"))
-      val slack = F.col("berr") + F.lit(1e-4)
-      val scored = state.join(probeSide, "cluster")
-        .select(F.col("bid"), F.col("vec"), ca.as("ca"), F.col("berr"))
-        .where(F.col("ca") >= F.lit(cosineThreshold) - slack)
-        .select(F.col("bid"),
-          F.when(F.col("ca") < F.lit(cosineThreshold) + slack, F.col("vec"))
-            .as("svec"))
-      val rejected = scored
+      val rejected = gateScored(state,
+          gateProbeSide(probeSideRows, nBatch * np, dimsExpected),
+          cosineThreshold)
         .join(F.broadcast(
           within.select(F.col("id").as("bid"), F.col("vec").as("bvec"))), "bid")
-        .where(F.col("svec").isNull ||
-          cos(F.col("svec"), F.col("bvec")) >= cosineThreshold)
+        .where(gateRerankRejects(cosineThreshold))
         .select(F.col("bid").as("id")).distinct()
       val admitted = within.join(rejected, Seq("id"), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -759,21 +800,93 @@ object StreamingOps {
       }
       if (pruneState) probeSideRows.unpersist(blocking = false)
       within.unpersist(blocking = false)
+      // OUTPUT FIRST: the applists write re-caches every cached plan
+      // that scans applists — `admitted` among them — so writing it
+      // first made the output write recompute the whole decision,
+      // state scan included
       graft.core.Debug.timed(s"egate[$batchId] writes") {
+        writeGateOutput(admitted.select("id", "vec"), batchId, outPath)
         ivfAppendSegment(
           admitted.select("id", "vec", "cluster"), indexPath, batchId,
           knownRows = Some(nAdmitted))
-        admitted.select("id", "vec")
-          .withColumn("seg", F.lit(batchId))
-          .coalesce(8)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("seg")
-          .parquet(outPath)
       }
       admitted.unpersist(blocking = false)
     } finally assigned.unpersist(blocking = false)
   }
+
+  /** The gate's within-batch and rerank predicate: round-4 cosine. */
+  private[streaming] def gateCos(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    F.round(graft.functions.VectorFunctions.cosine(a, b), 4)
+
+  /** One within-batch survivor's probe rows (bid, bcode, blo, bhi,
+    * berr, cluster): its `np` nearest lists by (cosine distance, list
+    * id), each carrying the vector's per-row scalar-SQ8 codes and
+    * exact error bound. Every ADMITTED row flows through here before
+    * any write, so this is the gate's dims guard: the cosine kernel
+    * silently truncates to the shorter operand, and a mismatched
+    * vector would otherwise get a wrong verdict AND poison the
+    * persisted layout (same fail-loud contract as the batch search
+    * faces). */
+  private[streaming] def gateProbeRows(i: Long, v: Array[Double],
+      cent: Array[(Int, Array[Double])], np: Int, dims: Int)
+      : Array[(Long, Array[Byte], Double, Double, Double, Int)] = {
+    require(v.length == dims,
+      s"vector $i has ${v.length} dims but the gate's index was " +
+        s"built for $dims")
+    val probes = cent
+      .map { case (c, cv) =>
+        (c, 1.0 - graft.functions.VectorKernels.cosine(v, cv))
+      }
+      .sortBy { case (c, d) => (d, c) }
+      .take(np).map(_._1)
+    val (codes, lo, hi, err) = graft.functions.Sq8Kernels.encodeScalar(v)
+    probes.map(c => (i, codes, lo, hi, err, c))
+  }
+
+  /** The probe rows as the join's build side: broadcast while
+    * `nProbeRows` fits the budget — in BYTES, not rows: ~200 MB of
+    * HashedRelation stays inside default driver headroom, and each
+    * probe row is dims code bytes + 3 doubles + ids, not the
+    * 8·dims-byte vector. */
+  private[streaming] def gateProbeSide(probeRows: DataFrame,
+      nProbeRows: Long, dims: Int): DataFrame =
+    if (nProbeRows <= 200000000L / math.max(1, dims + 96))
+      F.broadcast(probeRows)
+    else probeRows
+
+  /** The code-space pass of the against-state stage: (bid, svec) for
+    * each (probe row, stored vector in its list) pair that may reject
+    * the batch row. A THREE-WAY verdict per pair, so the exact rerank
+    * ([[gateRerankRejects]]) touches only the ambiguous error band
+    * around the threshold (err is an exact bound, so the bands are
+    * sound):
+    *   approx >= T + err + 1e-4  ⇒ DEFINITE reject (svec null — the
+    *     stored vector never leaves the scan);
+    *   within ±(err + 1e-4) of T ⇒ ambiguous — carry svec for the
+    *     EXACT round-4 predicate against the batch vector (identical
+    *     to the pre-compression gate);
+    *   below                     ⇒ definite non-reject (filtered).
+    * 1e-4 covers the ≤ 5e-5 round-4 shift on the exact side. */
+  private[streaming] def gateScored(state: DataFrame, probeSide: DataFrame,
+      cosineThreshold: Double): DataFrame = {
+    val ca = graft.functions.VectorFunctions.sq8CosineScalar(
+      F.col("bcode"), F.col("vec"), F.col("blo"), F.col("bhi"))
+    val slack = F.col("berr") + F.lit(1e-4)
+    state.join(probeSide, "cluster")
+      .select(F.col("bid"), F.col("vec"), ca.as("ca"), F.col("berr"))
+      .where(F.col("ca") >= F.lit(cosineThreshold) - slack)
+      .select(F.col("bid"),
+        F.when(F.col("ca") < F.lit(cosineThreshold) + slack, F.col("vec"))
+          .as("svec"))
+  }
+
+  /** The exact rerank verdict over [[gateScored]]'s svec and the batch
+    * row's vector bvec: a reject. */
+  private[streaming] def gateRerankRejects(cosineThreshold: Double)
+      : org.apache.spark.sql.Column =
+    F.col("svec").isNull ||
+      gateCos(F.col("svec"), F.col("bvec")) >= cosineThreshold
 
   /** The gate's per-batch against-state scan: base lists plus
     * committed append segments (`seg < batchId`), pruned to the

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` Spark internals: wrap a raw Catalyst
   * [[Expression]] as a user-facing [[Column]] and register native
@@ -22,6 +24,13 @@ object Shim {
   def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A DataFrame over driver-held rows: a `LocalRelation`, so
+    * projections and filters over it fold at planning time and
+    * `collect()` runs no job. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    ofPlan(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Register a native function builder under `name` for SQL use. */
   def registerFunction(

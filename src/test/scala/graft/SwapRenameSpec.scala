@@ -17,11 +17,17 @@ class FailRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     if (FailRenameFileSystem.failWhen(src, dst)) false
     else if (FailRenameFileSystem.countSwapRename(src, dst)) false
     else super.rename(src, dst)
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (FailRenameFileSystem.failDelete(p))
+      throw new java.io.IOException(s"injected delete failure: $p")
+    else super.delete(p, recursive)
 }
 
 object FailRenameFileSystem {
   val uri: java.net.URI = java.net.URI.create("failrename:///")
   @volatile var failWhen: (Path, Path) => Boolean = (_, _) => false
+  /** Deletes of matching paths throw (a process dying mid-commit). */
+  @volatile var failDelete: Path => Boolean = _ => false
 
   /** Layout renames seen since the last reset — Spark's own commit
     * renames (out of `_temporary` / `.spark-staging` dirs) excluded. */
@@ -271,6 +277,19 @@ class SwapRenameSpec extends SparkSpec {
     fs.delete(marker, false)
   }
 
+  /** Every file under the layout root and its sibling dirs, with its
+    * size — what a refused re-run must leave exactly as it found it. */
+  private def tree(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir.stripPrefix("failrename:")).getParent
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p))
+        .toMap
+    } finally walk.close()
+  }
+
   /** `rows` keys each row by its id, so a takedown's expected post-op
     * rows are the pre-op rows minus `removed`. */
   private def sweep(fixture: String, renames: Int,
@@ -302,6 +321,14 @@ class SwapRenameSpec extends SparkSpec {
       marker(dir) match {
         case Some(m) =>
           assert(fs.exists(m), s"rename $n of $total: marker not left")
+          // a re-run over the crashed swap refuses and touches nothing:
+          // marker, `_old` siblings and staged dirs stay as they were
+          val left = tree(dir)
+          val rerun = intercept[IllegalStateException](op(dir))
+          assert(rerun.getMessage.contains("refusing"),
+            s"rename $n re-run: ${rerun.getMessage}")
+          assert(tree(dir) == left,
+            s"rename $n of $total: the refused re-run changed the layout")
           undoSwap(fs, m)
         case None =>
           val old = new Path(dir + "__rebuild_old")
@@ -438,6 +465,58 @@ class SwapRenameSpec extends SparkSpec {
     sweep(ivfFixture("graft-sweep-reb"), 2, _ => None, Set.empty, ivfRows) {
       d => graft.operators.Similarity.ivfRebuild(spark, d, targetListSize = 5)
     }
+  }
+
+  test("a takedown re-run over a crashed takedown refuses; the streamed appends survive") {
+    registerScheme()
+    val s = spark
+    import s.implicits._
+    import graft.operators.Similarity
+    val dir = ivfFixture("graft-swap-rerun")
+    val before = ivfIds(dir)
+    val fs = fsOf(dir)
+    // removing 3 and 100 rewrites both dirs: renames 1-2 swap lists,
+    // rename 3 moves applists to its _old sibling, rename 4 (failed)
+    // would move the staged appends live
+    FailRenameFileSystem.swapRenames.set(0)
+    FailRenameFileSystem.failNth = 4
+    try intercept[IllegalArgumentException](
+      Similarity.ivfLayoutRemove(s, dir, Seq(3L, 100L).toDF("id")))
+    finally FailRenameFileSystem.failNth = 0
+    val marker = graft.operators.SegmentTiers.swapMarker(s"$dir/applists")
+    assert(fs.exists(marker) && !fs.exists(new Path(s"$dir/applists")) &&
+      fs.exists(new Path(s"$dir/applists_remove_old")),
+      "fixture no longer stops with the appends moved away")
+    // a second takedown must not commit over the crashed one: it would
+    // leave `applists` absent, the appends orphaned in the _old sibling
+    // and no marker to say so
+    val e = intercept[IllegalStateException](
+      Similarity.ivfLayoutRemove(s, dir, Seq(4L).toDF("id")))
+    assert(e.getMessage.contains(marker.toString), e.getMessage)
+    assert(fs.exists(marker) && fs.exists(new Path(s"$dir/applists_remove_old")))
+    undoSwap(fs, marker)
+    assert(ivfIds(dir) == before, "recovery did not restore the pre-op rows")
+    assert(ivfIds(dir).contains(100L) && ivfIds(dir).contains(101L))
+  }
+
+  test("a swap that stopped after its last rename is committed by the next fold") {
+    registerScheme()
+    val s = spark
+    import graft.operators.Similarity
+    val dir = ivfFixture("graft-swap-resume")
+    val before = ivfIds(dir)
+    val fs = fsOf(dir)
+    val marker = graft.operators.SegmentTiers.swapMarker(s"$dir/applists")
+    // every rename done, then the process dies deleting the marker
+    FailRenameFileSystem.failDelete = _ == marker
+    try intercept[java.io.IOException](
+      Similarity.ivfCompactAppends(s, dir, maxSegExclusive = 1L))
+    finally FailRenameFileSystem.failDelete = _ => false
+    assert(fs.exists(marker) && fs.exists(new Path(s"$dir/applists_compact_old")))
+    // the next fold finishes that commit and runs
+    Similarity.ivfCompactAppends(s, dir)
+    assert(!fs.exists(marker) && !fs.exists(new Path(s"$dir/applists_compact_old")))
+    assert(ivfIds(dir) == before, "the resumed commit changed the rows")
   }
 
   /** Run `body` with renames into a matching destination forced false,
