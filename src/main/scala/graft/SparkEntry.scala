@@ -45,7 +45,7 @@ object SparkEntry {
     *    to ~128 ns before the cast, so values near hour/session/range
     *    boundaries would disagree with the oracle's exact arithmetic;
     *  - TIMESTAMP_NTZ (micros files) → cast to TIMESTAMP, exact under
-    *    the UTC session timezone Verify/Bench pin;
+    *    the UTC session timezone Verify pins;
     *  - TIMESTAMP → already what downstream `cast("long")` epoch
     *    arithmetic expects.
     */
@@ -216,13 +216,6 @@ object SparkEntry {
       graft.api.EnergyBuilder.buildEnergy(
         emb(s, dir), graft.core.EnergyParams(), defaultParams))
 
-  /** Queries that run in Verify (correctness gate) but NOT in Bench:
-    * the bench prints ONE JSON line the driver tail-captures (~2000
-    * chars minus sbt's success line; currently ~1930 with 83 rows), so
-    * every new row risks head-truncating the line into unparseable.
-    * New queries whose perf story is already covered by an existing
-    * row go here; headline rows stay stable for round-over-round diffs.
-    */
   /** Fellegi-Sunter weights for q_entity_resolve — defined ONCE and
     * interpolated into the oracle SQL so both engines use the exact
     * same double constants (name: exact-match evidence strong, chance
@@ -234,94 +227,6 @@ object SparkEntry {
     graft.operators.EntityResolution.FieldWeight("c_nationkey", 0.9, 0.04)
   private val ErSegW =
     graft.operators.EntityResolution.FieldWeight("c_mktsegment", 0.9, 0.2)
-
-  def benchExclude: Set[String] = Set(
-    "t_pack_greedy", "t_pack_manifest",
-    "t_line_dedup", "t_bm25", "d_fuzzy_match",
-    "t_ngram_counts", "t_length_batches", "d_sample_k_stratum",
-    "d_semantic_neardup", "d_temperature_sample", "t_encode_tokens",
-    "v_ivf_topk_batch", "d_dedup_against", "t_corpus_report",
-    "t_unigram_lm", "t_nb_classify", "v_hard_negatives",
-    "t_filter_funnel", "t_ppl_buckets", "t_span_corrupt",
-    "d_source_quota", "d_split_assign", "t_dsir_weights",
-    "v_ann_topk_sq8", "v_hard_negatives_approx", "t_gopher_rules",
-    "t_bpe_merges", "v_ann_topk_sq8_batch", "d_curate_corpus",
-    "t_bpe_encode", "d_contamination_report", "t_c4_rules",
-    "d_dup_spans", "d_proto_prune", "q_merge_upsert",
-    "q_resample_gapfill", "q_scd2_history", "q_event_funnel",
-    "v_ivf_append", "v_ann_topk_pq", "v_ivf_pq_topk",
-    "q_bloom_semi", "q_bloom_anti", "t_mad_outliers", "q_data_profile",
-    "v_bitext_mine", "v_bitext_mine_approx", "t_heavy_tokens",
-    "q_skew_report", "g_kcore", "q_zorder_values", "q_entity_resolve",
-    "d_split_leakfree", "v_rrf_fusion", "d_containment", "q_drift_psi",
-    "t_lang_mix", "d_corpus_diff", "v_ann_topk_pq_batch",
-    "d_weighted_sample", "t_bigram_lm", "q_pivot_events",
-    "q_grouping_sets", "q_interval_overlap",
-    // near-zero rows rotated OUT of the slim stdout line in r8 to make
-    // room for the two PQ-family flagships above (v_ivf_pq_topk_batch,
-    // d_dedup_against_index) the 100 TB story leans on; their perf is
-    // covered by t_text_stats / q1 / t_lang_dist and they stay in the
-    // full file artifact
-    "q_anomaly_events", "v_pca_summary",
-    "t_fingerprint", "q_distinct_part_stats", "t_lang_id",
-    // r9 additions live in the full file artifact only — the slim
-    // line is at its ~1900-char budget; their scale story is measured
-    // in SCALE_BENCH_r09 (ivfSq8/bitextPq/substring/occupancy rows)
-    "v_ivf_sq8_topk", "v_ivf_sq8_topk_batch", "v_bitext_mine_pq",
-    "d_substring_dedup", "d_gram_occupancy",
-    "v_ivf_pqr_topk", "v_ivf_pqr_topk_batch", "v_ivf_spherical_topk",
-    "v_ivf_2level_topk", "v_ivf_2level_hier_topk",
-    "v_ivf_2level_sharded_topk", "g_shortest_paths", "g_hop_landmarks",
-    "v_ivf_topk_filtered", "v_ann_topk_binary", "v_ann_topk_binary_batch",
-    "v_ivf_binary_topk", "g_harmonic",
-    // r11 additions: filtered codec ANN + the streamed serve row — the
-    // slim line stays at budget; their scale story is in SCALE_BENCH_r11
-    "v_ivf_sq8_topk_filtered", "v_ivf_binary_topk_filtered",
-    "s_ivf_query_stream", "s_dedup_gate_stream", "p_incr_profile",
-    "v_opq_topk", "v_opq_topk_batch",
-    // r12 additions: takedown + streaming profile/heavy-hitter oracles
-    "d_takedown_gate", "v_takedown_ivf",
-    "s_profile_stream", "s_heavy_tokens_stream",
-    // r12 continuation: compacted sidecar faces + default-routing pins
-    "s_profile_compact", "s_heavy_compact", "v_binary_tieaware",
-    "v_opq_moments_topk", "v_hard_negatives_suggest",
-    "s_gate_compact_stream", "v_ivf_rebuild", "v_binary_tieaware_batch",
-    "s_hist_stream", "p_psi_hist", "v_ivf_binary_tieaware",
-    // r13 additions: codec-layout takedown faces + the semantic gate
-    "v_takedown_sq8", "v_takedown_binary", "v_takedown_pq",
-    "v_takedown_opq", "s_embed_gate_stream", "s_embed_gate_compact",
-    "v_ivf_binary_tieaware_batch", "v_ivf_binary_tieaware_filtered",
-    "p_hist_bounds", "v_ivf_binary_resid_topk",
-    "v_ivf_binary_resid_topk_batch", "p_psi_embed",
-    // r14: residual-layout takedown pin
-    "v_takedown_binary_resid")
-
-  /** One-time index builds as NAMED bench steps. Bench times these
-    * before the query loop so per-query rows measure query cost and
-    * the build cost is its own row — r4's "a_get_item 1.26→5.67 s
-    * regression" was pure attribution noise from whichever query
-    * happened to pay the lazy build first.
-    */
-  def buildSteps: Map[String, (SparkSession, String) => Unit] = Map(
-    "build_standard" -> ((s, d) => { model(s, d); () }),
-    "build_energy" -> ((s, d) => { energyModel(s, d); () }))
-
-  /** Queries whose first run triggers each lazy memoized build — Bench
-    * uses this in ONLY mode to pre-run (untimed) exactly the builds the
-    * selected queries depend on, instead of paying every build for an
-    * iteration loop over text/dedup queries that touch no index. Keep
-    * in sync with
-    * `model(s, d)` / `energyModel(s, d)` uses in [[queries]]; an
-    * omission only mis-attributes build cost to the first dependent
-    * query in ONLY mode (the driver never sets ONLY).
-    */
-  def buildDependents: Map[String, Set[String]] = Map(
-    "build_standard" -> Set(
-      "a_get_item", "a_graph_degrees", "a_lambdas", "a_search",
-      "a_search_energy", "a_search_hybrid", "g_communities",
-      "g_components", "g_conductance", "g_ppr", "g_topology_factor",
-      "m_eval_taumode", "m_rank_corr", "m_tau_sweep", "m_topology_eval"),
-    "build_energy" -> Set("a_energy_lambdas", "a_energy_search"))
 
   /** Deterministic query vector: the embedding with id 0. */
   private def queryVec(s: SparkSession, dir: String): Array[Double] =
@@ -1188,8 +1093,8 @@ object SparkEntry {
     "t_pack_greedy" -> ((s, d) =>
       // greedy doc-boundary packing (docs never straddle shards):
       // sequential by definition, distributed via coalescing per-
-      // partition transfer summaries; benchExclude'd (bench line
-      // budget), oracle = recursive CTE replay of the same rule
+      // partition transfer summaries; oracle = recursive CTE replay
+      // of the same rule
       TrainPrep.packTokenShardsGreedy(docs(s, d), budget = 4096)
         .orderBy("doc_id")),
 
@@ -1348,8 +1253,8 @@ object SparkEntry {
     // an ORTHOGONAL rotation preserves every cosine — so the exact
     // top-k SQL oracles the whole rotate→encode→ADC→rerank plumbing);
     // production pruning and the recall-vs-raw-PQ claim are
-    // spec-pinned in PqSpec, measured at scale in the ScaleBench
-    // recall rows.
+    // spec-pinned in PqSpec, measured at scale in
+    // history/SCALE_BENCH_r11_recall{40,80,160v}.json.
     "v_opq_topk" -> ((s, d) => {
       val e = emb(s, d)
       val index = Similarity.opqBuild(e, m = 4, ksub = 8, iters = 10)
@@ -1427,7 +1332,7 @@ object SparkEntry {
     // make assignment argmax-cosine for any input norm, so probe
     // ranking and assignment agree where the Euclidean quantizer's
     // geometry breaks — the documented IVF normalization contract,
-    // lifted (SCALE.md "Known limits")
+    // lifted (history/SCALE.md "Known limits")
     "v_ivf_spherical_topk" -> ((s, d) => {
       val e = emb(s, d).select(F.col("id"),
         F.transform(F.col("vec"),
@@ -2816,7 +2721,7 @@ object SparkEntry {
       val w = Window.partitionBy("tau").orderBy(F.col("score").desc, F.col("doc_id").asc)
       // localCheckpoint, not persist: ≤ |taus|·10 rows, materialized
       // once and reused by both metric branches; no cache-manager entry
-      // to leak across the 72-query Bench/Verify session (blocks are
+      // to leak across the 202-query Verify session (blocks are
       // GC-cleaned once the result frame is dropped)
       val ranked = scored
         .withColumn("rank", F.row_number().over(w))

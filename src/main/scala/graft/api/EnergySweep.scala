@@ -26,7 +26,7 @@ object EnergySweep {
 
     // pseudo-ground-truth: standard build, pure-cosine top-truthK.
     // The build eagerly materializes its edge cache - release it, the
-    // sweep never reads the standard graph (a long-lived Bench/Verify
+    // sweep never reads the standard graph (a long-lived Verify
     // session must not accumulate one edge set per sweep call)
     val (standard, standardEdges) = ArrowSpaceBuilder.build(items, params)
     standardEdges.unpersist(blocking = false)

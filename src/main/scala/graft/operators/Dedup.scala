@@ -14,7 +14,7 @@ object Dedup {
 
   /** Materialize `result` eagerly (localCheckpoint stores the rows and
     * truncates the plan), then release the operator-internal caches.
-    * Long-lived sessions (Bench/Verify run all 72 queries in one JVM)
+    * Long-lived sessions (Verify runs all 202 queries in one JVM)
     * must not accumulate signature caches; the checkpointed output is
     * bounded by near-dup pair density, not corpus size.
     */
@@ -1420,7 +1420,8 @@ object Dedup {
     // linear in the corpus (≤ autoPairsPerDoc emitted candidates per
     // doc), falling over to the published billion-doc operating point
     // d = 3 (Manku et al. 2007 run d = 3 on 8B docs) once d = 6's
-    // buckets go dense. Measured (SCALE_BENCH_r09): d = 6 walls
+    // buckets go dense. Measured (history/SCALE_BENCH_r09.json,
+    // history/SCALE_BENCH_r09_s80.json): d = 6 walls
     // output-superlinearly on dense corpora (45→143 s at 2× docs)
     // while d = 3 tracks 1.94× at 3× output — the default a naive
     // user gets should be the radius that survives their corpus, with

@@ -432,7 +432,8 @@ object Similarity {
     * Output: (id, score) — exact round-4 cosines, like every codec
     * face.
     *
-    * MEASURED at scale (SCALE_BENCH_r12_recall*, cap = 2× the
+    * MEASURED at scale (history/SCALE_BENCH_r12_recall{40,80,160v}.json,
+    * cap = 2× the
     * expected tie class): recall@10 at the r100 budget reads 0.30 at
     * 80k vecs and 0.40 at 320k where the fixed cut reads 0.068 and
     * 0.012 — the widening buys MORE back as tie classes grow with the
@@ -742,7 +743,8 @@ object Similarity {
 
   /** Batch face of [[binaryTopKTieAware]] — the production shape for
     * mining workloads on modal corpora, where the fixed-rerank batch
-    * cut collapses hardest (measured, SCALE_BENCH_r12_recall*: plain
+    * cut collapses hardest (measured,
+    * history/SCALE_BENCH_r12_recall{40,80,160v}.json: plain
     * r100 recall@10 reads 0.068 at 80k vecs and 0.012 at 320k as the
     * per-mode tie class grows, while this face reads 0.30 / 0.40 at
     * the SAME r100 budget — just under the 10× blind rerank's 0.34 at
@@ -916,9 +918,10 @@ object Similarity {
     * frontier + capped tie-class widening, cut-inside-the-tie
     * deterministic by id, then the exact rerank. Residual signs
     * already rank WITHIN a mode, so the frontier tie classes widening
-    * exploits are far rarer than under raw signs — ScaleBench
-    * measures whether widening buys recall at the r-budget before
-    * anything defaults to it; this face exists for corpora whose
+    * exploits are far rarer than under raw signs — whether widening
+    * buys recall at the r-budget was measured in
+    * history/SCALE_BENCH_r13_recall{40,160v}_b.json before anything
+    * could default to it; this face exists for corpora whose
     * residual distributions still tie. Same expandCap contract (≤ 0
     * means [[DefaultExpandCapMultiple]]·rerank) and the same
     * probe-selector parity caveat as the plain batch face.
@@ -1358,7 +1361,8 @@ object Similarity {
     * recall vs residual-alone for exactly that reason. Pass the
     * result to [[pqResidualBuild]]'s `rot`.
     *
-    * MEASURED (r12, `SCALE_BENCH_r12_recall*`): on the modal scale
+    * MEASURED (r12, `history/SCALE_BENCH_r12_recall{40,80,160v}.json`):
+    * on the modal scale
     * corpus at identical (m=8, ksub=64, p8, r100) budgets, recall@10
     * reads residual-alone 0.664/0.576/0.485 vs residual-trained
     * rotation 0.615/0.535/0.452 vs raw-trained 0.614/0.532/0.458
@@ -2182,12 +2186,13 @@ object Similarity {
     * with N and a batch workload pays 2× list length × 2× queries = 4×
     * at 2× rows — exactly what the 160k-vector scale point measured on
     * the bitext rows before this rule (~3.6× at 2× vectors with 64
-    * fixed lists; SCALE.md round-9 addendum). Lists
+    * fixed lists; history/SCALE.md round-9 addendum). Lists
     * sized by this rule keep retrieval linear in rows; the quantizer
     * fit stays linear in nLists via the training-sample cap (the
     * [[ivfBuild]] `trainPerList` contract). The default target (1250)
     * reproduces the engine's long-measured 64-list point at 80k
-    * vectors, so historical ScaleBench rows stay comparable. Bounded
+    * vectors, so the rows of history/SCALE_BENCH_r08.json stay
+    * comparable. Bounded
     * to [16, 65536]: below 16 lists pruning is pointless, and beyond
     * 64k centroids brute-force assignment (N·nLists·F) is the next
     * wall — at that scale build through [[ivfBuildTwoLevel]], whose
@@ -2210,7 +2215,7 @@ object Similarity {
   /** Corpus-proportional probe count — [[suggestLists]]' sibling, and
     * the default every nprobe-taking face should be sized by when the
     * caller has no tuned number. The measured law (three scale points,
-    * SCALE_BENCH recall artifacts): with lists sized per
+    * history/SCALE_BENCH_r12_recall{40,80,160v}.json): with lists sized per
     * [[suggestLists]], a CONSTANT nprobe probes a halving FRACTION of
     * the corpus per doubling and recall decays geometrically
     * (1.00 → 0.87 → 0.69 at nprobe = 8 across 64/128/256 lists),
@@ -3296,7 +3301,9 @@ object Similarity {
     *
     * The no-drift path costs ONE broadcast-assignment pass over `cur`
     * plus two k-row aggregates and touches nothing on disk
-    * (ScaleBench-measured); the drift path pays the full rebuild.
+    * (measured as `s_ivf_serve_rebuild` in
+    * history/SCALE_BENCH_r11_merged.json); the drift path pays the full
+    * rebuild.
     * Call it the way the monitor loop would: ingest the drop first
     * (appends), then check — the rebuild folds base + committed
     * appends, so a drop that tripped the threshold is re-quantized
@@ -3537,7 +3544,8 @@ object Similarity {
     * rows) crosses DeterministicKMeans' driver-local threshold into
     * the distributed path's k sequential seeding jobs — v_ivf_build
     * measured 38.7–46.6 s at 320k×64 vs 8.1 s for the two-level build
-    * of 8010 lists on the SAME corpus (SCALE_BENCH_r09_s160v) — and
+    * of 8010 lists on the SAME corpus
+    * (history/SCALE_BENCH_r09_s160v.json) — and
     * wherever the flat fit runs its 256·k²·F·iters flops grow
     * quadratically in k, so routing just under the cliff keeps both
     * regimes comfortably linear. Every auto-sized path
@@ -3556,7 +3564,8 @@ object Similarity {
 
   /** [[hardNegativesApprox]] against a PREBUILT [[IvfIndex]]: the
     * coarse-quantizer fit dominates the one-shot variant at scale
-    * (measured: ~22 s of its 24 s at 80k×64 — SCALE_BENCH_r07), and a
+    * (measured: ~22 s of its 24 s at 80k×64 —
+    * history/SCALE_BENCH_r07.json), and a
     * mining pipeline runs MANY query batches against one corpus, so
     * amortize it: build once with [[ivfBuild]], pass a slim (id,
     * label) frame, and each batch pays only the probe join. Labels

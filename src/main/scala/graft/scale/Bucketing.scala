@@ -2,7 +2,7 @@ package graft.scale
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Bucketed co-located joins — the shuffle-elimination tool SCALE.md
+/** Bucketed co-located joins — the shuffle-elimination tool history/SCALE.md
   * reaches for on repeated large-fact joins: write both sides
   * `bucketBy(n, key)` once, and every subsequent equi-join on the key
   * is Exchange-free (Spark matches the bucket spec on both sides).

@@ -1787,8 +1787,8 @@ object StreamingOps {
     * .ivfLoad]] every `reloadEveryBatches` micro-batches so appended
     * vectors become visible to queries WITHOUT restarting the stream.
     * Freshness lag is therefore bounded by `reloadEveryBatches`
-    * triggers (plus the append stream's own trigger) — measured as a
-    * ScaleBench row; reload cost is one sidecar read + broadcast
+    * triggers (plus the append stream's own trigger) — measured as
+    * `s_ivf_serve_freshness_ms` in history/SCALE_BENCH_r10.json; reload cost is one sidecar read + broadcast
     * re-ship (the lists scan stays lazy), so small reload periods are
     * cheap. Old broadcasts are destroyed after the swap (foreachBatch
     * is sequential — no in-flight job can still hold them). The

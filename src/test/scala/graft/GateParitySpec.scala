@@ -322,6 +322,15 @@ class GateParitySpec extends SparkSpec {
     assert(eJobs == 6, s"embed gate batch ran $eJobs jobs")
   }
 
+  /** Bytes `body` reads from local files, cached blocks and shuffles
+    * excluded. */
+  private def fileBytes(body: => Any): Long = {
+    val fsStats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file")
+    val before = fsStats.getLong("bytesRead")
+    body
+    fsStats.getLong("bytesRead") - before
+  }
+
   test("a distributed embed batch scans the stored lists once") {
     // the output write used to follow the applists write, whose
     // re-cache of every plan scanning applists dropped the cached
@@ -332,13 +341,6 @@ class GateParitySpec extends SparkSpec {
     val out = tmp("graft-escan-out")
     StreamingOps.embedGateBatch(eBatches(0).toDF("id", "vec"), 0L,
       eIndex, out, 0.95, 8, distributed)
-    // bytes read from local files, cached blocks and shuffles excluded
-    val fsStats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file")
-    def fileBytes(body: => Any): Long = {
-      val before = fsStats.getLong("bytesRead")
-      body
-      fsStats.getLong("bytesRead") - before
-    }
     val batch = fileBytes(StreamingOps.embedGateBatch(
       eBatches(1).toDF("id", "vec"), 1L, eIndex, out, 0.95, 8, distributed))
     // one scan of the state batch 1 decides against (8 probes of 16
@@ -346,5 +348,30 @@ class GateParitySpec extends SparkSpec {
     val once = fileBytes(StreamingOps.embedGateStateScan(s, eIndex, 1L, None)
       .collect())
     assert(batch < once * 3 / 2, s"the batch read $batch bytes; one state scan reads $once")
+  }
+
+  test("a distributed minhash batch reads the stored state for one decision") {
+    // the append writes re-cache every cached plan that scans the
+    // appends dirs; the cached decision holds none (the against-state
+    // losers come back through an eager local checkpoint), so the
+    // shingles, band and output writes reuse it and read no state file
+    val s = spark
+    import s.implicits._
+    val (mIndex, mBatches, _, _) = jobFixture
+    val out = tmp("graft-mscan-out")
+    // batch 0 commits segment 0, so batch 1 decides against base + appends
+    StreamingOps.minhashGateBatch(mBatches(0).toDF("doc_id", "text"), 0L,
+      mIndex, out, 0.8, distributed)
+    val batch = fileBytes(StreamingOps.minhashGateBatch(
+      mBatches(1).toDF("doc_id", "text"), 1L, mIndex, out, 0.8, distributed))
+    // one decision's state reads over the same batch and state (the
+    // band scan, the band-0 signatures and the candidates' shingles);
+    // the whole batch, within-batch near-duplicates included, can only
+    // raise the candidates, so the gate's own decision reads no more
+    val once = fileBytes(Dedup.dedupAgainstIndex(
+      mBatches(1).toDF("doc_id", "text"),
+      Dedup.minhashIndexLoadWithAppendsCached(s, mIndex, 1L),
+      0.8, broadcastProbe = true).count())
+    assert(batch <= once, s"the batch read $batch bytes; one decision reads $once")
   }
 }

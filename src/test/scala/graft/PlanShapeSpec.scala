@@ -4,7 +4,7 @@ import graft.api.ArrowSpaceBuilder
 import graft.core.GraphParams
 import org.apache.spark.sql.{functions => F}
 
-/** Physical-plan regression guards for the shapes SCALE.md promises:
+/** Physical-plan regression guards for the shapes history/SCALE.md promises:
   * scans prune and push down, top-k compiles to TakeOrderedAndProject
   * (partial per-partition top-k, no global sort), small dimension
   * sides broadcast. These break loudly if a refactor trades the plan

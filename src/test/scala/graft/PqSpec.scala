@@ -254,8 +254,9 @@ class PqSpec extends SparkSpec {
     // dominant latent MIXED into every raw dim) raw slicing wins,
     // because spreading the dominant direction across all m subspaces
     // quantizes it with the PRODUCT of their codebooks — rotation is
-    // a measured choice, not a default (the ScaleBench recall rows
-    // carry the measurement).
+    // a measured choice, not a default (the recall rows of
+    // history/SCALE_BENCH_r12_recall{40,80,160v}.json carry the
+    // measurement).
     val dims = 32
     val rng = new scala.util.Random(47)
     def sample(): Array[Double] =

@@ -825,7 +825,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("suggestLists: constant target list size, bounded, history-compatible") {
-    // the 40x ScaleBench points reproduce exactly (the comparability
+    // the 40x points of history/SCALE_BENCH_r08.json reproduce exactly (the comparability
     // contract): full corpus 80k @ 1250/list and bitext half 40k @
     // 625/list both land on the historical 64
     assert(Similarity.suggestLists(80000) == 64)

@@ -1617,6 +1617,117 @@ class StreamingSpec extends SparkSpec {
     assert(loadedRows() == rowsWithSmall, "full fold changed the read rows")
   }
 
+  test("tiered folds in a running append stream: ladder of tiers, cold tiers untouched, reads identical, fold bytes bounded") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    import graft.operators.Similarity
+    val F = org.apache.spark.sql.functions
+    // 32-dim random vectors: the rows, not the per-file parquet
+    // overhead, carry each segment's bytes, as the fold policy assumes
+    val rng = new scala.util.Random(11)
+    def vecs(from: Long, n: Int) =
+      (0 until n).map(j => (from + j, Array.fill(32)(rng.nextGaussian())))
+    val base = vecs(0L, 40)
+    val batches = (0 until 13).map(b => vecs(1000L + 100L * b, 24))
+    val cadence = 2
+    /** seg id -> (bytes as the fold policy measures them, file -> digest) */
+    type Segs = Map[Long, (Long, Map[String, String])]
+    def segs(dir: String): Segs = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/applists")
+      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+      graft.operators.SegmentTiers.segLeaves(fs, p).map { case (id, leaf) =>
+        val root = java.nio.file.Paths.get(leaf.toUri)
+        val walk = java.nio.file.Files.walk(root)
+        val files = try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet"))
+            .map(f => root.relativize(f).toString ->
+              java.security.MessageDigest.getInstance("SHA-256")
+                .digest(java.nio.file.Files.readAllBytes(f))
+                .map("%02x".format(_)).mkString)
+            .toMap
+        } finally walk.close()
+        id -> (fs.getContentSummary(leaf).getLength, files)
+      }.toMap
+    }
+    /** Streams `batches` into a fresh copy of the base index; returns
+      * the index dir and the segments after every batch. */
+    def stream(compactEverySegs: Int): (String, Seq[Segs]) = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-tier-stream").toString + "/idx"
+      val built = Similarity.ivfBuild(base.toDF("id", "vec"), nLists = 2)
+      Similarity.ivfSave(built, dir)
+      Similarity.ivfRelease(built)
+      val in = MemoryStream[(Long, Array[Double])]
+      val q = StreamingOps.ivfAppendStream(in.toDF().toDF("id", "vec"), dir,
+        java.nio.file.Files.createTempDirectory("graft-tier-stream-ck").toString,
+        compactEverySegs = compactEverySegs)
+      try (dir, batches.map { b =>
+        in.addData(b)
+        q.processAllAvailable()
+        segs(dir)
+      }) finally q.stop()
+    }
+    val (dir, after) = stream(cadence)
+    var maxTiers = 0
+    var keptTiers = 0
+    var foldBytes = 0L
+    var fullFoldBytes = 0L
+    after.zipWithIndex.foreach { case (now, i) =>
+      val tiers = now.filter(_._1 < 0).values.map(_._1).toSeq.sorted
+      maxTiers = math.max(maxTiers, tiers.size)
+      // bounded segments: the real-segment cadence holds, and a fold
+      // stops at the first tier over 2x the bytes it took, so the tier
+      // it writes is under half the next one up. The tiers form a
+      // ladder, each over twice the one below: at most
+      // 1 + log2(largest / smallest) of them.
+      assert(now.keys.count(_ >= 0) <= cadence, s"batch $i: ${now.keys}")
+      assert(tiers.sliding(2).forall(p => p.size < 2 || p(1) > 2 * p(0)),
+        s"batch $i: merged tiers $tiers are no 2x ladder")
+      val before = if (i == 0) Map.empty: Segs else after(i - 1)
+      val taken = before.keySet -- now.keySet
+      if (taken.nonEmpty) {
+        val written = (now.keySet -- before.keySet).filter(_ < 0)
+        assert(written.size == 1, s"batch $i: the fold wrote $written")
+        // a later fold leaves every tier it did not take byte-for-byte
+        val kept = before.keySet.filter(_ < 0) -- taken
+        kept.foreach(t => assert(now(t) == before(t), s"batch $i rewrote tier $t"))
+        keptTiers += kept.size
+        // the fold-bytes bound, from SegmentTiers.select's 2x rule: a
+        // fold takes every real segment (r bytes), then merged tiers in
+        // ascending size while each is at most 2x the bytes taken so
+        // far. Each tier taken at most triples the bytes taken, so a
+        // fold that takes j tiers rewrites at most 3^j * r bytes.
+        val r = taken.filter(_ >= 0).toSeq.map(before(_)._1).sum
+        val j = taken.count(_ < 0)
+        val read = taken.toSeq.map(before(_)._1).sum
+        val out = now(written.head)._1
+        assert(read <= math.pow(3, j) * r,
+          s"batch $i: fold took $read bytes (fresh $r, $j tiers)")
+        foldBytes += out
+        // what folding every committed segment would have rewritten
+        fullFoldBytes += before.values.map(_._1).sum
+      }
+    }
+    assert(maxTiers >= 2, s"the folds never reached tier depth 2: $maxTiers")
+    assert(keptTiers > 0, "no fold left a cold tier in place")
+    assert(foldBytes < fullFoldBytes,
+      s"tiered folds wrote $foldBytes bytes; full folds would rewrite $fullFoldBytes")
+    info(s"tiered folds wrote $foldBytes bytes; full folds would rewrite " +
+      s"$fullFoldBytes; tier depth reached $maxTiers")
+    // folds are invisible: the read equals the same stream's, unfolded
+    val (plain, plainAfter) = stream(0)
+    assert(plainAfter.last.keySet == batches.indices.map(_.toLong).toSet)
+    def rows(d: String) = Similarity.ivfLoad(s, d).assigned
+      .select(F.col("id").cast("long"), F.col("cluster").cast("int"),
+        F.col("vec").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
+      .sortBy(_._1).toSeq
+    assert(rows(dir) == rows(plain), "the folds changed the read")
+  }
+
   test("salted segment writes: cold keys keep one file per leaf, hot keys split, replay idempotent") {
     val s = spark
     import s.implicits._

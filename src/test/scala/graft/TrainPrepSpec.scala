@@ -665,7 +665,7 @@ class TrainPrepSpec extends SparkSpec {
 
   test("iterative packer pipeline: pinned caches never accumulate across calls") {
     val sc = spark.sparkContext
-    // a long-lived session (Bench/Verify, a training-prep driver loop)
+    // a long-lived session (Verify, a training-prep driver loop)
     // interleaves packers, rankers, and quotas for many batches; every
     // pin must be released by the post-materialize release call, and
     // the registry must return to its starting size each iteration —
