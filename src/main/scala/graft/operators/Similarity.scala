@@ -116,18 +116,6 @@ object Similarity {
     if (hex.charAt(0).toInt % 2 == 0) 1L else -1L
   }
 
-  /** Deterministic signed-random-projection ANN (Charikar'02 SRP-LSH,
-    * Hamming-ranking form): `bits` md5-derived ±1 hyperplanes, vectors
-    * quantized to round(x·1e6) longs so every projection is an EXACT
-    * integer — the candidate set is bit-for-bit reproducible across
-    * engines (no float-sign boundary), which is what lets the DuckDB
-    * oracle replay it. Candidates = top `nCandidates` by plane-sign
-    * agreement with the query (popcount ranking), re-ranked by exact
-    * cosine. At scale the bit codes are a precomputed 4-long column;
-    * query time is then a popcount scan + TakeOrdered(C) + C exact
-    * re-ranks — one pass, no shuffle, sublinear in vector width.
-    * Output: (id, score) — top `k` by (score DESC, id ASC).
-    */
   /** Per-dimension (min, max) of an (id, vec) frame in ONE
     * treeAggregate pass — 2·d doubles to the driver, no explode, no
     * shuffle of N·d rows (the posexplode/groupBy(dim) formulation
@@ -588,8 +576,7 @@ object Similarity {
     requireCut(k, rerank, probe)
     val spark = c.codes.sparkSession
     import spark.implicits._
-    val qs = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
+    val qs = idVec(queries, "qid", "qvec")
     val typed = qs.as[(Long, Array[Double])]
     val dims = c.dims
     val pay = c.payload
@@ -602,16 +589,9 @@ object Similarity {
           .toDF("qid", "p").select(F.col("qid"), F.col("p.*"))
         c.codes.crossJoin(F.broadcast(rows))
       case Some(p) =>
-        val bcC = spark.sparkContext.broadcast(p.ivf.centroids)
-        val bcH = spark.sparkContext.broadcast(p.ivf.hier)
-        val nprobe = p.nprobe
-        val rows = typed.flatMap { case (qid, qv) =>
-            requireDims(s"query $qid", qv.length, dims)
-            val perList = pay(qv)
-            val cents = bcC.value
-            autoProbesFor(cents, bcH.value, qv, nprobe)
-              .map(l => (qid, l, perList(centroidOf(cents, l))))
-          }
+        val rows = fanOut(typed, identity[(Long, Array[Double])], dims,
+            quantizer(p.ivf), p.nprobe)(
+            q => { val perList = pay(q._2); (l, cent) => (q._1, l, perList(cent)) })
           .toDF("qid", "cluster", "p")
           .select(F.col("qid"), F.col("cluster"), F.col("p.*"))
         rows.join(listCodes(c, p), "cluster")
@@ -774,17 +754,38 @@ object Similarity {
   }
 
   def binaryLoad(
-      spark: org.apache.spark.sql.SparkSession, path: String): BinaryIndex = {
+      spark: org.apache.spark.sql.SparkSession, path: String): BinaryIndex =
+    BinaryIndex(spark.read.parquet(s"$path/codes"),
+      binaryDims(spark, path, residual = false))
+
+  /** The dims of a saved binary layout, refusing the other sign family:
+    * a residual layout's bits are signs of (vec − centroid), not raw
+    * signs, so the two must never load as each other. */
+  private def binaryDims(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      residual: Boolean): Int = {
     val txt = readSidecar(spark, s"$path/stats.json").getOrElse(
       throw new IllegalArgumentException(
-        s"no stats.json sidecar under $path — not a binarySave layout"))
-    require(!txt.contains("\"residual\":true"),
-      s"$path holds a RESIDUAL-sign layout (binaryResidualSave) — its " +
+        s"no stats.json sidecar under $path — not a saved binary layout"))
+    require(txt.contains("\"residual\":true") == residual,
+      if (residual)
+        s"$path holds a RAW-sign layout (binarySave) — load with binaryLoad"
+      else s"$path holds a RESIDUAL-sign layout (binaryResidualSave) — its " +
         "bits are signs of (vec − centroid), not raw signs; load with " +
         "binaryResidualLoad and query through ivfBinaryResidualTopK")
-    val dims = "\"dims\":(\\d+)".r.findFirstMatchIn(txt).get.group(1).toInt
-    BinaryIndex(spark.read.parquet(s"$path/codes"), dims)
+    intField(txt, "dims")
   }
+
+  /** The integer `"name":N` field of a JSON sidecar. */
+  private def intField(txt: String, name: String): Int =
+    ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(txt).get.group(1).toInt
+
+  /** Every number after the `"name":` key of a JSON sidecar — the
+    * row-major matrix fields (PQ codebooks, rotations). */
+  private def numbersAfter(txt: String, name: String): Array[Double] =
+    "-?\\d+(?:\\.\\d+(?:[eE][+-]?\\d+)?)?".r
+      .findAllIn(txt.substring(txt.indexOf("\"" + name + "\":")))
+      .map(_.toDouble).toArray
 
   /** Residual-sign binary index: `codes` is (id, cluster, bits) —
     * sign bits of the RESIDUAL `vec − centroid(cluster)` under a
@@ -815,7 +816,7 @@ object Similarity {
       ivf: IvfIndex, persist: Boolean = true): BinaryResidualIndex = {
     val spark = ivf.assigned.sparkSession
     import spark.implicits._
-    val dims = ivf.centroids.headOption.map(_._2.length).getOrElse(0)
+    val dims = ivfDims(ivf)
     require(dims > 0, "binaryResidualEncode: index has no centroids")
     val cents = ivf.centroids.toSeq.toDF("cluster", "cvec")
     val vecd = F.col("vec").cast("array<double>")
@@ -855,15 +856,9 @@ object Similarity {
 
   def binaryResidualLoad(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): BinaryResidualIndex = {
-    val txt = readSidecar(spark, s"$path/stats.json").getOrElse(
-      throw new IllegalArgumentException(
-        s"no stats.json sidecar under $path — not a saved binary layout"))
-    require(txt.contains("\"residual\":true"),
-      s"$path holds a RAW-sign layout (binarySave) — load with binaryLoad")
-    val dims = "\"dims\":(\\d+)".r.findFirstMatchIn(txt).get.group(1).toInt
-    BinaryResidualIndex(spark.read.parquet(s"$path/codes"), dims)
-  }
+      path: String): BinaryResidualIndex =
+    BinaryResidualIndex(spark.read.parquet(s"$path/codes"),
+      binaryDims(spark, path, residual = true))
 
   /** IVF + residual-sign binary: the probed lists bound WHICH rows
     * scan, the residual sign bits bound WHAT the scan reads AND rank
@@ -1269,12 +1264,9 @@ object Similarity {
 
   def pqLoad(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex = {
     val txt = sidecarText(spark, s"$path/books.json")
-    def intOf(name: String): Int =
-      ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(txt).get.group(1).toInt
-    val (m, ksub, dsub) = (intOf("m"), intOf("ksub"), intOf("dsub"))
-    val flat = "-?\\d+(?:\\.\\d+(?:[eE][+-]?\\d+)?)?".r
-      .findAllIn(txt.substring(txt.indexOf("\"books\":")))
-      .map(_.toDouble).toArray
+    val (m, ksub, dsub) =
+      (intField(txt, "m"), intField(txt, "ksub"), intField(txt, "dsub"))
+    val flat = numbersAfter(txt, "books")
     require(flat.length == m * ksub * dsub,
       s"pqLoad: sidecar has ${flat.length} codebook values, " +
         s"expected ${m * ksub * dsub}")
@@ -1586,10 +1578,8 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Double]] = {
     val txt = sidecarText(spark, s"$path/rotation.json")
-    val dims = "\"dims\":(\\d+)".r.findFirstMatchIn(txt).get.group(1).toInt
-    val flat = "-?\\d+(?:\\.\\d+(?:[eE][+-]?\\d+)?)?".r
-      .findAllIn(txt.substring(txt.indexOf("\"rot\":")))
-      .map(_.toDouble).toArray
+    val dims = intField(txt, "dims")
+    val flat = numbersAfter(txt, "rot")
     require(flat.length == dims * dims,
       s"rotationLoad: sidecar has ${flat.length} values, " +
         s"expected ${dims * dims}")
@@ -1975,15 +1965,8 @@ object Similarity {
     * it). The IVF index saves separately ([[ivfSave]]) — the pair
     * reload independently. */
   def pqResidualSave(index: PqResidualIndex, path: String): Unit = {
-    index.codes.write.mode("overwrite").parquet(s"$path/codes")
-    val books = index.books.map(_.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    graft.api.ArrowSpaceModel.writeSidecar(
-      index.codes.sparkSession, s"$path/books.json",
-      s"""{"m":${index.m},"ksub":${index.ksub},"dsub":${index.dsub},""" +
-        s""""books":$books}""")
-    index.rot.foreach(r =>
-      rotationSave(index.codes.sparkSession, r, path))
+    pqSave(PqIndex(index.codes, index.books), path)
+    index.rot.foreach(rotationSave(index.codes.sparkSession, _, path))
   }
 
   def pqResidualLoad(
@@ -1995,6 +1978,18 @@ object Similarity {
     PqResidualIndex(raw.codes, raw.books, rot)
   }
 
+  /** Deterministic signed-random-projection ANN (Charikar'02 SRP-LSH,
+    * Hamming-ranking form): `bits` md5-derived ±1 hyperplanes, vectors
+    * quantized to round(x·1e6) longs so every projection is an EXACT
+    * integer — the candidate set is bit-for-bit reproducible across
+    * engines (no float-sign boundary), which is what lets the DuckDB
+    * oracle replay it. Candidates = top `nCandidates` by plane-sign
+    * agreement with the query (popcount ranking), re-ranked by exact
+    * cosine. At scale the bit codes are a precomputed 4-long column;
+    * query time is then a popcount scan + TakeOrdered(C) + C exact
+    * re-ranks — one pass, no shuffle, sublinear in vector width.
+    * Output: (id, score) — top `k` by (score DESC, id ASC).
+    */
   def annTopKHamming(
       emb: DataFrame,
       query: Array[Double],
@@ -2033,9 +2028,7 @@ object Similarity {
     }
     val bcPlanes = spark.sparkContext.broadcast(planes)
     val bcQbits = spark.sparkContext.broadcast(qbits)
-    val scored = emb
-      .select(F.col("id").cast("long"), F.col("vec").cast("array<double>"))
-      .as[(Long, Array[Double])]
+    val scored = idVec(emb).as[(Long, Array[Double])]
       .mapPartitions { it =>
         val pl = bcPlanes.value
         val qb = bcQbits.value
@@ -2098,9 +2091,7 @@ object Similarity {
       knownRows: Option[Long] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val typed = emb
-      .select(F.col("id").cast("long"), F.col("vec").cast("array<double>"))
-      .select($"id".as[Long], $"vec".as[Array[Double]])
+    val typed = idVec(emb).select($"id".as[Long], $"vec".as[Array[Double]])
     requireExactPairsBound(typed, maxRows, "topCosinePairs",
       "KnnGraph.epsKnnEdges / Dedup banded candidates + saltedTopKPerKey",
       knownRows)
@@ -2180,6 +2171,13 @@ object Similarity {
       coarse: Array[Array[Double]], // k1 cell centers
       cellLists: Array[Array[Int]]) // global list ids per cell
 
+  /** The fine-list target the mining paths size to (~40-row lists):
+    * the committed operating point where re-mine cost went 122→43 s
+    * at 80× — shared by the one-shot auto-sizing, [[ivfResizeLists]]'
+    * default, and the prebuilt-mine list-size warning.
+    */
+  val FineMineListTarget: Int = 40
+
   /** Corpus-proportional list count: constant target list size, so
     * per-query probed-scan cost (≈ nprobe · targetListSize rows) stays
     * FLAT as the corpus grows. With a fixed nLists every list grows
@@ -2198,13 +2196,6 @@ object Similarity {
     * wall — at that scale build through [[ivfBuildTwoLevel]], whose
     * hierarchical assignment costs N·(√k + p·√k)·F instead.
     */
-  /** The fine-list target the mining paths size to (~40-row lists):
-    * the committed operating point where re-mine cost went 122→43 s
-    * at 80× — shared by the one-shot auto-sizing, [[ivfResizeLists]]'
-    * default, and the prebuilt-mine list-size warning.
-    */
-  val FineMineListTarget: Int = 40
-
   def suggestLists(n: Long, targetListSize: Int = 1250): Int = {
     require(targetListSize > 0,
       s"targetListSize must be positive; got $targetListSize")
@@ -2368,8 +2359,7 @@ object Similarity {
     require(coarseProbes > 0, s"coarseProbes must be positive; got $coarseProbes")
     val spark = emb.sparkSession
     import spark.implicits._
-    val base = emb.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
+    val base = idVec(emb)
     val k1 = math.max(1, math.ceil(math.sqrt(nLists.toDouble)).toInt)
     val k2 = math.max(1, math.ceil(nLists.toDouble / k1).toInt)
     val sample = trainSample(base, trainPerList.toLong * nLists)
@@ -2487,16 +2477,20 @@ object Similarity {
   def ivfProbes(index: IvfIndex, query: Array[Double], nprobe: Int): Array[Int] =
     probesFor(index.centroids, query, nprobe)
 
-  private def probesFor(
+  /** The flat probe selector: the `nprobe` lists nearest `query` by
+    * (cosine distance, list id). The hierarchical selector ranks its
+    * candidate lists through it too, and the streaming embed gate
+    * picks its probe rows with it. */
+  private[graft] def probesFor(
       centroids: Array[(Int, Array[Double])], query: Array[Double],
       nprobe: Int): Array[Int] =
     centroids
       .map { case (c, cv) =>
-        (c, 1.0 - graft.functions.VectorKernels.cosine(query, cv))
+        (1.0 - graft.functions.VectorKernels.cosine(query, cv), c)
       }
-      .sortBy { case (c, d) => (d, c) }
+      .sortBy(identity)
       .take(nprobe)
-      .map(_._1)
+      .map(_._2)
 
   /** Default coarse-cell budget for AUTO-routed hierarchical probe
     * selection (mirrors [[ivfTopKBatchHier]]'s default). At ≤ 4
@@ -2516,57 +2510,41 @@ object Similarity {
     * build side produced a hierarchy (which [[ivfBuildAuto]] does past
     * the measured 128-list flat-fit cliff), instead of leaving the
     * fast path as an opt-in sibling the un-tuned caller never finds.
-    * Callers that need an explicit coarse-cell budget keep the *Hier
-    * faces.
+    * The *Hier faces pass their explicit coarse-cell budget.
     */
   private def autoProbesFor(
       centroids: Array[(Int, Array[Double])], hier: Option[TwoLevelHier],
-      query: Array[Double], nprobe: Int): Array[Int] =
-    hier match {
-      case Some(h) =>
-        hierProbesFor(centroids, h, query, nprobe, DefaultCoarseCells)
-      case None => probesFor(centroids, query, nprobe)
-    }
+      query: Array[Double], nprobe: Int, coarseCells: Int): Array[Int] =
+    hier.fold(probesFor(centroids, query, nprobe))(
+      hierProbesFor(centroids, _, query, nprobe, coarseCells))
+
+  /** The cell ranking of hierarchical probe selection: the best
+    * `coarseCells` NON-EMPTY coarse cells by (cosine distance, cell id)
+    * — the build-side assignment's probe semantics. Shared by
+    * [[hierProbesFor]] and [[ivfTopKBatchHierSharded]]'s first stage,
+    * which ships only the coarse centers and an emptiness mask. */
+  private def cellsFor(
+      coarse: Array[Array[Double]], nonEmpty: Int => Boolean,
+      query: Array[Double], coarseCells: Int): Array[Int] =
+    coarse.indices
+      .map(c => (1.0 - graft.functions.VectorKernels.cosine(query, coarse(c)), c))
+      .sorted.iterator.map(_._2).filter(nonEmpty).take(coarseCells).toArray
 
   /** Hierarchical probe selection against a [[TwoLevelHier]]-carrying
-    * index: rank the √k coarse cells by cosine distance (ties →
-    * smaller cell), scan sub-centers of the best `coarseCells`
-    * NON-EMPTY cells only (mirroring the build-side assignment's
-    * probe semantics), and pick the `nprobe` best lists among them
-    * with [[probesFor]]'s exact scoring and (distance, id) tie-break.
-    * Degenerate contract: at coarseCells ≥ the number of non-empty
-    * cells every sub-center is scanned, so the returned probes equal
-    * the flat [[probesFor]] array element-for-element (spec-pinned) —
-    * pruning only ever removes cells, never reorders lists.
+    * index: the sub-centers of the [[cellsFor]] cells only, ranked by
+    * [[probesFor]]. Degenerate contract: at coarseCells ≥ the number of
+    * non-empty cells every sub-center is scanned, so the returned
+    * probes equal the flat [[probesFor]] array element-for-element
+    * (spec-pinned) — pruning only ever removes cells, never reorders
+    * lists.
     */
   private def hierProbesFor(
       centroids: Array[(Int, Array[Double])], hier: TwoLevelHier,
-      query: Array[Double], nprobe: Int, coarseCells: Int): Array[Int] = {
-    val cellOrder = Array.range(0, hier.coarse.length)
-      .map { cell =>
-        (1.0 - graft.functions.VectorKernels.cosine(query, hier.coarse(cell)),
-          cell)
-      }
-      .sortBy(identity)
-    val cand = scala.collection.mutable.ArrayBuffer.empty[(Double, Int)]
-    var used = 0
-    var i = 0
-    while (i < cellOrder.length && used < coarseCells) {
-      val lists = hier.cellLists(cellOrder(i)._2)
-      if (lists.nonEmpty) {
-        used += 1
-        var j = 0
-        while (j < lists.length) {
-          val g = lists(j)
-          val cv = centroidOf(centroids, g)
-          cand += ((1.0 - graft.functions.VectorKernels.cosine(query, cv), g))
-          j += 1
-        }
-      }
-      i += 1
-    }
-    cand.sortBy(identity).take(nprobe).map(_._2).toArray
-  }
+      query: Array[Double], nprobe: Int, coarseCells: Int): Array[Int] =
+    probesFor(
+      cellsFor(hier.coarse, hier.cellLists(_).nonEmpty, query, coarseCells)
+        .flatMap(hier.cellLists(_)).map(g => (g, centroidOf(centroids, g))),
+      query, nprobe)
 
   private def requireHier(index: IvfIndex, op: String): TwoLevelHier =
     index.hier.getOrElse(throw new IllegalArgumentException(
@@ -2584,6 +2562,130 @@ object Similarity {
     hierProbesFor(index.centroids, requireHier(index, "ivfProbesHier"),
       query, nprobe, coarseCells)
 
+  // ------------------------------------------------ raw IVF scan path
+
+  /** The query width an IVF index was built for (its centroids'). */
+  private def ivfDims(index: IvfIndex): Int =
+    index.centroids.headOption.fold(0)(_._2.length)
+
+  /** (id BIGINT, vec ARRAY<DOUBLE>) — or any other (id, vector) column
+    * pair, e.g. a query frame's (qid, qvec) — under their own names. */
+  private def idVec(
+      df: DataFrame, id: String = "id", vec: String = "vec"): DataFrame =
+    df.select(F.col(id).cast("long").as(id),
+      F.col(vec).cast("array<double>").as(vec))
+
+  /** The quantizer the executor probe fan-out reads: centroids and
+    * optional hierarchy as broadcasts. Made once per batch call, or
+    * once per (re)load by the streaming serve loop, which owns and
+    * destroys them instead of re-shipping the table every micro-batch.
+    */
+  private[graft] final case class Quantizer(
+      centroids: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Double])]],
+      hier: org.apache.spark.broadcast.Broadcast[Option[TwoLevelHier]]) {
+    def destroy(): Unit = { centroids.destroy(); hier.destroy() }
+  }
+
+  private[graft] def quantizer(index: IvfIndex): Quantizer = {
+    val sc = index.assigned.sparkSession.sparkContext
+    Quantizer(sc.broadcast(index.centroids), sc.broadcast(index.hier))
+  }
+
+  /** The executor probe fan-out of every probed batch face (raw and
+    * codec) and of the hard-negative miner: each query becomes one row
+    * per probed list ([[autoProbesFor]] — no per-query driver work),
+    * built by `row` from the query (called once per query, so
+    * per-query state such as a codec payload is built once) and the
+    * list's id and centroid. `key` reads the query's (qid, qvec); a
+    * query that is not `dims` wide fails its task — the scoring
+    * kernels truncate to the shorter array and would answer wrongly.
+    */
+  private def fanOut[Q, R <: Product : TypeTag](
+      queries: org.apache.spark.sql.Dataset[Q],
+      key: Q => (Long, Array[Double]), dims: Int, qz: Quantizer,
+      nprobe: Int, coarseCells: Int = DefaultCoarseCells)(
+      row: Q => (Int, Array[Double]) => R): org.apache.spark.sql.Dataset[R] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries.flatMap { q =>
+      val (qid, qv) = key(q)
+      requireDims(s"query $qid", qv.length, dims)
+      val emit = row(q)
+      val cents = qz.centroids.value
+      autoProbesFor(cents, qz.hier.value, qv, nprobe, coarseCells)
+        .iterator.map(l => emit(l, centroidOf(cents, l)))
+    }
+  }
+
+  /** The cut guards of every raw face: k > 0, 0 < nprobe ≤ nLists. */
+  private[graft] def requireRawCut(index: IvfIndex, k: Int, nprobe: Int): Unit =
+    requireCut(k, k, Some(Probe(index, nprobe)))
+
+  /** Single-query tail of every raw IVF face: the probed lists' rows
+    * (`cluster IN probes` — partition-pruned on a saved layout),
+    * optionally cut to a kept id set, scored by EXACT round-4 cosine
+    * inside the scan — no candidate cut, no rerank join. Probes are
+    * flat ([[ivfProbes]]), or hierarchical at `coarseCells`.
+    * Output: (id, score), (score DESC, id ASC).
+    */
+  private def rawTopK(
+      p: Probe, query: Array[Double], k: Int,
+      coarseCells: Option[Int] = None): DataFrame = {
+    requireRawCut(p.ivf, k, p.nprobe)
+    requireDims("query", query.length, ivfDims(p.ivf))
+    val probes = coarseCells.fold(ivfProbes(p.ivf, query, p.nprobe))(
+      ivfProbesHier(p.ivf, query, p.nprobe, _))
+    withKept(p.ivf.assigned.where(F.col("cluster").isin(probes.toSeq: _*)),
+        p.kept)
+      .select(F.col("id"),
+        F.round(cosine(F.col("vec"), F.typedLit(query)), 4).as("score"))
+      .orderBy(F.col("score").desc, F.col("id").asc)
+      .limit(k)
+  }
+
+  /** Batch tail of every raw IVF face over (qid, cluster, qvec) probe
+    * rows: ONE equi-join against the (kept) lists on the cluster id —
+    * each query scans only its probed lists, co-grouped by list exactly
+    * as the partitioned layout prunes on disk — exact round-4 cosines in
+    * the join's projection, then the per-query top-k through
+    * [[graft.scale.Skew.heapTopKPerKey]], whose map-side partials cut
+    * the shuffle to |queries| × partitions × k pairs. `sorted = false`
+    * skips the trailing global orderBy (a range-sampling pass + full
+    * sort shuffle) for consumers that need no order, e.g. a Parquet
+    * append.
+    */
+  private def rawScanBatch(
+      probed: DataFrame, p: Probe, k: Int, sorted: Boolean): DataFrame = {
+    val scored = probed
+      .join(withKept(p.ivf.assigned, p.kept), "cluster")
+      .select(F.col("qid"), F.col("id"),
+        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
+    val top = graft.scale.Skew.heapTopKPerKey(scored, "qid", "score", "id", k)
+    if (sorted) top.orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
+    else top
+  }
+
+  /** Every raw batch face: [[fanOut]] to (qid, cluster, qvec) probe
+    * rows — query vectors ride through the join once per probe, fine
+    * for probe-bounded fan-out — then [[rawScanBatch]]. `qz` is the
+    * serve loop's caller-owned quantizer; otherwise one is broadcast
+    * for this call. Queries need (qid, qvec); output (qid, id, score).
+    */
+  private[graft] def rawTopKBatch(
+      index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
+      kept: Option[DataFrame] = None, coarseCells: Int = DefaultCoarseCells,
+      qz: Option[Quantizer] = None, sorted: Boolean = true): DataFrame = {
+    requireRawCut(index, k, nprobe)
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val rows = fanOut(idVec(queries, "qid", "qvec").as[(Long, Array[Double])],
+        identity[(Long, Array[Double])], ivfDims(index),
+        qz.getOrElse(quantizer(index)), nprobe, coarseCells)(
+        q => (l, _) => (q._1, l, q._2))
+      .toDF("qid", "cluster", "qvec")
+    rawScanBatch(rows, Probe(index, nprobe, kept), k, sorted)
+  }
+
   /** [[ivfTopK]] with hierarchical probe selection — identical scan,
     * scoring, rounding and tie rules once the probes are chosen; only
     * WHICH lists are probed can differ (and cannot, at coarseCells ≥
@@ -2591,18 +2693,11 @@ object Similarity {
     */
   def ivfTopKHier(
       index: IvfIndex, query: Array[Double], k: Int, nprobe: Int,
-      coarseCells: Int = 4): DataFrame = {
-    val probes = ivfProbesHier(index, query, nprobe, coarseCells)
-    val q = F.typedLit(query)
-    index.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+      coarseCells: Int = 4): DataFrame =
+    rawTopK(Probe(index, nprobe), query, k, Some(coarseCells))
 
   /** [[ivfTopKBatch]] with hierarchical probe selection on the
-    * executors: same broadcast-flatMap-join-saltedTopK shape, but the
+    * executors: same broadcast-flatMap-join-heapTopK shape, but the
     * per-query probe choice costs (√k + p·k/√k)·F flops instead of
     * k·F. With corpus-proportional lists k grows with N, so the flat
     * batch path's probe selection is a hidden O(N)-per-query term —
@@ -2610,32 +2705,15 @@ object Similarity {
     * [[ivfBuildTwoLevel]] exists for, and the path the fine-list
     * mining rows run on. The broadcast still ships all k sub-centers
     * (same bytes as the flat path — no regression); sharding
-    * sub-centers into the probed lists' Parquet is the documented
-    * follow-on once k·F itself outgrows a broadcast (~512 MB at 1M
-    * lists × 64 dims).
+    * sub-centers into the probed lists' Parquet is
+    * [[ivfTopKBatchHierSharded]], for once k·F itself outgrows a
+    * broadcast (~512 MB at 1M lists × 64 dims).
     */
   def ivfTopKBatchHier(
       index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
       coarseCells: Int = 4): DataFrame = {
-    val hier = requireHier(index, "ivfTopKBatchHier")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(index.centroids)
-    val bcH = spark.sparkContext.broadcast(hier)
-    val probed = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        hierProbesFor(bcC.value, bcH.value, qv, nprobe, coarseCells)
-          .map(c => (qid, c, qv))
-      }
-      .toDF("qid", "cluster", "qvec")
-    val scored = probed
-      .join(index.assigned, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(scored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
+    requireHier(index, "ivfTopKBatchHier")
+    rawTopKBatch(index, queries, k, nprobe, coarseCells = coarseCells)
   }
 
   /** Probed IVF top-k. `nprobe` sizing: with corpus-proportional
@@ -2647,15 +2725,24 @@ object Similarity {
     * compositions and their batch/Where variants share this probe
     * selection).
     */
-  def ivfTopK(index: IvfIndex, query: Array[Double], k: Int, nprobe: Int): DataFrame = {
-    val probes = ivfProbes(index, query, nprobe)
-    val q = F.typedLit(query)
-    index.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+  def ivfTopK(index: IvfIndex, query: Array[Double], k: Int, nprobe: Int): DataFrame =
+    rawTopK(Probe(index, nprobe), query, k)
+
+  /** Predicate-selected id set shared by every Where face (raw and
+    * codec): distinct so multi-valued metadata (several rows per id,
+    * e.g. one per tag) cannot duplicate a probed candidate — a
+    * duplicated (id, score) pair would burn top-k slots and
+    * under-return distinct neighbors.
+    */
+  private def keptIds(meta: DataFrame, pred: Column): DataFrame =
+    meta.where(pred).select("id").distinct()
+
+  /** Apply an optional kept-id set to a slim candidate frame — the one
+    * line every Where variant differs by, shared so the filtered and
+    * unfiltered plans cannot drift anywhere else.
+    */
+  private def withKept(slim: DataFrame, kept: Option[DataFrame]): DataFrame =
+    kept.fold(slim)(ids => slim.join(ids, Seq("id")))
 
   /** FILTERED ANN: [[ivfTopK]] with a metadata predicate applied
     * INSIDE the probed scan (pre-filtering, the faiss/vector-DB
@@ -2671,85 +2758,34 @@ object Similarity {
     * selective filter empties the probed lists — raise nprobe with
     * 1/selectivity, the standard filtered-IVF operating rule.
     */
-  /** Predicate-selected id set shared by every Where face (raw and
-    * codec): distinct so multi-valued metadata (several rows per id,
-    * e.g. one per tag) cannot duplicate a probed candidate — a
-    * duplicated (id, score) pair would burn top-k slots and
-    * under-return distinct neighbors.
-    */
-  private def keptIds(meta: DataFrame, pred: Column): DataFrame =
-    meta.where(pred).select("id").distinct()
-
-  /** Apply an optional kept-id set to a slim candidate frame — the one
-    * line every codec scan's Where variant differs by, shared so the
-    * filtered and unfiltered plans cannot drift anywhere else.
-    */
-  private def withKept(slim: DataFrame, kept: Option[DataFrame]): DataFrame =
-    kept.fold(slim)(ids => slim.join(ids, Seq("id")))
-
   def ivfTopKWhere(
       index: IvfIndex, meta: DataFrame, pred: Column,
-      query: Array[Double], k: Int, nprobe: Int): DataFrame = {
-    val probes = ivfProbes(index, query, nprobe)
-    val q = F.typedLit(query)
-    index.assigned
-      .where(F.col("cluster").isin(probes.toSeq: _*))
-      .join(keptIds(meta, pred), Seq("id"))
-      .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
-      .limit(k)
-  }
+      query: Array[Double], k: Int, nprobe: Int): DataFrame =
+    rawTopK(Probe(index, nprobe, Some(keptIds(meta, pred))), query, k)
 
   /** Batch face of [[ivfTopKWhere]]: the [[ivfTopKBatch]] probe
     * fan-out join with the predicate-filtered id set applied to the
-    * probed rows before scoring — one filter join for ALL queries,
-    * salted exact per-query top-k after.
+    * lists before scoring — one filter join for ALL queries, bounded
+    * exact per-query top-k after.
     */
   def ivfTopKBatchWhere(
       index: IvfIndex, meta: DataFrame, pred: Column,
-      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(index.centroids)
-    val bcH = spark.sparkContext.broadcast(index.hier)
-    val probed = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        autoProbesFor(bc.value, bcH.value, qv, nprobe)
-          .map(c => (qid, c, qv))
-      }
-      .toDF("qid", "cluster", "qvec")
-    val kept = index.assigned.join(keptIds(meta, pred), Seq("id"))
-    val scored = probed
-      .join(kept, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(scored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-  }
+      queries: DataFrame, k: Int, nprobe: Int): DataFrame =
+    rawTopKBatch(index, queries, k, nprobe, kept = Some(keptIds(meta, pred)))
 
   /** MANY queries against the IVF index at once — the batch-retrieval
     * scale path. [[ivfTopK]] is one driver-side probe selection per
     * call; a million-query batch needs the probes chosen on the
     * EXECUTORS and a single join to do all the scanning:
     *   1. centroids broadcast; a map-only pass turns each query row
-    *      into its `nprobe` (qid, cluster) probe rows (same selection
-    *      as [[ivfProbes]] — shared code, can't drift);
+    *      into its `nprobe` (qid, cluster) probe rows ([[fanOut]]);
     *   2. ONE equi-join of the probe rows against the cluster-keyed
-    *      lists — each query scans only its probed lists, and the join
-    *      key is the cluster id, so co-grouping is by list exactly as
-    *      the partitioned layout prunes on disk;
-    *   3. exact per-query top-k through [[graft.scale.Skew
-    *      .heapTopKPerKey]] — ONE bounded-heap aggregation whose
-    *      map-side partials cut the shuffle to |queries| × partitions
-    *      × k pairs, so a query whose probes cover a huge list still
-    *      bounds every task.
+    *      lists, scored exactly, and the per-query bounded-heap top-k
+    *      ([[rawScanBatch]]).
     * No per-query driver work, no window over all candidates in one
     * task. Queries need columns (qid, qvec); output (qid, id, score),
     * rank on the rounded score with id tiebreak (the engine's batch
-    * parity convention). Query vectors ride through the join once each
-    * — fine for probe-bounded fan-out (nprobe rows per query).
+    * parity convention).
     *
     * Probe selection AUTO-ROUTES (r10, VERDICT r9 #2): an index
     * carrying a [[TwoLevelHier]] (any [[ivfBuildTwoLevel]] /
@@ -2758,48 +2794,13 @@ object Similarity {
     * — identical to flat at ≤ 4 non-empty cells, the scale-safe
     * (√k + p·k/√k)·F selection beyond. [[ivfTopKBatchHier]] remains
     * for an explicit coarse-cell budget; a flat index is unchanged.
+    * The single-query [[ivfTopK]] always probes flat, so on a
+    * two-level index past the degenerate point the two can differ by
+    * design.
     */
   def ivfTopKBatch(
-      index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    ivfTopKBatchImpl(index, sc.broadcast(index.centroids),
-      sc.broadcast(index.hier), queries, k, nprobe, sorted = true)
-  }
-
-  /** [[ivfTopKBatch]] against CALLER-OWNED centroid/hierarchy
-    * broadcasts — for repeated-batch callers (the streaming serve
-    * loop) that would otherwise re-ship the centroid table every
-    * micro-batch and accumulate dead broadcasts until a driver GC.
-    * `sorted = false` additionally skips the trailing global orderBy
-    * (a range-sampling pass + full sort shuffle) when the consumer
-    * doesn't need it — e.g. a Parquet append, whose multi-file order
-    * readers never see. Probe selection auto-routes hierarchically
-    * when the index carries a hierarchy ([[autoProbesFor]]).
-    */
-  private[graft] def ivfTopKBatchImpl(
-      index: IvfIndex,
-      bcCentroids: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Double])]],
-      bcHier: org.apache.spark.broadcast.Broadcast[Option[TwoLevelHier]],
-      queries: DataFrame, k: Int, nprobe: Int, sorted: Boolean): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val probed = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        autoProbesFor(bcCentroids.value, bcHier.value, qv, nprobe)
-          .map(c => (qid, c, qv))
-      }
-      .toDF("qid", "cluster", "qvec")
-    val scored = probed
-      .join(index.assigned, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    val top = graft.scale.Skew.heapTopKPerKey(scored, "qid", "score", "id", k)
-    if (sorted)
-      top.orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-    else top
-  }
+      index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int): DataFrame =
+    rawTopKBatch(index, queries, k, nprobe)
 
   /** The sub-center table of a two-level index: one row per inverted
     * list, keyed by its coarse cell — (cell INT, list INT, cvec
@@ -2829,8 +2830,8 @@ object Similarity {
     * Nothing query-sized or k-sized is ever resident in one place:
     *   1. broadcast ONLY the √k coarse centers (+ a per-cell emptiness
     *      mask) — ~512 KB at 1M lists — and fan each query out to its
-    *      `coarseCells` best non-empty cells (exact [[hierProbesFor]]
-    *      cell ranking: cosine distance, ties → smaller cell);
+    *      `coarseCells` best non-empty cells ([[cellsFor]], the
+    *      broadcast path's own cell ranking);
     *   2. equi-join those (qid, cell, qvec) rows with the sub-center
     *      table on cell — each query scores only the probed cells'
     *      ~p·k/√k sub-centers, and the fat (qvec × cvec) rows exist
@@ -2838,12 +2839,12 @@ object Similarity {
     *      (qid, dist, list) projection;
     *   3. exact per-query top-nprobe lists via [[graft.scale.Skew
     *      .heapTopKPerKey]] on (dist asc, list asc) — the same
-    *      (distance, id) tie-break as [[hierProbesFor]], and the
+    *      (distance, id) tie-break as [[probesFor]], and the
     *      distances are the same JVM doubles (shared kernel), so the
     *      probe SET is identical to the broadcast path's (spec-pinned
     *      by exact output equality at a pruned operating point);
     *   4. rejoin the chosen (qid, list) rows to the queries on qid and
-    *      scan exactly as [[ivfTopKBatch]] stage 2–3.
+    *      scan as every raw batch face does ([[rawScanBatch]]).
     * Pass `subCenters` to score against a persisted table (e.g. the
     * cell-partitioned Parquet written at index-build time) instead of
     * re-deriving it from the driver-resident hierarchy.
@@ -2852,29 +2853,22 @@ object Similarity {
       index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
       coarseCells: Int = 4, subCenters: Option[DataFrame] = None): DataFrame = {
     val hier = requireHier(index, "ivfTopKBatchHierSharded")
+    requireRawCut(index, k, nprobe)
     val spark = queries.sparkSession
     import spark.implicits._
     val bcCoarse = spark.sparkContext.broadcast(hier.coarse)
     val bcNonEmpty = spark.sparkContext.broadcast(
       hier.cellLists.map(_.nonEmpty))
-    val q = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"))
-    // stage 1: per-query coarse cells — hierProbesFor's cell ranking
+    val dims = ivfDims(index)
+    val q = idVec(queries, "qid", "qvec")
+    // stage 1: per-query coarse cells
     val probedCells = q
       .as[(Long, Array[Double])]
       .flatMap { case (qid, qv) =>
-        val coarse = bcCoarse.value
+        requireDims(s"query $qid", qv.length, dims)
         val nonEmpty = bcNonEmpty.value
-        Array.range(0, coarse.length)
-          .map { cell =>
-            (1.0 - graft.functions.VectorKernels.cosine(qv, coarse(cell)),
-              cell)
-          }
-          .sorted
-          .iterator
-          .filter { case (_, cell) => nonEmpty(cell) }
-          .take(coarseCells)
-          .map { case (_, cell) => (qid, cell, qv) }
+        cellsFor(bcCoarse.value, nonEmpty(_), qv, coarseCells)
+          .map(cell => (qid, cell, qv))
       }
       .toDF("qid", "cell", "qvec")
     // stage 2+3: sub-center scoring join (fat rows die inside the
@@ -2887,14 +2881,8 @@ object Similarity {
     val chosen = graft.scale.Skew
       .heapTopKPerKey(listDist, "qid", "dist", "list", nprobe, desc = false)
       .select(F.col("qid"), F.col("list").as("cluster"))
-    // stage 4: reattach qvec, then the standard probed scan
-    val scored = chosen
-      .join(q, "qid")
-      .join(index.assigned, "cluster")
-      .select(F.col("qid"), F.col("id"),
-        F.round(cosine(F.col("vec"), F.col("qvec")), 4).as("score"))
-    graft.scale.Skew.heapTopKPerKey(scored, "qid", "score", "id", k)
-      .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
+    // stage 4: reattach qvec, then the shared probed scan
+    rawScanBatch(chosen.join(q, "qid"), Probe(index, nprobe), k, sorted = true)
   }
 
   /** Persist an IVF index as cluster-partitioned Parquet plus a
@@ -2991,8 +2979,7 @@ object Similarity {
     val txt = readSidecar(spark, s"$path/centroids.json").getOrElse(
       throw new IllegalArgumentException(
         s"ivfLoadQuantizer($path): no centroids.json sidecar there"))
-    val k = "\"k\":(\\d+)".r.findFirstMatchIn(txt).get.group(1).toInt
-    (sidecarEntries(txt), k)
+    (sidecarEntries(txt), intField(txt, "k"))
   }
 
   /** (id, [values]) entry parser shared by the centroid and hierarchy
@@ -3359,9 +3346,7 @@ object Similarity {
       knownRows: Option[Long] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val typed = emb
-      .select(F.col("id").cast("long"), F.col("vec").cast("array<double>"))
-      .select($"id".as[Long], $"vec".as[Array[Double]])
+    val typed = idVec(emb).select($"id".as[Long], $"vec".as[Array[Double]])
     requireExactPairsBound(typed, maxRows, "cosineNearDupPairs",
       "KnnGraph.epsKnnEdges(eps = 1 - threshold) for candidates, then the exact cosine refine",
       knownRows)
@@ -3534,8 +3519,8 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     assigned.count() // materialize before releasing the bare index
     ivfRelease(index)
-    hardNegativesProbed(assigned, index.centroids, index.hier,
-      queries, k, np, release = Seq(assigned))
+    hardNegativesProbed(assigned, index, queries, k, np,
+      release = Seq(assigned))
   }
 
   /** Size-routed IVF build: flat [[ivfBuild]] up to 128 lists,
@@ -3584,37 +3569,30 @@ object Similarity {
     // same fraction-matched default as the one-shot: the prebuilt
     // index's list count already encodes the corpus size
     val np = if (nprobe > 0) nprobe else suggestNprobe(index.k)
-    hardNegativesProbed(assigned, index.centroids, index.hier,
-      queries, k, np, release = Seq.empty)
+    hardNegativesProbed(assigned, index, queries, k, np,
+      release = Seq.empty)
   }
 
   /** Shared probe→filter→score→top-k core of both
     * [[hardNegativesApprox]] overloads (one fits its own quantizer,
     * one reuses an [[IvfIndex]]) — single code path, schemes can't
-    * drift. Releases `release` after materializing the bounded (Q×k)
-    * result via localCheckpoint.
+    * drift. `assigned` is `index`'s lists with labels; the query label
+    * rides through the shared [[fanOut]]. Releases `release` after
+    * materializing the bounded (Q×k) result via localCheckpoint.
     */
   private def hardNegativesProbed(
-      assigned: DataFrame, centroids: Array[(Int, Array[Double])],
-      hier: Option[TwoLevelHier],
+      assigned: DataFrame, index: IvfIndex,
       queries: DataFrame, k: Int, nprobe: Int,
       release: Seq[DataFrame]): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(nprobe > 0 && nprobe <= centroids.length,
-      s"need 0 < nprobe <= nLists; got nprobe=$nprobe " +
-        s"nLists=${centroids.length}")
+    requireRawCut(index, k, nprobe)
     val spark = assigned.sparkSession
     import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcH = spark.sparkContext.broadcast(hier)
-    val probed = queries
-      .select(F.col("qid").cast("long"), F.col("qvec").cast("array<double>"),
-        F.col("qlabel").cast("string"))
-      .as[(Long, Array[Double], String)]
-      .flatMap { case (qid, qv, ql) =>
-        autoProbesFor(bcC.value, bcH.value, qv, nprobe)
-          .map(c => (qid, c, qv, ql))
-      }
+    val probed = fanOut(
+        queries.select(F.col("qid").cast("long"),
+            F.col("qvec").cast("array<double>"), F.col("qlabel").cast("string"))
+          .as[(Long, Array[Double], String)],
+        (q: (Long, Array[Double], String)) => (q._1, q._2), ivfDims(index),
+        quantizer(index), nprobe)(q => (l, _) => (q._1, l, q._2, q._3))
       .toDF("qid", "cluster", "qvec", "qlabel")
     val scored = probed
       .join(assigned, "cluster")
@@ -3659,10 +3637,8 @@ object Similarity {
       a: DataFrame, b: DataFrame, k: Int = 4, threshold: Double = 1.0,
       maxRows: Long = 100000L): DataFrame = {
     require(k > 0, s"k must be positive; got $k")
-    val sa = a.select(F.col("id").cast("long").as("id_a"),
-      F.col("vec").cast("array<double>").as("va"))
-    val sb = b.select(F.col("id").cast("long").as("id_b"),
-      F.col("vec").cast("array<double>").as("vb"))
+    val sa = idVec(a).toDF("id_a", "va")
+    val sb = idVec(b).toDF("id_b", "vb")
     requireExactPairsBound(
       sa.unionByName(sb.toDF("id_a", "va")), maxRows, "bitextMine",
       "ivfTopKBatch forward/backward candidate lists, then the same margin refine",
@@ -3738,11 +3714,11 @@ object Similarity {
     // 16 probes over auto-sized ~40-row lists (the committed fine-list
     // operating point — ~640 scored rows/query) vs the historical 12
     // over an explicit flat index whose list size the caller chose.
-    val np = if (nprobe > 0) nprobe else if (nLists > 0) 12 else 16
-    val sa = a.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val sb = b.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
+    // An explicit nLists below 12 clamps the default to every list
+    // (the same probe set: a probe selection stops at nLists lists).
+    val np =
+      if (nprobe > 0) nprobe else if (nLists > 0) math.min(12, nLists) else 16
+    val (sa, sb) = (idVec(a), idVec(b))
     // nLists = 0 (the default) sizes each side's lists to ITS corpus
     // at FINE granularity (~40-row lists, [[suggestLists]]): scored
     // candidate volume is the measured cost driver of the mining rows
@@ -3783,11 +3759,6 @@ object Similarity {
   def bitextMineApprox(
       idxA: IvfIndex, idxB: IvfIndex, a: DataFrame, b: DataFrame,
       k: Int, threshold: Double, nprobe: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    val sa = a.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val sb = b.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
     // scale-trap guard (VERDICT r10 "what's wrong" #4): a re-mine's
     // scored-pair budget is nprobe · meanListSize per query, so a
     // prebuilt index at coarse default sizing (~1250-row lists) costs
@@ -3808,32 +3779,11 @@ object Similarity {
               s"$FineMineListTarget) (one fit, then every re-mine is " +
               "probe-bounded and hierarchically routed).")
       }
-      check("idxA", idxA, sa.count())
-      check("idxB", idxB, sb.count())
+      check("idxA", idxA, a.count())
+      check("idxB", idxB, b.count())
     }
-    val qa = sa.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-    val qb = sb.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-    // persist (NOT localCheckpoint): each list feeds both a denominator
-    // aggregate and the candidate union, but persist is releasable in
-    // the finally below — a checkpoint here would pin |a|·k + |b|·k
-    // rows of dead blocks for the rest of the session (the
-    // accumulation failure VERDICT r7 #2 diagnosed). Bounded by
-    // construction: ≤ |a|·k and ≤ |b|·k rows.
-    val fwd = ivfTopKBatch(idxB, qa, k, nprobe)
-      .select(F.col("qid").as("id_a"), F.col("id").as("id_b"),
-        F.col("score").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bwd = ivfTopKBatch(idxA, qb, k, nprobe)
-      .select(F.col("id").as("id_a"), F.col("qid").as("id_b"),
-        F.col("score").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try marginFromLists(fwd, bwd, threshold)
-    finally {
-      // the candidate lists are ours; the indexes are the CALLER's
-      // (the one-shot overload releases the ones it built)
-      fwd.unpersist(blocking = false)
-      bwd.unpersist(blocking = false)
-    }
+    mineBitext(idxA, idxB, a, b, threshold)(
+      (idx, _, qs) => ivfTopKBatch(idx, qs, k, nprobe))
   }
 
   /** [[bitextMineApprox]]'s prebuilt-index overload with HIERARCHICAL
@@ -3849,31 +3799,35 @@ object Similarity {
   def bitextMineApproxHier(
       idxA: IvfIndex, idxB: IvfIndex, a: DataFrame, b: DataFrame,
       k: Int, threshold: Double, nprobe: Int,
-      coarseCells: Int = 4): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    requireHier(idxA, "bitextMineApproxHier")
-    requireHier(idxB, "bitextMineApproxHier")
-    val sa = a.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val sb = b.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val qa = sa.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-    val qb = sb.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-    // persist (NOT localCheckpoint) — same rationale as the flat
-    // prebuilt overload: bounded lists, releasable in the finally
-    val fwd = ivfTopKBatchHier(idxB, qa, k, nprobe, coarseCells)
-      .select(F.col("qid").as("id_a"), F.col("id").as("id_b"),
-        F.col("score").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bwd = ivfTopKBatchHier(idxA, qb, k, nprobe, coarseCells)
-      .select(F.col("id").as("id_a"), F.col("qid").as("id_b"),
-        F.col("score").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      coarseCells: Int = 4): DataFrame =
+    mineBitext(idxA, idxB, a, b, threshold)(
+      (idx, _, qs) => ivfTopKBatchHier(idx, qs, k, nprobe, coarseCells))
+
+  /** The retrieve-then-margin body of every prebuilt bitext mine: cast
+    * both sides, retrieve the forward lists (each a against `idxB`) and
+    * the backward lists (each b against `idxA`) with `topK(index, the
+    * indexed side's rows, (qid, qvec) queries)`, then the shared
+    * [[marginFromLists]]. The lists are persisted, NOT localCheckpoint:
+    * each feeds both a denominator aggregate and the candidate union,
+    * and persist is releasable in the finally — a checkpoint would pin
+    * |a|·k + |b|·k rows of dead blocks for the rest of the session (the
+    * accumulation failure VERDICT r7 #2 diagnosed). The indexes are the
+    * CALLER's; only the lists are released here.
+    */
+  private def mineBitext[I](
+      idxA: I, idxB: I, a: DataFrame, b: DataFrame, threshold: Double)(
+      topK: (I, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val (sa, sb) = (idVec(a), idVec(b))
+    def asQueries(side: DataFrame) =
+      side.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
+    val fwd = topK(idxB, sb, asQueries(sa)).select(F.col("qid").as("id_a"),
+      F.col("id").as("id_b"), F.col("score").as("cos"))
+    val bwd = topK(idxA, sa, asQueries(sb)).select(F.col("id").as("id_a"),
+      F.col("qid").as("id_b"), F.col("score").as("cos"))
+    val lists = Seq(fwd, bwd)
+    lists.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try marginFromLists(fwd, bwd, threshold)
-    finally {
-      fwd.unpersist(blocking = false)
-      bwd.unpersist(blocking = false)
-    }
+    finally lists.foreach(_.unpersist(blocking = false))
   }
 
   /** Shared CCMatrix margin/argmax stage of [[bitextMineApprox]] and
@@ -3933,10 +3887,7 @@ object Similarity {
       a: DataFrame, b: DataFrame, k: Int = 4, threshold: Double = 1.0,
       nLists: Int = 16, nprobe: Int = 12, m: Int = 8, ksub: Int = 64,
       rerank: Int = 64): DataFrame = {
-    val sa = a.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val sb = b.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
+    val (sa, sb) = (idVec(a), idVec(b))
     val idxB = ivfBuild(sb, nLists)
     val idxA = ivfBuild(sa, nLists)
     val pqB = pqBuild(sb, m, ksub)
@@ -3958,30 +3909,9 @@ object Similarity {
   def bitextMinePq(
       idxA: IvfIndex, idxB: IvfIndex, pqA: PqIndex, pqB: PqIndex,
       a: DataFrame, b: DataFrame, k: Int, threshold: Double, nprobe: Int,
-      rerank: Int): DataFrame = {
-    require(k > 0, s"k must be positive; got $k")
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val sa = a.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val sb = b.select(F.col("id").cast("long").as("id"),
-      F.col("vec").cast("array<double>").as("vec"))
-    val qa = sa.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-    val qb = sb.select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-    // persist (NOT localCheckpoint) — same rationale as
-    // bitextMineApprox: each list feeds a denominator aggregate and
-    // the candidate union, and persist is releasable in the finally
-    val fwd = ivfPqTopKBatch(idxB, pqB, sb, qa, k, nprobe, rerank)
-      .select(F.col("qid").as("id_a"), F.col("id").as("id_b"),
-        F.col("score").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bwd = ivfPqTopKBatch(idxA, pqA, sa, qb, k, nprobe, rerank)
-      .select(F.col("id").as("id_a"), F.col("qid").as("id_b"),
-        F.col("score").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try marginFromLists(fwd, bwd, threshold)
-    finally {
-      fwd.unpersist(blocking = false)
-      bwd.unpersist(blocking = false)
+      rerank: Int): DataFrame =
+    mineBitext((idxA, pqA), (idxB, pqB), a, b, threshold) {
+      case ((idx, pq), side, qs) =>
+        ivfPqTopKBatch(idx, pq, side, qs, k, nprobe, rerank)
     }
-  }
 }

@@ -820,9 +820,10 @@ object StreamingOps {
     F.round(graft.functions.VectorFunctions.cosine(a, b), 4)
 
   /** One within-batch survivor's probe rows (bid, bcode, blo, bhi,
-    * berr, cluster): its `np` nearest lists by (cosine distance, list
-    * id), each carrying the vector's per-row scalar-SQ8 codes and
-    * exact error bound. Every ADMITTED row flows through here before
+    * berr, cluster): its `np` nearest lists (the flat
+    * [[graft.operators.Similarity.probesFor]] selection), each
+    * carrying the vector's per-row scalar-SQ8 codes and exact error
+    * bound. Every ADMITTED row flows through here before
     * any write, so this is the gate's dims guard: the cosine kernel
     * silently truncates to the shorter operand, and a mismatched
     * vector would otherwise get a wrong verdict AND poison the
@@ -834,12 +835,7 @@ object StreamingOps {
     require(v.length == dims,
       s"vector $i has ${v.length} dims but the gate's index was " +
         s"built for $dims")
-    val probes = cent
-      .map { case (c, cv) =>
-        (c, 1.0 - graft.functions.VectorKernels.cosine(v, cv))
-      }
-      .sortBy { case (c, d) => (d, c) }
-      .take(np).map(_._1)
+    val probes = graft.operators.Similarity.probesFor(cent, v, np)
     val (codes, lo, hi, err) = graft.functions.Sq8Kernels.encodeScalar(v)
     probes.map(c => (i, codes, lo, hi, err, c))
   }
@@ -1757,22 +1753,21 @@ object StreamingOps {
       nprobe: Int,
       outPath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    graft.operators.Similarity.requireRawCut(index, k, nprobe)
     val spark = queries.sparkSession
     import spark.implicits._
-    val bcCentroids =
-      spark.sparkContext.broadcast(index.centroids)
-    // hierarchy broadcast created once too: a two-level index serves
-    // micro-batches with hierarchical probe selection (same routing as
-    // the batch face — stream/batch parity holds either way)
-    val bcHier = spark.sparkContext.broadcast(index.hier)
+    // the quantizer (centroids + hierarchy) is broadcast once: a
+    // two-level index serves micro-batches with hierarchical probe
+    // selection (same routing as the batch face — stream/batch parity
+    // holds either way)
+    val qz = graft.operators.Similarity.quantizer(index)
     queries
       .select($"qid".cast("long").as("qid"),
         $"qvec".cast("array<double>").as("qvec"))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.Similarity
-          .ivfTopKBatchImpl(index, bcCentroids, bcHier, batch, k, nprobe,
-            sorted = false)
+          .rawTopKBatch(index, batch, k, nprobe, qz = Some(qz), sorted = false)
           .write.mode("append").parquet(outPath)
       }
       .option("checkpointLocation", checkpoint)
@@ -1809,17 +1804,15 @@ object StreamingOps {
       s"reloadEveryBatches must be positive; got $reloadEveryBatches")
     val spark = queries.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     var index = graft.operators.Similarity.ivfLoad(spark, indexPath)
-    var bcCentroids = sc.broadcast(index.centroids)
-    var bcHier = sc.broadcast(index.hier)
+    graft.operators.Similarity.requireRawCut(index, k, nprobe)
+    var qz = graft.operators.Similarity.quantizer(index)
     var sinceReload = 0
     def reload(): Unit = {
       index = graft.operators.Similarity.ivfLoad(spark, indexPath)
-      val oldC = bcCentroids; val oldH = bcHier
-      bcCentroids = sc.broadcast(index.centroids)
-      bcHier = sc.broadcast(index.hier)
-      oldC.destroy(); oldH.destroy()
+      val old = qz
+      qz = graft.operators.Similarity.quantizer(index)
+      old.destroy()
       sinceReload = 0
     }
     queries
@@ -1831,8 +1824,7 @@ object StreamingOps {
           if (sinceReload >= reloadEveryBatches) reload()
           sinceReload += 1
           graft.operators.Similarity
-            .ivfTopKBatchImpl(index, bcCentroids, bcHier, batch, k, nprobe,
-              sorted = false)
+            .rawTopKBatch(index, batch, k, nprobe, qz = Some(qz), sorted = false)
             .write.mode("append").parquet(outPath)
         }
         try attempt()

@@ -244,7 +244,7 @@ class PlanShapeSpec extends SparkSpec {
   test("every IVF codec face: list filter/join below the approx score, no cartesian; batch cut before any id shuffle") {
     import org.apache.spark.sql.catalyst.expressions.{In, InSet}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, CartesianProductExec}
@@ -262,6 +262,9 @@ class PlanShapeSpec extends SparkSpec {
     val pq = Similarity.pqBuild(emb, m = 4, ksub = 16)
     val pqr = Similarity.pqResidualBuild(ivf, m = 4, ksub = 16)
     val res = Similarity.binaryResidualEncode(ivf)
+    val two = Similarity.ivfBuildTwoLevel(emb, nLists = 4)
+    val meta = emb.select(F.col("id"), (F.col("id") % 2).as("lab"))
+    val pred = F.col("lab") === 0L
     try {
       val q = Array.tabulate(16)(f => math.sin(0.9 + f * 0.4))
       val qs = emb.where(F.col("id") < 3)
@@ -278,7 +281,12 @@ class PlanShapeSpec extends SparkSpec {
           "bit_count"),
         ("ivfBinaryResidualTopK",
           Similarity.ivfBinaryResidualTopK(ivf, res, emb, q, 5, 2, 20),
-          "bit_count"))
+          "bit_count"),
+        // the raw faces score the exact vectors inside the probed scan
+        ("ivfTopK", Similarity.ivfTopK(ivf, q, 5, 2), "graft_cosine"),
+        ("ivfTopKWhere", Similarity.ivfTopKWhere(ivf, meta, pred, q, 5, 2),
+          "graft_cosine"),
+        ("ivfTopKHier", Similarity.ivfTopKHier(two, q, 5, 2), "graft_cosine"))
       val batches = Seq(
         ("ivfSq8TopKBatch", Similarity.ivfSq8TopKBatch(ivf, sq8, emb, qs, 5, 2, 20),
           "graft_sq8_cosine"),
@@ -291,6 +299,13 @@ class PlanShapeSpec extends SparkSpec {
         ("ivfBinaryResidualTopKBatch",
           Similarity.ivfBinaryResidualTopKBatch(ivf, res, emb, qs, 5, 2, 20),
           "bit_count"))
+      val rawBatches = Seq(
+        ("ivfTopKBatch", Similarity.ivfTopKBatch(ivf, qs, 5, 2), "graft_cosine"),
+        ("ivfTopKBatchWhere", Similarity.ivfTopKBatchWhere(ivf, meta, pred, qs, 5, 2),
+          "graft_cosine"),
+        ("ivfTopKBatchHier", Similarity.ivfTopKBatchHier(two, qs, 5, 2), "graft_cosine"),
+        ("ivfTopKBatchHierSharded", Similarity.ivfTopKBatchHierSharded(two, qs, 5, 2),
+          "graft_cosine"))
       def physical(df: org.apache.spark.sql.DataFrame): SparkPlan =
         df.queryExecution.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -307,11 +322,16 @@ class PlanShapeSpec extends SparkSpec {
         }
         case _ => false
       }
-      for ((name, df, kernel) <- singles ++ batches) {
+      // the nodes scoring the DATA side: the approx kernel over the codes,
+      // or the exact kernel over the lists' `vec` (not the sharded face's
+      // probe-side sub-center scoring)
+      def scorersOf(plan: SparkPlan, kernel: String) = plan.collect {
+        case n if n.expressions.exists(_.exists(x => x.prettyName == kernel &&
+          (kernel != "graft_cosine" || x.references.exists(_.name == "vec")))) => n
+      }
+      for ((name, df, kernel) <- singles ++ batches ++ rawBatches) {
         val plan = physical(df)
-        val scorers = plan.collect {
-          case n if n.expressions.exists(_.toString.contains(kernel)) => n
-        }
+        val scorers = scorersOf(plan, kernel)
         assert(scorers.nonEmpty, s"$name: no $kernel in\n$plan")
         // WHICH rows: the probed-list bound sits under every node that
         // evaluates the approx kernel — never a full codes scan
@@ -320,7 +340,14 @@ class PlanShapeSpec extends SparkSpec {
         assert(plan.collect { case c: CartesianProductExec => c }.isEmpty,
           s"$name: cartesian product\n$plan")
       }
-      for ((name, df, _) <- batches) {
+      // no rerank join on a raw batch face: ONE projection computes the
+      // score (the scan's join may re-evaluate it as a not-null filter)
+      for ((name, df, kernel) <- rawBatches) {
+        val plan = physical(df)
+        val scoring = scorersOf(plan, kernel).collect { case p: ProjectExec => p }
+        assert(scoring.size == 1, s"$name: scored by ${scoring.size} projections\n$plan")
+      }
+      for ((name, df, _) <- batches ++ rawBatches) {
         val plan = physical(df)
         // the candidate cut is the innermost group limit; nothing under
         // it may shuffle (qid, id) candidate rows by id
@@ -347,6 +374,7 @@ class PlanShapeSpec extends SparkSpec {
       Similarity.pqRelease(pq)
       Similarity.pqResidualRelease(pqr)
       Similarity.binaryResidualRelease(res)
+      Similarity.ivfRelease(two)
     }
   }
 

@@ -18,6 +18,23 @@ class SimilaritySpec extends SparkSpec {
   lazy val query: Array[Double] =
     emb.where(F.col("id") === 11).select("vec").head.getSeq[Double](0).toArray
 
+  /** The IllegalArgumentException a guarded call throws, if any. A guard
+    * may fire eagerly at the call or, for batch faces, inside the
+    * executor flatMap (then the task failure wraps it), so a returned
+    * frame is collected. */
+  private def rejects(thunk: => Any): Option[Throwable] =
+    try {
+      thunk match {
+        case df: org.apache.spark.sql.DataFrame => df.collect()
+        case _ =>
+      }
+      None
+    } catch {
+      case e: Throwable =>
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .find(_.isInstanceOf[IllegalArgumentException])
+    }
+
   test("exact all-pairs operators gate on the measured row count") {
     // under the bound: all three run
     assert(Similarity.topCosinePairs(emb, 5).count() == 5L)
@@ -2135,15 +2152,6 @@ class SimilaritySpec extends SparkSpec {
           Similarity.ivfBinaryResidualTopKBatchTieAware(
             ivf, res, corpus, qs(q), k, p, r)))
       val good = Array.tabulate(dims)(f => math.cos(f * 0.3))
-      // a guard may fire eagerly at the call or, for batch faces, inside
-      // the executor flatMap (then the task failure wraps it)
-      def rejects(thunk: => org.apache.spark.sql.DataFrame): Option[Throwable] =
-        try { thunk.collect(); None }
-        catch {
-          case e: Throwable =>
-            Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-              .find(_.isInstanceOf[IllegalArgumentException])
-        }
       val rows = flat.map { case (n, f) => (n, f, false) } ++
         probed.map { case (n, f) => (n, f, true) }
       // every (face, guard) miss is listed, not just the first
@@ -2165,6 +2173,88 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       Similarity.ivfRelease(ivf)
       Similarity.opqRelease(opq)
+    }
+  }
+
+  test("raw IVF guard table: k, nprobe and query dims throw on every raw face, miner and serve loop") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dims = 8
+    val corpus = (0L until 96L).map(i =>
+      (i, Array.tabulate(dims)(f => math.sin(i * 0.37 + f * 0.9)))).toDF("id", "vec")
+    val meta = corpus.select(F.col("id"), (F.col("id") % 2).as("lab"))
+    val pred = F.col("lab") === 0L
+    val labels = corpus.select(F.col("id"), (F.col("id") % 3).cast("string").as("label"))
+    val ivf = Similarity.ivfBuild(corpus, nLists = 4)
+    val two = Similarity.ivfBuildTwoLevel(corpus, nLists = 4)
+    val pq = Similarity.pqBuild(corpus, m = 2, ksub = 8, persist = false)
+    val dir = java.nio.file.Files.createTempDirectory("graft_rawguard").toString
+    Similarity.ivfSave(ivf, dir + "/idx")
+    try {
+      def qs(q: Array[Double]) = Seq((7L, q)).toDF("qid", "qvec")
+      def side(q: Array[Double]) = Seq((7L, q)).toDF("id", "vec")
+      // (k, nprobe, query) => the face's output frame; the flag marks a
+      // face whose nprobe = 0 means "the sizing-matched default"
+      type Face = (Int, Int, Array[Double]) => org.apache.spark.sql.DataFrame
+      val faces: Seq[(String, Boolean, Face)] = Seq(
+        ("ivfTopK", false, (k, p, q) => Similarity.ivfTopK(ivf, q, k, p)),
+        ("ivfTopKWhere", false, (k, p, q) =>
+          Similarity.ivfTopKWhere(ivf, meta, pred, q, k, p)),
+        ("ivfTopKHier", false, (k, p, q) => Similarity.ivfTopKHier(two, q, k, p)),
+        ("ivfTopKBatch", false, (k, p, q) => Similarity.ivfTopKBatch(ivf, qs(q), k, p)),
+        ("ivfTopKBatchWhere", false, (k, p, q) =>
+          Similarity.ivfTopKBatchWhere(ivf, meta, pred, qs(q), k, p)),
+        ("ivfTopKBatchHier", false, (k, p, q) =>
+          Similarity.ivfTopKBatchHier(two, qs(q), k, p)),
+        ("ivfTopKBatchHierSharded", false, (k, p, q) =>
+          Similarity.ivfTopKBatchHierSharded(two, qs(q), k, p)),
+        ("hardNegativesApprox(index)", true, (k, p, q) =>
+          Similarity.hardNegativesApprox(ivf, labels,
+            qs(q).withColumn("qlabel", F.lit("0")), k, p)),
+        ("bitextMineApprox(prebuilt)", false, (k, p, q) =>
+          Similarity.bitextMineApprox(ivf, ivf, side(q), corpus, k, 0.0, p)),
+        ("bitextMineApproxHier", false, (k, p, q) =>
+          Similarity.bitextMineApproxHier(two, two, side(q), corpus, k, 0.0, p)),
+        ("bitextMinePq(prebuilt)", false, (k, p, q) =>
+          Similarity.bitextMinePq(ivf, ivf, pq, pq, side(q), corpus, k, 0.0, p, 10)))
+      val good = Array.tabulate(dims)(f => math.cos(f * 0.3))
+      val wrongDims = s"has ${dims - 1} dims but index was encoded for $dims"
+      val misses = faces.flatMap { case (name, zeroIsDefault, face) =>
+        assert(rejects(face(3, 2, good)).isEmpty, s"$name: valid call threw")
+        val guards = Seq[(String, () => Boolean)](
+          ("k = 0", () => rejects(face(0, 2, good)).isDefined),
+          ("nprobe > nLists", () => rejects(face(3, ivf.k + 1, good)).isDefined),
+          ("wrong dims", () => rejects(face(3, 2, good.init))
+            .exists(_.getMessage.contains(wrongDims)))) ++
+          (if (zeroIsDefault) Nil
+           else Seq[(String, () => Boolean)](
+             ("nprobe = 0", () => rejects(face(3, 0, good)).isDefined)))
+        guards.collect { case (guard, holds) if !holds() => s"$name: $guard accepted" }
+      }
+      // the serve loops refuse before start(): no query may be running
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Array[Double])]
+      val src = in.toDF().toDF("qid", "qvec")
+      val streams: Seq[(String, (Int, Int) => Any)] = Seq(
+        ("ivfQueryStream(index)", (k, p) => graft.streaming.StreamingOps.ivfQueryStream(
+          src, ivf, k, p, dir + "/out1", dir + "/ck1")),
+        ("ivfQueryStream(path)", (k, p) => graft.streaming.StreamingOps.ivfQueryStream(
+          src, dir + "/idx", k, p, dir + "/out2", dir + "/ck2", 1)))
+      val streamMisses = streams.flatMap { case (name, start) =>
+        Seq(("k = 0", 0, 2), ("nprobe = 0", 3, 0), ("nprobe > nLists", 3, ivf.k + 1))
+          .collect { case (guard, k, p) if rejects(start(k, p)).isEmpty =>
+            s"$name: $guard accepted" }
+      }
+      val started = s.streams.active.length
+      s.streams.active.foreach(_.stop())
+      val all = misses ++ streamMisses ++
+        (if (started > 0) Seq(s"$started serve loops started") else Nil)
+      assert(all.isEmpty, all.mkString("\n"))
+    } finally {
+      s.streams.active.foreach(_.stop())
+      Similarity.ivfRelease(ivf)
+      Similarity.ivfRelease(two)
     }
   }
 }
