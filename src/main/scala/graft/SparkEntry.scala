@@ -1,238 +1,19 @@
 package graft
 
-import graft.api.{ArrowSpaceBuilder, ArrowSpaceModel}
-import graft.core.GraphParams
-import graft.operators.{BloomJoin, Dedup, FuzzyJoin, Similarity, TextOps, TrainPrep}
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import graft.queries._
+import graft.queries.QueryLib.{model, queryVec}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import scala.collection.concurrent.TrieMap
-
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The Verify contract (the build plan is SURVEY.md §7).
   *
-  * Every operator from SURVEY.md §2 that is implemented has a
-  * `queries` entry; queries whose semantics are ANSI-SQL-expressible
-  * also have an `oracleSql` entry (DuckDB syntax) over the same
-  * parquet tables. Column names and rounding are aligned on both
-  * sides because the driver's compare hashes values after sorting
-  * columns by name.
+  * Every operator from SURVEY.md §2 that is implemented has a Verify
+  * query, and every query carries its DuckDB oracle over the same
+  * parquet tables: one [[graft.queries.QuerySpec]] per query, kept in
+  * one file per name prefix under `graft/queries/` (`q*` relational,
+  * `a_` index, `v_` vector, `d_` curation, `t_` text, `g_` graph,
+  * `m_`/`mm_` metrics and multimodal, `p_` profile, `s_` streaming).
   */
 object SparkEntry {
-
-  // ---------------------------------------------------------------- loaders
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events.parquet has shipped with two `ts` layouts: TIMESTAMP(NANOS)
-    * (which Spark 4 rejects at schema inference unless the legacy
-    * nanos-as-long conf maps it to BIGINT) and, since the 2026-08
-    * testdata refresh, plain TIMESTAMP(MICROS). EVERY events read goes
-    * through here so the conf is always set BEFORE inference (a query
-    * must never depend on an earlier query in the run having set it)
-    * and so both layouts resolve — the raw frame exposes `ts` as BIGINT
-    * nanos or as a timestamp depending on the file; time arithmetic
-    * belongs on [[eventsUs]], which normalizes the difference.
-    */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tbl(s, dir, "events")
-  }
-
-  /** events with `ts` normalized to an exact microsecond TIMESTAMP
-    * regardless of the file layout:
-    *  - BIGINT nanos → integer `div 1000`, NOT `/ 1000` — Divide
-    *    promotes the ~1.7e18 nanos to double (above 2^53), losing up
-    *    to ~128 ns before the cast, so values near hour/session/range
-    *    boundaries would disagree with the oracle's exact arithmetic;
-    *  - TIMESTAMP_NTZ (micros files) → cast to TIMESTAMP, exact under
-    *    the UTC session timezone Verify pins;
-    *  - TIMESTAMP → already what downstream `cast("long")` epoch
-    *    arithmetic expects.
-    */
-  private def eventsUs(s: SparkSession, dir: String): DataFrame = {
-    val raw = events(s, dir)
-    val tsCol = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        F.timestamp_micros(F.expr("ts div 1000"))
-      case _ => F.col("ts").cast("timestamp")
-    }
-    raw.withColumn("ts", tsCol)
-  }
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    graft.sources.CorpusSources.documents(s, s"$dir/documents.parquet")
-
-  /** Orders projected to the CDC demo payload (q_merge_upsert /
-    * q_scd2_history share it with their oracles).
-    */
-  private def ordersSnapshot(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
-      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-
-  /** Deterministic changelog over [[ordersSnapshot]]: deletes on
-    * %10=7, a seq-1 update superseded by a seq-2 update on %10=4, a
-    * seq-2 update on %10=1, inserts at shifted keys on %10=2.
-    */
-  private def ordersChangelog(s: SparkSession, dir: String): DataFrame = {
-    val snap = ordersSnapshot(s, dir)
-    val k = F.col("o_orderkey")
-    def ch(df: DataFrame, op: String, seq: Long): DataFrame =
-      df.withColumn("op", F.lit(op)).withColumn("seq", F.lit(seq))
-    val del = ch(snap.where(k % 10 === 7), "D", 1L)
-    val updLost = ch(
-      snap.where(k % 10 === 4)
-        .withColumn("o_totalprice", F.round(F.col("o_totalprice") * 2, 4)),
-      "U", 1L)
-    val updWin = ch(
-      snap.where(k % 10 === 1 || k % 10 === 4)
-        .withColumn("o_totalprice", F.round(F.col("o_totalprice") * 1.1, 4)),
-      "U", 2L)
-    val ins = ch(
-      snap.where(k % 10 === 2).withColumn("o_orderkey", k + 1000000L),
-      "I", 1L)
-    del.unionByName(updLost).unionByName(updWin).unionByName(ins)
-  }
-
-  /** embeddings normalized to the engine schema (id, vec). */
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    graft.sources.CorpusSources.embeddings(s, s"$dir/embeddings.parquet")
-
-  /** Shared protocol of the four codec takedown rows, pinned to ONE
-    * implementation exactly like their shared oracle SQL
-    * (`takedownSurvivorsSql` — query vec id 1, %5==0 removal, search
-    * at the degenerate rerank-covers-corpus point): build+save the
-    * family's layout, `codesLayoutRemove`, reload-and-search. The
-    * family differs only in its (save, search) pair. */
-  /** Shared machinery of the two semantic-gate oracle rows (fold-free
-    * stream and live-compaction variant — same replay SQL,
-    * `embedGateReplaySql`): a ONE-list layout over the decade anchors
-    * makes probing a full state scan and within-batch blocking
-    * all-pairs (the exact degenerate point), and duplicates are
-    * planted by pure id arithmetic with POWER-OF-TWO scales so the
-    * feed values are bit-identical in both engines. donor(name, off)
-    * keys the join so feed row `id` matches donor row `id + off`
-    * (anchor = id-1, batch-1 donor = id+3, within-batch twin's donor
-    * = id-37, batch-2 donor = id+2). */
-  private def embedGateRow(compact: Boolean)
-      : (SparkSession, String) => DataFrame = (s, d) => {
-    import s.implicits._
-    val e = emb(s, d)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_segate_idx").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_segate_out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_segate_ckpt").toString
-    val built = Similarity.ivfBuild(
-      e.where(F.col("id") % 10 === 0), nLists = 1)
-    Similarity.ivfSave(built, dir)
-    Similarity.ivfRelease(built)
-    def donor(name: String, off: Int) = e.select(
-      (F.col("id") - off).as(s"did_$name"), F.col("vec").as(s"dv_$name"))
-    def sc(c: org.apache.spark.sql.Column, k: Double) =
-      F.transform(c, x => x * k)
-    val dd = F.expr("id div 10")
-    val feed = e.where(F.col("id") % 10 >= 1 && F.col("id") % 10 <= 3)
-      .withColumn("b", F.col("id") % 10)
-      .join(donor("a", -1), F.col("id") === F.col("did_a"), "left")
-      .join(donor("w", 3), F.col("id") === F.col("did_w"), "left")
-      .join(donor("l", -37), F.col("id") === F.col("did_l"), "left")
-      .join(donor("x", 2), F.col("id") === F.col("did_x"), "left")
-      .withColumn("fv",
-        F.when(F.col("b") === 1 && dd % 4 === 1 &&
-            F.col("dv_a").isNotNull, sc(F.col("dv_a"), 2.0))
-          .when(F.col("b") === 1 && dd % 8 === 3 &&
-            F.col("dv_w").isNotNull, sc(F.col("dv_w"), 2.0))
-          .when(F.col("b") === 1 && dd % 8 === 7 &&
-            F.col("dv_l").isNotNull, sc(F.col("dv_l"), 4.0))
-          .when(F.col("b") === 2 && dd % 8 === 3 &&
-            F.col("dv_x").isNotNull, sc(F.col("dv_x"), 8.0))
-          .otherwise(F.col("vec")))
-      .select(F.col("id"), F.col("fv"), F.col("b"))
-    val batches = (1 to 3).map(k =>
-      feed.where(F.col("b") === k).select("id", "fv")
-        .as[(Long, Array[Double])].collect().sortBy(_._1))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Double])](s)
-    val q = graft.streaming.StreamingOps.embedGateStream(
-      ms.toDF.toDF("id", "vec"), dir, out, ckpt,
-      cosineThreshold = 0.95, nprobe = 1,
-      compactEverySegs =
-        if (compact) 2
-        else graft.streaming.StreamingOps.defaultCompactEverySegs)
-    try {
-      batches.take(2).foreach { b =>
-        ms.addData(b.toSeq); q.processAllAvailable()
-      }
-      // live-compaction variant: a full fold BETWEEN batches so the
-      // last batch probes folded state (folds must be invisible)
-      if (compact) Similarity.ivfCompactAppends(s, dir)
-      ms.addData(batches(2).toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val qv = e.where(F.col("id") === 4)
-      .select("vec").head.getSeq[Double](0).toArray
-    s.read.parquet(out)
-      .select(F.col("id"),
-        F.round(graft.functions.VectorFunctions.cosine(
-          F.col("vec"), F.typedLit(qv)), 4).as("score"))
-      .orderBy("id")
-      .localCheckpoint()
-  }
-
-  private def codecTakedownRow(
-      tag: String,
-      save: (DataFrame, String) => Unit,
-      search: (SparkSession, String, DataFrame, Array[Double]) => DataFrame)
-      : (SparkSession, String) => DataFrame = (s, d) => {
-    val e = emb(s, d)
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_vtake_$tag").toString
-    save(e, dir)
-    Similarity.codesLayoutRemove(
-      s, dir, e.where(F.col("id") % 5 === 0).select("id"))
-    val qv = e.where(F.col("id") === 1)
-      .select("vec").head.getSeq[Double](0).toArray
-    search(s, dir, e, qv)
-  }
-
-  /** Default index params for the synthetic embeddings: they are
-    * near-orthogonal, so an eps below ~0.6 yields an empty graph —
-    * measure with [[graft.api.ArrowSpaceBuilder.suggestEps]] (README
-    * "choosing eps") before tuning on a new corpus.
-    */
-  private val defaultParams = GraphParams(eps = 1.0, k = 10, topk = 10)
-
-  /** One index build per (sfDir) per JVM: queries a_* share it. */
-  private val modelCache = TrieMap.empty[String, (ArrowSpaceModel, DataFrame)]
-
-  private def model(s: SparkSession, dir: String): (ArrowSpaceModel, DataFrame) =
-    modelCache.getOrElseUpdate(dir, ArrowSpaceBuilder.build(emb(s, dir), defaultParams))
-
-  private val energyCache = TrieMap.empty[String, (ArrowSpaceModel, DataFrame)]
-
-  private def energyModel(s: SparkSession, dir: String): (ArrowSpaceModel, DataFrame) =
-    energyCache.getOrElseUpdate(
-      dir,
-      graft.api.EnergyBuilder.buildEnergy(
-        emb(s, dir), graft.core.EnergyParams(), defaultParams))
-
-  /** Fellegi-Sunter weights for q_entity_resolve — defined ONCE and
-    * interpolated into the oracle SQL so both engines use the exact
-    * same double constants (name: exact-match evidence strong, chance
-    * collision rare; nation ~1/25 chance agreement; segment ~1/5).
-    */
-  private val ErNameW =
-    graft.operators.EntityResolution.FieldWeight("c_name", 0.95, 0.001)
-  private val ErNatW =
-    graft.operators.EntityResolution.FieldWeight("c_nationkey", 0.9, 0.04)
-  private val ErSegW =
-    graft.operators.EntityResolution.FieldWeight("c_mktsegment", 0.9, 0.2)
-
-  /** Deterministic query vector: the embedding with id 0. */
-  private def queryVec(s: SparkSession, dir: String): Array[Double] =
-    emb(s, dir).where(F.col("id") === 0).select("vec").head.getSeq[Double](0).toArray
-
-  // ---------------------------------------------------------------- flagship
 
   /** Flagship: λ-aware taumode top-k on sf0.001 — build O1 + search O3
     * end-to-end. Driver smoke-checks rows > 0.
@@ -243,7847 +24,14 @@ object SparkEntry {
     m.search(queryVec(spark, dir), tau = 0.62)
   }
 
-  // ---------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational surface (Spark built-ins are part of the engine) ----
-    "q1_pricing_summary" -> ((s, d) =>
-      tbl(s, d, "lineitem")
-        .where(F.col("l_shipdate") <= F.lit("1999-12-31"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          F.round(F.sum("l_quantity"), 2).as("sum_qty"),
-          F.round(F.sum("l_extendedprice"), 2).as("sum_base_price"),
-          F.round(F.sum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))), 2).as("sum_disc_price"),
-          F.round(F.avg("l_quantity"), 4).as("avg_qty"),
-          F.round(F.avg("l_discount"), 4).as("avg_disc"),
-          F.count(F.lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "q3_shipping_priority" -> ((s, d) => {
-      val c = tbl(s, d, "customer").where(F.col("c_mktsegment") === "BUILDING")
-      val o = tbl(s, d, "orders")
-      val l = tbl(s, d, "lineitem")
-      c.join(o, F.col("c_custkey") === F.col("o_custkey"))
-        .join(l, F.col("o_orderkey") === F.col("l_orderkey"))
-        .groupBy(
-          F.col("l_orderkey"),
-          F.date_format(F.col("o_orderdate"), "yyyy-MM-dd").as("orderdate"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))), 2).as("revenue"))
-        .orderBy(F.col("revenue").desc, F.col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    "q4_order_priority" -> ((s, d) => {
-      val o = tbl(s, d, "orders")
-      val l = tbl(s, d, "lineitem").select("l_orderkey").distinct()
-      o.join(l, F.col("o_orderkey") === F.col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-
-    "q5_revenue_by_nation" -> ((s, d) => {
-      val r = F.broadcast(tbl(s, d, "region"))
-      val n = F.broadcast(tbl(s, d, "nation"))
-      val c = tbl(s, d, "customer")
-      val o = tbl(s, d, "orders")
-      val l = tbl(s, d, "lineitem")
-      l.join(o, F.col("l_orderkey") === F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") === F.col("c_custkey"))
-        .join(n, F.col("c_nationkey") === F.col("n_nationkey"))
-        .join(r, F.col("n_regionkey") === F.col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))), 2).as("revenue"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    "q6_forecast_revenue" -> ((s, d) =>
-      tbl(s, d, "lineitem")
-        .where(
-          F.col("l_shipdate") >= F.lit("1996-01-01") &&
-            F.col("l_shipdate") < F.lit("1997-01-01") &&
-            F.col("l_discount") >= 0.05 && F.col("l_discount") <= 0.07 &&
-            F.col("l_quantity") < 24)
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).as("revenue"))),
-
-    "q_window_top_customers" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("c_nationkey")
-        .orderBy(F.col("c_acctbal").desc, F.col("c_custkey").asc)
-      tbl(s, d, "customer")
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select(
-          F.col("c_nationkey"), F.col("rk"), F.col("c_custkey"),
-          F.round(F.col("c_acctbal"), 2).as("acctbal"))
-        .orderBy("c_nationkey", "rk")
-    }),
-
-    "q_distinct_part_stats" -> ((s, d) =>
-      tbl(s, d, "part").agg(
-        F.countDistinct("p_brand").as("n_brands"),
-        F.countDistinct("p_type").as("n_types"),
-        F.round(F.avg("p_retailprice"), 4).as("avg_price"),
-        F.round(F.min("p_retailprice"), 2).as("min_price"),
-        F.round(F.max("p_retailprice"), 2).as("max_price"))),
-
-    // bloom-prefiltered SEMI join: the big side (lineitem) is filtered
-    // by a codegen Bloom probe BEFORE any shuffle — only matches + fpp
-    // reach the exact verify join; result is bit-identical to the
-    // plain semi join (oracle = IN-subquery)
-    "q_bloom_semi" -> ((s, d) => {
-      val li = tbl(s, d, "lineitem")
-      val urgent = tbl(s, d, "orders")
-        .where(F.col("o_orderpriority") === "1-URGENT")
-        .select(F.col("o_orderkey").as("l_orderkey"))
-      BloomJoin.semiJoin(li, urgent, "l_orderkey")
-        .groupBy("l_returnflag")
-        .agg(
-          F.round(F.sum("l_extendedprice"), 2).as("revenue"),
-          F.count(F.lit(1)).as("n_items"))
-        .orderBy("l_returnflag")
-    }),
-
-    // bloom-prefiltered ANTI join: probe-failers are definite
-    // non-members and never shuffle; probe-passers take the exact
-    // anti check (oracle = NOT EXISTS)
-    "q_bloom_anti" -> ((s, d) => {
-      // "stale parts": no shipment since 2001 — the recency filter
-      // keeps both legs non-trivial (49 keep / 1951 drop at sf0.01)
-      val p = tbl(s, d, "part")
-      val ordered = tbl(s, d, "lineitem")
-        .where(F.col("l_shipdate") >= F.lit("2001-01-01"))
-        .select(F.col("l_partkey").as("p_partkey"))
-      BloomJoin.antiJoin(p, ordered, "p_partkey")
-        .groupBy("p_brand")
-        .agg(F.count(F.lit(1)).as("n_parts"))
-        .orderBy("p_brand")
-    }),
-
-    "q_customers_without_orders" -> ((s, d) => {
-      val c = tbl(s, d, "customer")
-      val o = tbl(s, d, "orders")
-        .where(F.col("o_orderstatus") === "F")
-        .select("o_custkey").distinct()
-      c.join(o, F.col("c_custkey") === F.col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).as("n_customers"))
-        .orderBy("c_mktsegment")
-    }),
-
-    "q_events_hourly" -> ((s, d) => {
-      eventsUs(s, d)
-        .groupBy(
-          F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          F.col("event_type"))
-        .agg(
-          F.count(F.lit(1)).as("n_events"),
-          F.round(F.sum("value"), 2).as("sum_value"))
-        .where(F.col("n_events") >= 5)
-        .orderBy("hour", "event_type")
-    }),
-
-    // dense per-user hourly grid with forward fill (resample+ffill):
-    // hour rendered as a string so both engines hash identically (same
-    // device as q_events_hourly)
-    "q_resample_gapfill" -> ((s, d) =>
-      graft.operators.TimeSeries.resampleGapFill(
-          eventsUs(s, d).where(F.col("user_id") < 8),
-          keyCol = "user_id", tsCol = "ts", valueCol = "value")
-        .select(
-          F.col("user_id"),
-          F.date_format(F.col("bucket_ts"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          F.col("n_events"), F.col("sum_value"), F.col("filled_value"),
-          F.col("is_gap").cast("int").as("is_gap"))
-        .orderBy("user_id", "hour")),
-
-    // ordered conversion funnel: earliest view, first click strictly
-    // after it, first purchase strictly after that — per user
-    "q_event_funnel" -> ((s, d) =>
-      graft.operators.TimeSeries.funnelStages(
-          eventsUs(s, d), keyCol = "user_id", tsCol = "ts",
-          typeCol = "event_type", stages = Seq("view", "click", "purchase"))
-        .select(
-          F.col("user_id"),
-          F.date_format(F.col("ts_1"), "yyyy-MM-dd HH:mm:ss").as("t_view"),
-          F.date_format(F.col("ts_2"), "yyyy-MM-dd HH:mm:ss").as("t_click"),
-          F.date_format(F.col("ts_3"), "yyyy-MM-dd HH:mm:ss")
-            .as("t_purchase"),
-          F.col("n_stages"))
-        .orderBy("user_id")),
-
-    "q_topk_parts" -> ((s, d) =>
-      tbl(s, d, "part")
-        .select(
-          F.col("p_partkey"), F.col("p_brand"),
-          F.round(F.col("p_retailprice"), 2).as("price"))
-        .orderBy(F.col("price").desc, F.col("p_partkey").asc)
-        .limit(10)),
-
-    "q_ntile_window" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("c_mktsegment").orderBy(F.col("c_acctbal").asc, F.col("c_custkey").asc)
-      tbl(s, d, "customer")
-        .select(
-          F.col("c_mktsegment"), F.col("c_custkey"),
-          F.ntile(4).over(w).as("quartile"),
-          F.round(F.first("c_acctbal").over(w), 2).as("running_min"))
-        .where(F.col("c_custkey") <= 200)
-        .orderBy("c_mktsegment", "c_custkey")
-    }),
-
-    "q_array_fns" -> ((s, d) =>
-      tbl(s, d, "embeddings")
-        .select(
-          F.col("vec_id").as("id"),
-          F.round(F.array_max(F.col("embedding").cast("array<double>")), 4).as("vmax"),
-          F.round(F.array_min(F.col("embedding").cast("array<double>")), 4).as("vmin"),
-          F.size(F.col("embedding")).as("dim"),
-          F.round(F.element_at(F.array_sort(F.col("embedding").cast("array<double>")), 1), 4).as("sorted_first"))
-        .where(F.col("id") <= 50)
-        .orderBy("id")),
-
-    "q_cond_agg" -> ((s, d) =>
-      tbl(s, d, "orders")
-        .agg(
-          F.count_if(F.col("o_orderstatus") === "F").as("n_f"),
-          F.count_if(F.col("o_totalprice") > 100000).as("n_big"),
-          F.round(F.sum(F.when(F.col("o_orderstatus") === "O", F.col("o_totalprice"))
-            .otherwise(0.0)), 2).as("open_total"))),
-
-    "q_sql_correlated" -> ((s, d) => {
-      tbl(s, d, "customer").createOrReplaceTempView("customer_v")
-      tbl(s, d, "orders").createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT c_mktsegment, count(*) AS n_active
-          |FROM customer_v c
-          |WHERE EXISTS (SELECT 1 FROM orders_v o
-          |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin)
-    }),
-
-    "q_corr_stats" -> ((s, d) =>
-      tbl(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          F.round(F.corr("l_quantity", "l_extendedprice"), 4).as("corr_qty_price"),
-          F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).as("covar_qty_price"),
-          F.round(F.stddev_samp("l_extendedprice"), 2).as("std_price"),
-          F.round(F.var_samp("l_discount"), 6).as("var_disc"))
-        .orderBy("l_returnflag")),
-
-    "q_percentiles" -> ((s, d) =>
-      tbl(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
-          F.round(F.expr("percentile(l_extendedprice, 0.9)"), 4).as("p90"),
-          F.round(F.expr("percentile(l_extendedprice, 0.99)"), 4).as("p99"))
-        .orderBy("l_returnflag")),
-
-    "q_moving_avg" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts").rowsBetween(-2, 0)
-      events(s, d)
-        .where(F.col("user_id") <= 20)
-        .select(
-          F.col("user_id"), F.col("event_id"),
-          F.round(F.avg("value").over(w), 4).as("mov_avg"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    "q_rank_events" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("event_type")
-        .orderBy(F.col("value").desc, F.col("event_id").asc)
-      events(s, d)
-        .withColumn("rk", F.rank().over(w))
-        .where(F.col("rk") <= 5)
-        .select(
-          F.col("event_type"), F.col("rk"), F.col("event_id"),
-          F.round(F.col("value"), 4).as("value"))
-        .orderBy("event_type", "rk")
-    }),
-
-    "q_date_parts" -> ((s, d) =>
-      tbl(s, d, "orders")
-        .groupBy(
-          F.year(F.col("o_orderdate")).as("yr"),
-          F.quarter(F.col("o_orderdate")).as("qtr"))
-        .agg(
-          F.count(F.lit(1)).as("n_orders"),
-          F.round(F.sum("o_totalprice"), 2).as("total"))
-        .orderBy("yr", "qtr")),
-
-    "q_string_fns" -> ((s, d) =>
-      tbl(s, d, "part")
-        .select(
-          F.col("p_partkey"),
-          F.upper(F.col("p_brand")).as("brand_uc"),
-          F.substring(F.col("p_type"), 1, 6).as("type_pfx"),
-          F.concat_ws("|", F.col("p_brand"), F.col("p_type")).as("bt"),
-          F.length(F.col("p_name")).as("name_len"))
-        .where(F.col("p_partkey") <= 100)
-        .orderBy("p_partkey")),
-
-    "q_math_fns" -> ((s, d) =>
-      tbl(s, d, "lineitem")
-        .where(F.col("l_orderkey") <= 100)
-        .select(
-          F.col("l_orderkey"), F.col("l_linenumber"),
-          F.round(F.sqrt(F.col("l_extendedprice")), 4).as("sqrt_price"),
-          F.round(F.ln(F.col("l_extendedprice") + 1.0), 4).as("ln_price"),
-          F.round(F.pow(F.col("l_discount"), 2.0), 6).as("disc_sq"),
-          F.floor(F.col("l_quantity")).as("qty_floor"),
-          F.round(F.abs(F.col("l_tax") - 0.04), 4).as("tax_dev"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    // ---- text analysis ----
-    "t_text_stats" -> ((s, d) =>
-      TextOps.textStats(docs(s, d)).orderBy("doc_id")),
-
-    "t_text_quality" -> ((s, d) =>
-      TextOps.textQuality(docs(s, d)).orderBy("doc_id")),
-
-    // Gopher/MassiveText rules: integer signals + one verdict column;
-    // passes cast to INT so both engines hash 0/1 identically
-    "t_gopher_rules" -> ((s, d) =>
-      TextOps.gopherFlags(docs(s, d))
-        .withColumn("passes", F.col("passes").cast("int"))
-        .orderBy("doc_id")),
-
-    // C4 line-level cleaning: the corpus is single-line word salad, so
-    // the query first derives a structured page deterministically
-    // (terminal punctuation + newline after every 8th word, plus
-    // injected boilerplate/lorem/brace lines on fixed doc_id strata so
-    // every rule actually fires), then runs the operator; the oracle
-    // replays both the derivation and the rules
-    "t_c4_rules" -> ((s, d) => {
-      val structured =
-        F.regexp_replace(F.col("text"), "((?:\\S+ ){7}\\S+) ", "$1.\n")
-      val withJs = F.when(F.col("doc_id") % 5 === 2,
-          F.concat(
-            F.lit("javascript cookies enable your browser please.\n"),
-            structured))
-        .otherwise(structured)
-      val withLorem = F.when(F.col("doc_id") % 7 === 0,
-          F.concat(withJs, F.lit("\nlorem ipsum dolor sit amet friend.")))
-        .otherwise(withJs)
-      val withBrace = F.when(F.col("doc_id") % 11 === 3,
-          F.concat(withLorem, F.lit("\nif (x) { return y; }")))
-        .otherwise(withLorem)
-      TextOps.c4Clean(docs(s, d).select(F.col("doc_id"), withBrace.as("text")))
-        .withColumn("has_lorem", F.col("has_lorem").cast("int"))
-        .withColumn("has_brace", F.col("has_brace").cast("int"))
-        .withColumn("passes", F.col("passes").cast("int"))
-        .orderBy("doc_id")
-    }),
-
-    // BPE merge training — fully oracled in r8 (previously the one
-    // rows-only query pair): the DuckDB side re-derives the 30 merges
-    // from the corpus via unrolled pair-count/argmax/merge rounds
-    // (bpeTrainCtes); the exact merge sequence is ALSO spec-pinned on
-    // the Sennrich reference corpus
-    "t_bpe_merges" -> ((s, d) =>
-      TextOps.bpeTrain(docs(s, d), numMerges = 30).orderBy("rank")),
-
-    // the encode pass over the learned merges; the oracle replays the
-    // greedy lowest-rank loop per distinct word with a recursive CTE
-    // over the same re-derived merge table
-    "t_bpe_encode" -> ((s, d) => {
-      val all = docs(s, d)
-      TextOps.bpeApply(all, TextOps.bpeTrain(all, numMerges = 30))
-        .orderBy("doc_id")
-    }),
-
-    "t_vocab" -> ((s, d) =>
-      TextOps.vocab(docs(s, d), 50)),
-
-    // φ-heavy hitters WITHOUT shuffling the token stream: per-partition
-    // Misra-Gries candidates (complete for count >= φN by pigeonhole),
-    // exact verify counts on the broadcast candidate set only
-    "t_heavy_tokens" -> ((s, d) =>
-      TextOps.heavyTokens(docs(s, d), phi = 0.002)),
-
-    // pre-join skew diagnostic: top-N hottest keys with share and
-    // cumulative share — one partial-agg shuffle + TakeOrdered, never
-    // a global window over all keys
-    "q_skew_report" -> ((s, d) =>
-      graft.scale.Skew.report(
-        events(s, d).select("user_id"), "user_id", topN = 20)),
-
-    // Morton keys for Z-ordered layout: both dims quantized over their
-    // measured domain, bit-interleaved in pure column algebra — the
-    // key zorderWrite files/sorts by so footer min/max prunes BOTH dims
-    "q_zorder_values" -> ((s, d) => {
-      val ev = events(s, d)
-        .where(F.col("event_id") < 2000)
-        .select("event_id", "user_id", "value")
-      val st = ev.agg(
-        F.min(F.col("user_id").cast("double")),
-        F.max(F.col("user_id").cast("double")),
-        F.min("value"), F.max("value")).head()
-      ev.select(
-        F.col("event_id"),
-        graft.operators.Layout.zvalue(
-          graft.operators.Layout.quantize(
-            F.col("user_id"), st.getDouble(0), st.getDouble(1), 8),
-          graft.operators.Layout.quantize(
-            F.col("value"), st.getDouble(2), st.getDouble(3), 8),
-          8).as("zv"))
-        .orderBy("event_id")
-    }),
-
-    // segment-level language mixture: per-line langId cascade, modal
-    // language, distinct non-unk count, mixed flag — the doc-level
-    // classifier's blind spot in multilingual curation
-    "t_lang_mix" -> ((s, d) =>
-      TextOps.langMix(docs(s, d))),
-
-    // robust per-source outlier trim: modified z-score on exact
-    // medians (Iglewicz-Hoaglin 0.6745·(v−med)/MAD, cut 3.5) — the
-    // heavy-tail-immune length cut; swap approx_percentile at 100 TB
-    "t_mad_outliers" -> ((s, d) =>
-      TextOps.madOutliers(docs(s, d))),
-
-    // Deequ-style one-pass table profile: per column — rows, nulls,
-    // exact distinct (single scan through an Expand), numeric
-    // min/max/mean/std
-    "q_data_profile" -> ((s, d) =>
-      graft.operators.Profile.profile(
-        docs(s, d), Seq("doc_id", "lang", "n_chars", "source", "text"))),
-
-    // INCREMENTAL profiling: three per-shard mergeable sketch sidecars
-    // (counts + moment sums + HLL binaries) folded into the profile
-    // shape WITHOUT rescanning the corpus — the per-drop shape at
-    // 100 TB. Counts/min/max/mean/std are exact through the merge and
-    // oracled directly; the HLL distinct estimate is approximate by
-    // contract, so the row carries its ACCURACY CLAIM instead
-    // (dist_ok = estimate within ±5% of exact — the oracle pins it
-    // to 1, so an estimator regression goes red, not unnoticed).
-    "p_incr_profile" -> ((s, d) => {
-      import graft.operators.Profile
-      val all = docs(s, d)
-      val cols = Seq("lang", "n_chars", "source")
-      val sidecars = (0 until 3).map(k =>
-          Profile.sketchShard(all.where(F.col("doc_id") % 3 === k), cols))
-        .reduce(_ unionByName _)
-      val merged = Profile.mergeShards(sidecars)
-      val exact = Profile.profile(all, cols)
-        .select(F.col("column"), F.col("n_distinct").as("exact_distinct"))
-      merged.join(exact, "column")
-        .select(
-          F.col("column"), F.col("n_rows"), F.col("n_nulls"),
-          (F.abs(F.col("n_distinct") - F.col("exact_distinct")) <=
-            F.lit(0.05) * F.col("exact_distinct")).cast("int").as("dist_ok"),
-          F.col("min_v"), F.col("max_v"), F.col("mean_v"), F.col("std_v"))
-        .orderBy("column")
-    }),
-
-    // PSI drift monitor: reference-decile buckets (round-6 edges so
-    // both engines bucket identically), per-bucket (p−q)·ln(p/q)
-    // terms — sum is the published 0.1/0.25 drift index
-    "q_drift_psi" -> ((s, d) => {
-      val o = tbl(s, d, "orders")
-      graft.operators.Profile.psiBuckets(
-        o.where(F.col("o_orderdate") < F.lit("1996-01-01")),
-        o.where(F.col("o_orderdate") >= F.lit("1996-01-01")),
-        "o_totalprice")
-    }),
-
-    "t_corpus_report" -> ((s, d) =>
-      // one-row corpus health report — the observability aggregate a
-      // pipeline runs before/after every filter stage: volume, token
-      // mass, exact length quantiles, source/lang diversity. One
-      // partially-aggregated pass; exact percentile is fine HERE
-      // because the report is one global row, not per-group state
-      docs(s, d)
-        .select(
-          F.col("doc_id"), F.col("source"), F.col("lang"),
-          F.coalesce(
-            F.size(TextOps.tokens(F.col("text"))).cast("long"),
-            F.lit(0L)).as("n_tokens"))
-        .agg(
-          F.count(F.lit(1)).as("n_docs"),
-          F.sum("n_tokens").as("total_tokens"),
-          F.round(F.avg("n_tokens"), 4).as("avg_tokens"),
-          F.round(F.expr("percentile(n_tokens, 0.5)"), 4).as("p50_tokens"),
-          F.round(F.expr("percentile(n_tokens, 0.95)"), 4).as("p95_tokens"),
-          F.countDistinct("source").as("n_sources"),
-          F.countDistinct("lang").as("n_langs"))),
-
-    "t_encode_tokens" -> ((s, d) => {
-      // corpus-derived top-100 vocab ranked (count desc, token asc) →
-      // ids 0..99, then the broadcast map-only encode; unk = -1. The
-      // rank window runs on the 100-row vocab frame, not the corpus.
-      import org.apache.spark.sql.expressions.Window
-      val v = TextOps.vocab(docs(s, d), 100).select(
-        F.col("token"),
-        (F.row_number().over(
-          Window.orderBy(F.col("n_occurrences").desc, F.col("token").asc))
-          - 1).cast("long").as("id"))
-      TextOps.encodeTokens(docs(s, d), v, unkId = -1L).orderBy("doc_id")
-    }),
-
-    "t_lang_dist" -> ((s, d) =>
-      docs(s, d).groupBy("lang")
-        .agg(
-          F.count(F.lit(1)).as("n_docs"),
-          F.round(F.avg("n_chars"), 4).as("avg_chars"))
-        .orderBy("lang")),
-
-    "t_fingerprint" -> ((s, d) =>
-      docs(s, d)
-        .select(F.col("doc_id"), TextOps.fingerprint(F.col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // C4-style cross-corpus dedup at 2-token-segment granularity (the
-    // testdata has no newlines, so segments stand in for lines)
-    "t_line_dedup" -> ((s, d) =>
-      TextOps.dedupLines(docs(s, d), minCount = 2, segmentTokens = Some(2))
-        .orderBy("doc_id")),
-
-    "t_bm25" -> ((s, d) =>
-      TextOps.bm25TopK(docs(s, d), Seq("spark", "vector", "stream"), 10)),
-
-    "t_ngram_counts" -> ((s, d) =>
-      TextOps.ngramCounts(docs(s, d), n = 3, k = 30)),
-
-    // hybrid retrieval: BM25 lexical top-20 fused with cosine ANN
-    // top-20 by Reciprocal Rank Fusion — rank-based, so the two
-    // incomparable score scales need no calibration
-    "v_rrf_fusion" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      def ranked(df: DataFrame, id: String): DataFrame = df.select(
-        F.col(id).as("doc_id"),
-        F.row_number().over(
-          Window.orderBy(F.col("score").desc, F.col(id).asc)).as("rank"))
-      val lex = ranked(
-        TextOps.bm25TopK(docs(s, d), Seq("spark", "vector", "stream"), 20),
-        "doc_id")
-      val sem = ranked(Similarity.annTopK(emb(s, d), queryVec(s, d), 20), "id")
-      TextOps.rrfFuse(Seq(lex, sem), kConst = 60)
-    }),
-
-    // CCNet-style LM quality scores: unigram LM trained on the corpus
-    // itself here (self-scoring ranks fluency within the corpus); the
-    // cross-corpus shape (train on trusted, score crawl) is the same
-    // operator with a different lmCorpus. Rounded at presentation
-    // time so the operator's raw double stays reusable.
-    "t_unigram_lm" -> ((s, d) =>
-      TextOps.unigramLogProb(docs(s, d), docs(s, d))
-        .select(F.col("doc_id"), F.col("n_tokens"),
-          F.round(F.col("bits_per_token"), 6).as("bits_per_token"))
-        .orderBy("doc_id")),
-
-    // interpolated bigram LM (Jelinek-Mercer λ=0.7): the next rung of
-    // the cheap fluency ladder — ML bigram backed off into the add-one
-    // unigram, first token unigram-only, self-scored like t_unigram_lm
-    "t_bigram_lm" -> ((s, d) =>
-      TextOps.bigramLogProb(docs(s, d), docs(s, d), lambda = 0.7)
-        .select(F.col("doc_id"), F.col("n_tokens"),
-          F.round(F.col("bits_per_token"), 6).as("bits_per_token"))
-        .orderBy("doc_id")),
-
-    // DSIR importance weights: every 20th doc plays the target domain,
-    // the rest the raw pool; 512 hash buckets so the oracle replay
-    // stays cheap. High logw_bits = looks like the target.
-    "t_dsir_weights" -> ((s, d) => {
-      val all = docs(s, d)
-      TextOps.dsirWeights(
-          all,
-          all.where(F.col("doc_id") % 20 === 0),
-          all.where(F.col("doc_id") % 20 =!= 0),
-          buckets = 512)
-        .select(F.col("doc_id"), F.col("n_grams"),
-          F.round(F.col("logw_bits"), 6).as("logw_bits"))
-        .orderBy("doc_id")
-    }),
-
-    // fastText-style router, honest split: NB trained on the even half
-    // (lang labels), scores the odd half it never saw. margin_bits is
-    // the routing confidence a pipeline thresholds on.
-    "t_nb_classify" -> ((s, d) => {
-      val all = docs(s, d)
-      val train = all.where(F.col("doc_id") % 2 === 0)
-      val test = all.where(F.col("doc_id") % 2 =!= 0)
-      TextOps.nbClassify(test, train, "lang")
-        .select(F.col("doc_id"), F.col("pred_label"), F.col("n_tokens"),
-          F.round(F.col("margin_bits"), 6).as("margin_bits"))
-        .orderBy("doc_id")
-    }),
-
-    "t_length_batches" -> ((s, d) =>
-      TrainPrep.lengthBucketBatches(docs(s, d), width = 16, batchSize = 8)
-        .orderBy("doc_id")),
-
-    // per-source token quota ("cap each domain at N tokens"): the
-    // two-job distributed prefix sum + a map-side budget CASE — the
-    // window replay below is the semantics, not the execution plan
-    "d_source_quota" -> ((s, d) => {
-      val doc = docs(s, d)
-      TrainPrep.stratumWeightQuota(
-          doc, F.col("doc_id"), F.col("source"),
-          // size(null) is -1, not NULL — null text must weigh 0 like
-          // the oracle's coalesce(len(...), 0)
-          F.when(F.col("text").isNull, 0)
-            .otherwise(F.size(TextOps.tokens(F.col("text")))),
-          budgets = Map("src0" -> 100L), defaultBudget = 300L)
-        .select(F.col("key").as("doc_id"), F.col("stratum").as("source"),
-          F.col("w").as("n_tokens"), F.col("before").as("tokens_before"))
-        .orderBy("doc_id")
-    }),
-
-    // deterministic train/val/test holdout: md5-bucket CASE, map-only
-    // (a doc's split never flips as the corpus grows)
-    "d_split_assign" -> ((s, d) =>
-      TrainPrep.splitAssign(
-          docs(s, d), F.col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "source", "split").orderBy("doc_id")),
-
-    // asymmetric containment: quote/subset detection symmetric Jaccard
-    // misses — >= 80% of a doc's distinct 6-grams inside another doc
-    "d_containment" -> ((s, d) =>
-      Dedup.containmentPairs(docs(s, d), n = 6, minContainment = 0.8)),
-
-    // weighted k-per-stratum sample (A-ES, derandomized): selection
-    // tilted toward longer docs, membership a pure function of the
-    // data — the quality-weighted curation sampler
-    "d_weighted_sample" -> ((s, d) =>
-      TrainPrep.weightedSamplePerStratum(
-        docs(s, d), F.col("doc_id"), F.col("source"),
-        F.col("n_chars").cast("double"), k = 20)),
-
-    // leakage-free split: near-dup clusters share one split key, so a
-    // pair can never straddle train/test; singletons split exactly as
-    // d_split_assign does
-    "d_split_leakfree" -> ((s, d) => {
-      val all = docs(s, d)
-      val pairs = Dedup.minhashNearDupPairs(all, estFloor = 0.6)
-        .where(F.col("jaccard") >= 0.8)
-      TrainPrep.leakFreeSplit(
-          all, pairs, Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split_key", "split")
-        .orderBy("doc_id")
-    }),
-
-    // T5 span corruption: deterministic block-hash masking (a pure
-    // function of (doc_id, position) — reproducible on any layout)
-    "t_span_corrupt" -> ((s, d) =>
-      TrainPrep.spanCorrupt(docs(s, d)).orderBy("doc_id")),
-
-    // CCNet head/middle/tail split by LM-perplexity terciles —
-    // self-scored here; the cross-corpus LM shape is the same operator
-    "t_ppl_buckets" -> ((s, d) =>
-      TextOps.perplexityBuckets(docs(s, d), docs(s, d))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).as("n_docs"),
-          F.round(F.avg("bits_per_token"), 6).as("avg_bits"))
-        .orderBy("bucket")),
-
-    // FineWeb-style curation funnel: per-stage attrition attribution
-    // over the canonical quality chain (first-failing-stage counting,
-    // so the columns reconcile: n_in = n_dropped + n_out, chained)
-    "t_filter_funnel" -> ((s, d) => {
-      val txt = F.col("text")
-      val nt = F.size(TextOps.tokens(txt))
-      val nsp = F.length(F.regexp_replace(txt, "\\s", "")).cast("double")
-      val vow = F.length(
-        F.regexp_replace(F.lower(txt), "[^aeiou]", "")).cast("double")
-      val lines = F.split(txt, "\n")
-      val dupLine = F.lit(1.0) -
-        F.size(F.array_distinct(lines)).cast("double") / F.size(lines)
-      TextOps.filterFunnel(docs(s, d), Seq(
-        "min_tokens" -> (nt >= 10),
-        "avg_token_len" -> (nsp / nt <= 12.0),
-        "vowel_ratio" -> (vow / F.length(txt) >= 0.2),
-        "dup_lines" -> (dupLine <= 0.3)))
-    }),
-
-    "d_sample_k_stratum" -> ((s, d) =>
-      TrainPrep.sampleKPerStratum(
-          docs(s, d), F.col("doc_id"), F.col("source"), k = 10)
-        .orderBy("stratum", "hkey", "key")),
-
-    "d_temperature_sample" -> ((s, d) =>
-      // count^alpha source rebalancing (mBERT/XLM-R mix rule): alpha
-      // 0.5 up-weights small sources; md5 membership, zero corpus
-      // shuffle (tiny rate table broadcast back onto the scan)
-      TrainPrep.temperatureSample(
-          docs(s, d), F.col("doc_id"), F.col("source"),
-          alpha = 0.5, targetFraction = 0.5)
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    "d_dedup_against" -> ((s, d) => {
-      // continual-pretraining dedup: new data (corpus) against the
-      // existing training set (reference); the reference is untouched
-      val all = docs(s, d)
-      Dedup.dedupAgainst(
-          all.where(F.col("doc_id") % 10 =!= 0),
-          all.where(F.col("doc_id") % 10 === 0),
-          jaccardThreshold = 0.8)
-        .select("doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // the incremental-ingestion shape of d_dedup_against: reference
-    // band rows + shingles persisted once (save/load round trip
-    // included), each new drop pays its own signature pass only; the
-    // result contract is IDENTICAL to the two-frame operator, so the
-    // oracle is shared
-    "d_dedup_against_index" -> ((s, d) => {
-      val all = docs(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-mhidx").toString
-      val built = Dedup.minhashIndexBuild(all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
-      val index = Dedup.minhashIndexLoad(s, dir)
-      Dedup.dedupAgainstIndex(
-          all.where(F.col("doc_id") % 10 =!= 0), index,
-          jaccardThreshold = 0.8)
-        .select("doc_id")
-        .orderBy("doc_id")
-    }),
-
-    "d_semantic_neardup" -> ((s, d) =>
-      // SemDeDup: deterministic-k-means cells, exact cosine within a
-      // cell only — the cluster-blocked scale path for embedding dedup
-      // (equi-join on the cell id, never all-pairs)
-      graft.operators.Dedup.semanticNearDupPairs(
-          emb(s, d), threshold = 0.3, nClusters = 8, iters = 10)
-        .orderBy(F.col("score").desc, F.col("id_a"), F.col("id_b"))),
-
-    // D4-style prototype pruning: same deterministic k-means cells,
-    // rank-by-distance-to-centroid within each cell, drop the closest
-    // 20% (the redundant cluster cores), keep the informative tail
-    "d_proto_prune" -> ((s, d) =>
-      graft.operators.Dedup.prototypePrune(
-          emb(s, d), dropFrac = 0.2, nClusters = 8, iters = 10)
-        .withColumn("keep", F.col("keep").cast("int"))
-        .orderBy("cluster", "rnk")),
-
-    // SymSpell deletion-neighborhood fuzzy self-join: customer names
-    // are zero-padded serials, so edit-distance-1 pairs are the names
-    // differing in exactly one digit
-    // Fellegi-Sunter entity resolution: deletion-join blocking on the
-    // name, log2(m/u) field weights (constants shared verbatim with
-    // the oracle), links at score >= 0 closed transitively, canonical
-    // id = entity minimum
-    "q_entity_resolve" -> ((s, d) => {
-      import graft.operators.EntityResolution
-      import graft.operators.EntityResolution.FieldWeight
-      EntityResolution.resolve(
-        tbl(s, d, "customer").where(F.col("c_custkey") <= 500),
-        "c_custkey", "c_name",
-        name = ErNameW,
-        fields = Seq(ErNatW, ErSegW),
-        threshold = 0.0)
-    }),
-
-    "d_fuzzy_match" -> ((s, d) =>
-      FuzzyJoin.selfMatch(
-          tbl(s, d, "customer").where(F.col("c_custkey") <= 500)
-            .select(F.col("c_custkey").as("id"), F.col("c_name").as("s")),
-          maxDist = 1)
-        .select("id_a", "id_b", "dist")
-        .orderBy("id_a", "id_b")),
-
-    "t_lang_id" -> ((s, d) =>
-      docs(s, d)
-        .select(F.col("doc_id"), TextOps.langId(F.col("text")).as("lang_guess"))
-        .orderBy("doc_id")),
-
-    "t_bpe_tokens" -> ((s, d) =>
-      docs(s, d)
-        .select(
-          F.col("doc_id"),
-          TextOps.bpeTokenCount(F.col("text")).as("n_bpe_tokens"))
-        .orderBy("doc_id")),
-
-    "t_quality_filter" -> ((s, d) =>
-      TextOps.qualityFilter(docs(s, d))
-        .select("doc_id").orderBy("doc_id")),
-
-    "t_repetition" -> ((s, d) =>
-      // Gopher-style repetition filters: dup-line / dup-token
-      // fractions + top-bigram occurrence share
-      TextOps.repetitionSignals(docs(s, d)).orderBy("doc_id")),
-
-    "t_pii_redact" -> ((s, d) => {
-      // the synthetic corpus carries no PII, so the query grafts a
-      // deterministic email/IP/phone per doc (the oracle builds the
-      // SAME string) — the scrub's counts and redacted output are then
-      // hash-verified end to end instead of trivially zero
-      val pii = F.concat(
-        F.col("text"), F.lit(" contact user"), F.col("doc_id"),
-        F.lit("@example.com ip 192.168."), F.col("doc_id") % 256,
-        F.lit("."), (F.col("doc_id") * 7) % 256,
-        F.lit(" tel +1 (555) 010-"),
-        F.lpad(F.col("doc_id").cast("string"), 4, "0"))
-      TextOps.piiScrub(docs(s, d).select(F.col("doc_id"), pii.as("text")))
-        .select(
-          F.col("doc_id"), F.col("n_emails"), F.col("n_ips"),
-          F.col("n_phones"), F.md5(F.col("redacted")).as("red_fp"))
-        .orderBy("doc_id")
-    }),
-
-    "d_decontaminate" -> ((s, d) => {
-      // eval-set decontamination: every 20th doc plays the benchmark;
-      // corpus docs sharing any exact word 4-gram with it are dropped
-      // (4, not the usual 13, because the synthetic word-bag text has
-      // a ~40-word vocabulary — at 13 only the planted near-dup pairs
-      // collide and the check degenerates)
-      val all = docs(s, d)
-      val eval = all.where(F.col("doc_id") % 20 === 0)
-      val corpus = all.where(F.col("doc_id") % 20 =!= 0)
-      Dedup.decontaminate(corpus, eval, n = 4)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // which benchmark docs leak, and how broadly: distinct corpus-doc
-    // hits per eval doc (same 4-gram rationale as d_decontaminate)
-    "d_contamination_report" -> ((s, d) => {
-      val all = docs(s, d)
-      Dedup.contaminationReport(
-          all.where(F.col("doc_id") % 20 =!= 0),
-          all.where(F.col("doc_id") % 20 === 0), n = 4)
-        .orderBy("eval_doc_id")
-    }),
-
-    // repeated-span detection: 3-grams (not 8 — the ~40-word synthetic
-    // vocabulary only collides at short widths, same rationale as
-    // d_decontaminate's 4) occurring in >= 2 distinct docs; per-doc
-    // duplicated-window and covered-position counts
-    "d_dup_spans" -> ((s, d) =>
-      Dedup.dupSpans(docs(s, d), n = 3, minDocs = 2).orderBy("doc_id")),
-
-    // one-call curation recipe with first-fail attribution: quality
-    // (word count >= 20) -> exact-dedup keeper -> decontamination vs
-    // the every-20th-doc eval split (same 4-gram rationale as
-    // d_decontaminate)
-    "d_curate_corpus" -> ((s, d) => {
-      val all = docs(s, d)
-      val eval = all.where(F.col("doc_id") % 20 === 0)
-      val corpus = all.where(F.col("doc_id") % 20 =!= 0)
-      Dedup.curateCorpus(
-          corpus, eval,
-          F.size(graft.operators.TextOps.tokens(F.col("text"))) >= 20,
-          n = 4)
-        .orderBy("doc_id")
-    }),
-
-    // ---- training-data preparation (engine additions) ----
-    "t_chunk_windows" -> ((s, d) =>
-      // context-window chunking for LLM training: 32-token windows
-      // every 24 tokens (8-token overlap); map-only explode, no shuffle
-      TrainPrep.chunkTokenWindows(docs(s, d), window = 32, stride = 24)
-        .orderBy("doc_id", "chunk_id")),
-
-    "t_pack_shards" -> ((s, d) =>
-      // token-budget shard packing via a two-phase distributed prefix
-      // sum (never a global single-partition window)
-      TrainPrep.packTokenShards(docs(s, d), budget = 4096)
-        .orderBy("doc_id")),
-
-    "t_pack_greedy" -> ((s, d) =>
-      // greedy doc-boundary packing (docs never straddle shards):
-      // sequential by definition, distributed via coalescing per-
-      // partition transfer summaries; oracle = recursive CTE replay
-      // of the same rule
-      TrainPrep.packTokenShardsGreedy(docs(s, d), budget = 4096)
-        .orderBy("doc_id")),
-
-    "t_pack_manifest" -> ((s, d) =>
-      // per-shard training manifest over the greedy layout: doc count,
-      // token total, layout-ordered doc id list (string-joined)
-      TrainPrep.shardManifest(
-        TrainPrep.packTokenShardsGreedy(docs(s, d), budget = 4096))
-        .orderBy("shard")),
-
-    "d_sample_stratified" -> ((s, d) =>
-      // deterministic md5-hash sampling, stratified by source: exact,
-      // reproducible on any cluster layout, no count pass
-      TrainPrep.stratifiedHashSample(
-        docs(s, d), F.col("doc_id"), F.col("source"),
-        Map("src0" -> 0.5), defaultRate = 0.2)
-        .select("doc_id", "source").orderBy("doc_id")),
-
-    "t_mix_interleave" -> ((s, d) =>
-      // weighted corpus mixing: src0 every 2nd position, the rest
-      // every 4th; per-stratum ranks via the distributed prefix count
-      // (no per-stratum single-task window)
-      TrainPrep.interleaveByStratum(
-        docs(s, d), F.col("doc_id"), F.col("source"),
-        Map("src0" -> 2.0), defaultStride = 4.0)
-        .withColumnRenamed("key", "doc_id")
-        .orderBy("mix_key", "stratum", "doc_id")),
-
-    // ---- deduplication ----
-    "d_exact_groups" -> ((s, d) =>
-      Dedup.exactGroups(docs(s, d)).orderBy("fp")),
-
-    "d_minhash_neardup" -> ((s, d) =>
-      // thresholded near-dup pairs. Oracle-able: the final filter is
-      // EXACT Jaccard, and at 64 hashes / 16 bands x 4 rows the chance
-      // the banding misses a j >= 0.8 pair is <= (1-0.8^4)^16 ~ 2e-4
-      // (1e-7 at the testdata's observed j >= 0.89), so the banded
-      // result deterministically equals the all-pairs answer here; the
-      // est_jaccard column is minhash-internal and excluded.
-      Dedup.minhashNearDupPairs(docs(s, d), estFloor = 0.2)
-        .where(F.col("jaccard") >= 0.8)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")),
-
-    "d_dedup_corpus" -> ((s, d) =>
-      Dedup.dedupCorpus(docs(s, d), jaccardThreshold = 0.8)
-        .select("doc_id").orderBy("doc_id")),
-
-    "d_dup_clusters" -> ((s, d) =>
-      // transitive dedup: connected components over the exact-verified
-      // near-dup pairs; keeper = smallest doc_id of the component
-      Dedup.dupClusters(
-        Dedup.minhashNearDupPairs(docs(s, d), estFloor = 0.6)
-          .where(F.col("jaccard") >= 0.8))
-        .orderBy("doc_id")),
-
-    // arbitrary-length exact substring dedup (Lee et al. 2022
-    // ExactSubstr; VERDICT r8 #3): maximal removal spans covered by
-    // ANY >= 5-token sequence repeated anywhere in the corpus
-    // (within-doc repeats count). 5, not the paper's 50 — the ~40-word
-    // synthetic vocabulary only produces repeats at short widths, the
-    // same calibration rationale as d_dup_spans' 3.
-    "d_substring_dedup" -> ((s, d) =>
-      Dedup.substringDedupSpans(docs(s, d), minLen = 5)
-        .orderBy("doc_id", "span_start")),
-
-    // bucket-occupancy diagnostic for the gram-blocked joins (VERDICT
-    // r8 #6): hottest 6-grams by df and the candidate-pair mass they
-    // imply — the measurement that sizes containmentPairs' maxDf
-    "d_gram_occupancy" -> ((s, d) =>
-      Dedup.gramOccupancy(docs(s, d), n = 6, topN = 20)),
-
-    "d_simhash" -> ((s, d) =>
-      Dedup.simhash(docs(s, d)).orderBy("doc_id")),
-
-    "d_simhash_neardup" -> ((s, d) =>
-      // Hamming distance 3 is the standard near-dup operating point for
-      // SimHash (Manku et al., WWW'07): complete 4-chunk blocking with
-      // 15-bit keys. Wider bounds shrink the chunk keys (maxDist+1
-      // chunks) and explode candidates on correlated corpora —
-      // measured 23s at maxDist=16 vs ~1s here at sf0.1.
-      Dedup.simhashNearDupPairs(docs(s, d), maxDist = 3).limit(100)),
-
-    // ---- similarity search ----
-    "v_ann_topk" -> ((s, d) =>
-      Similarity.annTopK(emb(s, d), queryVec(s, d), 20)),
-
-    "v_ann_topk_lsh" -> ((s, d) =>
-      // deterministic SRP-LSH (Hamming-ranked candidates, exact-integer
-      // projections) rather than the seeded ML BucketedRandomProjection
-      // path: same approximate contract, but reproducible enough for
-      // the DuckDB oracle to replay the candidate set bit-for-bit
-      Similarity.annTopKHamming(emb(s, d), queryVec(s, d), 20)),
-
-    // SQ8 quantized ANN through the MATERIALIZED index: codes are a
-    // real d-byte BINARY column (8× smaller than the float64 vectors),
-    // the candidate scan reads only codes, and the exact vectors are
-    // touched by the bounded rerank join alone
-    "v_ann_topk_sq8" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.sq8TopK(
-        Similarity.sq8Encode(e), e, queryVec(s, d), 20, rerank = 100)
-    }),
-
-    // 1-bit binary quantization (sign bits packed 64 dims/long, 64×
-    // smaller than the float64 vectors): Hamming-distance candidate
-    // cut — an INTEGER, so the production operating point replays
-    // exactly in SQL (no degenerate-point oracle needed) — then exact
-    // cosine rerank like every codec
-    "v_ann_topk_binary" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.binaryTopK(
-        Similarity.binaryEncode(e, persist = false), e, queryVec(s, d),
-        k = 20, rerank = 60)
-    }),
-
-    // batch face: one scan of the packed bits scores all queries
-    // (xor+popcount per row), bounded-heap per-query candidate cut,
-    // one exact-rerank join for every query's survivors
-    "v_ann_topk_binary_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      Similarity.binaryTopKBatch(
-        Similarity.binaryEncode(e, persist = false), e, qs,
-        k = 10, rerank = 60)
-    }),
-
-    // batch face of the SQ8 index: one codes scan scores all queries
-    // (broadcast query side), salted per-query candidate cut, one
-    // rerank join for every query's survivors
-    "v_ann_topk_sq8_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      Similarity.sq8TopKBatch(
-        Similarity.sq8Encode(e), e, qs, k = 10, rerank = 100)
-    }),
-
-    // PQ quantized ANN: m=4 byte codes per row (16× denser than the
-    // float64 vectors), per-subspace DeterministicKMeans codebooks so
-    // the codec is oracle-replayable, ADC lookup-table scan, bounded
-    // exact rerank — the third codec beside exact and SQ8
-    "v_ann_topk_pq" -> ((s, d) => {
-      val e = emb(s, d)
-      val index = Similarity.pqBuild(e, m = 4, ksub = 8, iters = 10)
-      val out = Similarity.pqTopK(index, e, queryVec(s, d), 20, rerank = 100)
-        .localCheckpoint()
-      Similarity.pqRelease(index)
-      out
-    }),
-
-    // OPQ (rotated PQ): parametric eigenvalue-allocation rotation
-    // before subspace quantization. Oracled at the DEGENERATE point
-    // (rerank covers the corpus ⇒ the exact rerank IS the answer, and
-    // an ORTHOGONAL rotation preserves every cosine — so the exact
-    // top-k SQL oracles the whole rotate→encode→ADC→rerank plumbing);
-    // production pruning and the recall-vs-raw-PQ claim are
-    // spec-pinned in PqSpec, measured at scale in
-    // history/SCALE_BENCH_r11_recall{40,80,160v}.json.
-    "v_opq_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val index = Similarity.opqBuild(e, m = 4, ksub = 8, iters = 10)
-      val out = Similarity.opqTopK(index, e, queryVec(s, d), 20,
-          rerank = 100000)
-        .localCheckpoint()
-      Similarity.opqRelease(index)
-      out
-    }),
-
-    // OPQ batch face at the degenerate point: rerank covers the
-    // corpus, so each qid's answer is its exact cosine top-10 and the
-    // whole rotate-LUT -> ADC -> raw-rerank pipeline is oracled by
-    // plain SQL; production pruning + batch==single are spec-pinned.
-    "v_opq_topk_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val index = Similarity.opqBuild(e, m = 4, ksub = 8, iters = 10)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.opqTopKBatch(index, e, qs, k = 10,
-          rerank = 100000)
-        .localCheckpoint()
-      Similarity.opqRelease(index)
-      out
-    }),
-
-    // batch face of the PQ index: per-query ADC lookup tables built on
-    // the executors, ONE codes scan for all queries, salted per-query
-    // cut, one rerank join
-    "v_ann_topk_pq_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val pq = Similarity.pqBuild(e, m = 4, ksub = 8, iters = 10)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.pqTopKBatch(pq, e, qs, k = 10, rerank = 100)
-        .localCheckpoint()
-      Similarity.pqRelease(pq)
-      out
-    }),
-
-    // IVF+PQ composition (IndexIVFPQ): lists prune WHICH rows are
-    // scanned (nprobe=12 of 16), PQ codes bound WHAT the scan reads
-    // (4 bytes/row through the ADC expression), exact rerank at 60
-    "v_ivf_pq_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val pq = Similarity.pqBuild(e, m = 4, ksub = 8, iters = 10)
-      val out = Similarity.ivfPqTopK(
-        ivf, pq, e, queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.pqRelease(pq)
-      out
-    }),
-
-    // the full IndexIVFPQ serving shape, batched: executor probe
-    // selection + cluster-keyed candidate join + ADC over codes with
-    // broadcast per-query tables + exact rerank
-    "v_ivf_pq_topk_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val pq = Similarity.pqBuild(e, m = 4, ksub = 8, iters = 10)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.ivfPqTopKBatch(
-        ivf, pq, e, qs, k = 10, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.pqRelease(pq)
-      out
-    }),
-
-    // Spherical-quantizer IVF on a deliberately UN-normalized corpus
-    // (each vector scaled by 1 + id%5): fitSpherical's unit centroids
-    // make assignment argmax-cosine for any input norm, so probe
-    // ranking and assignment agree where the Euclidean quantizer's
-    // geometry breaks — the documented IVF normalization contract,
-    // lifted (history/SCALE.md "Known limits")
-    "v_ivf_spherical_topk" -> ((s, d) => {
-      val e = emb(s, d).select(F.col("id"),
-        F.transform(F.col("vec"),
-          x => x * (F.col("id") % 5 + 1).cast("double")).as("vec"))
-      val ivf = Similarity.ivfBuildSpherical(e, nLists = 16)
-      val out = Similarity.ivfTopK(ivf, queryVec(s, d), k = 20, nprobe = 12)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // Two-level (hierarchical) coarse quantizer — the build path past
-    // suggestLists' 64k-list wall: √k coarse cells, per-cell
-    // sub-quantizers fit in parallel inside tasks, assignment scans
-    // √k + p·√k centers per row instead of k. Oracled at the
-    // DEGENERATE point (nprobe = index.k: the probe scans every list,
-    // so output == exact brute-force top-k whatever the hierarchical
-    // fit produced — same pattern as v_bitext_mine_pq); the production
-    // pruning's determinism, coverage and recall are spec-pinned
-    // (SimilaritySpec "two-level IVF").
-    "v_ivf_2level_topk" -> ((s, d) => {
-      val ivf = Similarity.ivfBuildTwoLevel(emb(s, d), nLists = 16)
-      val out = Similarity.ivfTopK(ivf, queryVec(s, d), k = 20,
-        nprobe = ivf.k).localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // hierarchical probe selection over the two-level index: probes
-    // chosen by ranking √k coarse cells then only the probed cells'
-    // sub-centers — the query-side mirror of the build-side cliff
-    // ivfBuildTwoLevel fixes. Oracled at the degenerate point
-    // (coarseCells = all cells, nprobe = k ⇒ probes equal the flat
-    // path's, scan covers every list ⇒ exact top-k); the pruned
-    // point's probe equality and recall are spec-pinned
-    "v_ivf_2level_hier_topk" -> ((s, d) => {
-      val ivf = Similarity.ivfBuildTwoLevel(emb(s, d), nLists = 16)
-      val out = Similarity.ivfTopKHier(ivf, queryVec(s, d), k = 20,
-        nprobe = ivf.k, coarseCells = ivf.hier.get.coarse.length)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // SHARDED hierarchical probe selection: probes chosen by a join
-    // against the sub-center TABLE (cell-partitioned at rest) instead
-    // of a broadcast of all k sub-centers — the batch-retrieval form
-    // once k·F outgrows a broadcast (~512 MB at 1M corpus-proportional
-    // lists). Oracled at the degenerate point (all coarse cells,
-    // nprobe = k ⇒ every list probed ⇒ exact per-query top-k); exact
-    // row-for-row parity with the broadcast path at a PRUNED point is
-    // spec-pinned (SimilaritySpec "sharded hierarchical probes")
-    "v_ivf_2level_sharded_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuildTwoLevel(e, nLists = 16)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.ivfTopKBatchHierSharded(ivf, qs, k = 10,
-        nprobe = ivf.k, coarseCells = ivf.hier.get.coarse.length)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // Residual IVF+PQ (IVFADC — Jégou et al. TPAMI'11, the faiss
-    // IndexIVFPQ default): codebooks trained on r = x − c(list), so
-    // codec capacity models the within-list spread. Query-time scan
-    // cost equals v_ivf_pq_topk's (m bytes + one divide — the
-    // reconstruction norm ‖x̂‖² is folded into a stored n2hat column
-    // at build); recall at fixed (nprobe, rerank) is spec-measured ≥
-    // the raw codec's on clustered data
-    "v_ivf_pqr_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val pqr = Similarity.pqResidualBuild(ivf, m = 4, ksub = 8, iters = 10)
-      val out = Similarity.ivfPqrTopK(
-        ivf, pqr, e, queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.pqResidualRelease(pqr)
-      out
-    }),
-
-    // batch face of the residual composition: probe rows carry the
-    // per-query dot LUT plus ONE extra scalar (⟨q,c⟩); same fan-out
-    // join shape as v_ivf_pq_topk_batch
-    "v_ivf_pqr_topk_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val pqr = Similarity.pqResidualBuild(ivf, m = 4, ksub = 8, iters = 10)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.ivfPqrTopKBatch(
-        ivf, pqr, e, qs, k = 10, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.pqResidualRelease(pqr)
-      out
-    }),
-
-    // IVF+SQ8 composition (IndexIVFScalarQuantizer): lists prune WHICH
-    // rows are scanned (nprobe=12 of 16), SQ8 codes bound WHAT the
-    // scan reads (d bytes/row through the dequantized-cosine
-    // expression), exact rerank at 60 — closes the one unpruned scan
-    // the plain sq8 batch carries (VERDICT r8 #5)
-    "v_ivf_sq8_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val sq8 = Similarity.sq8Encode(e)
-      val out = Similarity.ivfSq8TopK(
-        ivf, sq8, e, queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.sq8Release(sq8)
-      out
-    }),
-
-    // IVF + binary: probed lists bound WHICH rows scan, 1-bit codes
-    // bound WHAT the scan reads (8 B/row at 64 dims). Oracled at the
-    // PRODUCTION pruning (nprobe=12, rerank=60) — the probe chain is
-    // the replayable kmeans recurrence and the hamming cut is integer
-    "v_ivf_binary_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val bin = Similarity.binaryEncode(e)
-      val out = Similarity.ivfBinaryTopK(
-        ivf, bin, e, queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.binaryRelease(bin)
-      out
-    }),
-
-    // batch face of the residual codec at the same production
-    // pruning: per-qid probe ranking over the k-means chain, residual
-    // sign bits per (query, probed list), per-qid (hamming ASC, id
-    // ASC) window at 60, exact rerank per qid
-    "v_ivf_binary_resid_topk_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val bri = Similarity.binaryResidualEncode(ivf)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.ivfBinaryResidualTopKBatch(
-        ivf, bri, e, qs, k = 10, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.binaryResidualRelease(bri)
-      out
-    }),
-
-    // residual-sign binary (r13): bits = signs of (vec − list
-    // centroid) under the frozen quantizer, so Hamming ranks WITHIN a
-    // mode where raw signs tie. Integer cut key → oracled at its
-    // PRODUCTION pruning (nprobe 12/16, rerank 60): the SQL replays
-    // the k-means recurrence, the per-list residual signs, and the
-    // (hamming ASC, id ASC) cut exactly
-    "v_ivf_binary_resid_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val bri = Similarity.binaryResidualEncode(ivf)
-      val out = Similarity.ivfBinaryResidualTopK(
-        ivf, bri, e, queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.binaryResidualRelease(bri)
-      out
-    }),
-
-    // batched IVF+SQ8: executor probe selection + cluster-keyed
-    // candidate join + codes join bounding the scan + exact rerank
-    "v_ivf_sq8_topk_batch" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val sq8 = Similarity.sq8Encode(e)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val out = Similarity.ivfSq8TopKBatch(
-        ivf, sq8, e, qs, k = 10, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.sq8Release(sq8)
-      out
-    }),
-
-    "d_embed_neardup" -> ((s, d) =>
-      // embedding-cosine near-dup: the fourth dedup mode (exact /
-      // minhash / simhash / embedding). Broadcast + per-partition
-      // primitive loop at oracle SF; at 100 TB candidates come from
-      // the LSH band join or IVF blocking instead of all-pairs.
-      Similarity.cosineNearDupPairs(emb(s, d), 0.3)),
-
-    "v_emb_norms" -> ((s, d) =>
-      Similarity.norms(emb(s, d)).orderBy("id")),
-
-    "v_pca_summary" -> ((s, d) => {
-      // distributed PCA (engine addition): one treeAggregate moment
-      // pass, deterministic power-iteration factorization, map-only
-      // codegen projection. Output cross-checks the driver-side
-      // eigenvalue against the cluster-side projection variance —
-      // two independent computations of the same quantity.
-      import s.implicits._
-      val e = emb(s, d)
-      val nF = e.select(F.size(F.col("vec"))).head.getInt(0)
-      val m = graft.scale.Pca.fit(e, "vec", nF, k = 3, iters = 60)
-      val proj = graft.scale.Pca.project(e, m, "vec")
-      val vr = proj.agg(
-        (F.avg(F.col("pc1") * F.col("pc1")) - F.avg("pc1") * F.avg("pc1")).as("v1"),
-        (F.avg(F.col("pc2") * F.col("pc2")) - F.avg("pc2") * F.avg("pc2")).as("v2"),
-        (F.avg(F.col("pc3") * F.col("pc3")) - F.avg("pc3") * F.avg("pc3")).as("v3")).head
-      (0 until 3).map(j => (j + 1, m.eigenvalues(j), vr.getDouble(j)))
-        .toDF("component", "eigenvalue", "var_proj")
-        .select(
-          F.col("component"),
-          F.round(F.col("eigenvalue"), 6).as("eigenvalue"),
-          F.round(F.col("var_proj"), 6).as("var_proj"))
-        .orderBy("component")
-    }),
-
-    // contrastive hard negatives: nearest neighbors with a DIFFERENT
-    // class label, per query — theta-join rewritten as an equi-join
-    // on exploded negative-label keys (see Similarity.hardNegatives)
-    "v_hard_negatives" -> ((s, d) => {
-      val e = tbl(s, d, "embeddings").select(
-        F.col("vec_id").as("id"),
-        F.col("embedding").cast("array<double>").as("vec"),
-        F.col("label"))
-      val q = e.where(F.col("id") < 5).select(
-        F.col("id").as("qid"), F.col("vec").as("qvec"),
-        F.col("label").as("qlabel"))
-      Similarity.hardNegatives(e, q, k = 10)
-    }),
-
-    // the 100 TB sibling: IVF-pruned candidates (same DeterministicKMeans
-    // coarse quantizer as v_ivf_topk, nprobe=12 of 16 lists), label
-    // filter, exact scoring of the survivors only
-    "v_hard_negatives_approx" -> ((s, d) => {
-      val e = tbl(s, d, "embeddings").select(
-        F.col("vec_id").as("id"),
-        F.col("embedding").cast("array<double>").as("vec"),
-        F.col("label"))
-      val q = e.where(F.col("id") < 5).select(
-        F.col("id").as("qid"), F.col("vec").as("qvec"),
-        F.col("label").as("qlabel"))
-      Similarity.hardNegativesApprox(e, q, k = 10, nLists = 16, nprobe = 12)
-    }),
-
-    "v_top_cosine_pairs" -> ((s, d) =>
-      Similarity.topCosinePairs(emb(s, d), 20)),
-
-    // margin-based bitext mining (LASER/CCMatrix): even ids are side
-    // A, odd ids side B; ratio margin normalizes hubness away; best
-    // partner per A-doc above margin 1.0
-    "v_bitext_mine" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bitextMine(
-        e.where(F.col("id") % 2 === 0),
-        e.where(F.col("id") % 2 =!= 0), k = 4, threshold = 1.0)
-    }),
-
-    // the IVF-candidate scale path of bitext mining (new r8 — the
-    // recipe bitextMine's gate error names, as a first-class
-    // operator). Oracled at the FULL-probe operating point, where the
-    // candidate lists are exact per-side top-k and the whole margin /
-    // union / argmax machinery is SQL-replayable; the probe PRUNING
-    // inside ivfTopKBatch carries its own oracle (v_ivf_topk_batch)
-    // and the pruned-path recall is spec-pinned (SimilaritySpec).
-    "v_bitext_mine_approx" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bitextMineApprox(
-        e.where(F.col("id") % 2 === 0),
-        e.where(F.col("id") % 2 =!= 0), k = 4, threshold = 1.0,
-        nLists = 8, nprobe = 8)
-    }),
-
-    // code-pruned bitext mining (VERDICT r8 #2): the two probed-list
-    // retrievals read m-byte PQ/ADC codes instead of float64 vectors.
-    // Oracled at the DEGENERATE operating point — full probes AND
-    // rerank >= side size, where the per-query ADC cut keeps every
-    // probed row, the exact rerank rescores them all, and the lists
-    // equal exact top-k (same oracle as v_bitext_mine_approx); the
-    // production pruning's recall is spec-pinned (SimilaritySpec).
-    "v_bitext_mine_pq" -> ((s, d) => {
-      val e = emb(s, d)
-      val n = e.count().toInt
-      Similarity.bitextMinePq(
-        e.where(F.col("id") % 2 === 0),
-        e.where(F.col("id") % 2 =!= 0), k = 4, threshold = 1.0,
-        nLists = 8, nprobe = 8, m = 4, ksub = 8, rerank = n)
-    }),
-
-    "v_sql_surface" -> ((s, d) => {
-      // the registered-SQL path itself, oracle-checked: pure spark.sql
-      // text over a temp view using the native graft_* functions
-      graft.functions.VectorFunctions.registerAll(s)
-      emb(s, d).createOrReplaceTempView("emb_v")
-      s.sql(
-        """SELECT a.id AS id,
-          |  round(graft_cosine(a.vec, q.vec), 4) AS score,
-          |  round(graft_l2norm(a.vec), 4) AS norm
-          |FROM emb_v a CROSS JOIN (SELECT vec FROM emb_v WHERE id = 0) q
-          |WHERE a.id <= 50
-          |ORDER BY a.id""".stripMargin)
-    }),
-
-    "v_batch_topk" -> ((s, d) => {
-      // Pure-cosine batch top-k (τ=1 degenerates to cosine, so the
-      // result is SQL-expressible and oracle-checked).
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.VectorFunctions.cosine
-      val e = emb(s, d)
-      val q = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("query_id"), F.col("vec").as("qvec"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(F.col("score").desc, F.col("id").asc)
-      e.join(F.broadcast(q), F.col("id") =!= F.col("query_id"))
-        .withColumn("score", F.round(cosine(F.col("vec"), F.col("qvec")), 4))
-        .select("query_id", "id", "score")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    "q_json_props" -> ((s, d) =>
-      events(s, d)
-        .select(F.get_json_object(F.col("props"), "$.k").cast("int").as("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).as("n"))
-        .orderBy("k")),
-
-    // relational surface: PIVOT with an explicit value list (explicit
-    // so the plan is one partial-agg pass, no distinct-values job)
-    "q_pivot_events" -> ((s, d) =>
-      events(s, d)
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "view", "purchase"))
-        .agg(F.count(F.lit(1)))
-        .na.fill(0L)
-        .where(F.col("user_id") < 50)
-        .orderBy("user_id")),
-
-    // relational surface: GROUPING SETS with grouping_id — the
-    // arbitrary-set sibling of q_rollup/q_cube
-    "q_grouping_sets" -> ((s, d) => {
-      tbl(s, d, "orders").createOrReplaceTempView("orders_gs")
-      s.sql(
-        """SELECT o_orderstatus, o_orderpriority,
-          |  count(*) AS n, round(sum(o_totalprice), 2) AS revenue,
-          |  CAST(grouping(o_orderstatus) AS INT) AS g_status,
-          |  CAST(grouping(o_orderpriority) AS INT) AS g_prio
-          |FROM orders_gs
-          |GROUP BY GROUPING SETS (
-          |  (o_orderstatus), (o_orderpriority),
-          |  (o_orderstatus, o_orderpriority))
-          |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority""".stripMargin)
-    }),
-
-    "v_ivf_topk" -> ((s, d) => {
-      // nprobe=12 is the measured recall@20 >= 0.9 operating point on
-      // the near-orthogonal synthetic embeddings (recall is ~linear in
-      // nprobe there because true neighbors scatter uniformly across
-      // lists; clustered corpora reach the same recall at nprobe~2 —
-      // see SimilaritySpec).
-      val index = Similarity.ivfBuild(emb(s, d), nLists = 16)
-      Similarity.ivfTopK(index, queryVec(s, d), k = 20, nprobe = 12)
-    }),
-
-    // FILTERED ANN (the faiss/vector-DB IDSelector face): the top-k
-    // among rows matching a metadata predicate, the filter applied
-    // INSIDE the probed scan — not a post-filter of an unfiltered
-    // top-k (which under-returns whenever winners don't match).
-    // Oracled at the degenerate point (nprobe = k ⇒ the filtered exact
-    // top-20 among label=1 rows); pruned recall + the batch face's
-    // parity are spec-pinned (SimilaritySpec "filtered ANN")
-    "v_ivf_topk_filtered" -> ((s, d) => {
-      val meta = s.read.parquet(s"$d/embeddings.parquet")
-        .select(F.col("vec_id").as("id"), F.col("label"))
-      val ivf = Similarity.ivfBuild(emb(s, d), nLists = 16)
-      val out = Similarity.ivfTopKWhere(ivf, meta, F.col("label") === 1,
-        queryVec(s, d), k = 20, nprobe = ivf.k).localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // FILTERED codec ANN (VERDICT r10 #1): the metadata predicate
-    // applied INSIDE the code-pruned probed scan — oracled at the
-    // PRODUCTION operating point (nprobe=12, rerank=60): the SQL
-    // replays probe chain + label-filtered candidate set + dequant
-    // chain + exact rerank
-    "v_ivf_sq8_topk_filtered" -> ((s, d) => {
-      val e = emb(s, d)
-      val meta = s.read.parquet(s"$d/embeddings.parquet")
-        .select(F.col("vec_id").as("id"), F.col("label"))
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val sq8 = Similarity.sq8Encode(e)
-      val out = Similarity.ivfSq8TopKWhere(
-        ivf, sq8, e, meta, F.col("label") === 1,
-        queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.sq8Release(sq8)
-      out
-    }),
-
-    // FILTERED IVF+binary — same composition with the 1-bit codec;
-    // the integer hamming cut keeps it oracle-replayable at the
-    // production pruning
-    "v_ivf_binary_topk_filtered" -> ((s, d) => {
-      val e = emb(s, d)
-      val meta = s.read.parquet(s"$d/embeddings.parquet")
-        .select(F.col("vec_id").as("id"), F.col("label"))
-      val ivf = Similarity.ivfBuild(e, nLists = 16)
-      val bin = Similarity.binaryEncode(e)
-      val out = Similarity.ivfBinaryTopKWhere(
-        ivf, bin, e, meta, F.col("label") === 1,
-        queryVec(s, d), k = 20, nprobe = 12, rerank = 60)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      Similarity.binaryRelease(bin)
-      out
-    }),
-
-    // STREAMING row in the correctness gate (VERDICT r10 #7): the ANN
-    // serve face run as a REAL stream — two MemoryStream micro-batches
-    // through ivfQueryStream's foreachBatch into parquet, read back.
-    // Per-batch results equal the batch operator and each qid lands in
-    // exactly one batch, so the union is oracled by the SAME replay SQL
-    // as v_ivf_topk_batch (the checker sorts rows — append order is
-    // irrelevant by design: a multi-file parquet sink has no order).
-    "s_ivf_query_stream" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d)
-      val index = Similarity.ivfBuild(e, nLists = 16)
-      val qrows = e.where(F.col("id") <= 4)
-        .select(F.col("id"), F.col("vec"))
-        .as[(Long, Array[Double])].collect().sortBy(_._1)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_sivf_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_sivf_ckpt").toString
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Double])](s)
-      val q = graft.streaming.StreamingOps.ivfQueryStream(
-        ms.toDF.toDF("qid", "qvec"), index, k = 10, nprobe = 12,
-        outPath = out, checkpoint = ckpt)
-      try {
-        ms.addData(qrows.take(3).toSeq)
-        q.processAllAvailable()
-        ms.addData(qrows.drop(3).toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      Similarity.ivfRelease(index)
-      s.read.parquet(out)
-        .select(F.col("qid"), F.col("id"), F.col("score"))
-        .orderBy(F.col("qid"), F.col("score").desc, F.col("id").asc)
-        .localCheckpoint()
-    }),
-
-    // the SELF-GROWING streaming dedup gate as a REAL stream (the
-    // second streaming row in the correctness gate): base index
-    // persisted from the %10==0 docs, two MemoryStream micro-batches
-    // through minhashGateStream's foreachBatch — each batch collapsed
-    // within itself (dedupCorpus), deduped against base ∪ earlier
-    // survivors (dedupAgainstIndex over loadWithAppends), survivors'
-    // band rows appended as idempotent seg=batchId partitions.
-    // Oracled by the sequential exact-Jaccard replay in DuckDB.
-    "s_dedup_gate_stream" -> ((s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sgate_idx").toString
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_sgate_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_sgate_ckpt").toString
-      val built = Dedup.minhashIndexBuild(
-        all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
-      val b1 = all.where(F.col("doc_id") % 10 >= 1 && F.col("doc_id") % 10 <= 4)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val b2 = all.where(F.col("doc_id") % 10 >= 5)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val q = graft.streaming.StreamingOps.minhashGateStream(
-        ms.toDF.toDF("doc_id", "text"), dir, out, ckpt,
-        jaccardThreshold = 0.8)
-      try {
-        ms.addData(b1.toSeq)
-        q.processAllAvailable()
-        ms.addData(b2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      s.read.parquet(out).select("doc_id").orderBy("doc_id")
-        .localCheckpoint()
-    }),
-
-    // streaming SEMANTIC dedup gate (VERDICT r12 #3) at its exact
-    // degenerate point: base = decade anchors under a ONE-list IVF
-    // (probing = full state scan; within-batch blocking = all pairs),
-    // so every admit/reject is plain cosine logic a NOT-EXISTS chain
-    // replays. Duplicates are PLANTED by id arithmetic with
-    // power-of-two scales (bit-identical feed values in both engines):
-    // batch-1 rows dup their base anchor (reject vs state), pairs of
-    // batch-1 rows share an out-of-corpus donor direction (the
-    // smaller id wins within batch, the larger loses), and batch-2
-    // rows dup ADMITTED batch-1 directions (reject vs appended state).
-    // Output: every admitted id with its round-4 cosine to a fixed
-    // reference vector — membership AND payload pinned.
-    "s_embed_gate_stream" -> (embedGateRow(compact = false)),
-
-    // the semantic gate with its appends COMPACTION live (mirroring
-    // s_gate_compact_stream): in-stream folds at cadence 2 plus an
-    // explicit full fold between batches 2 and 3, so the last batch
-    // probes a fully folded state — the admitted set must be
-    // IDENTICAL to the fold-free row's (same replay SQL verbatim)
-    "s_embed_gate_compact" -> (embedGateRow(compact = true)),
-
-    // the gate with its appends COMPACTION live (VERDICT r12
-    // continuation): four micro-batches at compactEverySegs = 2 (the
-    // in-stream fold fires twice) plus an explicit full fold between
-    // batches 3 and 4, so the last batch probes a fully folded state —
-    // the accepted set must be IDENTICAL to the fold-free sequential
-    // replay (folds are invisible to gate decisions)
-    "s_gate_compact_stream" -> ((s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sgatec_idx").toString
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_sgatec_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_sgatec_ckpt").toString
-      val built = Dedup.minhashIndexBuild(
-        all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
-      val mod = F.col("doc_id") % 10
-      val batches = Seq(
-        mod >= 1 && mod <= 2, mod >= 3 && mod <= 4,
-        mod >= 5 && mod <= 6, mod >= 7
-      ).map(p => all.where(p).as[(Long, String)].collect().sortBy(_._1))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val q = graft.streaming.StreamingOps.minhashGateStream(
-        ms.toDF.toDF("doc_id", "text"), dir, out, ckpt,
-        jaccardThreshold = 0.8, compactEverySegs = 2)
-      try {
-        batches.take(3).foreach { b =>
-          ms.addData(b.toSeq); q.processAllAvailable()
-        }
-        Dedup.minhashCompactAppends(s, dir)
-        ms.addData(batches(3).toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      s.read.parquet(out).select("doc_id").orderBy("doc_id")
-        .localCheckpoint()
-    }),
-
-    // drift-triggered rebuild's batch half as its own oracle: rebuild
-    // over base + a streamed append segment == a cold build over the
-    // union, pinned END-TO-END by full-probe ranking every row after
-    // the swap (exact cosine order — the same degenerate-point
-    // argument as v_takedown_ivf)
-    "v_ivf_rebuild" -> ((s, d) => {
-      val e = emb(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_vrebuild_idx").toString
-      val idx = Similarity.ivfBuild(
-        e.where(F.col("id") % 2 === 0), nLists = 8)
-      Similarity.ivfSave(idx, dir)
-      val cents = idx.centroids
-      Similarity.ivfRelease(idx)
-      graft.streaming.StreamingOps.ivfAppendSegment(
-        graft.scale.DeterministicKMeans.assign(
-          e.where(F.col("id") % 2 =!= 0),
-          graft.scale.DeterministicKMeans.Model(
-            cents.sortBy(_._1).map(_._2)),
-          idCol = "id", vecCol = "vec").select("id", "vec", "cluster"),
-        dir, seg = 0L)
-      Similarity.ivfRebuild(s, dir, targetListSize = 125)
-      val post = Similarity.ivfLoad(s, dir)
-      val qv = queryVec(s, d)
-      val outDf = Similarity.ivfTopK(
-          post, qv, k = 1000000, nprobe = post.k)
-        .orderBy(F.col("score").desc, F.col("id").asc)
-        .localCheckpoint()
-      Similarity.ivfRelease(post)
-      outDf
-    }),
-
-    // GDPR-style takedown from a PERSISTED gate layout, oracled
-    // end-to-end (VERDICT r11 #3): the same gate feed as
-    // s_dedup_gate_stream builds base + two streamed append segments,
-    // then minhashLayoutRemove erases every %7==0 doc across base AND
-    // segments. The law under oracle: the surviving state equals a
-    // cold build over (base ∪ admitted survivors) minus the removed
-    // ids — emitted as each surviving doc's distinct-shingle count so
-    // the SQL replay pins the shingle frames too, not just band-row
-    // membership.
-    "d_takedown_gate" -> ((s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_dtake_idx").toString
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dtake_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_dtake_ckpt").toString
-      val built = Dedup.minhashIndexBuild(
-        all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
-      val b1 = all.where(F.col("doc_id") % 10 >= 1 && F.col("doc_id") % 10 <= 4)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val b2 = all.where(F.col("doc_id") % 10 >= 5)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val q = graft.streaming.StreamingOps.minhashGateStream(
-        ms.toDF.toDF("doc_id", "text"), dir, out, ckpt,
-        jaccardThreshold = 0.8)
-      try {
-        ms.addData(b1.toSeq)
-        q.processAllAvailable()
-        ms.addData(b2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      Dedup.minhashLayoutRemove(
-        s, dir, all.where(F.col("doc_id") % 7 === 0).select("doc_id"))
-      val st = Dedup.minhashIndexLoadWithAppends(s, dir)
-      st.refShingles
-        .select(F.col("doc_id"),
-          F.size(F.array_distinct(F.col("sh"))).as("n_shingles"))
-        .orderBy("doc_id")
-        .localCheckpoint()
-    }),
-
-    // IVF layout takedown at the degenerate full-probe point: base
-    // lists over the even ids, one streamed append segment carrying
-    // the odd ids against the FROZEN quantizer, then ivfLayoutRemove
-    // of every %5==0 id (hits base AND segment). Full probes with
-    // k ≥ corpus rank EVERY surviving vector exactly, so the oracle
-    // is brute-force cosine over the surviving embeddings — removed
-    // ids gone from every frame, all survivors still retrievable.
-    "v_takedown_ivf" -> ((s, d) => {
-      import s.implicits._
-      val e = emb(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_vtake_idx").toString
-      val idx = Similarity.ivfBuild(
-        e.where(F.col("id") % 2 === 0), nLists = 8)
-      Similarity.ivfSave(idx, dir)
-      val cents = idx.centroids
-      Similarity.ivfRelease(idx)
-      graft.streaming.StreamingOps.ivfAppendSegment(
-        graft.scale.DeterministicKMeans.assign(
-          e.where(F.col("id") % 2 =!= 0),
-          graft.scale.DeterministicKMeans.Model(
-            cents.sortBy(_._1).map(_._2)),
-          idCol = "id", vecCol = "vec").select("id", "vec", "cluster"),
-        dir, seg = 0L)
-      Similarity.ivfLayoutRemove(
-        s, dir, e.where(F.col("id") % 5 === 0).select("id"))
-      val post = Similarity.ivfLoad(s, dir)
-      val qv = e.where(F.col("id") === 1)
-        .select("vec").head.getSeq[Double](0).toArray
-      val outDf = Similarity.ivfTopK(
-          post, qv, k = 1000000, nprobe = post.k)
-        .orderBy(F.col("score").desc, F.col("id").asc)
-        .localCheckpoint()
-      Similarity.ivfRelease(post)
-      outDf
-    }),
-
-    // codec-layout takedowns (VERDICT r12 #2): each family's persisted
-    // layout (codes Parquet + quantizer sidecar) gets codesLayoutRemove
-    // of every %5==0 id, then a reload and a DEGENERATE-point search
-    // (rerank covers the corpus ⇒ the exact rerank IS the answer), so
-    // the oracle is brute-force cosine over the surviving embeddings —
-    // a removed id still in the codes would surface, a dropped
-    // survivor would be missing, and the reload proves the swap left a
-    // loadable layout. The quantizer sidecars stay frozen (documented
-    // contract), which the degenerate point makes irrelevant to the
-    // ranking.
-    "v_takedown_sq8" -> codecTakedownRow("sq8",
-      (e, dir) => Similarity.sq8Save(
-        Similarity.sq8Encode(e, persist = false), dir),
-      (s, dir, e, qv) => Similarity.sq8TopK(
-        Similarity.sq8Load(s, dir), e, qv,
-        k = 1000000, rerank = 1000000)),
-
-    "v_takedown_binary" -> codecTakedownRow("bin",
-      (e, dir) => Similarity.binarySave(
-        Similarity.binaryEncode(e, persist = false), dir),
-      (s, dir, e, qv) => Similarity.binaryTopK(
-        Similarity.binaryLoad(s, dir), e, qv,
-        k = 1000000, rerank = 1000000)),
-
-    "v_takedown_pq" -> codecTakedownRow("pq",
-      (e, dir) => {
-        val built = Similarity.pqBuild(e, m = 4, ksub = 8, iters = 10)
-        Similarity.pqSave(built, dir)
-        Similarity.pqRelease(built)
-      },
-      (s, dir, e, qv) => Similarity.pqTopK(
-        Similarity.pqLoad(s, dir), e, qv,
-        k = 1000000, rerank = 1000000)),
-
-    "v_takedown_opq" -> codecTakedownRow("opq",
-      (e, dir) => {
-        val built = Similarity.opqBuild(e, m = 4, ksub = 8, iters = 10)
-        Similarity.opqSave(built, dir)
-        Similarity.opqRelease(built)
-      },
-      (s, dir, e, qv) => Similarity.opqTopK(
-        Similarity.opqLoad(s, dir), e, qv,
-        k = 1000000, rerank = 1000000)),
-
-    // residual-sign layout takedown (VERDICT r13 #4): the fifth codec
-    // family PINNED instead of claimed covered "for free" by the
-    // shared codes/ shape — binaryResidualSave + codesLayoutRemove of
-    // every %5==0 id, reload through the residual-marker check, then
-    // the composed search at the degenerate point (full probes +
-    // rerank ≥ corpus ⇒ the exact rerank over surviving code rows IS
-    // the answer). Same survivors oracle as the other four families;
-    // the frozen in-memory quantizer keeps its own rows but a removed
-    // id absent from codes/ can never become a candidate.
-    "v_takedown_binary_resid" -> ((s, d) => {
-      val e = emb(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_vtake_binres").toString
-      val ivf = Similarity.ivfBuild(e, nLists = 8)
-      Similarity.binaryResidualSave(
-        Similarity.binaryResidualEncode(ivf, persist = false), dir)
-      Similarity.codesLayoutRemove(
-        s, dir, e.where(F.col("id") % 5 === 0).select("id"))
-      val qv = e.where(F.col("id") === 1)
-        .select("vec").head.getSeq[Double](0).toArray
-      val out = Similarity.ivfBinaryResidualTopK(
-          ivf, Similarity.binaryResidualLoad(s, dir), e, qv,
-          k = 1000000, nprobe = ivf.k, rerank = 1000000)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // streaming incremental profiling as a REAL stream (VERDICT r11
-    // #4): two MemoryStream micro-batches through profileStream's
-    // per-batch sketch sidecars, then profileOf merges them — the law
-    // is merged-sidecars == whole-corpus profile, so the output (and
-    // its SQL replay) is the same shape as p_incr_profile: exact
-    // counts/nulls/moments plus the HLL distinct pinned as a ±5%
-    // tolerance flag (sketch union is not byte-identical to a
-    // one-shot sketch — measured ±6 on 500 distinct at lgK=12).
-    "s_profile_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.Profile
-      val all = docs(s, d)
-      val cols = Seq("lang", "n_chars", "source")
-      val side = java.nio.file.Files
-        .createTempDirectory("graft_sprof").toString + "/sidecars"
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_sprof_ck").toString
-      val feed = all.select(
-          F.col("doc_id"), F.col("lang"),
-          F.col("n_chars").cast("long").as("n_chars"), F.col("source"))
-        .as[(Long, Option[String], Option[Long], Option[String])]
-      val b1 = feed.filter(_._1 % 2 == 0).collect().sortBy(_._1)
-      val b2 = feed.filter(_._1 % 2 == 1).collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Option[String], Option[Long], Option[String])](s)
-      val q = graft.streaming.StreamingOps.profileStream(
-        ms.toDF.toDF("doc_id", "lang", "n_chars", "source"),
-        cols, side, ckpt)
-      try {
-        ms.addData(b1.toSeq)
-        q.processAllAvailable()
-        ms.addData(b2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      val merged = graft.streaming.StreamingOps.profileOf(s, side)
-      val exact = Profile.profile(all, cols)
-        .select(F.col("column"), F.col("n_distinct").as("exact_distinct"))
-      merged.join(exact, "column")
-        .select(
-          F.col("column"), F.col("n_rows"), F.col("n_nulls"),
-          (F.abs(F.col("n_distinct") - F.col("exact_distinct")) <=
-            F.lit(0.05) * F.col("exact_distinct")).cast("int").as("dist_ok"),
-          F.col("min_v"), F.col("max_v"), F.col("mean_v"), F.col("std_v"))
-        .orderBy("column")
-        .localCheckpoint()
-    }),
-
-    // streaming heavy hitters as a REAL stream: per-batch exact tops
-    // + count-min sidecars, merged by heavyTokensOf. The SQL-checkable
-    // laws: COMPLETENESS (pigeonhole — every globally φ-frequent token
-    // is φ-frequent in ≥1 batch, so it must appear in the report; a
-    // miss surfaces as the -1 coalesce), the EXACT lb replay (sum of
-    // the token's per-batch counts where it cleared that batch's φ
-    // bar — deterministic given the doc_id%2 batch split), `certain`
-    // derived from that lb, and UB BRACKETING (count-min only ever
-    // over-counts, so ub ≥ the true count — pinned as a flag; the ub
-    // VALUE is sketch state, not SQL-expressible).
-    "s_heavy_tokens_stream" -> ((s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val side = java.nio.file.Files
-        .createTempDirectory("graft_shh").toString + "/hh"
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_shh_ck").toString
-      val b1 = all.where(F.col("doc_id") % 2 === 0)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val b2 = all.where(F.col("doc_id") % 2 === 1)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val q = graft.streaming.StreamingOps.heavyTokensStream(
-        ms.toDF.toDF("doc_id", "text"), phi = 0.002, side, ckpt)
-      try {
-        ms.addData(b1.toSeq)
-        q.processAllAvailable()
-        ms.addData(b2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      val report = graft.streaming.StreamingOps
-        .heavyTokensOf(s, side, phi = 0.002)
-      val exact = TextOps.heavyTokens(all, phi = 0.002)
-        .select(F.col("token"), F.col("n"))
-      exact.join(report, Seq("token"), "left")
-        .select(
-          F.col("token"), F.col("n"),
-          F.coalesce(F.col("lb"), F.lit(-1L)).as("lb"),
-          F.coalesce(F.col("certain"), F.lit(-1)).as("certain"),
-          F.coalesce((F.col("ub") >= F.col("n")).cast("int"), F.lit(0))
-            .as("ub_ok"))
-        .orderBy("token")
-        .localCheckpoint()
-    }),
-
-    // the COMPACTED face of s_profile_stream: four micro-batches with
-    // the fold cadence firing mid-stream (compactEverySegs = 2), then
-    // an explicit full fold — the law is that compaction is INVISIBLE
-    // to reads (counts/moments add exactly, HLL registers union), so
-    // profileOf over the folded sidecars still equals the whole-corpus
-    // profile and the SQL replay is s_profile_stream's verbatim
-    "s_profile_compact" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.Profile
-      val all = docs(s, d)
-      val cols = Seq("lang", "n_chars", "source")
-      val side = java.nio.file.Files
-        .createTempDirectory("graft_sprofc").toString + "/sidecars"
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_sprofc_ck").toString
-      val feed = all.select(
-          F.col("doc_id"), F.col("lang"),
-          F.col("n_chars").cast("long").as("n_chars"), F.col("source"))
-        .as[(Long, Option[String], Option[Long], Option[String])]
-      val batches = (0 until 4).map(r =>
-        feed.filter(_._1 % 4 == r).collect().sortBy(_._1))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Option[String], Option[Long], Option[String])](s)
-      val q = graft.streaming.StreamingOps.profileStream(
-        ms.toDF.toDF("doc_id", "lang", "n_chars", "source"),
-        cols, side, ckpt, compactEverySegs = 2)
-      try batches.foreach { b =>
-        ms.addData(b.toSeq); q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.StreamingOps.profileCompact(s, side)
-      val merged = graft.streaming.StreamingOps.profileOf(s, side)
-      val exact = Profile.profile(all, cols)
-        .select(F.col("column"), F.col("n_distinct").as("exact_distinct"))
-      merged.join(exact, "column")
-        .select(
-          F.col("column"), F.col("n_rows"), F.col("n_nulls"),
-          (F.abs(F.col("n_distinct") - F.col("exact_distinct")) <=
-            F.lit(0.05) * F.col("exact_distinct")).cast("int").as("dist_ok"),
-          F.col("min_v"), F.col("max_v"), F.col("mean_v"), F.col("std_v"))
-        .orderBy("column")
-        .localCheckpoint()
-    }),
-
-    // the COMPACTED face of s_heavy_tokens_stream: four doc_id%4
-    // batches with mid-stream folds plus a final full fold — tops rows
-    // sum by token (lb is a plain sum over recorded rows, preserved
-    // EXACTLY) and count-min cells add, so the post-fold report obeys
-    // the same SQL-checkable laws: completeness, the exact per-batch
-    // φ-bar lb replay, lb-derived certain, ub bracketing as a flag
-    "s_heavy_compact" -> ((s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val side = java.nio.file.Files
-        .createTempDirectory("graft_shhc").toString + "/hh"
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_shhc_ck").toString
-      val batches = (0 until 4).map(r =>
-        all.where(F.col("doc_id") % 4 === r)
-          .as[(Long, String)].collect().sortBy(_._1))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](s)
-      val q = graft.streaming.StreamingOps.heavyTokensStream(
-        ms.toDF.toDF("doc_id", "text"), phi = 0.002, side, ckpt,
-        compactEverySegs = 2)
-      try batches.foreach { b =>
-        ms.addData(b.toSeq); q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.StreamingOps.heavyTokensCompact(s, side)
-      val report = graft.streaming.StreamingOps
-        .heavyTokensOf(s, side, phi = 0.002)
-      val exact = TextOps.heavyTokens(all, phi = 0.002)
-        .select(F.col("token"), F.col("n"))
-      exact.join(report, Seq("token"), "left")
-        .select(
-          F.col("token"), F.col("n"),
-          F.coalesce(F.col("lb"), F.lit(-1L)).as("lb"),
-          F.coalesce(F.col("certain"), F.lit(-1)).as("certain"),
-          F.coalesce((F.col("ub") >= F.col("n")).cast("int"), F.lit(0))
-            .as("ub_ok"))
-        .orderBy("token")
-        .localCheckpoint()
-    }),
-
-    // streamed QUANTILE sidecars (the histogram face of the profile):
-    // three doc_id%3 micro-batches of documents.n_chars into fixed
-    // [0, 600)/24 buckets with the fold cadence firing mid-stream plus
-    // a final full fold — per-bucket counts are EXACTLY mergeable (a
-    // sum, no sketch), so the merged histogram AND the deterministic
-    // interpolated p50/p95 replay verbatim in SQL
-    "s_hist_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.Profile
-      val all = docs(s, d)
-      val side = java.nio.file.Files
-        .createTempDirectory("graft_shist").toString + "/hist"
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_shist_ck").toString
-      val feed = all.select(
-          F.col("doc_id"), F.col("n_chars").cast("double").as("n_chars"))
-        .as[(Long, Option[Double])]
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Option[Double])](s)
-      val q = graft.streaming.StreamingOps.histStream(
-        ms.toDF.toDF("doc_id", "n_chars"), "n_chars",
-        lo = 0.0, hi = 600.0, nBuckets = 24, side, ckpt,
-        compactEverySegs = 2)
-      try (0 until 3).foreach { r =>
-        ms.addData(feed.filter(_._1 % 3 == r).collect().sortBy(_._1).toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.StreamingOps.histCompact(s, side)
-      val counts = graft.streaming.StreamingOps.histOf(s, side)
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      val p50 = Profile.histQuantile(counts, 0.50, 0.0, 600.0, 24)
-      val p95 = Profile.histQuantile(counts, 0.95, 0.0, 600.0, 24)
-      graft.streaming.StreamingOps.histOf(s, side)
-        .withColumn("p50", F.round(F.lit(p50), 4))
-        .withColumn("p95", F.round(F.lit(p95), 4))
-        .orderBy("bucket")
-        .localCheckpoint()
-    }),
-
-    // drift from persisted state alone: PSI between the even- and
-    // odd-doc histogram sidecars (same fixed [0,600)/24 geometry as
-    // s_hist_stream) — no corpus rescan; counts and the round-6 psi
-    // terms replay exactly in SQL
-    "p_psi_hist" -> ((s, d) => {
-      import graft.operators.Profile
-      val all = docs(s, d)
-      val hist = (p: org.apache.spark.sql.Column) =>
-        Profile.histShard(all.where(p), "n_chars", 0.0, 600.0, 24)
-      Profile.psiFromHists(
-          hist(F.col("doc_id") % 2 === 0), hist(F.col("doc_id") % 2 === 1),
-          nBuckets = 24)
-        .localCheckpoint()
-    }),
-
-    // drop-vs-drop EMBEDDING drift (r13): a reference index over the
-    // even vectors, the odd vectors assigned against its FROZEN
-    // centroids, occupancy PSI over the cells — the k-means fit, the
-    // squared-L2 argmin assignment (lowest cell wins ties), and the
-    // psi arithmetic all replay exactly in SQL
-    "p_psi_embed" -> ((s, d) => {
-      val e = emb(s, d)
-      val ivf = Similarity.ivfBuild(
-        e.where(F.col("id") % 2 === 0), nLists = 8)
-      val out = Similarity.embeddingDriftPsi(
-          ivf, e.where(F.col("id") % 2 === 1))
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // histogram bounds taken FROM the profile sidecar instead of
-    // hand-picked (VERDICT r12 #6): lo/hi = the profiled min/max of
-    // n_chars, so nothing clamps and the quantile contract holds over
-    // the whole range. The SQL recomputes the same min/max — integer
-    // column cast to double, identical bucket and interpolation
-    // arithmetic — so buckets AND the p50/p95 estimates value-pin.
-    "p_hist_bounds" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.Profile
-      val all = docs(s, d)
-      val (lo, hi) = Profile.histBoundsFromProfile(
-        Profile.profile(all, Seq("n_chars")), "n_chars")
-      val counts = Profile.histShard(all, "n_chars", lo, hi, 16)
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      val p50 = Profile.histQuantile(counts, 0.50, lo, hi, 16)
-      val p95 = Profile.histQuantile(counts, 0.95, lo, hi, 16)
-      // the collected counts ARE the output rows — rebuild the frame
-      // from them instead of charging a second corpus scan to the row
-      counts.toDF("bucket", "n")
-        .withColumn("p50", F.round(F.lit(p50), 4))
-        .withColumn("p95", F.round(F.lit(p95), 4))
-        .orderBy("bucket")
-        .localCheckpoint()
-    }),
-
-    // tie-aware binary rerank oracled ON the trap it defuses: every
-    // abs(x)+1 vector is all-positive, so all sign codes are IDENTICAL
-    // and the whole corpus ties at Hamming 0 — the plain rerank-20 cut
-    // would keep the 20 smallest ids (near-random by similarity), but
-    // the tie-aware face detects the frontier tie, widens to the full
-    // tie class, and its exact rerank returns the true cosine top-20,
-    // which SQL replays directly (same abs(x)+1 transform)
-    "v_binary_tieaware" -> ((s, d) => {
-      val e = emb(s, d).select(F.col("id"),
-        F.transform(F.col("vec").cast("array<double>"),
-          x => F.abs(x) + F.lit(1.0)).as("vec"))
-      val q = queryVec(s, d).map(x => math.abs(x) + 1.0)
-      Similarity.binaryTopKTieAware(
-        Similarity.binaryEncode(e, persist = false), e, q,
-        k = 20, rerank = 20, expandCap = 1 << 20)
-    }),
-
-    // the composed face at the degenerate full-probe point: probing
-    // every list reduces it to the flat tie-aware cut, whose widened
-    // class covers the corpus — exact cosine top-20 again
-    "v_ivf_binary_tieaware" -> ((s, d) => {
-      val e = emb(s, d).select(F.col("id"),
-        F.transform(F.col("vec").cast("array<double>"),
-          x => F.abs(x) + F.lit(1.0)).as("vec"))
-      val q = queryVec(s, d).map(x => math.abs(x) + 1.0)
-      val ivf = Similarity.ivfBuild(e, nLists = 8)
-      val out = Similarity.ivfBinaryTopKTieAware(
-          ivf, Similarity.binaryEncode(e, persist = false), e, q,
-          k = 20, nprobe = 8, rerank = 20, expandCap = 1 << 20)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // batch face of the tie-aware rerank on the same constructed total
-    // tie: every query's frontier covers the corpus, so each qid's
-    // answer is its exact cosine top-10 over the transformed vectors
-    "v_binary_tieaware_batch" -> ((s, d) => {
-      val e = emb(s, d).select(F.col("id"),
-        F.transform(F.col("vec").cast("array<double>"),
-          x => F.abs(x) + F.lit(1.0)).as("vec"))
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      Similarity.binaryTopKBatchTieAware(
-        Similarity.binaryEncode(e, persist = false), e, qs,
-        k = 10, rerank = 10, expandCap = 1 << 20)
-    }),
-
-    // composed BATCH tie-aware face (VERDICT r12 #5) on the same
-    // constructed total tie, at full probes: the probed frontier
-    // covers the corpus, so each qid's answer is the exact cosine
-    // top-10 — the same replay as the flat batch face
-    // FILTERED composed tie-aware face on the same constructed total
-    // tie: full probes + a cap covering the corpus reduce it to exact
-    // filter-then-top-k over the matching (id % 3 == 0) rows — any
-    // non-matching id surfacing, or a matching id crowded out by the
-    // mode's tie class (the post-filter failure), breaks the replay
-    "v_ivf_binary_tieaware_filtered" -> ((s, d) => {
-      val e = emb(s, d).select(F.col("id"),
-        F.transform(F.col("vec").cast("array<double>"),
-          x => F.abs(x) + F.lit(1.0)).as("vec"))
-      val q = queryVec(s, d).map(x => math.abs(x) + 1.0)
-      val meta = e.select(F.col("id"),
-        (F.col("id") % 3 === 0).cast("string").as("k3"))
-      val ivf = Similarity.ivfBuild(e, nLists = 8)
-      val out = Similarity.ivfBinaryTopKTieAwareWhere(
-          ivf, Similarity.binaryEncode(e, persist = false), e, meta,
-          F.col("k3") === "true", q,
-          k = 20, nprobe = 8, rerank = 20, expandCap = 1 << 20)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    "v_ivf_binary_tieaware_batch" -> ((s, d) => {
-      val e = emb(s, d).select(F.col("id"),
-        F.transform(F.col("vec").cast("array<double>"),
-          x => F.abs(x) + F.lit(1.0)).as("vec"))
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val ivf = Similarity.ivfBuild(e, nLists = 8)
-      val out = Similarity.ivfBinaryTopKBatchTieAware(
-          ivf, Similarity.binaryEncode(e, persist = false), e, qs,
-          k = 10, nprobe = 8, rerank = 10, expandCap = 1 << 20)
-        .localCheckpoint()
-      Similarity.ivfRelease(ivf)
-      out
-    }),
-
-    // OPQ built from MERGED SHARD MOMENTS (the per-drop refit story as
-    // one operator): three uneven shards → additive PCA accumulators →
-    // opqRotationFromMoments → opqBuildWithRotation, queried at the
-    // degenerate exact-rerank point — an orthogonal rotation preserves
-    // every cosine, so the exact top-k SQL oracles the moments-merge →
-    // rotation → encode → ADC → rerank plumbing end-to-end
-    "v_opq_moments_topk" -> ((s, d) => {
-      import graft.scale.Pca
-      val e = emb(s, d)
-      val acc = Seq(
-          e.where(F.col("id") % 7 === 0),
-          e.where(F.col("id") % 7 === 1),
-          e.where(F.col("id") % 7 >= 2))
-        .map(sh => Pca.moments(sh, "vec", 64))
-        .reduce(Pca.mergeMoments)
-      val rot = Similarity.opqRotationFromMoments(acc, 64, m = 4)
-      val index = Similarity.opqBuildWithRotation(
-        e, rot, m = 4, ksub = 8, iters = 10)
-      val out = Similarity.opqTopK(index, e, queryVec(s, d), 20,
-          rerank = 100000)
-        .localCheckpoint()
-      Similarity.opqRelease(index)
-      out
-    }),
-
-    // hard negatives at the ROUTED sizing-matched default (VERDICT r11
-    // #1 shipped suggestNprobe; this row pins the nprobe = 0 routing
-    // end-to-end): at nLists = 8 the fraction-floored default probes
-    // ALL lists, so the approx path must return the exact cross-label
-    // top-k — v_hard_negatives' replay oracles the default's plumbing
-    "v_hard_negatives_suggest" -> ((s, d) => {
-      val e = tbl(s, d, "embeddings").select(
-        F.col("vec_id").as("id"),
-        F.col("embedding").cast("array<double>").as("vec"),
-        F.col("label"))
-      val q = e.where(F.col("id") < 5).select(
-        F.col("id").as("qid"), F.col("vec").as("qvec"),
-        F.col("label").as("qlabel"))
-      Similarity.hardNegativesApprox(e, q, k = 10, nLists = 8, nprobe = 0)
-    }),
-
-    // incremental index maintenance: fit the coarse quantizer on the
-    // even half, append the odd half against the FROZEN centroids —
-    // output is every row's list assignment in the widened index
-    "v_ivf_append" -> ((s, d) => {
-      val all = emb(s, d)
-      val idx0 = Similarity.ivfBuild(all.where(F.col("id") % 2 === 0),
-        nLists = 8)
-      val idx = Similarity.ivfAppend(idx0, all.where(F.col("id") % 2 =!= 0))
-      val out = idx.assigned.select(F.col("id"), F.col("cluster"))
-        .orderBy("id").localCheckpoint()
-      Similarity.ivfRelease(idx)
-      out
-    }),
-
-    "v_ivf_topk_batch" -> ((s, d) => {
-      // the batch-retrieval scale path: probe selection on the
-      // executors, ONE cluster-keyed join for all queries, salted
-      // per-query top-k (same operating point as v_ivf_topk)
-      val e = emb(s, d)
-      val index = Similarity.ivfBuild(e, nLists = 16)
-      val qs = e.where(F.col("id") <= 4)
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      Similarity.ivfTopKBatch(index, qs, k = 10, nprobe = 12)
-    }),
-
-    "d_ngram_jaccard" -> ((s, d) => {
-      // exact word-3-gram Jaccard over bounded pairs (adjacent doc ids
-      // within a source) — the verification kernel of the MinHash
-      // pipeline, exposed standalone and oracle-checked.
-      val base = docs(s, d)
-        .where(F.size(graft.operators.TextOps.tokens(F.col("text"))) >= 3)
-        .select(
-          F.col("doc_id"), F.col("source"),
-          Dedup.shingles(F.col("text"), 3).as("sh"))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      val ranked = base.withColumn("rn", F.row_number().over(w))
-      val a = ranked.select(
-        F.col("source"), F.col("rn"),
-        F.col("doc_id").as("doc_a"), F.col("sh").as("sh_a"))
-      val b = ranked.select(
-        F.col("source"), (F.col("rn") - 1).as("rn"),
-        F.col("doc_id").as("doc_b"), F.col("sh").as("sh_b"))
-      a.join(b, Seq("source", "rn"))
-        .select(
-          F.col("doc_a"), F.col("doc_b"),
-          F.round(
-            F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double") /
-              F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))), 4).as("jaccard"))
-        .orderBy("doc_a")
-    }),
-
-    "q_sessionize" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = eventsUs(s, d)
-      val byUser = Window.partitionBy("user_id").orderBy("ts")
-      ev
-        .withColumn("prev_ts", F.lag("ts", 1).over(byUser))
-        .withColumn(
-          "new_session",
-          F.when(
-            F.col("prev_ts").isNull ||
-              F.col("ts").cast("long") - F.col("prev_ts").cast("long") > 1800, 1)
-            .otherwise(0))
-        .withColumn("session_id", F.sum("new_session").over(byUser))
-        .groupBy("user_id")
-        .agg(
-          F.max("session_id").as("n_sessions"),
-          F.count(F.lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-
-    "q_rollup_revenue" -> ((s, d) =>
-      tbl(s, d, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_extendedprice"), 2).as("revenue"))
-        .select(
-          F.coalesce(F.col("l_returnflag"), F.lit("ALL")).as("rf"),
-          F.coalesce(F.col("l_linestatus"), F.lit("ALL")).as("ls"),
-          F.col("revenue"))
-        .orderBy("rf", "ls")),
-
-    "q_cube_stats" -> ((s, d) =>
-      tbl(s, d, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).as("n"))
-        .select(
-          F.coalesce(F.col("o_orderstatus"), F.lit("ALL")).as("st"),
-          F.coalesce(F.col("o_orderpriority"), F.lit("ALL")).as("pr"),
-          F.col("n"))
-        .orderBy("st", "pr")),
-
-    "q_set_ops" -> ((s, d) => {
-      val all = tbl(s, d, "orders").select("o_custkey").distinct()
-      val f = tbl(s, d, "orders")
-        .where(F.col("o_orderstatus") === "F").select("o_custkey").distinct()
-      val o = tbl(s, d, "orders")
-        .where(F.col("o_orderstatus") === "O").select("o_custkey").distinct()
-      val both = f.intersect(o)
-      val onlyF = f.except(o)
-      val spark = s
-      import spark.implicits._
-      Seq((all.count(), both.count(), onlyF.count()))
-        .toDF("n_custs", "n_both", "n_only_f")
-    }),
-
-    // MERGE INTO semantics: a deterministic changelog derived from the
-    // orders table (deletes on %10=7, a superseded then a winning
-    // update on %10=4, an update on %10=1, inserts on %10=2 at shifted
-    // keys) applied via last-writer-wins CDC merge
-    "q_merge_upsert" -> ((s, d) =>
-      graft.operators.Cdc.mergeChanges(
-          ordersSnapshot(s, d), ordersChangelog(s, d),
-          keys = Seq("o_orderkey"))
-        .orderBy("o_orderkey")),
-
-    // corpus snapshot diff: deterministic "next drop" derived from the
-    // corpus (drop %7, edit %5, add shifted ids), statuses by
-    // normalized-content fingerprint over one full-outer join
-    "d_corpus_diff" -> ((s, d) => {
-      val all = docs(s, d).select("doc_id", "text")
-      val k = F.col("doc_id")
-      val newDocs = all.where(k % 7 =!= 0)
-        .withColumn("text",
-          F.when(k % 5 === 0, F.concat(F.col("text"), F.lit(" revised")))
-            .otherwise(F.col("text")))
-        .unionByName(all.where(k % 11 === 3)
-          .select((k + 1000000L).as("doc_id"), F.col("text")))
-      graft.operators.Cdc.corpusDiff(all, newDocs)
-    }),
-
-    // the same changelog as an SCD2 history table: per-key version
-    // intervals in seq coordinates, deletes close without emitting
-    "q_scd2_history" -> ((s, d) =>
-      graft.operators.Cdc.scd2History(
-          ordersChangelog(s, d), keys = Seq("o_orderkey"))
-        .withColumn("is_current", F.col("is_current").cast("int"))
-        .orderBy("o_orderkey", "valid_from_seq")),
-
-    // ---- multimodal columns (binary payload + typed meta) ----
-    "mm_payload_stats" -> ((s, d) => {
-      import graft.operators.Multimodal
-      Multimodal.payloadStats(
-        Multimodal.syntheticMedia(docs(s, d), "doc_id", "text"))
-    }),
-    "mm_features" -> ((s, d) => {
-      import graft.operators.Multimodal
-      Multimodal.decodeFeatures(
-        Multimodal.syntheticMedia(docs(s, d), "doc_id", "text"), dim = 32)
-        .select("media_id", "kind")
-        .orderBy("media_id")
-    }),
-    "mm_frame_sample" -> ((s, d) => {
-      import graft.operators.Multimodal
-      Multimodal.frameSample(
-        Multimodal.syntheticMedia(docs(s, d), "doc_id", "text"), everyN = 2)
-        .select("media_id", "frame_idx")
-        .orderBy("media_id", "frame_idx")
-    }),
-
-    // ---- evaluation metrics (library kernels, SURVEY.md §2.4) ----
-    "m_eval_ann" -> ((s, d) => {
-      import graft.functions.VectorFunctions.cosine
-      import graft.metrics.RankingMetrics
-      val e = tbl(s, d, "embeddings").select(
-        F.col("vec_id"),
-        F.col("embedding").cast("array<double>").as("vec"),
-        F.col("label"))
-      val q = e.where(F.col("vec_id") <= 4).select(
-        F.col("vec_id").as("query_id"),
-        F.col("vec").as("qvec"),
-        F.col("label").as("qlabel"))
-      val scored = q.crossJoin(
-        e.select(F.col("vec_id").as("doc_id"), F.col("vec"), F.col("label")))
-        .where(F.col("doc_id") =!= F.col("query_id"))
-        .select(
-          F.col("query_id"), F.col("doc_id"),
-          cosine(F.col("qvec"), F.col("vec")).as("score"))
-      val retrieved = RankingMetrics.withRanks(scored)
-        .where(F.col("rank") <= 10)
-        .select("query_id", "doc_id", "rank")
-      val relevant = q.select("query_id", "qlabel")
-        .join(
-          e.select(F.col("vec_id").as("doc_id"), F.col("label").as("qlabel")),
-          Seq("qlabel"))
-        .where(F.col("doc_id") =!= F.col("query_id"))
-        .select("query_id", "doc_id")
-      RankingMetrics.recallAtK(retrieved, relevant, 10)
-        .crossJoin(RankingMetrics.mrr(retrieved, relevant))
-        .crossJoin(RankingMetrics.ndcgAtK(retrieved, relevant, 10))
-        .crossJoin(RankingMetrics.mapAtK(retrieved, relevant, 10))
-    }),
-
-    "m_eval_taumode" -> ((s, d) => {
-      // test_8 pattern: truth = top-10 cosine of the standard build,
-      // retrieved = taumode(τ=0.62) top-10 (reference
-      // tests/test_8_CVE_db_sweep.py:236-237).
-      import graft.metrics.RankingMetrics
-      val (m, _) = model(s, d)
-      val qv = queryVec(s, d)
-      // query_id = id*0 (always 0) rather than lit(0): a FOLDABLE
-      // query_id would be optimized out of withRanks' window partition
-      // spec, leaving a partition-less WindowExec that warns on every
-      // execution; this keeps the per-query window shape real
-      val retrieved = m.search(qv, tau = 0.62)
-        .select(
-          (F.col("id") * 0L).as("query_id"),
-          F.col("id").as("doc_id"), F.col("score"))
-      val relevant = m.search(qv, tau = 1.0)
-        .select((F.col("id") * 0L).as("query_id"), F.col("id").as("doc_id"))
-      val ranked = RankingMetrics.withRanks(retrieved)
-      RankingMetrics.recallAtK(ranked, relevant, 10)
-        .crossJoin(RankingMetrics.mrr(ranked, relevant))
-        .crossJoin(RankingMetrics.ndcgAtK(ranked, relevant, 10))
-    }),
-
-    "m_tau_sweep" -> ((s, d) => {
-      // test_4/test_7 pattern: sweep τ, score each ranking against the
-      // pure-cosine truth (reference tests/test_4:18-23, test_7:28).
-      // ONE distributed job for the whole sweep: items × τ-literals,
-      // per-τ window top-k, metrics in a single groupBy — not a
-      // 5×3-job driver loop.
-      import org.apache.spark.sql.expressions.Window
-      val (m, _) = model(s, d)
-      val qv = queryVec(s, d)
-      val lambdaQ = m.prepareQueryLambda(qv)
-      val q = F.typedLit(qv)
-      val taus = Seq(1.0, 0.9, 0.8, 0.62, 0.42)
-      import graft.functions.VectorFunctions.{cosine, lambdaProximity}
-      val scored = m.items
-        .select(F.col("id").as("doc_id"),
-          cosine(F.col("vec"), q).as("cos"),
-          lambdaProximity(F.col("lambda"), F.lit(lambdaQ)).as("prox"))
-        .crossJoin(s.range(1).select(F.explode(F.typedLit(taus)).as("tau")))
-        .withColumn("score",
-          F.col("tau") * F.col("cos") + (F.lit(1.0) - F.col("tau")) * F.col("prox"))
-      val w = Window.partitionBy("tau").orderBy(F.col("score").desc, F.col("doc_id").asc)
-      // localCheckpoint, not persist: ≤ |taus|·10 rows, materialized
-      // once and reused by both metric branches; no cache-manager entry
-      // to leak across the 202-query Verify session (blocks are
-      // GC-cleaned once the result frame is dropped)
-      val ranked = scored
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 10)
-        .select("tau", "doc_id", "rank")
-        .localCheckpoint()
-      val relevant = ranked.where(F.col("tau") === 1.0).select("doc_id")
-      val idcg = (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0))).sum
-      val hits = ranked.join(relevant, "doc_id")
-      val spark2 = s
-      import spark2.implicits._
-      taus.toDF("tau")
-        .join(
-          hits.groupBy("tau").agg(
-            F.count(F.lit(1)).as("nh"),
-            F.min("rank").as("fr"),
-            F.sum(F.lit(1.0) / F.log2(F.col("rank") + 1.0)).as("dcg")),
-          Seq("tau"), "left")
-        .select(
-          F.col("tau"),
-          F.round(F.coalesce(F.col("nh"), F.lit(0L)).cast("double") / 10.0, 6).as("recall_at_k"),
-          F.round(F.coalesce(F.lit(1.0) / F.col("fr"), F.lit(0.0)), 6).as("mrr"),
-          F.round(F.coalesce(F.col("dcg"), F.lit(0.0)) / idcg, 6).as("ndcg_at_k"))
-        .orderBy(F.col("tau").desc)
-    }),
-
-    "q_asof_enrich" -> ((s, d) => {
-      // as-of join (engine addition): each click enriched with the
-      // most recent prior view's value for the same user.
-      val ev = eventsUs(s, d)
-      val clicks = ev.where(F.col("event_type") === "click")
-      val views = ev.where(F.col("event_type") === "view")
-      graft.operators.AsOfJoin
-        .asofJoin(clicks, views, "user_id", "ts", "ts", Seq("value"))
-        .select(
-          F.col("event_id"), F.col("user_id"),
-          F.round(F.col("value"), 2).as("click_value"),
-          F.round(F.col("asof_value"), 2).as("last_view_value"))
-        .orderBy("event_id")
-    }),
-
-    "q_range_join" -> ((s, d) => {
-      // bucketed range join (engine addition): for each error event,
-      // count same-user clicks within ±5 minutes.
-      val ev = eventsUs(s, d)
-      val errors = ev.where(F.col("event_type") === "error")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.where(F.col("event_type") === "click")
-        .select(F.col("user_id"), F.col("ts"), F.col("event_id").as("click_id"))
-      graft.operators.RangeJoin
-        .rangeJoin(errors, clicks, "user_id", "ts", "ts", Seq("click_id"), 300L)
-        .groupBy("event_id", "user_id")
-        .agg(F.count(F.lit(1)).as("n_near_clicks"))
-        .orderBy("event_id")
-    }),
-
-    "q_interval_overlap" -> ((s, d) => {
-      // interval-overlap join (engine addition): each event is held
-      // open for 1-5 minutes (deterministic in event_id); count
-      // concurrent-activity pairs per user and the longest overlap.
-      // Naive SQL is an inequality self-join (nested-loop); the
-      // operator buckets both interval sets so candidates meet in one
-      // equi-join shuffle.
-      val iv = eventsUs(s, d).select(
-        F.col("event_id"), F.col("user_id"), F.col("ts").as("s"),
-        F.timestamp_micros(
-          F.unix_micros(F.col("ts")) +
-            (F.lit(1L) + F.col("event_id") % 5L) * 60000000L).as("e"))
-      graft.operators.RangeJoin
-        .intervalOverlapJoin(
-          iv, iv, "user_id", "s", "e", "s", "e",
-          Seq("event_id", "s", "e"), bucketWidthSec = 600L)
-        .where(F.col("event_id") < F.col("r_event_id"))
-        .groupBy("user_id")
-        .agg(
-          F.count(F.lit(1)).as("n_overlap_pairs"),
-          F.max(F.floor(
-            (F.unix_micros(F.least(F.col("e"), F.col("r_e"))) -
-              F.unix_micros(F.greatest(F.col("s"), F.col("r_s")))) / 1000000L))
-            .as("max_overlap_sec"))
-        .orderBy("user_id")
-    }),
-
-    "q_anomaly_events" -> ((s, d) => {
-      // trailing z-score anomaly hours (engine addition): hourly event
-      // counts per type densified by resampleGapFill (quiet hours are
-      // real zeros, not missing baseline rows), each hour scored
-      // against the previous 24 hours, |z| >= 2 flagged.
-      val hourly = graft.operators.TimeSeries
-        .resampleGapFill(eventsUs(s, d), "event_type", "ts", "value", "hour")
-      graft.operators.TimeSeries
-        .anomalyZScore(hourly, "event_type", "bucket_ts", "n_events",
-          trailing = 24, minPoints = 8, zThreshold = 2.0)
-        .where(F.col("is_anomaly"))
-        .select(
-          F.col("event_type"),
-          F.date_format(F.col("bucket_ts"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          F.col("n_events"), F.col("z"))
-        .orderBy("event_type", "hour")
-    }),
-
-    "m_rank_corr" -> ((s, d) => {
-      // test_2 pattern: Spearman + Kendall tau-b between the pure-
-      // cosine (tau=1.0) and taumode (tau=0.62) rankings of query 0.
-      import graft.metrics.RankingMetrics
-      val (m, _) = model(s, d)
-      val qv = queryVec(s, d)
-      // query_id = id*0, not lit(0) — see m_eval_taumode: a foldable
-      // key is stripped from the rank windows' partition specs
-      def ranked(t: Double) = RankingMetrics.withRanks(
-        m.search(qv, tau = t, topk = 20).select(
-          (F.col("id") * 0L).as("query_id"),
-          F.col("id").as("doc_id"), F.col("score")))
-      val a = ranked(1.0)
-      val b = ranked(0.62)
-      RankingMetrics.spearman(a, b).crossJoin(RankingMetrics.kendallTau(a, b))
-    }),
-
-    "m_paired_ttest" -> ((s, d) => {
-      // test_3 pattern: paired t between two per-entity measures (here
-      // customer account balance vs realized order spend — the
-      // relational stand-in that makes the kernel oracle-checkable;
-      // p_value is asserted against closed forms in MetricsSpec).
-      val cust = tbl(s, d, "customer")
-      val spend = tbl(s, d, "orders")
-        .groupBy("o_custkey").agg(F.sum("o_totalprice").as("spend"))
-      val paired = cust.join(spend, F.col("c_custkey") === F.col("o_custkey"))
-      graft.metrics.RankingMetrics.pairedTTest(paired, "c_acctbal", "spend")
-        .select(F.col("n"), F.round(F.col("t_stat"), 6).as("t_stat"), F.col("dof"))
-    }),
-
-    // ---- arrowspace operators (O1-O7; spectral — no SQL oracle) ----
-    "a_lambdas" -> ((s, d) => {
-      val (m, _) = model(s, d)
-      m.lambdas
-        .select(F.col("id"), F.round(F.col("lambda"), 6).as("lambda"))
-        .orderBy("id")
-    }),
-    "a_search" -> ((s, d) => {
-      val (m, _) = model(s, d)
-      m.search(queryVec(s, d), tau = 0.62)
-        .select(F.col("id"), F.round(F.col("score"), 6).as("score"))
-    }),
-    "a_search_hybrid" -> ((s, d) => {
-      val (m, _) = model(s, d)
-      m.searchHybrid(queryVec(s, d), tau = 0.8)
-        .select(F.col("id"), F.round(F.col("score"), 6).as("score"))
-    }),
-    "a_search_energy" -> ((s, d) => {
-      val (m, _) = model(s, d)
-      m.searchEnergy(queryVec(s, d), k = 10)
-        .select(F.col("id"), F.round(F.col("score"), 6).as("score"))
-    }),
-    "a_get_item" -> ((s, d) => {
-      val (m, _) = model(s, d)
-      m.getItem(7)
-        .select(F.col("id"), F.round(F.col("lambda"), 6).as("lambda"))
-    }),
-    "a_energy_lambdas" -> ((s, d) => {
-      val (m, _) = energyModel(s, d)
-      m.lambdas
-        .select(F.col("id"), F.round(F.col("lambda"), 6).as("lambda"))
-        .orderBy("id")
-    }),
-    "a_energy_search" -> ((s, d) => {
-      val (m, _) = energyModel(s, d)
-      m.searchEnergy(queryVec(s, d), k = 10)
-        .select(F.col("id"), F.round(F.col("score"), 6).as("score"))
-    }),
-    "a_graph_degrees" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      graft.graph.KnnGraph.degrees(edges)
-        .select(F.col("id"), F.round(F.col("degree"), 4).as("degree"))
-        .orderBy("id")
-    }),
-
-    // ---- graph analytics (GraphX; reference test_6 semantics) ----
-    "g_triangles" -> ((s, d) => {
-      // Exact cos>=0.3 threshold graph built broadcast-side (no
-      // cartesian join), then the relational 3-way-join count that
-      // matches the DuckDB oracle form.
-      val edges = graft.graph.GraphAnalytics.cosineThresholdEdges(emb(s, d), 0.3)
-      graft.graph.GraphAnalytics.triangleCount(edges)
-    }),
-    "g_conductance" -> ((s, d) => {
-      // conductance of the fixed node set {id < 250} in the eps-kNN
-      // graph — the one §2.3 graph kernel that is SQL-expressible on a
-      // deterministic set (community-based variants depend on LPA).
-      val (_, edges) = model(s, d)
-      val half = edges.agg(F.max("src")).head.getLong(0) / 2 + 1
-      val c = graft.graph.GraphAnalytics.conductance(
-        edges, (0L until half).toSet)
-      val spark2 = s
-      import spark2.implicits._
-      Seq(BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        .toDF("conductance")
-    }),
-
-    "g_ppr" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      val src = edges.agg(F.min("src")).head.getLong(0)
-      graft.graph.GraphAnalytics.personalizedPageRank(edges, src)
-        .select(F.col("id"), F.round(F.col("ppr"), 6).as("ppr"))
-        .orderBy("id")
-    }),
-    "g_components" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      graft.graph.GraphAnalytics.connectedComponents(edges).orderBy("id")
-    }),
-    "g_kcore" -> ((s, d) => {
-      // dense-backbone extraction: 3-core of the cos>=0.3 threshold
-      // graph (the kNN graph is degree-homogeneous by construction —
-      // its cores are all-or-nothing; the threshold graph peels over
-      // ~10 rounds to a 316-node core at sf0.01). 12 unrolled rounds
-      // in the oracle; the monotone fixpoint makes spares no-ops.
-      val und = graft.graph.GraphAnalytics
-        .cosineThresholdEdges(emb(s, d), 0.3)
-      val sym = und.unionByName(
-        und.select(F.col("dst").as("src"), F.col("src").as("dst")))
-      graft.graph.GraphAnalytics.kCore(sym, k = 3, maxRounds = 12)
-    }),
-    "g_communities" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      graft.graph.GraphAnalytics.labelPropagation(edges).orderBy("id")
-    }),
-    // unweighted shortest-path hops from the smallest node over the
-    // undirected kNN graph — frontier-bounded multi-source BFS; the
-    // oracle replays it as a round-capped recursive CTE with the same
-    // truncation (min hops within 20 rounds, unreachable rows absent)
-    "g_shortest_paths" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      val src = edges
-        .select(F.explode(F.array(F.col("src"), F.col("dst"))).as("n"))
-        .agg(F.min("n")).head.getLong(0)
-      graft.graph.GraphAnalytics.hopDistances(edges, Seq(src), maxHops = 20)
-        .orderBy("id")
-    }),
-    // the landmark-SET face: hops = distance to the NEAREST of two
-    // landmarks (min and max node id) — the seed-set distance feature;
-    // same recursive replay, seeded with both rows
-    "g_hop_landmarks" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      val mm = edges
-        .select(F.explode(F.array(F.col("src"), F.col("dst"))).as("n"))
-        .agg(F.min("n"), F.max("n")).head
-      graft.graph.GraphAnalytics.hopDistances(
-          edges, Seq(mm.getLong(0), mm.getLong(1)), maxHops = 20)
-        .orderBy("id")
-    }),
-    // harmonic centrality against the {min, max} landmark pair:
-    // Σ 1/d(l, v) over landmarks reached — TWO terms, so the floating
-    // sum is one commutative addition and round-4 is bit-stable
-    // against the SQL replay's order
-    "g_harmonic" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      val mm = edges
-        .select(F.explode(F.array(F.col("src"), F.col("dst"))).as("n"))
-        .agg(F.min("n"), F.max("n")).head
-      graft.graph.GraphAnalytics.harmonicCentrality(
-          edges, Seq(mm.getLong(0), mm.getLong(1)), maxHops = 20)
-        .orderBy("id")
-    }),
-    "g_topology_factor" -> ((s, d) => {
-      val (_, edges) = model(s, d)
-      val src = edges.agg(F.min("src")).head.getLong(0)
-      graft.graph.GraphAnalytics.topologyFactor(edges, src).orderBy("id")
-    }),
-    "m_topology_eval" -> ((s, d) => {
-      // test_6 pattern: score the taumode top-10 with the six
-      // graph-aware metrics; truth = cosine top-10, anchor = query id 0.
-      val (m, edges) = model(s, d)
-      val qv = queryVec(s, d)
-      val relevant = m.search(qv, tau = 1.0).select(F.col("id")).collect()
-        .map(_.getLong(0)).toSet
-      // the ranked list is ≤ topk rows by construction — rank it on
-      // the driver instead of a partition-less window (whose constant
-      // partition key would be folded away, leaving a single-task
-      // WindowExec that re-warns on every re-execution of the plan;
-      // at many-queries scale the per-query window in searchBatch is
-      // the distributed shape)
-      val spark2 = s
-      import spark2.implicits._
-      val retrieved = m.search(qv, tau = 0.62)
-        .select(F.col("id"), F.col("score")).collect()
-        .sortBy(r => (-r.getDouble(1), r.getLong(0)))
-        .zipWithIndex
-        .map { case (r, i) =>
-          (0L, r.getLong(0), i + 1,
-            if (relevant(r.getLong(0))) 1.0 else 0.0)
-        }
-        .toSeq.toDF("query_id", "doc_id", "rank", "grade")
-      val sources = Seq((0L, 0L)).toDF("query_id", "node_id")
-      graft.metrics.TopologyMetrics.evaluate(edges, retrieved, sources)
-        .select(
-          F.col("query_id"),
-          F.round(F.col("g_rbp"), 6).as("g_rbp"),
-          F.round(F.col("td_ndcg"), 6).as("td_ndcg"),
-          F.round(F.col("it_err"), 6).as("it_err"),
-          F.round(F.col("mrr_topo"), 6).as("mrr_topo"),
-          F.round(F.col("sqi"), 6).as("sqi"))
-    })
-  )
-
-  // ---------------------------------------------------------------- oracles
-
-  /** Shared DuckDB CTE chain for the dedup oracles: word-3-gram
-    * shingle sets → prefix-filtered candidate pairs (complete for
-    * J ≥ 0.8: the 0.2·n+1 prefix length is the standard prefix-filter
-    * bound) → exact Jaccard. Ends in jpairs(doc_a, doc_b, jaccard).
-    */
-  // 60-bit SimHash per document (mirrors Dedup.simhash exactly):
-  // explode whitespace tokens (duplicates kept — each occurrence
-  // votes), 60-bit md5-derived hash per token, ±1 majority per bit.
-  private val SimhashCte =
-    """stok AS (
-      |  SELECT doc_id,
-      |    unnest(string_split_regex(trim(text), '\s+')) AS token
-      |  FROM documents),
-      |sthash AS (
-      |  SELECT doc_id,
-      |    ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
-      |  FROM stok),
-      |sbits AS (
-      |  SELECT doc_id, r.range AS b,
-      |    sum(CASE WHEN ((h >> r.range) & 1) = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM sthash CROSS JOIN range(60) r
-      |  GROUP BY doc_id, r.range),
-      |sh AS (
-      |  SELECT doc_id,
-      |    CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END)
-      |      AS BIGINT) AS simhash
-      |  FROM sbits GROUP BY doc_id)""".stripMargin
-
-  /** The streaming gate's sequential replay chain (batch 1 collapse +
-    * base check, batch 2 against base ∪ batch-1 survivors), shared by
-    * the gate oracle and the takedown oracle built on top of it.
-    * Requires [[JaccardPairsCte]] earlier in the same WITH.
-    */
-  private val GateReplayCtes =
-    """fpk AS (
-      |  SELECT doc_id,
-      |    md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-      |  FROM documents),
-      |b1k AS (
-      |  SELECT min(doc_id) AS doc_id FROM fpk
-      |  WHERE doc_id % 10 BETWEEN 1 AND 4 GROUP BY fp),
-      |s1w AS (
-      |  SELECT doc_id FROM b1k WHERE doc_id NOT IN (
-      |    SELECT j.doc_b FROM jpairs j
-      |    JOIN b1k ka ON ka.doc_id = j.doc_a
-      |    JOIN b1k kb ON kb.doc_id = j.doc_b
-      |    WHERE j.jaccard >= 0.8)),
-      |s1 AS (
-      |  SELECT doc_id FROM s1w WHERE doc_id NOT IN (
-      |    SELECT doc_a FROM jpairs WHERE jaccard >= 0.8 AND doc_b % 10 = 0
-      |    UNION
-      |    SELECT doc_b FROM jpairs WHERE jaccard >= 0.8 AND doc_a % 10 = 0)),
-      |b2k AS (
-      |  SELECT min(doc_id) AS doc_id FROM fpk
-      |  WHERE doc_id % 10 >= 5 GROUP BY fp),
-      |s2w AS (
-      |  SELECT doc_id FROM b2k WHERE doc_id NOT IN (
-      |    SELECT j.doc_b FROM jpairs j
-      |    JOIN b2k ka ON ka.doc_id = j.doc_a
-      |    JOIN b2k kb ON kb.doc_id = j.doc_b
-      |    WHERE j.jaccard >= 0.8)),
-      |ref AS (
-      |  SELECT doc_id FROM documents WHERE doc_id % 10 = 0
-      |  UNION SELECT doc_id FROM s1),
-      |s2 AS (
-      |  SELECT doc_id FROM s2w WHERE doc_id NOT IN (
-      |    SELECT j.doc_a FROM jpairs j
-      |      JOIN ref r ON r.doc_id = j.doc_b WHERE j.jaccard >= 0.8
-      |    UNION
-      |    SELECT j.doc_b FROM jpairs j
-      |      JOIN ref r ON r.doc_id = j.doc_a WHERE j.jaccard >= 0.8))""".stripMargin
-
-  /** N-batch generalisation of [[GateReplayCtes]] — one (within-batch
-    * exact-fp dedup → within-batch near-dup → against base+accepted)
-    * stage per batch predicate, in arrival order. Requires
-    * [[JaccardPairsCte]] earlier in the same WITH. Compaction never
-    * appears here because the law it oracles is exactly that folds
-    * are INVISIBLE to gate decisions.
-    */
-  private def gateReplayCtes(preds: Seq[String]): String = {
-    val stages = preds.zipWithIndex.map { case (p, i) =>
-      val k = i + 1
-      val prior = (1 to i).map(j => s"  UNION SELECT doc_id FROM s$j")
-        .mkString("\n")
-      val priorBlock = if (prior.isEmpty) "" else "\n" + prior
-      s"""b${k}k AS (
-         |  SELECT min(doc_id) AS doc_id FROM fpk
-         |  WHERE $p GROUP BY fp),
-         |s${k}w AS (
-         |  SELECT doc_id FROM b${k}k WHERE doc_id NOT IN (
-         |    SELECT j.doc_b FROM jpairs j
-         |    JOIN b${k}k ka ON ka.doc_id = j.doc_a
-         |    JOIN b${k}k kb ON kb.doc_id = j.doc_b
-         |    WHERE j.jaccard >= 0.8)),
-         |ref$k AS (
-         |  SELECT doc_id FROM documents WHERE doc_id % 10 = 0$priorBlock),
-         |s$k AS (
-         |  SELECT doc_id FROM s${k}w WHERE doc_id NOT IN (
-         |    SELECT j.doc_a FROM jpairs j
-         |      JOIN ref$k r ON r.doc_id = j.doc_b WHERE j.jaccard >= 0.8
-         |    UNION
-         |    SELECT j.doc_b FROM jpairs j
-         |      JOIN ref$k r ON r.doc_id = j.doc_a WHERE j.jaccard >= 0.8))""".stripMargin
-    }
-    """fpk AS (
-      |  SELECT doc_id,
-      |    md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-      |  FROM documents),
-      |""".stripMargin + stages.mkString(",\n")
-  }
-
-  private val JaccardPairsCte =
-    """tok AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM documents),
-      |shl AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-      |    ELSE list_distinct(list_transform(range(1, len(t) - 1),
-      |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS s
-      |  FROM tok),
-      |ssh AS (SELECT doc_id, list_sort(s) AS s, len(s) AS n FROM shl),
-      |pref AS (
-      |  SELECT doc_id,
-      |    unnest(s[1 : greatest(1, cast(floor(0.2 * n) as int) + 1)]) AS pt
-      |  FROM ssh),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM pref a JOIN pref b ON a.pt = b.pt AND a.doc_id < b.doc_id),
-      |jpairs AS (
-      |  SELECT doc_a, doc_b,
-      |    round(len(list_intersect(x.s, y.s))::DOUBLE /
-      |      (x.n + y.n - len(list_intersect(x.s, y.s))), 4) AS jaccard
-      |  FROM cand JOIN ssh x ON x.doc_id = cand.doc_a
-      |            JOIN ssh y ON y.doc_id = cand.doc_b)""".stripMargin
-
-  /** Replay of Pca.fit/project as generated DuckDB SQL: the covariance
-    * from an unnested self-join, then the SAME fixed-start power
-    * iteration with Hotelling deflation, unrolled one CTE per
-    * iteration (the per-iteration normalize uses a whole-partition
-    * window so every CTE references its predecessor exactly once —
-    * linear, not exponential, under CTE inlining; the shared
-    * covariance CTEs are MATERIALIZED because c_k is probed by all
-    * `iters` matvecs). Power iteration is self-correcting, so the
-    * engine and oracle trajectories agree to ~1e-12 long before
-    * either has converged — round(…, 6) on both sides absorbs it.
-    */
-  private def pcaOracleSql(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH e AS MATERIALIZED (
-      |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-      |         unnest(CAST(embedding AS DOUBLE[])) AS x
-      |  FROM embeddings),
-      |n AS MATERIALIZED (SELECT count(*) AS n FROM embeddings),
-      |m AS MATERIALIZED (
-      |  SELECT i, sum(x) / (SELECT n FROM n) AS mu FROM e GROUP BY i),
-      |c0 AS MATERIALIZED (
-      |  SELECT g.i, g.j, g.s / (SELECT n FROM n) - ma.mu * mb.mu AS v
-      |  FROM (SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS s
-      |        FROM e a JOIN e b USING (vec_id) GROUP BY 1, 2) g
-      |  JOIN m ma ON ma.i = g.i JOIN m mb ON mb.i = g.j),
-      |v0 AS (SELECT i, 1.0 / sqrt((SELECT count(*) FROM m)) AS val FROM m)""".stripMargin
-    for (c <- 1 to k) {
-      val cov = s"c${c - 1}"
-      for (t <- 1 to iters) {
-        val prev = if (t == 1) "v0" else s"v${c}_${t - 1}"
-        // MATERIALIZED: DuckDB 1.0 inlines single-reference CTEs, and a
-        // 60-deep inlined chain made optimization time EXPONENTIAL in
-        // iteration count (measured: 8 iters 0.16 s, 12 iters 0.8 s);
-        // materializing each 64-row iterate keeps it linear (60 iters 0.35 s)
-        sb ++= s",\nv${c}_$t AS MATERIALIZED (SELECT i, s / sqrt(sum(s * s) OVER ()) AS val FROM " +
-          s"(SELECT c.i AS i, sum(c.v * p.val) AS s FROM $cov c JOIN $prev p ON c.j = p.i GROUP BY c.i))"
-      }
-      val vl = s"v${c}_$iters"
-      sb ++= s",\nl$c AS (SELECT sum(a.val * c.v * b.val) AS l FROM $cov c " +
-        s"JOIN $vl a ON c.i = a.i JOIN $vl b ON c.j = b.i)"
-      if (c < k)
-        sb ++= s",\nc$c AS MATERIALIZED (SELECT c.i, c.j, c.v - (SELECT l FROM l$c) * a.val * b.val AS v " +
-          s"FROM $cov c JOIN $vl a ON c.i = a.i JOIN $vl b ON c.j = b.i)"
-      sb ++= s",\nmd$c AS (SELECT sum(m.mu * v.val) AS md FROM m JOIN $vl v ON m.i = v.i)"
-      sb ++= s",\np$c AS (SELECT e.vec_id, sum(e.x * v.val) - (SELECT md FROM md$c) AS p " +
-        s"FROM e JOIN $vl v ON e.i = v.i GROUP BY e.vec_id)"
-      sb ++= s",\ns$c AS (SELECT $c AS component, round((SELECT l FROM l$c), 6) AS eigenvalue, " +
-        s"round(sum(p * p) / (SELECT n FROM n) - (sum(p) / (SELECT n FROM n)) * (sum(p) / (SELECT n FROM n)), 6) " +
-        s"AS var_proj FROM p$c)"
-    }
-    sb ++= "\n" + (1 to k).map(c => s"SELECT * FROM s$c").mkString(" UNION ALL ")
-    sb ++= "\nORDER BY component"
-    sb.toString
-  }
-
-  /** The IVF batch-retrieval replay (kmeans recurrence → per-qid probe
-    * ranking → probe-bounded scoring → per-qid top-10) — shared verbatim
-    * by `v_ivf_topk_batch` and the streamed `s_ivf_query_stream`, whose
-    * union-of-micro-batches equals the batch operator row-for-row.
-    */
-  private lazy val ivfTopKBatchReplaySql: String =
-    (s"""WITH ivsrc AS (SELECT vec_id AS id,
-        |  generate_subscripts(embedding, 1) AS f,
-        |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |${kmeansCtes("ivsrc", 16, 15, "iv")},
-        |qs AS (SELECT id AS qid, f, x FROM ivsrc WHERE id <= 4),
-        |cq AS (SELECT q.qid, k.c,
-        |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-        |  FROM ivkc15 k JOIN qs q ON q.f = k.f GROUP BY q.qid, k.c),
-        |probes AS (SELECT qid, c FROM (
-        |  SELECT qid, c, row_number() OVER (
-        |    PARTITION BY qid ORDER BY d, c) AS rn FROM cq) WHERE rn <= 12),
-        |sel AS (SELECT p.qid, fin.id
-        |  FROM ivfin fin JOIN probes p ON p.c = fin.c),
-        |scored AS (SELECT s.qid, a.id,
-        |  round(sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)), 4)
-        |    AS score
-        |  FROM ivsrc a JOIN sel s ON s.id = a.id
-        |  JOIN qs q ON q.qid = s.qid AND q.f = a.f
-        |  GROUP BY s.qid, a.id)
-        |SELECT qid, id, score FROM (
-        |  SELECT qid, id, score, row_number() OVER (
-        |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-        |  FROM scored) WHERE rn <= 10
-        |ORDER BY qid, score DESC, id ASC""".stripMargin
-      .replace(" AS (", " AS MATERIALIZED ("))
-
-  // shared by the four codec takedown rows (and the same contract as
-  // v_takedown_ivf's inline copy): at the degenerate point every
-  // family's post-takedown answer is the exact cosine order over the
-  // surviving (%5 <> 0) vectors
-  private lazy val takedownSurvivorsSql: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      |  FROM embeddings),
-      |q AS (SELECT v AS qv FROM e WHERE vec_id = 1)
-      |SELECT e.vec_id AS id,
-      |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-      |FROM e, q
-      |WHERE e.vec_id % 5 <> 0
-      |ORDER BY score DESC, id ASC""".stripMargin
-
-  // shared by the flat and composed tie-aware BATCH rows: on the
-  // constructed total tie every query's widened class is the whole
-  // corpus, so each qid's answer is its exact cosine top-10 over the
-  // abs(x)+1 vectors
-  private lazy val tieAwareBatchReplaySql: String =
-    """WITH e AS (SELECT vec_id AS id,
-      |  list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x) + 1.0)
-      |    AS v
-      |  FROM embeddings),
-      |q AS (SELECT id AS qid, v AS qv FROM e WHERE id <= 4),
-      |scored AS (SELECT q.qid, e.id,
-      |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-      |  FROM e CROSS JOIN q),
-      |ranked AS (SELECT qid, id, score,
-      |    row_number() OVER (PARTITION BY qid
-      |      ORDER BY score DESC, id ASC) AS rn
-      |  FROM scored)
-      |SELECT qid, id, score FROM ranked WHERE rn <= 10
-      |ORDER BY qid, score DESC, id ASC""".stripMargin
-
-  // the semantic gate at its one-list degenerate point is pure cosine
-  // logic: per batch, a row loses to a SMALLER-id batch row at round-4
-  // cosine >= 0.95, survivors reject against the state so far (base
-  // anchors + previously admitted FEED vectors), and the admitted rows
-  // join the state. The feed transforms replay bit-identically
-  // (power-of-two scales). Shared by the fold-free stream row and the
-  // compaction row — folds must be invisible to gate decisions, so the
-  // SQL is identical.
-  private lazy val embedGateReplaySql: String =
-      """WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |feed AS (SELECT s.id, s.id % 10 AS b,
-        |  CASE
-        |    WHEN s.id % 10 = 1 AND (s.id // 10) % 4 = 1
-        |      AND d1.v IS NOT NULL THEN list_transform(d1.v, x -> x * 2.0)
-        |    WHEN s.id % 10 = 1 AND (s.id // 10) % 8 = 3
-        |      AND d2.v IS NOT NULL THEN list_transform(d2.v, x -> x * 2.0)
-        |    WHEN s.id % 10 = 1 AND (s.id // 10) % 8 = 7
-        |      AND d3.v IS NOT NULL THEN list_transform(d3.v, x -> x * 4.0)
-        |    WHEN s.id % 10 = 2 AND (s.id // 10) % 8 = 3
-        |      AND d4.v IS NOT NULL THEN list_transform(d4.v, x -> x * 8.0)
-        |    ELSE s.v END AS fv
-        |  FROM e s
-        |  LEFT JOIN e d1 ON d1.id = s.id - 1
-        |  LEFT JOIN e d2 ON d2.id = s.id + 3
-        |  LEFT JOIN e d3 ON d3.id = s.id - 37
-        |  LEFT JOIN e d4 ON d4.id = s.id + 2
-        |  WHERE s.id % 10 BETWEEN 1 AND 3),
-        |st0 AS (SELECT id, v AS fv FROM e WHERE id % 10 = 0),
-        |b1 AS (SELECT id, fv FROM feed WHERE b = 1),
-        |b1w AS (SELECT x.id, x.fv FROM b1 x WHERE NOT EXISTS (
-        |  SELECT 1 FROM b1 y WHERE y.id < x.id
-        |    AND round(list_cosine_similarity(x.fv, y.fv), 4) >= 0.95)),
-        |b1a AS (SELECT x.id, x.fv FROM b1w x WHERE NOT EXISTS (
-        |  SELECT 1 FROM st0 t
-        |    WHERE round(list_cosine_similarity(x.fv, t.fv), 4) >= 0.95)),
-        |st1 AS (SELECT * FROM st0 UNION ALL SELECT * FROM b1a),
-        |b2 AS (SELECT id, fv FROM feed WHERE b = 2),
-        |b2w AS (SELECT x.id, x.fv FROM b2 x WHERE NOT EXISTS (
-        |  SELECT 1 FROM b2 y WHERE y.id < x.id
-        |    AND round(list_cosine_similarity(x.fv, y.fv), 4) >= 0.95)),
-        |b2a AS (SELECT x.id, x.fv FROM b2w x WHERE NOT EXISTS (
-        |  SELECT 1 FROM st1 t
-        |    WHERE round(list_cosine_similarity(x.fv, t.fv), 4) >= 0.95)),
-        |st2 AS (SELECT * FROM st1 UNION ALL SELECT * FROM b2a),
-        |b3 AS (SELECT id, fv FROM feed WHERE b = 3),
-        |b3w AS (SELECT x.id, x.fv FROM b3 x WHERE NOT EXISTS (
-        |  SELECT 1 FROM b3 y WHERE y.id < x.id
-        |    AND round(list_cosine_similarity(x.fv, y.fv), 4) >= 0.95)),
-        |b3a AS (SELECT x.id, x.fv FROM b3w x WHERE NOT EXISTS (
-        |  SELECT 1 FROM st2 t
-        |    WHERE round(list_cosine_similarity(x.fv, t.fv), 4) >= 0.95)),
-        |q AS (SELECT v AS qv FROM e WHERE id = 4)
-        |SELECT a.id, round(list_cosine_similarity(a.fv, q.qv), 4) AS score
-        |FROM (SELECT * FROM b1a UNION ALL SELECT * FROM b2a
-        |      UNION ALL SELECT * FROM b3a) a, q
-        |ORDER BY id""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "s_embed_gate_stream" -> embedGateReplaySql,
-    // folds are invisible to gate decisions — identical replay
-    "s_embed_gate_compact" -> embedGateReplaySql,
-
-    "v_takedown_sq8" -> takedownSurvivorsSql,
-    "v_takedown_binary" -> takedownSurvivorsSql,
-    "v_takedown_pq" -> takedownSurvivorsSql,
-    "v_takedown_opq" -> takedownSurvivorsSql,
-    "v_takedown_binary_resid" -> takedownSurvivorsSql,
-
-    "v_pca_summary" -> pcaOracleSql(3, 60),
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  round(avg(l_discount), 4) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1999-12-31'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey, orderdate
-        |ORDER BY revenue DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q5_revenue_by_nation" ->
-      """SELECT r_name, n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_window_top_customers" ->
-      """SELECT c_nationkey, rk, c_custkey, acctbal FROM (
-        |  SELECT c_nationkey, c_custkey, round(c_acctbal, 2) AS acctbal,
-        |    row_number() OVER (PARTITION BY c_nationkey
-        |      ORDER BY c_acctbal DESC, c_custkey ASC) AS rk
-        |  FROM customer)
-        |WHERE rk <= 3
-        |ORDER BY c_nationkey, rk""".stripMargin,
-
-    "q_distinct_part_stats" ->
-      """SELECT count(DISTINCT p_brand) AS n_brands,
-        |  count(DISTINCT p_type) AS n_types,
-        |  round(avg(p_retailprice), 4) AS avg_price,
-        |  round(min(p_retailprice), 2) AS min_price,
-        |  round(max(p_retailprice), 2) AS max_price
-        |FROM part""".stripMargin,
-
-    // NOT EXISTS, not NOT IN: a single NULL o_custkey would make
-    // NOT IN return zero rows while the engine's left_anti join
-    // (null-safe) keeps the normal counts
-    "q_bloom_semi" ->
-      """SELECT l_returnflag,
-        |  round(sum(l_extendedprice), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_orderkey IN
-        |  (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_bloom_anti" ->
-      """SELECT p_brand, count(*) AS n_parts
-        |FROM part
-        |WHERE NOT EXISTS
-        |  (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey
-        |   AND l_shipdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-
-    "q_customers_without_orders" ->
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer
-        |WHERE NOT EXISTS
-        |  (SELECT 1 FROM orders
-        |   WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q_events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        |  event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events
-        |GROUP BY hour, event_type
-        |HAVING count(*) >= 5
-        |ORDER BY hour, event_type""".stripMargin,
-
-    // funnel replay: chained min-after-previous-stage CTEs, LEFT JOINs
-    // keep stalled users, strftime for hash-stable timestamps
-    "q_event_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t2
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS t3
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-        |SELECT s1.user_id,
-        |  strftime(t1, '%Y-%m-%d %H:%M:%S') AS t_view,
-        |  strftime(t2, '%Y-%m-%d %H:%M:%S') AS t_click,
-        |  strftime(t3, '%Y-%m-%d %H:%M:%S') AS t_purchase,
-        |  ((t1 IS NOT NULL)::BIGINT + (t2 IS NOT NULL)::BIGINT
-        |    + (t3 IS NOT NULL)::BIGINT) AS n_stages
-        |FROM s1
-        |LEFT JOIN s2 ON s2.user_id = s1.user_id
-        |LEFT JOIN s3 ON s3.user_id = s1.user_id
-        |ORDER BY s1.user_id""".stripMargin,
-
-    // resample replay: per-user span via generate_series, LEFT JOIN
-    // marks gaps, last_value IGNORE NULLS forward-fills the rounded
-    // per-bucket sums
-    "q_resample_gapfill" ->
-      """WITH ev AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS b, value
-        |  FROM events WHERE user_id < 8),
-        |agg AS (
-        |  SELECT user_id, b, count(*) AS n, round(sum(value), 2) AS v
-        |  FROM ev GROUP BY 1, 2),
-        |span AS (
-        |  SELECT user_id, min(b) AS lo, max(b) AS hi FROM agg GROUP BY 1),
-        |grid AS (
-        |  SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
-        |    AS b
-        |  FROM span),
-        |j AS (
-        |  SELECT g.user_id, g.b, a.n, a.v
-        |  FROM grid g LEFT JOIN agg a USING (user_id, b))
-        |SELECT user_id, strftime(b, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  coalesce(n, 0)::BIGINT AS n_events,
-        |  coalesce(v, 0.0) AS sum_value,
-        |  last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY b
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS filled_value,
-        |  (n IS NULL)::INT AS is_gap
-        |FROM j
-        |ORDER BY user_id, hour""".stripMargin,
-
-    "q_topk_parts" ->
-      """SELECT p_partkey, p_brand, round(p_retailprice, 2) AS price
-        |FROM part
-        |ORDER BY price DESC, p_partkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q_ntile_window" ->
-      """SELECT c_mktsegment, c_custkey,
-        |  ntile(4) OVER w AS quartile,
-        |  round(first_value(c_acctbal) OVER w, 2) AS running_min
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment
-        |  ORDER BY c_acctbal ASC, c_custkey ASC)
-        |QUALIFY c_custkey <= 200
-        |ORDER BY c_mktsegment, c_custkey""".stripMargin,
-
-    "q_array_fns" ->
-      """SELECT vec_id AS id,
-        |  round(list_max(CAST(embedding AS DOUBLE[])), 4) AS vmax,
-        |  round(list_min(CAST(embedding AS DOUBLE[])), 4) AS vmin,
-        |  len(embedding) AS dim,
-        |  round(list_sort(CAST(embedding AS DOUBLE[]))[1], 4) AS sorted_first
-        |FROM embeddings
-        |WHERE vec_id <= 50
-        |ORDER BY id""".stripMargin,
-
-    "q_cond_agg" ->
-      """SELECT
-        |  count(*) FILTER (o_orderstatus = 'F') AS n_f,
-        |  count(*) FILTER (o_totalprice > 100000) AS n_big,
-        |  round(sum(CASE WHEN o_orderstatus = 'O' THEN o_totalprice
-        |    ELSE 0.0 END), 2) AS open_total
-        |FROM orders""".stripMargin,
-
-    "q_sql_correlated" ->
-      """SELECT c_mktsegment, count(*) AS n_active
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q_corr_stats" ->
-      """SELECT l_returnflag,
-        |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-        |  round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qty_price,
-        |  round(stddev_samp(l_extendedprice), 2) AS std_price,
-        |  round(var_samp(l_discount), 6) AS var_disc
-        |FROM lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
-        |  round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_moving_avg" ->
-      """SELECT user_id, event_id,
-        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS mov_avg
-        |FROM events
-        |WHERE user_id <= 20
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q_rank_events" ->
-      """SELECT event_type, rk, event_id, round(value, 4) AS value FROM (
-        |  SELECT event_type, event_id, value,
-        |    rank() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC) AS rk
-        |  FROM events)
-        |WHERE rk <= 5
-        |ORDER BY event_type, rk""".stripMargin,
-
-    "q_date_parts" ->
-      """SELECT year(o_orderdate) AS yr, quarter(o_orderdate) AS qtr,
-        |  count(*) AS n_orders, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |GROUP BY yr, qtr
-        |ORDER BY yr, qtr""".stripMargin,
-
-    "q_string_fns" ->
-      """SELECT p_partkey, upper(p_brand) AS brand_uc,
-        |  substring(p_type, 1, 6) AS type_pfx,
-        |  concat_ws('|', p_brand, p_type) AS bt,
-        |  length(p_name) AS name_len
-        |FROM part
-        |WHERE p_partkey <= 100
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_math_fns" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  round(sqrt(l_extendedprice), 4) AS sqrt_price,
-        |  round(ln(l_extendedprice + 1.0), 4) AS ln_price,
-        |  round(pow(l_discount, 2.0), 6) AS disc_sq,
-        |  CAST(floor(l_quantity) AS BIGINT) AS qty_floor,
-        |  round(abs(l_tax - 0.04), 4) AS tax_dev
-        |FROM lineitem
-        |WHERE l_orderkey <= 100
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "t_text_stats" ->
-      """SELECT doc_id,
-        |  length(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |  length(text) AS n_chars,
-        |  length(regexp_replace(text, '\s', '', 'g')) AS n_chars_nospace,
-        |  round(length(regexp_replace(text, '\s', '', 'g'))::DOUBLE
-        |    / length(string_split_regex(trim(text), '\s+')), 4) AS avg_token_len,
-        |  CAST(ceil(length(text)::DOUBLE / 4.0) AS BIGINT) AS bpe_est
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "t_text_quality" ->
-      """SELECT doc_id,
-        |  round(length(regexp_replace(lower(text), '[^aeiou]', '', 'g'))::DOUBLE
-        |    / length(text), 4) AS vowel_ratio,
-        |  round((length(text) - length(regexp_replace(text, '\s', '', 'g')))::DOUBLE
-        |    / length(text), 4) AS space_ratio,
-        |  round(length(string_split_regex(trim(text), '\s+'))::DOUBLE * 100.0
-        |    / length(text), 4) AS token_density,
-        |  round(length(regexp_replace(lower(text), '[^aeiou]', '', 'g'))::DOUBLE
-        |      / length(text) * 2.0
-        |    + length(string_split_regex(trim(text), '\s+'))::DOUBLE * 10.0
-        |      / length(text), 4) AS quality_score
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // Gopher rules replay: same integer counts, same cross-multiplied
-    // thresholds — no float ratio anywhere, so the verdict is
-    // bit-stable by construction
-    "t_gopher_rules" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    string_split_regex(trim(text), '\s+') AS toks,
-        |    string_split(text, chr(10)) AS lines
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    coalesce(len(toks), 0)::BIGINT AS n_words,
-        |    coalesce(length(regexp_replace(text, '\s', '', 'g')), 0)::BIGINT
-        |      AS n_word_chars,
-        |    coalesce(len(lines), 0)::BIGINT AS n_lines,
-        |    coalesce(len(list_filter(lines,
-        |      l -> regexp_matches(trim(l), '^[-*•]'))), 0)::BIGINT
-        |      AS n_bullet_lines,
-        |    coalesce(len(list_filter(lines,
-        |      l -> regexp_matches(rtrim(l), '\.\.\.$'))), 0)::BIGINT
-        |      AS n_ellipsis_lines,
-        |    coalesce(len(list_filter(toks,
-        |      t -> regexp_matches(t, '[A-Za-z]'))), 0)::BIGINT
-        |      AS n_alpha_words,
-        |    coalesce(len(list_filter(
-        |      ['the','be','to','of','and','that','have','with'],
-        |      w -> list_contains(list_transform(toks, t -> lower(t)), w))),
-        |      0)::BIGINT AS n_stopwords,
-        |    (coalesce(len(regexp_extract_all(text, '#')), 0)
-        |      + coalesce(len(regexp_extract_all(text, '\.\.\.')), 0))::BIGINT
-        |      AS n_symbols
-        |  FROM base)
-        |SELECT doc_id, n_words, n_word_chars, n_lines, n_bullet_lines,
-        |  n_ellipsis_lines, n_alpha_words, n_stopwords, n_symbols,
-        |  (n_words >= 50 AND n_words <= 100000
-        |    AND n_word_chars >= n_words * 3 AND n_word_chars <= n_words * 10
-        |    AND n_symbols * 10 <= n_words
-        |    AND n_bullet_lines * 10 < n_lines * 9
-        |    AND n_ellipsis_lines * 10 < n_lines * 3
-        |    AND n_alpha_words * 5 >= n_words * 4
-        |    AND n_stopwords >= 2)::INT AS passes
-        |FROM c
-        |ORDER BY doc_id""".stripMargin,
-
-    // C4 replay: same page derivation (RE2 \1 backref + 'g' flag where
-    // Spark replaces globally by default), same line keep-rules, same
-    // doc flags
-    "t_c4_rules" ->
-      """WITH prep AS (
-        |  SELECT doc_id,
-        |    regexp_replace(text, '((?:\S+ ){7}\S+) ', '\1.' || chr(10), 'g')
-        |      AS s
-        |  FROM documents),
-        |prep2 AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 5 = 2
-        |    THEN 'javascript cookies enable your browser please.'
-        |      || chr(10) || s
-        |    ELSE s END AS s FROM prep),
-        |prep3 AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
-        |    THEN s || chr(10) || 'lorem ipsum dolor sit amet friend.'
-        |    ELSE s END AS s FROM prep2),
-        |src AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 11 = 3
-        |    THEN s || chr(10) || 'if (x) { return y; }'
-        |    ELSE s END AS t FROM prep3),
-        |k AS (
-        |  SELECT doc_id, t, string_split(t, chr(10)) AS lines,
-        |    list_filter(string_split(t, chr(10)),
-        |      x -> regexp_matches(rtrim(x), '[.!?"]$')
-        |        AND len(string_split_regex(trim(x), '\s+')) >= 5
-        |        AND NOT regexp_matches(lower(x), 'javascript')) AS kept
-        |  FROM src),
-        |o AS (
-        |  SELECT doc_id,
-        |    array_to_string(kept, chr(10)) AS text_clean,
-        |    len(lines)::BIGINT AS n_lines,
-        |    len(kept)::BIGINT AS n_lines_kept,
-        |    coalesce(len(regexp_extract_all(
-        |      array_to_string(kept, chr(10)), '[.!?]')), 0)::BIGINT
-        |      AS n_sentences,
-        |    regexp_matches(lower(t), 'lorem ipsum') AS has_lorem,
-        |    regexp_matches(t, '\{') AS has_brace
-        |  FROM k)
-        |SELECT doc_id, text_clean, n_lines, n_lines_kept, n_sentences,
-        |  has_lorem::INT AS has_lorem, has_brace::INT AS has_brace,
-        |  (NOT has_lorem AND NOT has_brace AND n_sentences >= 3)::INT
-        |    AS passes
-        |FROM o
-        |ORDER BY doc_id""".stripMargin,
-
-    "t_lang_dist" ->
-      """SELECT lang, count(*) AS n_docs, round(avg(n_chars), 4) AS avg_chars
-        |FROM documents
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    "t_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "t_lang_id" ->
-      """SELECT doc_id,
-        |  CASE
-        |    WHEN list_contains(string_split_regex(trim(text), '\s+'), 'the')
-        |      OR list_contains(string_split_regex(trim(text), '\s+'), 'and') THEN 'en'
-        |    WHEN list_contains(string_split_regex(trim(text), '\s+'), 'der')
-        |      OR list_contains(string_split_regex(trim(text), '\s+'), 'und') THEN 'de'
-        |    WHEN list_contains(string_split_regex(trim(text), '\s+'), 'le')
-        |      OR list_contains(string_split_regex(trim(text), '\s+'), 'et') THEN 'fr'
-        |    WHEN list_contains(string_split_regex(trim(text), '\s+'), 'el')
-        |      OR list_contains(string_split_regex(trim(text), '\s+'), 'y') THEN 'es'
-        |    WHEN list_contains(string_split_regex(trim(text), '\s+'), '的') THEN 'zh'
-        |    ELSE 'unk'
-        |  END AS lang_guess
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // line-level cascade replay: newline split, blank lines dropped,
-    // the t_lang_id CASE per line, modal language via row_number
-    "t_lang_mix" ->
-      """WITH lines AS (
-        |  SELECT doc_id, l FROM (
-        |    SELECT doc_id, unnest(string_split(text, chr(10))) AS l
-        |    FROM documents WHERE text IS NOT NULL)
-        |  WHERE trim(l) <> ''),
-        |ll AS (SELECT doc_id,
-        |  CASE
-        |    WHEN list_contains(string_split_regex(trim(l), '\s+'), 'the')
-        |      OR list_contains(string_split_regex(trim(l), '\s+'), 'and') THEN 'en'
-        |    WHEN list_contains(string_split_regex(trim(l), '\s+'), 'der')
-        |      OR list_contains(string_split_regex(trim(l), '\s+'), 'und') THEN 'de'
-        |    WHEN list_contains(string_split_regex(trim(l), '\s+'), 'le')
-        |      OR list_contains(string_split_regex(trim(l), '\s+'), 'et') THEN 'fr'
-        |    WHEN list_contains(string_split_regex(trim(l), '\s+'), 'el')
-        |      OR list_contains(string_split_regex(trim(l), '\s+'), 'y') THEN 'es'
-        |    WHEN list_contains(string_split_regex(trim(l), '\s+'), '的') THEN 'zh'
-        |    ELSE 'unk'
-        |  END AS lang FROM lines),
-        |counts AS (SELECT doc_id, lang, count(*) AS cnt
-        |  FROM ll GROUP BY doc_id, lang),
-        |prim AS (SELECT doc_id, lang AS primary_lang FROM (
-        |  SELECT doc_id, lang, row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY cnt DESC, lang ASC) AS rn
-        |  FROM counts) WHERE rn = 1),
-        |agg AS (SELECT doc_id, count(*) AS n_lines,
-        |  count(DISTINCT CASE WHEN lang <> 'unk' THEN lang END) AS n_langs
-        |  FROM ll GROUP BY doc_id)
-        |SELECT a.doc_id, a.n_lines, p.primary_lang, a.n_langs,
-        |  (a.n_langs >= 2)::INT AS mixed
-        |FROM agg a JOIN prim p USING (doc_id)
-        |ORDER BY a.doc_id""".stripMargin,
-
-    "t_bpe_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS INT) AS n_bpe_tokens
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "t_quality_filter" ->
-      """SELECT doc_id FROM documents
-        |WHERE len(string_split_regex(trim(text), '\s+')) >= 10
-        |  AND length(regexp_replace(text, '\s', '', 'g'))::DOUBLE
-        |    / len(string_split_regex(trim(text), '\s+')) <= 12.0
-        |  AND length(regexp_replace(lower(text), '[^aeiou]', '', 'g'))::DOUBLE
-        |    / length(text) >= 0.2
-        |ORDER BY doc_id""".stripMargin,
-
-    "t_repetition" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split(text, chr(10)) AS ln,
-        |    string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |sig AS (
-        |  SELECT doc_id,
-        |    round(1.0 - len(list_distinct(ln))::DOUBLE / len(ln), 4)
-        |      AS dup_line_frac,
-        |    round(1.0 - len(list_distinct(t))::DOUBLE / len(t), 4)
-        |      AS dup_token_frac,
-        |    t
-        |  FROM base),
-        |bg AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t)),
-        |      i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM sig),
-        |top AS (
-        |  SELECT doc_id, max(c) AS mx, sum(c) AS nb
-        |  FROM (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY 1, 2)
-        |  GROUP BY doc_id)
-        |SELECT s.doc_id, s.dup_line_frac, s.dup_token_frac,
-        |  round(coalesce(mx::DOUBLE / nb, 0.0), 4) AS top_bigram_frac
-        |FROM sig s LEFT JOIN top USING (doc_id)
-        |ORDER BY s.doc_id""".stripMargin,
-
-    // same grafted-PII construction and RE2-safe patterns as the query
-    "t_pii_redact" ->
-      """WITH pii AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || doc_id ||
-        |    '@example.com ip 192.168.' || (doc_id % 256) || '.' ||
-        |    ((doc_id * 7) % 256) || ' tel +1 (555) 010-' ||
-        |    lpad(doc_id::VARCHAR, 4, '0') AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT)
-        |    AS n_emails,
-        |  CAST(len(regexp_extract_all(text,
-        |    '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS INT) AS n_ips,
-        |  CAST(len(regexp_extract_all(
-        |    regexp_replace(regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
-        |    '\+?[0-9][-() 0-9]{6,}[0-9]')) AS INT) AS n_phones,
-        |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
-        |    '\+?[0-9][-() 0-9]{6,}[0-9]', '<PHONE>', 'g')) AS red_fp
-        |FROM pii
-        |ORDER BY doc_id""".stripMargin,
-
-    // word 4-grams; docs with < 4 tokens collapse to one whole-text
-    // gram, mirroring Dedup.shingles
-    "d_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) < 4 THEN [array_to_string(t, ' ')]
-        |    ELSE list_transform(range(1, len(t) - 2),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-        |    END AS gs
-        |  FROM toks),
-        |g2 AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-        |ev AS (SELECT DISTINCT g FROM g2 WHERE doc_id % 20 = 0),
-        |bad AS (
-        |  SELECT DISTINCT doc_id FROM g2
-        |  WHERE doc_id % 20 != 0 AND g IN (SELECT g FROM ev))
-        |SELECT doc_id FROM documents
-        |WHERE doc_id % 20 != 0
-        |  AND doc_id NOT IN (SELECT doc_id FROM bad)
-        |ORDER BY doc_id""".stripMargin,
-
-    // contamination-report replay: distinct grams per side, equi-join,
-    // distinct-pair count per eval doc; zeros kept via LEFT JOIN
-    "d_contamination_report" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) < 4 THEN [array_to_string(t, ' ')]
-        |    ELSE list_transform(range(1, len(t) - 2),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-        |    END AS gs
-        |  FROM toks),
-        |g2 AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-        |eg AS (SELECT DISTINCT doc_id AS eid, g FROM g2 WHERE doc_id % 20 = 0),
-        |cg AS (SELECT DISTINCT doc_id AS cid, g FROM g2 WHERE doc_id % 20 <> 0),
-        |hits AS (
-        |  SELECT eid, count(DISTINCT cid) AS n
-        |  FROM eg JOIN cg USING (g) GROUP BY eid)
-        |SELECT d.doc_id AS eval_doc_id, coalesce(h.n, 0)::BIGINT AS n_corpus_hits
-        |FROM documents d LEFT JOIN hits h ON h.eid = d.doc_id
-        |WHERE d.doc_id % 20 = 0
-        |ORDER BY eval_doc_id""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED ("),
-
-    // repeated-span replay: full 3-token windows, grams in >= 2
-    // distinct docs, coverage as the same running-max interval sweep
-    // (pe = furthest end among earlier windows; each window adds
-    // n - overlap new positions)
-    "d_dup_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |w0 AS (
-        |  SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks),
-        |w2 AS (
-        |  SELECT doc_id, i,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-        |  FROM w0),
-        |dg AS (
-        |  SELECT g FROM (
-        |    SELECT g, count(DISTINCT doc_id) AS nd FROM w2 GROUP BY g)
-        |  WHERE nd >= 2),
-        |dw AS (SELECT doc_id, i FROM w2 WHERE g IN (SELECT g FROM dg)),
-        |cov0 AS (
-        |  SELECT doc_id, i,
-        |    max(i + 2) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-        |  FROM dw),
-        |per AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_dup_windows,
-        |    sum(greatest(0, 3 - greatest(0, coalesce(pe, 0) - i + 1)))::BIGINT
-        |      AS n_dup_tokens
-        |  FROM cov0 GROUP BY doc_id),
-        |base AS (
-        |  SELECT doc_id,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS n_tokens
-        |  FROM documents)
-        |SELECT b.doc_id, b.n_tokens,
-        |  greatest(b.n_tokens - 2, 0)::BIGINT AS n_windows,
-        |  coalesce(p.n_dup_windows, 0)::BIGINT AS n_dup_windows,
-        |  coalesce(p.n_dup_tokens, 0)::BIGINT AS n_dup_tokens
-        |FROM base b LEFT JOIN per p USING (doc_id)
-        |ORDER BY doc_id""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED ("),
-
-    // arbitrary-length substring-dedup replay: full 5-token windows,
-    // grams with >= 2 TOTAL occurrences (within-doc repeats count —
-    // Lee et al. semantics), then gaps-and-islands over the covered
-    // union (pe = furthest covered end among earlier windows; a window
-    // starts a new span iff it begins past pe + 1)
-    "d_substring_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |w0 AS (
-        |  SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i FROM toks),
-        |w2 AS (
-        |  SELECT doc_id, i,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |      || ' ' || t[i+4] AS g
-        |  FROM w0),
-        |dg AS (
-        |  SELECT g FROM (SELECT g, count(*) AS nocc FROM w2 GROUP BY g)
-        |  WHERE nocc >= 2),
-        |dw AS (SELECT doc_id, i FROM w2 WHERE g IN (SELECT g FROM dg)),
-        |c0 AS (
-        |  SELECT doc_id, i,
-        |    max(i + 4) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-        |  FROM dw),
-        |c1 AS (SELECT doc_id, i,
-        |  CASE WHEN pe IS NULL OR i > pe + 1 THEN 1 ELSE 0 END AS ns
-        |  FROM c0),
-        |c2 AS (SELECT doc_id, i,
-        |  sum(ns) OVER (PARTITION BY doc_id ORDER BY i) AS span_id
-        |  FROM c1)
-        |SELECT doc_id, min(i)::BIGINT AS span_start,
-        |  (max(i) + 4)::BIGINT AS span_end,
-        |  (max(i) + 4 - min(i) + 1)::BIGINT AS n_tokens
-        |FROM c2 GROUP BY doc_id, span_id
-        |ORDER BY doc_id, span_start""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED ("),
-
-    // gram-occupancy replay: distinct (doc, 6-gram) pairs (short docs
-    // collapse to one whole-text gram, mirroring explodedGrams), df>1
-    // buckets ranked by (df DESC, g ASC), pair mass n(n-1)/2 with
-    // cumulative and total columns; keys are dropped from the output
-    // so ties at the cut are value-identical
-    "d_gram_occupancy" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) < 6 THEN [array_to_string(t, ' ')]
-        |    ELSE list_transform(range(1, len(t) - 4),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |        || ' ' || t[i+4] || ' ' || t[i+5])
-        |    END AS gs
-        |  FROM toks),
-        |g2 AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-        |gd AS (SELECT DISTINCT doc_id, g FROM g2),
-        |sz AS (
-        |  SELECT g, count(*)::BIGINT AS n_docs,
-        |    (count(*) * (count(*) - 1) // 2)::BIGINT AS cand_pairs
-        |  FROM gd GROUP BY g HAVING count(*) > 1),
-        |tot AS (
-        |  SELECT coalesce(sum(cand_pairs), 0)::BIGINT AS total_pairs,
-        |    count(*)::BIGINT AS n_hot_buckets FROM sz),
-        |top AS (SELECT n_docs, cand_pairs, rnk FROM (
-        |  SELECT n_docs, cand_pairs, row_number() OVER (
-        |    ORDER BY n_docs DESC, g ASC) AS rnk FROM sz) WHERE rnk <= 20)
-        |SELECT rnk::BIGINT AS rnk, n_docs, cand_pairs,
-        |  sum(cand_pairs) OVER (ORDER BY rnk)::BIGINT AS cum_pairs,
-        |  total_pairs, n_hot_buckets
-        |FROM top, tot
-        |ORDER BY rnk""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED ("),
-
-    // curation recipe replay: sequential stage semantics — fingerprint
-    // groups over quality survivors only, contamination over surviving
-    // keepers only; gram construction copied from d_decontaminate
-    "d_curate_corpus" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
-        |q AS (
-        |  SELECT doc_id, text,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')) >= 20,
-        |      false) AS q_ok
-        |  FROM corpus),
-        |fpt AS (
-        |  SELECT doc_id, text,
-        |    md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM q WHERE q_ok),
-        |keep AS (SELECT fp, min(doc_id) AS keeper FROM fpt GROUP BY fp),
-        |wk AS (SELECT f.doc_id, f.text, k.keeper
-        |  FROM fpt f JOIN keep k USING (fp)),
-        |ktoks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM wk WHERE doc_id = keeper AND text IS NOT NULL),
-        |kgrams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) < 4 THEN [array_to_string(t, ' ')]
-        |    ELSE list_transform(range(1, len(t) - 2),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-        |    END AS gs
-        |  FROM ktoks),
-        |kg AS (SELECT doc_id, unnest(gs) AS g FROM kgrams),
-        |etoks AS (
-        |  SELECT string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents WHERE doc_id % 20 = 0 AND text IS NOT NULL),
-        |egrams AS (
-        |  SELECT CASE WHEN len(t) < 4 THEN [array_to_string(t, ' ')]
-        |    ELSE list_transform(range(1, len(t) - 2),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-        |    END AS gs
-        |  FROM etoks),
-        |ev AS (SELECT DISTINCT unnest(gs) AS g FROM egrams),
-        |contam AS (
-        |  SELECT DISTINCT kg.doc_id FROM kg
-        |  WHERE kg.g IN (SELECT g FROM ev))
-        |SELECT q.doc_id,
-        |  CASE WHEN NOT q.q_ok THEN 'quality'
-        |    WHEN q.doc_id <> w.keeper THEN 'exact_dup'
-        |    WHEN c.doc_id IS NOT NULL THEN 'contaminated'
-        |  END AS first_fail
-        |FROM q LEFT JOIN wk w ON w.doc_id = q.doc_id
-        |LEFT JOIN contam c ON c.doc_id = q.doc_id
-        |ORDER BY q.doc_id""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED ("),
-
-    // sliding 32-token windows every 24 tokens; DuckDB list slicing is
-    // 1-based inclusive and clamps at the list end, mirroring Spark's
-    // slice(t, s+1, window)
-    "t_chunk_windows" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(generate_series(0, len(t) - 1, 24)) AS s
-        |  FROM toks)
-        |SELECT doc_id, s // 24 AS chunk_id,
-        |  array_to_string(t[s + 1 : least(s + 32, len(t))], ' ') AS chunk_text,
-        |  (least(s + 32, len(t)) - s)::BIGINT AS n_tokens
-        |FROM starts
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // global token offset in doc_id order; the engine computes the
-    // same prefix sum distributed (two-phase), the oracle as a window
-    // coalesce mirrors the engine's null-text = 0 tokens on the ROW
-    // (the window sum already skips nulls, but the row's own n_tokens
-    // must also agree)
-    "t_pack_shards" ->
-      """WITH counts AS (
-        |  SELECT doc_id,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS n_tokens
-        |  FROM documents),
-        |cum AS (
-        |  SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-        |  FROM counts)
-        |SELECT doc_id, n_tokens, (before // 4096)::BIGINT AS shard,
-        |  (before % 4096)::BIGINT AS "offset"
-        |FROM cum
-        |ORDER BY doc_id""".stripMargin,
-
-    // greedy doc-boundary packing: one-doc-per-step recursive replay of
-    // the engine's exact break rule (n>0 AND fill>0 AND fill+n>budget)
-    "t_pack_greedy" ->
-      """WITH RECURSIVE counts AS (
-        |  SELECT doc_id,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS n,
-        |    row_number() OVER (ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |packed AS (
-        |  SELECT rn, doc_id, n, 0::BIGINT AS shard, 0::BIGINT AS off,
-        |    n AS fill
-        |  FROM counts WHERE rn = 1
-        |  UNION ALL
-        |  SELECT c.rn, c.doc_id, c.n,
-        |    CASE WHEN c.n > 0 AND p.fill > 0 AND p.fill + c.n > 4096
-        |         THEN p.shard + 1 ELSE p.shard END,
-        |    CASE WHEN c.n > 0 AND p.fill > 0 AND p.fill + c.n > 4096
-        |         THEN 0 ELSE p.fill END,
-        |    CASE WHEN c.n > 0 AND p.fill > 0 AND p.fill + c.n > 4096
-        |         THEN c.n ELSE p.fill + c.n END
-        |  FROM counts c JOIN packed p ON c.rn = p.rn + 1)
-        |SELECT doc_id, n AS n_tokens, shard, off AS "offset"
-        |FROM packed ORDER BY doc_id""".stripMargin,
-
-    // manifest over the same recursive replay; string_agg with ORDER BY
-    // mirrors the engine's array_sort(collect_list) layout order
-    "t_pack_manifest" ->
-      """WITH RECURSIVE counts AS (
-        |  SELECT doc_id,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS n,
-        |    row_number() OVER (ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |packed AS (
-        |  SELECT rn, doc_id, n, 0::BIGINT AS shard, n AS fill
-        |  FROM counts WHERE rn = 1
-        |  UNION ALL
-        |  SELECT c.rn, c.doc_id, c.n,
-        |    CASE WHEN c.n > 0 AND p.fill > 0 AND p.fill + c.n > 4096
-        |         THEN p.shard + 1 ELSE p.shard END,
-        |    CASE WHEN c.n > 0 AND p.fill > 0 AND p.fill + c.n > 4096
-        |         THEN c.n ELSE p.fill + c.n END
-        |  FROM counts c JOIN packed p ON c.rn = p.rn + 1)
-        |SELECT shard, count(*) AS n_docs, sum(n)::BIGINT AS n_tokens,
-        |  string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS doc_ids
-        |FROM packed GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "d_sample_stratified" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |  % 10000 < CASE WHEN source = 'src0' THEN 5000 ELSE 2000 END
-        |ORDER BY doc_id""".stripMargin,
-
-    // per-source rank stretched by the source's stride (exact binary
-    // doubles, so engine and oracle agree bit-for-bit)
-    "t_mix_interleave" ->
-      """SELECT doc_id, source AS stratum,
-        |  row_number() OVER (PARTITION BY source ORDER BY doc_id)
-        |    * CASE WHEN source = 'src0' THEN 2.0 ELSE 4.0 END AS mix_key
-        |FROM documents
-        |ORDER BY mix_key, stratum, doc_id""".stripMargin,
-
-    "d_exact_groups" ->
-      """SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp,
-        |  count(*) AS n_docs, min(doc_id) AS keeper
-        |FROM documents
-        |GROUP BY fp
-        |ORDER BY fp""".stripMargin,
-
-    // snapshot-diff replay: same derived "next drop", same normalized
-    // fingerprint as d_exact_groups, statuses off one full-outer join
-    "d_corpus_diff" ->
-      """WITH oldd AS (SELECT doc_id, text FROM documents),
-        |newd AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0 THEN text || ' revised'
-        |    ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |  WHERE doc_id % 11 = 3),
-        |fo AS (SELECT doc_id,
-        |  md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM oldd),
-        |fn AS (SELECT doc_id,
-        |  md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM newd)
-        |SELECT coalesce(fo.doc_id, fn.doc_id) AS doc_id,
-        |  CASE WHEN fo.doc_id IS NULL THEN 'added'
-        |       WHEN fn.doc_id IS NULL THEN 'removed'
-        |       WHEN fo.fp <> fn.fp THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM fo FULL OUTER JOIN fn ON fo.doc_id = fn.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "d_ngram_jaccard" ->
-      """WITH base AS (
-        |  SELECT doc_id, source,
-        |    list_distinct(list_transform(
-        |      range(1, len(string_split_regex(trim(text), '\s+')) - 1),
-        |      i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-        |           string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-        |           string_split_regex(trim(text), '\s+')[i+2])) AS sh
-        |  FROM documents
-        |  WHERE len(string_split_regex(trim(text), '\s+')) >= 3),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY source ORDER BY doc_id)
-        |    AS rn
-        |  FROM base)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  round(len(list_intersect(a.sh, b.sh))::DOUBLE /
-        |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4)
-        |    AS jaccard
-        |FROM ranked a JOIN ranked b
-        |  ON a.source = b.source AND b.rn = a.rn + 1
-        |ORDER BY doc_a""".stripMargin,
-
-    // All-pairs exact-Jaccard >= 0.8 via prefix filtering (complete:
-    // two sets with J >= t must share an element among the first
-    // ⌊(1-t)·n⌋+1 of a canonical ordering), so DuckDB never joins the
-    // full N² — the same candidates-then-verify shape as the engine.
-    "d_minhash_neardup" ->
-      s"""WITH $JaccardPairsCte
-        |SELECT doc_a, doc_b, jaccard FROM jpairs
-        |WHERE jaccard >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "d_dedup_corpus" ->
-      s"""WITH keepers AS (
-        |  SELECT min(doc_id) AS doc_id
-        |  FROM documents
-        |  GROUP BY md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))),
-        |documents_kept AS (
-        |  SELECT d.* FROM documents d JOIN keepers k USING (doc_id)),
-        |${JaccardPairsCte.replace("FROM documents", "FROM documents_kept")}
-        |SELECT doc_id FROM keepers
-        |WHERE doc_id NOT IN (
-        |  SELECT doc_b FROM jpairs WHERE jaccard >= 0.8)
-        |ORDER BY doc_id""".stripMargin,
-
-    // cross-corpus dedup replay: the complete >= 0.8 pair set (prefix-
-    // filter candidates, exact jaccard) restricted to pairs crossing
-    // the corpus/reference split; survivors = corpus docs in no such
-    // pair (either orientation — jpairs orders doc_a < doc_b)
-    "d_dedup_against" ->
-      s"""WITH $JaccardPairsCte
-        |SELECT doc_id FROM documents
-        |WHERE doc_id % 10 <> 0 AND doc_id NOT IN (
-        |  SELECT doc_a FROM jpairs WHERE jaccard >= 0.8 AND doc_b % 10 = 0
-        |  UNION
-        |  SELECT doc_b FROM jpairs WHERE jaccard >= 0.8 AND doc_a % 10 = 0)
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical contract to d_dedup_against — the index path stores
-    // precomputed band rows/shingles but the candidate scheme and
-    // verify are shared code, so the same replay applies
-    "d_dedup_against_index" ->
-      s"""WITH $JaccardPairsCte
-        |SELECT doc_id FROM documents
-        |WHERE doc_id % 10 <> 0 AND doc_id NOT IN (
-        |  SELECT doc_a FROM jpairs WHERE jaccard >= 0.8 AND doc_b % 10 = 0
-        |  UNION
-        |  SELECT doc_b FROM jpairs WHERE jaccard >= 0.8 AND doc_a % 10 = 0)
-        |ORDER BY doc_id""".stripMargin,
-
-    // the streaming gate replayed SEQUENTIALLY in exact SQL: batch 1's
-    // within-batch collapse (exact-fingerprint keepers, then near-dup
-    // doc_b drop over pairs inside the kept set) and index check
-    // against the base (%10=0); batch 2's the same, but against
-    // base ∪ batch-1 survivors — the self-growing state, in SQL.
-    // Candidate scheme and verify are shared code with d_dedup_corpus /
-    // d_dedup_against_index, so exact jpairs is the same contract.
-    "s_dedup_gate_stream" ->
-      s"""WITH $JaccardPairsCte,
-        |$GateReplayCtes
-        |SELECT doc_id FROM s1 UNION ALL SELECT doc_id FROM s2
-        |ORDER BY doc_id""".stripMargin,
-
-    // the same sequential gate law under a four-batch split — the
-    // replay has NO compaction stage because the law being oracled is
-    // that the in-stream and explicit folds never change a decision
-    "s_gate_compact_stream" ->
-      s"""WITH $JaccardPairsCte,
-        |${gateReplayCtes(Seq(
-             "doc_id % 10 BETWEEN 1 AND 2", "doc_id % 10 BETWEEN 3 AND 4",
-             "doc_id % 10 BETWEEN 5 AND 6", "doc_id % 10 >= 7"))}
-        |SELECT doc_id FROM s1 UNION ALL SELECT doc_id FROM s2
-        |UNION ALL SELECT doc_id FROM s3 UNION ALL SELECT doc_id FROM s4
-        |ORDER BY doc_id""".stripMargin,
-
-    // rebuild == cold build over base + appends, pinned by full-probe
-    // ranking EVERY row after the swap: exact cosine order
-    "v_ivf_rebuild" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC""".stripMargin,
-
-    // takedown replay: the state after the gate run is base ∪ s1 ∪ s2
-    // (the chain above), and minhashLayoutRemove is an EXACT per-doc
-    // erasure — so the post-takedown layout is that set minus the
-    // removed ids, each doc carrying its distinct-3-gram shingle count
-    // (ssh.n), which pins the SHINGLE frames too, not just band-row
-    // membership
-    "d_takedown_gate" ->
-      s"""WITH $JaccardPairsCte,
-        |$GateReplayCtes,
-        |st AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 10 = 0
-        |  UNION SELECT doc_id FROM s1
-        |  UNION SELECT doc_id FROM s2)
-        |SELECT st.doc_id, ssh.n AS n_shingles
-        |FROM st JOIN ssh ON ssh.doc_id = st.doc_id
-        |WHERE st.doc_id % 7 <> 0
-        |ORDER BY st.doc_id""".stripMargin,
-
-    // transitive closure of the exact >= 0.8 Jaccard pair graph via
-    // recursive min-label propagation (same pattern as g_components);
-    // keeper = component minimum
-    "d_dup_clusters" ->
-      s"""WITH RECURSIVE $JaccardPairsCte,
-        |dup AS (SELECT doc_a, doc_b FROM jpairs WHERE jaccard >= 0.8),
-        |sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM dup
-        |  UNION SELECT doc_b AS src, doc_a AS dst FROM dup),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |r(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.dst, r.lab FROM r JOIN sym s ON s.src = r.id
-        |  WHERE r.lab < s.dst)
-        |SELECT id AS doc_id, min(lab) AS keeper FROM r
-        |GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    // 60-bit SimHash recomputed end-to-end: md5-derived token hashes
-    // (('0x'||hex15)::BIGINT is the same value as Spark's
-    // conv(substr(md5(t),1,15),16,10)), ±1 majority vote per bit lane,
-    // bits reassembled below bit 63 so no sign/overflow divergence.
-    "d_simhash" ->
-      s"""WITH $SimhashCte
-        |SELECT doc_id, simhash FROM sh ORDER BY doc_id""".stripMargin,
-
-    // Pair semantics, not blocking internals: the engine's pigeonhole
-    // chunk join is candidate generation only — the contract is "all
-    // pairs at Hamming <= 3", which DuckDB verifies all-pairs (fine at
-    // oracle SF; the engine side never joins N²).
-    "d_simhash_neardup" ->
-      s"""WITH $SimhashCte
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY hamming, doc_a, doc_b
-        |LIMIT 100""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |      OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0
-        |    END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sess AS (
-        |  SELECT user_id,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM marked)
-        |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
-        |  count(*) AS n_events
-        |FROM sess
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q_rollup_revenue" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rf,
-        |  coalesce(l_linestatus, 'ALL') AS ls,
-        |  round(sum(l_extendedprice), 2) AS revenue
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-
-    "q_cube_stats" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS st,
-        |  coalesce(o_orderpriority, 'ALL') AS pr, count(*) AS n
-        |FROM orders
-        |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY st, pr""".stripMargin,
-
-    "q_set_ops" ->
-      """SELECT
-        |  (SELECT count(DISTINCT o_custkey) FROM orders) AS n_custs,
-        |  (SELECT count(*) FROM
-        |    (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |     INTERSECT
-        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'))
-        |    AS n_both,
-        |  (SELECT count(*) FROM
-        |    (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |     EXCEPT
-        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'))
-        |    AS n_only_f""".stripMargin,
-
-    // MERGE replay: same derived changelog, row_number (seq desc, op
-    // desc) picks the winner, full join applies it; 'D' winners drop
-    "q_merge_upsert" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |  FROM orders),
-        |ch AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |    'D' AS op, 1 AS seq FROM snap WHERE o_orderkey % 10 = 7
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    round(o_totalprice * 2, 4), 'U', 1 FROM snap
-        |  WHERE o_orderkey % 10 = 4
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    round(o_totalprice * 1.1, 4), 'U', 2 FROM snap
-        |  WHERE o_orderkey % 10 IN (1, 4)
-        |  UNION ALL
-        |  SELECT o_orderkey + 1000000, o_custkey, o_orderstatus,
-        |    o_totalprice, 'I', 1 FROM snap WHERE o_orderkey % 10 = 2),
-        |latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |      ORDER BY seq DESC, op DESC) AS rn FROM ch)
-        |  WHERE rn = 1)
-        |SELECT coalesce(l.o_orderkey, s.o_orderkey) AS o_orderkey,
-        |  CASE WHEN l.op IS NOT NULL THEN l.o_custkey
-        |    ELSE s.o_custkey END AS o_custkey,
-        |  CASE WHEN l.op IS NOT NULL THEN l.o_orderstatus
-        |    ELSE s.o_orderstatus END AS o_orderstatus,
-        |  CASE WHEN l.op IS NOT NULL THEN l.o_totalprice
-        |    ELSE s.o_totalprice END AS o_totalprice
-        |FROM snap s FULL JOIN latest l ON l.o_orderkey = s.o_orderkey
-        |WHERE l.op IS NULL OR l.op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // SCD2 replay: lead(seq) over (seq asc, op asc) closes each
-    // version at the key's next change; 'D' rows close but emit none
-    "q_scd2_history" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |  FROM orders),
-        |ch AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |    'D' AS op, 1 AS seq FROM snap WHERE o_orderkey % 10 = 7
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    round(o_totalprice * 2, 4), 'U', 1 FROM snap
-        |  WHERE o_orderkey % 10 = 4
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    round(o_totalprice * 1.1, 4), 'U', 2 FROM snap
-        |  WHERE o_orderkey % 10 IN (1, 4)
-        |  UNION ALL
-        |  SELECT o_orderkey + 1000000, o_custkey, o_orderstatus,
-        |    o_totalprice, 'I', 1 FROM snap WHERE o_orderkey % 10 = 2),
-        |v AS (
-        |  SELECT *, lead(seq) OVER (PARTITION BY o_orderkey
-        |    ORDER BY seq ASC, op ASC) AS vt FROM ch)
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |  seq::BIGINT AS valid_from_seq, vt::BIGINT AS valid_to_seq,
-        |  (vt IS NULL)::INT AS is_current
-        |FROM v WHERE op <> 'D'
-        |ORDER BY o_orderkey, valid_from_seq""".stripMargin,
-
-    "mm_payload_stats" ->
-      """SELECT CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |    ELSE 'video' END AS kind,
-        |  count(*) AS n_media,
-        |  round(avg(octet_length(encode(text))), 4) AS avg_bytes,
-        |  max(octet_length(encode(text))) AS max_bytes
-        |FROM documents
-        |GROUP BY kind
-        |ORDER BY kind""".stripMargin,
-
-    "m_eval_ann" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv, label AS qlabel
-        |  FROM e WHERE vec_id <= 4),
-        |scored AS (SELECT q.query_id, e.vec_id AS doc_id,
-        |    list_cosine_similarity(e.v, q.qv) AS score
-        |  FROM e, q WHERE e.vec_id <> q.query_id),
-        |ranked AS (SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, doc_id ASC) AS rank
-        |  FROM scored),
-        |retrieved AS (SELECT * FROM ranked WHERE rank <= 10),
-        |relevant AS (SELECT q.query_id, e.vec_id AS doc_id
-        |  FROM e, q WHERE e.label = q.qlabel AND e.vec_id <> q.query_id),
-        |nrel AS (SELECT query_id, count(*) AS n_rel FROM relevant GROUP BY 1),
-        |hits AS (SELECT r.query_id, r.doc_id, r.rank
-        |  FROM retrieved r JOIN relevant v
-        |    ON r.query_id = v.query_id AND r.doc_id = v.doc_id),
-        |recall_q AS (SELECT n.query_id,
-        |    coalesce(h.c, 0)::DOUBLE / n.n_rel AS recall
-        |  FROM nrel n LEFT JOIN
-        |    (SELECT query_id, count(*) c FROM hits GROUP BY 1) h
-        |    ON n.query_id = h.query_id),
-        |mrr_q AS (SELECT q.query_id,
-        |    coalesce(1.0 / f.first_rank, 0.0) AS rr
-        |  FROM (SELECT query_id FROM nrel) q LEFT JOIN
-        |    (SELECT query_id, min(rank) AS first_rank FROM hits GROUP BY 1) f
-        |    ON q.query_id = f.query_id),
-        |dcg_q AS (SELECT query_id, sum(1.0 / log2(rank + 1)) AS dcg
-        |  FROM hits GROUP BY 1),
-        |idcg_q AS (SELECT n.query_id,
-        |    sum(1.0 / log2(i + 1)) AS idcg
-        |  FROM nrel n, unnest(range(1, least(n.n_rel, 10) + 1)) AS t(i)
-        |  GROUP BY 1),
-        |ndcg_q AS (SELECT i.query_id,
-        |    coalesce(d.dcg, 0.0) / CASE WHEN i.idcg = 0 THEN 1 ELSE i.idcg END AS ndcg
-        |  FROM idcg_q i LEFT JOIN dcg_q d ON i.query_id = d.query_id),
-        |prec AS (SELECT h.query_id, h.rank,
-        |    (SELECT count(*) FROM hits h2
-        |      WHERE h2.query_id = h.query_id AND h2.rank <= h.rank)::DOUBLE
-        |      / h.rank AS p
-        |  FROM hits h),
-        |ap_q AS (SELECT n.query_id,
-        |    coalesce(s.sp, 0.0) / least(n.n_rel, 10) AS ap
-        |  FROM nrel n LEFT JOIN
-        |    (SELECT query_id, sum(p) sp FROM prec GROUP BY 1) s
-        |    ON n.query_id = s.query_id)
-        |SELECT
-        |  (SELECT round(avg(recall), 6) FROM recall_q) AS recall_at_k,
-        |  (SELECT round(avg(rr), 6) FROM mrr_q) AS mrr,
-        |  (SELECT round(avg(ndcg), 6) FROM ndcg_q) AS ndcg_at_k,
-        |  (SELECT round(avg(ap), 6) FROM ap_q) AS map_at_k""".stripMargin,
-
-    "v_ann_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // SQ8 replay: per-dim min/max arrays, affine 0..255 quantize +
-    // dequantize (constant dims pass through), dequantized-cosine
-    // candidate cut at 100 (round-4 then id tiebreak), exact rerank
-    "v_ann_topk_sq8" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |idx AS (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS j
-        |  FROM e),
-        |dims AS (SELECT j, min(v[j]) AS mn, max(v[j]) AS mx
-        |  FROM idx GROUP BY j),
-        |stats AS (SELECT list(mn ORDER BY j) AS mns,
-        |    list(mx ORDER BY j) AS mxs FROM dims),
-        |dq AS (SELECT e.vec_id,
-        |    list_transform(range(1, len(e.v) + 1), j ->
-        |      CASE WHEN s.mxs[j] = s.mns[j] THEN s.mns[j]
-        |        ELSE s.mns[j]
-        |          + round((e.v[j] - s.mns[j]) / (s.mxs[j] - s.mns[j]) * 255.0)
-        |            * (s.mxs[j] - s.mns[j]) / 255.0
-        |      END) AS dv
-        |  FROM e, stats s),
-        |ap AS (SELECT d.vec_id,
-        |    round(list_cosine_similarity(d.dv, q.qv), 4) AS approx
-        |  FROM dq d, q),
-        |cand AS (SELECT vec_id FROM ap
-        |  ORDER BY approx DESC, vec_id ASC LIMIT 100)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e JOIN cand USING (vec_id), q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // binary replay at the PRODUCTION operating point: hamming =
-    // count of per-dimension sign disagreements (x > 0, NULL-false
-    // like the engine's packer), integer-exact candidate cut, then
-    // the exact cosine rerank
-    "v_ann_topk_binary" ->
-      """WITH src AS (SELECT vec_id AS id,
-        |    generate_subscripts(embedding, 1) AS f,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |q AS (SELECT f, x FROM src WHERE id = 0),
-        |ham AS (SELECT s.id,
-        |    sum(CASE WHEN COALESCE(s.x > 0, FALSE)
-        |      <> COALESCE(q.x > 0, FALSE) THEN 1 ELSE 0 END) AS h
-        |  FROM src s JOIN q ON q.f = s.f GROUP BY s.id),
-        |cand AS (SELECT id FROM ham ORDER BY h ASC, id ASC LIMIT 60),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |qv AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, qv.qv), 4) AS score
-        |FROM e JOIN cand ON cand.id = e.vec_id, qv
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // per-query generalization of the binary replay (qids 0..4)
-    "v_ann_topk_binary_batch" ->
-      """WITH src AS (SELECT vec_id AS id,
-        |    generate_subscripts(embedding, 1) AS f,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |qs AS (SELECT id AS qid, f, x FROM src WHERE id <= 4),
-        |ham AS (SELECT q.qid, s.id,
-        |    sum(CASE WHEN COALESCE(s.x > 0, FALSE)
-        |      <> COALESCE(q.x > 0, FALSE) THEN 1 ELSE 0 END) AS h
-        |  FROM src s JOIN qs q ON q.f = s.f GROUP BY q.qid, s.id),
-        |cand AS (SELECT qid, id FROM (
-        |    SELECT qid, id, row_number() OVER (PARTITION BY qid
-        |      ORDER BY h ASC, id ASC) AS rn FROM ham) WHERE rn <= 60),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |qv AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id <= 4),
-        |scored AS (SELECT c.qid, e.vec_id AS id,
-        |    round(list_cosine_similarity(e.v, qv.qv), 4) AS score
-        |  FROM cand c JOIN e ON e.vec_id = c.id
-        |  JOIN qv ON qv.qid = c.qid),
-        |ranked AS (SELECT qid, id, score, row_number() OVER (
-        |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-        |  FROM scored)
-        |SELECT qid, id, score FROM ranked WHERE rn <= 10
-        |ORDER BY qid, score DESC, id ASC""".stripMargin,
-
-    // OPQ degenerate-point replay: with rerank covering the corpus
-    // the output is the exact cosine top-20 regardless of codes, and
-    // orthogonality makes rotated cosines == raw cosines — the same
-    // exact SQL as v_ann_topk
-    "v_opq_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // exact per-qid cosine top-10 (self included — the batch face
-    // does not exclude the query row); the degenerate-point argument
-    // is v_opq_topk's, per query
-    "v_opq_topk_batch" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id <= 4),
-        |scored AS (SELECT q.qid, e.vec_id AS id,
-        |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |  FROM e CROSS JOIN q),
-        |ranked AS (SELECT qid, id, score,
-        |    row_number() OVER (PARTITION BY qid
-        |      ORDER BY score DESC, id ASC) AS rn
-        |  FROM scored)
-        |SELECT qid, id, score FROM ranked WHERE rn <= 10
-        |ORDER BY qid, score DESC, id ASC""".stripMargin,
-
-    // PQ replay: 4 per-subspace DeterministicKMeans recurrences (8
-    // codebook entries, 10 Lloyd rounds over 16-dim slices; same CTE
-    // generator as the IVF oracle), reconstruction = the concatenated
-    // assigned centroids, ADC approx = cosine(query, reconstruction)
-    // (round-4, id tiebreak) cut at 100, exact rerank top-20
-    "v_ann_topk_pq" ->
-      (s"""WITH pqsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |p0src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 1 AND 16),
-          |p1src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 17 AND 32),
-          |p2src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 33 AND 48),
-          |p3src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 49 AND 64),
-          |${kmeansCtes("p0src", 8, 10, "p0")},
-          |${kmeansCtes("p1src", 8, 10, "p1")},
-          |${kmeansCtes("p2src", 8, 10, "p2")},
-          |${kmeansCtes("p3src", 8, 10, "p3")},
-          |recon AS (
-          |  SELECT fin.id, k.f, k.cx
-          |  FROM p0fin fin JOIN p0kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p1fin fin JOIN p1kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p2fin fin JOIN p2kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p3fin fin JOIN p3kc10 k ON k.c = fin.c),
-          |q AS (SELECT f, x FROM pqsrc WHERE id = 0),
-          |qn AS (SELECT sqrt(sum(x * x)) AS v FROM q),
-          |ap AS (SELECT r.id,
-          |  round(sum(q.x * r.cx) / (qn.v * sqrt(sum(r.cx * r.cx))), 4)
-          |    AS approx
-          |  FROM recon r JOIN q ON q.f = r.f CROSS JOIN qn
-          |  GROUP BY r.id, qn.v),
-          |cand AS (SELECT id FROM ap ORDER BY approx DESC, id ASC LIMIT 100),
-          |scored AS (SELECT a.id,
-          |  sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)) AS cos
-          |  FROM pqsrc a JOIN q ON q.f = a.f JOIN cand c ON c.id = a.id
-          |  GROUP BY a.id)
-          |SELECT id, round(cos, 4) AS score FROM scored
-          |ORDER BY score DESC, id ASC LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // PQ-batch replay: the v_ann_topk_pq recon chain, per-query approx
-    // ranked on the rounded score (batch parity convention), cut at
-    // 100, exact rescore, per-qid top-10
-    "v_ann_topk_pq_batch" ->
-      (s"""WITH pqsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |p0src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 1 AND 16),
-          |p1src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 17 AND 32),
-          |p2src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 33 AND 48),
-          |p3src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 49 AND 64),
-          |${kmeansCtes("p0src", 8, 10, "p0")},
-          |${kmeansCtes("p1src", 8, 10, "p1")},
-          |${kmeansCtes("p2src", 8, 10, "p2")},
-          |${kmeansCtes("p3src", 8, 10, "p3")},
-          |recon AS (
-          |  SELECT fin.id, k.f, k.cx
-          |  FROM p0fin fin JOIN p0kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p1fin fin JOIN p1kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p2fin fin JOIN p2kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p3fin fin JOIN p3kc10 k ON k.c = fin.c),
-          |qs AS (SELECT id AS qid, f, x FROM pqsrc WHERE id <= 4),
-          |qn AS (SELECT qid, sqrt(sum(x * x)) AS v FROM qs GROUP BY qid),
-          |ap AS (SELECT q.qid, r.id,
-          |  round(sum(q.x * r.cx) / (qn.v * sqrt(sum(r.cx * r.cx))), 4)
-          |    AS approx
-          |  FROM recon r JOIN qs q ON q.f = r.f
-          |  JOIN qn ON qn.qid = q.qid
-          |  GROUP BY q.qid, r.id, qn.v),
-          |cand AS (SELECT qid, id FROM (
-          |  SELECT qid, id, row_number() OVER (
-          |    PARTITION BY qid ORDER BY approx DESC, id ASC) AS rn
-          |  FROM ap) WHERE rn <= 100),
-          |scored AS (SELECT c.qid, a.id,
-          |  round(sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)), 4)
-          |    AS score
-          |  FROM pqsrc a JOIN cand c ON c.id = a.id
-          |  JOIN qs q ON q.qid = c.qid AND q.f = a.f
-          |  GROUP BY c.qid, a.id)
-          |SELECT qid, id, score FROM (
-          |  SELECT qid, id, score, row_number() OVER (
-          |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-          |  FROM scored) WHERE rn <= 10
-          |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // IVF+PQ batch replay: per-query probe ranking over the iv chain,
-    // probe-bounded candidates intersected with the PQ recon approx,
-    // batch rank convention, exact rescore per qid
-    "v_ivf_pq_topk_batch" ->
-      (s"""WITH pqsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("pqsrc", 16, 15, "iv")},
-          |p0src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 1 AND 16),
-          |p1src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 17 AND 32),
-          |p2src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 33 AND 48),
-          |p3src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 49 AND 64),
-          |${kmeansCtes("p0src", 8, 10, "p0")},
-          |${kmeansCtes("p1src", 8, 10, "p1")},
-          |${kmeansCtes("p2src", 8, 10, "p2")},
-          |${kmeansCtes("p3src", 8, 10, "p3")},
-          |recon AS (
-          |  SELECT fin.id, k.f, k.cx
-          |  FROM p0fin fin JOIN p0kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p1fin fin JOIN p1kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p2fin fin JOIN p2kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p3fin fin JOIN p3kc10 k ON k.c = fin.c),
-          |qs AS (SELECT id AS qid, f, x FROM pqsrc WHERE id <= 4),
-          |cq AS (SELECT q.qid, k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN qs q ON q.f = k.f GROUP BY q.qid, k.c),
-          |probes AS (SELECT qid, c FROM (
-          |  SELECT qid, c, row_number() OVER (
-          |    PARTITION BY qid ORDER BY d, c) AS rn FROM cq) WHERE rn <= 12),
-          |sel AS (SELECT p.qid, fin.id
-          |  FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |qn AS (SELECT qid, sqrt(sum(x * x)) AS v FROM qs GROUP BY qid),
-          |ap AS (SELECT s.qid, r.id,
-          |  round(sum(q.x * r.cx) / (qn.v * sqrt(sum(r.cx * r.cx))), 4)
-          |    AS approx
-          |  FROM recon r JOIN sel s ON s.id = r.id
-          |  JOIN qs q ON q.qid = s.qid AND q.f = r.f
-          |  JOIN qn ON qn.qid = s.qid
-          |  GROUP BY s.qid, r.id, qn.v),
-          |cand AS (SELECT qid, id FROM (
-          |  SELECT qid, id, row_number() OVER (
-          |    PARTITION BY qid ORDER BY approx DESC, id ASC) AS rn
-          |  FROM ap) WHERE rn <= 60),
-          |scored AS (SELECT c.qid, a.id,
-          |  round(sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)), 4)
-          |    AS score
-          |  FROM pqsrc a JOIN cand c ON c.id = a.id
-          |  JOIN qs q ON q.qid = c.qid AND q.f = a.f
-          |  GROUP BY c.qid, a.id)
-          |SELECT qid, id, score FROM (
-          |  SELECT qid, id, score, row_number() OVER (
-          |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-          |  FROM scored) WHERE rn <= 10
-          |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // IVF+PQ replay: the v_ivf_topk probe chain (k=16 lists, 15 Lloyd
-    // rounds, nprobe=12) intersected with the v_ann_topk_pq ADC chain
-    // (4 subspaces, 8 entries, 10 rounds) — candidates are probed rows
-    // ranked by round-4 reconstruction cosine, cut at 60, exact rerank
-    "v_ivf_pq_topk" ->
-      (s"""WITH pqsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("pqsrc", 16, 15, "iv")},
-          |p0src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 1 AND 16),
-          |p1src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 17 AND 32),
-          |p2src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 33 AND 48),
-          |p3src AS (SELECT id, f, x FROM pqsrc WHERE f BETWEEN 49 AND 64),
-          |${kmeansCtes("p0src", 8, 10, "p0")},
-          |${kmeansCtes("p1src", 8, 10, "p1")},
-          |${kmeansCtes("p2src", 8, 10, "p2")},
-          |${kmeansCtes("p3src", 8, 10, "p3")},
-          |q AS (SELECT f, x FROM pqsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN q ON q.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |recon AS (
-          |  SELECT fin.id, k.f, k.cx
-          |  FROM p0fin fin JOIN p0kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p1fin fin JOIN p1kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p2fin fin JOIN p2kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p3fin fin JOIN p3kc10 k ON k.c = fin.c),
-          |qn AS (SELECT sqrt(sum(x * x)) AS v FROM q),
-          |ap AS (SELECT r.id,
-          |  round(sum(q.x * r.cx) / (qn.v * sqrt(sum(r.cx * r.cx))), 4)
-          |    AS approx
-          |  FROM recon r JOIN sel s ON s.id = r.id
-          |  JOIN q ON q.f = r.f CROSS JOIN qn
-          |  GROUP BY r.id, qn.v),
-          |cand AS (SELECT id FROM ap ORDER BY approx DESC, id ASC LIMIT 60),
-          |scored AS (SELECT a.id,
-          |  sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)) AS cos
-          |  FROM pqsrc a JOIN q ON q.f = a.f JOIN cand c ON c.id = a.id
-          |  GROUP BY a.id)
-          |SELECT id, round(cos, 4) AS score FROM scored
-          |ORDER BY score DESC, id ASC LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // Spherical-quantizer replay on the scaled (un-normalized) corpus:
-    // seeding + Lloyd over the unit-normalized rows with per-round
-    // center renorm (kmeansSphericalCtes), final assignment over the
-    // RAW scaled rows — unit centers make it argmax-cosine; probe
-    // ranking, probed scan, exact round-4 cosines as v_ivf_topk
-    "v_ivf_spherical_topk" ->
-      (s"""WITH ssrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) * (1 + vec_id % 5) AS x
-          |  FROM embeddings),
-          |snrm AS (SELECT id, sqrt(sum(x * x)) AS nm FROM ssrc GROUP BY id),
-          |nsrc AS (SELECT s.id, s.f,
-          |  CASE WHEN n.nm = 0 THEN s.x ELSE s.x / n.nm END AS x
-          |  FROM ssrc s JOIN snrm n ON n.id = s.id),
-          |${kmeansSphericalCtes("nsrc", "ssrc", 16, 15, "sv")},
-          |q AS (SELECT f, x FROM ssrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM svkc15 k JOIN q ON q.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM svfin fin JOIN probes p ON p.c = fin.c),
-          |scored AS (SELECT a.id,
-          |  sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)) AS cos
-          |  FROM ssrc a JOIN q ON q.f = a.f JOIN sel s ON s.id = a.id
-          |  GROUP BY a.id)
-          |SELECT id, round(cos, 4) AS score FROM scored
-          |ORDER BY score DESC, id ASC LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // Two-level IVF at the degenerate point: nprobe = index.k keeps
-    // every probed list, so the output is the exact brute-force top-k
-    // and the oracle is v_ann_topk's scan — the hierarchical fit
-    // (coarse cells + per-cell sub-quantizers) affects WHICH lists
-    // exist, not what a full-probe scan returns
-    "v_ivf_2level_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // hierarchical probes at the degenerate point (all coarse cells,
-    // nprobe = k): every list is probed whatever the hierarchy chose,
-    // so the answer is the exact top-20 — same brute-force replay
-    "v_ivf_2level_hier_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // sharded hier probes at the degenerate point: every list probed
-    // for every query, so each query's answer is the exact brute-force
-    // top-10 — per-query replay of the single-query oracle
-    "v_ivf_2level_sharded_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |qs AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id <= 4),
-        |scored AS (SELECT qs.qid, e.vec_id AS id,
-        |    round(list_cosine_similarity(e.v, qs.qv), 4) AS score
-        |  FROM e, qs),
-        |ranked AS (SELECT qid, id, score,
-        |    row_number() OVER (PARTITION BY qid
-        |      ORDER BY score DESC, id ASC) AS rn
-        |  FROM scored)
-        |SELECT qid, id, score FROM ranked
-        |WHERE rn <= 10
-        |ORDER BY qid, score DESC, id ASC""".stripMargin,
-
-    // Residual IVF+PQ replay: the v_ivf_pq_topk chain with ONE change
-    // of training input — the per-subspace kmeans chains run over
-    // rsrc (x − assigned iv centroid) instead of pqsrc, and the
-    // reconstruction adds the centroid back (recon = reconr + ivkc15).
-    // The engine's stored-norm quotient equals cosine(q, recon)
-    // exactly, so the oracle scores the reconstruction directly
-    "v_ivf_pqr_topk" ->
-      (s"""WITH pqsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("pqsrc", 16, 15, "iv")},
-          |rsrc AS (SELECT s.id, s.f, s.x - k.cx AS x
-          |  FROM pqsrc s JOIN ivfin fin ON fin.id = s.id
-          |  JOIN ivkc15 k ON k.c = fin.c AND k.f = s.f),
-          |p0src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 1 AND 16),
-          |p1src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 17 AND 32),
-          |p2src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 33 AND 48),
-          |p3src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 49 AND 64),
-          |${kmeansCtes("p0src", 8, 10, "p0")},
-          |${kmeansCtes("p1src", 8, 10, "p1")},
-          |${kmeansCtes("p2src", 8, 10, "p2")},
-          |${kmeansCtes("p3src", 8, 10, "p3")},
-          |reconr AS (
-          |  SELECT fin.id, k.f, k.cx
-          |  FROM p0fin fin JOIN p0kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p1fin fin JOIN p1kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p2fin fin JOIN p2kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p3fin fin JOIN p3kc10 k ON k.c = fin.c),
-          |recon AS (SELECT r.id, r.f, r.cx + k.cx AS cx
-          |  FROM reconr r JOIN ivfin fin ON fin.id = r.id
-          |  JOIN ivkc15 k ON k.c = fin.c AND k.f = r.f),
-          |q AS (SELECT f, x FROM pqsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN q ON q.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |qn AS (SELECT sqrt(sum(x * x)) AS v FROM q),
-          |ap AS (SELECT r.id,
-          |  round(sum(q.x * r.cx) / (qn.v * sqrt(sum(r.cx * r.cx))), 4)
-          |    AS approx
-          |  FROM recon r JOIN sel s ON s.id = r.id
-          |  JOIN q ON q.f = r.f CROSS JOIN qn
-          |  GROUP BY r.id, qn.v),
-          |cand AS (SELECT id FROM ap ORDER BY approx DESC, id ASC LIMIT 60),
-          |scored AS (SELECT a.id,
-          |  sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)) AS cos
-          |  FROM pqsrc a JOIN q ON q.f = a.f JOIN cand c ON c.id = a.id
-          |  GROUP BY a.id)
-          |SELECT id, round(cos, 4) AS score FROM scored
-          |ORDER BY score DESC, id ASC LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // batch face of the residual replay: same residual recon chain,
-    // per-qid probe ranking / candidate window / exact rerank as the
-    // v_ivf_pq_topk_batch convention
-    "v_ivf_pqr_topk_batch" ->
-      (s"""WITH pqsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("pqsrc", 16, 15, "iv")},
-          |rsrc AS (SELECT s.id, s.f, s.x - k.cx AS x
-          |  FROM pqsrc s JOIN ivfin fin ON fin.id = s.id
-          |  JOIN ivkc15 k ON k.c = fin.c AND k.f = s.f),
-          |p0src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 1 AND 16),
-          |p1src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 17 AND 32),
-          |p2src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 33 AND 48),
-          |p3src AS (SELECT id, f, x FROM rsrc WHERE f BETWEEN 49 AND 64),
-          |${kmeansCtes("p0src", 8, 10, "p0")},
-          |${kmeansCtes("p1src", 8, 10, "p1")},
-          |${kmeansCtes("p2src", 8, 10, "p2")},
-          |${kmeansCtes("p3src", 8, 10, "p3")},
-          |reconr AS (
-          |  SELECT fin.id, k.f, k.cx
-          |  FROM p0fin fin JOIN p0kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p1fin fin JOIN p1kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p2fin fin JOIN p2kc10 k ON k.c = fin.c
-          |  UNION ALL SELECT fin.id, k.f, k.cx
-          |  FROM p3fin fin JOIN p3kc10 k ON k.c = fin.c),
-          |recon AS (SELECT r.id, r.f, r.cx + k.cx AS cx
-          |  FROM reconr r JOIN ivfin fin ON fin.id = r.id
-          |  JOIN ivkc15 k ON k.c = fin.c AND k.f = r.f),
-          |qs AS (SELECT id AS qid, f, x FROM pqsrc WHERE id <= 4),
-          |cq AS (SELECT q.qid, k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN qs q ON q.f = k.f GROUP BY q.qid, k.c),
-          |probes AS (SELECT qid, c FROM (
-          |  SELECT qid, c, row_number() OVER (
-          |    PARTITION BY qid ORDER BY d, c) AS rn FROM cq) WHERE rn <= 12),
-          |sel AS (SELECT p.qid, fin.id
-          |  FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |qn AS (SELECT qid, sqrt(sum(x * x)) AS v FROM qs GROUP BY qid),
-          |ap AS (SELECT s.qid, r.id,
-          |  round(sum(q.x * r.cx) / (qn.v * sqrt(sum(r.cx * r.cx))), 4)
-          |    AS approx
-          |  FROM recon r JOIN sel s ON s.id = r.id
-          |  JOIN qs q ON q.qid = s.qid AND q.f = r.f
-          |  JOIN qn ON qn.qid = s.qid
-          |  GROUP BY s.qid, r.id, qn.v),
-          |cand AS (SELECT qid, id FROM (
-          |  SELECT qid, id, row_number() OVER (
-          |    PARTITION BY qid ORDER BY approx DESC, id ASC) AS rn
-          |  FROM ap) WHERE rn <= 60),
-          |scored AS (SELECT c.qid, a.id,
-          |  round(sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)), 4)
-          |    AS score
-          |  FROM pqsrc a JOIN cand c ON c.id = a.id
-          |  JOIN qs q ON q.qid = c.qid AND q.f = a.f
-          |  GROUP BY c.qid, a.id)
-          |SELECT qid, id, score FROM (
-          |  SELECT qid, id, score, row_number() OVER (
-          |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-          |  FROM scored) WHERE rn <= 10
-          |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // batch generalization of the v_ann_topk_sq8 replay: per-qid
-    // candidate window on the dequantized scores, exact rerank per qid
-    "v_ann_topk_sq8_batch" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |idx AS (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS j
-        |  FROM e),
-        |dims AS (SELECT j, min(v[j]) AS mn, max(v[j]) AS mx
-        |  FROM idx GROUP BY j),
-        |stats AS (SELECT list(mn ORDER BY j) AS mns,
-        |    list(mx ORDER BY j) AS mxs FROM dims),
-        |dq AS (SELECT e.vec_id,
-        |    list_transform(range(1, len(e.v) + 1), j ->
-        |      CASE WHEN s.mxs[j] = s.mns[j] THEN s.mns[j]
-        |        ELSE s.mns[j]
-        |          + round((e.v[j] - s.mns[j]) / (s.mxs[j] - s.mns[j]) * 255.0)
-        |            * (s.mxs[j] - s.mns[j]) / 255.0
-        |      END) AS dv
-        |  FROM e, stats s),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id <= 4),
-        |ap AS (SELECT q.qid, d.vec_id,
-        |    round(list_cosine_similarity(d.dv, q.qv), 4) AS approx
-        |  FROM dq d, q),
-        |cand AS (SELECT qid, vec_id FROM (
-        |  SELECT qid, vec_id, row_number() OVER (
-        |    PARTITION BY qid ORDER BY approx DESC, vec_id ASC) AS rn
-        |  FROM ap) WHERE rn <= 100),
-        |scored AS (SELECT c.qid, e.vec_id AS id,
-        |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |  FROM cand c JOIN e ON e.vec_id = c.vec_id
-        |  JOIN q ON q.qid = c.qid)
-        |SELECT qid, id, score FROM (
-        |  SELECT qid, id, score, row_number() OVER (
-        |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-        |  FROM scored) WHERE rn <= 10
-        |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED ("),
-
-    // IVF+SQ8 replay: the v_ivf_topk probe chain (16 lists, 15 Lloyd
-    // rounds, nprobe=12) bounds WHICH rows enter the v_ann_topk_sq8
-    // dequant chain (per-dim min/max over the WHOLE corpus — the
-    // engine encodes before probing); candidates cut at 60 on the
-    // round-4 dequantized cosine (id tiebreak), exact rerank top-20
-    "v_ivf_sq8_topk" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-          |qx AS (SELECT f, x FROM ivsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * qx.x) / sqrt(sum(k.cx * k.cx) * sum(qx.x * qx.x)) AS d
-          |  FROM ivkc15 k JOIN qx ON qx.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |idx AS (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS j
-          |  FROM e),
-          |dims AS (SELECT j, min(v[j]) AS mn, max(v[j]) AS mx
-          |  FROM idx GROUP BY j),
-          |stats AS (SELECT list(mn ORDER BY j) AS mns,
-          |    list(mx ORDER BY j) AS mxs FROM dims),
-          |dq AS (SELECT e.vec_id,
-          |    list_transform(range(1, len(e.v) + 1), j ->
-          |      CASE WHEN s.mxs[j] = s.mns[j] THEN s.mns[j]
-          |        ELSE s.mns[j]
-          |          + round((e.v[j] - s.mns[j]) / (s.mxs[j] - s.mns[j]) * 255.0)
-          |            * (s.mxs[j] - s.mns[j]) / 255.0
-          |      END) AS dv
-          |  FROM e JOIN sel ON sel.id = e.vec_id, stats s),
-          |ap AS (SELECT d.vec_id,
-          |    round(list_cosine_similarity(d.dv, q.qv), 4) AS approx
-          |  FROM dq d, q),
-          |cand AS (SELECT vec_id FROM ap
-          |  ORDER BY approx DESC, vec_id ASC LIMIT 60)
-          |SELECT e.vec_id AS id,
-          |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |FROM e JOIN cand USING (vec_id), q
-          |ORDER BY score DESC, id ASC
-          |LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // IVF+binary replay: the iv probe chain bounds the candidate set,
-    // then the integer hamming cut and the exact rerank — all at the
-    // production operating point
-    "v_ivf_binary_topk" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-          |qx AS (SELECT f, x FROM ivsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * qx.x) / sqrt(sum(k.cx * k.cx) * sum(qx.x * qx.x)) AS d
-          |  FROM ivkc15 k JOIN qx ON qx.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |ham AS (SELECT s.id,
-          |    sum(CASE WHEN COALESCE(s.x > 0, FALSE)
-          |      <> COALESCE(qx.x > 0, FALSE) THEN 1 ELSE 0 END) AS h
-          |  FROM ivsrc s JOIN sel ON sel.id = s.id
-          |  JOIN qx ON qx.f = s.f GROUP BY s.id),
-          |cand AS (SELECT id FROM ham ORDER BY h ASC, id ASC LIMIT 60)
-          |SELECT e.vec_id AS id,
-          |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |FROM e JOIN cand ON cand.id = e.vec_id, q
-          |ORDER BY score DESC, id ASC
-          |LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // the residual-sign sibling at the same production pruning: the
-    // only change vs v_ivf_binary_topk's replay is the sign operand —
-    // (x − centroid) on both the candidate and the query side, with
-    // each candidate's own list centroid
-    "v_ivf_binary_resid_topk" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-          |qx AS (SELECT f, x FROM ivsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * qx.x) / sqrt(sum(k.cx * k.cx) * sum(qx.x * qx.x)) AS d
-          |  FROM ivkc15 k JOIN qx ON qx.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |ham AS (SELECT s.id,
-          |    sum(CASE WHEN COALESCE((s.x - kc.cx) > 0, FALSE)
-          |      <> COALESCE((qx.x - kc.cx) > 0, FALSE) THEN 1 ELSE 0 END)
-          |      AS h
-          |  FROM ivsrc s
-          |  JOIN ivfin fin ON fin.id = s.id
-          |  JOIN probes p ON p.c = fin.c
-          |  JOIN ivkc15 kc ON kc.c = fin.c AND kc.f = s.f
-          |  JOIN qx ON qx.f = s.f
-          |  GROUP BY s.id),
-          |cand AS (SELECT id FROM ham ORDER BY h ASC, id ASC LIMIT 60)
-          |SELECT e.vec_id AS id,
-          |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |FROM e JOIN cand ON cand.id = e.vec_id, q
-          |ORDER BY score DESC, id ASC
-          |LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // batch generalization of the residual replay: per-qid probes,
-    // residual sign operands with each candidate's own list centroid,
-    // per-qid (h ASC, id ASC) window, exact rerank per qid
-    "v_ivf_binary_resid_topk_batch" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |qs AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id <= 4),
-          |qsx AS (SELECT id AS qid, f, x FROM ivsrc WHERE id <= 4),
-          |cq AS (SELECT q.qid, k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN qsx q ON q.f = k.f GROUP BY q.qid, k.c),
-          |probes AS (SELECT qid, c FROM (
-          |  SELECT qid, c, row_number() OVER (
-          |    PARTITION BY qid ORDER BY d, c) AS rn FROM cq) WHERE rn <= 12),
-          |ham AS (SELECT p.qid, s.id,
-          |    sum(CASE WHEN COALESCE((s.x - kc.cx) > 0, FALSE)
-          |      <> COALESCE((q.x - kc.cx) > 0, FALSE) THEN 1 ELSE 0 END)
-          |      AS h
-          |  FROM ivsrc s
-          |  JOIN ivfin fin ON fin.id = s.id
-          |  JOIN probes p ON p.c = fin.c
-          |  JOIN ivkc15 kc ON kc.c = fin.c AND kc.f = s.f
-          |  JOIN qsx q ON q.qid = p.qid AND q.f = s.f
-          |  GROUP BY p.qid, s.id),
-          |cand AS (SELECT qid, id FROM (
-          |  SELECT qid, id, row_number() OVER (
-          |    PARTITION BY qid ORDER BY h ASC, id ASC) AS rn
-          |  FROM ham) WHERE rn <= 60),
-          |scored AS (SELECT c.qid, e.vec_id AS id,
-          |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |  FROM cand c JOIN e ON e.vec_id = c.id
-          |  JOIN qs q ON q.qid = c.qid)
-          |SELECT qid, id, score FROM (
-          |  SELECT qid, id, score, row_number() OVER (
-          |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-          |  FROM scored) WHERE rn <= 10
-          |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // batch generalization: per-qid probe ranking over the iv chain,
-    // probe-bounded rows through the dequant approx, per-qid candidate
-    // window at 60, exact rerank per qid
-    "v_ivf_sq8_topk_batch" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |qs AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id <= 4),
-          |qsx AS (SELECT id AS qid, f, x FROM ivsrc WHERE id <= 4),
-          |cq AS (SELECT q.qid, k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN qsx q ON q.f = k.f GROUP BY q.qid, k.c),
-          |probes AS (SELECT qid, c FROM (
-          |  SELECT qid, c, row_number() OVER (
-          |    PARTITION BY qid ORDER BY d, c) AS rn FROM cq) WHERE rn <= 12),
-          |sel AS (SELECT p.qid, fin.id
-          |  FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |idx AS (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS j
-          |  FROM e),
-          |dims AS (SELECT j, min(v[j]) AS mn, max(v[j]) AS mx
-          |  FROM idx GROUP BY j),
-          |stats AS (SELECT list(mn ORDER BY j) AS mns,
-          |    list(mx ORDER BY j) AS mxs FROM dims),
-          |dq AS (SELECT e.vec_id,
-          |    list_transform(range(1, len(e.v) + 1), j ->
-          |      CASE WHEN s.mxs[j] = s.mns[j] THEN s.mns[j]
-          |        ELSE s.mns[j]
-          |          + round((e.v[j] - s.mns[j]) / (s.mxs[j] - s.mns[j]) * 255.0)
-          |            * (s.mxs[j] - s.mns[j]) / 255.0
-          |      END) AS dv
-          |  FROM e, stats s),
-          |ap AS (SELECT s2.qid, d.vec_id,
-          |    round(list_cosine_similarity(d.dv, q.qv), 4) AS approx
-          |  FROM dq d JOIN sel s2 ON s2.id = d.vec_id
-          |  JOIN qs q ON q.qid = s2.qid),
-          |cand AS (SELECT qid, vec_id FROM (
-          |  SELECT qid, vec_id, row_number() OVER (
-          |    PARTITION BY qid ORDER BY approx DESC, vec_id ASC) AS rn
-          |  FROM ap) WHERE rn <= 60),
-          |scored AS (SELECT c.qid, e.vec_id AS id,
-          |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |  FROM cand c JOIN e ON e.vec_id = c.vec_id
-          |  JOIN qs q ON q.qid = c.qid)
-          |SELECT qid, id, score FROM (
-          |  SELECT qid, id, score, row_number() OVER (
-          |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-          |  FROM scored) WHERE rn <= 10
-          |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    "v_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    label::VARCHAR AS label
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv, label AS ql
-        |  FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.qid, e.vec_id AS id, e.label AS neg_label,
-        |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |  FROM e JOIN q ON e.label <> q.ql),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rk
-        |  FROM scored)
-        |SELECT qid, id, neg_label, score FROM ranked WHERE rk <= 10
-        |ORDER BY qid, score DESC, id""".stripMargin,
-
-    // IVF-pruned hard negatives: the v_ivf_topk_batch probe replay
-    // (same DeterministicKMeans CTE chain, per-query probe ranking,
-    // probe-bounded candidate set) with the cross-label filter applied
-    // before the per-query top-k; scores stay exact round-4 cosine
-    "v_hard_negatives_approx" ->
-      (s"""WITH ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |lab AS (SELECT vec_id AS id, label::VARCHAR AS label
-          |  FROM embeddings),
-          |qlab AS (SELECT vec_id AS qid, label::VARCHAR AS ql
-          |  FROM embeddings WHERE vec_id < 5),
-          |qs AS (SELECT id AS qid, f, x FROM ivsrc WHERE id < 5),
-          |cq AS (SELECT q.qid, k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN qs q ON q.f = k.f GROUP BY q.qid, k.c),
-          |probes AS (SELECT qid, c FROM (
-          |  SELECT qid, c, row_number() OVER (
-          |    PARTITION BY qid ORDER BY d, c) AS rn FROM cq) WHERE rn <= 12),
-          |sel AS (SELECT p.qid, fin.id
-          |  FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |scored AS (SELECT s.qid, a.id, l.label AS neg_label,
-          |  round(sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)), 4)
-          |    AS score
-          |  FROM ivsrc a JOIN sel s ON s.id = a.id
-          |  JOIN qs q ON q.qid = s.qid AND q.f = a.f
-          |  JOIN lab l ON l.id = a.id
-          |  JOIN qlab ON qlab.qid = s.qid
-          |  WHERE l.label IS NOT NULL AND l.label <> qlab.ql
-          |  GROUP BY s.qid, a.id, l.label)
-          |SELECT qid, id, neg_label, score FROM (
-          |  SELECT qid, id, neg_label, score, row_number() OVER (
-          |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rn
-          |  FROM scored) WHERE rn <= 10
-          |ORDER BY qid, score DESC, id ASC""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // margin replay: all-pairs cosines, forward/backward top-4 NN
-    // averages as denominators, ratio margin, argmax per A-doc on the
-    // RAW margin (id_b tiebreak), threshold on the ROUNDED margin —
-    // the engine's conventions exactly
-    "v_bitext_mine" ->
-      ("""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |sa AS (SELECT id AS id_a, v AS va FROM e WHERE id % 2 = 0),
-        |sb AS (SELECT id AS id_b, v AS vb FROM e WHERE id % 2 <> 0),
-        |p AS (SELECT id_a, id_b, list_cosine_similarity(va, vb) AS cos
-        |  FROM sa CROSS JOIN sb),
-        |fa AS (SELECT id_a, avg(cos) AS den_a FROM (
-        |  SELECT id_a, cos, row_number() OVER (
-        |    PARTITION BY id_a ORDER BY cos DESC, id_b ASC) AS rn FROM p)
-        |  WHERE rn <= 4 GROUP BY id_a),
-        |fb AS (SELECT id_b, avg(cos) AS den_b FROM (
-        |  SELECT id_b, cos, row_number() OVER (
-        |    PARTITION BY id_b ORDER BY cos DESC, id_a ASC) AS rn FROM p)
-        |  WHERE rn <= 4 GROUP BY id_b),
-        |m AS (SELECT p.id_a, p.id_b, p.cos,
-        |  p.cos / ((fa.den_a + fb.den_b) / 2) AS margin
-        |  FROM p JOIN fa USING (id_a) JOIN fb USING (id_b)),
-        |best AS (SELECT id_a, id_b, round(cos, 4) AS cos,
-        |  round(margin, 4) AS margin, row_number() OVER (
-        |    PARTITION BY id_a ORDER BY margin DESC, id_b ASC) AS rn
-        |  FROM m)
-        |SELECT id_a, id_b, cos, margin FROM best
-        |WHERE rn = 1 AND margin > 1.0
-        |ORDER BY id_a""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // approx-path replay at full probes: the candidate lists are exact
-    // per-side top-4 on the ROUNDED cosine (ivfTopKBatch's round-4
-    // ranking convention), denominators average those rounded values,
-    // candidates = forward ∪ backward, argmax per id_a on the RAW
-    // margin (id_b tiebreak), threshold on the ROUNDED margin
-    "v_bitext_mine_approx" ->
-      ("""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |sa AS (SELECT id, v FROM e WHERE id % 2 = 0),
-        |sb AS (SELECT id, v FROM e WHERE id % 2 <> 0),
-        |ap AS (SELECT a.id AS id_a, b.id AS id_b,
-        |  round(list_cosine_similarity(a.v, b.v), 4) AS cos
-        |  FROM sa a CROSS JOIN sb b),
-        |fwd AS (SELECT id_a, id_b, cos FROM (
-        |  SELECT id_a, id_b, cos, row_number() OVER (
-        |    PARTITION BY id_a ORDER BY cos DESC, id_b ASC) AS rn FROM ap)
-        |  WHERE rn <= 4),
-        |bwd AS (SELECT id_a, id_b, cos FROM (
-        |  SELECT id_a, id_b, cos, row_number() OVER (
-        |    PARTITION BY id_b ORDER BY cos DESC, id_a ASC) AS rn FROM ap)
-        |  WHERE rn <= 4),
-        |da AS (SELECT id_a, avg(cos) AS den_a FROM fwd GROUP BY id_a),
-        |db AS (SELECT id_b, avg(cos) AS den_b FROM bwd GROUP BY id_b),
-        |cand AS (SELECT DISTINCT id_a, id_b, cos FROM (
-        |  SELECT * FROM fwd UNION ALL SELECT * FROM bwd)),
-        |m AS (SELECT c.id_a, c.id_b, c.cos,
-        |  c.cos / ((da.den_a + db.den_b) / 2) AS mraw
-        |  FROM cand c JOIN da USING (id_a) JOIN db USING (id_b)),
-        |best AS (SELECT id_a, id_b, round(cos, 4) AS cos,
-        |  round(mraw, 4) AS margin, row_number() OVER (
-        |    PARTITION BY id_a ORDER BY mraw DESC, id_b ASC) AS rn
-        |  FROM m)
-        |SELECT id_a, id_b, cos, margin FROM best
-        |WHERE rn = 1 AND margin > 1.0
-        |ORDER BY id_a""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // code-pruned bitext replay: at the oracle operating point (full
-    // probes, rerank >= side size) the per-query ADC cut keeps every
-    // probed row and the exact rerank rescores them all, so the lists
-    // degenerate to exact top-4 on the round-4 cosine — the identical
-    // replay as v_bitext_mine_approx; the PQ pruning machinery carries
-    // its own oracle (v_ivf_pq_topk_batch) and the production point's
-    // recall is spec-pinned
-    "v_bitext_mine_pq" ->
-      ("""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |sa AS (SELECT id, v FROM e WHERE id % 2 = 0),
-        |sb AS (SELECT id, v FROM e WHERE id % 2 <> 0),
-        |ap AS (SELECT a.id AS id_a, b.id AS id_b,
-        |  round(list_cosine_similarity(a.v, b.v), 4) AS cos
-        |  FROM sa a CROSS JOIN sb b),
-        |fwd AS (SELECT id_a, id_b, cos FROM (
-        |  SELECT id_a, id_b, cos, row_number() OVER (
-        |    PARTITION BY id_a ORDER BY cos DESC, id_b ASC) AS rn FROM ap)
-        |  WHERE rn <= 4),
-        |bwd AS (SELECT id_a, id_b, cos FROM (
-        |  SELECT id_a, id_b, cos, row_number() OVER (
-        |    PARTITION BY id_b ORDER BY cos DESC, id_a ASC) AS rn FROM ap)
-        |  WHERE rn <= 4),
-        |da AS (SELECT id_a, avg(cos) AS den_a FROM fwd GROUP BY id_a),
-        |db AS (SELECT id_b, avg(cos) AS den_b FROM bwd GROUP BY id_b),
-        |cand AS (SELECT DISTINCT id_a, id_b, cos FROM (
-        |  SELECT * FROM fwd UNION ALL SELECT * FROM bwd)),
-        |m AS (SELECT c.id_a, c.id_b, c.cos,
-        |  c.cos / ((da.den_a + db.den_b) / 2) AS mraw
-        |  FROM cand c JOIN da USING (id_a) JOIN db USING (id_b)),
-        |best AS (SELECT id_a, id_b, round(cos, 4) AS cos,
-        |  round(mraw, 4) AS margin, row_number() OVER (
-        |    PARTITION BY id_a ORDER BY mraw DESC, id_b ASC) AS rn
-        |  FROM m)
-        |SELECT id_a, id_b, cos, margin FROM best
-        |WHERE rn = 1 AND margin > 1.0
-        |ORDER BY id_a""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    "d_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.v, b.v), 4) AS score
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.3
-        |ORDER BY score DESC, id_a, id_b""".stripMargin,
-
-    // SRP-LSH replay: md5-parity ±1 planes, vectors quantized to
-    // round(x·1e6) BIGINTs so plane-sign agreement is exact integer
-    // math — the top-240 Hamming candidate set is identical to the
-    // engine's, then the same round-4 cosine re-rank as v_ann_topk.
-    "v_ann_topk_lsh" ->
-      ("""WITH planes AS (
-        |  SELECT j.range AS j, f.range AS f,
-        |    CASE WHEN ascii(substr(md5(CAST(j.range AS VARCHAR) || '_' ||
-        |      CAST(f.range AS VARCHAR)), 1, 1)) % 2 = 0
-        |    THEN 1 ELSE -1 END AS s
-        |  FROM range(256) j CROSS JOIN range(64) f),
-        |xsrc AS (SELECT vec_id AS id,
-        |  generate_subscripts(embedding, 1) - 1 AS f,
-        |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |xq AS (SELECT id, f, CAST(round(x * 1000000) AS BIGINT) AS xi
-        |  FROM xsrc),
-        |proj AS (SELECT x.id, p.j, sum(p.s * x.xi) AS pr
-        |  FROM xq x JOIN planes p ON p.f = x.f GROUP BY x.id, p.j),
-        |qb AS (SELECT j, pr >= 0 AS qb FROM proj WHERE id = 0),
-        |agr AS (SELECT pr.id,
-        |    sum(CASE WHEN (pr.pr >= 0) = qb.qb THEN 1 ELSE 0 END) AS agree
-        |  FROM proj pr JOIN qb ON qb.j = pr.j GROUP BY pr.id),
-        |cand AS (SELECT id FROM agr ORDER BY agree DESC, id ASC LIMIT 240),
-        |q AS (SELECT f, x FROM xsrc WHERE id = 0),
-        |scored AS (SELECT a.id,
-        |  sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)) AS cos
-        |  FROM xsrc a JOIN q ON q.f = a.f JOIN cand c ON c.id = a.id
-        |  GROUP BY a.id)
-        |SELECT id, round(cos, 4) AS score FROM scored
-        |ORDER BY score DESC, id ASC LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // IVF probe replay: the coarse quantizer is DeterministicKMeans
-    // (k=16 lists, 15 Lloyd rounds on the RAW vectors), probes = the
-    // nprobe=12 lists nearest the query by rectified cosine, then
-    // exact cosine top-20 within the probed lists.
-    // append replay: quantizer fitted on the even half only, every
-    // row (old and appended) assigned by argmin against those frozen
-    // final centroids
-    "v_ivf_append" ->
-      (s"""WITH vasrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings
-          |  WHERE vec_id % 2 = 0),
-          |allsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("vasrc", 8, 15, "va")},
-          |vaasg AS (SELECT id, c FROM (
-          |  SELECT t.id, k2.c, row_number() OVER (PARTITION BY t.id
-          |    ORDER BY sum((t.x - k2.cx) * (t.x - k2.cx)) ASC, k2.c ASC)
-          |    AS rn
-          |  FROM allsrc t JOIN vakc15 k2 ON k2.f = t.f
-          |  GROUP BY t.id, k2.c) WHERE rn = 1)
-          |SELECT id, c::INT AS cluster FROM vaasg
-          |ORDER BY id""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    "v_ivf_topk" ->
-      (s"""WITH ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |q AS (SELECT f, x FROM ivsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * q.x) / sqrt(sum(k.cx * k.cx) * sum(q.x * q.x)) AS d
-          |  FROM ivkc15 k JOIN q ON q.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin JOIN probes p ON p.c = fin.c),
-          |scored AS (SELECT a.id,
-          |  sum(a.x * q.x) / sqrt(sum(a.x * a.x) * sum(q.x * q.x)) AS cos
-          |  FROM ivsrc a JOIN q ON q.f = a.f JOIN sel ON sel.id = a.id
-          |  GROUP BY a.id)
-          |SELECT id, round(cos, 4) AS score FROM scored
-          |ORDER BY score DESC, id ASC LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // filtered ANN at the degenerate point: every list probed, so the
-    // answer is the exact top-20 among label=1 rows
-    "v_ivf_topk_filtered" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |WHERE e.label = 1
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // takedown at the degenerate point: full probes + k ≥ corpus make
-    // the post-takedown ranking the exact cosine order over surviving
-    // (%5 <> 0) vectors — any removed id still present in base or the
-    // append segment would surface, any erroneously-dropped survivor
-    // would be missing
-    "v_takedown_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 1)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |WHERE e.vec_id % 5 <> 0
-        |ORDER BY score DESC, id ASC""".stripMargin,
-
-    // filtered IVF+SQ8 at the PRODUCTION pruning: the v_ivf_sq8_topk
-    // replay with the label predicate intersecting the probed candidate
-    // set BEFORE the dequant cut — exactly where ivfSq8TopKWhere
-    // applies it
-    "v_ivf_sq8_topk_filtered" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-          |qx AS (SELECT f, x FROM ivsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * qx.x) / sqrt(sum(k.cx * k.cx) * sum(qx.x * qx.x)) AS d
-          |  FROM ivkc15 k JOIN qx ON qx.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin
-          |  JOIN probes p ON p.c = fin.c
-          |  JOIN embeddings mm ON mm.vec_id = fin.id AND mm.label = 1),
-          |idx AS (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS j
-          |  FROM e),
-          |dims AS (SELECT j, min(v[j]) AS mn, max(v[j]) AS mx
-          |  FROM idx GROUP BY j),
-          |stats AS (SELECT list(mn ORDER BY j) AS mns,
-          |    list(mx ORDER BY j) AS mxs FROM dims),
-          |dq AS (SELECT e.vec_id,
-          |    list_transform(range(1, len(e.v) + 1), j ->
-          |      CASE WHEN s.mxs[j] = s.mns[j] THEN s.mns[j]
-          |        ELSE s.mns[j]
-          |          + round((e.v[j] - s.mns[j]) / (s.mxs[j] - s.mns[j]) * 255.0)
-          |            * (s.mxs[j] - s.mns[j]) / 255.0
-          |      END) AS dv
-          |  FROM e JOIN sel ON sel.id = e.vec_id, stats s),
-          |ap AS (SELECT d.vec_id,
-          |    round(list_cosine_similarity(d.dv, q.qv), 4) AS approx
-          |  FROM dq d, q),
-          |cand AS (SELECT vec_id FROM ap
-          |  ORDER BY approx DESC, vec_id ASC LIMIT 60)
-          |SELECT e.vec_id AS id,
-          |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |FROM e JOIN cand USING (vec_id), q
-          |ORDER BY score DESC, id ASC
-          |LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // filtered IVF+binary at the production pruning: the
-    // v_ivf_binary_topk replay with the label predicate intersecting
-    // the probed candidates before the integer hamming cut
-    "v_ivf_binary_topk_filtered" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings),
-          |ivsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ivsrc", 16, 15, "iv")},
-          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-          |qx AS (SELECT f, x FROM ivsrc WHERE id = 0),
-          |cq AS (SELECT k.c,
-          |  1.0 - sum(k.cx * qx.x) / sqrt(sum(k.cx * k.cx) * sum(qx.x * qx.x)) AS d
-          |  FROM ivkc15 k JOIN qx ON qx.f = k.f GROUP BY k.c),
-          |probes AS (SELECT c FROM cq ORDER BY d, c LIMIT 12),
-          |sel AS (SELECT fin.id FROM ivfin fin
-          |  JOIN probes p ON p.c = fin.c
-          |  JOIN embeddings mm ON mm.vec_id = fin.id AND mm.label = 1),
-          |ham AS (SELECT s.id,
-          |    sum(CASE WHEN COALESCE(s.x > 0, FALSE)
-          |      <> COALESCE(qx.x > 0, FALSE) THEN 1 ELSE 0 END) AS h
-          |  FROM ivsrc s JOIN sel ON sel.id = s.id
-          |  JOIN qx ON qx.f = s.f GROUP BY s.id),
-          |cand AS (SELECT id FROM ham ORDER BY h ASC, id ASC LIMIT 60)
-          |SELECT e.vec_id AS id,
-          |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-          |FROM e JOIN cand ON cand.id = e.vec_id, q
-          |ORDER BY score DESC, id ASC
-          |LIMIT 20""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // batch generalization of the v_ivf_topk replay: per-query probe
-    // ranking, probe-bounded candidate join, rank on the ROUNDED score
-    // (the engine's batch parity convention — see v_batch_topk)
-    "v_ivf_topk_batch" -> ivfTopKBatchReplaySql,
-
-    // the streamed serve face unions its micro-batches' results, each
-    // of which equals the batch operator, and every qid lands in
-    // exactly one micro-batch — so the SAME batch replay oracles it
-    // (the checker sorts rows; parquet append order is meaningless)
-    "s_ivf_query_stream" -> ivfTopKBatchReplaySql,
-
-    "v_sql_surface" ->
-      """WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings)
-        |SELECT a.id,
-        |  round(list_cosine_similarity(a.v, q.v), 4) AS score,
-        |  round(sqrt(list_dot_product(a.v, a.v)), 4) AS norm
-        |FROM e a CROSS JOIN (SELECT v FROM e WHERE id = 0) q
-        |WHERE a.id <= 50
-        |ORDER BY a.id""".stripMargin,
-
-    "v_batch_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id <= 4),
-        |scored AS (SELECT q.query_id, e.vec_id AS id,
-        |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |  FROM e JOIN q ON e.vec_id <> q.query_id),
-        |ranked AS (SELECT query_id, id, score,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, id, score, rank FROM ranked
-        |WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q_json_props" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k,
-        |  count(*) AS n
-        |FROM events
-        |GROUP BY k
-        |ORDER BY k""".stripMargin,
-
-    "g_triangles" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |und AS (SELECT a.vec_id AS src, b.vec_id AS dst
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.v, b.v) >= 0.3)
-        |SELECT count(*) AS n_triangles
-        |FROM und e1
-        |  JOIN und e2 ON e1.dst = e2.src
-        |  JOIN und e3 ON e1.src = e3.src AND e2.dst = e3.dst""".stripMargin,
-
-    "v_emb_norms" ->
-      """SELECT vec_id AS id,
-        |  round(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |    CAST(embedding AS DOUBLE[]))), 4) AS norm
-        |FROM embeddings
-        |ORDER BY id""".stripMargin,
-
-    "v_top_cosine_pairs" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.v, b.v), 4) AS score
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |ORDER BY score DESC, id_a ASC, id_b ASC
-        |LIMIT 20""".stripMargin,
-
-    "q_asof_enrich" ->
-      """SELECT l.event_id, l.user_id,
-        |  round(l.value, 2) AS click_value,
-        |  round(r.value, 2) AS last_view_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT l.event_id, l.user_id, count(*) AS n_near_clicks
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'error') l
-        |JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') r
-        |  ON l.user_id = r.user_id
-        | AND abs(epoch_us(l.ts) - epoch_us(r.ts)) <= 300000000
-        |GROUP BY l.event_id, l.user_id
-        |ORDER BY l.event_id""".stripMargin,
-
-    "q_interval_overlap" ->
-      """WITH iv AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS s,
-        |         epoch_us(ts) + (1 + event_id % 5) * 60000000 AS e
-        |  FROM events)
-        |SELECT a.user_id, count(*) AS n_overlap_pairs,
-        |  max((least(a.e, b.e) - greatest(a.s, b.s)) // 1000000)
-        |    AS max_overlap_sec
-        |FROM iv a JOIN iv b
-        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        | AND a.s <= b.e AND b.s <= a.e
-        |GROUP BY a.user_id
-        |ORDER BY a.user_id""".stripMargin,
-
-    "q_anomaly_events" ->
-      """WITH agg AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS b, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |span AS (
-        |  SELECT event_type, min(b) AS lo, max(b) AS hi
-        |  FROM agg GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS b
-        |  FROM span),
-        |j AS (
-        |  SELECT g.event_type, g.b, coalesce(a.n, 0)::BIGINT AS n
-        |  FROM grid g LEFT JOIN agg a USING (event_type, b)),
-        |sc AS (
-        |  SELECT event_type, b, n,
-        |    count(n) OVER w AS nb, avg(n) OVER w AS m,
-        |    stddev_samp(n) OVER w AS sd
-        |  FROM j
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY b
-        |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, strftime(b, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  n AS n_events, round((n - m) / sd, 4) AS z
-        |FROM sc
-        |WHERE nb >= 8 AND sd > 0
-        |  AND abs(round((n - m) / sd, 4)) >= 2.0
-        |ORDER BY event_type, hour""".stripMargin,
-
-    "t_vocab" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM documents)
-        |SELECT token, count(*) AS n_occurrences,
-        |  count(DISTINCT doc_id) AS n_docs
-        |FROM tok GROUP BY token
-        |ORDER BY n_occurrences DESC, token ASC
-        |LIMIT 50""".stripMargin,
-
-    // full independent replay of BPE merge training (r8 — these two
-    // were the only queries outside the oracle harness): DuckDB
-    // re-derives the 30 merges from the parquet corpus itself via the
-    // unrolled pair-count/argmax/merge rounds in bpeTrainCtes. NOTE:
-    // no blanket AS MATERIALIZED rewrite here — the generated CTEs
-    // carry their own MATERIALIZED, and the encode oracle's recursive
-    // member must stay plain.
-    "t_bpe_merges" ->
-      (s"""WITH ${bpeTrainCtes(30)}
-          |SELECT rank, l AS "left", r AS "right", merged,
-          |  c AS pair_count
-          |FROM mg ORDER BY rank""".stripMargin),
-
-    // greedy encode replay: per distinct word, a recursive CTE applies
-    // the LOWEST-rank merge present in the state (one doubled-separator
-    // replace = one engine merge pass — see bpeSymState) until none
-    // applies; terminal states join back to the docs' word sequence
-    "t_bpe_encode" ->
-      (s"""WITH RECURSIVE ${bpeTrainCtes(30)},
-          |init AS MATERIALIZED (SELECT word,
-          |  ${bpeSymState("word")} AS state FROM words),
-          |enc AS (
-          |  SELECT word, state FROM init
-          |  UNION ALL
-          |  SELECT x.word, replace(x.state,
-          |    '|' || mm.l || '||' || mm.r || '|',
-          |    '|' || mm.l || mm.r || '|')
-          |  FROM (
-          |    SELECT e.word, e.state,
-          |      (SELECT min(m.rank) FROM mg m
-          |       WHERE position('|' || m.l || '||' || m.r || '|' IN e.state) > 0)
-          |        AS br
-          |    FROM enc e) x
-          |  JOIN mg mm ON mm.rank = x.br
-          |),
-          |term AS MATERIALIZED (
-          |  SELECT word,
-          |    list_filter(string_split(state, '|'), x -> x <> '') AS syms
-          |  FROM enc e
-          |  WHERE NOT EXISTS (SELECT 1 FROM mg m
-          |    WHERE position('|' || m.l || '||' || m.r || '|' IN e.state) > 0)),
-          |wp AS MATERIALIZED (SELECT word, array_to_string(syms, ' ') AS piece,
-          |  CAST(len(syms) AS BIGINT) AS np FROM term),
-          |docw AS MATERIALIZED (
-          |  SELECT doc_id, t.i AS pos, t.w AS word FROM (
-          |    SELECT doc_id,
-          |      unnest([{'i': j, 'w': s[j]} for j in range(1, len(s)+1)]) AS t
-          |    FROM (SELECT doc_id, list_filter(
-          |      string_split_regex(trim(text), '\\s+'), x -> x <> '') AS s
-          |      FROM documents WHERE text IS NOT NULL))),
-          |agg AS MATERIALIZED (
-          |  SELECT d.doc_id, string_agg(w.piece, ' ' ORDER BY d.pos) AS pieces,
-          |    CAST(sum(w.np) AS BIGINT) AS n_pieces,
-          |    CAST(count(*) AS BIGINT) AS n_words
-          |  FROM docw d JOIN wp w USING (word) GROUP BY d.doc_id)
-          |SELECT doc.doc_id, coalesce(a.pieces, '') AS pieces,
-          |  coalesce(a.n_pieces, 0) AS n_pieces,
-          |  coalesce(a.n_words, 0) AS n_words
-          |FROM documents doc LEFT JOIN agg a USING (doc_id)
-          |ORDER BY doc.doc_id""".stripMargin),
-
-    "q_pivot_events" ->
-      """SELECT user_id,
-        |  sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT
-        |    AS click,
-        |  sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)::BIGINT
-        |    AS view,
-        |  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT
-        |    AS purchase
-        |FROM events
-        |GROUP BY user_id
-        |HAVING user_id < 50
-        |ORDER BY user_id""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  count(*) AS n, round(sum(o_totalprice), 2) AS revenue,
-        |  (CASE WHEN GROUPING(o_orderstatus) THEN 1 ELSE 0 END)::INT
-        |    AS g_status,
-        |  (CASE WHEN GROUPING(o_orderpriority) THEN 1 ELSE 0 END)::INT
-        |    AS g_prio
-        |FROM orders
-        |GROUP BY GROUPING SETS (
-        |  (o_orderstatus), (o_orderpriority),
-        |  (o_orderstatus, o_orderpriority))
-        |ORDER BY g_status, g_prio,
-        |  o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    // heavy-hitter replay: the OUTPUT contract is partitioning-free
-    // (exactly the tokens with count >= ceil(φN), exact counts), so
-    // the oracle ignores the Misra-Gries candidate stage entirely
-    "t_heavy_tokens" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM documents),
-        |tot AS (SELECT count(*) AS t FROM tok)
-        |SELECT token, count(*) AS n,
-        |  round(count(*) / any_value(tot.t), 4) AS share
-        |FROM tok CROSS JOIN tot
-        |GROUP BY token
-        |HAVING count(*) >= ceil(0.002 * any_value(tot.t))
-        |ORDER BY n DESC, token ASC""".stripMargin,
-
-    // Morton replay: same measured-domain quantization arithmetic
-    // (identical IEEE op order: (x−mn)/(mx−mn)·255, floor, clamp) and
-    // the unrolled bit-interleave
-    "q_zorder_values" -> {
-      def q(col: String, mn: String, mx: String): String =
-        s"greatest(0, least(255, CAST(floor((CAST($col AS DOUBLE) - $mn)" +
-          s" / ($mx - $mn) * 255) AS BIGINT)))"
-      val interleave = (0 until 8).map(i =>
-        s"(((qa >> $i) & 1) << ${2 * i}) | (((qb >> $i) & 1) << ${2 * i + 1})")
-        .mkString(" | ")
-      s"""WITH src AS (SELECT event_id, user_id, value FROM events
-         |  WHERE event_id < 2000),
-         |st AS (SELECT CAST(min(user_id) AS DOUBLE) AS amn,
-         |  CAST(max(user_id) AS DOUBLE) AS amx,
-         |  min(value) AS bmn, max(value) AS bmx FROM src),
-         |qv AS (SELECT event_id,
-         |  ${q("user_id", "st.amn", "st.amx")} AS qa,
-         |  ${q("value", "st.bmn", "st.bmx")} AS qb
-         |  FROM src CROSS JOIN st)
-         |SELECT event_id, $interleave AS zv FROM qv
-         |ORDER BY event_id""".stripMargin
-    },
-
-    // shares replayed with the engine's EXACT integer half-up at 4dp
-    // (see Skew.report): round() on a double diverged at a .5 ulp
-    // boundary (0.00465 -> 0.0047 Spark vs 0.0046 DuckDB at sf0.1)
-    "q_skew_report" ->
-      """WITH c AS (
-        |  SELECT coalesce(CAST(user_id AS VARCHAR), 'NULL') AS key,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1),
-        |tot AS (SELECT count(*) AS t FROM events),
-        |top AS (SELECT key, n,
-        |  row_number() OVER (ORDER BY n DESC, key ASC) AS rank
-        |  FROM c ORDER BY n DESC, key ASC LIMIT 20)
-        |SELECT rank, key, n,
-        |  CAST((n * 20000 + tot.t) // (2 * tot.t) AS DOUBLE) / 10000.0
-        |    AS share,
-        |  CAST((sum(n) OVER (ORDER BY rank) * 20000 + tot.t)
-        |    // (2 * tot.t) AS DOUBLE) / 10000.0 AS cum_share
-        |FROM top CROSS JOIN tot
-        |ORDER BY rank""".stripMargin,
-
-    // PSI replay: round-6 reference deciles, the same CASE bucketing,
-    // eps-floored natural-log terms
-    "q_drift_psi" -> {
-      val edList = (1 to 9)
-        .map(i => s"round(quantile_cont(v, 0.$i), 6)").mkString(", ")
-      val caseB = (1 to 9).map(i => s"WHEN v <= ed[$i] THEN ${i - 1}")
-        .mkString(" ")
-      s"""WITH ref AS (SELECT o_totalprice AS v FROM orders
-         |  WHERE o_orderdate < TIMESTAMP '1996-01-01'),
-         |cur AS (SELECT o_totalprice AS v FROM orders
-         |  WHERE o_orderdate >= TIMESTAMP '1996-01-01'),
-         |e AS (SELECT [$edList] AS ed FROM ref),
-         |rc AS (SELECT bucket, count(*) AS n_ref FROM (
-         |  SELECT CASE $caseB ELSE 9 END AS bucket
-         |  FROM ref CROSS JOIN e) GROUP BY bucket),
-         |cc AS (SELECT bucket, count(*) AS n_cur FROM (
-         |  SELECT CASE $caseB ELSE 9 END AS bucket
-         |  FROM cur CROSS JOIN e) GROUP BY bucket),
-         |b AS (SELECT range::INT AS bucket FROM range(10)),
-         |j AS (SELECT b.bucket, coalesce(rc.n_ref, 0) AS n_ref,
-         |  coalesce(cc.n_cur, 0) AS n_cur
-         |  FROM b LEFT JOIN rc USING (bucket) LEFT JOIN cc USING (bucket)),
-         |t AS (SELECT sum(n_ref)::DOUBLE AS tr, sum(n_cur)::DOUBLE AS tc
-         |  FROM j)
-         |SELECT j.bucket,
-         |  CASE WHEN j.bucket >= 1 THEN ed[j.bucket] END AS lo,
-         |  CASE WHEN j.bucket <= 8 THEN ed[j.bucket + 1] END AS hi,
-         |  j.n_ref, j.n_cur,
-         |  round((j.n_ref / t.tr - j.n_cur / t.tc) *
-         |    ln(greatest(j.n_ref / t.tr, 0.000001) /
-         |      greatest(j.n_cur / t.tc, 0.000001)), 6) AS psi_term
-         |FROM j CROSS JOIN t CROSS JOIN e
-         |ORDER BY j.bucket""".stripMargin
-    },
-
-    // modified-z replay: exact interpolated medians (quantile_cont =
-    // Spark's percentile), outlier flag computed on the ROUNDED mz —
-    // the engine's convention, so boundary values can't hash-split
-    "t_mad_outliers" ->
-      """WITH base AS (SELECT doc_id, source AS stratum,
-        |  CAST(n_chars AS DOUBLE) AS v FROM documents),
-        |med AS (SELECT stratum, quantile_cont(v, 0.5) AS med
-        |  FROM base GROUP BY stratum),
-        |dev AS (SELECT b.doc_id, b.stratum, b.v, m.med,
-        |  abs(b.v - m.med) AS ad FROM base b JOIN med m USING (stratum)),
-        |mad AS (SELECT stratum, quantile_cont(ad, 0.5) AS mad
-        |  FROM dev GROUP BY stratum),
-        |mz AS (SELECT d.doc_id, d.stratum, d.v,
-        |  round(CASE WHEN m.mad = 0 THEN 0.0
-        |    ELSE 0.6745 * (d.v - d.med) / m.mad END, 4) AS mz
-        |  FROM dev d JOIN mad m USING (stratum))
-        |SELECT doc_id, stratum, v, mz,
-        |  (abs(mz) > 3.5)::INT AS is_outlier
-        |FROM mz ORDER BY doc_id""".stripMargin,
-
-    "q_data_profile" ->
-      """SELECT * FROM (
-        |  SELECT 'doc_id' AS "column", count(*) AS n_rows,
-        |    sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-        |    count(DISTINCT doc_id) AS n_distinct,
-        |    CAST(min(doc_id) AS DOUBLE) AS min_v,
-        |    CAST(max(doc_id) AS DOUBLE) AS max_v,
-        |    round(avg(doc_id), 4) AS mean_v,
-        |    round(stddev_samp(doc_id), 4) AS std_v
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'lang', count(*),
-        |    sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    count(DISTINCT lang), NULL, NULL, NULL, NULL
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*),
-        |    sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    count(DISTINCT n_chars),
-        |    CAST(min(n_chars) AS DOUBLE), CAST(max(n_chars) AS DOUBLE),
-        |    round(avg(n_chars), 4), round(stddev_samp(n_chars), 4)
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'source', count(*),
-        |    sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    count(DISTINCT source), NULL, NULL, NULL, NULL
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'text', count(*),
-        |    sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    count(DISTINCT text), NULL, NULL, NULL, NULL
-        |  FROM documents)
-        |ORDER BY "column"""".stripMargin,
-
-    // exact stats replayed per column; dist_ok pinned to 1 — the
-    // engine side emits 0 there whenever the HLL merge estimate
-    // leaves the ±5% contract band
-    "p_incr_profile" ->
-      """SELECT * FROM (
-        |  SELECT 'lang' AS "column", count(*) AS n_rows,
-        |    sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-        |    CAST(1 AS INT) AS dist_ok,
-        |    CAST(NULL AS DOUBLE) AS min_v, CAST(NULL AS DOUBLE) AS max_v,
-        |    CAST(NULL AS DOUBLE) AS mean_v, CAST(NULL AS DOUBLE) AS std_v
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*),
-        |    sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    CAST(1 AS INT),
-        |    CAST(min(n_chars) AS DOUBLE), CAST(max(n_chars) AS DOUBLE),
-        |    round(avg(n_chars), 4), round(stddev_samp(n_chars), 4)
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'source', count(*),
-        |    sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    CAST(1 AS INT), NULL, NULL, NULL, NULL
-        |  FROM documents)
-        |ORDER BY "column"""".stripMargin,
-
-    // the streamed face merges per-batch sidecars into the SAME
-    // profile the batch operator computes over the whole corpus —
-    // identical replay to p_incr_profile (batching is invisible to
-    // exact counts/moments; the HLL union rides the same ±5% flag)
-    "s_profile_stream" ->
-      """SELECT * FROM (
-        |  SELECT 'lang' AS "column", count(*) AS n_rows,
-        |    sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-        |    CAST(1 AS INT) AS dist_ok,
-        |    CAST(NULL AS DOUBLE) AS min_v, CAST(NULL AS DOUBLE) AS max_v,
-        |    CAST(NULL AS DOUBLE) AS mean_v, CAST(NULL AS DOUBLE) AS std_v
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*),
-        |    sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    CAST(1 AS INT),
-        |    CAST(min(n_chars) AS DOUBLE), CAST(max(n_chars) AS DOUBLE),
-        |    round(avg(n_chars), 4), round(stddev_samp(n_chars), 4)
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'source', count(*),
-        |    sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    CAST(1 AS INT), NULL, NULL, NULL, NULL
-        |  FROM documents)
-        |ORDER BY "column"""".stripMargin,
-
-    // the streamed heavy-hitter report against exact truth: the row
-    // set is the exact φ-frequent tokens (completeness — a reported
-    // miss shows as the engine's -1 coalesce), lb replays the
-    // per-batch (doc_id%2) φ-bar sums exactly, certain derives from
-    // lb, and ub bracketing is pinned as a flag (count-min only
-    // over-counts)
-    "s_heavy_tokens_stream" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM documents),
-        |tot AS (SELECT count(*) AS t FROM tok),
-        |exact AS (
-        |  SELECT token, count(*) AS n
-        |  FROM tok CROSS JOIN tot
-        |  GROUP BY token
-        |  HAVING count(*) >= ceil(0.002 * any_value(tot.t))),
-        |b1 AS (SELECT token, count(*) AS n FROM tok
-        |  WHERE doc_id % 2 = 0 GROUP BY token),
-        |t1 AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM b1),
-        |c1 AS (SELECT token, n FROM b1 CROSS JOIN t1
-        |  WHERE n >= ceil(0.002 * t1.t)),
-        |b2 AS (SELECT token, count(*) AS n FROM tok
-        |  WHERE doc_id % 2 = 1 GROUP BY token),
-        |t2 AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM b2),
-        |c2 AS (SELECT token, n FROM b2 CROSS JOIN t2
-        |  WHERE n >= ceil(0.002 * t2.t)),
-        |lbs AS (
-        |  SELECT token, CAST(sum(n) AS BIGINT) AS lb FROM (
-        |    SELECT token, n FROM c1
-        |    UNION ALL SELECT token, n FROM c2)
-        |  GROUP BY token)
-        |SELECT e.token, e.n,
-        |  coalesce(l.lb, -1) AS lb,
-        |  CASE WHEN coalesce(l.lb, -1) >=
-        |    ceil(0.002 * (SELECT t FROM tot)) THEN 1 ELSE 0 END AS certain,
-        |  1 AS ub_ok
-        |FROM exact e LEFT JOIN lbs l USING (token)
-        |ORDER BY e.token""".stripMargin,
-
-    // compaction is invisible to reads (counts/moments add exactly,
-    // HLL registers union) — the folded sidecars replay to the SAME
-    // whole-corpus profile as s_profile_stream
-    "s_profile_compact" ->
-      """SELECT * FROM (
-        |  SELECT 'lang' AS "column", count(*) AS n_rows,
-        |    sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-        |    CAST(1 AS INT) AS dist_ok,
-        |    CAST(NULL AS DOUBLE) AS min_v, CAST(NULL AS DOUBLE) AS max_v,
-        |    CAST(NULL AS DOUBLE) AS mean_v, CAST(NULL AS DOUBLE) AS std_v
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*),
-        |    sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    CAST(1 AS INT),
-        |    CAST(min(n_chars) AS DOUBLE), CAST(max(n_chars) AS DOUBLE),
-        |    round(avg(n_chars), 4), round(stddev_samp(n_chars), 4)
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'source', count(*),
-        |    sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END)::BIGINT,
-        |    CAST(1 AS INT), NULL, NULL, NULL, NULL
-        |  FROM documents)
-        |ORDER BY "column"""".stripMargin,
-
-    // the s_heavy_tokens_stream replay under the doc_id%4 split, with
-    // the folds invisible: tops rows sum by token so lb is STILL the
-    // sum of the per-batch counts that cleared each batch's φ bar, and
-    // merged count-min cells only ever over-count (ub_ok flag)
-    "s_heavy_compact" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM documents),
-        |tot AS (SELECT count(*) AS t FROM tok),
-        |exact AS (
-        |  SELECT token, count(*) AS n
-        |  FROM tok CROSS JOIN tot
-        |  GROUP BY token
-        |  HAVING count(*) >= ceil(0.002 * any_value(tot.t))),
-        |perb AS (SELECT doc_id % 4 AS b, token, count(*) AS n
-        |  FROM tok GROUP BY 1, 2),
-        |bars AS (SELECT b, CAST(sum(n) AS BIGINT) AS t FROM perb GROUP BY b),
-        |cleared AS (SELECT perb.token, perb.n
-        |  FROM perb JOIN bars USING (b)
-        |  WHERE perb.n >= ceil(0.002 * bars.t)),
-        |lbs AS (SELECT token, CAST(sum(n) AS BIGINT) AS lb
-        |  FROM cleared GROUP BY token)
-        |SELECT e.token, e.n,
-        |  coalesce(l.lb, -1) AS lb,
-        |  CASE WHEN coalesce(l.lb, -1) >=
-        |    ceil(0.002 * (SELECT t FROM tot)) THEN 1 ELSE 0 END AS certain,
-        |  1 AS ub_ok
-        |FROM exact e LEFT JOIN lbs l USING (token)
-        |ORDER BY e.token""".stripMargin,
-
-    // folds are a per-bucket sum, so the streamed histogram equals the
-    // one-shot GROUP BY; p50/p95 replay the same interpolation: first
-    // bucket whose cumulative count reaches q·N, linear within it
-    "s_hist_stream" ->
-      """WITH hist AS (
-        |  SELECT least(23, greatest(0,
-        |      CAST(floor((CAST(n_chars AS DOUBLE) - 0.0) / 25.0) AS INT)))
-        |    AS bucket,
-        |    count(*) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL
-        |  GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS DOUBLE) AS t FROM hist),
-        |cum AS (SELECT bucket, n,
-        |    sum(n) OVER (ORDER BY bucket) - n AS cb FROM hist),
-        |q50 AS (SELECT round(0.0 + 25.0 * (bucket +
-        |      least(1.0, greatest(0.0, (0.5 * t - cb) / n))), 4) AS p50
-        |  FROM cum, tot WHERE cb + n >= 0.5 * t
-        |  ORDER BY bucket LIMIT 1),
-        |q95 AS (SELECT round(0.0 + 25.0 * (bucket +
-        |      least(1.0, greatest(0.0, (0.95 * t - cb) / n))), 4) AS p95
-        |  FROM cum, tot WHERE cb + n >= 0.95 * t
-        |  ORDER BY bucket LIMIT 1)
-        |SELECT h.bucket, h.n, q50.p50, q95.p95
-        |FROM hist h, q50, q95
-        |ORDER BY h.bucket""".stripMargin,
-
-    // embedding drift replay: the even-vector k-means chain, the odd
-    // vectors assigned by squared-L2 argmin (ORDER BY d, c — lowest
-    // cell wins ties, the engine's strict-less predict), then the
-    // p_psi_hist arithmetic over the 8-cell domain
-    "p_psi_embed" ->
-      (s"""WITH src AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |edsrc AS (SELECT * FROM src WHERE id % 2 = 0),
-          |${kmeansCtes("edsrc", 8, 15, "ed")},
-          |refc AS (SELECT c AS cell, count(*) AS n_ref FROM edfin
-          |  GROUP BY c),
-          |cursrc AS (SELECT * FROM src WHERE id % 2 = 1),
-          |dist AS (SELECT s.id, k.c,
-          |    sum((s.x - k.cx) * (s.x - k.cx)) AS d
-          |  FROM cursrc s JOIN edkc15 k ON k.f = s.f GROUP BY s.id, k.c),
-          |curassign AS (SELECT id, c FROM (
-          |  SELECT id, c, row_number() OVER (
-          |    PARTITION BY id ORDER BY d, c) AS rn FROM dist)
-          |  WHERE rn = 1),
-          |curc AS (SELECT c AS cell, count(*) AS n_cur FROM curassign
-          |  GROUP BY c),
-          |dom AS (SELECT CAST(range AS INT) AS cell FROM range(0, 8)),
-          |j AS (SELECT dom.cell,
-          |    coalesce(refc.n_ref, 0)::BIGINT AS n_ref,
-          |    coalesce(curc.n_cur, 0)::BIGINT AS n_cur
-          |  FROM dom LEFT JOIN refc USING (cell)
-          |  LEFT JOIN curc USING (cell)),
-          |t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-          |    CAST(sum(n_cur) AS DOUBLE) AS tc FROM j)
-          |SELECT j.cell, j.n_ref, j.n_cur,
-          |  round((j.n_ref / t.tr - j.n_cur / t.tc) *
-          |    ln(greatest(j.n_ref / t.tr, 1e-6) /
-          |       greatest(j.n_cur / t.tc, 1e-6)), 6) AS psi_term
-          |FROM j, t
-          |ORDER BY j.cell""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // profile-derived bounds: lo/hi/width computed from the data in
-    // SQL exactly as histBoundsFromProfile reads them from the
-    // profile (min/max of an integer column cast to double — bit-
-    // identical), then the same clamped-floor buckets and cumulative
-    // interpolation as the s_hist_stream replay
-    "p_hist_bounds" ->
-      """WITH src AS (SELECT CAST(n_chars AS DOUBLE) AS x
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |bnd AS (SELECT min(x) AS lo, max(x) AS hi,
-        |    (max(x) - min(x)) / 16.0 AS w FROM src),
-        |hist AS (SELECT least(15, greatest(0,
-        |      CAST(floor((s.x - b.lo) / b.w) AS INT))) AS bucket,
-        |    count(*) AS n
-        |  FROM src s, bnd b GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS DOUBLE) AS t FROM hist),
-        |cum AS (SELECT bucket, n,
-        |    sum(n) OVER (ORDER BY bucket) - n AS cb FROM hist),
-        |q50 AS (SELECT round(b.lo + b.w * (bucket +
-        |      least(1.0, greatest(0.0, (0.5 * t - cb) / n))), 4) AS p50
-        |  FROM cum, tot, bnd b WHERE cb + n >= 0.5 * t
-        |  ORDER BY bucket LIMIT 1),
-        |q95 AS (SELECT round(b.lo + b.w * (bucket +
-        |      least(1.0, greatest(0.0, (0.95 * t - cb) / n))), 4) AS p95
-        |  FROM cum, tot, bnd b WHERE cb + n >= 0.95 * t
-        |  ORDER BY bucket LIMIT 1)
-        |SELECT h.bucket, h.n, q50.p50, q95.p95
-        |FROM hist h, q50, q95
-        |ORDER BY h.bucket""".stripMargin,
-
-    // PSI replay over the sidecars' fixed equi-width buckets: per-side
-    // counts via the same clamped floor, full 0..23 domain (absent
-    // buckets count 0), fractions floored at 1e-6 inside the log
-    "p_psi_hist" ->
-      """WITH b AS (
-        |  SELECT doc_id % 2 AS grp,
-        |    least(23, greatest(0,
-        |      CAST(floor((CAST(n_chars AS DOUBLE) - 0.0) / 25.0) AS INT)))
-        |      AS bucket
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |r AS (SELECT bucket, count(*) AS n_ref FROM b WHERE grp = 0
-        |  GROUP BY bucket),
-        |c AS (SELECT bucket, count(*) AS n_cur FROM b WHERE grp = 1
-        |  GROUP BY bucket),
-        |dom AS (SELECT CAST(range AS INT) AS bucket FROM range(0, 24)),
-        |j AS (SELECT dom.bucket,
-        |    coalesce(r.n_ref, 0)::BIGINT AS n_ref,
-        |    coalesce(c.n_cur, 0)::BIGINT AS n_cur
-        |  FROM dom LEFT JOIN r USING (bucket) LEFT JOIN c USING (bucket)),
-        |t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-        |    CAST(sum(n_cur) AS DOUBLE) AS tc FROM j)
-        |SELECT j.bucket, j.n_ref, j.n_cur,
-        |  round((j.n_ref / t.tr - j.n_cur / t.tc) *
-        |    ln(greatest(j.n_ref / t.tr, 1e-6) /
-        |       greatest(j.n_cur / t.tc, 1e-6)), 6) AS psi_term
-        |FROM j, t
-        |ORDER BY j.bucket""".stripMargin,
-
-    // the widened tie class covers the whole corpus (every abs(x)+1
-    // sign code is identical), so the tie-aware cut's exact rerank is
-    // the true cosine top-20 over the transformed vectors
-    "v_binary_tieaware" ->
-      """WITH e AS (SELECT vec_id AS id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x) + 1.0)
-        |    AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE id = 0)
-        |SELECT e.id, round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // full probes reduce the composed face to the flat tie-aware cut:
-    // the same exact top-20 replay
-    "v_ivf_binary_tieaware" ->
-      """WITH e AS (SELECT vec_id AS id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x) + 1.0)
-        |    AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE id = 0)
-        |SELECT e.id, round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // per-qid exact top-10 over the abs(x)+1 vectors — every query's
-    // widened tie class is the whole corpus
-    "v_binary_tieaware_batch" -> tieAwareBatchReplaySql,
-
-    // full probes reduce the composed BATCH face to the flat one —
-    // the same per-qid exact top-10 replay
-    "v_ivf_binary_tieaware_batch" -> tieAwareBatchReplaySql,
-
-    // filtered face at the degenerate point: exact filter-then-top-k
-    // over the abs(x)+1 vectors — the predicate must intersect BEFORE
-    // the frontier probe or the mode's tie class crowds the cut
-    "v_ivf_binary_tieaware_filtered" ->
-      """WITH e AS (SELECT vec_id AS id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x) + 1.0)
-        |    AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE id = 0)
-        |SELECT e.id, round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |WHERE e.id % 3 = 0
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // v_opq_topk's degenerate-point argument, with the rotation fit
-    // from merged shard moments instead of a one-shot corpus pass —
-    // any ORTHOGONAL rotation preserves the exact rerank's cosines
-    "v_opq_moments_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |FROM e, q
-        |ORDER BY score DESC, id ASC
-        |LIMIT 20""".stripMargin,
-
-    // at nLists = 8 the suggestNprobe default probes ALL lists, so the
-    // routed approx path must equal the exact cross-label top-k
-    "v_hard_negatives_suggest" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    label::VARCHAR AS label
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv, label AS ql
-        |  FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.qid, e.vec_id AS id, e.label AS neg_label,
-        |    round(list_cosine_similarity(e.v, q.qv), 4) AS score
-        |  FROM e JOIN q ON e.label <> q.ql),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY qid ORDER BY score DESC, id ASC) AS rk
-        |  FROM scored)
-        |SELECT qid, id, neg_label, score FROM ranked WHERE rk <= 10
-        |ORDER BY qid, score DESC, id""".stripMargin,
-
-    "t_corpus_report" ->
-      """WITH l AS (
-        |  SELECT source, lang,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS n_tokens
-        |  FROM documents)
-        |SELECT count(*) AS n_docs,
-        |  sum(n_tokens)::BIGINT AS total_tokens,
-        |  round(avg(n_tokens), 4) AS avg_tokens,
-        |  round(quantile_cont(n_tokens, 0.5), 4) AS p50_tokens,
-        |  round(quantile_cont(n_tokens, 0.95), 4) AS p95_tokens,
-        |  count(DISTINCT source) AS n_sources,
-        |  count(DISTINCT lang) AS n_langs
-        |FROM l""".stripMargin,
-
-    // same vocab ranking as the engine (count desc, token asc → ids
-    // 0..99), then per-token LEFT JOIN with coalesce(id, -1); the
-    // documents LEFT JOIN keeps null-text docs as ('', 0, 0) to mirror
-    // the engine's null-text row
-    "t_encode_tokens" ->
-      """WITH voc AS (
-        |  SELECT token,
-        |    row_number() OVER (ORDER BY n_occurrences DESC, token ASC)
-        |      - 1 AS id
-        |  FROM (
-        |    SELECT token, count(*) AS n_occurrences
-        |    FROM (SELECT unnest(string_split_regex(trim(text), '\s+'))
-        |            AS token FROM documents)
-        |    GROUP BY token
-        |    ORDER BY n_occurrences DESC, token ASC LIMIT 100)),
-        |tok AS (
-        |  SELECT doc_id,
-        |    generate_subscripts(string_split_regex(trim(text), '\s+'), 1)
-        |      AS pos,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM documents),
-        |enc AS (
-        |  SELECT t.doc_id,
-        |    string_agg(coalesce(v.id, -1)::VARCHAR, ' ' ORDER BY t.pos)
-        |      AS ids,
-        |    count(*)::BIGINT AS n_tokens,
-        |    sum(CASE WHEN v.id IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov
-        |  FROM tok t LEFT JOIN voc v ON v.token = t.token
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id, coalesce(e.ids, '') AS ids,
-        |  coalesce(e.n_tokens, 0)::BIGINT AS n_tokens,
-        |  coalesce(e.n_oov, 0)::BIGINT AS n_oov
-        |FROM documents d LEFT JOIN enc e ON e.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // replay of dedupLines at 2-token-segment granularity: the oracle
-    // may use the skew-prone row_number() form the operator avoids —
-    // first occurrence by (doc_id, pos) is the same keeper either way
-    "t_line_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |lines AS (
-        |  SELECT doc_id, i - 1 AS pos,
-        |    array_to_string(t[(i-1)*2+1 : (i-1)*2+2], ' ') AS line
-        |  FROM (
-        |    SELECT doc_id, t,
-        |      unnest(generate_series(1, CAST(ceil(len(t) / 2.0) AS BIGINT))) AS i
-        |    FROM toks)),
-        |marked AS (
-        |  SELECT doc_id, pos, line,
-        |    count(*) OVER (PARTITION BY line) AS c,
-        |    row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-        |  FROM lines)
-        |SELECT doc_id,
-        |  sum(CASE WHEN c < 2 OR rn = 1 THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-        |  sum(CASE WHEN c >= 2 AND rn > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
-        |  md5(coalesce(
-        |    string_agg(CASE WHEN c < 2 OR rn = 1 THEN line END, ' '
-        |               ORDER BY pos), '')) AS clean_md5
-        |FROM marked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "t_bm25" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |dl AS (SELECT doc_id, len(t)::BIGINT AS dl FROM toks),
-        |corpus AS (
-        |  SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM dl),
-        |tf AS (
-        |  SELECT doc_id, token, count(*)::DOUBLE AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS token FROM toks)
-        |  WHERE token IN ('spark', 'vector', 'stream')
-        |  GROUP BY doc_id, token),
-        |idf AS (
-        |  SELECT token, ln((c.n - d.df + 0.5) / (d.df + 0.5) + 1) AS idf
-        |  FROM (SELECT token, count(DISTINCT doc_id)::DOUBLE AS df
-        |        FROM tf GROUP BY token) d, corpus c)
-        |SELECT tf.doc_id,
-        |  round(sum(idf.idf * tf.tf * 2.2 /
-        |    (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / c.avgdl))), 6) AS score
-        |FROM tf
-        |JOIN idf USING (token)
-        |JOIN dl USING (doc_id), corpus c
-        |GROUP BY tf.doc_id
-        |ORDER BY score DESC, doc_id ASC
-        |LIMIT 10""".stripMargin,
-
-    // RRF replay: the t_bm25 scoring chain and the v_ann_topk cosine
-    // chain, each row_number'ed on its ROUNDED score (the engine's
-    // rank convention), unioned and folded into sum(1/(60+rank))
-    "v_rrf_fusion" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |dl AS (SELECT doc_id, len(t)::BIGINT AS dl FROM toks),
-        |corpus AS (
-        |  SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM dl),
-        |tf AS (
-        |  SELECT doc_id, token, count(*)::DOUBLE AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS token FROM toks)
-        |  WHERE token IN ('spark', 'vector', 'stream')
-        |  GROUP BY doc_id, token),
-        |idf AS (
-        |  SELECT token, ln((c.n - d.df + 0.5) / (d.df + 0.5) + 1) AS idf
-        |  FROM (SELECT token, count(DISTINCT doc_id)::DOUBLE AS df
-        |        FROM tf GROUP BY token) d, corpus c),
-        |lexs AS (
-        |  SELECT tf.doc_id,
-        |    round(sum(idf.idf * tf.tf * 2.2 /
-        |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / c.avgdl))), 6) AS score
-        |  FROM tf
-        |  JOIN idf USING (token)
-        |  JOIN dl USING (doc_id), corpus c
-        |  GROUP BY tf.doc_id
-        |  ORDER BY score DESC, doc_id ASC
-        |  LIMIT 20),
-        |lex AS (SELECT doc_id, row_number() OVER (
-        |  ORDER BY score DESC, doc_id ASC) AS rank FROM lexs),
-        |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |qv AS (SELECT v AS q FROM ev WHERE vec_id = 0),
-        |sems AS (
-        |  SELECT ev.vec_id AS doc_id,
-        |    round(list_cosine_similarity(ev.v, qv.q), 4) AS score
-        |  FROM ev, qv
-        |  ORDER BY score DESC, doc_id ASC
-        |  LIMIT 20),
-        |sem AS (SELECT doc_id, row_number() OVER (
-        |  ORDER BY score DESC, doc_id ASC) AS rank FROM sems),
-        |u AS (SELECT doc_id, rank FROM lex
-        |  UNION ALL SELECT doc_id, rank FROM sem)
-        |SELECT doc_id, round(sum(1.0 / (60 + rank)), 6) AS rrf,
-        |  count(*) AS n_lists
-        |FROM u GROUP BY doc_id
-        |ORDER BY rrf DESC, doc_id ASC""".stripMargin,
-
-    // DSIR replay: hashed unigram+bigram buckets (same first-8-hex md5
-    // convention), add-one smoothing over the bucket range on both the
-    // target and raw multinomials, per-doc sum of the log-ratio
-    "t_dsir_weights" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, unnest(list_concat(t,
-        |    list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])))
-        |    AS g
-        |  FROM toks),
-        |gb AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-        |  FROM grams),
-        |tc AS (SELECT b, count(*)::DOUBLE AS c FROM gb
-        |       WHERE doc_id % 20 = 0 GROUP BY b),
-        |rc AS (SELECT b, count(*)::DOUBLE AS c FROM gb
-        |       WHERE doc_id % 20 <> 0 GROUP BY b),
-        |tn AS (SELECT coalesce(sum(c), 0) + 512 AS denom FROM tc),
-        |rn AS (SELECT coalesce(sum(c), 0) + 512 AS denom FROM rc),
-        |delta AS (
-        |  SELECT gb.doc_id,
-        |    log2((coalesce(tc.c, 0) + 1) / tn.denom) -
-        |    log2((coalesce(rc.c, 0) + 1) / rn.denom) AS dlt
-        |  FROM gb LEFT JOIN tc USING (b) LEFT JOIN rc USING (b), tn, rn),
-        |sc AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_grams, sum(dlt) AS s
-        |  FROM delta GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(sc.n_grams, 0)::BIGINT AS n_grams,
-        |  round(coalesce(sc.s, 0), 6) AS logw_bits
-        |FROM documents d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // add-one-smoothed unigram LM replay: denom = N + V + 1 (one OOV
-    // bucket); self-scoring means no OOV here, but the join form keeps
-    // the oracle honest about the per-token probability
-    "t_unigram_lm" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+'))
-        |    AS token
-        |  FROM documents),
-        |cnt AS (SELECT token, count(*)::DOUBLE AS c FROM tok GROUP BY token),
-        |tot AS (SELECT sum(c) + count(*) + 1 AS denom FROM cnt),
-        |sc AS (
-        |  SELECT t.doc_id, count(*)::BIGINT AS n_tokens,
-        |    avg(-log2((cnt.c + 1) / tot.denom)) AS bits
-        |  FROM tok t JOIN cnt USING (token), tot
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(s.n_tokens, 0)::BIGINT AS n_tokens,
-        |  round(coalesce(s.bits, 0), 6) AS bits_per_token
-        |FROM documents d LEFT JOIN sc s USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // bigram-LM replay: positions via generate_subscripts, pair
-    // counts from a self-join on (doc, i+1), lag() for the left word,
-    // the same λ·p2 + (1−λ)·p1 arithmetic with (1 - 0.7) computed in
-    // SQL so both engines share the identical double
-    "t_bigram_lm" ->
-      """WITH tl AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |tok AS (SELECT doc_id, generate_subscripts(t, 1) AS i,
-        |  unnest(t) AS token FROM tl),
-        |cnt AS (SELECT token, count(*)::DOUBLE AS c FROM tok GROUP BY token),
-        |tot AS (SELECT sum(c) + count(*) + 1 AS denom FROM cnt),
-        |bg AS (SELECT a.token AS pw, b.token AS w, count(*)::DOUBLE AS c
-        |  FROM tok a JOIN tok b
-        |  ON b.doc_id = a.doc_id AND b.i = a.i + 1
-        |  GROUP BY a.token, b.token),
-        |sc AS (SELECT t.doc_id, t.i, t.token,
-        |  lag(t.token) OVER (PARTITION BY t.doc_id ORDER BY t.i) AS pw
-        |  FROM tok t),
-        |p AS (SELECT s.doc_id,
-        |  CASE WHEN s.pw IS NULL THEN (cu.c + 1) / tot.denom
-        |    ELSE 0.7 * coalesce(bg.c, 0) / cp.c
-        |      + (1 - 0.7) * (cu.c + 1) / tot.denom
-        |  END AS prob
-        |  FROM sc s
-        |  JOIN cnt cu ON cu.token = s.token
-        |  LEFT JOIN cnt cp ON cp.token = s.pw
-        |  LEFT JOIN bg ON bg.pw = s.pw AND bg.w = s.token
-        |  CROSS JOIN tot),
-        |agg AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-        |  avg(-log2(prob)) AS bits FROM p GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(a.n_tokens, 0)::BIGINT AS n_tokens,
-        |  round(coalesce(a.bits, 0), 6) AS bits_per_token
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // quota replay: inclusive per-source cumsum window, truncate at
-    // first overflow; src0 capped at 100 tokens, others at 300
-    "d_source_quota" ->
-      """WITH w AS (
-        |  SELECT doc_id, source,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS w
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, w,
-        |    coalesce(sum(w) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-        |  FROM w)
-        |SELECT doc_id, source, w AS n_tokens,
-        |  before::BIGINT AS tokens_before
-        |FROM c
-        |WHERE before + w <= CASE WHEN source = 'src0' THEN 100 ELSE 300 END
-        |ORDER BY doc_id""".stripMargin,
-
-    // split replay: same first-8-hex md5 bucket convention as
-    // hashBucket; cumulative cuts 8000/9000, last split is the ELSE
-    "d_split_assign" ->
-      """SELECT doc_id, source,
-        |  CASE
-        |    WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      % 10000 < 8000 THEN 'train'
-        |    WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      % 10000 < 9000 THEN 'val'
-        |    ELSE 'test'
-        |  END AS split
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // containment replay: distinct 6-grams (whole-text fallback under
-    // 6 tokens), df <= 100 prune, gram self-join pair counts,
-    // kept-gram denominator, threshold on the rounded ratio
-    "d_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |grams AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) < 6 THEN [array_to_string(t, ' ')]
-        |    ELSE list_transform(range(1, len(t) - 4),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' ||
-        |        t[i+3] || ' ' || t[i+4] || ' ' || t[i+5])
-        |    END AS gs
-        |  FROM toks),
-        |g2 AS (SELECT DISTINCT doc_id, unnest(gs) AS g FROM grams),
-        |dfok AS (SELECT g FROM (
-        |  SELECT g, count(*) AS df FROM g2 GROUP BY g) WHERE df <= 100),
-        |kept AS (SELECT g2.doc_id, g2.g FROM g2 JOIN dfok USING (g)),
-        |sz AS (SELECT doc_id, count(*) AS n_grams FROM kept GROUP BY doc_id),
-        |sh AS (
-        |  SELECT a.doc_id, b.doc_id AS container_id, count(*) AS shared
-        |  FROM kept a JOIN kept b
-        |  ON a.g = b.g AND a.doc_id <> b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id)
-        |SELECT s.doc_id, s.container_id, s.shared, z.n_grams,
-        |  round(s.shared::DOUBLE / z.n_grams, 4) AS containment
-        |FROM sh s JOIN sz z ON z.doc_id = s.doc_id
-        |WHERE round(s.shared::DOUBLE / z.n_grams, 4) >= 0.8
-        |ORDER BY containment DESC, s.doc_id, s.container_id""".stripMargin,
-
-    // A-ES replay: the same md5-first-8-hex uniform (+1 so ln never
-    // sees zero), ln(u)/w keys, per-stratum max-k on the RAW key with
-    // the row-key tiebreak, round-6 output
-    "d_weighted_sample" ->
-      """WITH base AS (SELECT doc_id AS key, source AS stratum,
-        |  CAST(n_chars AS DOUBLE) AS w FROM documents),
-        |a AS (SELECT key, stratum, w,
-        |  ln((('0x' || substr(md5(CAST(key AS VARCHAR)), 1, 8))::BIGINT + 1)
-        |    / 4294967296.0) / w AS akey
-        |  FROM base),
-        |r AS (SELECT key, stratum, w, akey, row_number() OVER (
-        |  PARTITION BY stratum ORDER BY akey DESC, key ASC) AS rn FROM a)
-        |SELECT key, stratum, w, round(akey, 6) AS akey FROM r
-        |WHERE rn <= 20
-        |ORDER BY stratum, akey DESC, key""".stripMargin,
-
-    // leak-free replay: exact >= 0.8 Jaccard pairs -> recursive
-    // min-label closure -> coalesce(keeper, doc_id) as the split key
-    // -> the same md5 CASE as d_split_assign on that key
-    "d_split_leakfree" ->
-      s"""WITH RECURSIVE $JaccardPairsCte,
-        |dup AS (SELECT doc_a, doc_b FROM jpairs WHERE jaccard >= 0.8),
-        |symp AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM dup
-        |  UNION SELECT doc_b AS src, doc_a AS dst FROM dup),
-        |pnodes AS (SELECT DISTINCT src AS id FROM symp),
-        |r(id, lab) AS (
-        |  SELECT id, id FROM pnodes
-        |  UNION
-        |  SELECT s.dst, r.lab FROM r JOIN symp s ON s.src = r.id
-        |  WHERE r.lab < s.dst),
-        |keep AS (SELECT id AS doc_id, min(lab) AS keeper FROM r GROUP BY id),
-        |keyed AS (
-        |  SELECT d.doc_id, coalesce(k.keeper, d.doc_id) AS split_key
-        |  FROM documents d LEFT JOIN keep k ON k.doc_id = d.doc_id)
-        |SELECT doc_id, split_key,
-        |  CASE
-        |    WHEN ('0x' || substr(md5(CAST(split_key AS VARCHAR)), 1, 8))::BIGINT
-        |      % 10000 < 8000 THEN 'train'
-        |    WHEN ('0x' || substr(md5(CAST(split_key AS VARCHAR)), 1, 8))::BIGINT
-        |      % 10000 < 9000 THEN 'val'
-        |    ELSE 'test'
-        |  END AS split
-        |FROM keyed
-        |ORDER BY doc_id""".stripMargin,
-
-    // span-corruption replay: same md5 block/length convention as
-    // hashBucket (first-8-hex unsigned), 1-based list_slice windows,
-    // sentinel rank = selected blocks before j, terminal sentinel
-    "t_span_corrupt" ->
-      """WITH base AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |blk AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(0, CAST(ceil(len(t) / 8.0) AS BIGINT))) AS j
-        |  FROM base),
-        |sel AS (
-        |  SELECT doc_id, t, j,
-        |    least(8, len(t) - j*8) AS bc,
-        |    ('0x' || substr(md5(doc_id || ':' || j), 1, 8))::BIGINT % 4 = 0
-        |      AS s,
-        |    least(
-        |      1 + ('0x' || substr(md5(doc_id || ':' || j || ':len'), 1, 8))
-        |        ::BIGINT % 3,
-        |      least(8, len(t) - j*8)) AS l
-        |  FROM blk),
-        |rk AS (
-        |  SELECT *, coalesce(sum(CASE WHEN s THEN 1 ELSE 0 END) OVER
-        |    (PARTITION BY doc_id ORDER BY j
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS k0
-        |  FROM sel),
-        |p AS (
-        |  SELECT doc_id, j, s,
-        |    CASE WHEN NOT s THEN
-        |        array_to_string(list_slice(t, j*8+1, j*8+bc), ' ')
-        |      WHEN l = bc THEN '<extra_id_' || k0 || '>'
-        |      ELSE '<extra_id_' || k0 || '>' || ' ' ||
-        |        array_to_string(list_slice(t, j*8+l+1, j*8+bc), ' ')
-        |    END AS in_piece,
-        |    CASE WHEN s THEN '<extra_id_' || k0 || '>' || ' ' ||
-        |      array_to_string(list_slice(t, j*8+1, j*8+l), ' ')
-        |    END AS tgt_piece
-        |  FROM rk),
-        |agg AS (
-        |  SELECT doc_id,
-        |    string_agg(CASE WHEN in_piece <> '' THEN in_piece END,
-        |      ' ' ORDER BY j) AS input,
-        |    string_agg(tgt_piece, ' ' ORDER BY j) AS tgt0,
-        |    sum(CASE WHEN s THEN 1 ELSE 0 END) AS nsp
-        |  FROM p GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.text IS NULL THEN NULL
-        |    ELSE coalesce(a.input, '') END AS input,
-        |  CASE WHEN d.text IS NULL THEN NULL
-        |    ELSE (CASE WHEN a.tgt0 IS NULL THEN ''
-        |      ELSE a.tgt0 || ' ' END) || '<extra_id_' || a.nsp || '>'
-        |  END AS target,
-        |  coalesce(a.nsp, 0)::BIGINT AS n_spans
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // perplexity-tercile replay: the t_unigram_lm model, round-6
-    // scores, exact interpolated quantiles (quantile_cont ==
-    // Spark's percentile), bucket CASE on the same rounded values
-    "t_ppl_buckets" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+'))
-        |    AS token
-        |  FROM documents),
-        |cnt AS (SELECT token, count(*)::DOUBLE AS c FROM tok GROUP BY token),
-        |tot AS (SELECT sum(c) + count(*) + 1 AS denom FROM cnt),
-        |sc AS (
-        |  SELECT t.doc_id, count(*)::BIGINT AS n_tokens,
-        |    avg(-log2((cnt.c + 1) / tot.denom)) AS bits
-        |  FROM tok t JOIN cnt USING (token), tot
-        |  GROUP BY t.doc_id),
-        |scored AS (
-        |  SELECT d.doc_id, round(coalesce(s.bits, 0), 6) AS b
-        |  FROM documents d LEFT JOIN sc s USING (doc_id)),
-        |cuts AS (
-        |  SELECT quantile_cont(b, 1.0/3) AS t1, quantile_cont(b, 2.0/3) AS t2
-        |  FROM scored),
-        |lab AS (
-        |  SELECT CASE WHEN b <= t1 THEN 'head'
-        |    WHEN b <= t2 THEN 'middle' ELSE 'tail' END AS bucket, b
-        |  FROM scored, cuts)
-        |SELECT bucket, count(*) AS n_docs, round(avg(b), 6) AS avg_bits
-        |FROM lab GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
-
-    // funnel replay: same predicates as t_quality_filter/t_repetition
-    // oracles; first-failing-stage CASE, cumulative via count filters
-    "t_filter_funnel" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    len(string_split_regex(trim(text), '\s+')) AS nt,
-        |    length(regexp_replace(text, '\s', '', 'g'))::DOUBLE AS nsp,
-        |    length(regexp_replace(lower(text), '[^aeiou]', '', 'g'))::DOUBLE
-        |      AS vow,
-        |    length(text)::DOUBLE AS tlen,
-        |    string_split(text, chr(10)) AS ln
-        |  FROM documents),
-        |fs AS (
-        |  SELECT doc_id, CASE
-        |    WHEN NOT coalesce(nt >= 10, FALSE) THEN 0
-        |    WHEN NOT coalesce(nsp / nt <= 12.0, FALSE) THEN 1
-        |    WHEN NOT coalesce(vow / tlen >= 0.2, FALSE) THEN 2
-        |    WHEN NOT coalesce(
-        |      1.0 - len(list_distinct(ln))::DOUBLE / len(ln) <= 0.3,
-        |      FALSE) THEN 3
-        |    ELSE 4 END AS f
-        |  FROM base)
-        |SELECT s.i AS stage_idx, s.name AS stage,
-        |  (SELECT count(*) FROM fs WHERE f >= s.i) AS n_in,
-        |  (SELECT count(*) FROM fs WHERE f = s.i) AS n_dropped,
-        |  (SELECT count(*) FROM fs WHERE f > s.i) AS n_out
-        |FROM (VALUES (0, 'min_tokens'), (1, 'avg_token_len'),
-        |  (2, 'vowel_ratio'), (3, 'dup_lines')) s(i, name)
-        |ORDER BY stage_idx""".stripMargin,
-
-    // multinomial NB replay: per-label add-one smoothing over the
-    // GLOBAL training vocab + one OOV bucket; argmax ties broken by
-    // label asc; margin = top1 - top2 score in bits
-    "t_nb_classify" ->
-      """WITH lab AS (
-        |  SELECT doc_id, lang AS label, text FROM documents
-        |  WHERE doc_id % 2 = 0),
-        |ltok AS (
-        |  SELECT label,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM lab),
-        |cnt AS (
-        |  SELECT label, token, count(*)::DOUBLE AS c
-        |  FROM ltok GROUP BY 1, 2),
-        |nl AS (SELECT label, sum(c) AS n FROM cnt GROUP BY 1),
-        |v AS (SELECT count(DISTINCT token) AS v FROM cnt),
-        |prior AS (SELECT label, count(*)::DOUBLE AS d FROM lab GROUP BY 1),
-        |tot AS (SELECT sum(d) AS dd FROM prior),
-        |test AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 <> 0),
-        |stok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS token
-        |  FROM test WHERE text IS NOT NULL),
-        |tokscore AS (
-        |  SELECT s.doc_id, p.label,
-        |    sum(log2((coalesce(cnt.c, 0) + 1)
-        |      / (coalesce(nl.n, 0) + v.v + 1))) AS tokbits,
-        |    count(*) AS n_tokens
-        |  FROM stok s CROSS JOIN prior p CROSS JOIN v
-        |  LEFT JOIN nl ON nl.label = p.label
-        |  LEFT JOIN cnt ON cnt.label = p.label AND cnt.token = s.token
-        |  GROUP BY s.doc_id, p.label, nl.n, v.v),
-        |scored AS (
-        |  SELECT t.doc_id, p.label,
-        |    log2(p.d / tot.dd) + coalesce(ts.tokbits, 0) AS score,
-        |    coalesce(ts.n_tokens, 0) AS n_tokens
-        |  FROM test t CROSS JOIN prior p CROSS JOIN tot
-        |  LEFT JOIN tokscore ts
-        |    ON ts.doc_id = t.doc_id AND ts.label = p.label),
-        |ranked AS (
-        |  SELECT doc_id, label, score, n_tokens,
-        |    row_number() OVER w AS rk,
-        |    score - lead(score) OVER w AS margin
-        |  FROM scored
-        |  WINDOW w AS (PARTITION BY doc_id ORDER BY score DESC, label ASC))
-        |SELECT doc_id, label AS pred_label, n_tokens::BIGINT AS n_tokens,
-        |  round(coalesce(margin, 0), 6) AS margin_bits
-        |FROM ranked WHERE rk = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    "t_ngram_counts" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, array_to_string(t[i : i+2], ' ') AS ngram
-        |  FROM (
-        |    SELECT doc_id, t,
-        |      unnest(generate_series(1, len(t) - 2)) AS i
-        |    FROM toks))
-        |SELECT ngram, count(*) AS n_occurrences,
-        |  count(DISTINCT doc_id) AS n_docs
-        |FROM g GROUP BY ngram
-        |ORDER BY n_occurrences DESC, ngram ASC
-        |LIMIT 30""".stripMargin,
-
-    // coalesce mirrors the engine's null-text = 0 tokens (same parity
-    // rule as t_pack_shards/t_pack_greedy): without it a null doc rows
-    // out as NULL n_tokens/bucket while the engine emits 0
-    "t_length_batches" ->
-      """WITH l AS (
-        |  SELECT doc_id,
-        |    coalesce(len(string_split_regex(trim(text), '\s+')), 0)::BIGINT
-        |      AS n_tokens
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, n_tokens, (n_tokens // 16)::BIGINT AS bucket,
-        |    row_number() OVER (
-        |      PARTITION BY n_tokens // 16 ORDER BY doc_id) AS rn
-        |  FROM l)
-        |SELECT doc_id, n_tokens, bucket,
-        |  ((rn - 1) // 8)::BIGINT AS batch_idx,
-        |  ((rn - 1) % 8)::BIGINT AS pos_in_batch
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    "d_sample_k_stratum" ->
-      """WITH h AS (
-        |  SELECT doc_id AS key, source AS stratum,
-        |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-        |      % 1073741824 AS hkey
-        |  FROM documents),
-        |r AS (
-        |  SELECT key, stratum, hkey,
-        |    row_number() OVER (
-        |      PARTITION BY stratum ORDER BY hkey, key) AS rn
-        |  FROM h)
-        |SELECT key, stratum, hkey FROM r WHERE rn <= 10
-        |ORDER BY stratum, hkey, key""".stripMargin,
-
-    // same double algebra, same association order as the engine:
-    // rate_s = min(1, n_s^a / sum_pow * (target * n_tot) / n_s), then
-    // the shared md5-bucket membership rule
-    "d_temperature_sample" ->
-      """WITH c AS (
-        |  SELECT source AS stratum, count(*)::DOUBLE AS n_s
-        |  FROM documents GROUP BY source),
-        |t AS (SELECT sum(n_s) AS n_tot, sum(pow(n_s, 0.5)) AS sum_pow
-        |  FROM c),
-        |r AS (SELECT stratum,
-        |    least(1.0, pow(n_s, 0.5) / sum_pow * (0.5 * n_tot) / n_s)
-        |      AS rate
-        |  FROM c CROSS JOIN t)
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN r ON r.stratum = d.source
-        |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT
-        |  % 10000 < round(rate * 10000)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // SemDeDup replay: the deterministic k-means cells (same
-    // farthest-point seeding + Lloyd recurrence as the IVF oracle),
-    // then exact cosine pairs within a cell only
-    "d_semantic_neardup" ->
-      (s"""WITH sdsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("sdsrc", 8, 10, "sd")},
-          |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings)
-          |SELECT fa.id AS id_a, fb.id AS id_b,
-          |  round(list_cosine_similarity(a.v, b.v), 4) AS score
-          |FROM sdfin fa JOIN sdfin fb ON fa.c = fb.c AND fa.id < fb.id
-          |JOIN e a ON a.vec_id = fa.id
-          |JOIN e b ON b.vec_id = fb.id
-          |WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.3
-          |ORDER BY score DESC, id_a, id_b""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // prototype-pruning replay: same k-means recurrence, then squared
-    // L2 to the final centroid, row_number within the cell (dist asc,
-    // id asc), keep = rank beyond the ceil(0.2 n) prototypical head
-    "d_proto_prune" ->
-      (s"""WITH ppsrc AS (SELECT vec_id AS id,
-          |  generate_subscripts(embedding, 1) AS f,
-          |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-          |${kmeansCtes("ppsrc", 8, 10, "pp")},
-          |ppd2 AS (
-          |  SELECT t.id, f2.c, sum((t.x - k.cx) * (t.x - k.cx)) AS d2
-          |  FROM ppsrc t
-          |  JOIN ppfin f2 ON f2.id = t.id
-          |  JOIN ppkc10 k ON k.c = f2.c AND k.f = t.f
-          |  GROUP BY t.id, f2.c),
-          |ppr2 AS (
-          |  SELECT id, c AS cluster, d2,
-          |    row_number() OVER (PARTITION BY c ORDER BY d2 ASC, id ASC)
-          |      AS rnk,
-          |    count(*) OVER (PARTITION BY c) AS n_in_cluster
-          |  FROM ppd2)
-          |SELECT id, cluster::INT AS cluster, round(d2, 4) AS dist,
-          |  rnk::BIGINT AS rnk, n_in_cluster::BIGINT AS n_in_cluster,
-          |  (rnk > ceil(0.2 * n_in_cluster))::INT AS keep
-          |FROM ppr2
-          |ORDER BY cluster, rnk""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    // FS replay: same blocking predicate (lev <= 1), the same weight
-    // CONSTANTS interpolated from the Scala FieldWeights (double
-    // round-trip via toString — no independent log2 evaluation to
-    // drift), threshold on the rounded score, recursive min-label CC
-    "q_entity_resolve" ->
-      s"""WITH RECURSIVE c AS (
-        |  SELECT c_custkey AS id, c_name AS name,
-        |    c_nationkey AS nat, c_mktsegment AS seg
-        |  FROM customer WHERE c_custkey <= 500),
-        |p AS (
-        |  SELECT a.id AS id_a, b.id AS id_b,
-        |    round((CASE WHEN levenshtein(a.name, b.name) = 0
-        |        THEN ${ErNameW.agreeW} ELSE ${ErNameW.disagreeW} END)
-        |      + (CASE WHEN a.nat = b.nat
-        |        THEN ${ErNatW.agreeW} ELSE ${ErNatW.disagreeW} END)
-        |      + (CASE WHEN a.seg = b.seg
-        |        THEN ${ErSegW.agreeW} ELSE ${ErSegW.disagreeW} END), 4)
-        |      AS score
-        |  FROM c a JOIN c b
-        |  ON a.id < b.id AND levenshtein(a.name, b.name) <= 1),
-        |dup AS (SELECT id_a, id_b FROM p WHERE score >= 0.0),
-        |sym AS (
-        |  SELECT id_a AS src, id_b AS dst FROM dup
-        |  UNION SELECT id_b AS src, id_a AS dst FROM dup),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |r(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.dst, r.lab FROM r JOIN sym s ON s.src = r.id
-        |  WHERE r.lab < s.dst)
-        |SELECT id, min(lab) AS canonical FROM r
-        |GROUP BY id ORDER BY id""".stripMargin,
-
-    "d_fuzzy_match" ->
-      """WITH c AS (
-        |  SELECT c_custkey AS id, c_name AS name FROM customer
-        |  WHERE c_custkey <= 500)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  levenshtein(a.name, b.name)::BIGINT AS dist
-        |FROM c a JOIN c b ON a.id < b.id
-        |WHERE levenshtein(a.name, b.name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "m_paired_ttest" ->
-      """WITH spend AS (
-        |  SELECT o_custkey, sum(o_totalprice) AS spend
-        |  FROM orders GROUP BY o_custkey),
-        |p AS (
-        |  SELECT c_acctbal - spend AS diff
-        |  FROM customer JOIN spend ON c_custkey = o_custkey)
-        |SELECT count(*) AS n,
-        |  round(avg(diff) / (stddev_samp(diff) / sqrt(count(*))), 6) AS t_stat,
-        |  CAST(count(*) - 1 AS DOUBLE) AS dof
-        |FROM p""".stripMargin,
-
-    "m_rank_corr" ->
-      s"""$SpectralCte,
-         |cosims AS (
-         |  SELECT b.id, sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
-         |  FROM x a JOIN x b ON a.f = b.f AND a.id = 0
-         |  GROUP BY b.id),
-         |ra AS (
-         |  SELECT id AS doc_id, row_number() OVER (ORDER BY cos DESC, id ASC) AS ra
-         |  FROM cosims ORDER BY cos DESC, id ASC LIMIT 20),
-         |rb AS (
-         |  SELECT id AS doc_id, row_number() OVER (ORDER BY score DESC, id ASC) AS rb
-         |  FROM (
-         |    SELECT l.id,
-         |      0.62 * c.cos + 0.38 * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
-         |    FROM lam l JOIN cosims c USING (id)
-         |    CROSS JOIN (SELECT lambda FROM lam WHERE id = 0) lq)
-         |  ORDER BY score DESC, id ASC LIMIT 20),
-         |shared AS (SELECT doc_id, ra, rb FROM ra JOIN rb USING (doc_id)),
-         |dense AS (
-         |  SELECT doc_id,
-         |    CAST(row_number() OVER (ORDER BY ra, doc_id) AS DOUBLE) AS da,
-         |    CAST(row_number() OVER (ORDER BY rb, doc_id) AS DOUBLE) AS db,
-         |    ra, rb
-         |  FROM shared),
-         |sp AS (SELECT round(corr(da, db), 6) AS spearman FROM dense),
-         |kpairs AS (
-         |  SELECT sign(i.ra - j.ra) AS sa, sign(i.rb - j.rb) AS sb
-         |  FROM dense i JOIN dense j ON i.doc_id < j.doc_id),
-         |kc AS (
-         |  SELECT sum(CASE WHEN sa * sb > 0 THEN 1 ELSE 0 END) AS c,
-         |    sum(CASE WHEN sa * sb < 0 THEN 1 ELSE 0 END) AS d,
-         |    sum(CASE WHEN sa = 0 THEN 1 ELSE 0 END) AS ta,
-         |    sum(CASE WHEN sb = 0 THEN 1 ELSE 0 END) AS tb,
-         |    count(*) AS n0
-         |  FROM kpairs),
-         |kt AS (
-         |  SELECT round(CASE WHEN sqrt((n0 - ta) * (n0 - tb)) = 0 THEN 0.0
-         |    ELSE (c - d) / sqrt(CAST((n0 - ta) AS DOUBLE) * (n0 - tb)) END, 6) AS kendall
-         |  FROM kc)
-         |SELECT sp.spearman, kt.kendall FROM sp CROSS JOIN kt""".stripMargin,
-
-    "mm_features" ->
-      """SELECT doc_id AS media_id,
-        |  (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS kind
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "mm_frame_sample" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |    greatest(1, octet_length(encode(text)) // 256) AS nf
-        |  FROM documents)
-        |SELECT media_id, CAST(t.i AS INT) AS frame_idx
-        |FROM m, unnest(range(0, (nf + 1) // 2)) AS t(i)
-        |ORDER BY media_id, frame_idx""".stripMargin,
-
-    "g_components" ->
-      """WITH RECURSIVE e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cos_pairs AS (
-        |  SELECT a.id AS src, b.id AS dst,
-        |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-        |  FROM e a JOIN e b ON a.id <> b.id),
-        |knn AS (
-        |  SELECT src, dst, d FROM (
-        |    SELECT src, dst, d,
-        |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |    FROM cos_pairs WHERE d <= 1.0)
-        |  WHERE rn <= 10),
-        |sym AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst FROM knn
-        |    UNION SELECT dst AS src, src AS dst FROM knn)),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |r(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.dst, r.lab FROM r JOIN sym s ON s.src = r.id
-        |  WHERE r.lab < s.dst)
-        |SELECT id, min(lab) AS component FROM r GROUP BY id ORDER BY id""".stripMargin,
-
-    // BFS hop distances, replayed as a round-capped recursive CTE over
-    // the same symmetrized kNN graph: states are (id, hops<=20) pairs,
-    // so the recursion terminates, and min(hops) per id is the BFS
-    // distance; rows never reached within the cap are absent on both
-    // sides (identical truncation by construction)
-    "g_shortest_paths" ->
-      """WITH RECURSIVE e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cos_pairs AS (
-        |  SELECT a.id AS src, b.id AS dst,
-        |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-        |  FROM e a JOIN e b ON a.id <> b.id),
-        |knn AS (
-        |  SELECT src, dst, d FROM (
-        |    SELECT src, dst, d,
-        |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |    FROM cos_pairs WHERE d <= 1.0)
-        |  WHERE rn <= 10),
-        |sym AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst FROM knn
-        |    UNION SELECT dst AS src, src AS dst FROM knn)),
-        |r(id, hops) AS (
-        |  SELECT min(src), 0 FROM sym
-        |  UNION
-        |  SELECT sy.dst, r.hops + 1 FROM r JOIN sym sy ON sy.src = r.id
-        |  WHERE r.hops < 20)
-        |SELECT id, min(hops) AS hops FROM r GROUP BY id ORDER BY id""".stripMargin,
-
-    // landmark set {min, max node id}: the recursion seeds with BOTH
-    // rows, so min(hops) per id is the distance to the nearest landmark
-    "g_hop_landmarks" ->
-      """WITH RECURSIVE e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cos_pairs AS (
-        |  SELECT a.id AS src, b.id AS dst,
-        |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-        |  FROM e a JOIN e b ON a.id <> b.id),
-        |knn AS (
-        |  SELECT src, dst, d FROM (
-        |    SELECT src, dst, d,
-        |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |    FROM cos_pairs WHERE d <= 1.0)
-        |  WHERE rn <= 10),
-        |sym AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst FROM knn
-        |    UNION SELECT dst AS src, src AS dst FROM knn)),
-        |r(id, hops) AS (
-        |  SELECT s, 0 FROM (
-        |    SELECT min(src) AS s FROM sym
-        |    UNION SELECT max(src) FROM sym)
-        |  UNION
-        |  SELECT sy.dst, r.hops + 1 FROM r JOIN sym sy ON sy.src = r.id
-        |  WHERE r.hops < 20)
-        |SELECT id, min(hops) AS hops FROM r GROUP BY id ORDER BY id""".stripMargin,
-
-    // harmonic centrality: the per-source recursion (src rides the
-    // rows), min hops per (src, id), then Σ 1/h over the two landmarks
-    "g_harmonic" ->
-      """WITH RECURSIVE e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cos_pairs AS (
-        |  SELECT a.id AS src, b.id AS dst,
-        |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-        |  FROM e a JOIN e b ON a.id <> b.id),
-        |knn AS (
-        |  SELECT src, dst, d FROM (
-        |    SELECT src, dst, d,
-        |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |    FROM cos_pairs WHERE d <= 1.0)
-        |  WHERE rn <= 10),
-        |sym AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst FROM knn
-        |    UNION SELECT dst AS src, src AS dst FROM knn)),
-        |r(l, id, hops) AS (
-        |  SELECT s, s, 0 FROM (
-        |    SELECT min(src) AS s FROM sym
-        |    UNION SELECT max(src) FROM sym)
-        |  UNION
-        |  SELECT r.l, sy.dst, r.hops + 1 FROM r JOIN sym sy ON sy.src = r.id
-        |  WHERE r.hops < 20),
-        |d AS (SELECT l, id, min(hops) AS h FROM r GROUP BY l, id)
-        |SELECT id, round(sum(1.0 / h), 4) AS harmonic
-        |FROM d WHERE h > 0 GROUP BY id ORDER BY id""".stripMargin,
-
-    "g_ppr" -> PprOracleSql,
-
-    "g_kcore" ->
-      (s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings),
-         |sym AS (SELECT a.id AS src, b.id AS dst
-         |  FROM e a JOIN e b ON a.id <> b.id
-         |  WHERE list_cosine_similarity(a.v, b.v) >= 0.3),
-         |nodes AS (SELECT DISTINCT src AS id FROM sym),
-         |${kcoreRoundsCte(3, 12)}
-         |SELECT s.src AS id, count(*) AS deg FROM sym s
-         |JOIN kc12 a ON a.id = s.src
-         |JOIN kc12 b ON b.id = s.dst
-         |GROUP BY s.src ORDER BY id""".stripMargin
-        .replace(" AS (", " AS MATERIALIZED (")),
-
-    "g_communities" ->
-      s"""WITH $GraphBaseCte,
-         |${lpaRoundsCte(5)}
-         |SELECT id, lab AS community FROM lab5 ORDER BY id""".stripMargin,
-
-    // The six graph-aware metrics over the τ=0.62 top-10 list
-    // (TopologyMetrics.evaluate, k=10, rbpP=0.9, maxGrade=3, weights
-    // 0.4/0.3/0.3): spectral CTE for the ranked lists + graph base +
-    // unrolled PPR + unrolled LPA + prefix conductance/modularity via
-    // window functions; IT-ERR's stop-probability recurrence becomes a
-    // windowed product().
-    "m_topology_eval" ->
-      s"""$SpectralCte,
-         |$GraphBaseCte,
-         |${pprRoundsCte(15)},
-         |${lpaRoundsCte(5)},
-         |cosims AS (
-         |  SELECT b.id, sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
-         |  FROM x a JOIN x b ON a.f = b.f AND a.id = 0
-         |  GROUP BY b.id),
-         |lq AS (SELECT lambda FROM lam WHERE id = 0),
-         |rel AS (SELECT id AS doc_id FROM cosims ORDER BY cos DESC, id ASC LIMIT 10),
-         |ret AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM (
-         |    SELECT l.id AS doc_id,
-         |      0.62 * c.cos + 0.38 * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
-         |    FROM lam l JOIN cosims c ON c.id = l.id CROSS JOIN lq
-         |    ORDER BY score DESC, doc_id ASC LIMIT 10)),
-         |lrows AS (
-         |  SELECT ret.rank, ret.doc_id,
-         |    CASE WHEN rel.doc_id IS NOT NULL THEN 1.0 ELSE 0.0 END AS grade,
-         |    coalesce(r15.r, 0.0) AS ppr,
-         |    coalesce(dg.degree, 0.0) AS degree,
-         |    coalesce(lab5.lab, -1) AS community
-         |  FROM ret LEFT JOIN rel ON rel.doc_id = ret.doc_id
-         |  LEFT JOIN r15 ON r15.id = ret.doc_id
-         |  LEFT JOIN (SELECT src AS id, sum(w) AS degree FROM w GROUP BY src) dg
-         |    ON dg.id = ret.doc_id
-         |  LEFT JOIN lab5 ON lab5.id = ret.doc_id),
-         |inte AS (
-         |  SELECT hr.rank AS rhigh, sum(w.w) AS iw
-         |  FROM w JOIN lrows lr ON lr.doc_id = w.src
-         |         JOIN lrows hr ON hr.doc_id = w.dst
-         |  WHERE lr.rank < hr.rank
-         |  GROUP BY hr.rank),
-         |pq AS (
-         |  SELECT l.rank, l.doc_id, l.grade, l.ppr, l.degree, l.community,
-         |    sum(l.degree) OVER (ORDER BY l.rank) AS vol,
-         |    coalesce(sum(i.iw) OVER (ORDER BY l.rank), 0.0) AS internal
-         |  FROM lrows l LEFT JOIN inte i ON i.rhigh = l.rank),
-         |modsh AS (
-         |  SELECT c.rank, max(c.cnt)::DOUBLE / c.rank AS modshare
-         |  FROM (
-         |    SELECT a.rank, b.community, count(*) AS cnt
-         |    FROM lrows a JOIN lrows b ON b.rank <= a.rank
-         |    GROUP BY a.rank, b.community) c
-         |  GROUP BY c.rank),
-         |tot AS (SELECT sum(w) AS tv FROM w),
-         |nmax AS (SELECT max(rank) AS n FROM lrows),
-         |tfac AS (
-         |  SELECT pq.rank, pq.doc_id, pq.grade, pq.ppr,
-         |    0.4 * pq.ppr + 0.3 * (1.0 -
-         |      CASE WHEN pq.rank = nmax.n AND tot.tv - pq.vol <= 0 THEN 0.0
-         |           WHEN least(pq.vol, tot.tv - pq.vol) <= 0 THEN 1.0
-         |           ELSE greatest(0.0, pq.vol - 2.0 * pq.internal) /
-         |                least(pq.vol, tot.tv - pq.vol) END) +
-         |    0.3 * ms.modshare AS t
-         |  FROM pq JOIN modsh ms ON ms.rank = pq.rank
-         |  CROSS JOIN tot CROSS JOIN nmax),
-         |mxt AS (SELECT max(t) AS maxt FROM tfac),
-         |grbp AS (SELECT sum(0.1 * grade * pow(0.9, rank - 1) * t) AS v FROM tfac),
-         |dcgv AS (SELECT sum((pow(2.0, grade) - 1.0) * t / log2(rank + 1.0)) AS v
-         |  FROM tfac),
-         |idcgv AS (SELECT sum((pow(2.0, s.g) - 1.0) * mxt.maxt / log2(s.rn + 1.0)) AS v
-         |  FROM (SELECT grade AS g, row_number() OVER (ORDER BY grade DESC) AS rn
-         |        FROM tfac) s CROSS JOIN mxt),
-         |tdndcg AS (SELECT CASE WHEN idcgv.v > 0 THEN dcgv.v / idcgv.v ELSE 0.0 END AS v
-         |  FROM dcgv CROSS JOIN idcgv),
-         |errv AS (SELECT sum(coalesce(s.prodpre, 1.0) * s.rt / s.rank) AS v FROM (
-         |  SELECT rank, (grade / 3.0) * t AS rt,
-         |    product(1.0 - (grade / 3.0) * t) OVER (ORDER BY rank
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prodpre
-         |  FROM tfac) s),
-         |mrrt AS (SELECT coalesce(
-         |  (SELECT t / rank FROM tfac WHERE grade > 0 ORDER BY rank LIMIT 1), 0.0) AS v),
-         |sqiv AS (SELECT
-         |  0.3 * (1.0 - CASE WHEN least(q.vol, tot.tv - q.vol) <= 0 THEN 1.0
-         |    ELSE greatest(0.0, q.vol - 2.0 * q.internal) /
-         |         least(q.vol, tot.tv - q.vol) END) +
-         |  0.3 * ms.modshare + 0.4 * ps.sp AS v
-         |  FROM (SELECT vol, internal, rank FROM pq ORDER BY rank DESC LIMIT 1) q
-         |  JOIN modsh ms ON ms.rank = q.rank
-         |  CROSS JOIN (SELECT sum(ppr) AS sp FROM tfac) ps CROSS JOIN tot)
-         |SELECT CAST(0 AS BIGINT) AS query_id,
-         |  round(grbp.v, 6) AS g_rbp, round(tdndcg.v, 6) AS td_ndcg,
-         |  round(errv.v, 6) AS it_err, round(mrrt.v, 6) AS mrr_topo,
-         |  round(sqiv.v, 6) AS sqi
-         |FROM grbp CROSS JOIN tdndcg CROSS JOIN errv CROSS JOIN mrrt
-         |CROSS JOIN sqiv"""
-        // lrows/tfac are referenced up to 6 times each: without
-        // MATERIALIZED DuckDB re-inlines the whole spectral+graph
-        // chain per reference and the query never finishes
-        .stripMargin.replace(" AS (", " AS MATERIALIZED ("),
-
-    "g_topology_factor" ->
-      s"""WITH $GraphBaseCte,
-         |${pprRoundsCte(15)},
-         |${lpaRoundsCte(5)},
-         |csize AS (SELECT lab, count(*) AS csize FROM lab5 GROUP BY lab),
-         |nn AS (SELECT count(*) AS n FROM nodes),
-         |tot AS (SELECT sum(w) AS totvol FROM w),
-         |condc AS (
-         |  SELECT ls.lab AS lab, sum(w.w) AS vol,
-         |    sum(CASE WHEN ls.lab <> ld.lab THEN w.w ELSE 0.0 END) AS cut
-         |  FROM w JOIN lab5 ls ON ls.id = w.src
-         |         JOIN lab5 ld ON ld.id = w.dst
-         |  GROUP BY ls.lab),
-         |conds AS (
-         |  SELECT lab, CASE WHEN least(vol, totvol - vol) <= 0 THEN 1.0
-         |    ELSE cut / least(vol, totvol - vol) END AS cond
-         |  FROM condc CROSS JOIN tot),
-         |bounds AS (
-         |  SELECT min(r) AS lo,
-         |    CASE WHEN max(r) - min(r) <= 0 THEN 1.0
-         |         ELSE max(r) - min(r) END AS span
-         |  FROM r15)
-         |SELECT l.id,
-         |  round(0.4 * ((r15.r - b.lo) / b.span) + 0.3 * (1.0 - c.cond) +
-         |    0.3 * (cs.csize::DOUBLE / nn.n), 6) AS topology_factor
-         |FROM lab5 l JOIN r15 ON r15.id = l.id
-         |  JOIN csize cs ON cs.lab = l.lab
-         |  JOIN conds c ON c.lab = l.lab
-         |  CROSS JOIN bounds b CROSS JOIN nn
-         |ORDER BY l.id""".stripMargin,
-
-    "g_conductance" ->
-      """WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cos_pairs AS (
-        |  SELECT a.id AS src, b.id AS dst,
-        |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-        |  FROM e a JOIN e b ON a.id <> b.id),
-        |knn AS (
-        |  SELECT src, dst, d FROM (
-        |    SELECT src, dst, d,
-        |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |    FROM cos_pairs WHERE d <= 1.0)
-        |  WHERE rn <= 10),
-        |symd AS (
-        |  SELECT src, dst, min(d) AS d FROM (
-        |    SELECT src, dst, d FROM knn
-        |    UNION ALL SELECT dst AS src, src AS dst, d FROM knn)
-        |  GROUP BY src, dst),
-        |w AS (SELECT src, dst, 1.0 / (1.0 + pow(d / 0.5, 2.0)) AS w FROM symd),
-        |half AS (SELECT max(src) // 2 + 1 AS h FROM w),
-        |agg AS (SELECT
-        |    sum(CASE WHEN (src < h) <> (dst < h) THEN w ELSE 0 END) AS cut,
-        |    sum(CASE WHEN src < h THEN w ELSE 0 END) AS vols,
-        |    sum(CASE WHEN src >= h THEN w ELSE 0 END) AS volr
-        |  FROM w CROSS JOIN half)
-        |SELECT round(CASE WHEN least(vols, volr) <= 0 THEN 1.0
-        |  ELSE (cut / 2.0) / least(vols, volr) END, 6) AS conductance
-        |FROM agg""".stripMargin,
-
-    "m_eval_taumode" ->
-      s"""$SpectralCte,
-         |cosims AS (
-         |  SELECT b.id, sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
-         |  FROM x a JOIN x b ON a.f = b.f AND a.id = 0
-         |  GROUP BY b.id),
-         |lq AS (SELECT lambda FROM lam WHERE id = 0),
-         |rel AS (SELECT id AS doc_id FROM cosims ORDER BY cos DESC, id ASC LIMIT 10),
-         |ret AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM (
-         |    SELECT l.id AS doc_id,
-         |      0.62 * c.cos + 0.38 * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
-         |    FROM lam l JOIN cosims c ON c.id = l.id CROSS JOIN lq
-         |    ORDER BY score DESC, doc_id ASC LIMIT 10)),
-         |hits AS (SELECT r.doc_id, r.rank FROM ret r JOIN rel USING (doc_id))
-         |SELECT
-         |  round((SELECT count(*) FROM hits)::DOUBLE / 10, 6) AS recall_at_k,
-         |  round(coalesce((SELECT 1.0 / min(rank) FROM hits), 0.0), 6) AS mrr,
-         |  round(coalesce((SELECT sum(1.0 / log2(rank + 1)) FROM hits), 0.0)
-         |    / (SELECT sum(1.0 / log2(i + 1))
-         |       FROM unnest(range(1, 11)) AS t(i)), 6) AS ndcg_at_k""".stripMargin,
-
-    "m_tau_sweep" ->
-      s"""$SpectralCte,
-         |cosims AS (
-         |  SELECT b.id, sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
-         |  FROM x a JOIN x b ON a.f = b.f AND a.id = 0
-         |  GROUP BY b.id),
-         |lq AS (SELECT lambda FROM lam WHERE id = 0),
-         |taus AS (SELECT unnest([1.0, 0.9, 0.8, 0.62, 0.42]) AS tau),
-         |scoredt AS (
-         |  SELECT t.tau, l.id AS doc_id,
-         |    t.tau * c.cos +
-         |      (1 - t.tau) * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
-         |  FROM lam l JOIN cosims c ON c.id = l.id CROSS JOIN lq CROSS JOIN taus t),
-         |rett AS (
-         |  SELECT tau, doc_id,
-         |    row_number() OVER (PARTITION BY tau
-         |      ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM scoredt QUALIFY rank <= 10),
-         |rel AS (SELECT id AS doc_id FROM cosims ORDER BY cos DESC, id ASC LIMIT 10),
-         |hits AS (SELECT r.tau, r.rank FROM rett r JOIN rel USING (doc_id)),
-         |idcg AS (SELECT sum(1.0 / log2(i + 1)) AS v
-         |  FROM unnest(range(1, 11)) AS t(i))
-         |SELECT t.tau,
-         |  round(coalesce(h.nh, 0)::DOUBLE / 10, 6) AS recall_at_k,
-         |  round(coalesce(1.0 / h.fr, 0.0), 6) AS mrr,
-         |  round(coalesce(h.dcg, 0.0) / (SELECT v FROM idcg), 6) AS ndcg_at_k
-         |FROM taus t LEFT JOIN (
-         |  SELECT tau, count(*) AS nh, min(rank) AS fr,
-         |    sum(1.0 / log2(rank + 1)) AS dcg
-         |  FROM hits GROUP BY tau) h ON t.tau = h.tau
-         |ORDER BY t.tau DESC""".stripMargin,
-
-    // ---- spectral core (O1/O3-O7 + S6-S10): the DuckDB oracle
-    // recomputes the FULL taumode pipeline from the embeddings table —
-    // Gram matrix → column-cosine affinity → kernel weights (σ=0.5,
-    // p=2) → per-item Dirichlet energy + Gini concentration → exact
-    // median τ (quantile_disc matches Spark's approxQuantile with
-    // relativeError=0) → λ = m·E/(E+τ) + (1−m)·G — so the flagship
-    // queries are hash-verified end to end, not just spec-verified.
-    "a_lambdas" ->
-      s"""$SpectralCte
-         |SELECT id, round(lambda, 6) AS lambda FROM lam ORDER BY id""".stripMargin,
-
-    "a_energy_lambdas" ->
-      s"""WITH $EnergyOracleCte
-         |SELECT id, round(lambda, 6) AS lambda FROM lamv ORDER BY id""".stripMargin,
-
-    // the query vector IS item 0's raw embedding, so λ_q and E_q equal
-    // that item's stored lambda / e_raw (same synth formula, same L)
-    "a_energy_search" ->
-      s"""WITH $EnergyOracleCte,
-         |lq AS (SELECT lambda, e_raw FROM lamv WHERE id = 0)
-         |SELECT id, round(score, 6) AS score FROM (
-         |  SELECT lv.id,
-         |    1.0 * (1.0 / (1.0 + abs(lv.lambda - lq.lambda))) +
-         |    0.5 * (1.0 / (1.0 + abs(lv.e_raw - lq.e_raw))) AS score
-         |  FROM lamv lv CROSS JOIN lq
-         |  ORDER BY score DESC, lv.id ASC LIMIT 10)""".stripMargin,
-
-    "a_get_item" ->
-      s"""$SpectralCte
-         |SELECT id, round(lambda, 6) AS lambda FROM lam WHERE id = 7""".stripMargin,
-
-    "a_search" ->
-      s"""$SpectralCte,
-         |cosims AS (
-         |  SELECT b.id, sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
-         |  FROM x a JOIN x b ON a.f = b.f AND a.id = 0
-         |  GROUP BY b.id)
-         |SELECT id, round(score, 6) AS score FROM (
-         |  SELECT l.id,
-         |    0.62 * c.cos + 0.38 * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
-         |  FROM lam l JOIN cosims c USING (id)
-         |  CROSS JOIN (SELECT lambda FROM lam WHERE id = 0) lq
-         |  ORDER BY score DESC, l.id ASC LIMIT 10)""".stripMargin,
-
-    "a_search_hybrid" ->
-      s"""$SpectralCte,
-         |cosims AS (
-         |  SELECT b.id, sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
-         |  FROM x a JOIN x b ON a.f = b.f AND a.id = 0
-         |  GROUP BY b.id),
-         |norms AS (SELECT id, sqrt(sum(v * v)) AS nrm FROM x GROUP BY id)
-         |SELECT id, round(score, 6) AS score FROM (
-         |  SELECT l.id,
-         |    0.8 * (0.5 * c.cos + 0.5 * (CASE WHEN qn.nrm = 0 OR n.nrm = 0 THEN 0.0
-         |      ELSE exp(-abs(ln(qn.nrm / n.nrm))) END)) +
-         |    0.2 * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
-         |  FROM lam l JOIN cosims c USING (id) JOIN norms n USING (id)
-         |  CROSS JOIN (SELECT lambda FROM lam WHERE id = 0) lq
-         |  CROSS JOIN (SELECT nrm FROM norms WHERE id = 0) qn
-         |  ORDER BY score DESC, l.id ASC LIMIT 10)""".stripMargin,
-
-    "a_search_energy" ->
-      s"""$SpectralCte
-         |SELECT id, round(score, 6) AS score FROM (
-         |  SELECT l.id,
-         |    1.0 / (1.0 + abs(l.lambda - lq.lambda)) +
-         |    0.5 / (1.0 + abs(l.e_raw - lq.e_raw)) AS score
-         |  FROM lam l
-         |  CROSS JOIN (SELECT lambda, e_raw FROM lam WHERE id = 0) lq
-         |  ORDER BY score DESC, l.id ASC LIMIT 10)""".stripMargin,
-
-    "a_graph_degrees" ->
-      """WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cos_pairs AS (
-        |  SELECT a.id AS src, b.id AS dst,
-        |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-        |  FROM e a JOIN e b ON a.id <> b.id),
-        |knn AS (
-        |  SELECT src, dst, d FROM (
-        |    SELECT src, dst, d,
-        |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |    FROM cos_pairs WHERE d <= 1.0)
-        |  WHERE rn <= 10),
-        |sym AS (
-        |  SELECT src, dst, min(d) AS d FROM (
-        |    SELECT src, dst, d FROM knn
-        |    UNION ALL SELECT dst AS src, src AS dst, d FROM knn)
-        |  GROUP BY src, dst)
-        |SELECT src AS id,
-        |  round(sum(1.0 / (1.0 + pow(d / 0.5, 2.0))), 4) AS degree
-        |FROM sym GROUP BY src ORDER BY id""".stripMargin
-  )
-
-  /** Generated DuckDB oracle for g_ppr: GraphX's
-    * staticPersonalizedPageRank is a fixed 15-iteration linear
-    * recurrence rank = 0.15·δ_src + 0.85·Σ_in rank(j)/outdeg(j) with
-    * rank₀ = δ_src and NO final normalization (validated: 0 mismatches
-    * vs the engine at round-6 precision, sf0.01) — unrolled here as
-    * chained CTEs over the same kNN-graph SQL as a_graph_degrees.
-    */
-  /** Shared DuckDB CTE chain: the a_* index's eps-kNN item graph from
-    * the raw embeddings — directed knn (eps=1, k=10), symmetrized with
-    * min-dist (symd), kernel weights (w), unweighted adjacency (sym),
-    * nodes, and out-degrees. Mirrors KnnGraph.epsKnnEdges with the
-    * default GraphParams.
-    */
-  private val GraphBaseCte: String =
-    """e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-      |  FROM embeddings),
-      |cos_pairs AS (
-      |  SELECT a.id AS src, b.id AS dst,
-      |    1.0 - greatest(0.0, list_cosine_similarity(a.v, b.v)) AS d
-      |  FROM e a JOIN e b ON a.id <> b.id),
-      |knn AS (
-      |  SELECT src, dst, d FROM (
-      |    SELECT src, dst, d,
-      |      row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-      |    FROM cos_pairs WHERE d <= 1.0)
-      |  WHERE rn <= 10),
-      |symd AS (
-      |  SELECT src, dst, min(d) AS d FROM (
-      |    SELECT src, dst, d FROM knn
-      |    UNION ALL SELECT dst AS src, src AS dst, d FROM knn)
-      |  GROUP BY src, dst),
-      |sym AS (SELECT src, dst FROM symd),
-      |w AS (SELECT src, dst, 1.0 / (1.0 + pow(d / 0.5, 2.0)) AS w FROM symd),
-      |nodes AS (SELECT DISTINCT src AS id FROM sym),
-      |outdeg AS (SELECT src AS id, count(*) AS deg FROM sym GROUP BY src)"""
-      .stripMargin
-
-  /** Unrolled k-core peeling over GraphBaseCte's `sym`/`nodes`:
-    * kc0 = all nodes; kc_{i+1} = nodes whose degree among kc_i ≥ k.
-    * Monotone, so a converged fixpoint is invariant under the spare
-    * rounds. Ends in kc`rounds`. */
-  private def kcoreRoundsCte(k: Int, rounds: Int): String = {
-    val sb = new StringBuilder("kc0 AS (SELECT id FROM nodes)")
-    for (i <- 1 to rounds) sb.append(
-      s""",
-         |kd$i AS (SELECT s.src AS id, count(*) AS deg FROM sym s
-         |  JOIN kc${i - 1} a ON a.id = s.src
-         |  JOIN kc${i - 1} b ON b.id = s.dst
-         |  GROUP BY s.src),
-         |kc$i AS (SELECT id FROM kd$i WHERE deg >= $k)""".stripMargin)
-    sb.toString
-  }
-
-  /** Unrolled personalized-PageRank recurrence from anchor 0
-    * (GraphX staticPersonalizedPageRank: r ← 0.15·δ + 0.85·Σ r/outdeg,
-    * r0 = δ, no final normalization). Ends in r`iters`(id, r). */
-  private def pprRoundsCte(iters: Int): String =
-    "r0 AS (SELECT id, CASE WHEN id = 0 THEN 1.0 ELSE 0.0 END AS r FROM nodes)" +
-      (0 until iters).map { i =>
-        s""",
-           |r${i + 1} AS (
-           |  SELECT n.id, (CASE WHEN n.id = 0 THEN 0.15 ELSE 0.0 END) +
-           |    0.85 * coalesce(s.msum, 0.0) AS r
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e2.dst AS id, sum(r$i.r / od.deg) AS msum
-           |    FROM sym e2 JOIN r$i ON r$i.id = e2.src
-           |    JOIN outdeg od ON od.id = e2.src
-           |    GROUP BY e2.dst) s ON s.id = n.id)""".stripMargin
-      }.mkString
-
-  /** Unrolled synchronous label propagation with the engine's total
-    * tie order (most frequent neighbor label, ties → smallest label;
-    * init label = id). Ends in lab`steps`(id, lab). */
-  private def lpaRoundsCte(steps: Int): String =
-    "lab0 AS (SELECT id, id AS lab FROM nodes)" +
-      (0 until steps).map { i =>
-        s""",
-           |lab${i + 1} AS (
-           |  SELECT id, lab FROM (
-           |    SELECT s.src AS id, l.lab,
-           |      row_number() OVER (PARTITION BY s.src
-           |        ORDER BY count(*) DESC, l.lab ASC) AS rn
-           |    FROM sym s JOIN lab$i l ON l.id = s.dst
-           |    GROUP BY s.src, l.lab) WHERE rn = 1)""".stripMargin
-      }.mkString
-
-  private val PprOracleSql: String =
-    s"""WITH $GraphBaseCte,
-       |${pprRoundsCte(15)}
-       |SELECT id, round(r, 6) AS ppr FROM r15 ORDER BY id""".stripMargin
-
-  /** A word's BPE symbol state as a SEPARATOR STRING: every symbol
-    * wrapped in double '|' boundaries ('ab' → '||a||b||</w>||'). With
-    * doubled separators, ONE SQL `replace(state, '|l||r|', '|lr|')` is
-    * bit-exactly the engine's single left-to-right merge pass: each
-    * match consumes one '|' from each flanking boundary, so the
-    * replacement's trailing '|' plus the leftover '|' restore the
-    * double boundary and an immediately-adjacent occurrence still
-    * matches as the scan resumes — the single-separator encoding
-    * instead eats the next occurrence's left boundary and merges pairs
-    * the engine's pass order would not (verified against an
-    * independent replay on sf0.01: single-'|' diverges, double-'|'
-    * matches every doc). '|' cannot collide: corpus text is tokenized
-    * on whitespace and merged symbols concatenate token chars +
-    * '</w>', none of which is '|'.
-    */
-  private def bpeSymState(col: String): String =
-    s"'||' || array_to_string(string_split($col, ''), '||') || '||</w>||'"
-
-  /** Unrolled BPE merge training for the DuckDB oracle (VERDICT r7 #4
-    * closed: the two t_bpe_* rows were the only queries outside the
-    * oracle harness). Each round is pair-counting over the
-    * list-split states, argmax by (count DESC, left ASC, right ASC) —
-    * the engine's deterministic tie order — and the doubled-separator
-    * replace above as the merge pass. Every CTE is MATERIALIZED:
-    * w`i` is referenced by both p`i+1` and w`i+1`, so inlining would
-    * re-derive the chain exponentially. Ends in
-    * mg(rank, l, r, merged, c).
-    */
-  private def bpeTrainCtes(numMerges: Int): String = {
-    val parts = Seq.newBuilder[String]
-    // string_split_regex(trim(text), '\s+') mirrors the engine's
-    // split(trim(text), "\\s+") exactly (single-space split would
-    // silently diverge on any tab/newline in document text)
-    parts += ("words AS MATERIALIZED (SELECT t AS word, " +
-      "CAST(count(*) AS BIGINT) AS n FROM (" +
-      "SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'), " +
-      "x -> x <> '')) AS t FROM documents WHERE text IS NOT NULL) GROUP BY 1)")
-    parts += s"w0 AS MATERIALIZED (SELECT n, ${bpeSymState("word")} AS state FROM words)"
-    (0 until numMerges).foreach { i =>
-      parts += (s"p$i AS MATERIALIZED (SELECT p.l AS l, p.r AS r, " +
-        "CAST(sum(n) AS BIGINT) AS c FROM (" +
-        "SELECT n, unnest([{'l': s[j], 'r': s[j+1]} for j in range(1, len(s))]) AS p FROM (" +
-        s"SELECT n, list_filter(string_split(state, '|'), x -> x <> '') AS s FROM w$i)" +
-        ") GROUP BY 1, 2)")
-      parts += s"b$i AS MATERIALIZED (SELECT l, r, c FROM p$i ORDER BY c DESC, l ASC, r ASC LIMIT 1)"
-      parts += (s"w${i + 1} AS MATERIALIZED (SELECT n, replace(state, " +
-        "'|' || b.l || '||' || b.r || '|', '|' || b.l || b.r || '|') AS state " +
-        s"FROM w$i, b$i b)")
-    }
-    val mg = (0 until numMerges)
-      .map(i => s"SELECT $i AS rank, l, r, l || r AS merged, c FROM b$i")
-      .mkString(" UNION ALL ")
-    parts += s"mg AS MATERIALIZED ($mg)"
-    parts.result().mkString(",\n")
-  }
-
-  /** Shared DuckDB CTE: the taumode spectral pipeline from the raw
-    * embeddings table, mirroring FeatureLaplacian.build +
-    * LocalLaplacian.synth + TauMode.Median with the a_* queries'
-    * GraphParams(eps=1.0, k=10, topk=10, p=2.0, σ=eps/2=0.5).
-    * Validated: max |λ_duck − λ_spark| = 8.9e-16 at sf0.01.
-    */
-  private val SpectralCte: String =
-    """WITH x AS (
-      |  SELECT vec_id AS id,
-      |         generate_subscripts(embedding, 1) AS f,
-      |         CAST(unnest(embedding) AS DOUBLE) AS v
-      |  FROM embeddings),
-      |gram AS (
-      |  SELECT a.f AS f, b.f AS g, sum(a.v * b.v) AS m
-      |  FROM x a JOIN x b ON a.id = b.id AND a.f <= b.f
-      |  GROUP BY a.f, b.f),
-      |diag AS (SELECT f, m FROM gram WHERE f = g),
-      |lap_edges AS (
-      |  SELECT gr.f, gr.g,
-      |    1.0 / (1.0 + pow((1.0 - greatest(0.0,
-      |      CASE WHEN da.m * db.m <= 0 THEN 0.0
-      |           ELSE gr.m / sqrt(da.m * db.m) END)) / 0.5, 2.0)) AS w
-      |  FROM gram gr
-      |  JOIN diag da ON da.f = gr.f
-      |  JOIN diag db ON db.f = gr.g
-      |  WHERE gr.f < gr.g),
-      |contrib AS (
-      |  SELECT xa.id, e.w * (xa.v - xb.v) * (xa.v - xb.v) AS c
-      |  FROM lap_edges e
-      |  JOIN x xa ON xa.f = e.f
-      |  JOIN x xb ON xb.id = xa.id AND xb.f = e.g),
-      |energy AS (
-      |  SELECT id, sum(c) AS e_raw,
-      |    CASE WHEN sum(c) <= 0 THEN 0.0
-      |         ELSE least(1.0, greatest(0.0, sum(c * c) / (sum(c) * sum(c)))) END AS gini
-      |  FROM contrib GROUP BY id),
-      |tau AS (SELECT quantile_disc(e_raw, 0.5) AS t FROM energy),
-      |lam AS (
-      |  SELECT en.id,
-      |    (t.t / (1.0 + t.t)) *
-      |      (CASE WHEN en.e_raw + t.t = 0 THEN 0.0
-      |            ELSE en.e_raw / (en.e_raw + t.t) END) +
-      |    (1.0 - t.t / (1.0 + t.t)) * en.gini AS lambda,
-      |    en.e_raw AS e_raw
-      |  FROM energy en CROSS JOIN tau t)""".stripMargin
-
-  /** [[graft.scale.DeterministicKMeans]]'s exact recurrence as a CTE
-    * chain over `src`(id, f, x) in long form: farthest-first seeding
-    * from the smallest id (k−1 running-min-distance picks, ties →
-    * max distance then smaller id), then `iters` Lloyd rounds
-    * (assignment ties → smaller index; empty clusters keep their
-    * center). Emits CTEs prefixed `p`, ending in ${p}kc`iters`
-    * (c, f, cx) and the final assignment ${p}fin(id, c).
-    */
-  private def kmeansCtes(src: String, k: Int, iters: Int, p: String): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""
-         |${p}sp0 AS (SELECT min(id) AS id FROM $src),
-         |${p}cent0 AS (SELECT 0 AS c, t.f, t.x AS cx
-         |  FROM $src t JOIN ${p}sp0 s ON t.id = s.id),
-         |${p}md0 AS (SELECT t.id, sum((t.x - c0.cx) * (t.x - c0.cx)) AS md
-         |  FROM $src t JOIN ${p}cent0 c0 ON c0.f = t.f GROUP BY t.id)""".stripMargin)
-    for (i <- 1 until k) {
-      sb.append(
-        s""",
-           |${p}pick$i AS (SELECT id FROM ${p}md${i - 1} ORDER BY md DESC, id ASC LIMIT 1),
-           |${p}cent$i AS (SELECT $i AS c, t.f, t.x AS cx
-           |  FROM $src t JOIN ${p}pick$i pk ON t.id = pk.id)""".stripMargin)
-      if (i < k - 1) sb.append(
-        s""",
-           |${p}md$i AS (SELECT m.id, least(m.md, d.nd) AS md FROM ${p}md${i - 1} m JOIN (
-           |    SELECT t.id, sum((t.x - ci.cx) * (t.x - ci.cx)) AS nd
-           |    FROM $src t JOIN ${p}cent$i ci ON ci.f = t.f GROUP BY t.id) d
-           |  ON d.id = m.id)""".stripMargin)
-    }
-    sb.append(
-      (0 until k).map(i => s"SELECT * FROM ${p}cent$i")
-        .mkString(s",\n${p}kc0 AS (", " UNION ALL ", ")"))
-    for (j <- 1 to iters) sb.append(
-      s""",
-         |${p}kc$j AS (
-         |  SELECT k.c, k.f, coalesce(nm2.mx, k.cx) AS cx
-         |  FROM ${p}kc${j - 1} k LEFT JOIN (
-         |    SELECT asg.c, t.f, avg(t.x) AS mx
-         |    FROM (
-         |      SELECT id, c FROM (
-         |        SELECT t.id, k2.c,
-         |          row_number() OVER (PARTITION BY t.id
-         |            ORDER BY sum((t.x - k2.cx) * (t.x - k2.cx)) ASC, k2.c ASC) AS rn
-         |        FROM $src t JOIN ${p}kc${j - 1} k2 ON k2.f = t.f
-         |        GROUP BY t.id, k2.c)
-         |      WHERE rn = 1) asg
-         |    JOIN $src t ON t.id = asg.id
-         |    GROUP BY asg.c, t.f) nm2 ON nm2.c = k.c AND nm2.f = k.f)""".stripMargin)
-    sb.append(
-      s""",
-         |${p}fin AS (SELECT id, c FROM (
-         |  SELECT t.id, k2.c,
-         |    row_number() OVER (PARTITION BY t.id
-         |      ORDER BY sum((t.x - k2.cx) * (t.x - k2.cx)) ASC, k2.c ASC) AS rn
-         |  FROM $src t JOIN ${p}kc$iters k2 ON k2.f = t.f
-         |  GROUP BY t.id, k2.c) WHERE rn = 1)""".stripMargin)
-    sb.toString
-  }
-
-  /** [[graft.scale.DeterministicKMeans.fitSpherical]]'s recurrence as
-    * a CTE chain: the [[kmeansCtes]] seeding verbatim over the
-    * (pre-normalized) `src`, then `iters` Lloyd rounds where each
-    * updated mean is re-normalized to the sphere (kept centers of
-    * empty clusters stay untouched — matching the engine's
-    * `case _ => cs(c)` exactly, which is why the normalization is
-    * conditional on a mean existing rather than applied to every row).
-    * The final assignment ${p}fin runs over `asgSrc` — the RAW rows,
-    * because with unit centers argmin-squared-Euclid is argmax-cosine
-    * for any input norm, which is the contract under test. Emits
-    * ${p}kc`iters` (c, f, cx) and ${p}fin(id, c).
-    */
-  private def kmeansSphericalCtes(
-      src: String, asgSrc: String, k: Int, iters: Int, p: String): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""
-         |${p}sp0 AS (SELECT min(id) AS id FROM $src),
-         |${p}cent0 AS (SELECT 0 AS c, t.f, t.x AS cx
-         |  FROM $src t JOIN ${p}sp0 s ON t.id = s.id),
-         |${p}md0 AS (SELECT t.id, sum((t.x - c0.cx) * (t.x - c0.cx)) AS md
-         |  FROM $src t JOIN ${p}cent0 c0 ON c0.f = t.f GROUP BY t.id)""".stripMargin)
-    for (i <- 1 until k) {
-      sb.append(
-        s""",
-           |${p}pick$i AS (SELECT id FROM ${p}md${i - 1} ORDER BY md DESC, id ASC LIMIT 1),
-           |${p}cent$i AS (SELECT $i AS c, t.f, t.x AS cx
-           |  FROM $src t JOIN ${p}pick$i pk ON t.id = pk.id)""".stripMargin)
-      if (i < k - 1) sb.append(
-        s""",
-           |${p}md$i AS (SELECT m.id, least(m.md, d.nd) AS md FROM ${p}md${i - 1} m JOIN (
-           |    SELECT t.id, sum((t.x - ci.cx) * (t.x - ci.cx)) AS nd
-           |    FROM $src t JOIN ${p}cent$i ci ON ci.f = t.f GROUP BY t.id) d
-           |  ON d.id = m.id)""".stripMargin)
-    }
-    sb.append(
-      (0 until k).map(i => s"SELECT * FROM ${p}cent$i")
-        .mkString(s",\n${p}kc0 AS (", " UNION ALL ", ")"))
-    for (j <- 1 to iters) sb.append(
-      s""",
-         |${p}km$j AS (
-         |  SELECT asg.c, t.f, avg(t.x) AS mx
-         |  FROM (
-         |    SELECT id, c FROM (
-         |      SELECT t.id, k2.c,
-         |        row_number() OVER (PARTITION BY t.id
-         |          ORDER BY sum((t.x - k2.cx) * (t.x - k2.cx)) ASC, k2.c ASC) AS rn
-         |      FROM $src t JOIN ${p}kc${j - 1} k2 ON k2.f = t.f
-         |      GROUP BY t.id, k2.c)
-         |    WHERE rn = 1) asg
-         |  JOIN $src t ON t.id = asg.id
-         |  GROUP BY asg.c, t.f),
-         |${p}kn$j AS (SELECT c, sqrt(sum(mx * mx)) AS nm FROM ${p}km$j GROUP BY c),
-         |${p}kc$j AS (
-         |  SELECT k.c, k.f,
-         |    CASE WHEN m.mx IS NOT NULL THEN
-         |      CASE WHEN n.nm = 0 THEN m.mx ELSE m.mx / n.nm END
-         |    ELSE k.cx END AS cx
-         |  FROM ${p}kc${j - 1} k
-         |  LEFT JOIN ${p}km$j m ON m.c = k.c AND m.f = k.f
-         |  LEFT JOIN ${p}kn$j n ON n.c = k.c)""".stripMargin)
-    sb.append(
-      s""",
-         |${p}fin AS (SELECT id, c FROM (
-         |  SELECT t.id, k2.c,
-         |    row_number() OVER (PARTITION BY t.id
-         |      ORDER BY sum((t.x - k2.cx) * (t.x - k2.cx)) ASC, k2.c ASC) AS rn
-         |  FROM $asgSrc t JOIN ${p}kc$iters k2 ON k2.f = t.f
-         |  GROUP BY t.id, k2.c) WHERE rn = 1)""".stripMargin)
-    sb.toString
-  }
-
-  /** The WHOLE energy pipeline (EnergyBuilder E1–E6, defaults:
-    * opticalTokens=40, trim 0.1, η=0.1, steps=4, splitQuantile=0.9,
-    * neighborK=12, splitTau=0.15, weights 1.0/0.5/0.25, candidateM=32,
-    * GraphParams eps=1 k=10 σ=0.5 p=2) replayed as one DuckDB CTE
-    * chain. Every stage is deterministic by construction on the engine
-    * side (DeterministicKMeans: farthest-first seeding from the
-    * smallest id + 20 fixed Lloyd iterations, ties → smaller index;
-    * exact order-statistic quantiles), so the recurrence can be
-    * unrolled: 39 seeding picks, 20 Lloyd rounds, the dispersion
-    * splits, the candidate graph, and both F×F co-energy Laplacians.
-    * Ends in lamv(id, lambda, e_raw) + tauv(t).
-    */
-  private val EnergyOracleCte: String = {
-    val sb = new StringBuilder
-    sb.append(
-      """ex AS (SELECT vec_id AS id, generate_subscripts(embedding, 1) AS f,
-        |  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |nrm AS (SELECT id, sqrt(sum(v * v)) AS nm FROM ex GROUP BY id),
-        |x0 AS (SELECT ex.id, ex.f,
-        |  CASE WHEN nrm.nm = 0 THEN ex.v ELSE ex.v / nrm.nm END AS x
-        |  FROM ex JOIN nrm ON nrm.id = ex.id),
-        |xl AS (SELECT id, list(x ORDER BY f) AS lv FROM x0 GROUP BY id),
-        |ecp AS (SELECT a.id AS src, b.id AS dst,
-        |  1.0 - greatest(0.0, list_cosine_similarity(a.lv, b.lv)) AS d
-        |  FROM xl a JOIN xl b ON a.id <> b.id),
-        |eknn AS (SELECT src, dst FROM (
-        |  SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY d, dst) AS rn
-        |  FROM ecp WHERE d <= 1.0) WHERE rn <= 12),
-        |esym AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT src, dst FROM eknn UNION ALL SELECT dst AS src, src AS dst FROM eknn))"""
-        .stripMargin)
-    // E1: 4 diffusion steps x <- x + eta*(mean_N(x) - x)
-    for (t <- 1 to 4) sb.append(
-      s""",
-         |x$t AS (SELECT xs.id, xs.f, xs.x + 0.1 * (coalesce(nb.mn, xs.x) - xs.x) AS x
-         |  FROM x${t - 1} xs LEFT JOIN (
-         |    SELECT e.src AS id, xn.f, avg(xn.x) AS mn
-         |    FROM esym e JOIN x${t - 1} xn ON xn.id = e.dst
-         |    GROUP BY e.src, xn.f) nb ON nb.id = xs.id AND nb.f = xs.f)""".stripMargin)
-    // E2: trim the 10% farthest from the global mean (exact quantile)
-    sb.append(
-      """,
-        |nit AS (SELECT count(*) AS n FROM nrm),
-        |gmean AS (SELECT x4.f, sum(x4.x) / nit.n AS m
-        |  FROM x4 CROSS JOIN nit GROUP BY x4.f, nit.n),
-        |dmn AS (SELECT x4.id, sqrt(sum((x4.x - gmean.m) * (x4.x - gmean.m))) AS dmean
-        |  FROM x4 JOIN gmean ON gmean.f = x4.f GROUP BY x4.id),
-        |tcut AS (SELECT quantile_disc(dmean, 0.9) AS c FROM dmn),
-        |keep AS (SELECT dmn.id FROM dmn CROSS JOIN tcut WHERE dmn.dmean <= tcut.c),
-        |trm AS (SELECT x4.id, x4.f, x4.x FROM x4 JOIN keep ON keep.id = x4.id)"""
-        .stripMargin)
-    // E3: deterministic k-means (farthest-first + 20 Lloyd rounds)
-    sb.append("," + kmeansCtes("trm", 40, 20, ""))
-    // E4: per-cluster stats, dispersion splits
-    sb.append(
-      """,
-        |cstat AS (SELECT fin.c, trm.f,
-        |  sum(trm.x) / count(*) AS mf,
-        |  sqrt(greatest(0.0, sum(trm.x * trm.x) / count(*) -
-        |    (sum(trm.x) / count(*)) * (sum(trm.x) / count(*)))) AS sf
-        |  FROM fin JOIN trm ON trm.id = fin.id GROUP BY fin.c, trm.f),
-        |cdisp AS (SELECT c, sqrt(sum(sf * sf)) AS disp FROM cstat GROUP BY c),
-        |scut AS (SELECT r.disp AS d FROM
-        |  (SELECT disp, row_number() OVER (ORDER BY disp) AS rn FROM cdisp) r
-        |  CROSS JOIN (SELECT count(*) AS l FROM cdisp) n
-        |  WHERE r.rn = least(n.l, cast(trunc(0.9 * n.l) AS BIGINT) + 1)),
-        |ecent AS (
-        |  SELECT 2 * cs.c AS cid, cs.f,
-        |    CASE WHEN cd.disp > sc.d THEN cs.mf + 0.15 * cs.sf ELSE cs.mf END AS v,
-        |    cd.disp AS disp
-        |  FROM cstat cs JOIN cdisp cd ON cd.c = cs.c CROSS JOIN scut sc
-        |  UNION ALL
-        |  SELECT 2 * cs.c + 1, cs.f, cs.mf - 0.15 * cs.sf, cd.disp
-        |  FROM cstat cs JOIN cdisp cd ON cd.c = cs.c CROSS JOIN scut sc
-        |  WHERE cd.disp > sc.d),
-        |cl AS (SELECT cid, list(v ORDER BY f) AS lv, max(disp) AS disp
-        |  FROM ecent GROUP BY cid),
-        |ccp AS (SELECT a.cid AS ca, b.cid AS cb,
-        |  1.0 - greatest(0.0, list_cosine_similarity(a.lv, b.lv)) AS d
-        |  FROM cl a JOIN cl b ON a.cid <> b.cid),
-        |csel AS (SELECT DISTINCT least(ca, cb) AS a, greatest(ca, cb) AS b FROM (
-        |  SELECT ca, cb FROM (
-        |    SELECT ca, cb, row_number() OVER (PARTITION BY ca ORDER BY d, cb) AS rn
-        |    FROM ccp) WHERE rn <= 32)),
-        |pedges AS (SELECT csel.a, csel.b,
-        |  1.0 - greatest(0.0, list_cosine_similarity(xx.lv, yy.lv)) AS d
-        |  FROM csel JOIN cl xx ON xx.cid = csel.a JOIN cl yy ON yy.cid = csel.b),
-        |pw AS (SELECT a, b, 1.0 / (1.0 + pow(d / 0.5, 2.0)) AS w FROM pedges),
-        |pdif AS (SELECT pw.a, pw.b, pw.w, xa.f, xa.v - xb.v AS df
-        |  FROM pw JOIN ecent xa ON xa.cid = pw.a
-        |          JOIN ecent xb ON xb.cid = pw.b AND xb.f = xa.f),
-        |pm AS (SELECT d1.f AS f, d2.f AS g, sum(d1.w * d1.df * d2.df) AS m
-        |  FROM pdif d1 JOIN pdif d2 ON d1.a = d2.a AND d1.b = d2.b AND d1.f <= d2.f
-        |  GROUP BY d1.f, d2.f),
-        |fg AS (SELECT DISTINCT f FROM ecent),
-        |pdg AS (SELECT f, m FROM pm WHERE f = g),
-        |pall AS (SELECT f, g, m FROM pm
-        |  UNION ALL SELECT g AS f, f AS g, m FROM pm WHERE f < g),
-        |pdist AS (SELECT i.f, j.f AS g,
-        |  CASE WHEN coalesce(di.m, 0.0) * coalesce(dj.m, 0.0) <= 0 THEN 1.0
-        |       ELSE 1.0 - greatest(0.0, coalesce(pa.m, 0.0) / sqrt(di.m * dj.m)) END AS d
-        |  FROM fg i JOIN fg j ON i.f <> j.f
-        |  LEFT JOIN pdg di ON di.f = i.f
-        |  LEFT JOIN pdg dj ON dj.f = j.f
-        |  LEFT JOIN pall pa ON pa.f = i.f AND pa.g = j.f),
-        |psel AS (SELECT DISTINCT least(f, g) AS f, greatest(f, g) AS g FROM (
-        |  SELECT f, g FROM (
-        |    SELECT f, g, row_number() OVER (PARTITION BY f ORDER BY d, g) AS rn
-        |    FROM pdist) WHERE rn <= 10)),
-        |plap AS (SELECT psel.f, psel.g, 1.0 / (1.0 + pow(pd.d / 0.5, 2.0)) AS w
-        |  FROM psel JOIN pdist pd ON pd.f = psel.f AND pd.g = psel.g),
-        |cen AS (SELECT xa.cid, sum(plap.w * (xa.v - xb.v) * (xa.v - xb.v)) AS e
-        |  FROM plap JOIN ecent xa ON xa.f = plap.f
-        |            JOIN ecent xb ON xb.cid = xa.cid AND xb.f = plap.g
-        |  GROUP BY xa.cid),
-        |mdsp AS (SELECT greatest(1e-12, max(disp)) AS v FROM cl),
-        |esq AS (SELECT pw.a, pw.b, sum((xa.v - xb.v) * (xa.v - xb.v)) AS ss
-        |  FROM pw JOIN ecent xa ON xa.cid = pw.a
-        |          JOIN ecent xb ON xb.cid = pw.b AND xb.f = xa.f
-        |  GROUP BY pw.a, pw.b),
-        |ew AS (SELECT pe.a, pe.b,
-        |  1.0 * (1.0 / (1.0 + abs(ca.e - cb.e))) +
-        |  0.5 * (1.0 - abs(xa.disp - xb.disp) / mdsp.v) +
-        |  0.25 * (1.0 / (1.0 + esq.ss)) AS w
-        |  FROM pedges pe
-        |  JOIN cen ca ON ca.cid = pe.a JOIN cen cb ON cb.cid = pe.b
-        |  JOIN cl xa ON xa.cid = pe.a JOIN cl xb ON xb.cid = pe.b
-        |  JOIN esq ON esq.a = pe.a AND esq.b = pe.b
-        |  CROSS JOIN mdsp),
-        |edif AS (SELECT ew.a, ew.b, ew.w, xa.f, xa.v - xb.v AS df
-        |  FROM ew JOIN ecent xa ON xa.cid = ew.a
-        |          JOIN ecent xb ON xb.cid = ew.b AND xb.f = xa.f),
-        |em AS (SELECT d1.f AS f, d2.f AS g, sum(d1.w * d1.df * d2.df) AS m
-        |  FROM edif d1 JOIN edif d2 ON d1.a = d2.a AND d1.b = d2.b AND d1.f <= d2.f
-        |  GROUP BY d1.f, d2.f),
-        |edg AS (SELECT f, m FROM em WHERE f = g),
-        |eall AS (SELECT f, g, m FROM em
-        |  UNION ALL SELECT g AS f, f AS g, m FROM em WHERE f < g),
-        |edist AS (SELECT i.f, j.f AS g,
-        |  CASE WHEN coalesce(di.m, 0.0) * coalesce(dj.m, 0.0) <= 0 THEN 1.0
-        |       ELSE 1.0 - greatest(0.0, coalesce(ea.m, 0.0) / sqrt(di.m * dj.m)) END AS d
-        |  FROM fg i JOIN fg j ON i.f <> j.f
-        |  LEFT JOIN edg di ON di.f = i.f
-        |  LEFT JOIN edg dj ON dj.f = j.f
-        |  LEFT JOIN eall ea ON ea.f = i.f AND ea.g = j.f),
-        |esel AS (SELECT DISTINCT least(f, g) AS f, greatest(f, g) AS g FROM (
-        |  SELECT f, g FROM (
-        |    SELECT f, g, row_number() OVER (PARTITION BY f ORDER BY d, g) AS rn
-        |    FROM edist) WHERE rn <= 10)),
-        |elap AS (SELECT esel.f, esel.g, 1.0 / (1.0 + pow(ed2.d / 0.5, 2.0)) AS w
-        |  FROM esel JOIN edist ed2 ON ed2.f = esel.f AND ed2.g = esel.g),
-        |iterm AS (SELECT a.id, elap.w * (a.v - b.v) * (a.v - b.v) AS t
-        |  FROM elap JOIN ex a ON a.f = elap.f
-        |            JOIN ex b ON b.id = a.id AND b.f = elap.g),
-        |ilam AS (SELECT id, sum(t) AS e_raw,
-        |  CASE WHEN sum(t) <= 0 THEN 0.0
-        |       ELSE least(1.0, greatest(0.0, sum(t * t) / (sum(t) * sum(t)))) END AS g_raw
-        |  FROM iterm GROUP BY id),
-        |tauv AS (SELECT CASE WHEN quantile_disc(e_raw, 0.5) > 0
-        |  THEN quantile_disc(e_raw, 0.5) ELSE 1e-10 END AS t FROM ilam),
-        |lamv AS (SELECT il.id,
-        |  (tv.t / (1.0 + tv.t)) *
-        |    (CASE WHEN il.e_raw + tv.t = 0 THEN 0.0
-        |          ELSE il.e_raw / (il.e_raw + tv.t) END) +
-        |  (1.0 - tv.t / (1.0 + tv.t)) * il.g_raw AS lambda,
-        |  il.e_raw AS e_raw
-        |  FROM ilam il CROSS JOIN tauv tv)""".stripMargin)
-    // MATERIALIZED on every CTE: DuckDB inlines plain CTEs per
-    // reference, and the seeding/Lloyd chains reference their
-    // predecessor twice each — inlining makes the expansion
-    // exponential (observed as "Too many open files" from duplicated
-    // parquet scans). Materialization makes the evaluation linear.
-    sb.toString.replace(" AS (", " AS MATERIALIZED (")
-  }
+  /** Every Verify query with its oracle; names are unique. */
+  val registry: Seq[QuerySpec] =
+    RelationalQueries.specs ++ IndexQueries.specs ++ VectorQueries.specs ++
+      CurationQueries.specs ++ TextQueries.specs ++ GraphQueries.specs ++
+      MetricQueries.specs ++ ProfileQueries.specs ++ StreamQueries.specs
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  def oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 }

@@ -3490,6 +3490,10 @@ object Similarity {
       s"nLists must be positive, or 0 for corpus-proportional auto-sizing; got $nLists")
     require(nprobe >= 0,
       s"nprobe must be positive, or 0 for the sizing-matched default; got $nprobe")
+    // refuse what the probed core would refuse, before the quantizer fit
+    requireCut(k, k, None)
+    require(nLists == 0 || nprobe <= nLists,
+      s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=$nLists")
     val spark = emb.sparkSession
     import spark.implicits._
     val items = emb.select(
@@ -3882,17 +3886,23 @@ object Similarity {
     * probes — the oracle operating point (v_bitext_mine_pq); the
     * production point's recall is spec-pinned. Output: (id_a, id_b,
     * cos, margin), materialized (localCheckpoint), like the siblings.
+    * `nprobe = 0` (the default) probes min(12, nLists) lists; a bad k,
+    * rerank or explicit nprobe is refused before any fit.
     */
   def bitextMinePq(
       a: DataFrame, b: DataFrame, k: Int = 4, threshold: Double = 1.0,
-      nLists: Int = 16, nprobe: Int = 12, m: Int = 8, ksub: Int = 64,
+      nLists: Int = 16, nprobe: Int = 0, m: Int = 8, ksub: Int = 64,
       rerank: Int = 64): DataFrame = {
+    requireCut(k, rerank, None)
+    require(nprobe >= 0 && nprobe <= nLists,
+      s"need 0 < nprobe <= nLists, or 0 for min(12, nLists); got nprobe=$nprobe nLists=$nLists")
+    val np = if (nprobe > 0) nprobe else math.min(12, nLists)
     val (sa, sb) = (idVec(a), idVec(b))
     val idxB = ivfBuild(sb, nLists)
     val idxA = ivfBuild(sa, nLists)
     val pqB = pqBuild(sb, m, ksub)
     val pqA = pqBuild(sa, m, ksub)
-    try bitextMinePq(idxA, idxB, pqA, pqB, sa, sb, k, threshold, nprobe, rerank)
+    try bitextMinePq(idxA, idxB, pqA, pqB, sa, sb, k, threshold, np, rerank)
     finally {
       ivfRelease(idxA); ivfRelease(idxB)
       pqRelease(pqA); pqRelease(pqB)

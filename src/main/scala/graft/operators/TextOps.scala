@@ -166,7 +166,7 @@ object TextOps {
     * from 0 — the merge table a tokenizer consumes, driver-sized
     * (`numMerges` rows). Oracled end to end since r8: the DuckDB side
     * re-derives the merge sequence with unrolled pair-count/argmax
-    * rounds (SparkEntry.bpeTrainCtes — merge application is a
+    * rounds (`TextQueries.bpeTrainCtes` — merge application is a
     * doubled-separator string replace that replays the left-to-right
     * pass exactly), alongside the exact-sequence spec on the Sennrich
     * reference corpus.

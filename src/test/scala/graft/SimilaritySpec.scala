@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.graftspec.JobCount
 import org.apache.spark.sql.{functions => F}
 
 class SimilaritySpec extends SparkSpec {
@@ -2232,6 +2233,23 @@ class SimilaritySpec extends SparkSpec {
              ("nprobe = 0", () => rejects(face(3, 0, good)).isDefined)))
         guards.collect { case (guard, holds) if !holds() => s"$name: $guard accepted" }
       }
+      // the one-shot miners fit their own indexes: with an explicit
+      // nLists, a bad k or nprobe must refuse before any job starts, and
+      // the default nprobe must fit inside the lists
+      val labeled = corpus.join(labels, "id")
+      val oneShots: Seq[(String, (Int, Int) => org.apache.spark.sql.DataFrame)] = Seq(
+        ("hardNegativesApprox(one-shot)", (k, p) => Similarity.hardNegativesApprox(
+          labeled, qs(good).withColumn("qlabel", F.lit("0")), k, nLists = 4, nprobe = p)),
+        ("bitextMinePq(one-shot)", (k, p) => Similarity.bitextMinePq(
+          corpus, corpus, k, 0.0, nLists = 4, nprobe = p, m = 2, ksub = 8)))
+      val oneShotMisses = oneShots.flatMap { case (name, mine) =>
+        Seq(("k = 0", 0, 2), ("nprobe > nLists", 3, 5)).flatMap { case (guard, k, p) =>
+          val (refusal, jobs) = JobCount(s.sparkContext)(rejects(mine(k, p)))
+          (if (refusal.isEmpty) Seq(s"$name: $guard accepted") else Nil) ++
+            (if (jobs > 0) Seq(s"$name: $guard refused after $jobs jobs") else Nil)
+        }
+      } ++ rejects(Similarity.bitextMinePq(corpus, corpus, 3, 0.0, nLists = 4, m = 2, ksub = 8))
+        .map(e => s"bitextMinePq(one-shot): default nprobe at nLists = 4 threw: ${e.getMessage}")
       // the serve loops refuse before start(): no query may be running
       val in = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Array[Double])]
@@ -2248,7 +2266,7 @@ class SimilaritySpec extends SparkSpec {
       }
       val started = s.streams.active.length
       s.streams.active.foreach(_.stop())
-      val all = misses ++ streamMisses ++
+      val all = misses ++ oneShotMisses ++ streamMisses ++
         (if (started > 0) Seq(s"$started serve loops started") else Nil)
       assert(all.isEmpty, all.mkString("\n"))
     } finally {
