@@ -113,25 +113,28 @@ final case class ArrowSpaceModel private[api] (
   @transient private lazy val laplacianBc =
     items.sparkSession.sparkContext.broadcast(featureLaplacian)
 
-  /** Batch λ-aware search: top-k for MANY queries in one distributed
-    * pass — queries (query_id, qvec[, qlambda]) join against the item
-    * table, score with the same blended kernel, and a per-query window
-    * keeps the top k. This is the shape that scales: one shuffle keyed
-    * by query_id regardless of query count; broadcast the smaller side.
-    * Query λs are computed per-row against the broadcast F×F Laplacian.
+  /** Batch λ-aware search: top-k for MANY queries (query_id, qvec[,
+    * qlambda]) under the blended score of [[search]]; query λs are
+    * computed per row against the broadcast F×F Laplacian unless given.
     *
-    * The query table is sized before the broadcast decision in one of
-    * two ways. A table the driver already holds (built from local rows,
-    * e.g. `Seq(...).toDF`) optimizes to a `LocalRelation`: its row count
-    * is read from the plan, its λs and input checks are evaluated on the
-    * driver while planning (so a bad row fails this call, not the later
-    * action), and no Spark job runs until the caller's action. Every
-    * other table (Parquet, a stream, any computed pipeline) is
-    * materialized once with `localCheckpoint` and its rows are counted —
-    * it is never broadcast on an estimate.
+    * A query table within [[graft.core.DriverLocal.Default]] is held on
+    * the driver and scored by one [[graft.scale.BlockScore]] scan of the
+    * items with a heap per query (so any `query_id` type works, and rows
+    * sharing one merge in the final per-query window). A table built
+    * from local rows (e.g. `Seq(...).toDF`) optimizes to a
+    * `LocalRelation`: its rows, λs and input checks are evaluated on the
+    * driver while planning (a bad row fails this call), and no job runs
+    * until the caller's action. Any other table is read once by
+    * [[graft.core.DriverLocal.collect]]. A table over the bound is
+    * joined with the items in a shuffle instead.
     */
   def searchBatch(queries: DataFrame, tau: Double, topk: Int = -1): DataFrame = {
+    import graft.core.DriverLocal
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graftshim.Shim
+    import org.apache.spark.sql.types._
     val spark = items.sparkSession
     val k = if (topk > 0) topk else params.topk
     val bcLap = laplacianBc
@@ -176,70 +179,51 @@ final case class ArrowSpaceModel private[api] (
         queries
           .select(F.col("query_id"), F.col("qvec").cast("array<double>").as("qvec"))
           .withColumn("qlambda", lamQ(F.col("qvec")))
-    // Gate the broadcast on EXACT rows AND bytes — the candIdsSized
-    // pattern in Dedup.minhashNearDupPairs — not on Catalyst stats,
-    // which a UDF-projected frame doesn't have. Rows alone is not
-    // enough: 100k × 4096-dim vectors is ~3.3 GB, a driver/executor
-    // OOM, so wide-query tables fall back to the scored shuffle.
-    // Driver-resident rows are sized from the optimized plan: Catalyst
-    // has already evaluated the λ UDF and the checks into a
-    // LocalRelation, whose row count is exact, and the DataFrame is
-    // rebuilt on that plan so the UDF is not evaluated again. Anything
-    // else is materialized ONCE (which also truncates an expensive
-    // upstream lineage: without it the count job and the scored join
-    // would each re-run the caller's pipeline + the per-query λ
-    // synthesis) and counted.
-    val (qRows, nQ) = q.queryExecution.optimizedPlan match {
-      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if !local.isStreaming =>
-        (org.apache.spark.sql.graftshim.Shim.ofPlan(spark, local),
-          local.data.length.toLong)
+    val qidT = q.schema("query_id").dataType
+    // Right: the query rows on the driver. Left: a table over the bound
+    // (rows AND bytes: 100k × 4096-dim vectors is ~3.3 GB) for the
+    // shuffle join — a LocalRelation rebuilt on its optimized plan so
+    // the λ UDF does not run again, any other table materialized once.
+    val held: Either[DataFrame, Seq[InternalRow]] = q.queryExecution.optimizedPlan match {
+      case local: LocalRelation if !local.isStreaming =>
+        val n = local.data.length.toLong
+        if (DriverLocal.Default.fits(n, n * (nF.toLong * 8L + 64L))) Right(local.data)
+        else Left(Shim.ofPlan(spark, local))
       case _ =>
-        val ck = q.localCheckpoint()
-        (ck, ck.count())
+        DriverLocal.collect(q, DriverLocal.Default).map(_.toSeq).toRight(q.localCheckpoint())
     }
-    val qBytes = nQ * (nF.toLong * 8L + 64L) // vec payload + row overhead
-    val qSized =
-      if (graft.core.DriverLocal.Default.fits(nQ, qBytes)) F.broadcast(qRows) else qRows
-    val scored = items
-      .join(qSized)
-      .withColumn(
-        "score",
-        F.lit(tau) * cosine(F.col("vec"), F.col("qvec")) +
-          F.lit(1.0 - tau) * lambdaProximity(F.col("lambda"), F.col("qlambda")))
-      .select("query_id", "id", "score")
-    // Bounded-heap exact top-k: all N item scores for one query heap
-    // down to k inside every map task (the hub-key failure
-    // Skew.saltedTopKPerKey exists for, with the shuffle shrunk to
-    // |queries| × partitions × k pairs). The heap form requires an
-    // integral key (it casts query_id to LONG — a string id would
-    // silently null out, a fractional double would merge two queries
-    // into one group), so non-integral query_id columns take the
-    // any-key window form instead.
-    val integralKey = qRows.schema("query_id").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
+    val top = held match {
+      case Right(rows) =>
+        graft.scale.BlockScore.scan(
+          items.select(F.col("id").cast("long"), F.col("vec").cast("array<double>"),
+            F.col("lambda").cast("double")),
+          graft.scale.BlockScore.Block.of(rows, qidT),
+          graft.scale.BlockScore.Blend(tau, k), Seq("query_id", "id", "score"))
+      case Left(qRows) =>
+        val scored = items
+          .join(qRows)
+          .withColumn(
+            "score",
+            F.lit(tau) * cosine(F.col("vec"), F.col("qvec")) +
+              F.lit(1.0 - tau) * lambdaProximity(F.col("lambda"), F.col("qlambda")))
+          .select("query_id", "id", "score")
+        // the heap form casts the key to LONG (a string id would null
+        // out, a fractional double would merge two queries), so it
+        // takes integral keys only; it returns the caller's dtype
+        qidT match {
+          case LongType | IntegerType | ShortType | ByteType =>
+            graft.scale.Skew.heapTopKPerKey(scored, "query_id", "score", "id", k)
+              .withColumn("query_id", F.col("query_id").cast(qidT))
+          case _ =>
+            graft.scale.Skew.saltedTopKPerKey(
+              scored, "query_id", Seq(F.col("score").desc, F.col("id").asc), k)
+        }
     }
-    val top =
-      if (integralKey) {
-        // the heap form computes on LONG keys; cast back so both
-        // branches return the caller's input dtypes (ADVICE r9: an
-        // Int-keyed caller must not see LongType query_id/id only when
-        // the heap branch happened to run)
-        val qidT = qRows.schema("query_id").dataType
-        val idT = scored.schema("id").dataType
-        graft.scale.Skew.heapTopKPerKey(scored, "query_id", "score", "id", k)
-          .withColumn("query_id", F.col("query_id").cast(qidT))
-          .withColumn("id", F.col("id").cast(idT))
-      } else
-        graft.scale.Skew.saltedTopKPerKey(
-          scored, "query_id", Seq(F.col("score").desc, F.col("id").asc), k)
     val w = Window.partitionBy("query_id")
       .orderBy(F.col("score").desc, F.col("id").asc)
-    top.withColumn("rank", F.row_number().over(w))
+    top.withColumn("id", F.col("id").cast(items.schema("id").dataType))
+      .withColumn("rank", F.row_number().over(w))
+      .where(F.col("rank") <= k)
   }
 
   /** Query-side S10: synthetic λ for one vector, computed driver-side

@@ -31,7 +31,7 @@ private[graft] object DriverLocal {
       nRows <= rows && nBytes <= bytes
   }
 
-  /** The one bound: `ArrowSpaceModel.searchBatch`'s broadcast query
+  /** The one bound: `ArrowSpaceModel.searchBatch`'s driver-held query
     * table and what a streaming gate's driver-decided micro-batch
     * holds on the driver (the batch, and each state scan's result). */
   val Default: Bound = Bound(rows = 100000L, bytes = 128L * 1024 * 1024)

@@ -56,7 +56,7 @@ object VectorKernels {
     * alone region-copies null slots as 0.0, silently corrupting the
     * kernel result; a null element must null-propagate like every
     * other Spark arithmetic input. */
-  private[functions] def doublesOrNull(a: ArrayData): Array[Double] = {
+  private[graft] def doublesOrNull(a: ArrayData): Array[Double] = {
     var i = 0
     val n = a.numElements()
     while (i < n) {

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import graft.scale.BlockScore
+import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Graph-analytics operators over the similarity graph — the
   * quantities the reference's topology-aware evaluation computes with
@@ -458,7 +459,7 @@ object GraphAnalytics {
   }
 
   /** Exact cosine-threshold similarity edges (cos ≥ minCos, src < dst)
-    * with a broadcast table + per-partition primitive loops: the N²
+    * by one [[BlockScore]] scan against the broadcast table: the N²
     * distance work is unavoidable for an EXACT threshold graph, but
     * this shape has zero shuffle and no Catalyst row overhead — it
     * replaces a BroadcastNestedLoopJoin cartesian that was ~20× slower
@@ -471,32 +472,12 @@ object GraphAnalytics {
       items: DataFrame, minCos: Double,
       maxRows: Long = graft.operators.Similarity.ExactPairsMaxRows,
       knownRows: Option[Long] = None): DataFrame = {
-    val spark = items.sparkSession
-    import spark.implicits._
-    val typed = items
-      .select(F.col("id").cast("long"), F.col("vec").cast("array<double>"))
-      .select($"id".as[Long], $"vec".as[Array[Double]])
+    val side = items.select(F.col("id").cast("long"), F.col("vec").cast("array<double>"))
     graft.operators.Similarity.requireExactPairsBound(
-      typed, maxRows, "cosineThresholdEdges",
+      side, maxRows, "cosineThresholdEdges",
       "KnnGraph.epsKnnEdges(eps = 1 - minCos) candidate edges", knownRows)
-    val bc = spark.sparkContext.broadcast(typed.collect())
-    typed
-      .mapPartitions { it =>
-        val all = bc.value
-        it.flatMap { case (src, va) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var i = 0
-          while (i < all.length) {
-            val (dst, vb) = all(i)
-            if (src < dst &&
-                graft.functions.VectorKernels.cosine(va, vb) >= minCos)
-              out += ((src, dst))
-            i += 1
-          }
-          out
-        }
-      }
-      .toDF("src", "dst")
+    BlockScore.scan(side, BlockScore.Block.collect(side), BlockScore.Above(minCos),
+      Seq("src", "dst", "cos")).select("src", "dst")
   }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ k

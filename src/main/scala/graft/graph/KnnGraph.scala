@@ -105,44 +105,17 @@ object KnnGraph {
   }
 
   /** Exact top-k per node with no shuffle: the (≤ BruteForceMaxRows)
-    * table is broadcast and every partition scans it with a local
-    * bounded heap, emitting at most k edges per source — the
+    * table is decoded once and broadcast, and every partition scans it
+    * with [[graft.scale.BlockScore]], keeping one bounded heap per
+    * source row and emitting at most k edges per source — the
     * TakeOrderedAndProject idea applied per row. The N² distance work
     * is unavoidable for exactness; the N² *shuffle* is not.
     */
   private def directedBruteForce(items: DataFrame, params: GraphParams): DataFrame = {
-    val spark = items.sparkSession
-    import spark.implicits._
-    val typed = items.select(F.col("id").cast("long"), F.col("vnorm"))
-      .select($"id".as[Long], $"vnorm".as[Array[Double]])
-    val all = typed.collect()
-    val bc = spark.sparkContext.broadcast(all)
-    val eps = params.eps
-    val k = params.k
-    typed
-      .mapPartitions { it =>
-        val others = bc.value
-        it.flatMap { case (src, va) =>
-          // bounded max-heap of (dist, dst): keep the k smallest
-          val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-            Ordering.Tuple2[Double, Long])
-          var i = 0
-          while (i < others.length) {
-            val (dst, vb) = others(i)
-            if (dst != src) {
-              val d = 1.0 - math.max(0.0, graft.functions.VectorKernels.cosine(va, vb))
-              if (d <= eps && (heap.size < k ||
-                  Ordering.Tuple2[Double, Long].lt((d, dst), heap.head))) {
-                heap.enqueue((d, dst))
-                if (heap.size > k) heap.dequeue()
-              }
-            }
-            i += 1
-          }
-          heap.toSeq.map { case (d, dst) => (src, dst, d) }
-        }
-      }
-      .toDF("src", "dst", "dist")
+    import graft.scale.BlockScore
+    val side = items.select(F.col("id").cast("long"), F.col("vnorm").cast("array<double>"))
+    BlockScore.scan(side, BlockScore.Block.collect(side),
+      BlockScore.Within(params.eps, params.k), Seq("src", "dst", "dist"))
   }
 
   private def directedLsh(

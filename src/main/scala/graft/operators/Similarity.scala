@@ -4,6 +4,7 @@ import graft.functions.VectorFunctions._
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
 import graft.api.ArrowSpaceModel.{readSidecar, sidecarText}
+import graft.scale.BlockScore
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import scala.reflect.runtime.universe.TypeTag
 
@@ -2080,8 +2081,9 @@ object Similarity {
 
   /** Top-k most-similar item pairs by exact cosine. The N² distance
     * work is inherent to an exact answer, but the *shuffle* is not:
-    * the table is broadcast and each partition keeps a bounded top-k
-    * heap over primitive-array cosines, so only partitions·k rows ever
+    * the table is decoded once ([[BlockScore.Block]], norms hoisted) and
+    * broadcast, and each partition keeps a bounded top-k heap over
+    * primitive-array cosines, so only partitions·k rows ever
     * move (replaces a cartesian self-join that was ~10× slower).
     * Broadcast-bound — at 100 TB generate candidates with the LSH
     * band-join in [[graft.graph.KnnGraph]] / [[Dedup]] and top-k those.
@@ -2095,18 +2097,20 @@ object Similarity {
     requireExactPairsBound(typed, maxRows, "topCosinePairs",
       "KnnGraph.epsKnnEdges / Dedup banded candidates + saltedTopKPerKey",
       knownRows)
-    val bc = spark.sparkContext.broadcast(typed.collect())
+    val bc = spark.sparkContext.broadcast(BlockScore.Block.collect(typed.toDF))
     typed
       .mapPartitions { it =>
         val all = bc.value
+        val ids = all.ids
         val heap =
           new scala.collection.mutable.PriorityQueue[(Double, Long, Long)]()(worstFirst)
         it.foreach { case (idA, va) =>
+          val na = graft.functions.VectorKernels.normSq(va)
           var i = 0
-          while (i < all.length) {
-            val (idB, vb) = all(i)
+          while (i < ids.length) {
+            val idB = ids(i)
             if (idA < idB) {
-              val raw = graft.functions.VectorKernels.cosine(va, vb)
+              val raw = BlockScore.cosine(va, na, all.vecs(i), all.norms(i))
               // fast-path reject BEFORE the BigDecimal round: with the
               // heap full, round4(raw) can only reach the current head
               // score hs when raw >= hs - 5e-5 (HALF_UP moves a value
@@ -3336,47 +3340,25 @@ object Similarity {
     emb.select(F.col("id"), F.round(l2norm(F.col("vec")), 4).as("norm"))
 
   /** Embedding-cosine near-duplicate pairs above a threshold —
-    * exact, broadcast + per-partition primitive loops (no cartesian
-    * shuffle); compose with LSH bucketing for scale (same contract as
-    * minhashNearDupPairs).
+    * exact, one [[BlockScore]] scan against the broadcast table (no
+    * cartesian shuffle); compose with LSH bucketing for scale (same
+    * contract as minhashNearDupPairs).
     */
   def cosineNearDupPairs(
       emb: DataFrame, threshold: Double,
       maxRows: Long = ExactPairsMaxRows,
       knownRows: Option[Long] = None): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val typed = idVec(emb).select($"id".as[Long], $"vec".as[Array[Double]])
-    requireExactPairsBound(typed, maxRows, "cosineNearDupPairs",
+    val side = idVec(emb)
+    requireExactPairsBound(side, maxRows, "cosineNearDupPairs",
       "KnnGraph.epsKnnEdges(eps = 1 - threshold) for candidates, then the exact cosine refine",
       knownRows)
-    val bc = spark.sparkContext.broadcast(typed.collect())
-    typed
-      .mapPartitions { it =>
-        val all = bc.value
-        it.flatMap { case (idA, va) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          var i = 0
-          while (i < all.length) {
-            val (idB, vb) = all(i)
-            if (idA < idB) {
-              val raw = graft.functions.VectorKernels.cosine(va, vb)
-              // exact fast-path reject before the BigDecimal round:
-              // round4 moves a value by at most 5e-5 (+ 1 ulp), so
-              // raw < threshold - 1e-4 can never round to >= threshold
-              // — the allocation-heavy round runs only near or above
-              // the threshold; output is bit-identical.
-              if (!(raw < threshold - 0.0001)) {
-                val s = round4(raw)
-                if (s >= threshold) out += ((idA, idB, s))
-              }
-            }
-            i += 1
-          }
-          out
-        }
-      }
-      .toDF("id_a", "id_b", "score")
+    // round(·, 4) moves a value by at most 5e-5 (+ 1 ulp), so a cosine
+    // below threshold - 1e-4 can never round to >= threshold: the scan
+    // keeps only pairs near or above it
+    BlockScore.scan(side, BlockScore.Block.collect(side), BlockScore.Above(threshold - 0.0001),
+        Seq("id_a", "id_b", "score"))
+      .withColumn("score", F.round(F.col("score"), 4))
+      .where(F.col("score") >= threshold)
       .orderBy(F.col("score").desc, F.col("id_a").asc, F.col("id_b").asc)
   }
 
@@ -3391,7 +3373,7 @@ object Similarity {
     * EXPLODED into its (|labels|−1) negative label keys and the join
     * becomes a plain equi-join on `label`, co-partitioned and
     * shuffle-friendly at any query count (label skew in the top-k is
-    * absorbed by the salted two-phase rank, same as searchBatch). The
+    * absorbed by the salted two-phase rank). The
     * label domain is collected once and gated at `maxLabels` — the
     * explode factor — so a mistakenly high-cardinality label column
     * (e.g. a doc id) fails with an actionable message instead of a
@@ -3494,8 +3476,6 @@ object Similarity {
     requireCut(k, k, None)
     require(nLists == 0 || nprobe <= nLists,
       s"need 0 < nprobe <= nLists; got nprobe=$nprobe nLists=$nLists")
-    val spark = emb.sparkSession
-    import spark.implicits._
     val items = emb.select(
       F.col("id").cast("long"),
       F.col("vec").cast("array<double>"),

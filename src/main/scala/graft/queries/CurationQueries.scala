@@ -750,25 +750,9 @@ private[graft] object CurationQueries {
     // the SQL replay pins the shingle frames too, not just band-row
     // membership.
     QuerySpec("d_takedown_gate", (s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val dir = tmpDir("graft_dtake_idx")
-      val out = tmpDir("graft_dtake_out")
-      val ckpt = tmpDir("graft_dtake_ckpt")
-      val built = Dedup.minhashIndexBuild(
-        all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
-      val b1 = all.where(F.col("doc_id") % 10 >= 1 && F.col("doc_id") % 10 <= 4)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val b2 = all.where(F.col("doc_id") % 10 >= 5)
-        .as[(Long, String)].collect().sortBy(_._1)
-      streamBatches(s, Seq(b1.toSeq, b2.toSeq), Seq("doc_id", "text")) {
-        src => graft.streaming.StreamingOps.minhashGateStream(
-          src, dir, out, ckpt, jaccardThreshold = 0.8)
-      }
+      val (dir, _) = minhashGateFeed(s, d, "graft_dtake")
       Dedup.minhashLayoutRemove(
-        s, dir, all.where(F.col("doc_id") % 7 === 0).select("doc_id"))
+        s, dir, docs(s, d).where(F.col("doc_id") % 7 === 0).select("doc_id"))
       val st = Dedup.minhashIndexLoadWithAppends(s, dir)
       st.refShingles
         .select(F.col("doc_id"),

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.api.{ArrowSpaceBuilder, ArrowSpaceModel}
 import graft.core.GraphParams
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession, functions => F}
+import graft.operators.Dedup
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession, functions => F}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -83,6 +84,36 @@ private[graft] object QueryLib {
       ms.addData(b)
       q.processAllAvailable()
     } finally q.stop()
+  }
+
+  /** The minhash gate feed of the streamed-gate rows: a base index of
+    * the `doc_id % 10 = 0` documents, saved in a fresh dir, then one
+    * micro-batch per predicate of `batches` (its documents by doc_id)
+    * through `minhashGateStream` at Jaccard 0.8, with `before(index
+    * dir, i)` run ahead of batch i; by default two batches, `doc_id %
+    * 10` in 1–4 then ≥ 5. Returns (index dir, output dir).
+    */
+  def minhashGateFeed(
+      s: SparkSession, d: String, prefix: String,
+      batches: Seq[Column] = Seq(F.col("doc_id") % 10 >= 1 && F.col("doc_id") % 10 <= 4,
+        F.col("doc_id") % 10 >= 5),
+      compactEverySegs: Int = graft.streaming.StreamingOps.defaultCompactEverySegs,
+      before: (String, Int) => Unit = (_, _) => ()): (String, String) = {
+    import s.implicits._
+    val all = docs(s, d).select("doc_id", "text")
+    val dir = tmpDir(s"${prefix}_idx")
+    val out = tmpDir(s"${prefix}_out")
+    val ckpt = tmpDir(s"${prefix}_ckpt")
+    val built = Dedup.minhashIndexBuild(
+      all.where(F.col("doc_id") % 10 === 0))
+    Dedup.minhashIndexSave(built, dir)
+    Dedup.minhashIndexRelease(built)
+    val rows = batches.map(p => all.where(p).as[(Long, String)].collect().sortBy(_._1).toSeq)
+    streamBatches(s, rows, Seq("doc_id", "text"), before(dir, _)) {
+      src => graft.streaming.StreamingOps.minhashGateStream(
+        src, dir, out, ckpt, jaccardThreshold = 0.8, compactEverySegs = compactEverySegs)
+    }
+    (dir, out)
   }
 
   /** Default index params for the synthetic embeddings: they are

@@ -724,7 +724,6 @@ private[graft] object RelationalQueries {
     // id = entity minimum
     QuerySpec("q_entity_resolve", (s, d) => {
       import graft.operators.EntityResolution
-      import graft.operators.EntityResolution.FieldWeight
       EntityResolution.resolve(
         tbl(s, d, "customer").where(F.col("c_custkey") <= 500),
         "c_custkey", "c_name",

@@ -216,23 +216,7 @@ private[graft] object StreamQueries {
     // band rows appended as idempotent seg=batchId partitions.
     // Oracled by the sequential exact-Jaccard replay in DuckDB.
     QuerySpec("s_dedup_gate_stream", (s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val dir = tmpDir("graft_sgate_idx")
-      val out = tmpDir("graft_sgate_out")
-      val ckpt = tmpDir("graft_sgate_ckpt")
-      val built = Dedup.minhashIndexBuild(
-        all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
-      val b1 = all.where(F.col("doc_id") % 10 >= 1 && F.col("doc_id") % 10 <= 4)
-        .as[(Long, String)].collect().sortBy(_._1)
-      val b2 = all.where(F.col("doc_id") % 10 >= 5)
-        .as[(Long, String)].collect().sortBy(_._1)
-      streamBatches(s, Seq(b1.toSeq, b2.toSeq), Seq("doc_id", "text")) {
-        src => graft.streaming.StreamingOps.minhashGateStream(
-          src, dir, out, ckpt, jaccardThreshold = 0.8)
-      }
+      val (_, out) = minhashGateFeed(s, d, "graft_sgate")
       s.read.parquet(out).select("doc_id").orderBy("doc_id")
         .localCheckpoint()
     },
@@ -279,26 +263,11 @@ private[graft] object StreamQueries {
     // the accepted set must be IDENTICAL to the fold-free sequential
     // replay (folds are invisible to gate decisions)
     QuerySpec("s_gate_compact_stream", (s, d) => {
-      import s.implicits._
-      val all = docs(s, d).select("doc_id", "text")
-      val dir = tmpDir("graft_sgatec_idx")
-      val out = tmpDir("graft_sgatec_out")
-      val ckpt = tmpDir("graft_sgatec_ckpt")
-      val built = Dedup.minhashIndexBuild(
-        all.where(F.col("doc_id") % 10 === 0))
-      Dedup.minhashIndexSave(built, dir)
-      Dedup.minhashIndexRelease(built)
       val mod = F.col("doc_id") % 10
-      val batches = Seq(
-        mod >= 1 && mod <= 2, mod >= 3 && mod <= 4,
-        mod >= 5 && mod <= 6, mod >= 7
-      ).map(p => all.where(p).as[(Long, String)].collect().sortBy(_._1))
-      streamBatches(s, batches.map(_.toSeq), Seq("doc_id", "text"),
-          i => if (i == 3) Dedup.minhashCompactAppends(s, dir)) {
-        src => graft.streaming.StreamingOps.minhashGateStream(
-          src, dir, out, ckpt,
-          jaccardThreshold = 0.8, compactEverySegs = 2)
-      }
+      val (_, out) = minhashGateFeed(s, d, "graft_sgatec",
+        Seq(mod >= 1 && mod <= 2, mod >= 3 && mod <= 4, mod >= 5 && mod <= 6, mod >= 7),
+        compactEverySegs = 2,
+        before = (dir, i) => if (i == 3) Dedup.minhashCompactAppends(s, dir))
       s.read.parquet(out).select("doc_id").orderBy("doc_id")
         .localCheckpoint()
     },

@@ -1872,7 +1872,6 @@ private[graft] object VectorQueries {
     // is brute-force cosine over the surviving embeddings — removed
     // ids gone from every frame, all survivors still retrievable.
     QuerySpec("v_takedown_ivf", (s, d) => {
-      import s.implicits._
       val e = emb(s, d)
       val dir = tmpDir("graft_vtake_idx")
       val idx = Similarity.ivfBuild(

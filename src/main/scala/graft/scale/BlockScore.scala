@@ -1,0 +1,156 @@
+package graft.scale
+
+import graft.functions.VectorKernels
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+
+/** Decode-once block scoring of every (large row, small row) pair, with
+  * no join. The small side is decoded once into primitive arrays with
+  * their squared norms hoisted, and broadcast; each task maps over the
+  * large side's rows (`queryExecution.toRdd`), decodes each row once
+  * with its own norm and scores it against every small row — the
+  * blocked shape of exact kNN (Johnson, Douze and Jégou,
+  * arXiv:1702.08734), one scan serving many top-k queries.
+  *
+  * Scores are bit-identical to the Column kernels: the dot product
+  * accumulates in the same order and the cosine is d / √(na·nb), 0 when
+  * either norm is 0. A pair whose vector or λ is null (or has a null
+  * slot) scores null in the Column form and is dropped here; NaN scores
+  * are kept and rank as Spark ranks them.
+  */
+object BlockScore {
+
+  /** Rows decoded once: `keys(r)`, the row's column 0 as a Catalyst
+    * value of `keyType`; `vecs(r)`, a primitive copy, null when the
+    * array, one of its slots or the row's λ is null (the row then
+    * scores no pair); `norms(r)` = Σ v²; `lambdas(r)`, NaN when absent. */
+  final class Block(val keys: Array[Any], val keyType: DataType,
+      val vecs: Array[Array[Double]], val lambdas: Array[Double]) extends Serializable {
+    val norms: Array[Double] =
+      vecs.map(v => if (v == null) 0.0 else VectorKernels.normSq(v))
+    /** The keys of a LONG key column. */
+    lazy val ids: Array[Long] = keys.map(_.asInstanceOf[Long])
+  }
+
+  object Block {
+
+    /** Rows laid out as (key: `keyType`, vec: array<double>[, lambda:
+      * double]). */
+    def of(rows: Seq[InternalRow], keyType: DataType = LongType): Block = {
+      val (vecs, lambdas) = rows.map(decode).unzip
+      new Block(rows.map(_.get(0, keyType)).toArray, keyType, vecs.toArray, lambdas.toArray)
+    }
+
+    /** An (id: long, vec) frame read onto the driver by one job. */
+    def collect(df: DataFrame): Block =
+      of(df.queryExecution.toRdd.map(_.copy()).collect().toSeq)
+  }
+
+  private def decode(r: InternalRow): (Array[Double], Double) = {
+    val withLambda = r.numFields > 2
+    if (r.isNullAt(1) || (withLambda && r.isNullAt(2))) (null, Double.NaN)
+    else (VectorKernels.doublesOrNull(r.getArray(1)),
+      if (withLambda) r.getDouble(2) else Double.NaN)
+  }
+
+  /** cos(a, b) from hoisted squared norms, bit-identical to
+    * [[VectorKernels.cosine]]. Vectors of unequal length take that
+    * kernel itself, whose norms cover the common prefix only. */
+  @inline def cosine(a: Array[Double], na: Double, b: Array[Double], nb: Double): Double =
+    if (a.length != b.length) VectorKernels.cosine(a, b)
+    else if (na == 0.0 || nb == 0.0) 0.0
+    else VectorKernels.dot(a, b) / math.sqrt(na * nb)
+
+  /** How a pair scores and which pairs a scan emits, as (key, tie,
+    * score) rows. Heaps break score ties by the tie id ascending. */
+  sealed trait Rule extends Serializable
+
+  /** λ-aware search: τ·cos + (1−τ)·1/(1+|λ_large − λ_small|), the k
+    * highest per SMALL row (one heap per row, so rows sharing a key keep
+    * a heap each), emitted as (small key, large id, score) once the
+    * partition is scanned: at most partitions × small rows × k rows,
+    * for the caller's per-key window. */
+  final case class Blend(tau: Double, k: Int) extends Rule
+
+  /** Graph edges: rectified distance 1 − max(0, cos) ≤ eps, the k
+    * nearest per LARGE row, pairs of one id skipped, emitted as (large
+    * id, small id, distance) as soon as the row is scanned. */
+  final case class Within(eps: Double, k: Int) extends Rule
+
+  /** Threshold pairs: every pair with large id < small id and cos ≥
+    * `minCos`, emitted as (large id, small id, cos). */
+  final case class Above(minCos: Double) extends Rule
+
+  /** Scores every (row of `large`, row of `small`) pair under `rule`;
+    * `large` is laid out as [[Block.of]] reads rows, with a LONG id. The
+    * result has columns `names` (key, tie, score). */
+  def scan(large: DataFrame, small: Block, rule: Rule, names: Seq[String]): DataFrame = {
+    val spark = large.sparkSession
+    val bc = spark.sparkContext.broadcast(small)
+    val out = large.queryExecution.toRdd.mapPartitions { it =>
+      val b = bc.value
+      val n = b.vecs.length
+      val rows = it.flatMap { r =>
+        val (v, lam) = decode(r)
+        if (v == null) None else Some((r.getLong(0), v, VectorKernels.normSq(v), lam))
+      }
+      rule match {
+        case Blend(tau, k) =>
+          val heaps = new Array[TopKHeap](n)
+          rows.foreach { case (id, v, nv, lam) =>
+            var j = 0
+            while (j < n) {
+              if (b.vecs(j) != null) {
+                val s = tau * cosine(v, nv, b.vecs(j), b.norms(j)) +
+                  (1.0 - tau) * (1.0 / (1.0 + math.abs(lam - b.lambdas(j))))
+                if (heaps(j) == null) heaps(j) = new TopKHeap(k, desc = true)
+                heaps(j).add(s, id)
+              }
+              j += 1
+            }
+          }
+          (0 until n).iterator.filter(heaps(_) != null).flatMap { j =>
+            Iterator.tabulate(heaps(j).n)(i =>
+              InternalRow(b.keys(j), heaps(j).ties(i), heaps(j).scores(i)))
+          }
+        case Within(eps, k) =>
+          val ids = b.ids
+          rows.flatMap { case (id, v, nv, _) =>
+            val h = new TopKHeap(k, desc = false)
+            var j = 0
+            while (j < n) {
+              if (b.vecs(j) != null && ids(j) != id) {
+                val d = 1.0 - math.max(0.0, cosine(v, nv, b.vecs(j), b.norms(j)))
+                if (d <= eps) h.add(d, ids(j))
+              }
+              j += 1
+            }
+            Iterator.tabulate(h.n)(i => InternalRow(id, h.ties(i), h.scores(i)))
+          }
+        case Above(minCos) =>
+          val ids = b.ids
+          rows.flatMap { case (id, v, nv, _) =>
+            val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+            var j = 0
+            while (j < n) {
+              if (b.vecs(j) != null && id < ids(j)) {
+                val c = cosine(v, nv, b.vecs(j), b.norms(j))
+                if (c >= minCos) hits += InternalRow(id, ids(j), c)
+              }
+              j += 1
+            }
+            hits
+          }
+      }
+    }
+    val keyType = rule match {
+      case Blend(_, _) => small.keyType
+      case _ => LongType
+    }
+    Shim.ofRows(spark, out, StructType(Seq(StructField(names(0), keyType),
+      StructField(names(1), LongType, nullable = false),
+      StructField(names(2), DoubleType, nullable = false))))
+  }
+}

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -31,6 +32,13 @@ object Shim {
   def localFrame(spark: SparkSession, schema: StructType,
       rows: Seq[InternalRow]): DataFrame =
     ofPlan(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** A DataFrame over an RDD of Catalyst rows laid out as `schema`,
+    * for operators that map over `queryExecution.toRdd` themselves. */
+  def ofRows(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** Register a native function builder under `name` for SQL use. */
   def registerFunction(

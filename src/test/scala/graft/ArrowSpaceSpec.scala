@@ -198,14 +198,90 @@ class ArrowSpaceSpec extends SparkSpec {
     batchRows(localQueries, 0.8) // first-use work stays out of the counts
     val (outL, planL) = JobCount(sc)(model.searchBatch(localQueries, 0.8, 3))
     val (_, runL) = JobCount(sc)(outL.collect())
+    // the action runs the kernel's scan (the shuffle map stage of the
+    // per-query window) and the window itself
     assert(planL == 0, s"driver-local queries ran $planL jobs before the action")
-    assert(runL >= 1 && runL <= 3, s"driver-local search ran $runL jobs")
+    assert(runL == 2, s"driver-local search ran $runL jobs")
     val (outP, planP) = JobCount(sc)(model.searchBatch(parquetQueries, 0.8, 3))
     val (_, runP) = JobCount(sc)(outP.collect())
-    // the measured path, as before: localCheckpoint + count inside
-    // searchBatch, then the same scored plan at the action
-    assert(planP == 3, s"Parquet queries ran $planP jobs in searchBatch")
-    assert(runP == 3, s"Parquet-sourced search ran $runP jobs")
+    // the measured path: one bounded driver read inside searchBatch,
+    // then the same two jobs as the driver-local table at the action
+    assert(planP == 1, s"Parquet queries ran $planP jobs in searchBatch")
+    assert(runP == 2, s"Parquet-sourced search ran $runP jobs")
+  }
+
+  /** The fixture items plus two exact duplicates (score ties) and a
+    * zero vector. */
+  lazy val (tieModel, _) = {
+    val s = spark
+    import s.implicits._
+    val vs = items ++ Seq(items(1), items(3), Array.fill(items(0).length)(0.0))
+    ArrowSpaceBuilder.build(
+      vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("id", "vec"), params)
+  }
+
+  /** String query ids (one repeated), a tied pair, a zero query and a
+    * qvec with a null slot, with qlambda precomputed on the driver (0.5
+    * for the null-slot row). */
+  lazy val tieQueries = {
+    val s = spark
+    import s.implicits._
+    val nf = items(0).length
+    def opt(v: Array[Double]): Seq[Option[Double]] = v.toSeq.map(Some(_))
+    Seq(
+      ("a", opt(items(2).map(_ * 1.05))),
+      ("a", opt(items(0))),
+      ("b", opt(items(1))),
+      ("c", opt(items(3).map(_ * 0.9))),
+      ("zero", opt(Array.fill(nf)(0.0))),
+      ("null-slot", opt(items(4)).updated(3, None)))
+      .map { case (id, v) =>
+        (id, v, if (v.contains(None)) 0.5 else tieModel.prepareQueryLambda(v.flatten.toArray))
+      }
+      .toDF("query_id", "qvec", "qlambda")
+  }
+
+  /** The plain Column form on the SAME model: a cross join, `cosine` +
+    * `lambdaProximity`, null scores dropped, then the per-query window. */
+  def crossJoinOracle(q: org.apache.spark.sql.DataFrame, tau: Double, k: Int) = {
+    import graft.functions.VectorFunctions.{cosine, lambdaProximity}
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(F.col("score").desc, F.col("id").asc)
+    tieModel.items.crossJoin(q)
+      .withColumn("score", F.lit(tau) * cosine(F.col("vec"), F.col("qvec")) +
+        F.lit(1.0 - tau) * lambdaProximity(F.col("lambda"), F.col("qlambda")))
+      .where(F.col("score").isNotNull)
+      .withColumn("rank", F.row_number().over(w))
+      .where(F.col("rank") <= k)
+  }
+
+  def scoreBits(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Int)] =
+    df.select("query_id", "id", "score", "rank").collect().toSeq.map(r => (
+      r.getString(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3))).sorted
+
+  test("batch search: the block kernel is bit-identical to the cross-join oracle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tie-q").toString
+    tieQueries.write.mode("overwrite").parquet(s"$dir/q")
+    val fromParquet = spark.read.parquet(s"$dir/q")
+    // the λ-recompute branch, without the null-slot row (its λ has no
+    // driver-side counterpart)
+    val noLambda = tieQueries.where(F.col("query_id") =!= "null-slot").drop("qlambda")
+    for (tau <- Seq(1.0, 0.8, 0.6); k <- Seq(3, 20)) {
+      val want = scoreBits(crossJoinOracle(tieQueries, tau, k))
+      assert(scoreBits(tieModel.searchBatch(tieQueries, tau, k)) == want, s"tau=$tau k=$k local")
+      assert(scoreBits(tieModel.searchBatch(fromParquet, tau, k)) == want, s"tau=$tau k=$k Parquet")
+      assert(scoreBits(tieModel.searchBatch(noLambda, tau, k)) ==
+        want.filter(_._1 != "null-slot"), s"tau=$tau k=$k recomputed λ")
+      val perQuery = want.groupBy(_._1).map { case (q, rs) => q -> rs.size }
+      // the null-slot query scores nothing; k > items keeps all 8; the
+      // repeated "a" merges its two queries in one window
+      assert(perQuery == (if (k == 3) Map("a" -> 3, "b" -> 3, "c" -> 3, "zero" -> 3)
+        else Map("a" -> 16, "b" -> 8, "c" -> 8, "zero" -> 8)), s"tau=$tau k=$k: $perQuery")
+    }
+    // the duplicate of item 1 ties it exactly and ranks after it
+    val b = scoreBits(tieModel.searchBatch(tieQueries, 1.0, 3)).filter(_._1 == "b").sortBy(_._4)
+    assert(b.take(2).map(r => (r._2, r._4)) == Seq((1L, 1), (5L, 2)) && b(0)._3 == b(1)._3, s"$b")
   }
 
   test("fluent Builder facade matches direct builder output") {

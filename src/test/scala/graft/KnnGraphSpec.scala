@@ -64,4 +64,44 @@ class KnnGraphSpec extends SparkSpec {
     assert(blocked.subsetOf(brute),
       s"cluster-blocked emitted non-brute edges: ${(blocked -- brute).take(5)}")
   }
+
+  /** Brute-force edges against a per-pair scan oracle: every pair's
+    * cosine recomputed from both arrays (both norms per pair), the k
+    * nearest per source kept by (dist, dst) ascending, both directions
+    * merged by the smaller distance. */
+  private def scanOracle(vs: Seq[(Long, Array[Double])], eps: Double, k: Int) = {
+    val directed = vs.flatMap { case (src, va) =>
+      vs.filter(_._1 != src)
+        .map { case (dst, vb) =>
+          (1.0 - math.max(0.0, graft.functions.VectorKernels.cosine(va, vb)), dst) }
+        .filter(_._1 <= eps).sorted.take(k)
+        .map { case (d, dst) => (src, dst, d) }
+    }
+    (directed ++ directed.map { case (a, b, d) => (b, a, d) })
+      .groupBy(e => (e._1, e._2)).map { case ((a, b), es) =>
+        (a, b, java.lang.Double.doubleToRawLongBits(es.map(_._3).min)) }
+      .toSeq.sorted
+  }
+
+  test("brute force is bit-identical to the per-pair scan: eps < 1, distance ties, a zero vector") {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(11)
+    val base = (0 until 8).map(i => (i.toLong, Array.fill(4)(rng.nextGaussian())))
+    // exact duplicates tie on distance (the dst-asc rule picks), and the
+    // zero vector sits at distance 1.0 from everything
+    val raw = base ++ Seq((8L, base(0)._2), (9L, base(0)._2), (10L, base(1)._2),
+      (11L, Array.fill(4)(0.0)))
+    val df = raw.toDF("id", "vec").select(F.col("id"),
+      graft.functions.VectorFunctions.l2normalize(F.col("vec")).as("vnorm"))
+    val vs = df.as[(Long, Array[Double])].collect().toSeq
+    for (eps <- Seq(0.6, 1.0); k <- Seq(2, 20)) {
+      val got = KnnGraph
+        .epsKnnEdges(df, GraphParams(eps = eps, k = k, topk = 5), 12, KnnGraph.Strategy.BruteForce)
+        .collect().toSeq.map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"),
+          java.lang.Double.doubleToRawLongBits(r.getAs[Double]("dist")))).sorted
+      assert(got == scanOracle(vs, eps, k), s"eps=$eps k=$k")
+      assert(got.exists(e => e._1 == 11L) == (eps >= 1.0), s"eps=$eps k=$k zero vector")
+    }
+  }
 }
