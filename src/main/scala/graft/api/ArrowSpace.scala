@@ -113,23 +113,40 @@ final case class ArrowSpaceModel private[api] (
   @transient private lazy val laplacianBc =
     items.sparkSession.sparkContext.broadcast(featureLaplacian)
 
+  /** The items as [[graft.scale.BlockScore.blendTopK]] reads them,
+    * planned once per model rather than once per [[searchBatch]] call. */
+  @transient private lazy val blockItems =
+    items.select(F.col("id").cast("long"), F.col("vec").cast("array<double>"),
+      F.col("lambda").cast("double"))
+
   /** Batch λ-aware search: top-k for MANY queries (query_id, qvec[,
     * qlambda]) under the blended score of [[search]]; query λs are
     * computed per row against the broadcast F×F Laplacian unless given.
+    * Rows are (query_id, id, score, rank), rank 1 the best per
+    * query_id (score desc, then id asc; rows sharing a query_id rank
+    * together).
     *
-    * A query table within [[graft.core.DriverLocal.Default]] is held on
-    * the driver and scored by one [[graft.scale.BlockScore]] scan of the
-    * items with a heap per query (so any `query_id` type works, and rows
-    * sharing one merge in the final per-query window). A table built
+    * A query table whose n × k result rows fit
+    * [[graft.core.DriverLocal.Default]] is held on the driver and
+    * answered by ONE job when this is called: a
+    * [[graft.scale.BlockScore.blendTopK]] scan of the items whose
+    * tasks return a heap per query, merged by query_id on the driver
+    * into a local frame (its `collect()` runs no job). A table built
     * from local rows (e.g. `Seq(...).toDF`) optimizes to a
-    * `LocalRelation`: its rows, λs and input checks are evaluated on the
-    * driver while planning (a bad row fails this call), and no job runs
-    * until the caller's action. Any other table is read once by
-    * [[graft.core.DriverLocal.collect]]. A table over the bound is
-    * joined with the items in a shuffle instead.
+    * `LocalRelation`, whose rows, λs and input checks are evaluated on
+    * the driver while planning; any other table is read first by
+    * [[graft.core.DriverLocal.collect]] (a second job). A table over the
+    * bound is joined with the items in a shuffle and ranked by a
+    * per-query window instead, lazily.
     */
-  def searchBatch(queries: DataFrame, tau: Double, topk: Int = -1): DataFrame = {
+  def searchBatch(queries: DataFrame, tau: Double, topk: Int = -1): DataFrame =
+    searchBatchWithin(queries, tau, topk, graft.core.DriverLocal.Default)
+
+  /** [[searchBatch]] with `bound` for the driver-held branch. */
+  private[graft] def searchBatchWithin(queries: DataFrame, tau: Double, topk: Int,
+      bound: graft.core.DriverLocal.Bound): DataFrame = {
     import graft.core.DriverLocal
+    import graft.scale.BlockScore
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.expressions.Window
@@ -180,25 +197,44 @@ final case class ArrowSpaceModel private[api] (
           .select(F.col("query_id"), F.col("qvec").cast("array<double>").as("qvec"))
           .withColumn("qlambda", lamQ(F.col("qvec")))
     val qidT = q.schema("query_id").dataType
-    // Right: the query rows on the driver. Left: a table over the bound
-    // (rows AND bytes: 100k × 4096-dim vectors is ~3.3 GB) for the
-    // shuffle join — a LocalRelation rebuilt on its optimized plan so
-    // the λ UDF does not run again, any other table materialized once.
-    val held: Either[DataFrame, Seq[InternalRow]] = q.queryExecution.optimizedPlan match {
+    // Right: the query rows on the driver, at most bound.rows / k of
+    // them so the n × k result rows fit the bound (its bytes cap the
+    // table: 100k × 4096-dim vectors is ~3.3 GB). Left: a larger table
+    // for the shuffle join — a LocalRelation rebuilt on its optimized
+    // plan so the λ UDF does not run again, any other table
+    // materialized once.
+    val held = bound.copy(rows = bound.rows / math.max(1, k))
+    val rowsOrJoin: Either[DataFrame, Seq[InternalRow]] = q.queryExecution.optimizedPlan match {
       case local: LocalRelation if !local.isStreaming =>
         val n = local.data.length.toLong
-        if (DriverLocal.Default.fits(n, n * (nF.toLong * 8L + 64L))) Right(local.data)
+        if (held.fits(n, n * (nF.toLong * 8L + 64L))) Right(local.data)
         else Left(Shim.ofPlan(spark, local))
       case _ =>
-        DriverLocal.collect(q, DriverLocal.Default).map(_.toSeq).toRight(q.localCheckpoint())
+        DriverLocal.collect(q, held).map(_.toSeq).toRight(q.localCheckpoint())
     }
-    val top = held match {
+    rowsOrJoin match {
       case Right(rows) =>
-        graft.scale.BlockScore.scan(
-          items.select(F.col("id").cast("long"), F.col("vec").cast("array<double>"),
-            F.col("lambda").cast("double")),
-          graft.scale.BlockScore.Block.of(rows, qidT),
-          graft.scale.BlockScore.Blend(tau, k), Seq("query_id", "id", "score"))
+        val block = BlockScore.Block.of(rows, qidT)
+        val heaps = BlockScore.blendTopK(blockItems, block, tau, k, bound.rows)
+        // rows sharing a query_id merge as the window partitions them
+        // (NaN and -0.0 normalized); each keeps its own key value
+        val key = Shim.groupingKey(qidT)
+        val ranked = rows.indices.filter(heaps(_) != null).groupBy(j => key(rows(j)))
+          .values.toSeq.sortBy(_.head).flatMap { js =>
+            val pairs = js.flatMap { j =>
+              val h = heaps(j)
+              val m = h.drain()
+              (0 until m).map(i => (h.scores(i), h.ties(i), j))
+            }
+            val h = heaps(js.head)
+            pairs.sortWith((a, b) => h.worse(b._1, b._2, a._1, a._2)).take(k).zipWithIndex
+              .map { case ((s, id, j), r) => InternalRow(block.keys(j), id, s, r + 1) }
+          }
+        // ids are LONG: both builders cast them, and load reads them back
+        Shim.localFrame(spark, StructType(Seq(StructField("query_id", qidT),
+          StructField("id", LongType, nullable = false),
+          StructField("score", DoubleType, nullable = false),
+          StructField("rank", IntegerType, nullable = false))), ranked)
       case Left(qRows) =>
         val scored = items
           .join(qRows)
@@ -207,10 +243,12 @@ final case class ArrowSpaceModel private[api] (
             F.lit(tau) * cosine(F.col("vec"), F.col("qvec")) +
               F.lit(1.0 - tau) * lambdaProximity(F.col("lambda"), F.col("qlambda")))
           .select("query_id", "id", "score")
+          // a null score (a null qvec slot) drops the pair, as in the kernel
+          .where(F.col("score").isNotNull)
         // the heap form casts the key to LONG (a string id would null
         // out, a fractional double would merge two queries), so it
         // takes integral keys only; it returns the caller's dtype
-        qidT match {
+        val top = qidT match {
           case LongType | IntegerType | ShortType | ByteType =>
             graft.scale.Skew.heapTopKPerKey(scored, "query_id", "score", "id", k)
               .withColumn("query_id", F.col("query_id").cast(qidT))
@@ -218,12 +256,12 @@ final case class ArrowSpaceModel private[api] (
             graft.scale.Skew.saltedTopKPerKey(
               scored, "query_id", Seq(F.col("score").desc, F.col("id").asc), k)
         }
+        val w = Window.partitionBy("query_id")
+          .orderBy(F.col("score").desc, F.col("id").asc)
+        top.withColumn("id", F.col("id").cast(items.schema("id").dataType))
+          .withColumn("rank", F.row_number().over(w))
+          .where(F.col("rank") <= k)
     }
-    val w = Window.partitionBy("query_id")
-      .orderBy(F.col("score").desc, F.col("id").asc)
-    top.withColumn("id", F.col("id").cast(items.schema("id").dataType))
-      .withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
   }
 
   /** Query-side S10: synthetic λ for one vector, computed driver-side
@@ -405,8 +443,6 @@ object ArrowSpaceBuilder {
       params: GraphParams,
       tauMode: TauMode,
       options: BuildOptions): (ArrowSpaceModel, DataFrame) = {
-    val spark = itemsRaw.sparkSession
-
     // GraphParams.normalise mirrors the reference's flag
     // (NORMALISATION.md): when false, graph-stage distances run on the
     // RAW vectors. For the rectified-cosine metric the two coincide
@@ -487,9 +523,23 @@ object ArrowSpaceBuilder {
     val lap = graft.core.Debug.timed("S9 feature Laplacian")(
       FeatureLaplacian.build(graphItems.select("id", "vec"), params, nFeatures))
 
-    // S10: per-item raw Dirichlet energy + Gini concentration, then τ
-    // via TauMode, then λ = m·E/(E+τ) + (1−m)·G with m = τ/(1+τ)
-    // (LocalLaplacian.synth's formula, inlined column-wise).
+    // S10: λ for every item against the Laplacian.
+    val (withLambda, tau) = synthesizeLambdas(items, lap, tauMode, "S10")
+    items.unpersist()
+
+    val model = ArrowSpaceModel(withLambda, lap, tau, params, nItems, nFeatures)
+    (model, edges)
+  }
+
+  /** S10 (and the energy build's E6): per-item raw Dirichlet energy +
+    * Gini concentration against `lap`, then τ via `tauMode`, then
+    * λ = m·E/(E+τ) + (1−m)·G with m = τ/(1+τ) (LocalLaplacian.synth's
+    * formula, inlined column-wise). Returns the (id, vec, lambda,
+    * e_raw) items, persisted and materialized, and τ; `stage` names
+    * the debug timings. */
+  private[api] def synthesizeLambdas(items: DataFrame, lap: LocalLaplacian,
+      tauMode: TauMode, stage: String): (DataFrame, Double) = {
+    val spark = items.sparkSession
     val bcLap = spark.sparkContext.broadcast(lap)
     import spark.implicits._
     val withEnergy = items
@@ -503,10 +553,11 @@ object ArrowSpaceBuilder {
       }
       .toDF("id", "e_raw", "g_raw")
       // persisted for the resolve+join span: the exact-median
-      // selection runs several actions and the λ join reads it again —
-      // unpersisted, each would re-run the O(F²)-per-item kernel
+      // selection runs several actions (count, sort, zipWithIndex,
+      // first) and the λ join reads it again — unpersisted, each would
+      // re-run the O(F²)-per-item kernel over the whole corpus
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val tau = graft.core.Debug.timed("S10 tau resolve")(
+    val tau = graft.core.Debug.timed(s"$stage tau resolve")(
       tauMode.resolve(withEnergy, "e_raw"))
     val mix = tau / (1.0 + tau)
     val withLambda = items
@@ -521,12 +572,9 @@ object ArrowSpaceBuilder {
           F.lit(1.0 - mix) * F.least(F.lit(1.0), F.greatest(F.lit(0.0), F.col("g_raw"))))
       .select("id", "vec", "lambda", "e_raw")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.core.Debug.timed("S10 lambda materialize")(
+    graft.core.Debug.timed(s"$stage lambda materialize")(
       withLambda.count()) // materialize before unpersisting parents
-    items.unpersist()
     withEnergy.unpersist(blocking = false)
-
-    val model = ArrowSpaceModel(withLambda, lap, tau, params, nItems, nFeatures)
-    (model, edges)
+    (withLambda, tau)
   }
 }

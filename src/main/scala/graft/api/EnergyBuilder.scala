@@ -283,42 +283,10 @@ object EnergyBuilder {
     val lap = localFeatureLaplacianWeighted(
       centroids.map(c => (c.cid, c.vec)),
       energyEdges.map { case (a, b, _, w) => (a, b, w) }, params, nFeatures)
-    val bcLap = spark.sparkContext.broadcast(lap)
-    val withEnergy = items
-      .select($"id".as[Long], $"vec".as[Array[Double]])
-      .mapPartitions { it =>
-        val l = bcLap.value
-        it.map { case (id, v) =>
-          val (e, g) = l.energyAndGini(v)
-          (id, e, g)
-        }
-      }
-      .toDF("id", "e_raw", "g_raw")
-      // persisted for the resolve+join span: the median selection runs
-      // several actions (count, sort, zipWithIndex, first) and the λ
-      // join reads it once more — each would otherwise re-run the
-      // O(F²)-per-item energy kernel over the whole corpus
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tau = graft.core.Debug.timed("E6 tau resolve")(
-      tauMode.resolve(withEnergy, "e_raw"))
-    val mix = tau / (1.0 + tau)
-    val withLambda = items
-      .join(withEnergy, "id")
-      .withColumn(
-        "e_bounded",
-        F.when(F.col("e_raw") + F.lit(tau) === 0.0, 0.0)
-          .otherwise(F.col("e_raw") / (F.col("e_raw") + F.lit(tau))))
-      .withColumn(
-        "lambda",
-        F.lit(mix) * F.col("e_bounded") +
-          F.lit(1.0 - mix) * F.least(F.lit(1.0), F.greatest(F.lit(0.0), F.col("g_raw"))))
-      .select("id", "vec", "lambda", "e_raw")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.core.Debug.timed("E6 lambda re-synthesis")(withLambda.count())
+    val (withLambda, tau) = ArrowSpaceBuilder.synthesizeLambdas(items, lap, tauMode, "E6")
     items.unpersist(); neighborEdges.unpersist()
     edgesByDst.unpersist(blocking = false); xRdd.unpersist(blocking = false)
     withDist.unpersist(); assigned.unpersist()
-    withEnergy.unpersist(blocking = false)
 
     val edgesDf = spark.createDataFrame(
       // dist carries the real rectified-cosine centroid distance the

@@ -32,8 +32,10 @@ private[graft] object DriverLocal {
   }
 
   /** The one bound: `ArrowSpaceModel.searchBatch`'s driver-held query
-    * table and what a streaming gate's driver-decided micro-batch
-    * holds on the driver (the batch, and each state scan's result). */
+    * table (its n × k result rows, and the heap pairs one merge level
+    * sends the driver) and what a streaming gate's driver-decided
+    * micro-batch holds on the driver (the batch, and each state scan's
+    * result). */
   val Default: Bound = Bound(rows = 100000L, bytes = 128L * 1024 * 1024)
 
   /** Most candidate pairs a driver-side pair stage ([[pairs]])

@@ -318,8 +318,8 @@ private[graft] object SegmentTiers {
     * folds) rewrites only the [[select]] subset, explicit maintenance
     * calls fold everything eligible (one merged segment afterwards).
     * Every dir must hold seg leaves; the fold set comes from the first
-    * dir's listing. Returns the first dir's file count afterwards
-    * (0 = nothing to fold). */
+    * dir's listing. Returns the first dir's data-file count afterwards
+    * from a driver listing, [[dataFileCount]] (0 = nothing to fold). */
   def fold(spark: SparkSession, who: String, marker: Path,
       dirs: Seq[FoldDir], maxSegExclusive: Long, tiered: Boolean): Int = {
     val fs = dirs.head.live.getFileSystem(spark.sessionState.newHadoopConf())
@@ -348,8 +348,20 @@ private[graft] object SegmentTiers {
     val folded = foldIds.toSet
     swap(fs, who, Some(marker),
       dirs.map(d => Move(d.live, d.old, Some(d.tmp), id => !folded(id))))
-    spark.read.parquet(dirs.head.live.toString).inputFiles.length
+    dataFileCount(fs, dirs.head.live)
   }
+
+  /** The files a Parquet read of `dir` lists, counted on the driver:
+    * every file below it with no path component, below `dir`, that
+    * Spark's file index hides (a `_` name without `=`, such as
+    * `_SUCCESS`, or a `.` name, such as a checksum). */
+  def dataFileCount(fs: FileSystem, dir: Path): Int =
+    fs.listStatus(dir).iterator.map { st =>
+      val name = st.getPath.getName
+      if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) 0
+      else if (st.isDirectory) dataFileCount(fs, st.getPath)
+      else 1
+    }.sum
 
   /** The one staged anti-join takedown over `path`'s `dirs` (name,
     * partition columns): each readable dir — seg leaves for a

@@ -345,9 +345,8 @@ private[graft] object MetricQueries {
       // the ranked list is ≤ topk rows by construction — rank it on
       // the driver instead of a partition-less window (whose constant
       // partition key would be folded away, leaving a single-task
-      // WindowExec that re-warns on every re-execution of the plan;
-      // at many-queries scale the per-query window in searchBatch is
-      // the distributed shape)
+      // WindowExec that re-warns on every re-execution of the plan),
+      // as searchBatch ranks its driver-held queries' merged heaps
       val spark2 = s
       import spark2.implicits._
       val retrieved = m.search(qv, tau = 0.62)

@@ -26,7 +26,7 @@ object BlockScore {
     * value of `keyType`; `vecs(r)`, a primitive copy, null when the
     * array, one of its slots or the row's λ is null (the row then
     * scores no pair); `norms(r)` = Σ v²; `lambdas(r)`, NaN when absent. */
-  final class Block(val keys: Array[Any], val keyType: DataType,
+  final class Block(val keys: Array[Any],
       val vecs: Array[Array[Double]], val lambdas: Array[Double]) extends Serializable {
     val norms: Array[Double] =
       vecs.map(v => if (v == null) 0.0 else VectorKernels.normSq(v))
@@ -40,7 +40,7 @@ object BlockScore {
       * double]). */
     def of(rows: Seq[InternalRow], keyType: DataType = LongType): Block = {
       val (vecs, lambdas) = rows.map(decode).unzip
-      new Block(rows.map(_.get(0, keyType)).toArray, keyType, vecs.toArray, lambdas.toArray)
+      new Block(rows.map(_.get(0, keyType)).toArray, vecs.toArray, lambdas.toArray)
     }
 
     /** An (id: long, vec) frame read onto the driver by one job. */
@@ -55,6 +55,14 @@ object BlockScore {
       if (withLambda) r.getDouble(2) else Double.NaN)
   }
 
+  /** A large side's rows decoded once: (id, vec, Σ v², λ), rows that
+    * score no pair dropped. */
+  private def decoded(it: Iterator[InternalRow]): Iterator[(Long, Array[Double], Double, Double)] =
+    it.flatMap { r =>
+      val (v, lam) = decode(r)
+      if (v == null) None else Some((r.getLong(0), v, VectorKernels.normSq(v), lam))
+    }
+
   /** cos(a, b) from hoisted squared norms, bit-identical to
     * [[VectorKernels.cosine]]. Vectors of unequal length take that
     * kernel itself, whose norms cover the common prefix only. */
@@ -63,16 +71,79 @@ object BlockScore {
     else if (na == 0.0 || nb == 0.0) 0.0
     else VectorKernels.dot(a, b) / math.sqrt(na * nb)
 
-  /** How a pair scores and which pairs a scan emits, as (key, tie,
+  /** λ-aware search: the k large rows of highest τ·cos + (1−τ)·1/(1+
+    * |λ_large − λ_small|) for every small row, as one heap per small
+    * row (null when no pair scored — a null vector, slot or λ), kept by
+    * position, so rows sharing a key keep a heap each. ONE job: each
+    * task returns its partition's heaps and `treeReduce` merges them,
+    * deep enough that at most `maxPairs` pairs reach the driver in one
+    * level ([[treeDepth]]; a plain reduce at depth 1). The small side's
+    * broadcast is released when the job ends. Heaps break score ties
+    * by large id ascending, so every heap's drain is the (score desc,
+    * id asc) order. */
+  def blendTopK(large: DataFrame, small: Block, tau: Double, k: Int,
+      maxPairs: Long): Array[TopKHeap] = {
+    val rdd = large.queryExecution.toRdd
+    val n = small.vecs.length
+    val bc = large.sparkSession.sparkContext.broadcast(small)
+    try {
+      val perTask = rdd.mapPartitions { it =>
+        val b = bc.value
+        val heaps = new Array[TopKHeap](n)
+        decoded(it).foreach { case (id, v, nv, lam) =>
+          var j = 0
+          while (j < n) {
+            if (b.vecs(j) != null) {
+              val s = tau * cosine(v, nv, b.vecs(j), b.norms(j)) +
+                (1.0 - tau) * (1.0 / (1.0 + math.abs(lam - b.lambdas(j))))
+              if (heaps(j) == null) heaps(j) = new TopKHeap(k, desc = true)
+              heaps(j).add(s, id)
+            }
+            j += 1
+          }
+        }
+        Iterator.single(heaps)
+      }
+      val merge = (a: Array[TopKHeap], b: Array[TopKHeap]) => {
+        var j = 0
+        while (j < n) {
+          if (a(j) == null) a(j) = b(j) else if (b(j) != null) a(j).merge(b(j))
+          j += 1
+        }
+        a
+      }
+      // depth 1 is a plain reduce, without treeAggregate's wrappers
+      // (~16 ms of driver time per call on 4 partitions)
+      treeDepth(rdd.getNumPartitions, n.toLong * k, maxPairs) match {
+        case 1 => perTask.reduce(merge)
+        case depth => perTask.treeReduce(merge, depth)
+      }
+    } finally bc.destroy()
+  }
+
+  /** How many partial states `RDD.treeReduce(_, depth)` over `parts`
+    * partitions sends to the driver (Spark's `treeAggregate` merges a
+    * level in executors while that cuts the count by more than the
+    * level adds). */
+  private def statesAtDriver(parts: Int, depth: Int): Int = {
+    val scale = math.max(math.ceil(math.pow(parts, 1.0 / depth)).toInt, 2)
+    var n = parts
+    while (n > scale + math.ceil(n.toDouble / scale)) n /= scale
+    n
+  }
+
+  /** The least `treeReduce` depth at which the states reaching the
+    * driver, `statePairs` pairs each, hold at most `maxPairs` pairs;
+    * the deepest useful one when none does. */
+  private[graft] def treeDepth(parts: Int, statePairs: Long, maxPairs: Long): Int = {
+    val deepest = math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, parts - 1)))
+    (1 until deepest).find(d => statesAtDriver(parts, d) * statePairs <= maxPairs)
+      .getOrElse(deepest)
+  }
+
+  /** How a pair scores and which pairs a [[scan]] emits, as (key, tie,
     * score) rows. Heaps break score ties by the tie id ascending. */
   sealed trait Rule extends Serializable
-
-  /** λ-aware search: τ·cos + (1−τ)·1/(1+|λ_large − λ_small|), the k
-    * highest per SMALL row (one heap per row, so rows sharing a key keep
-    * a heap each), emitted as (small key, large id, score) once the
-    * partition is scanned: at most partitions × small rows × k rows,
-    * for the caller's per-key window. */
-  final case class Blend(tau: Double, k: Int) extends Rule
 
   /** Graph edges: rectified distance 1 − max(0, cos) ≤ eps, the k
     * nearest per LARGE row, pairs of one id skipped, emitted as (large
@@ -92,31 +163,10 @@ object BlockScore {
     val out = large.queryExecution.toRdd.mapPartitions { it =>
       val b = bc.value
       val n = b.vecs.length
-      val rows = it.flatMap { r =>
-        val (v, lam) = decode(r)
-        if (v == null) None else Some((r.getLong(0), v, VectorKernels.normSq(v), lam))
-      }
+      val ids = b.ids
+      val rows = decoded(it)
       rule match {
-        case Blend(tau, k) =>
-          val heaps = new Array[TopKHeap](n)
-          rows.foreach { case (id, v, nv, lam) =>
-            var j = 0
-            while (j < n) {
-              if (b.vecs(j) != null) {
-                val s = tau * cosine(v, nv, b.vecs(j), b.norms(j)) +
-                  (1.0 - tau) * (1.0 / (1.0 + math.abs(lam - b.lambdas(j))))
-                if (heaps(j) == null) heaps(j) = new TopKHeap(k, desc = true)
-                heaps(j).add(s, id)
-              }
-              j += 1
-            }
-          }
-          (0 until n).iterator.filter(heaps(_) != null).flatMap { j =>
-            Iterator.tabulate(heaps(j).n)(i =>
-              InternalRow(b.keys(j), heaps(j).ties(i), heaps(j).scores(i)))
-          }
         case Within(eps, k) =>
-          val ids = b.ids
           rows.flatMap { case (id, v, nv, _) =>
             val h = new TopKHeap(k, desc = false)
             var j = 0
@@ -130,7 +180,6 @@ object BlockScore {
             Iterator.tabulate(h.n)(i => InternalRow(id, h.ties(i), h.scores(i)))
           }
         case Above(minCos) =>
-          val ids = b.ids
           rows.flatMap { case (id, v, nv, _) =>
             val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
             var j = 0
@@ -145,11 +194,7 @@ object BlockScore {
           }
       }
     }
-    val keyType = rule match {
-      case Blend(_, _) => small.keyType
-      case _ => LongType
-    }
-    Shim.ofRows(spark, out, StructType(Seq(StructField(names(0), keyType),
+    Shim.ofRows(spark, out, StructType(Seq(StructField(names(0), LongType),
       StructField(names(1), LongType, nullable = false),
       StructField(names(2), DoubleType, nullable = false))))
   }

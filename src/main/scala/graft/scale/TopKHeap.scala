@@ -5,9 +5,11 @@ package graft.scale
   * "worst kept at the root" admits or rejects a new pair in O(log k),
   * so a partition's pass is O(n log k) with NO sort and no buffering
   * beyond k pairs — the map-side combine state of
-  * [[Skew.heapTopKPerKey]].
+  * [[Skew.heapTopKPerKey]] and a task result of
+  * [[BlockScore.blendTopK]], whose heaps [[merge]] exactly: the k best
+  * of two heaps' pairs are the k best of all the pairs they saw.
   */
-final class TopKHeap(val k: Int, val desc: Boolean) {
+final class TopKHeap(val k: Int, val desc: Boolean) extends Serializable {
   var n: Int = 0
   val scores: Array[Double] = new Array[Double](math.max(1, k))
   val ties: Array[Long] = new Array[Long](math.max(1, k))
@@ -24,9 +26,15 @@ final class TopKHeap(val k: Int, val desc: Boolean) {
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
   /** Strict "a is worse than b" under (score desc|asc, tie asc). */
-  @inline private def worse(sa: Double, ta: Long, sb: Double, tb: Long): Boolean = {
+  @inline def worse(sa: Double, ta: Long, sb: Double, tb: Long): Boolean = {
     val c = cmpScore(sa, sb)
     if (c != 0) { if (desc) c < 0 else c > 0 } else ta > tb
+  }
+
+  private def swap(i: Int, j: Int): Unit = {
+    val s = scores(i); val t = ties(i)
+    scores(i) = scores(j); ties(i) = ties(j)
+    scores(j) = s; ties(j) = t
   }
 
   private def siftDown(i0: Int): Unit = {
@@ -39,12 +47,7 @@ final class TopKHeap(val k: Int, val desc: Boolean) {
       if (l < n && worse(scores(l), ties(l), scores(w), ties(w))) w = l
       if (r < n && worse(scores(r), ties(r), scores(w), ties(w))) w = r
       if (w == i) done = true
-      else {
-        val s = scores(i); val t = ties(i)
-        scores(i) = scores(w); ties(i) = ties(w)
-        scores(w) = s; ties(w) = t
-        i = w
-      }
+      else { swap(i, w); i = w }
     }
   }
 
@@ -53,12 +56,8 @@ final class TopKHeap(val k: Int, val desc: Boolean) {
     var done = false
     while (!done && i > 0) {
       val p = (i - 1) / 2
-      if (worse(scores(i), ties(i), scores(p), ties(p))) {
-        val s = scores(i); val t = ties(i)
-        scores(i) = scores(p); ties(i) = ties(p)
-        scores(p) = s; ties(p) = t
-        i = p
-      } else done = true
+      if (worse(scores(i), ties(i), scores(p), ties(p))) { swap(i, p); i = p }
+      else done = true
     }
   }
 
@@ -72,4 +71,21 @@ final class TopKHeap(val k: Int, val desc: Boolean) {
         siftDown(0)
       }
     }
+
+  /** Adds every pair `o` holds. */
+  def merge(o: TopKHeap): this.type = {
+    var i = 0
+    while (i < o.n) { add(o.scores(i), o.ties(i)); i += 1 }
+    this
+  }
+
+  /** Empties the heap, leaving its pairs in `scores`/`ties` best first
+    * (an in-place heapsort under the heap's own order), and returns how
+    * many there are. */
+  def drain(): Int = {
+    val m = n
+    while (n > 1) { n -= 1; swap(0, n); siftDown(0) }
+    n = 0
+    m
+  }
 }

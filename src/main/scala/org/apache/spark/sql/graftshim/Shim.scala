@@ -3,11 +3,12 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridge into `private[sql]` Spark internals: wrap a raw Catalyst
   * [[Expression]] as a user-facing [[Column]] and register native
@@ -39,6 +40,16 @@ object Shim {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** A row's column 0 of type `t` as Spark groups it in a window,
+    * join or aggregate key, where NaN and -0.0 are normalized
+    * (`NormalizeFloatingNumbers`): two rows group together exactly when
+    * their keys are equal. */
+  def groupingKey(t: DataType): InternalRow => UnsafeRow = {
+    val proj = UnsafeProjection.create(
+      Seq(NormalizeFloatingNumbers.normalize(BoundReference(0, t, nullable = true))))
+    r => proj(r).copy()
+  }
 
   /** Register a native function builder under `name` for SQL use. */
   def registerFunction(

@@ -198,16 +198,16 @@ class ArrowSpaceSpec extends SparkSpec {
     batchRows(localQueries, 0.8) // first-use work stays out of the counts
     val (outL, planL) = JobCount(sc)(model.searchBatch(localQueries, 0.8, 3))
     val (_, runL) = JobCount(sc)(outL.collect())
-    // the action runs the kernel's scan (the shuffle map stage of the
-    // per-query window) and the window itself
-    assert(planL == 0, s"driver-local queries ran $planL jobs before the action")
-    assert(runL == 2, s"driver-local search ran $runL jobs")
+    // the call runs the kernel's one job and returns a local frame,
+    // whose collect runs none
+    assert(planL == 1, s"driver-local queries ran $planL jobs in searchBatch")
+    assert(runL == 0, s"collecting a driver-local search ran $runL jobs")
     val (outP, planP) = JobCount(sc)(model.searchBatch(parquetQueries, 0.8, 3))
     val (_, runP) = JobCount(sc)(outP.collect())
-    // the measured path: one bounded driver read inside searchBatch,
-    // then the same two jobs as the driver-local table at the action
-    assert(planP == 1, s"Parquet queries ran $planP jobs in searchBatch")
-    assert(runP == 2, s"Parquet-sourced search ran $runP jobs")
+    // the measured path: one bounded driver read, then the same kernel
+    // job as the driver-local table
+    assert(planP == 2, s"Parquet queries ran $planP jobs in searchBatch")
+    assert(runP == 0, s"collecting a Parquet-sourced search ran $runP jobs")
   }
 
   /** The fixture items plus two exact duplicates (score ties) and a
@@ -255,12 +255,40 @@ class ArrowSpaceSpec extends SparkSpec {
       .where(F.col("rank") <= k)
   }
 
+  /** (query_id, id, score bits, rank) rows, sorted; a double query_id
+    * as its bits, so 0.0, -0.0 and NaN compare exactly. */
   def scoreBits(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Int)] =
     df.select("query_id", "id", "score", "rank").collect().toSeq.map(r => (
-      r.getString(0), r.getLong(1),
+      r.get(0) match {
+        case d: Double => s"d${java.lang.Double.doubleToRawLongBits(d)}"
+        case key => String.valueOf(key)
+      }, r.getLong(1),
       java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3))).sorted
 
+  /** Double query ids 0.0, -0.0, NaN (twice) and 1.5, each with its own
+    * vector, qlambda precomputed on the driver. */
+  lazy val doubleKeyQueries = {
+    val s = spark
+    import s.implicits._
+    Seq(0.0 -> items(2).map(_ * 1.05), -0.0 -> items(0), Double.NaN -> items(1),
+      Double.NaN -> items(3).map(_ * 0.9), 1.5 -> items(4))
+      .map { case (id, v) => (id, v, tieModel.prepareQueryLambda(v)) }
+      .toDF("query_id", "qvec", "qlambda")
+  }
+
+  /** Under this bound the six tie or five double-keyed queries' n × k
+    * result rows never fit (k = 3 holds 4 queries), so searchBatch
+    * takes the shuffle join. */
+  val overBound = graft.core.DriverLocal.Default.copy(rows = 14L)
+
+  def hasWindow(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.isDefined
+
   test("batch search: the block kernel is bit-identical to the cross-join oracle") {
+    import graft.core.DriverLocal
+    import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft-tie-q").toString
     tieQueries.write.mode("overwrite").parquet(s"$dir/q")
     val fromParquet = spark.read.parquet(s"$dir/q")
@@ -282,6 +310,55 @@ class ArrowSpaceSpec extends SparkSpec {
     // the duplicate of item 1 ties it exactly and ranks after it
     val b = scoreBits(tieModel.searchBatch(tieQueries, 1.0, 3)).filter(_._1 == "b").sortBy(_._4)
     assert(b.take(2).map(r => (r._2, r._4)) == Seq((1L, 1), (5L, 2)) && b(0)._3 == b(1)._3, s"$b")
+
+    doubleKeyQueries.write.mode("overwrite").parquet(s"$dir/d")
+    val dblParquet = spark.read.parquet(s"$dir/d")
+    val zero = s"d${java.lang.Double.doubleToRawLongBits(0.0)}"
+    val negZero = s"d${java.lang.Double.doubleToRawLongBits(-0.0)}"
+    val nan = s"d${java.lang.Double.doubleToRawLongBits(Double.NaN)}"
+    for (tau <- Seq(1.0, 0.6); k <- Seq(3, 20)) {
+      // 0.0 and -0.0 rank together, as do the two NaNs; each row keeps
+      // its own key
+      val want = scoreBits(crossJoinOracle(doubleKeyQueries, tau, k))
+      assert(scoreBits(tieModel.searchBatch(doubleKeyQueries, tau, k)) == want, s"tau=$tau k=$k local")
+      assert(scoreBits(tieModel.searchBatch(dblParquet, tau, k)) == want, s"tau=$tau k=$k Parquet")
+      def ranked(keys: String*) = want.filter(r => keys.contains(r._1)).map(_._4).sorted
+      assert(ranked(zero, negZero) == (1 to math.min(k, 16)) && ranked(nan) == (1 to math.min(k, 16)),
+        s"tau=$tau k=$k: $want")
+      if (k == 20) assert(want.exists(_._1 == negZero) && want.exists(_._1 == zero))
+      // a heap state over the bound takes the shuffle join and its window
+      val tieWant = scoreBits(crossJoinOracle(tieQueries, tau, k))
+      for ((q, name) <- Seq(tieQueries -> "local", fromParquet -> "Parquet",
+          doubleKeyQueries -> "double")) {
+        val out = tieModel.searchBatchWithin(q, tau, k, overBound)
+        assert(hasWindow(out), s"tau=$tau k=$k $name: not the shuffle join")
+        assert(scoreBits(out) == (if (name == "double") want else tieWant), s"tau=$tau k=$k $name over bound")
+      }
+      assert(!hasWindow(tieModel.searchBatch(tieQueries, tau, k)))
+    }
+
+    // a merge deeper than one level (16 partitions, at most 2 states'
+    // pairs at the driver) drains the same heaps as a plain reduce
+    import graft.scale.BlockScore
+    val large = tieModel.items.select("id", "vec", "lambda")
+    val block = BlockScore.Block.of(DriverLocal.folded(tieQueries), StringType)
+    def drained(df: org.apache.spark.sql.DataFrame, maxPairs: Long) =
+      BlockScore.blendTopK(df, block, 0.8, 3, maxPairs).toSeq.map(h =>
+        Option(h).map { h => val m = h.drain(); (h.scores.take(m).toSeq, h.ties.take(m).toSeq) })
+    assert(BlockScore.treeDepth(16, 6L * 3, 2L * 6 * 3) > 1)
+    assert(drained(large.repartition(16), 2L * 6 * 3) == drained(large, Long.MaxValue))
+
+    // the returned schema (names, types, nullability) is the window's
+    def schema(key: DataType) = StructType(Seq(StructField("query_id", key),
+      StructField("id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false)))
+    assert(model.searchBatch(localQueries, 0.8, 3).schema == schema(LongType))
+    assert(model.searchBatch(parquetQueries, 0.8, 3).schema == schema(LongType))
+    assert(tieModel.searchBatch(tieQueries, 0.8, 3).schema == schema(StringType))
+    assert(tieModel.searchBatch(doubleKeyQueries, 0.8, 3).schema == schema(DoubleType))
+    assert(tieModel.searchBatch(localQueries.withColumn("query_id", F.col("query_id").cast("int")),
+      0.8, 3).schema == schema(IntegerType))
   }
 
   test("fluent Builder facade matches direct builder output") {

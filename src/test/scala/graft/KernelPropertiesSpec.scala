@@ -225,6 +225,17 @@ class KernelPropertiesSpec extends AnyFunSuite {
         .map { case (s, t) => (java.lang.Double.doubleToLongBits(
           if (s == 0.0) 0.0 else s), t) }.toSeq
       assert(kept == want, s"trial $trial (n=$n k=$k desc=$desc)")
+      // two heaps over a split of the pairs merge to the same top-k,
+      // and the drain lists it in the sort's order
+      val (l, r) = pairs.partition(_ => rng.nextBoolean())
+      val merged = new graft.scale.TopKHeap(k, desc)
+      val other = new graft.scale.TopKHeap(k, desc)
+      l.foreach { case (s, t) => merged.add(s, t) }
+      r.foreach { case (s, t) => other.add(s, t) }
+      val m = merged.merge(other).drain()
+      val drained = (0 until m).map { i => val s = merged.scores(i)
+        (java.lang.Double.doubleToLongBits(if (s == 0.0) 0.0 else s), merged.ties(i)) }
+      assert(drained == want && merged.n == 0, s"trial $trial merge/drain")
     }
   }
 }

@@ -456,6 +456,8 @@ class StreamingSpec extends SparkSpec {
     val filesAfter = Similarity.ivfCompactAppends(s, dir)
     assert(filesAfter > 0 && filesAfter < filesBefore,
       s"compaction did not shrink the segment files: $filesBefore -> $filesAfter")
+    // the fold's driver listing counts what a Parquet read lists
+    assert(filesAfter == s.read.parquet(s"$dir/applists").inputFiles.length)
     assert(loadedRows() == before, "compaction changed the served rows")
     // appends AFTER a compaction coexist with the merged segment
     StreamingOps.ivfAppendSegment(assigned(Seq((300L, vec(2)))), dir, 5L)
