@@ -171,31 +171,25 @@ final case class ArrowSpaceModel private[api] (
     // through to the min-length cosine kernel — or rank k null-scored
     // rows NULLS-LAST — and silently return garbage
     // (size(null) = -1 trips the length check too)
-    def checkedQvec: org.apache.spark.sql.Column =
-      F.when(F.size(F.col("qvec")) === nF, F.col("qvec"))
-        .otherwise(F.raise_error(F.concat(
-          F.lit("query length "), F.size(F.col("qvec")).cast("string"),
-          F.lit(s" must match nfeatures $nF"))))
-    def checkedQlambda: org.apache.spark.sql.Column =
-      F.when(F.col("qlambda").isNotNull && !F.isnan(F.col("qlambda")), F.col("qlambda"))
-        .otherwise(F.raise_error(F.concat(
-          F.lit("precomputed qlambda is null/NaN for query_id "),
-          F.col("query_id").cast("string"))))
+    val qvec = F.col("qvec").cast("array<double>")
+    val qlambda = F.col("qlambda").cast("double")
+    // honor a caller-precomputed qlambda column (the documented
+    // optional third column); recompute only when absent. One select:
+    // every further withColumn would analyze the whole plan again
     val q =
-      // honor a caller-precomputed qlambda column (the documented
-      // optional third column); recompute only when absent
       if (queries.columns.contains("qlambda"))
-        queries
-          .select(
-            F.col("query_id"),
-            F.col("qvec").cast("array<double>").as("qvec"),
-            F.col("qlambda").cast("double").as("qlambda"))
-          .withColumn("qvec", checkedQvec)
-          .withColumn("qlambda", checkedQlambda)
+        queries.select(
+          F.col("query_id"),
+          F.when(F.size(qvec) === nF, qvec)
+            .otherwise(F.raise_error(F.concat(
+              F.lit("query length "), F.size(qvec).cast("string"),
+              F.lit(s" must match nfeatures $nF")))).as("qvec"),
+          F.when(qlambda.isNotNull && !F.isnan(qlambda), qlambda)
+            .otherwise(F.raise_error(F.concat(
+              F.lit("precomputed qlambda is null/NaN for query_id "),
+              F.col("query_id").cast("string")))).as("qlambda"))
       else
-        queries
-          .select(F.col("query_id"), F.col("qvec").cast("array<double>").as("qvec"))
-          .withColumn("qlambda", lamQ(F.col("qvec")))
+        queries.select(F.col("query_id"), qvec.as("qvec"), lamQ(qvec).as("qlambda"))
     val qidT = q.schema("query_id").dataType
     // Right: the query rows on the driver, at most bound.rows / k of
     // them so the n × k result rows fit the bound (its bytes cap the

@@ -58,52 +58,4 @@ object EnergySweep {
     standard.items.unpersist()
     rows.toDF("eta", "steps", "recall_at_k", "mrr", "ndcg_at_k")
   }
-
-  /** The reference's eps-sweep harness (tests/test_5_msmarco_eps_sweep
-    * .py:19-25,153-210): rebuild the STANDARD index for each eps in
-    * `epsValues` (the sweep is ×0.5/×1.0/×1.5 around a base in the
-    * reference), score taumode search at `tau` against the base
-    * build's pure-cosine top-`truthK`, and report one row per eps:
-    * (eps, n_edges, recall_at_k, mrr, ndcg_at_k) — edge count included
-    * because eps directly controls graph density.
-    */
-  def epsGrid(
-      items: DataFrame,
-      base: GraphParams,
-      epsValues: Seq[Double],
-      queryIds: Seq[Long],
-      tau: Double = 0.62,
-      truthK: Int = 10): DataFrame = {
-    val spark = items.sparkSession
-    import spark.implicits._
-    val (standard, standardEdges) = ArrowSpaceBuilder.build(items, base)
-    standardEdges.unpersist(blocking = false)
-    val queries: Seq[(Long, Array[Double])] = queryIds.map { qid =>
-      qid -> items.where(F.col("id") === qid)
-        .select(F.col("vec").cast("array<double>")).head.getSeq[Double](0).toArray
-    }
-    val relevant = queries.map { case (qid, qv) =>
-      standard.search(qv, tau = 1.0, topk = truthK)
-        .select(F.lit(qid).as("query_id"), F.col("id").as("doc_id"))
-    }.reduce(_ unionByName _).persist()
-    relevant.count()
-
-    val rows = epsValues.map { eps =>
-      val (m, edges) = ArrowSpaceBuilder.build(items, base.copy(eps = eps))
-      val nEdges = edges.count()
-      val retrieved = queries.map { case (qid, qv) =>
-        m.search(qv, tau = tau, topk = truthK)
-          .select(F.lit(qid).as("query_id"), F.col("id").as("doc_id"), F.col("score"))
-      }.reduce(_ unionByName _)
-      val ranked = RankingMetrics.withRanks(retrieved)
-      val recall = RankingMetrics.recallAtK(ranked, relevant, truthK).head.getDouble(0)
-      val mrr = RankingMetrics.mrr(ranked, relevant).head.getDouble(0)
-      val ndcg = RankingMetrics.ndcgAtK(ranked, relevant, truthK).head.getDouble(0)
-      m.items.unpersist(); edges.unpersist() // grid point fully consumed
-      (eps, nEdges, recall, mrr, ndcg)
-    }
-    relevant.unpersist()
-    standard.items.unpersist()
-    rows.toDF("eps", "n_edges", "recall_at_k", "mrr", "ndcg_at_k")
-  }
 }

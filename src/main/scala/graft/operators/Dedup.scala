@@ -195,7 +195,7 @@ object Dedup {
     * 160× bench), and the moment it stops fitting execution memory
     * the join goes sort-merge-with-spill: the candidates stage
     * measured 13.3 s → 150.6 s at 2× docs WITH exactly-linear
-    * collision mass (742k pairs, `minhashBandOccupancy`). The slim
+    * collision mass (742k pairs by band occupancy). The slim
     * form shuffles corpus × bands × 24 B band rows plus the
     * collision PAIRS (16 B each — the occupancy-measured linear
     * term), and the sig frames join once per side at corpus size,
@@ -275,57 +275,6 @@ object Dedup {
     * (SURVEY.md §7.4). Output: (doc_a, doc_b, est_jaccard, jaccard)
     * sorted by exact Jaccard descending.
     */
-  /** One candidate (bands, rows) layout of an n-hash MinHash scheme
-    * with its S-curve statistics: detection probability for a pair at
-    * jaccard j is 1 − (1 − j^rows)^bands; `curveThreshold`
-    * (1/bands)^(1/rows) is the inflection where detection ≈ 1−1/e.
-    */
-  final case class BandingPlan(
-      numHashes: Int, bands: Int, rows: Int,
-      curveThreshold: Double, detectAtTarget: Double) {
-    def detectAt(j: Double): Double =
-      1.0 - math.pow(1.0 - math.pow(j, rows), bands)
-    def render: String = {
-      val curve = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
-        .map(j => f"p(detect|j=$j%.1f)=${detectAt(j)}%.4f").mkString(" ")
-      f"""# suggested banding (graft)
-         |num_hashes=$numHashes bands=$bands rows=$rows curve_threshold=$curveThreshold%.4f
-         |$curve""".stripMargin
-    }
-  }
-
-  /** Banding diagnostic mirroring [[graft.api.EpsSuggest]]'s role for
-    * the dedup side: a mis-banded MinHash scheme either silently MISSES
-    * near-dups (too few bands: the S-curve inflection sits above the
-    * target jaccard) or floods the verify join with candidates (too
-    * many bands: every low-similarity pair collides somewhere). This
-    * picks, among all (bands, rows) with bands·rows = numHashes, the
-    * layout with the FEWEST bands — fewest band keys, fewest candidate
-    * rows through the join — whose detection probability at
-    * `targetJaccard` still meets `minDetect`; if none qualifies it
-    * returns the max-detection layout (bands = numHashes) so the
-    * caller sees the scheme is underpowered rather than an exception.
-    * Pure driver-side arithmetic, no jobs. The engine's own 16×4
-    * default over 64 hashes is exactly suggestBanding(64, 0.8) —
-    * spec-asserted so the default can't silently drift from its
-    * rationale (miss ≤ 2.2e-4 at j ≥ 0.8).
-    */
-  def suggestBanding(
-      numHashes: Int, targetJaccard: Double,
-      minDetect: Double = 0.999): BandingPlan = {
-    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
-    require(targetJaccard > 0 && targetJaccard < 1,
-      s"targetJaccard must be in (0, 1), got $targetJaccard")
-    val layouts = (1 to numHashes).filter(numHashes % _ == 0).map { b =>
-      val r = numHashes / b
-      BandingPlan(numHashes, b, r,
-        math.pow(1.0 / b, 1.0 / r),
-        1.0 - math.pow(1.0 - math.pow(targetJaccard, r), b))
-    }
-    layouts.find(_.detectAtTarget >= minDetect)
-      .getOrElse(layouts.maxBy(_.detectAtTarget))
-  }
-
   def minhashNearDupPairs(
       docs: DataFrame,
       shingleLen: Int = 3,
@@ -1571,16 +1520,15 @@ object Dedup {
     materializeAndRelease(pairs, sh)
   }
 
-  /** Shared top-N bucket-occupancy core of [[minhashBandOccupancy]] and
-    * [[gramOccupancy]] (VERDICT r8 #6): given the (key → doc) rows a
-    * blocking join would bucket by, report the hottest buckets and the
-    * total candidate-pair mass Σ C(n, 2) they imply. Singleton buckets
-    * emit no pairs and are dropped BEFORE the ranking (they are the
-    * overwhelming majority and carry zero join cost). `keyCols` only
-    * orders ties deterministically; the output carries sizes, not
-    * keys, so the same schema serves hash-keyed (band, bh) buckets and
-    * text-keyed gram buckets. One partial-agg shuffle on the slim
-    * key projection + a window over the collected top N.
+  /** Top-N bucket-occupancy core of [[gramOccupancy]] (VERDICT r8
+    * #6): given the (key → doc) rows a blocking join would bucket by,
+    * report the hottest buckets and the total candidate-pair mass
+    * Σ C(n, 2) they imply. Singleton buckets emit no pairs and are
+    * dropped BEFORE the ranking (they are the overwhelming majority
+    * and carry zero join cost). `keyCols` only orders ties
+    * deterministically; the output carries sizes, not keys. One
+    * partial-agg shuffle on the slim key projection + a window over
+    * the collected top N.
     */
   private def bucketOccupancy(
       keyedDocs: DataFrame, keyCols: Seq[String], topN: Int): DataFrame = {
@@ -1608,35 +1556,12 @@ object Dedup {
       .orderBy("rnk")
   }
 
-  /** Bucket-occupancy diagnostic for the MinHash band join — the
-    * mechanism behind the second-order superlinearity the scale bench
-    * measures on [[minhashNearDupPairs]] (candidate mass grows with
-    * bucket occupancy squared while docs grow linearly). Reports the
-    * top-N hottest (band, band-hash) buckets by document count with
-    * the candidate pairs each implies, the cumulative pair mass, and
-    * the total pair mass of ALL multi-doc buckets — the number to
-    * watch across corpus scale points: if total_pairs grows faster
-    * than docs, re-band (see [[suggestBanding]]) or raise `estFloor`
-    * before the join walls. Output: (rnk, n_docs, cand_pairs,
-    * cum_pairs, total_pairs, n_hot_buckets) — sizes only, so the
-    * result is independent of the engine-internal band hash values.
-    */
-  def minhashBandOccupancy(
-      docs: DataFrame, shingleLen: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, topN: Int = 20): DataFrame = {
-    val sigs = minhashSignatures(docs, shingleLen, numHashes)
-    val keyed = bandKeys(sigs, numHashes, bands)
-      .select("band", "bh", "doc_id")
-    bucketOccupancy(keyed, Seq("band", "bh"), topN)
-  }
-
   /** Bucket-occupancy diagnostic for gram-blocked joins
     * ([[containmentPairs]], [[decontaminate]]): the hottest n-grams by
     * document frequency and the candidate-pair mass they imply. This
     * is the measurement that justifies (or sizes) `maxDf`: the top of
-    * this table is exactly what the df-prune drops. Same schema as
-    * [[minhashBandOccupancy]] — the two banded-join families share one
-    * diagnostic contract.
+    * this table is exactly what the df-prune drops. Output: (rnk,
+    * n_docs, cand_pairs, cum_pairs, total_pairs, n_hot_buckets).
     */
   def gramOccupancy(
       docs: DataFrame, n: Int = 6, topN: Int = 20): DataFrame =

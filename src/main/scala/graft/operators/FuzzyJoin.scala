@@ -46,14 +46,13 @@ object FuzzyJoin {
   }
 
   private def candidates(
-      left: DataFrame, right: DataFrame, maxDist: Int,
-      idCol: String, strCol: String): DataFrame = {
+      df: DataFrame, maxDist: Int, idCol: String, strCol: String): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,
       s"maxDist must be 1 or 2 (variant fan-out is O(|s|^d)), got $maxDist")
-    def side(df: DataFrame, suffix: String) = df
+    def side(suffix: String) = df
       .select(F.col(idCol).as(s"id_$suffix"), F.col(strCol).as(s"s_$suffix"),
         F.explode(deletionVariants(F.col(strCol), maxDist)).as("v"))
-    side(left, "a").join(side(right, "b"), "v")
+    side("a").join(side("b"), "v")
   }
 
   private def verify(cand: DataFrame, maxDist: Int): DataFrame =
@@ -68,18 +67,6 @@ object FuzzyJoin {
       .withColumn("dist", F.levenshtein(F.col("s_a"), F.col("s_b")).cast("long"))
       .where(F.col("dist") <= maxDist)
 
-  /** All (left, right) pairs with levenshtein(s_a, s_b) ≤ maxDist.
-    * Inputs need columns (`idCol`, `strCol`); null strings never match
-    * (explode of a null variant array emits nothing).
-    * Output: (id_a, id_b, s_a, s_b, dist) — one row per distinct
-    * (id, string) combination, so ids carrying several spellings
-    * surface every matching spelling pair deterministically.
-    */
-  def deletionJoin(
-      left: DataFrame, right: DataFrame, maxDist: Int,
-      idCol: String = "id", strCol: String = "s"): DataFrame =
-    verify(candidates(left, right, maxDist, idCol, strCol), maxDist)
-
   /** Self fuzzy-match: unordered distinct pairs (id_a < id_b) within
     * one table — near-duplicate key detection. The id ordering is
     * applied BEFORE the candidate dedup shuffle so each unordered
@@ -89,7 +76,7 @@ object FuzzyJoin {
       df: DataFrame, maxDist: Int,
       idCol: String = "id", strCol: String = "s"): DataFrame =
     verify(
-      candidates(df, df, maxDist, idCol, strCol)
+      candidates(df, maxDist, idCol, strCol)
         .where(F.col("id_a") < F.col("id_b")),
       maxDist)
 }

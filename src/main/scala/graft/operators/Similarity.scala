@@ -1,8 +1,6 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.array_to_vector
 import graft.api.ArrowSpaceModel.{readSidecar, sidecarText}
 import graft.scale.BlockScore
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
@@ -10,8 +8,8 @@ import scala.reflect.runtime.universe.TypeTag
 
 /** Similarity-search operators over an embedding column
   * (SURVEY.md §7.2 step 11): brute-force cosine top-k as the exact
-  * baseline and an LSH-bucketed variant as the scale path. Scoring
-  * runs through the native codegen'd cosine kernel
+  * baseline and IVF / codec / sign-projection variants as the scale
+  * paths. Scoring runs through the native codegen'd cosine kernel
   * (graft.functions.CosineSimilarity), and top-k compiles to
   * TakeOrderedAndProject — partial top-k per partition, no full sort.
   */
@@ -64,44 +62,6 @@ object Similarity {
       .select(F.col("id"), F.round(cosine(F.col("vec"), q), 4).as("score"))
       .orderBy(F.col("score").desc, F.col("id").asc)
       .limit(k)
-  }
-
-  /** Approximate cosine top-k via BucketedRandomProjectionLSH on
-    * L2-normalized vectors (Euclidean distance is monotone in cosine
-    * on the unit sphere: d² = 2−2cos). The scale path: candidate set
-    * bounded per bucket instead of scanning all N.
-    *
-    * bucketLength sizing: unit vectors project into [-1, 1], so each
-    * table has ~2/bucketLength buckets. The 2.0 default keeps recall
-    * high on corpora with little cosine structure (near-orthogonal
-    * vectors — nearly a full scan); for CLUSTERED corpora, where LSH
-    * actually prunes, size it down (~0.1-0.5) to probe a fraction of
-    * the table at the same recall.
-    */
-  def annTopKLsh(
-      emb: DataFrame, query: Array[Double], k: Int, seed: Long = 42L,
-      bucketLength: Double = 2.0): DataFrame = {
-    val normed = emb
-      .select(F.col("id"), l2normalize(F.col("vec")).as("vn"))
-      .withColumn("features", array_to_vector(F.col("vn")))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features")
-      .setOutputCol("hashes")
-      .setBucketLength(bucketLength)
-      .setNumHashTables(3)
-      .setSeed(seed)
-    val model = lsh.fit(normed)
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n == 0.0) query else query.map(_ / n)
-    }
-    import org.apache.spark.ml.linalg.Vectors
-    model
-      .approxNearestNeighbors(normed, Vectors.dense(qn), k)
-      .select(
-        F.col("id"),
-        F.round(F.lit(1.0) - F.col("distCol") * F.col("distCol") / 2.0, 4).as("score"))
-      .orderBy(F.col("score").desc, F.col("id").asc)
   }
 
   /** ±1 sign for signed-random-projection plane `j`, feature `f`:
@@ -885,7 +845,7 @@ object Similarity {
         packSignBits(Array.tabulate(q.length)(i => q(i) - cv(i)))))
 
   /** Batch face of [[ivfBinaryResidualTopK]] — the
-    * [[ivfBinaryTopKBatch]] shape with per-(qid, probed list)
+    * [[codecTopKBatch]] probe shape with per-(qid, probed list)
     * residual query bits packed on the EXECUTORS in the probe
     * selection flatMap; one codes join on cluster scores every
     * (candidate, query) pair, bounded-heap per-qid cut, one exact
@@ -996,7 +956,7 @@ object Similarity {
   /** Batch face of [[ivfBinaryTopKTieAware]] — completing the
     * tie-aware matrix (VERDICT r12 #5: mining workloads are batch,
     * and the composed single face is where the measured widening win
-    * lives). The [[ivfBinaryTopKBatch]] probe shape (executor probe
+    * lives). The [[codecTopKBatch]] probe shape (executor probe
     * selection, bits attached to the slim lists BEFORE the probe
     * fan-out) feeds the SAME batch widening core as the flat face
     * ([[tieAwareCandidatesBatch]] — shared so the faces cannot
@@ -1027,33 +987,6 @@ object Similarity {
     codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
       Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))),
       Some(Widen(expandCap, "ivfBinaryTopKBatchTieAwareWhere")))
-
-  /** Batch face of [[ivfBinaryTopK]] — the [[ivfSq8TopKBatch]] shape
-    * with bit codes: probe selection on the executors, bits attached
-    * to the lists by a corpus-sized id join BEFORE the one probe
-    * fan-out join (whose projection computes xor+popcount row-locally
-    * against the query bits riding the probe rows), bounded-heap
-    * per-query cut on (hamming ASC, id ASC), one exact rerank join.
-    * Each qid equals the single-query [[ivfBinaryTopK]] at the same
-    * parameters (spec-pinned).
-    */
-  def ivfBinaryTopKBatch(
-      ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerank: Int): DataFrame =
-    codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
-      Some(Probe(ivf, nprobe)))
-
-  /** Batch face of [[ivfBinaryTopKWhere]] — one predicate-filtered id
-    * join on the slim lists before the bits attach; per-qid parity
-    * with the single-query face spec-pinned. Same under-return
-    * contract as the codec siblings.
-    */
-  def ivfBinaryTopKBatchWhere(
-      ivf: IvfIndex, bin: BinaryIndex, emb: DataFrame, meta: DataFrame,
-      pred: Column, queries: DataFrame, k: Int, nprobe: Int,
-      rerank: Int): DataFrame =
-    codecTopKBatch(binaryCodec(bin), emb, queries, k, rerank,
-      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** One-shot SQ8 cosine top-k — the memory-bound ANN scale path (the
     * standard "SQ8" codec of the public ANN literature, e.g. faiss's
@@ -1614,19 +1547,6 @@ object Similarity {
     codecTopK(pqCodec(pq, None), emb, query, k, rerank,
       Some(Probe(ivf, nprobe)))
 
-  /** FILTERED [[ivfPqTopK]] — see [[ivfSq8TopKWhere]]: the predicate-
-    * matching id set intersects the probed lists BEFORE the ADC cut,
-    * so the m-byte scan and the exact rerank touch only matching rows.
-    * Same degenerate contract (nprobe = nLists, rerank ≥ corpus size
-    * → exact filter-then-top-k) and under-return rule.
-    */
-  def ivfPqTopKWhere(
-      ivf: IvfIndex, pq: PqIndex, emb: DataFrame, meta: DataFrame,
-      pred: Column, query: Array[Double], k: Int, nprobe: Int,
-      rerank: Int): DataFrame =
-    codecTopK(pqCodec(pq, None), emb, query, k, rerank,
-      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
-
   /** IVF+SQ8 — the composed scale shape faiss calls IndexIVFScalarQuantizer:
     * the inverted lists prune WHICH rows are scanned (`nprobe` of the
     * `nLists` lists, partition-prunable on the saved layout) and the
@@ -1695,23 +1615,6 @@ object Similarity {
     codecTopKBatch(sq8Codec(sq8), emb, queries, k, rerank,
       Some(Probe(ivf, nprobe)))
 
-  /** Batch face of [[ivfSq8TopKWhere]]: one predicate-filtered id join
-    * applied to the slim (id, cluster) lists BEFORE the codes attach
-    * and the probe fan-out join scores — one filter join for ALL
-    * queries, exactly as [[ivfTopKBatchWhere]] does on raw vectors,
-    * then the usual salted cuts and bounded exact rerank (which by
-    * construction only ever sees matching rows). Each qid equals the
-    * single-query [[ivfSq8TopKWhere]] at the same parameters
-    * (spec-pinned); same under-return contract — raise nprobe/rerank
-    * with 1/selectivity.
-    */
-  def ivfSq8TopKBatchWhere(
-      ivf: IvfIndex, sq8: Sq8Index, emb: DataFrame, meta: DataFrame,
-      pred: Column, queries: DataFrame, k: Int, nprobe: Int,
-      rerank: Int): DataFrame =
-    codecTopKBatch(sq8Codec(sq8), emb, queries, k, rerank,
-      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
-
   /** MANY queries against the composed IVF+PQ index — the last cell
     * of the batch matrix and the full IndexIVFPQ serving shape: probe
     * selection AND per-query ADC lookup-table construction on the
@@ -1733,20 +1636,6 @@ object Similarity {
       k: Int, nprobe: Int, rerank: Int): DataFrame =
     codecTopKBatch(pqCodec(pq, None), emb, queries, k, rerank,
       Some(Probe(ivf, nprobe)))
-
-  /** Batch face of [[ivfPqTopKWhere]] — the [[ivfSq8TopKBatchWhere]]
-    * composition on the m-byte ADC scan: one predicate-filtered id
-    * join on the slim lists before the codes attach, so every query's
-    * ADC scoring and exact rerank touch only matching rows. Per-qid
-    * parity with the single-query face spec-pinned; same under-return
-    * contract (raise nprobe/rerank with 1/selectivity).
-    */
-  def ivfPqTopKBatchWhere(
-      ivf: IvfIndex, pq: PqIndex, emb: DataFrame, meta: DataFrame,
-      pred: Column, queries: DataFrame, k: Int, nprobe: Int,
-      rerank: Int): DataFrame =
-    codecTopKBatch(pqCodec(pq, None), emb, queries, k, rerank,
-      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
 
   /** Residual-encoded IVF+PQ — the published IVFADC composition
     * (Jégou et al., "Product quantization for nearest neighbor
@@ -1918,18 +1807,6 @@ object Similarity {
       })
   }
 
-  /** FILTERED [[ivfPqrTopK]] — see [[ivfSq8TopKWhere]]: the
-    * predicate-matching id set intersects the probed lists BEFORE the
-    * residual-ADC cut. Same degenerate contract and under-return rule
-    * as the codec siblings.
-    */
-  def ivfPqrTopKWhere(
-      ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame, meta: DataFrame,
-      pred: Column, query: Array[Double], k: Int, nprobe: Int,
-      rerank: Int): DataFrame =
-    codecTopK(pqrCodec(pqr), emb, query, k, rerank,
-      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
-
   /** MANY queries against the residual IVF+PQ index — the
     * [[ivfPqTopKBatch]] physical shape (probe selection + per-query
     * dot LUTs built in the probe flatMap on the EXECUTORS, codes
@@ -1946,38 +1823,6 @@ object Similarity {
       queries: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame =
     codecTopKBatch(pqrCodec(pqr), emb, queries, k, rerank,
       Some(Probe(ivf, nprobe)))
-
-  /** Batch face of [[ivfPqrTopKWhere]] — one predicate-filtered id
-    * join on the slim lists before the residual codes attach; per-qid
-    * parity with the single-query face spec-pinned. Same under-return
-    * contract as the codec siblings.
-    */
-  def ivfPqrTopKBatchWhere(
-      ivf: IvfIndex, pqr: PqResidualIndex, emb: DataFrame, meta: DataFrame,
-      pred: Column, queries: DataFrame, k: Int, nprobe: Int,
-      rerank: Int): DataFrame =
-    codecTopKBatch(pqrCodec(pqr), emb, queries, k, rerank,
-      Some(Probe(ivf, nprobe, Some(keptIds(meta, pred)))))
-
-  /** Persist a residual index: (id, codes, n2hat) Parquet + the
-    * codebook sidecar in [[pqSave]]'s format, plus a `rotation.json`
-    * sidecar when the index is OPQ-rotated (residual-space rotation is
-    * part of the index state — queries against a loaded index need
-    * it). The IVF index saves separately ([[ivfSave]]) — the pair
-    * reload independently. */
-  def pqResidualSave(index: PqResidualIndex, path: String): Unit = {
-    pqSave(PqIndex(index.codes, index.books), path)
-    index.rot.foreach(rotationSave(index.codes.sparkSession, _, path))
-  }
-
-  def pqResidualLoad(
-      spark: org.apache.spark.sql.SparkSession, path: String): PqResidualIndex = {
-    val raw = pqLoad(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/rotation.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val rot = if (fs.exists(p)) Some(rotationLoad(spark, path)) else None
-    PqResidualIndex(raw.codes, raw.books, rot)
-  }
 
   /** Deterministic signed-random-projection ANN (Charikar'02 SRP-LSH,
     * Hamming-ranking form): `bits` md5-derived ±1 hyperplanes, vectors
@@ -2811,11 +2656,11 @@ object Similarity {
     * ARRAY<DOUBLE>). This is the TABLE form of what [[hierProbesFor]]
     * reads from the broadcast hierarchy, and the input
     * [[ivfTopKBatchHierSharded]] joins instead of shipping all k
-    * sub-centers to every executor. At rest it should live next to the
-    * lists as `partitionBy("cell")` Parquet (it is derived data —
-    * rebuildable from the centroid + hierarchy sidecars, which is what
-    * this function does), so probe selection prunes to the probed
-    * cells' files exactly as the list scan prunes to the probed lists'.
+    * sub-centers to every executor. It is derived data, rebuilt from
+    * the centroid + hierarchy sidecars; [[ivfSave]] does not persist
+    * it. A caller that writes it as `partitionBy("cell")` Parquet gets
+    * probe selection pruned to the probed cells' files, as the list
+    * scan prunes to the probed lists'.
     */
   def ivfSubCenters(index: IvfIndex): DataFrame = {
     val hier = requireHier(index, "ivfSubCenters")
@@ -2849,9 +2694,9 @@ object Similarity {
     *      by exact output equality at a pruned operating point);
     *   4. rejoin the chosen (qid, list) rows to the queries on qid and
     *      scan as every raw batch face does ([[rawScanBatch]]).
-    * Pass `subCenters` to score against a persisted table (e.g. the
-    * cell-partitioned Parquet written at index-build time) instead of
-    * re-deriving it from the driver-resident hierarchy.
+    * Pass `subCenters` to score against a persisted copy of
+    * [[ivfSubCenters]] instead of re-deriving it from the
+    * driver-resident hierarchy.
     */
   def ivfTopKBatchHierSharded(
       index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
@@ -2897,18 +2742,21 @@ object Similarity {
   def ivfSave(index: IvfIndex, path: String): Unit = {
     index.assigned.write.mode("overwrite")
       .partitionBy("cluster").parquet(s"$path/lists")
-    // a re-save defines a NEW index: streamed appends under the old
-    // quantizer would load as rows assigned by centroids that no
-    // longer exist — remove them with the other stale artifacts
+    // a re-save defines a NEW index, so every artifact of the older one
+    // goes: streamed appends (they would load as rows assigned by
+    // centroids that no longer exist), their swap marker (the next load
+    // would wait-and-throw), the sub-center table earlier versions wrote
+    // beside a hierarchy, and on a flat save the hierarchy sidecar
+    // (loads would serve wrong hierarchical probes over the new lists)
     locally {
-      val spark = index.assigned.sparkSession
-      val p = new org.apache.hadoop.fs.Path(s"$path/applists")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
-      // a stale swap marker beside a deliberately-removed applists would
-      // make the next load wait-and-throw; a re-save starts clean
-      val marker = SegmentTiers.swapMarker(s"$path/applists")
-      if (fs.exists(marker)) fs.delete(marker, false)
+      val conf = index.assigned.sparkSession.sessionState.newHadoopConf()
+      val p = (s: String) => new org.apache.hadoop.fs.Path(s)
+      (Seq(p(s"$path/applists"), SegmentTiers.swapMarker(s"$path/applists"),
+        p(s"$path/subcenters")) ++
+        (if (index.hier.isEmpty) Seq(p(s"$path/twolevel.json")) else Nil)).foreach { stale =>
+        val fs = stale.getFileSystem(conf)
+        if (fs.exists(stale)) fs.delete(stale, true)
+      }
     }
     val cent = index.centroids
       .map { case (c, v) => s"""[$c,[${v.mkString(",")}]]""" }
@@ -2932,42 +2780,7 @@ object Similarity {
       graft.api.ArrowSpaceModel.writeSidecar(
         index.assigned.sparkSession, s"$path/twolevel.json",
         s"""{"coarse":$coarse,"cells":$cells}""")
-      // the sub-center TABLE (cell-partitioned) — what
-      // [[ivfTopKBatchHierSharded]] joins at scale, written at save
-      // time so probe selection reads Parquet instead of re-deriving
-      // from the driver-resident hierarchy ([[ivfSubCentersAt]])
-      ivfSubCenters(index).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$path/subcenters")
     }
-    // a FLAT save over a path that previously held a two-level index
-    // must remove the hierarchy artifacts: a stale twolevel.json /
-    // subcenters/ would reference the OLD index's list ids, and loads
-    // would silently serve wrong hierarchical probes over the new lists
-    if (index.hier.isEmpty) {
-      val spark = index.assigned.sparkSession
-      val conf = spark.sessionState.newHadoopConf()
-      Seq(s"$path/twolevel.json", s"$path/subcenters").foreach { stale =>
-        val p = new org.apache.hadoop.fs.Path(stale)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
-  }
-
-  /** The sub-center table a two-level [[ivfSave]] wrote — feed it to
-    * [[ivfTopKBatchHierSharded]] for broadcast-free probe selection
-    * against the persisted layout. Fails actionably when the save was
-    * flat (or predates the subcenters layout — re-save to produce it).
-    */
-  def ivfSubCentersAt(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/subcenters")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"no subcenters table under $path — the index there was saved flat " +
-        "(or by a pre-subcenters version); build with ivfBuildTwoLevel and " +
-        "ivfSave again, or derive the table in-memory with ivfSubCenters")
-    spark.read.parquet(s"$path/subcenters").select("cell", "list", "cvec")
   }
 
   /** The quantizer half of [[ivfLoad]] — centroid sidecar parse only,
@@ -3280,42 +3093,6 @@ object Similarity {
       root, new org.apache.hadoop.fs.Path(s"${path}__rebuild_old"),
       Some(stagingP))))
     fresh.k
-  }
-
-  /** The drift→rebuild loop closed as ONE face (VERDICT r13 #5):
-    * measure a drop's occupancy PSI against the saved layout's frozen
-    * cells ([[embeddingDriftPsi]]) and run [[ivfRebuild]] iff it
-    * crosses `psiThreshold` — the published PSI rule of thumb
-    * (< 0.1 stable, > 0.25 shifted) as an executable policy instead
-    * of two operators a pipeline must wire itself. Returns
-    * (psi, rebuilt).
-    *
-    * The no-drift path costs ONE broadcast-assignment pass over `cur`
-    * plus two k-row aggregates and touches nothing on disk
-    * (measured as `s_ivf_serve_rebuild` in
-    * history/SCALE_BENCH_r11_merged.json); the drift path pays the full
-    * rebuild.
-    * Call it the way the monitor loop would: ingest the drop first
-    * (appends), then check — the rebuild folds base + committed
-    * appends, so a drop that tripped the threshold is re-quantized
-    * INTO the fresh layout rather than left behind. Offline
-    * maintenance like [[ivfRebuild]] itself: run with serve/ingest
-    * streams stopped or between triggers.
-    */
-  def rebuildIfDrifted(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      cur: DataFrame, psiThreshold: Double = 0.25,
-      targetListSize: Int = 1250,
-      maxSegExclusive: Long = Long.MaxValue): (Double, Boolean) = {
-    require(psiThreshold > 0.0,
-      s"psiThreshold must be positive; got $psiThreshold")
-    val idx = ivfLoad(spark, path)
-    val psi = embeddingDriftPsi(idx, cur)
-      .agg(F.sum("psi_term")).head.getDouble(0)
-    if (psi > psiThreshold) {
-      ivfRebuild(spark, path, targetListSize, maxSegExclusive)
-      (psi, true)
-    } else (psi, false)
   }
 
   /** Requantize an in-memory index to corpus-proportional lists at a
@@ -3769,23 +3546,6 @@ object Similarity {
     mineBitext(idxA, idxB, a, b, threshold)(
       (idx, _, qs) => ivfTopKBatch(idx, qs, k, nprobe))
   }
-
-  /** [[bitextMineApprox]]'s prebuilt-index overload with HIERARCHICAL
-    * probe selection ([[ivfTopKBatchHier]]) — the fine-list re-mine
-    * shape: both indexes are [[ivfBuildTwoLevel]] products at small
-    * target lists, so each of the two retrievals picks probes in
-    * (√k + p·k/√k)·F per query instead of scanning all k sub-centers.
-    * Margin semantics are IDENTICAL (shared [[marginFromLists]]); the
-    * only divergence source is list selection, and at coarseCells ≥
-    * non-empty cells that too is the flat path's exactly
-    * ([[hierProbesFor]]'s degenerate contract) — parity spec-pinned.
-    */
-  def bitextMineApproxHier(
-      idxA: IvfIndex, idxB: IvfIndex, a: DataFrame, b: DataFrame,
-      k: Int, threshold: Double, nprobe: Int,
-      coarseCells: Int = 4): DataFrame =
-    mineBitext(idxA, idxB, a, b, threshold)(
-      (idx, _, qs) => ivfTopKBatchHier(idx, qs, k, nprobe, coarseCells))
 
   /** The retrieve-then-margin body of every prebuilt bitext mine: cast
     * both sides, retrieve the forward lists (each a against `idxB`) and

@@ -396,19 +396,6 @@ object TrainPrep {
       .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** One shard of a [[writeShards]] layout — reads ONLY that shard's
-    * partition directory (the `shard` filter prunes at the source).
-    * The shard column is cast back to long: partition-directory type
-    * inference narrows it to int on read, and consumers hold the
-    * packers' long contract.
-    */
-  def readShard(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      shard: Long): DataFrame =
-    spark.read.parquet(s"$path/shards")
-      .where(F.col("shard") === shard)
-      .withColumn("shard", F.col("shard").cast("long"))
-
   /** 1-based rank of `key` within each `stratum` WITHOUT a per-stratum
     * window (whose rank pass is one task per stratum — a skew wall when
     * one source dominates the corpus). Range-partition by (stratum,

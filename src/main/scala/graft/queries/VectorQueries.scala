@@ -871,13 +871,13 @@ private[graft] object VectorQueries {
         |LIMIT 20""".stripMargin),
 
     // SHARDED hierarchical probe selection: probes chosen by a join
-    // against the sub-center TABLE (cell-partitioned at rest) instead
-    // of a broadcast of all k sub-centers — the batch-retrieval form
-    // once k·F outgrows a broadcast (~512 MB at 1M corpus-proportional
-    // lists). Oracled at the degenerate point (all coarse cells,
-    // nprobe = k ⇒ every list probed ⇒ exact per-query top-k); exact
-    // row-for-row parity with the broadcast path at a PRUNED point is
-    // spec-pinned (SimilaritySpec "sharded hierarchical probes")
+    // against the sub-center TABLE instead of a broadcast of all k
+    // sub-centers — the batch-retrieval form once k·F outgrows a
+    // broadcast (~512 MB at 1M corpus-proportional lists). Oracled at
+    // the degenerate point (all coarse cells, nprobe = k ⇒ every list
+    // probed ⇒ exact per-query top-k); exact row-for-row parity with
+    // the broadcast path at a PRUNED point is spec-pinned
+    // (SimilaritySpec "sharded hierarchical probes")
     QuerySpec("v_ivf_2level_sharded_topk", (s, d) => {
       val e = emb(s, d)
       val ivf = Similarity.ivfBuildTwoLevel(e, nLists = 16)

@@ -1,13 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types._
 
 /** Ingest layer — the engine-schema entry points for the corpora the
   * reference consumes ad hoc (in-memory ndarrays via
   * `src/helpers.rs:24-46`, parquet embeddings written by
-  * `tests/test_2_CVE_db.py:130-152`, nested JSON corpora iterated by
-  * `tests/test_2_CVE_db.py:71-128`). Each reader validates the schema
+  * `tests/test_2_CVE_db.py:130-152`). Each reader validates the schema
   * at the scan and returns the engine's canonical columns, so every
   * downstream operator can rely on (id, vec) / (doc_id, text) without
   * re-deriving casts. Validation failures surface at READ time with
@@ -64,80 +63,4 @@ object CorpusSources {
     df.withColumn("doc_id", F.col("doc_id").cast("long"))
       .withColumn("text", F.col("text").cast("string"))
   }
-
-  /** Nested-JSON corpus → (doc_id, text, extra fields). The reference's
-    * CVE ingest walks `containers.cna.descriptions[0].value`-style
-    * paths in a Python loop (tests/test_2_CVE_db.py:81-128); here the
-    * paths are column expressions evaluated inside the scan projection,
-    * and corrupt records are tolerated rather than job-fatal:
-    * get_json_object returns null on malformed JSON, so bad lines are
-    * dropped by the isNotNull filter (count them with
-    * [[jsonCorpusCorruptCount]]) instead of failing the scan.
-    *
-    * fields: output column name → dotted path inside the JSON object
-    * (`a.b[0].c` style, get_json_object syntax without the leading $).
-    * multiLine = true reads each FILE as one JSON document (wholetext);
-    * the default treats each line as a document (JSONL).
-    *
-    * OUTPUT SCHEMA (changed in r4: `doc_key` inserted as the SECOND
-    * column — positional consumers must select by name):
-    * (doc_id: long, doc_key: string, text: string, extras...).
-    * `doc_id` id spaces cannot overlap in a mixed corpus (changed in
-    * r5: previously a raw xxhash64 could land on a genuine numeric id;
-    * artifacts keyed on r4 hashed doc_ids must be re-derived — the
-    * sign bit changes every hashed value): a numeric id keeps its
-    * value, while a non-numeric id (CVE-2024-1234 style) hashes into
-    * the NEGATIVE long half-space (xxhash64 with the sign bit forced).
-    * Corpora with negative NUMERIC ids should remap them before
-    * ingest; collisions between two string ids remain possible in the
-    * 2⁶³-value half-space (~N²/2⁶⁴) — `doc_key` always carries the raw
-    * id for exact joins.
-    */
-  def jsonCorpus(
-      spark: SparkSession,
-      path: String,
-      idPath: String,
-      textPath: String,
-      fields: Map[String, String] = Map.empty,
-      multiLine: Boolean = false): DataFrame = {
-    val raw = spark.read
-      // wholetext, not the json reader's multiLine flag: this reader is
-      // text(), where multiLine is meaningless — wholetext yields one
-      // row per file, which is what per-file JSON needs
-      .option("wholetext", multiLine)
-      .text(path)
-    def byPath(p: String): Column = F.get_json_object(F.col("value"), "$." + p)
-    val extras = fields.toSeq.map { case (name, p) => byPath(p).as(name) }
-    raw.select(
-      Seq(
-        // non-numeric document ids (CVE-2024-1234 style — the exact
-        // corpus this reader is modeled on) hash to a stable long
-        // instead of casting to null and silently dropping the corpus;
-        // the raw id survives as doc_key.
-        // try_cast, not cast: ANSI mode throws on 'CVE-2024-0001'.
-        // The sign bit is forced on the hash so hashed ids live in the
-        // negative half-space and can never collide with a genuine
-        // non-negative numeric id in a mixed-id corpus (see scaladoc)
-        F.coalesce(
-          byPath(idPath).try_cast("long"),
-          F.xxhash64(byPath(idPath)).bitwiseOR(F.lit(Long.MinValue))).as("doc_id"),
-        byPath(idPath).as("doc_key"),
-        byPath(textPath).cast("string").as("text")) ++ extras: _*)
-      .where(F.col("doc_key").isNotNull && F.col("text").isNotNull)
-  }
-
-  /** Count of records in a line-JSON corpus whose id/text paths do NOT
-    * both resolve — the ingest health check the reference performs by
-    * try/except counting in Python. One pass, no job failure.
-    */
-  def jsonCorpusCorruptCount(
-      spark: SparkSession, path: String, idPath: String, textPath: String,
-      multiLine: Boolean = false): Long =
-    // the SAME record framing as jsonCorpus — counting lines against a
-    // wholetext corpus would flag nearly every line of healthy files
-    spark.read.option("wholetext", multiLine).text(path)
-      .where(
-        F.get_json_object(F.col("value"), "$." + idPath).isNull ||
-          F.get_json_object(F.col("value"), "$." + textPath).isNull)
-      .count()
 }

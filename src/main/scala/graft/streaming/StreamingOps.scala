@@ -1,71 +1,17 @@
 package graft.streaming
 
-import graft.spectral.LocalLaplacian
 import graft.operators.SegmentTiers
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface. The reference is batch-only
   * (SURVEY.md §2.3 — no streaming surface at all); these operators are
-  * the engine's additions for continuous pipelines: watermarked
-  * windowed aggregation, stateful per-key statistics, and incremental
-  * λ-scoring of an embedding stream against a built index (the
-  * streaming analogue of ArrowSpaceModel.search's scoring kernel —
-  * new items get λ and a blended score without rebuilding the graph).
+  * the engine's additions for continuous pipelines: stateful
+  * sessionization, windowed drift monitors, the streaming dedup and
+  * decontamination gates, mergeable profile sidecars, and IVF ingest
+  * and serving over one saved layout.
   */
 object StreamingOps {
-
-  /** Tumbling-window event counts with a watermark. Input must carry
-    * (ts TIMESTAMP, event_type STRING, value DOUBLE). Late data beyond
-    * the watermark is dropped — state is bounded, the aggregation is
-    * partial+final (same shape as the batch q_events_hourly query).
-    */
-  def windowedEventCounts(
-      events: DataFrame,
-      window: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(F.window(F.col("ts"), window), F.col("event_type"))
-      .agg(
-        F.count(F.lit(1)).as("n_events"),
-        F.round(F.sum("value"), 2).as("sum_value"))
-      .select(
-        F.col("window.start").as("window_start"),
-        F.col("event_type"), F.col("n_events"), F.col("sum_value"))
-
-  /** Per-key running statistics via mapGroupsWithState — the custom
-    * state pattern (count / mean / max). State is unbounded per key
-    * here; production deployments should add
-    * `GroupStateTimeout.ProcessingTimeTimeout` + `setTimeoutDuration`
-    * so abandoned keys age out (left out of the default because
-    * timeout polling keeps triggering empty micro-batches, which
-    * breaks drain-and-stop harnesses).
-    */
-  final case class RunningStats(n: Long, mean: Double, max: Double)
-
-  def runningUserStats(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select($"user_id".as[Long], $"value".as[Double])
-      .groupByKey(_._1)
-      .mapGroupsWithState[RunningStats, (Long, Long, Double, Double)](
-        GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[RunningStats]) =>
-          val prev = state.getOption.getOrElse(RunningStats(0L, 0.0, Double.MinValue))
-          var n = prev.n
-          var sum = prev.mean * prev.n
-          var mx = prev.max
-          rows.foreach { case (_, v) =>
-            n += 1; sum += v; if (v > mx) mx = v
-          }
-          val next = RunningStats(n, if (n == 0) 0.0 else sum / n, mx)
-          state.update(next)
-          (user, next.n, next.mean, next.max)
-      }
-      .toDF("user_id", "n", "mean", "max")
-  }
 
   /** Open-session state for [[sessionizeStream]]: event-time bounds
     * and count of the ONE in-progress session per user — state is
@@ -147,35 +93,6 @@ object StreamingOps {
       .toDF("user_id", "session_start", "session_end", "n_events")
   }
 
-  /** Incremental λ-scoring: for each arriving (id, vec), compute the
-    * synthetic λ against the broadcast feature Laplacian and the
-    * blended score vs a fixed query — stateless per-row map, so it
-    * runs at input rate with no shuffle (index maintenance without
-    * graph rebuild; SURVEY.md §2.3 "incremental index maintenance").
-    */
-  def scoreStream(
-      vectors: DataFrame,
-      lap: LocalLaplacian,
-      tau: Double,
-      query: Array[Double],
-      blend: Double): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val bcLap = spark.sparkContext.broadcast(lap)
-    val bcQ = spark.sparkContext.broadcast(query)
-    val lambdaQ = lap.synth(query, tau)
-    vectors
-      .select($"id".as[Long], $"vec".as[Array[Double]])
-      .map { case (id, v) =>
-        val l = bcLap.value
-        val lam = l.synth(v, tau)
-        val cos = graft.functions.VectorKernels.cosine(bcQ.value, v)
-        val score = blend * cos + (1.0 - blend) / (1.0 + math.abs(lambdaQ - lam))
-        (id, lam, score)
-      }
-      .toDF("id", "lambda", "score")
-  }
-
   /** Windowed drift monitor — the streaming face of
     * [[graft.operators.Profile.psiBuckets]]: per event-time window,
     * the PSI of the arriving values against a STATIC reference
@@ -223,30 +140,6 @@ object StreamingOps {
         total.as("n_events"),
         F.round(psi, 6).as("psi"))
   }
-
-  /** Streaming exact dedup: drop documents whose normalized-text
-    * fingerprint was already seen (state = one fingerprint per kept
-    * doc; bound it with a watermark on `ts` when the input has event
-    * time). The streaming face of Dedup.exactGroups' keep-first.
-    */
-  def dedupStream(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("fp", graft.operators.TextOps.fingerprint(F.col("text")))
-      .dropDuplicates("fp")
-
-  /** Watermark-bounded streaming dedup: same keep-first contract, but
-    * fingerprint state is dropped once it ages past `delay` behind the
-    * event-time watermark on `tsCol` — the state-bounded shape an
-    * unbounded 100 TB stream requires (plain dropDuplicates state
-    * grows forever). Duplicates farther apart than the watermark can
-    * re-admit — the standard trade, made explicit here.
-    */
-  def dedupStreamWithinWatermark(
-      docs: DataFrame, tsCol: String, delay: String): DataFrame =
-    docs
-      .withWatermark(tsCol, delay)
-      .withColumn("fp", graft.operators.TextOps.fingerprint(F.col("text")))
-      .dropDuplicatesWithinWatermark("fp")
 
   /** Streaming near-duplicate detection against a STATIC corpus — the
     * standard training-data ingestion gate: each arriving document is
@@ -1440,50 +1333,6 @@ object StreamingOps {
     stream.where(!contaminated(F.col("text")))
   }
 
-  /** Incremental index maintenance: append a stream of (id, vec) to a
-    * persisted [[graft.api.ArrowSpaceModel]]'s items table. Each
-    * arriving vector gets its λ and raw energy against the broadcast
-    * F×F Laplacian (stateless map — input-rate throughput), and rows
-    * land in the same Parquet layout `save` wrote, so `load` picks
-    * them up on the next open. The graph/Laplacian stay fixed between
-    * rebuilds — the same contract as the reference's batch-built,
-    * point-queried index, extended with continuous ingest.
-    *
-    * Returns the started query; callers own its lifecycle.
-    */
-  def appendToIndex(
-      vectors: DataFrame,
-      lap: LocalLaplacian,
-      tau: Double,
-      modelPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val bcLap = spark.sparkContext.broadcast(lap)
-    vectors
-      .select($"id".as[Long], $"vec".as[Array[Double]])
-      .map { case (id, v) =>
-        // the SHARED synthesis kernel, not an inlined copy of its
-        // formula: appended λs must sort consistently with the loaded
-        // index even if the synthesis is ever adjusted
-        val (lambda, e) = bcLap.value.synthWithEnergy(v, tau)
-        (id, v, lambda, e)
-      }
-      .toDF("id", "vec", "lambda", "e_raw")
-      .writeStream
-      // foreachBatch + plain batch append: a direct parquet sink would
-      // write a _spark_metadata log, and batch reads of the items dir
-      // would then see ONLY the streamed files — hiding the original
-      // index. Exactly-once degrades to at-least-once on retry; ids
-      // are upsert-keys for the next rebuild.
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(s"$modelPath/items")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .start()
-  }
-
   /** Ingest-side observability for [[ivfAppendStream]] (VERDICT r9
     * #5b): per-batch appended mass per list accumulates here, so the
     * documented "centroid drift ⇒ rebuild" contract has a MEASURED
@@ -1850,51 +1699,6 @@ object StreamingOps {
   /** Convenience: run a streaming DataFrame to a memory sink and block
     * until all available input is processed (test/driver helper).
     */
-  /** Winner-so-far per key for [[upsertStream]]: the highest (seq, op)
-    * change seen — O(1) state per key, the same last-writer-wins order
-    * as the batch merge. */
-  final case class UpsertState(seq: Long, op: String, payload: String)
-
-  /** Streaming face of [[graft.operators.Cdc.mergeChanges]]: maintain
-    * a keyed materialized view over a changelog STREAM, emitting the
-    * key's current row whenever its winner changes (Update mode). The
-    * winner order is the batch operator's exactly — highest `seq`,
-    * ties by `op` descending — and it is applied MONOTONICALLY: a
-    * change arriving out of order below the current winner is ignored,
-    * so any batch/arrival interleaving of the same changelog converges
-    * to the same view (the stream/batch parity law the spec asserts).
-    * A winning 'D' emits a tombstone (`is_deleted = true`, null
-    * payload), the signal a downstream sink needs to delete the key.
-    *
-    * Input columns: (key LONG, op STRING, seq LONG, payload STRING —
-    * pack wide payloads with `to_json(struct(...))`, unpack with
-    * `from_json`). State per key is one (seq, op, payload) — bounded
-    * by the keyspace, not the stream; keys never retract, matching a
-    * CDC feed where every key's history ends in 'D' or stays live.
-    */
-  def upsertStream(changes: DataFrame): DataFrame = {
-    val spark = changes.sparkSession
-    import spark.implicits._
-    changes
-      .select($"key".as[Long], $"op".as[String], $"seq".as[Long],
-        $"payload".as[String])
-      .groupByKey(_._1)
-      .mapGroupsWithState[UpsertState, (Long, Long, String, Boolean)](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[UpsertState]) =>
-          var cur = state.getOption.orNull
-          rows.foreach { case (_, op, seq, p) =>
-            val wins = cur == null || seq > cur.seq ||
-              (seq == cur.seq && op > cur.op)
-            if (wins) cur = UpsertState(seq, op, p)
-          }
-          state.update(cur)
-          (key, cur.seq,
-            if (cur.op == "D") null else cur.payload, cur.op == "D")
-      }
-      .toDF("key", "seq", "payload", "is_deleted")
-  }
-
   def runToMemory(df: DataFrame, name: String, outputMode: OutputMode): Unit = {
     val q = df.writeStream
       .format("memory")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.CorpusSources
-import org.apache.spark.sql.{functions => F}
 
 class CorpusSourcesSpec extends SparkSpec {
 
@@ -22,68 +21,5 @@ class CorpusSourcesSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       CorpusSources.documents(spark, "/root/testdata/sf0.001/embeddings.parquet")
     }
-  }
-
-  test("json corpus reader extracts nested paths and tolerates corrupt lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toFile
-    val f = new java.io.File(dir, "corpus.jsonl")
-    val w = new java.io.PrintWriter(f)
-    w.println("""{"meta":{"id":1},"body":{"descriptions":[{"value":"first doc"}]},"lang":"en"}""")
-    w.println("""{"meta":{"id":2},"body":{"descriptions":[{"value":"second doc"}]},"lang":"de"}""")
-    w.println("""{"meta":{"id":3},"body":{}}""") // missing text path
-    w.println("""not json at all""")
-    w.close()
-    val docs = CorpusSources.jsonCorpus(
-      spark, f.getAbsolutePath,
-      idPath = "meta.id",
-      textPath = "body.descriptions[0].value",
-      fields = Map("lang" -> "lang"))
-    val rows = docs.orderBy("doc_id").collect()
-    assert(rows.length == 2, s"got ${rows.length}")
-    // schema: (doc_id, doc_key, text, extras...)
-    assert(rows(0).getLong(0) == 1L && rows(0).getString(1) == "1")
-    assert(rows(0).getString(2) == "first doc")
-    assert(rows(0).getString(3) == "en" && rows(1).getString(3) == "de")
-    val corrupt = CorpusSources.jsonCorpusCorruptCount(
-      spark, f.getAbsolutePath, "meta.id", "body.descriptions[0].value")
-    assert(corrupt == 2L, s"got $corrupt")
-  }
-
-  test("json corpus reader keeps string document ids (hashed to a stable long)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json_sid").toFile
-    val f = new java.io.File(dir, "cve.jsonl")
-    val w = new java.io.PrintWriter(f)
-    w.println("""{"cveMetadata":{"cveId":"CVE-2024-0001"},"desc":"overflow in x"}""")
-    w.println("""{"cveMetadata":{"cveId":"CVE-2024-0002"},"desc":"injection in y"}""")
-    w.close()
-    val docs = CorpusSources.jsonCorpus(
-      spark, f.getAbsolutePath,
-      idPath = "cveMetadata.cveId", textPath = "desc")
-    val rows = docs.orderBy("doc_key").collect()
-    // string ids must NOT cast to null and vanish — they hash to a
-    // stable long and survive verbatim in doc_key
-    assert(rows.length == 2, s"string-id docs were dropped: got ${rows.length}")
-    assert(rows.map(_.getString(1)).toSeq ==
-      Seq("CVE-2024-0001", "CVE-2024-0002"))
-    assert(rows.map(_.getLong(0)).distinct.length == 2)
-    // hashed ids live in the NEGATIVE half-space: a mixed-id corpus can
-    // never silently merge a hashed string id with a real numeric id
-    assert(rows.forall(_.getLong(0) < 0L),
-      s"hashed ids must be negative: ${rows.map(_.getLong(0)).toSeq}")
-  }
-
-  test("mixed numeric/string ids cannot collide across the two id spaces") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json_mixed").toFile
-    val f = new java.io.File(dir, "mixed.jsonl")
-    val w = new java.io.PrintWriter(f)
-    w.println("""{"id":"7","text":"numeric id"}""")
-    w.println("""{"id":"DOC-7","text":"string id"}""")
-    w.close()
-    val rows = CorpusSources.jsonCorpus(spark, f.getAbsolutePath, "id", "text")
-      .orderBy("doc_key").collect()
-    assert(rows.length == 2)
-    val ids = rows.map(_.getLong(0))
-    assert(ids(0) == 7L, "numeric ids keep their value")
-    assert(ids(1) < 0L, "string ids hash into the negative half-space")
   }
 }

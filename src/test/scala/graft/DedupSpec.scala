@@ -326,25 +326,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("suggestBanding derives the engine's 16x4 default and its miss bound") {
-    // the documented rationale: 64 hashes, target j=0.8, miss <= 2.2e-4
-    val plan = Dedup.suggestBanding(64, 0.8)
-    assert(plan.bands == 16 && plan.rows == 4)
-    assert(1.0 - plan.detectAtTarget <= 2.2e-4)
-    // fewest-bands law: no divisor layout with fewer bands meets 0.999
-    assert(Dedup.suggestBanding(64, 0.8, minDetect = plan.detectAtTarget)
-      .bands == 16)
-    // detection is monotone in j for a fixed layout
-    val probe = Seq(0.5, 0.6, 0.7, 0.8, 0.9).map(plan.detectAt)
-    assert(probe.sliding(2).forall(p => p(0) <= p(1)))
-    // underpowered scheme degrades to max-detection, not an exception
-    val weak = Dedup.suggestBanding(4, 0.99, minDetect = 1.0)
-    assert(weak.bands == 4 && weak.rows == 1)
-    assert(plan.render.contains("bands=16 rows=4"))
-    intercept[IllegalArgumentException](Dedup.suggestBanding(0, 0.8))
-    intercept[IllegalArgumentException](Dedup.suggestBanding(64, 1.0))
-  }
-
   test("curateCorpus charges each doc to the FIRST failing stage") {
     val s = spark
     import s.implicits._
@@ -588,14 +569,5 @@ class DedupSpec extends SparkSpec {
     assert(occ == Seq(
       (1L, 3L, 3L, 3L, 4L, 2L),
       (2L, 2L, 1L, 4L, 4L, 2L)), occ.toString)
-    // minhash band occupancy: identical docs share every band bucket;
-    // output is independent of the input partitioning
-    val p1 = Dedup.minhashBandOccupancy(corpus.repartition(1), topN = 5)
-      .collect().map(_.toSeq).toSeq
-    val p7 = Dedup.minhashBandOccupancy(corpus.repartition(7), topN = 5)
-      .collect().map(_.toSeq).toSeq
-    assert(p1 == p7, "band occupancy must not depend on partitioning")
-    assert(p1.nonEmpty && p1.head(1) == 3L,
-      s"the identical triple must dominate the hottest bucket: ${p1.head}")
   }
 }

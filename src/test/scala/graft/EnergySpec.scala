@@ -88,23 +88,6 @@ class EnergySpec extends SparkSpec {
     }
   }
 
-  test("eps sweep grid: denser graphs at larger eps, sane metrics per point (test_5 pattern)") {
-    val sweep = graft.api.EnergySweep.epsGrid(
-      itemsDf, gp, epsValues = Seq(gp.eps * 0.5, gp.eps, math.min(1.0, gp.eps * 1.5)),
-      queryIds = Seq(3L, 40L), truthK = 5)
-    val rows = sweep.collect()
-    assert(rows.length == 3)
-    // edge count is monotone non-decreasing in eps
-    val edgesByEps = rows.sortBy(_.getDouble(0)).map(_.getLong(1))
-    assert(edgesByEps.zip(edgesByEps.tail).forall { case (a, b) => a <= b },
-      s"edge count not monotone in eps: ${edgesByEps.mkString(",")}")
-    rows.foreach { r =>
-      assert(r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
-      assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0)
-      assert(r.getDouble(4) >= 0.0 && r.getDouble(4) <= 1.0)
-    }
-  }
-
   test("aggressive diffusion (the reference's collapse grid point) stays finite and searchable") {
     // The reference's sweep logs retrieval collapse at eta=0.1/steps=8
     // (MRR 0.0196 vs 1.0 at eta=0.05/steps=6) — quality degradation is

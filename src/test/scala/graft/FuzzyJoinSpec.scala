@@ -43,23 +43,12 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(!got.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("deletionJoin across two tables; nulls never match") {
-    val left = strs(1L -> "alpha", 2L -> "beta", 3L -> null)
-    val right = strs(10L -> "alpa", 11L -> "betas", 12L -> null)
-    val got = FuzzyJoin.deletionJoin(left, right, maxDist = 1)
-      .select("id_a", "id_b", "dist").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == Set((1L, 10L, 1L), (2L, 11L, 1L)))
-  }
-
   test("non-unique ids keep every matching spelling pair deterministically") {
     // id 1 carries two spellings; "ab"/"ba" is a deletion-neighborhood
     // false positive (common variants "a"/"b", levenshtein 2) while
     // "bad"/"ba" truly matches at dist 1. A dedup on ids alone could
     // keep the FP representative and drop the real match.
-    val left = strs(1L -> "ab", 1L -> "bad")
-    val right = strs(2L -> "ba")
-    val got = FuzzyJoin.deletionJoin(left, right, maxDist = 1)
+    val got = FuzzyJoin.selfMatch(strs(1L -> "ab", 1L -> "bad", 2L -> "ba"), maxDist = 1)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
         r.getLong(4))).toSet

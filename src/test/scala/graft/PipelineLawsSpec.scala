@@ -218,47 +218,6 @@ class PipelineLawsSpec extends SparkSpec {
     assert(nbStreamed.sameElements(nbBatch) && nbBatch.nonEmpty)
   }
 
-  test("upsertStream converges to the batch CDC merge on any interleaving") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val rng = new scala.util.Random(11)
-    // per-key change history: a few upserts, some ending in a delete
-    val changes = (0L until 8L).flatMap { k =>
-      val n = 1 + rng.nextInt(4)
-      val hist = (1 to n).map(seq => (k, "U", seq.toLong, s"v$k-$seq"))
-      if (k % 3 == 2) hist :+ ((k, "D", (n + 1).toLong, "x")) else hist
-    }
-    val scrambled = rng.shuffle(changes)
-    val in = MemoryStream[(Long, String, Long, String)]
-    val out = StreamingOps.upsertStream(
-      in.toDF().toDF("key", "op", "seq", "payload"))
-    val q = out.writeStream.format("memory").queryName("ups")
-      .outputMode(OutputMode.Update()).start()
-    scrambled.grouped(5).foreach { batch =>
-      in.addData(batch); q.processAllAvailable()
-    }
-    q.stop()
-    // final view = per key the row with the winning (seq, op)
-    val view = s.sql("SELECT * FROM ups").collect()
-      .groupBy(_.getLong(0))
-      .map { case (k, rows) =>
-        val last = rows.maxBy(r => (r.getLong(1), if (r.getBoolean(3)) "D" else "U"))
-        (k, last.getString(2), last.getBoolean(3))
-      }.toSet
-    val empty = Seq.empty[(Long, String)].toDF("key", "payload")
-    val batchChanges = changes.toDF("key", "op", "seq", "payload")
-      .select("key", "payload", "op", "seq")
-    val merged = graft.operators.Cdc
-      .mergeChanges(empty, batchChanges, Seq("key"))
-      .collect().map(r => (r.getLong(0), r.getString(1), false)).toSet
-    val live = view.filterNot(_._3)
-    assert(live == merged, s"stream=$live batch=$merged")
-    // deleted keys surfaced as tombstones, exactly the %3==2 keys
-    assert(view.filter(_._3).map(_._1) == Set(2L, 5L),
-      view.filter(_._3).toString)
-  }
-
   test("greedy packing invariants hold at 200k docs across 64 real partitions") {
     val s = spark
     import s.implicits._

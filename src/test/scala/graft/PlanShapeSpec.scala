@@ -294,8 +294,6 @@ class PlanShapeSpec extends SparkSpec {
           "graft_pq_adc_cosine"),
         ("ivfPqrTopKBatch", Similarity.ivfPqrTopKBatch(ivf, pqr, emb, qs, 5, 2, 20),
           "graft_pq_adc_sum"),
-        ("ivfBinaryTopKBatch",
-          Similarity.ivfBinaryTopKBatch(ivf, bin, emb, qs, 5, 2, 20), "bit_count"),
         ("ivfBinaryResidualTopKBatch",
           Similarity.ivfBinaryResidualTopKBatch(ivf, res, emb, qs, 5, 2, 20),
           "bit_count"))

@@ -408,18 +408,6 @@ class PqSpec extends SparkSpec {
         .toSet
       assert(batch == single,
         s"batch/single diverge with rotation: ${batch diff single} / ${single diff batch}")
-      // SAVE/LOAD: the rotation is index state — it round trips and
-      // the loaded index answers identically
-      val dir = java.nio.file.Files.createTempDirectory("graft-pqr-rot").toString
-      Similarity.pqResidualSave(pqr, dir)
-      val loaded = Similarity.pqResidualLoad(spark, dir)
-      assert(loaded.rot.isDefined &&
-        loaded.rot.get.indices.forall(i =>
-          loaded.rot.get(i).toSeq == rot(i).toSeq))
-      val viaLoaded = Similarity.ivfPqrTopK(iv, loaded, emb, query,
-          k = 10, nprobe = 8, rerank = 600)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(viaLoaded == exact)
     } finally {
       Similarity.pqResidualRelease(pqr)
       Similarity.ivfRelease(iv)

@@ -351,9 +351,6 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.annTopK(emb, q, 20)
       .collect().map(_.getLong(0)).toSet
     def recall(ids: Set[Long]): Double = ids.intersect(exact).size / 20.0
-    val lsh = Similarity.annTopKLsh(emb, q, 20)
-      .collect().map(_.getLong(0)).toSet
-    assert(recall(lsh) >= 0.9, s"LSH recall@20 = ${recall(lsh)} < 0.9")
     // deterministic SRP path (the v_ann_topk_lsh driver query):
     // 256 planes / 240 candidates measured at 0.95 on this fixture
     val ham = Similarity.annTopKHamming(emb, q, 20)
@@ -1370,23 +1367,6 @@ class SimilaritySpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSet
       assert(pruned.intersect(exact).size >= 7,
         s"ivf+binary recall@10 too low: $pruned")
-      // batch face equals the single-query path per qid
-      val qids = Seq(3L, 11L, 200L)
-      val qs = emb.where(F.col("id").isin(qids: _*))
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      val batch = Similarity.ivfBinaryTopKBatch(
-          ivf, bin, emb, qs, k = 5, nprobe = 3, rerank = 60)
-        .collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq)
-        .toMap
-      for (qid <- qids) {
-        val qv = emb.where(F.col("id") === qid)
-          .select("vec").head.getSeq[Double](0).toArray
-        val single = Similarity.ivfBinaryTopK(
-            ivf, bin, emb, qv, 5, nprobe = 3, rerank = 60)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(batch(qid) == single, s"ivf+binary batch diverged for qid $qid")
-      }
     } finally Similarity.ivfRelease(ivf)
   }
 
@@ -1450,8 +1430,6 @@ class SimilaritySpec extends SparkSpec {
     val pred = F.col("label") === 1
     val ivf = Similarity.ivfBuild(emb, nLists = 8)
     val sq8 = Similarity.sq8Encode(emb)
-    val pq = Similarity.pqBuild(emb, m = 8, ksub = 16)
-    val pqr = Similarity.pqResidualBuild(ivf, m = 8, ksub = 16)
     val bin = Similarity.binaryEncode(emb)
     try {
       val n = emb.count().toInt
@@ -1465,10 +1443,6 @@ class SimilaritySpec extends SparkSpec {
       val faces: Seq[(String, (Int, Int) => org.apache.spark.sql.DataFrame)] = Seq(
         ("sq8", (np, rr) => Similarity.ivfSq8TopKWhere(
           ivf, sq8, emb, meta, pred, query, 10, np, rr)),
-        ("pq", (np, rr) => Similarity.ivfPqTopKWhere(
-          ivf, pq, emb, meta, pred, query, 10, np, rr)),
-        ("pqr", (np, rr) => Similarity.ivfPqrTopKWhere(
-          ivf, pqr, emb, meta, pred, query, 10, np, rr)),
         ("binary", (np, rr) => Similarity.ivfBinaryTopKWhere(
           ivf, bin, emb, meta, pred, query, 10, np, rr)))
       for ((name, face) <- faces) {
@@ -1482,54 +1456,9 @@ class SimilaritySpec extends SparkSpec {
         assert(pruned.size == 10 && pruned.forall(_ % 3 == 1),
           s"$name Where face returned non-matching or short results at a pruned point")
       }
-      // batch faces equal the single-query faces per qid at a pruned
-      // operating point (shared probe + filter plumbing, cannot drift)
-      val qids = Seq(3L, 11L, 200L)
-      val qs = emb.where(F.col("id").isin(qids: _*))
-        .select(F.col("id").as("qid"), F.col("vec").as("qvec"))
-      def byQid(df: org.apache.spark.sql.DataFrame) =
-        df.collect().groupBy(_.getLong(0))
-          .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq)
-          .toMap
-      val batches = Seq(
-        ("sq8", byQid(Similarity.ivfSq8TopKBatchWhere(
-          ivf, sq8, emb, meta, pred, qs, 5, 4, 60)),
-          (qv: Array[Double]) => Similarity.ivfSq8TopKWhere(
-            ivf, sq8, emb, meta, pred, qv, 5, 4, 60)),
-        ("pq", byQid(Similarity.ivfPqTopKBatchWhere(
-          ivf, pq, emb, meta, pred, qs, 5, 4, 60)),
-          (qv: Array[Double]) => Similarity.ivfPqTopKWhere(
-            ivf, pq, emb, meta, pred, qv, 5, 4, 60)),
-        ("pqr", byQid(Similarity.ivfPqrTopKBatchWhere(
-          ivf, pqr, emb, meta, pred, qs, 5, 4, 60)),
-          (qv: Array[Double]) => Similarity.ivfPqrTopKWhere(
-            ivf, pqr, emb, meta, pred, qv, 5, 4, 60)),
-        ("binary", byQid(Similarity.ivfBinaryTopKBatchWhere(
-          ivf, bin, emb, meta, pred, qs, 5, 4, 60)),
-          (qv: Array[Double]) => Similarity.ivfBinaryTopKWhere(
-            ivf, bin, emb, meta, pred, qv, 5, 4, 60)))
-      for (qid <- qids; (name, batch, single) <- batches) {
-        val qv = emb.where(F.col("id") === qid)
-          .select("vec").head.getSeq[Double](0).toArray
-        val want = single(qv)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(batch(qid) == want,
-          s"$name filtered batch diverged for qid $qid")
-      }
-      // an always-true predicate reduces every Where face to the
-      // unfiltered operator exactly (the filter join is a no-op)
-      val allTrue = Similarity.ivfSq8TopKBatchWhere(
-          ivf, sq8, emb, meta, F.lit(true), qs, 5, 4, 60)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val unfiltered = Similarity.ivfSq8TopKBatch(ivf, sq8, emb, qs, 5, 4, 60)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(allTrue == unfiltered,
-        "true-predicate Where face diverged from the unfiltered operator")
     } finally {
       Similarity.ivfRelease(ivf)
       Similarity.sq8Release(sq8)
-      Similarity.pqRelease(pq)
-      Similarity.pqResidualRelease(pqr)
       Similarity.binaryRelease(bin)
     }
   }
@@ -1597,16 +1526,19 @@ class SimilaritySpec extends SparkSpec {
       val shard = rows(Similarity
         .ivfTopKBatchHierSharded(tl, qs, k = 5, nprobe = 4, coarseCells = 2))
       assert(shard == bcast, "sharded probe selection diverged from broadcast")
-      // the scale form: a two-level ivfSave writes the sub-center
-      // table next to the lists, and the saved table serves the same
-      // answers through the sharded path
+      // ivfSave persists no sub-center table, and every save removes
+      // the subcenters/ an older save left beside a hierarchy
       val dir = java.nio.file.Files
         .createTempDirectory("graft-subcenters").toString
+      def saved(name: String) = new java.io.File(dir, name).exists
+      def plantOldSubCenters(): Unit = {
+        subs.write.mode("overwrite").parquet(s"$dir/subcenters")
+        assert(saved("subcenters"))
+      }
+      plantOldSubCenters()
       Similarity.ivfSave(tl, dir)
-      val fromDisk = Similarity.ivfSubCentersAt(s, dir)
-      val shard2 = rows(Similarity.ivfTopKBatchHierSharded(
-        tl, qs, k = 5, nprobe = 4, coarseCells = 2, Some(fromDisk)))
-      assert(shard2 == bcast, "parquet-backed sub-centers diverged")
+      assert(saved("twolevel.json") && !saved("subcenters"),
+        "a two-level save left a sub-center table")
       // a flat index refuses with the actionable message
       val flat = Similarity.ivfBuild(emb, nLists = 8)
       try {
@@ -1616,60 +1548,14 @@ class SimilaritySpec extends SparkSpec {
         // a FLAT re-save over the two-level path removes the hierarchy
         // artifacts — a stale twolevel.json/subcenters would reference
         // the OLD list ids against the NEW lists
+        plantOldSubCenters()
         Similarity.ivfSave(flat, dir)
         assert(Similarity.ivfLoad(s, dir).hier.isEmpty,
           "stale hierarchy survived a flat re-save")
-        val e2 = intercept[IllegalArgumentException](
-          Similarity.ivfSubCentersAt(s, dir))
-        assert(e2.getMessage.contains("saved flat"))
+        assert(!saved("twolevel.json") && !saved("subcenters"),
+          "a flat re-save left hierarchy artifacts")
       } finally Similarity.ivfRelease(flat)
     } finally Similarity.ivfRelease(tl)
-  }
-
-  test("bitextMineApproxHier: full probes match the flat contract; pruning keeps planted pairs") {
-    // the fine-list re-mine path with hierarchical probe selection:
-    // at coarseCells = all cells AND nprobe = k the probes equal the
-    // flat path's and every list is scanned, so the mined pairs must
-    // equal the flat quantizer's full-probe result; under real
-    // two-axis pruning (cells AND lists) the planted translations
-    // must survive
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(59)
-    def v(i: Int): Array[Double] =
-      Array.tabulate(24)(f => math.sin(i * 1.7 + f * 0.61))
-    val a = (0 until 40).map(i => (i.toLong, v(i))).toDF("id", "vec")
-    val b = (0 until 40).map(i =>
-      (i + 1000L, v(i).map(_ + rng.nextGaussian() * 0.05))).toDF("id", "vec")
-    val flatFull = Similarity
-      .bitextMineApprox(a, b, k = 4, threshold = 1.0, nLists = 4, nprobe = 4)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
-    val fa = Similarity.ivfBuildTwoLevel(a, nLists = 8)
-    val fb = Similarity.ivfBuildTwoLevel(b, nLists = 8)
-    try {
-      val allCells = math.max(
-        fa.hier.get.coarse.length, fb.hier.get.coarse.length)
-      val hierFull = Similarity
-        .bitextMineApproxHier(fa, fb, a, b, k = 4, threshold = 1.0,
-          nprobe = math.max(fa.k, fb.k), coarseCells = allCells)
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
-      assert(hierFull == flatFull,
-        s"hier full-probe mining diverged from the flat contract; " +
-          s"missing=${(flatFull diff hierFull).take(3)} " +
-          s"extra=${(hierFull diff flatFull).take(3)}")
-      val pruned = Similarity
-        .bitextMineApproxHier(fa, fb, a, b, k = 4, threshold = 0.0,
-          nprobe = 3, coarseCells = 2)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val planted = pruned.count { case (ia, ib) => ib == ia + 1000L }
-      assert(planted >= 30,
-        s"hierarchical pruning lost the planted pairs: $planted/40")
-    } finally {
-      Similarity.ivfRelease(fa)
-      Similarity.ivfRelease(fb)
-    }
   }
 
   test("fitPerGroup: layout-invariant per-cell centers") {
@@ -1687,30 +1573,6 @@ class SimilaritySpec extends SparkSpec {
       assert(m1(g).length == 4)
       assert(m1(g).map(_.toSeq).toSeq == m2(g).map(_.toSeq).toSeq,
         s"cell $g centers depend on partition layout")
-    }
-  }
-
-  test("residual index save/load round-trips codes, n2hat and books") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqr").toString
-    val ivf = Similarity.ivfBuild(emb, nLists = 8)
-    val pqr = Similarity.pqResidualBuild(ivf, m = 4, ksub = 8)
-    try {
-      Similarity.pqResidualSave(pqr, dir)
-      val loaded = Similarity.pqResidualLoad(spark, dir)
-      assert(loaded.m == 4 && loaded.ksub == 8 && loaded.dsub == 8)
-      assert(java.util.Arrays.deepEquals(
-        loaded.books.flatten.map(_.asInstanceOf[AnyRef]),
-        pqr.books.flatten.map(_.asInstanceOf[AnyRef])))
-      val a = Similarity
-        .ivfPqrTopK(ivf, pqr, emb, query, k = 5, nprobe = 3, rerank = 40)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val b = Similarity
-        .ivfPqrTopK(ivf, loaded, emb, query, k = 5, nprobe = 3, rerank = 40)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(a == b, s"loaded index diverged: $a vs $b")
-    } finally {
-      Similarity.ivfRelease(ivf)
-      Similarity.pqResidualRelease(pqr)
     }
   }
 
@@ -1965,44 +1827,6 @@ class SimilaritySpec extends SparkSpec {
     } finally Similarity.ivfRelease(ivf)
   }
 
-  test("rebuildIfDrifted: no-drift measures and skips, drift rebuilds (VERDICT r13 #5)") {
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(29)
-    def cloud(modes: Seq[Int], ids: Range) = ids.map { i =>
-      val m = modes(i % modes.length)
-      (i.toLong, Array.tabulate(16)(f =>
-        math.sin(m * 1.1 + f * 0.5) + rng.nextGaussian() * 0.05))
-    }
-    val ref = cloud(Seq(0, 1, 2, 3), 0 until 200)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rebifdrift").toString
-    val ivf = Similarity.ivfBuild(ref.toDF("id", "vec"), nLists = 4)
-    Similarity.ivfSave(ivf, dir)
-    val centsBefore = ivf.centroids.map { case (c, v) => (c, v.toSeq) }.toSeq
-    Similarity.ivfRelease(ivf)
-    // no drift: the same distribution — one assignment pass, nothing
-    // rebuilt, layout byte-identical (centroids unchanged)
-    val (psi1, reb1) = Similarity.rebuildIfDrifted(
-      s, dir, cloud(Seq(0, 1, 2, 3), 500 until 700).toDF("id", "vec"))
-    assert(!reb1 && psi1 < 0.25, s"no-drift path fired: psi=$psi1 reb=$reb1")
-    assert(Similarity.ivfLoad(s, dir).centroids
-      .map { case (c, v) => (c, v.toSeq) }.toSeq == centsBefore,
-      "no-drift path touched the layout")
-    // drift: mass concentrated on half the modes crosses the 0.25 bar
-    // and the rebuild runs — the layout re-fits (cold-build law is
-    // pinned by the ivfRebuild spec; here we pin that it HAPPENED)
-    val (psi2, reb2) = Similarity.rebuildIfDrifted(
-      s, dir, cloud(Seq(0, 1), 1000 until 1200).toDF("id", "vec"),
-      targetListSize = 25)
-    assert(reb2 && psi2 > 0.25, s"drift path did not fire: psi=$psi2")
-    val after = Similarity.ivfLoad(s, dir)
-    assert(after.assigned.count() == 200L,
-      "rebuild changed the stored row set")
-    assert(after.k == Similarity.suggestLists(200L, 25),
-      s"rebuild did not re-fit at the requested sizing: k=${after.k}")
-  }
-
   test("codesLayoutRemove: erases across every codec family's saved layout; guards hold") {
     val s = spark
     import s.implicits._
@@ -2110,24 +1934,14 @@ class SimilaritySpec extends SparkSpec {
           Similarity.ivfSq8TopKWhere(ivf, sq8, corpus, meta, pred, q, k, p, r)),
         ("ivfSq8TopKBatch", (k, r, p, q) =>
           Similarity.ivfSq8TopKBatch(ivf, sq8, corpus, qs(q), k, p, r)),
-        ("ivfSq8TopKBatchWhere", (k, r, p, q) =>
-          Similarity.ivfSq8TopKBatchWhere(ivf, sq8, corpus, meta, pred, qs(q), k, p, r)),
         ("ivfPqTopK", (k, r, p, q) =>
           Similarity.ivfPqTopK(ivf, pq, corpus, q, k, p, r)),
-        ("ivfPqTopKWhere", (k, r, p, q) =>
-          Similarity.ivfPqTopKWhere(ivf, pq, corpus, meta, pred, q, k, p, r)),
         ("ivfPqTopKBatch", (k, r, p, q) =>
           Similarity.ivfPqTopKBatch(ivf, pq, corpus, qs(q), k, p, r)),
-        ("ivfPqTopKBatchWhere", (k, r, p, q) =>
-          Similarity.ivfPqTopKBatchWhere(ivf, pq, corpus, meta, pred, qs(q), k, p, r)),
         ("ivfPqrTopK", (k, r, p, q) =>
           Similarity.ivfPqrTopK(ivf, pqr, corpus, q, k, p, r)),
-        ("ivfPqrTopKWhere", (k, r, p, q) =>
-          Similarity.ivfPqrTopKWhere(ivf, pqr, corpus, meta, pred, q, k, p, r)),
         ("ivfPqrTopKBatch", (k, r, p, q) =>
           Similarity.ivfPqrTopKBatch(ivf, pqr, corpus, qs(q), k, p, r)),
-        ("ivfPqrTopKBatchWhere", (k, r, p, q) =>
-          Similarity.ivfPqrTopKBatchWhere(ivf, pqr, corpus, meta, pred, qs(q), k, p, r)),
         ("ivfBinaryTopK", (k, r, p, q) =>
           Similarity.ivfBinaryTopK(ivf, bin, corpus, q, k, p, r)),
         ("ivfBinaryTopKWhere", (k, r, p, q) =>
@@ -2136,10 +1950,6 @@ class SimilaritySpec extends SparkSpec {
           Similarity.ivfBinaryTopKTieAware(ivf, bin, corpus, q, k, p, r)),
         ("ivfBinaryTopKTieAwareWhere", (k, r, p, q) =>
           Similarity.ivfBinaryTopKTieAwareWhere(ivf, bin, corpus, meta, pred, q, k, p, r)),
-        ("ivfBinaryTopKBatch", (k, r, p, q) =>
-          Similarity.ivfBinaryTopKBatch(ivf, bin, corpus, qs(q), k, p, r)),
-        ("ivfBinaryTopKBatchWhere", (k, r, p, q) =>
-          Similarity.ivfBinaryTopKBatchWhere(ivf, bin, corpus, meta, pred, qs(q), k, p, r)),
         ("ivfBinaryTopKBatchTieAware", (k, r, p, q) =>
           Similarity.ivfBinaryTopKBatchTieAware(ivf, bin, corpus, qs(q), k, p, r)),
         ("ivfBinaryTopKBatchTieAwareWhere", (k, r, p, q) =>
@@ -2215,8 +2025,6 @@ class SimilaritySpec extends SparkSpec {
             qs(q).withColumn("qlabel", F.lit("0")), k, p)),
         ("bitextMineApprox(prebuilt)", false, (k, p, q) =>
           Similarity.bitextMineApprox(ivf, ivf, side(q), corpus, k, 0.0, p)),
-        ("bitextMineApproxHier", false, (k, p, q) =>
-          Similarity.bitextMineApproxHier(two, two, side(q), corpus, k, 0.0, p)),
         ("bitextMinePq(prebuilt)", false, (k, p, q) =>
           Similarity.bitextMinePq(ivf, ivf, pq, pq, side(q), corpus, k, 0.0, p, 10)))
       val good = Array.tabulate(dims)(f => math.cos(f * 0.3))

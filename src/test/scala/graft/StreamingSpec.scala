@@ -8,46 +8,6 @@ import java.sql.Timestamp
 /** Streaming operators driven through MemoryStream sources. */
 class StreamingSpec extends SparkSpec {
 
-  test("watermarked windowed event counts aggregate by hour") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val df = in.toDF().toDF("ts", "event_type", "value")
-    val t0 = Timestamp.valueOf("2024-01-01 10:05:00")
-    val t1 = Timestamp.valueOf("2024-01-01 10:55:00")
-    val t2 = Timestamp.valueOf("2024-01-01 11:10:00")
-    in.addData((t0, "click", 1.0), (t1, "click", 2.0), (t2, "view", 3.0))
-    StreamingOps.runToMemory(
-      StreamingOps.windowedEventCounts(df), "wec", OutputMode.Complete())
-    val rows = s.sql("SELECT * FROM wec").collect()
-    assert(rows.length >= 2)
-    val clicks10 = rows.find(r =>
-      r.getTimestamp(0) == Timestamp.valueOf("2024-01-01 10:00:00") &&
-        r.getString(1) == "click")
-    assert(clicks10.exists(_.getLong(2) == 2L))
-  }
-
-  test("stateful running user stats accumulate across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val in = MemoryStream[(Long, Double)]
-    val df = in.toDF().toDF("user_id", "value")
-    val out = StreamingOps.runningUserStats(df)
-    val q = out.writeStream.format("memory").queryName("rus")
-      .outputMode(OutputMode.Update()).start()
-    in.addData((1L, 2.0), (1L, 4.0), (2L, 10.0))
-    q.processAllAvailable()
-    in.addData((1L, 6.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = s.sql("SELECT * FROM rus WHERE user_id = 1 ORDER BY n DESC").collect()
-    assert(rows.nonEmpty)
-    assert(rows.head.getLong(1) == 3L) // n
-    assert(math.abs(rows.head.getDouble(2) - 4.0) < 1e-9) // mean of 2,4,6
-  }
-
   test("streaming sessionization closes sessions by gap and by event-time timeout") {
     val s = spark
     import s.implicits._
@@ -115,80 +75,6 @@ class StreamingSpec extends SparkSpec {
     assert(n == 500L, s"expected 500 distinct fingerprints, got $n")
   }
 
-  test("streaming dedup keeps first occurrence across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val out = StreamingOps.dedupStream(in.toDF().toDF("doc_id", "text"))
-    val q = out.writeStream.format("memory").queryName("sdedup")
-      .outputMode(OutputMode.Append()).start()
-    in.addData((1L, "alpha beta"), (2L, "gamma delta"))
-    q.processAllAvailable()
-    in.addData((3L, "alpha  beta"), (4L, "epsilon")) // 3 is a normalized dup of 1
-    q.processAllAvailable()
-    q.stop()
-    val kept = s.sql("SELECT doc_id FROM sdedup ORDER BY doc_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(kept == Seq(1L, 2L, 4L), s"got $kept")
-  }
-
-  test("streaming append extends a saved index; reload sees new items with correct lambda") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    // build + save a small index
-    val base = (0L until 40L).map { i =>
-      (i, Array.tabulate(8)(f => math.sin(i * 0.7 + f * 0.3) + 1.5))
-    }.toDF("id", "vec")
-    val (model, _) = graft.api.ArrowSpaceBuilder.build(
-      base, graft.core.GraphParams(eps = 1.0, k = 5, topk = 5))
-    val dir = java.nio.file.Files.createTempDirectory("graft-inc").toString
-    model.save(dir)
-
-    // stream two new vectors into the saved items table
-    val in = MemoryStream[(Long, Array[Double])]
-    val q = StreamingOps.appendToIndex(
-      in.toDF().toDF("id", "vec"), model.featureLaplacian, model.tau,
-      dir, dir + "/ckpt")
-    val v100 = Array.tabulate(8)(f => math.cos(f * 0.5) + 1.2)
-    in.addData((100L, v100), (101L, v100.map(_ * 2.0)))
-    q.processAllAvailable()
-    q.stop()
-
-    val reloaded = graft.api.ArrowSpaceModel.load(s, dir)
-    val rows = reloaded.items.where(org.apache.spark.sql.functions.col("id") >= 100L)
-      .collect()
-    assert(rows.length == 2)
-    // streamed lambda matches the batch synth formula exactly
-    val lam100 = rows.find(_.getLong(0) == 100L).get.getAs[Double]("lambda")
-    assert(math.abs(lam100 - model.featureLaplacian.synth(v100, model.tau)) < 1e-12)
-    // and the reloaded index searches across old + new items
-    assert(reloaded.search(v100, tau = 0.62, topk = 3).count() == 3)
-  }
-
-  test("streaming lambda-scoring matches the batch kernel") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val lap = graft.spectral.LocalLaplacian(
-      3, Array(graft.spectral.LapEdge(0, 1, 0.5), graft.spectral.LapEdge(1, 2, 0.25)))
-    val query = Array(1.0, 0.5, 0.25)
-    val in = MemoryStream[(Long, Array[Double])]
-    val df = in.toDF().toDF("id", "vec")
-    val scored = StreamingOps.scoreStream(df, lap, tau = 0.5, query, blend = 0.62)
-    val q = scored.writeStream.format("memory").queryName("ss")
-      .outputMode(OutputMode.Append()).start()
-    in.addData((7L, Array(1.0, 0.5, 0.25)), (8L, Array(0.1, 0.9, 0.4)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = s.sql("SELECT * FROM ss ORDER BY id").collect()
-    assert(rows.length == 2)
-    // id 7 is the query itself: cos = 1, lambda == lambda_q -> score = blend + (1-blend)
-    assert(math.abs(rows.head.getDouble(2) - 1.0) < 1e-9)
-    assert(rows(1).getDouble(2) < 1.0)
-  }
-
   test("streaming near-dup gate flags arrivals that collide with the static corpus") {
     val s = spark
     import s.implicits._
@@ -213,26 +99,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows.contains((1L, 100L)), s"planted near-dup not flagged: $rows")
     assert(!rows.exists(_._1 == 2L), s"clean doc falsely flagged: $rows")
-  }
-
-  test("watermark-bounded dedup drops in-window duplicates and keeps state finite") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val in = MemoryStream[(Timestamp, Long, String)]
-    val df = in.toDF().toDF("ts", "doc_id", "text")
-    val out = graft.streaming.StreamingOps
-      .dedupStreamWithinWatermark(df, "ts", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("wmd")
-      .outputMode(OutputMode.Append()).start()
-    val t = Timestamp.valueOf("2024-01-01 10:00:00")
-    val t2 = Timestamp.valueOf("2024-01-01 10:01:00")
-    in.addData((t, 1L, "alpha beta"), (t2, 2L, "alpha beta"), (t2, 3L, "gamma delta"))
-    q.processAllAvailable()
-    q.stop()
-    val ids = s.sql("SELECT doc_id FROM wmd").collect().map(_.getLong(0)).toSet
-    assert(ids.contains(3L))
-    assert((ids - 3L).size == 1, s"duplicate not collapsed within watermark: $ids")
   }
 
   test("streaming decontamination gate drops eval-overlapping docs at input rate") {
