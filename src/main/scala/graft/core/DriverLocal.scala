@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
@@ -33,9 +35,9 @@ private[graft] object DriverLocal {
 
   /** The one bound: `ArrowSpaceModel.searchBatch`'s driver-held query
     * table (its n × k result rows, and the heap pairs one merge level
-    * sends the driver) and what a streaming gate's driver-decided
-    * micro-batch holds on the driver (the batch, and each state scan's
-    * result). */
+    * sends the driver), `ArrowSpaceBuilder.build`'s driver-held items,
+    * and what a streaming gate's driver-decided micro-batch holds on
+    * the driver (the batch, and each state scan's result). */
   val Default: Bound = Bound(rows = 100000L, bytes = 128L * 1024 * 1024)
 
   /** Most candidate pairs a driver-side pair stage ([[pairs]])
@@ -51,7 +53,13 @@ private[graft] object DriverLocal {
     * `distinct`, each task drops rows it already holds before they
     * count against its share. Row order is `collect()`'s. */
   def collect(df: DataFrame, b: Bound,
-      distinct: Boolean = false): Option[Array[InternalRow]] = {
+      distinct: Boolean = false): Option[Array[InternalRow]] =
+    collectParts(df, b, distinct).map(_.flatten)
+
+  /** [[collect]] with the rows of each partition kept apart, in
+    * partition-index order. */
+  def collectParts(df: DataFrame, b: Bound,
+      distinct: Boolean = false): Option[Array[Array[InternalRow]]] = {
     val schema = df.schema
     val rdd = df.queryExecution.toRdd
     val n = math.max(1, rdd.getNumPartitions).toLong
@@ -73,7 +81,66 @@ private[graft] object DriverLocal {
         }
         if (share.fits(buf.length, sz)) buf.toArray else null
       })
-    if (parts.contains(null)) None else Some(parts.flatten)
+    if (parts.contains(null)) None else Some(parts)
+  }
+
+  /** Σ over `rdd`'s partitions of `partial(rows)`, element-wise, in ONE
+    * job and in a fixed order: the partials are keyed by partition index
+    * and every sum adds them in index order, so a float sum's bits
+    * depend on the rows and their partitioning only, never on the order
+    * tasks finish in (`treeAggregate` ends in `RDD.fold`, which merges
+    * results as they arrive). When the partials would bring more than
+    * `maxBytes` to the driver, a shuffle stage first sums runs of
+    * consecutive partials on the executors ([[runLength]]), so at most
+    * about `maxBytes` of them reach the driver. */
+  def sumPartials[T](rdd: RDD[T], size: Int, maxBytes: Long = Default.bytes)(
+      partial: Iterator[T] => Array[Double]): Array[Double] = {
+    val n = rdd.getNumPartitions
+    val partials = rdd.mapPartitions(it => Iterator.single(partial(it)))
+    val level = runLength(n, size, maxBytes) match {
+      case None => partials
+      case Some(run) =>
+        val runs = new Partitioner {
+          def numPartitions: Int = (n + run - 1) / run
+          def getPartition(key: Any): Int = key.asInstanceOf[Int] / run
+        }
+        // each task sorts its run by partition index (spilling if it
+        // must) and sums it in that order
+        partials.mapPartitionsWithIndex((i, it) => it.map(i -> _))
+          .repartitionAndSortWithinPartitions(runs)
+          .mapPartitions(it => Iterator.single(addInOrder(it.map(_._2), size)))
+    }
+    addInOrder(rdd.sparkContext.runJob(level, (it: Iterator[Array[Double]]) => it.next()).iterator, size)
+  }
+
+  /** [[sumPartials]] of partials already on the driver, one per
+    * partition in index order: the same runs, so the same bits. */
+  def sumHeld(parts: Seq[Array[Double]], size: Int, maxBytes: Long = Default.bytes): Array[Double] = {
+    val level = runLength(parts.length, size, maxBytes)
+      .fold(parts)(run => parts.grouped(run).map(r => addInOrder(r.iterator, size)).toSeq)
+    addInOrder(level.iterator, size)
+  }
+
+  /** How many consecutive partials one executor-side sum takes, when
+    * `n` partials of `size` doubles would bring more than `maxBytes` to
+    * the driver: enough that at most `maxBytes / (8·size)` partials (and
+    * at most about √n, so the shuffle stage has few tasks) reach it.
+    * None when all `n` fit. */
+  private def runLength(n: Int, size: Int, maxBytes: Long): Option[Int] =
+    if (n.toLong * size * 8L <= maxBytes) None
+    else {
+      val fit = math.max(1L, math.min(maxBytes / (8L * size), math.ceil(math.sqrt(n)).toLong)).toInt
+      Some((n + fit - 1) / fit)
+    }
+
+  /** Element-wise sum of `size`-long partials, added in order. */
+  private def addInOrder(parts: Iterator[Array[Double]], size: Int): Array[Double] = {
+    val out = new Array[Double](size)
+    parts.foreach { p =>
+      var i = 0
+      while (i < size) { out(i) += p(i); i += 1 }
+    }
+    out
   }
 
   /** The rows of a frame over a `Shim.localFrame` whose projections and

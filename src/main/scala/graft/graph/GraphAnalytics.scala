@@ -499,7 +499,7 @@ object GraphAnalytics {
     * forced O(N)-node broadcast that is a driver/executor OOM at
     * 100× graph scale, not a plan choice (VERDICT r7 #3). Here the
     * removed-node side is genuinely small after round 1 and AQE picks
-    * broadcast vs shuffle from measured sizes ([[peelOnce]] is
+    * broadcast vs shuffle from measured sizes ([[peelDeltaOnce]] is
     * hint-free; PlanShapeSpec pins that). Peeling is MONOTONE — edges
     * are only ever removed — so an unchanged edge COUNT proves an
     * unchanged edge SET and the loop stops on the count alone (no set

@@ -4,7 +4,10 @@ import graft.core.GraphParams
 import graft.functions.VectorFunctions._
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Distributed eps-kNN similarity graph over item embeddings
   * (reference semantics: GRAPH_VARIABLES.md:7-10 — rectified-cosine
@@ -118,9 +121,32 @@ object KnnGraph {
       BlockScore.Within(params.eps, params.k), Seq("src", "dst", "dist"))
   }
 
+  /** [[epsKnnEdges]]' brute-force edges of the driver-held (id, vnorm)
+    * rows decoded in `nodes`, in ONE job: the same
+    * [[graft.scale.BlockScore]] `Within` scan, of the block against
+    * itself ([[graft.scale.BlockScore.scanSelf]]); the k-capped edges
+    * come back to the driver, which symmetrises them with the min
+    * distance and folds [[weightKernel]] over a local frame. Returns the
+    * edges as a local frame sorted by (src, dst): the rows the
+    * distributed path returns, in a fixed order. */
+  private[graft] def localEdges(spark: SparkSession, nodes: graft.scale.BlockScore.Block,
+      params: GraphParams): DataFrame = {
+    import graft.scale.BlockScore
+    val directed = BlockScore.scanSelf(spark, nodes, BlockScore.Within(params.eps, params.k),
+      spark.sparkContext.defaultParallelism)
+    val sym = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+    directed.foreach { case (a, b, d) =>
+      Seq((a, b), (b, a)).foreach(e => sym(e) = sym.get(e).fold(d)(math.min(_, d)))
+    }
+    val rows = sym.toSeq.sortBy(_._1).map { case ((a, b), d) => InternalRow(a, b, d) }
+    val weighted = Shim.localFrame(spark, StructType(Seq(StructField("src", LongType),
+        StructField("dst", LongType, nullable = false), StructField("dist", DoubleType))), rows)
+      .withColumn("weight", weightKernel(F.col("dist"), params.sigmaValue, params.p))
+    Shim.localFrame(spark, weighted.schema, graft.core.DriverLocal.folded(weighted))
+  }
+
   private def directedLsh(
-      items: DataFrame, params: GraphParams,
-      options: LshOptions = LshOptions()): DataFrame = {
+      items: DataFrame, params: GraphParams, options: LshOptions): DataFrame = {
     // hash L2-normalized vectors regardless of the builder's
     // `normalise` flag: the √(2·eps) Euclidean radius is only
     // meaningful on the unit sphere, and with raw vectors (normalise =

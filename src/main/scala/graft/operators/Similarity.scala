@@ -3165,7 +3165,6 @@ object Similarity {
       emb: DataFrame, queries: DataFrame, k: Int,
       maxLabels: Int = 10000,
       maxScoredPairs: Long = 25000000L): DataFrame = {
-    val spark = emb.sparkSession
     val items = emb.select(
       F.col("id").cast("long"),
       F.col("vec").cast("array<double>"),

@@ -217,6 +217,35 @@ private[graft] object IndexQueries {
          |  CROSS JOIN (SELECT lambda FROM lam WHERE id = 0) lq
          |  ORDER BY score DESC, l.id ASC LIMIT 10)""".stripMargin),
 
+    QuerySpec("a_search_batch", (s, d) => {
+      val (m, _) = model(s, d)
+      // three items' raw embeddings as the queries, so each query's λ
+      // is that item's stored λ (the same synth formula, the same L)
+      val q = emb(s, d).where(F.col("id").isin(0L, 3L, 7L))
+        .select(F.col("id").as("query_id"), F.col("vec").as("qvec"))
+      Seq(0.8, 0.62).map(tau => m.searchBatch(q, tau, 10).select(F.lit(tau).as("tau"),
+          F.col("query_id"), F.col("id"), F.round(F.col("score"), 6).as("score"), F.col("rank")))
+        .reduce(_ unionByName _)
+    },
+      s"""$SpectralCte,
+         |cosims AS (
+         |  SELECT a.id AS query_id, b.id,
+         |    sum(a.v * b.v) / sqrt(sum(a.v * a.v) * sum(b.v * b.v)) AS cos
+         |  FROM x a JOIN x b ON a.f = b.f AND a.id IN (0, 3, 7)
+         |  GROUP BY a.id, b.id),
+         |taus AS (SELECT CAST(unnest([0.8, 0.62]) AS DOUBLE) AS tau),
+         |scored AS (
+         |  SELECT t.tau, c.query_id, l.id,
+         |    t.tau * c.cos + (1.0 - t.tau) * (1.0 / (1.0 + abs(l.lambda - lq.lambda))) AS score
+         |  FROM lam l JOIN cosims c USING (id)
+         |  JOIN lam lq ON lq.id = c.query_id
+         |  CROSS JOIN taus t)
+         |SELECT tau, query_id, id, round(score, 6) AS score, rank FROM (
+         |  SELECT *, row_number() OVER (
+         |    PARTITION BY tau, query_id ORDER BY score DESC, id ASC) AS rank
+         |  FROM scored)
+         |WHERE rank <= 10""".stripMargin),
+
     QuerySpec("a_search_hybrid", (s, d) => {
       val (m, _) = model(s, d)
       m.searchHybrid(queryVec(s, d), tau = 0.8)

@@ -1349,9 +1349,9 @@ private[graft] object VectorQueries {
         |ORDER BY id""".stripMargin),
 
     QuerySpec("v_pca_summary", (s, d) => {
-      // distributed PCA (engine addition): one treeAggregate moment
-      // pass, deterministic power-iteration factorization, map-only
-      // codegen projection. Output cross-checks the driver-side
+      // distributed PCA (engine addition): one moment pass summed in
+      // partition order, deterministic power-iteration factorization,
+      // map-only codegen projection. Output cross-checks the driver-side
       // eigenvalue against the cluster-side projection variance —
       // two independent computations of the same quantity.
       import s.implicits._

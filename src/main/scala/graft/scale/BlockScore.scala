@@ -1,7 +1,7 @@
 package graft.scale
 
 import graft.functions.VectorKernels
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
@@ -42,6 +42,10 @@ object BlockScore {
       val (vecs, lambdas) = rows.map(decode).unzip
       new Block(rows.map(_.get(0, keyType)).toArray, vecs.toArray, lambdas.toArray)
     }
+
+    /** The rows of `blocks`, in order, as one block. */
+    def concat(blocks: Seq[Block]): Block = new Block(blocks.flatMap(_.keys).toArray,
+      blocks.flatMap(_.vecs).toArray, blocks.flatMap(_.lambdas).toArray)
 
     /** An (id: long, vec) frame read onto the driver by one job. */
     def collect(df: DataFrame): Block =
@@ -160,42 +164,60 @@ object BlockScore {
   def scan(large: DataFrame, small: Block, rule: Rule, names: Seq[String]): DataFrame = {
     val spark = large.sparkSession
     val bc = spark.sparkContext.broadcast(small)
-    val out = large.queryExecution.toRdd.mapPartitions { it =>
-      val b = bc.value
-      val n = b.vecs.length
-      val ids = b.ids
-      val rows = decoded(it)
-      rule match {
-        case Within(eps, k) =>
-          rows.flatMap { case (id, v, nv, _) =>
-            val h = new TopKHeap(k, desc = false)
-            var j = 0
-            while (j < n) {
-              if (b.vecs(j) != null && ids(j) != id) {
-                val d = 1.0 - math.max(0.0, cosine(v, nv, b.vecs(j), b.norms(j)))
-                if (d <= eps) h.add(d, ids(j))
-              }
-              j += 1
-            }
-            Iterator.tabulate(h.n)(i => InternalRow(id, h.ties(i), h.scores(i)))
-          }
-        case Above(minCos) =>
-          rows.flatMap { case (id, v, nv, _) =>
-            val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-            var j = 0
-            while (j < n) {
-              if (b.vecs(j) != null && id < ids(j)) {
-                val c = cosine(v, nv, b.vecs(j), b.norms(j))
-                if (c >= minCos) hits += InternalRow(id, ids(j), c)
-              }
-              j += 1
-            }
-            hits
-          }
-      }
-    }
+    val out = large.queryExecution.toRdd.mapPartitions(it => scored(decoded(it), bc.value, rule))
     Shim.ofRows(spark, out, StructType(Seq(StructField(names(0), LongType),
       StructField(names(1), LongType, nullable = false),
       StructField(names(2), DoubleType, nullable = false))))
+  }
+
+  /** [[scan]] of `block` against itself in ONE job, its (key, tie,
+    * score) rows collected: the large rows are read by position from
+    * the broadcast block in `slices` tasks, so no row ships with a
+    * task, and the broadcast is released when the job ends. The same
+    * pairs and scores as [[scan]] over the rows `block` was made of. */
+  def scanSelf(spark: SparkSession, block: Block, rule: Rule,
+      slices: Int): Array[(Long, Long, Double)] = {
+    val bc = spark.sparkContext.broadcast(block)
+    try spark.sparkContext.parallelize(block.vecs.indices, slices).mapPartitions { it =>
+      val b = bc.value
+      scored(it.filter(b.vecs(_) != null).map(i => (b.ids(i), b.vecs(i), b.norms(i), b.lambdas(i))),
+        b, rule).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    }.collect()
+    finally bc.destroy()
+  }
+
+  /** The (key, tie, score) rows of decoded large `rows` against `b`. */
+  private def scored(rows: Iterator[(Long, Array[Double], Double, Double)], b: Block,
+      rule: Rule): Iterator[InternalRow] = {
+    val n = b.vecs.length
+    val ids = b.ids
+    rule match {
+      case Within(eps, k) =>
+        rows.flatMap { case (id, v, nv, _) =>
+          val h = new TopKHeap(k, desc = false)
+          var j = 0
+          while (j < n) {
+            if (b.vecs(j) != null && ids(j) != id) {
+              val d = 1.0 - math.max(0.0, cosine(v, nv, b.vecs(j), b.norms(j)))
+              if (d <= eps) h.add(d, ids(j))
+            }
+            j += 1
+          }
+          Iterator.tabulate(h.n)(i => InternalRow(id, h.ties(i), h.scores(i)))
+        }
+      case Above(minCos) =>
+        rows.flatMap { case (id, v, nv, _) =>
+          val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+          var j = 0
+          while (j < n) {
+            if (b.vecs(j) != null && id < ids(j)) {
+              val c = cosine(v, nv, b.vecs(j), b.norms(j))
+              if (c >= minCos) hits += InternalRow(id, ids(j), c)
+            }
+            j += 1
+          }
+          hits
+        }
+    }
   }
 }

@@ -268,7 +268,7 @@ object DeterministicKMeans {
     */
   private def fitLocal(
       data: Array[(Long, Array[Double])], kEff: Int, maxIter: Int,
-      spherical: Boolean = false): Model = {
+      spherical: Boolean): Model = {
     require(data.nonEmpty, "items must be non-empty")
     val nF = data(0)._2.length
     val c0 = data.minBy(_._1)._2

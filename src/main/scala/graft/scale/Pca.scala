@@ -10,9 +10,11 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * variance, which is what PQ/IVF codebooks and whitened-cosine
   * retrieval want on anisotropic corpora).
   *
-  * Shape at 100 TB: ONE `treeAggregate` pass accumulates (n, Σx,
-  * ΣxxᵀT) — O(F²) per partition crosses the network, independent of
-  * N, exactly the F×F Laplacian's contract (FeatureLaplacian.scala).
+  * Shape at 100 TB: ONE pass accumulates (n, Σx, ΣxxᵀT) — O(F²) per
+  * partition crosses the network, independent of N, and partials too
+  * large to all reach the driver are first summed in runs on the
+  * executors, exactly the F×F Laplacian's contract
+  * (FeatureLaplacian.scala).
   * Everything after is driver-side on the F×F covariance: a
   * deterministic POWER ITERATION with Hotelling deflation rather than
   * a library eigensolver, chosen so the whole factorization is
@@ -26,13 +28,12 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * dominant eigenvector, so engine and oracle trajectories cannot
   * drift apart), but near-equal eigenvalues converge slowly —
   * `iters` trades convergence for oracle SQL length. Components are
-  * exact eigenvectors only at convergence; they are always unit-norm
-  * and deterministic UP TO ROUNDING: the moment pass's treeAggregate
-  * merges partials in task-completion order, which off local mode is
-  * not a fixed order, so FP non-associativity can move the low bits
-  * between runs. The contract the oracle and specs pin is therefore
-  * tolerance equality (the 6dp oracle comparison absorbs it), never
-  * bitwise equality.
+  * exact eigenvectors only at convergence; they are always unit-norm.
+  * The moment pass sums its per-partition partials in partition-index
+  * order ([[graft.core.DriverLocal.sumPartials]]), as the F×F
+  * Laplacian's Gram does, so the same rows in the same partitions fit
+  * the same bits; a different partitioning reassociates the sums, so
+  * the oracle comparison stays at 6 dp.
   */
 object Pca {
 
@@ -62,7 +63,7 @@ object Pca {
       nFeatures: Int,
       k: Int,
       iters: Int = 60): PcaModel = {
-    // reject bad parameters BEFORE the full-corpus treeAggregate —
+    // reject bad parameters BEFORE the full-corpus moment pass —
     // fitFromMoments re-checks, but an invalid k must not cost a scan
     require(nFeatures > 0, s"nFeatures must be positive, got $nFeatures")
     require(k > 0 && k <= nFeatures, s"k must be in 1..$nFeatures, got $k")
@@ -72,16 +73,14 @@ object Pca {
 
   /** One shard's MERGEABLE covariance state — the incremental-fit
     * sidecar ([[graft.operators.Profile.sketchShard]]'s pattern
-    * applied to PCA): the treeAggregate accumulator (upper-triangle
+    * applied to PCA): the moment pass's accumulator (upper-triangle
     * Gram + sum vector + count, O(F²) ≈ 32 KB at F = 64) is a plain
     * additive array, so per-drop moments persist beside each shard
     * and [[fitFromMoments]] over [[mergeMoments]] of N sidecars
     * refits PCA — and therefore the OPQ rotation or a whitening
     * transform — WITHOUT rescanning history. Moment addition is
-    * exact arithmetic apart from FP reassociation, the same
-    * tolerance-equality contract the scaladoc above pins for the
-    * one-shot fit (whose own treeAggregate already merges partials
-    * in nondeterministic order).
+    * exact arithmetic apart from FP reassociation, so merged shards
+    * match a one-shot fit to tolerance, not bit for bit.
     *
     * Layout: [0, F·F) row-major upper-triangle Gram (f ≤ g),
     * [F·F, F·F+F) sum vector, [F·F+F] count.
@@ -94,29 +93,18 @@ object Pca {
     val nF = nFeatures
     val size = nF * nF + nF + 1
     val vecs = items.select(F.col(vecCol).cast("array<double>")).as[Array[Double]]
-    vecs.rdd.treeAggregate(new Array[Double](size))(
-      seqOp = { (a, v) =>
+    graft.core.DriverLocal.sumPartials(vecs.rdd, size) { it =>
+      val a = new Array[Double](size)
+      it.foreach { v =>
         require(v != null && v.length == nF,
           s"PCA: vector of length ${if (v == null) "null" else v.length}, expected $nF")
+        graft.spectral.FeatureLaplacian.addOuter(a, v, nF)
         var f = 0
-        while (f < nF) {
-          val vf = v(f)
-          if (vf != 0.0) {
-            val base = f * nF
-            var g = f
-            while (g < nF) { a(base + g) += vf * v(g); g += 1 }
-          }
-          a(nF * nF + f) += vf
-          f += 1
-        }
+        while (f < nF) { a(nF * nF + f) += v(f); f += 1 }
         a(nF * nF + nF) += 1.0
-        a
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
+      }
+      a
+    }
   }
 
   /** Element-wise sum — moments are additive, so any shard split (and

@@ -21,7 +21,8 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * ArrowSpaceSpec).
   *
   *  1. Distributed pass: Gram matrix M = XᵀX = Σ_rows x·xᵀ via a
-  *     per-partition dense accumulator + treeAggregate; only O(F²)
+  *     per-partition dense accumulator, summed in partition order
+  *     (large partials first in runs on the executors); only O(F²)
   *     crosses the network per partition regardless of N. No join —
   *     cheaper than an edge-based pass.
   *  2. Driver-side: column-cosine affinity A_fg = M_fg/√(M_ff·M_gg),
@@ -40,33 +41,47 @@ object FeatureLaplacian {
   }
 
   /** Distributed Σ x·xᵀ over all rows; returns the dense upper
-    * triangle as a flat row-major F×F array.
+    * triangle as a flat row-major F×F array. Each partition sums its
+    * own rows ([[gramPartial]]) and the partials add in partition-index
+    * order ([[graft.core.DriverLocal.sumPartials]], one job, with an
+    * executor-side level when they are too large to all reach the
+    * driver), so the same rows in the same partitions give the same bits
+    * whatever order the tasks finish in. The builder's driver-held path
+    * sums the same partials from the rows it holds
+    * ([[graft.core.DriverLocal.sumHeld]]).
+    *
+    * The other float fits that are persisted or compared: the PCA
+    * moments ([[graft.scale.Pca.moments]]) and `TauMode.Mean` sum their
+    * partials the same way; `Similarity.dimStats` is exempt, since min
+    * and max do not depend on the order they merge in.
     */
   def gramMatrix(items: DataFrame, nFeatures: Int): Array[Double] = {
     val spark = items.sparkSession
     import spark.implicits._
-    val vecs = items.select(F.col("vec")).as[Array[Double]]
-    val merge = (a: Array[Double], b: Array[Double]) => {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
+    val vecs = items.select(F.col("vec")).as[Array[Double]].rdd
+    graft.core.DriverLocal.sumPartials(vecs, nFeatures * nFeatures)(gramPartial(_, nFeatures))
+  }
+
+  /** One partition's Gram partial: [[addOuter]] of its rows, in order. */
+  def gramPartial(rows: Iterator[Array[Double]], nF: Int): Array[Double] = {
+    val acc = new Array[Double](nF * nF)
+    rows.foreach(addOuter(acc, _, nF))
+    acc
+  }
+
+  /** acc += v·vᵀ on the upper triangle of the row-major F×F prefix of
+    * `acc` — the one Gram accumulate loop. */
+  def addOuter(acc: Array[Double], v: Array[Double], nF: Int): Unit = {
+    var f = 0
+    while (f < nF) {
+      val vf = v(f)
+      if (vf != 0.0) {
+        val base = f * nF
+        var g = f
+        while (g < nF) { acc(base + g) += vf * v(g); g += 1 }
+      }
+      f += 1
     }
-    vecs.rdd.treeAggregate(new Array[Double](nFeatures * nFeatures))(
-      seqOp = { (acc, v) =>
-        var f = 0
-        while (f < nFeatures) {
-          val vf = v(f)
-          if (vf != 0.0) {
-            val base = f * nFeatures
-            var g = f
-            while (g < nFeatures) { acc(base + g) += vf * v(g); g += 1 }
-          }
-          f += 1
-        }
-        acc
-      },
-      combOp = merge
-    )
   }
 
   /** Driver-side feature-graph assembly from the Gram matrix: cosine

@@ -11,7 +11,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridge into `private[sql]` Spark internals: wrap a raw Catalyst
-  * [[Expression]] as a user-facing [[Column]] and register native
+  * [[org.apache.spark.sql.catalyst.expressions.Expression]] as a
+  * user-facing [[org.apache.spark.sql.Column]] and register native
   * functions on a live session. Lives under `org.apache.spark.sql` for
   * access; keep the surface minimal.
   */

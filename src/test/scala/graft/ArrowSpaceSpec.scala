@@ -464,4 +464,195 @@ class ArrowSpaceSpec extends SparkSpec {
     val expected = Map(0L -> 0.98974, 1L -> 0.75653, 2L -> 0.22152)
     res.foreach(r => assert(math.abs(r.getDouble(1) - expected(r.getLong(0))) < 1e-4))
   }
+
+  /** 400 Gaussian 16-d vectors in 4 Parquet files, read back. */
+  lazy val gaussianParquet = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-build-parity").toString
+    (0 until 400).map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian())))
+      .toDF("id", "vec").repartition(4).write.parquet(s"$dir/emb")
+    s.read.parquet(s"$dir/emb")
+  }
+
+  val gaussianParams: GraphParams = GraphParams(eps = 1.0, k = 6, topk = 5)
+
+  /** Under this bound no input is driver-held. */
+  val noDriverBuild = graft.core.DriverLocal.Default.copy(rows = -1L)
+
+  def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  def edgeBits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.select("src", "dst", "dist", "weight").collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), bits(r.getDouble(2)), bits(r.getDouble(3)))).sorted
+
+  def itemBits(m: graft.api.ArrowSpaceModel): Seq[(Long, Long, Long)] =
+    m.items.select("id", "lambda", "e_raw").collect().toSeq.map(r =>
+      (r.getLong(0), bits(r.getDouble(1)), bits(r.getDouble(2)))).sorted
+
+  test("driver-held and distributed builds of one Parquet input are bit-identical") {
+    import graft.api.ArrowSpaceBuilder.BuildOptions
+    import graft.spectral.TauMode
+    val input = gaussianParquet
+    assert(input.rdd.getNumPartitions > 1)
+    for (tauMode <- Seq(TauMode.Median, TauMode.Mean)) {
+      val (local, localEdges) = ArrowSpaceBuilder.build(input, gaussianParams, tauMode, BuildOptions())
+      val (dist, distEdges) = ArrowSpaceBuilder.buildWithin(
+        input, gaussianParams, tauMode, BuildOptions(), noDriverBuild)
+      // the driver path returns local frames; the distributed one does not
+      assert(localEdges.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(!distEdges.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val es = edgeBits(localEdges)
+      assert(es.nonEmpty && es == edgeBits(distEdges), s"$tauMode: graph edges differ")
+      assert(local.featureLaplacian.dim == dist.featureLaplacian.dim)
+      assert(local.featureLaplacian.edges.toSeq.map(e => (e.f, e.g, bits(e.w))) ==
+        dist.featureLaplacian.edges.toSeq.map(e => (e.f, e.g, bits(e.w))), s"$tauMode: Laplacians differ")
+      assert(bits(local.tau) == bits(dist.tau), s"$tauMode: tau ${local.tau} vs ${dist.tau}")
+      assert((local.nItems, local.nFeatures) == ((dist.nItems, dist.nFeatures)))
+      val li = itemBits(local)
+      assert(li.size == 400 && li == itemBits(dist), s"$tauMode: lambdas differ")
+      // so scores may be compared across the two builds
+      val q = input.where(F.col("id") % 40 === 0).select(F.col("id").as("query_id"), F.col("vec").as("qvec"))
+      for (tau <- Seq(1.0, 0.7))
+        assert(scoreBits(local.searchBatch(q, tau, 5)) == scoreBits(dist.searchBatch(q, tau, 5)),
+          s"$tauMode tau=$tau: scores differ across builds")
+      Seq(local.items, dist.items, distEdges).foreach(_.unpersist())
+    }
+  }
+
+  test("the Gram, tau and lambda bits do not depend on the order tasks finish in") {
+    import graft.spectral.{FeatureLaplacian, TauMode}
+    import org.apache.spark.sql.DataFrame
+    val input = gaussianParquet.select(F.col("id"), F.col("vec").cast("array<double>").as("vec"))
+      .repartition(4).localCheckpoint()
+    // partition i finishes after (order(i) · 300) ms of sleep
+    def sleepy(df: DataFrame, order: Seq[Int]): DataFrame =
+      spark.createDataFrame(df.rdd.mapPartitionsWithIndex { (i, it) =>
+        Thread.sleep(order(i) * 300L); it
+      }, df.schema)
+    val (forward, backward) = (Seq(0, 1, 2, 3), Seq(3, 2, 1, 0))
+    val grams = Seq(forward, backward).map(o => FeatureLaplacian.gramMatrix(sleepy(input, o), 16))
+    val moved = grams(0).indices.count(i => bits(grams(0)(i)) != bits(grams(1)(i)))
+    assert(moved == 0, s"$moved of ${grams(0).length} Gram cells differ")
+    val lap = FeatureLaplacian.fromGram(grams(0), gaussianParams, 16)
+    for (tauMode <- Seq(TauMode.Mean, TauMode.Median)) {
+      val built = Seq(forward, backward).map(o =>
+        ArrowSpaceBuilder.synthesizeLambdas(sleepy(input, o), lap, tauMode, "S10"))
+      assert(bits(built(0)._2) == bits(built(1)._2), s"$tauMode: tau differs")
+      def lambdas(df: DataFrame) = df.select("id", "lambda").collect().toSeq
+        .map(r => (r.getLong(0), bits(r.getDouble(1)))).sorted
+      assert(lambdas(built(0)._1) == lambdas(built(1)._1), s"$tauMode: lambdas differ")
+      built.foreach(_._1.unpersist())
+    }
+  }
+
+  test("the driver-held build runs 3 jobs; the distributed build's jobs are pinned") {
+    import graft.api.ArrowSpaceBuilder.BuildOptions
+    import graft.spectral.TauMode
+    import org.apache.spark.graftspec.JobCount
+    val sc = spark.sparkContext
+    ArrowSpaceBuilder.build(gaussianParquet, gaussianParams) // first-use work out of the counts
+    for (input <- Seq(gaussianParquet, itemsDf)) {
+      val ((m, _), jobs) = JobCount(sc)(ArrowSpaceBuilder.build(input, gaussianParams))
+      assert(jobs == 3, s"the driver-held build ran $jobs jobs")
+      // its items are materialized: reading them runs no build stage again
+      val (_, reads) = JobCount(sc)(m.items.count())
+      assert(reads <= 2, s"counting the built items ran $reads jobs")
+      m.items.unpersist()
+    }
+    val ((m, e), jobs) = JobCount(sc)(ArrowSpaceBuilder.buildWithin(
+      gaussianParquet, gaussianParams, TauMode.Median, BuildOptions(), noDriverBuild))
+    // the refused bounded read, then the 15 jobs of S1-S10 (S1's
+    // aggregation, the block read, the graph's scan, shuffle and count,
+    // the Gram, τ's count and collect, and the λ join and its count,
+    // with AQE's shuffle stages)
+    assert(jobs == 16, s"the distributed build ran $jobs jobs")
+    m.items.unpersist(); e.unpersist()
+    // a local frame over the bound's rows skips the read: S1-S10 alone
+    val ((m2, e2), jobs2) = JobCount(sc)(ArrowSpaceBuilder.buildWithin(
+      itemsDf, params, TauMode.Median, BuildOptions(), graft.core.DriverLocal.Default.copy(rows = 2L)))
+    assert(jobs2 == 15, s"the distributed build of a local frame ran $jobs2 jobs")
+    m2.items.unpersist(); e2.unpersist()
+  }
+
+  test("a refused bounded read does not run an input's upstream shuffle stage again") {
+    import graft.api.ArrowSpaceBuilder.BuildOptions
+    import graft.spectral.TauMode
+    import org.apache.spark.graftspec.JobCount
+    val sc = spark.sparkContext
+    val reads = sc.longAccumulator("vector reads")
+    val counted = F.udf { (v: Seq[Double]) => reads.add(1L); v }
+    val shuffled = gaussianParquet.select(F.col("id"), counted(F.col("vec")).as("vec")).repartition(3)
+    val ((m, e), jobs) = JobCount(sc)(ArrowSpaceBuilder.buildWithin(
+      shuffled, gaussianParams, TauMode.Median, BuildOptions(), noDriverBuild))
+    assert(reads.value == 400L, s"the input's upstream read ${reads.value} vectors for 400 rows")
+    // the read's two jobs (AQE's shuffle stage, then the refused read)
+    // and S1-S10's 15
+    assert(jobs == 17, s"the distributed build of a shuffled input ran $jobs jobs")
+    val (local, _) = ArrowSpaceBuilder.build(gaussianParquet.repartition(3), gaussianParams)
+    assert(itemBits(m) == itemBits(local))
+    Seq(m.items, e, local.items).foreach(_.unpersist())
+  }
+
+  test("sumPartials adds partials in partition order and caps what reaches the driver") {
+    import graft.core.DriverLocal
+    import org.apache.spark.graftspec.JobCount
+    val sc = spark.sparkContext
+    val (n, size) = (64, 4096) // 64 partials of 32 KB
+    val partial: Int => Array[Double] = { i =>
+      val r = new scala.util.Random(i); Array.fill(size)(r.nextGaussian() * 1e3)
+    }
+    val held = (0 until n).map(partial)
+    // partition i finishes after (n − i) · 5 ms, so the later ones first
+    def sum(maxBytes: Long) = JobCount.withResultBytes(sc)(DriverLocal.sumPartials(
+      sc.parallelize(0 until n, n), size, maxBytes) { it =>
+      val i = it.next(); Thread.sleep((n - i) * 5L); partial(i)
+    })
+    val cap = 8L * size * 8 // 8 partials
+    val (flat, flatJobs, flatBytes) = sum(Long.MaxValue)
+    val (tree, treeJobs, treeBytes) = sum(cap)
+    assert(flatJobs == 1 && treeJobs == 1)
+    assert(flatBytes > n * size * 8L, s"the flat sum shipped $flatBytes bytes")
+    // the capped sum's partials plus the shuffle tasks' statuses and
+    // metrics, about 1.4 KB each
+    assert(treeBytes < cap + n * 2048L, s"the capped sum shipped $treeBytes bytes")
+    def moved(a: Array[Double], b: Array[Double]) = a.indices.count(i => bits(a(i)) != bits(b(i)))
+    assert(moved(flat, DriverLocal.sumHeld(held, size, Long.MaxValue)) == 0)
+    assert(moved(tree, DriverLocal.sumHeld(held, size, cap)) == 0)
+    // the runs reassociate the sum: some cell's bits differ from the flat one's
+    assert(moved(tree, flat) > 0)
+  }
+
+  test("S1 rejects null vectors on both build paths") {
+    import graft.api.ArrowSpaceBuilder.BuildOptions
+    import graft.spectral.TauMode
+    val s = spark
+    import s.implicits._
+    for (vs <- Seq(Seq(Some(items(0)), None), Seq(None, None))) {
+      val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
+      for (bound <- Seq(graft.core.DriverLocal.Default, noDriverBuild)) {
+        val e = intercept[Exception](ArrowSpaceBuilder.buildWithin(
+          df, params, TauMode.Median, BuildOptions(), bound))
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(t => String.valueOf(t.getMessage).contains("same non-null length")),
+          s"${vs.map(_.isDefined)} $bound: ${chain.map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" <- ")}")
+      }
+    }
+  }
+
+  test("setDebug names the build stages on the driver-held path") {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    graft.core.Debug.setDebug(true)
+    System.setErr(new java.io.PrintStream(err, true))
+    try ArrowSpaceBuilder.build(itemsDf, params)._1.items.unpersist()
+    finally { System.setErr(saved); graft.core.Debug.setDebug(false) }
+    val log = err.toString
+    for (stage <- Seq("S1 ingest stats", "S6-S8 eps-kNN graph", "S9 feature Laplacian",
+        "S10 tau resolve", "S10 lambda materialize"))
+      assert(log.contains(s"[graft] $stage: "), s"no $stage timing in:\n$log")
+  }
 }
