@@ -1,14 +1,22 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for 100 TB-scale corpora (SURVEY.md §7.2
   * step 11): exact (hash groupBy), MinHash+LSH near-dup (shingle →
   * signature → band → bucket join → exact-Jaccard verify), and
-  * SimHash. Signatures are computed with higher-order array functions
-  * (codegen'd, no explode) so the only shuffles are the band-bucket
-  * join and the final aggregation — the shape that survives a 1000×
-  * scale-up.
+  * SimHash. A document's shingles and signature come from one compiled
+  * per-document kernel ([[signed]]: one split of the text, no explode,
+  * no interpreted higher-order function), so the only shuffles are the
+  * band-bucket join and the final aggregation — the shape that
+  * survives a 1000× scale-up.
   */
 object Dedup {
 
@@ -33,15 +41,10 @@ object Dedup {
       .groupBy("fp")
       .agg(F.count("*").as("n_docs"), F.min("doc_id").as("keeper"))
 
-  /** Word n-gram shingle set (distinct, order-free). */
-  def shingles(text: Column, n: Int): Column = {
-    val t = TextOps.tokens(text)
-    F.array_distinct(
-      F.when(F.size(t) < n, F.array(F.concat_ws(" ", t)))
-        .otherwise(F.transform(
-          F.sequence(F.lit(0), F.size(t) - n),
-          idx => F.concat_ws(" ", F.slice(t, idx + 1, F.lit(n))))))
-  }
+  /** Word n-gram shingle set (distinct, first-occurrence order): the
+    * shingles of [[signed]], null for null text. */
+  def shingles(text: Column, n: Int): Column =
+    Shim.column(ShingleSet(Shim.expression(text.cast("string")), n))
 
   /** Signature from pre-hashed shingles (array<long>) — materialize
     * the base hashes in a column first so the string hashing runs
@@ -53,10 +56,9 @@ object Dedup {
       F.array_min(F.transform(hashCol, h => F.xxhash64(h, F.lit(i))))
     }: _*)
 
-  /** (doc_id, sig) signature frame: one codegen'd xxhash64 pass over
-    * the shingle strings, then the `numHashes` min-lanes in a primitive
+  /** (doc_id, sig) signature frame: the lanes of [[signed]] in a
     * per-partition loop. Bit-identical to
-    * `minhashFromHashes(transform(sh, xxhash64))` — Spark's
+    * `minhashFromHashes(transform(shingles(text), xxhash64))` — Spark's
     * `xxhash64(h, lit(j))` is `XXH64.hashInt(j, XXH64.hashLong(h, 42))`
     * and both statics are called here directly — but the lane loop runs
     * compiled instead of through the interpreted higher-order-function
@@ -75,34 +77,33 @@ object Dedup {
       .select(F.col("doc_id").cast("long"), F.col("text"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
-        (id, signatureOf(text, shingleLen, numHashes))
+        (id, signed(text, shingleLen, numHashes)._1)
       })
       .toDF("doc_id", "sig")
   }
 
-  /** The per-document kernel of [[minhashSignatures]]: the `numHashes`
-    * min-lanes of `text`'s `shingleLen`-word shingles. Also run on the
-    * driver by the streaming gates' bounded path, so both paths sign a
-    * document with the same code. */
-  private[graft] def signatureOf(
-      text: String, shingleLen: Int, numHashes: Int): Array[Long] = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    // TextOps.tokensOf replicates the Column path's trim/split exactly,
-    // so the shingle SET is the one [[shingles]] builds (duplicates
-    // need no dedup: min over repeats is the min)
+  /** The per-document kernel: one split of `text` ([[TextOps.tokensOf]],
+    * the Column path's exact trim/split) gives its distinct
+    * `shingleLen`-word shingles, in first-occurrence order (the order
+    * `array_distinct` keeps), and their `numHashes` min-lanes. Text of
+    * fewer than `shingleLen` tokens is one shingle, its tokens joined.
+    * Run on the executors by [[minhashSignatures]], [[minhashSigned]]
+    * and [[shingles]], and on the driver by the streaming gates'
+    * bounded path, so every path signs a document with the same code. */
+  private[graft] def signed(text: String, shingleLen: Int,
+      numHashes: Int): (Array[Long], Array[UTF8String]) = {
     val toks = TextOps.tokensOf(text)
-    val nSh = math.max(1, toks.length - shingleLen + 1)
-    // inner xxhash64 state per shingle (string hash, then the long-lane
-    // rehash with the default seed) — shared by lanes
-    val inner = new Array[Long](nSh)
-    if (toks.length < shingleLen)
-      inner(0) = XXH64.hashLong(
-        XXH64.hashUTF8String(UTF8String.fromString(toks.mkString(" ")), 42L), 42L)
+    val seen = new java.util.HashSet[UTF8String]
+    val sh = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+    def add(s: String): Unit = {
+      val u = UTF8String.fromString(s)
+      if (seen.add(u)) sh += u
+    }
+    if (toks.length < shingleLen) add(toks.mkString(" "))
     else {
       val sb = new java.lang.StringBuilder
       var i = 0
-      while (i < nSh) {
+      while (i + shingleLen <= toks.length) {
         sb.setLength(0)
         var t = i
         while (t < i + shingleLen) {
@@ -110,11 +111,14 @@ object Dedup {
           sb.append(toks(t))
           t += 1
         }
-        inner(i) = XXH64.hashLong(
-          XXH64.hashUTF8String(UTF8String.fromString(sb.toString), 42L), 42L)
+        add(sb.toString)
         i += 1
       }
     }
+    // inner xxhash64 state per shingle (string hash, then the long-lane
+    // rehash with the default seed) — shared by lanes
+    val inner = sh.iterator.map(u =>
+      XXH64.hashLong(XXH64.hashUTF8String(u, 42L), 42L)).toArray
     val sig = new Array[Long](numHashes)
     var j = 0
     while (j < numHashes) {
@@ -128,7 +132,36 @@ object Dedup {
       sig(j) = mn
       j += 1
     }
-    sig
+    (sig, sh.toArray)
+  }
+
+  /** [[signed]]'s shingles as an array column value. */
+  private[graft] def shingleData(text: UTF8String, n: Int): ArrayData =
+    shArray(signed(text.toString, n, 0)._2)
+
+  private[graft] def shArray(sh: Array[UTF8String]): ArrayData =
+    new GenericArrayData(sh.asInstanceOf[Array[Any]])
+
+  /** The stored per-document row of a minhash layout: (doc_id, sig, sh),
+    * sig and sh null for null text. */
+  private[graft] val SignedSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("sig", ArrayType(LongType, containsNull = false)),
+    StructField("sh", ArrayType(StringType, containsNull = false))))
+
+  /** (doc_id, sig, sh) of every document of `docs` from one [[signed]]
+    * pass: the rows a minhash layout stores once per document. */
+  private[graft] def minhashSigned(
+      docs: DataFrame, shingleLen: Int, numHashes: Int): DataFrame = {
+    val in = docs.select(F.col("doc_id").cast("long"), F.col("text").cast("string"))
+    Shim.ofRows(docs.sparkSession, in.queryExecution.toRdd.mapPartitions(_.map { r =>
+      val id = if (r.isNullAt(0)) null else r.getLong(0)
+      if (r.isNullAt(1)) InternalRow(id, null, null)
+      else {
+        val (sig, sh) = signed(r.getUTF8String(1).toString, shingleLen, numHashes)
+        InternalRow(id, UnsafeArrayData.fromPrimitiveArray(sig), shArray(sh))
+      }
+    }), SignedSchema)
   }
 
   /** LSH band keys for a (doc_id, sig) frame: explode `bands` rows per
@@ -497,14 +530,20 @@ object Dedup {
     * each new drop pays one signature pass over the NEW docs only,
     * never a re-shingle of the multi-TB training set:
     *
-    *   - `bandRows`: (band, bh, doc_id, sig) — the banded join side,
+    *   - `bandRows`: (band, bh, doc_id) — the banded join side,
     *     precomputed once (the only state the candidate join touches)
-    *   - `refShingles`: (doc_id, sh) — the exact-Jaccard verify
-    *     sidecar, read only for candidate ids (bounded semi-join)
+    *   - `refShingles`: (doc_id, sig, sh) — each document's signature
+    *     and shingle set, stored once: the agreement estimate and the
+    *     exact-Jaccard verify read it for candidate ids only (bounded
+    *     semi-join). Null text is stored with a null sig and sh and no
+    *     band rows.
     *
-    * Unlike [[graft.operators.Similarity.ivfAppend]] (frozen
-    * centroids → recall decays as the distribution drifts), appending
-    * here is EXACT: signatures are per-document, so
+    * LSH banding indexes the bands of ONE signature per document
+    * (Leskovec, Rajaraman and Ullman, Mining of Massive Datasets
+    * §3.4), so no band row carries the signature. Unlike
+    * [[graft.operators.Similarity.ivfAppend]] (frozen centroids →
+    * recall decays as the distribution drifts), appending here is
+    * EXACT: signatures are per-document, so
     * `build(A ∪ B) ≡ append(build(A), B)` — spec-pinned. Build with
     * [[minhashIndexBuild]], query with [[minhashNearDupAgainstIndex]]
     * / [[dedupAgainstIndex]], persist with [[minhashIndexSave]].
@@ -513,20 +552,23 @@ object Dedup {
       bandRows: DataFrame, refShingles: DataFrame,
       numHashes: Int, bands: Int, shingleLen: Int)
 
+  /** Band rows (band, bh, doc_id) of a (doc_id, sig, ...) frame; a
+    * null signature (null text) bands nowhere. */
+  private def bandRowsOf(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    bandKeys(sigs.where(F.col("sig").isNotNull), numHashes, bands)
+      .select("band", "bh", "doc_id")
+
   def minhashIndexBuild(
       reference: DataFrame, shingleLen: Int = 3, numHashes: Int = 64,
       bands: Int = 16, persist: Boolean = true): MinhashIndex = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sigs = minhashSignatures(reference, shingleLen, numHashes)
-    val rows = bandKeys(sigs, numHashes, bands)
-      .select("band", "bh", "doc_id", "sig")
-    val sh = reference.select(
-      F.col("doc_id"), shingles(F.col("text"), shingleLen).as("sh"))
     def p(df: DataFrame) =
       if (persist)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else df
-    MinhashIndex(p(rows), p(sh), numHashes, bands, shingleLen)
+    val docs = p(minhashSigned(reference, shingleLen, numHashes))
+    MinhashIndex(p(bandRowsOf(docs, numHashes, bands)), docs, numHashes,
+      bands, shingleLen)
   }
 
   def minhashIndexRelease(index: MinhashIndex): Unit = {
@@ -579,28 +621,81 @@ object Dedup {
   }
 
   /** Persist: band rows PARTITIONED BY band (a probe for one band
-    * prunes to its partition on the saved layout) + shingles + a meta
-    * sidecar. */
+    * prunes to its partition on the saved layout) + the per-document
+    * (doc_id, sig, sh) rows in `shingles` + a meta sidecar stamped with
+    * [[LayoutFormat]]. */
   def minhashIndexSave(index: MinhashIndex, path: String): Unit = {
-    index.bandRows.write.mode("overwrite")
+    index.bandRows.select("band", "bh", "doc_id").write.mode("overwrite")
       .partitionBy("band").parquet(s"$path/bands")
-    index.refShingles.write.mode("overwrite").parquet(s"$path/shingles")
+    index.refShingles.select("doc_id", "sig", "sh").write.mode("overwrite")
+      .parquet(s"$path/shingles")
     graft.api.ArrowSpaceModel.writeSidecar(
       index.bandRows.sparkSession, s"$path/meta.json",
       s"""{"numHashes":${index.numHashes},"bands":${index.bands},""" +
-        s""""shingleLen":${index.shingleLen}}""")
+        s""""shingleLen":${index.shingleLen},"format":$LayoutFormat}""")
   }
 
   def minhashIndexLoad(
-      spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex = {
+      spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex =
+    loadBase(spark, path, layoutMeta(spark, path))
+
+  /** The layout [[minhashIndexSave]] writes: band rows (band, bh,
+    * doc_id), each signature stored once beside its shingles. A
+    * format-1 layout (meta.json without "format") carried the whole
+    * signature in every band row; it still loads for the batch faces
+    * ([[formatOneFrames]]), and every writer refuses it
+    * ([[writableMeta]]). */
+  private val LayoutFormat = 2
+
+  private final case class LayoutMeta(
+      numHashes: Int, bands: Int, shingleLen: Int, format: Int)
+
+  private def layoutMeta(
+      spark: org.apache.spark.sql.SparkSession, path: String): LayoutMeta = {
     val txt = graft.api.ArrowSpaceModel.sidecarText(spark, s"$path/meta.json")
-    def intOf(name: String): Int =
-      ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(txt).get.group(1).toInt
-    MinhashIndex(
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/shingles"),
-      intOf("numHashes"), intOf("bands"), intOf("shingleLen"))
+    def intOf(name: String): Option[Int] =
+      ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(txt).map(_.group(1).toInt)
+    LayoutMeta(intOf("numHashes").get, intOf("bands").get,
+      intOf("shingleLen").get, intOf("format").getOrElse(1))
   }
+
+  /** The meta of a layout `who` may write: the gate's appends, the
+    * fold and the takedown refuse a format-1 layout, so one layout
+    * never mixes formats. */
+  private def writableMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String, who: String): LayoutMeta = {
+    val m = layoutMeta(spark, path)
+    require(m.format == LayoutFormat,
+      s"$who: $path is a format-${m.format} minhash layout (every band row " +
+        "carries the whole signature), and writing to it would mix two " +
+        "formats in one layout. Migrate it first with " +
+        "minhashIndexSave(minhashIndexLoad(spark, oldPath), newPath) and " +
+        "point the writer at newPath.")
+    m
+  }
+
+  private def loadBase(spark: org.apache.spark.sql.SparkSession,
+      path: String, m: LayoutMeta): MinhashIndex = {
+    val bands = spark.read.parquet(s"$path/bands")
+    val docs = spark.read.parquet(s"$path/shingles")
+    val (b, d) =
+      if (m.format == LayoutFormat) (bands, docs)
+      else formatOneFrames(bands, docs, Nil)
+    MinhashIndex(b, d, m.numHashes, m.bands, m.shingleLen)
+  }
+
+  /** A format-1 layout's frames in the current shape: band 0 holds each
+    * signed document's signature once, joined to its shingles on
+    * `doc_id` and `keys`; null text has no band rows and keeps a null
+    * sig. */
+  private def formatOneFrames(bands: DataFrame, shingles: DataFrame,
+      keys: Seq[String]): (DataFrame, DataFrame) =
+    (bands.select(("band" +: "bh" +: "doc_id" +: keys).map(F.col): _*),
+      shingles.join(
+          bands.where(F.col("band") === 0)
+            .select((("doc_id" +: keys) :+ "sig").map(F.col): _*),
+          "doc_id" +: keys, "left")
+        .select(("doc_id" +: "sig" +: "sh" +: keys).map(F.col): _*))
 
   // ---- streamed append segments: the growing-gate state ------------
   //
@@ -608,51 +703,46 @@ object Dedup {
   // EVERYTHING admitted so far — the base corpus AND earlier stream
   // survivors. The saved layout grows the same way the IVF one does
   // ([[graft.streaming.StreamingOps.ivfAppendStream]]): each micro-batch
-  // lands its survivors' band rows + shingles as a `seg=<batchId>`
-  // partition beside the base `bands`/`shingles` dirs, written with
-  // dynamic partition overwrite so a REPLAYED batch rewrites its own
-  // leaves instead of duplicating them. Unlike IVF there is no frozen
-  // model to drift: band rows are per-document, so the appended state
-  // is EXACT at any size and a rebuild is never semantically required —
-  // compaction ([[minhashCompactAppends]]) is purely a small-files fold.
+  // lands its survivors' band rows and (doc_id, sig, sh) rows as a
+  // `seg=<batchId>` partition beside the base `bands`/`shingles` dirs,
+  // written with dynamic partition overwrite so a REPLAYED batch
+  // rewrites its own leaves instead of duplicating them. Unlike IVF
+  // there is no frozen model to drift: band rows are per-document, so
+  // the appended state is EXACT at any size and a rebuild is never
+  // semantically required — compaction ([[minhashCompactAppends]]) is
+  // purely a small-files fold.
 
   /** Rows per file/task for the band-aligned layout writes (append
-    * segments and folds): band rows are ~100 B, so 4M rows ≈ 400 MB
-    * files (guide §6's 128 MB–1 GB window) and one fold task per 4M
-    * rows of a band's history (guide §2.5). */
+    * segments and folds): one fold task per 4M rows of a band's history
+    * (guide §2.5). A band row is 16 B before compression (band, bh,
+    * doc_id), so a full file is ~64 MB. */
   private val bandFoldTargetRows = 4000000L
 
-  /** Write `survivors`' band rows + shingles as append segment `seg`
-    * beside a saved [[minhashIndexSave]] layout. Idempotent under
-    * replay: dynamic partition overwrite replaces exactly the leaves a
-    * previous attempt of the SAME batch wrote (the computation is
-    * deterministic, so the rewritten leaves carry identical rows).
+  /** Write the (doc_id, text) `docs` as append segment `seg` beside a
+    * saved [[minhashIndexSave]] layout, signed and shingled in one
+    * [[minhashSigned]] pass. Idempotent under replay: dynamic partition
+    * overwrite replaces exactly the leaves a previous attempt of the
+    * SAME batch wrote (the computation is deterministic, so the
+    * rewritten leaves carry identical rows). `docRows`, when the caller
+    * has already counted `docs`, bounds the band rows (≤ `bands` per
+    * document) so the salted band write skips its own count job.
     */
   private[graft] def minhashAppendSegment(
-      survivors: DataFrame, path: String, seg: Long,
+      docs: DataFrame, path: String, seg: Long,
       shingleLen: Int, numHashes: Int, bands: Int,
-      survivorRows: Option[Long] = None): Unit =
-    minhashAppendSegmentFromSigs(
-      survivors, minhashSignatures(survivors, shingleLen, numHashes),
-      path, seg, shingleLen, numHashes, bands, survivorRows)
+      docRows: Option[Long] = None): Unit = {
+    val rows = minhashSigned(docs, shingleLen, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try minhashAppendSigned(rows, path, seg, numHashes, bands, docRows)
+    finally rows.unpersist(blocking = false)
+  }
 
-  /** [[minhashAppendSegment]] with caller-supplied survivor signatures
-    * (the gate's single per-batch pass, filtered to the admitted ids) —
-    * the written segment is identical to the recompute-from-text form
-    * because signatures are a pure function of the document.
-    * `survivorRows`, when the caller has already counted `survivors`,
-    * bounds the band rows (≤ one signature per survivor × `bands`) so
-    * the salted band write skips its own count job. */
-  private[graft] def minhashAppendSegmentFromSigs(
-      survivors: DataFrame, sigsS: DataFrame, path: String, seg: Long,
-      shingleLen: Int, numHashes: Int, bands: Int,
-      survivorRows: Option[Long] = None): Unit = {
-    val add = MinhashIndex(
-      bandKeys(sigsS, numHashes, bands)
-        .select("band", "bh", "doc_id", "sig"),
-      survivors.select(
-        F.col("doc_id"), shingles(F.col("text"), shingleLen).as("sh")),
-      numHashes, bands, shingleLen)
+  /** [[minhashAppendSegment]] over rows already signed as
+    * (doc_id, sig, sh) — the driver-decided gate batch hands over the
+    * rows it decided on, so an admitted document is shingled once. */
+  private[graft] def minhashAppendSigned(
+      rows: DataFrame, path: String, seg: Long, numHashes: Int,
+      bands: Int, docRows: Option[Long]): Unit = {
     // SHINGLES FIRST: a crash between the two writes must leave the
     // invariant "bands_appends exists ⇒ shingles_appends exists" —
     // [[minhashIndexLoadWithAppends]] keys the has-appends decision on
@@ -661,26 +751,25 @@ object Dedup {
     // would repair it) throws on the missing shingles dir. This order
     // makes the partial state invisible instead: the replay's own
     // seg < batchId filter already excludes the half-written segment.
-    // band-aligned shuffle before the partitioned write: without it
-    // every one of the ~cores input tasks emits a file into every
-    // band leaf (cores × bands small files PER BATCH — the untimed
-    // majority of the gate's per-batch wall was exactly this file
-    // churn); aligned, each leaf gets one file and the state the
-    // NEXT batch joins against stays one-file-per-band
-    add.refShingles
+    rows.select("doc_id", "sig", "sh")
       .withColumn("seg", F.lit(seg))
       .coalesce(4)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("seg")
       .parquet(s"$path/shingles_appends")
-    // salted within band (guide §2.5, same as the fold): identical
-    // one-file-per-band layout at micro-batch sizes, but a backfill
-    // replayed through the gate no longer serializes each band's
-    // write behind a single task
+    // band-aligned shuffle before the partitioned write: without it
+    // every one of the ~cores input tasks emits a file into every
+    // band leaf (cores × bands small files PER BATCH — the untimed
+    // majority of the gate's per-batch wall was exactly this file
+    // churn); aligned, each leaf gets one file and the state the
+    // NEXT batch joins against stays one-file-per-band. Salted within
+    // band (guide §2.5, same as the fold): identical one-file-per-band
+    // layout at micro-batch sizes, but a backfill replayed through the
+    // gate no longer serializes each band's write behind a single task
     SegmentTiers.saltedRepartition(
-        add.bandRows, "band", Seq("doc_id"), bandFoldTargetRows,
-        knownRows = survivorRows.map(_ * bands))
+        bandRowsOf(rows, numHashes, bands), "band", Seq("doc_id"),
+        bandFoldTargetRows, knownRows = docRows.map(_ * bands))
       .withColumn("seg", F.lit(seg))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -700,9 +789,11 @@ object Dedup {
     */
   def minhashIndexLoadWithAppends(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      maxSegExclusive: Long = Long.MaxValue): MinhashIndex =
-    loadWithAppends(spark, path, minhashIndexLoad(spark, path), None,
+      maxSegExclusive: Long = Long.MaxValue): MinhashIndex = {
+    val m = layoutMeta(spark, path)
+    loadWithAppends(spark, path, loadBase(spark, path, m), m.format, None,
       maxSegExclusive, "minhashIndexLoadWithAppends")
+  }
 
   /** Per-epoch cache of the gate's BASE layout — the meta sidecar
     * parse and the two base directory listings (`bands`, `shingles`),
@@ -718,7 +809,8 @@ object Dedup {
     * produces fresh objects, so a takedown between triggers is picked
     * up on the next batch's three getFileStatus probes. Decisions are
     * byte-identical — everything cached is a deterministic function of
-    * on-disk state the batch would otherwise re-derive.
+    * on-disk state the batch would otherwise re-derive. A format-1
+    * layout is refused here, before the batch decides or writes.
     */
   private final case class GateMinhashBase(
       fp: String, base: MinhashIndex,
@@ -743,7 +835,8 @@ object Dedup {
     val cached = gateMinhashCache.get(path)
     if (cached != null && cached.fp == fp) cached
     else graft.core.Debug.timed("mgate state-cache build") {
-      val base = minhashIndexLoad(spark, path)
+      val base = loadBase(spark, path,
+        writableMeta(spark, path, s"minhashGateStream($path)"))
       val entry = GateMinhashBase(fp, base,
         base.bandRows.schema.add(
           "seg", org.apache.spark.sql.types.LongType),
@@ -765,7 +858,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxSegExclusive: Long): MinhashIndex = {
     val entry = gateMinhashBase(spark, path)
-    loadWithAppends(spark, path, entry.base,
+    loadWithAppends(spark, path, entry.base, LayoutFormat,
       Some((entry.bandsAppSchema, entry.shinglesAppSchema)),
       maxSegExclusive, "minhashIndexLoadWithAppendsCached")
   }
@@ -776,10 +869,11 @@ object Dedup {
     * "Appends present" = BOTH dirs hold seg= leaves: a compaction
     * between its two swap renames leaves bands_appends merged while
     * shingles_appends is briefly absent, and a zero-survivor batch
-    * leaves either dir with only _SUCCESS inside. */
+    * leaves either dir with only _SUCCESS inside. A format-1 layout's
+    * segments are read in the current shape ([[formatOneFrames]]). */
   private def loadWithAppends(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      base: MinhashIndex,
+      base: MinhashIndex, format: Int,
       schemas: Option[(org.apache.spark.sql.types.StructType,
         org.apache.spark.sql.types.StructType)],
       maxSegExclusive: Long, reader: String): MinhashIndex = {
@@ -800,11 +894,15 @@ object Dedup {
           schema: Option[org.apache.spark.sql.types.StructType]) =
         schema.fold(spark.read)(spark.read.schema).parquet(p.toString)
           .where(F.col("seg").cast("long") < maxSegExclusive)
+      val (b, d) = {
+        val (b, d) = (read(bp, schemas.map(_._1)), read(sp, schemas.map(_._2)))
+        if (format == LayoutFormat) (b, d) else formatOneFrames(b, d, Seq("seg"))
+      }
       MinhashIndex(
-        base.bandRows.select("band", "bh", "doc_id", "sig").unionByName(
-          read(bp, schemas.map(_._1)).select("band", "bh", "doc_id", "sig")),
-        base.refShingles.select("doc_id", "sh").unionByName(
-          read(sp, schemas.map(_._2)).select("doc_id", "sh")),
+        base.bandRows.select("band", "bh", "doc_id").unionByName(
+          b.select("band", "bh", "doc_id")),
+        base.refShingles.select("doc_id", "sig", "sh").unionByName(
+          d.select("doc_id", "sig", "sh")),
         base.numHashes, base.bands, base.shingleLen)
     }
   }
@@ -817,42 +915,55 @@ object Dedup {
     * batch's segment is never folded, the merged segment takes a
     * NEGATIVE id no real batch can rewrite, and both directory swaps
     * happen under `bands_swap_marker`, which
-    * [[minhashIndexLoadWithAppends]] waits on. Returns the merged
-    * band-file count (0 = nothing eligible).
+    * [[minhashIndexLoadWithAppends]] waits on. The band fold's salted
+    * write takes its row bound from the folded files' Parquet footers,
+    * so it runs no count job. Returns the merged band-file count (0 =
+    * nothing eligible).
     */
   def minhashCompactAppends(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxSegExclusive: Long = Long.MaxValue,
       tiered: Boolean = false): Int = {
-    def dir(name: String)(write: (DataFrame, Long, String) => Unit) =
+    val who = s"minhashCompactAppends($path)"
+    writableMeta(spark, path, who)
+    // a segment weighs its band rows: a band leaf holds 16-B rows, so
+    // by size a few-document segment is mostly per-file overhead
+    SegmentTiers.fold(spark, who, SegmentTiers.swapMarker(s"$path/bands"),
+      minhashFoldDirs(spark, path), maxSegExclusive, tiered, byRows = true)
+  }
+
+  /** The two dirs [[minhashCompactAppends]] folds, with their writers. */
+  private[graft] def minhashFoldDirs(
+      spark: org.apache.spark.sql.SparkSession, path: String)
+      : Seq[SegmentTiers.FoldDir] = {
+    def dir(name: String, countUpTo: Long)(
+        write: (DataFrame, Long, String, Option[Long]) => Unit) =
       SegmentTiers.FoldDir(new org.apache.hadoop.fs.Path(s"$path/$name"),
         new org.apache.hadoop.fs.Path(s"$path/${name}_tmp"),
-        new org.apache.hadoop.fs.Path(s"$path/${name}_old"), write)
-    SegmentTiers.fold(spark, s"minhashCompactAppends($path)",
-      SegmentTiers.swapMarker(s"$path/bands"), Seq(
-        // band-aligned shuffle so each band leaf gets one file — the same
-        // reasoning as the IVF fold's cluster repartition. Salted within
-        // band (guide §2.5): the band key space is only `bands` values
-        // wide, so an unsalted fold of a big corpus runs on ≤ bands tasks
-        // with each band's whole history behind one of them.
-        dir("bands_appends") { (cur, merged, tmp) =>
-          SegmentTiers.saltedRepartition(
-              cur.select("band", "bh", "doc_id", "sig"), "band",
-              Seq("doc_id"), bandFoldTargetRows)
-            .withColumn("seg", F.lit(merged))
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", bandFoldTargetRows)
-            .partitionBy("seg", "band")
-            .parquet(tmp)
-        },
-        dir("shingles_appends") { (cur, merged, tmp) =>
-          cur.select("doc_id", "sh")
-            .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-            .withColumn("seg", F.lit(merged))
-            .write.mode("overwrite").partitionBy("seg")
-            .parquet(tmp)
-        }),
-      maxSegExclusive, tiered)
+        new org.apache.hadoop.fs.Path(s"$path/${name}_old"), write, countUpTo)
+    Seq(
+      // band-aligned shuffle so each band leaf gets one file — the same
+      // reasoning as the IVF fold's cluster repartition. Salted within
+      // band (guide §2.5): the band key space is only `bands` values
+      // wide, so an unsalted fold of a big corpus runs on ≤ bands tasks
+      // with each band's whole history behind one of them.
+      dir("bands_appends", bandFoldTargetRows) { (cur, merged, tmp, rows) =>
+        SegmentTiers.saltedRepartition(
+            cur.select("band", "bh", "doc_id"), "band",
+            Seq("doc_id"), bandFoldTargetRows, knownRows = rows)
+          .withColumn("seg", F.lit(merged))
+          .write.mode("overwrite")
+          .option("maxRecordsPerFile", bandFoldTargetRows)
+          .partitionBy("seg", "band")
+          .parquet(tmp)
+      },
+      dir("shingles_appends", 0L) { (cur, merged, tmp, _) =>
+        cur.select("doc_id", "sig", "sh")
+          .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
+          .withColumn("seg", F.lit(merged))
+          .write.mode("overwrite").partitionBy("seg")
+          .parquet(tmp)
+      })
   }
 
   /** Remove documents from a PERSISTED layout in place — the takedown
@@ -883,7 +994,8 @@ object Dedup {
     */
   def minhashLayoutRemove(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame): Long =
+      ids: DataFrame): Long = {
+    writableMeta(spark, path, s"minhashLayoutRemove($path)")
     SegmentTiers.removeRows(spark, s"minhashLayoutRemove($path)", path,
       SegmentTiers.swapMarker(s"$path/bands"), ids, "doc_id",
       Seq(("bands", Seq("band")), ("shingles", Nil),
@@ -896,11 +1008,12 @@ object Dedup {
       counted = _.startsWith("bands"),
       guard = ("bands", s"minhashLayoutRemove($path): removal would empty " +
         "the base index — delete the layout instead of removing every document"))
+  }
 
   /** [[minhashNearDupAgainst]] with the reference side PREBUILT: the
     * corpus pays its signature pass, the reference contributes its
     * stored band rows to the candidate equi-join and its stored
-    * shingles to the bounded verify. Output contract identical to the
+    * signatures and shingles to the estimate and the bounded verify. Output contract identical to the
     * two-frame operator (same candidate scheme by construction — the
     * index stores [[bandKeys]] rows).
     */
@@ -938,21 +1051,16 @@ object Dedup {
     val a = if (broadcastProbe) F.broadcast(aRaw) else aRaw
     val b = index.bandRows.select(
       F.col("band"), F.col("bh"), F.col("doc_id").as("ref_id"))
-    // the stored band rows carry sig redundantly (×bands); band 0
-    // holds every reference doc exactly once, so this filter IS the
-    // slim (doc_id, sig) side — on the saved PARTITIONED BY band
-    // layout it prunes to one partition, no dedup shuffle
-    val sigsR = index.bandRows.where(F.col("band") === 0)
-      .select("doc_id", "sig")
     val candidates = bandedCandidates(
-      a, b, "doc_id", "ref_id", F.lit(true),
-      sigsC, sigsR, index.numHashes, estFloor, "index-minhash candidates")
+      a, b, "doc_id", "ref_id", F.lit(true), sigsC,
+      index.refShingles.select("doc_id", "sig"), index.numHashes, estFloor,
+      "index-minhash candidates")
     val small = candidates.count() <= BroadcastMaxCandidates
     val shC = shinglesFor(
       corpus, candidates.select("doc_id").distinct(), small,
       index.shingleLen)
     val candRef = candidates.select(F.col("ref_id").as("doc_id")).distinct()
-    val shR = index.refShingles.join(
+    val shR = index.refShingles.select("doc_id", "sh").join(
       if (small) F.broadcast(candRef) else candRef,
       Seq("doc_id"), "left_semi")
     val verified = verifyExactJaccard(candidates, "doc_id", "ref_id", shC, shR)
@@ -1745,4 +1853,22 @@ object Dedup {
         (F.col("rnk") > F.ceil(F.lit(dropFrac) * F.col("n_in_cluster")))
           .as("keep"))
   }
+}
+
+/** [[Dedup.shingles]] as a Catalyst expression: the shingles of
+  * [[Dedup.signed]], compiled into the generated code (the kernel is a
+  * static call), null for null text. */
+private[graft] final case class ShingleSet(child: Expression, n: Int)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_shingles"
+
+  override protected def nullSafeEval(text: Any): Any =
+    Dedup.shingleData(text.asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"graft.operators.Dedup$$.MODULE$$.shingleData($t, $n)")
+
+  override protected def withNewChildInternal(c: Expression): ShingleSet =
+    copy(child = c)
 }

@@ -305,10 +305,14 @@ private[graft] object SegmentTiers {
 
   // ---- the fold and the takedown, built on swap -------------------
 
-  /** One dir of a [[fold]]: `write(rows, merged, tmp)` stages the rows
-    * of the folded segments (seg column kept) as segment `merged`. */
+  /** One dir of a [[fold]]: `write(rows, merged, tmp, known)` stages the
+    * rows of the folded segments (seg column kept) as segment `merged`.
+    * `known` is their row count from the folded files' Parquet footers
+    * when it is at most `countUpTo` (the driver stops reading footers
+    * past it), None otherwise or when `countUpTo` is 0. */
   final case class FoldDir(live: Path, tmp: Path, old: Path,
-      write: (DataFrame, Long, String) => Unit)
+      write: (DataFrame, Long, String, Option[Long]) => Unit,
+      countUpTo: Long = 0L)
 
   /** The one fold: rewrite the committed segments (`seg <
     * maxSegExclusive`) of every dir in `dirs` as ONE merged segment and
@@ -318,21 +322,28 @@ private[graft] object SegmentTiers {
     * folds) rewrites only the [[select]] subset, explicit maintenance
     * calls fold everything eligible (one merged segment afterwards).
     * Every dir must hold seg leaves; the fold set comes from the first
-    * dir's listing. Returns the first dir's data-file count afterwards
+    * dir's listing. [[select]] weighs a segment by its bytes in the
+    * first dir, or by its rows there (from the Parquet footers) when
+    * `byRows`: a layout whose files hold a few narrow rows each is
+    * mostly Parquet's per-file overhead by size. Returns the first dir's data-file count afterwards
     * from a driver listing, [[dataFileCount]] (0 = nothing to fold). */
   def fold(spark: SparkSession, who: String, marker: Path,
-      dirs: Seq[FoldDir], maxSegExclusive: Long, tiered: Boolean): Int = {
+      dirs: Seq[FoldDir], maxSegExclusive: Long, tiered: Boolean,
+      byRows: Boolean = false): Int = {
     val fs = dirs.head.live.getFileSystem(spark.sessionState.newHadoopConf())
     resumeOrRefuse(fs, who, marker)
     val leaves = segLeaves(fs, dirs.head.live)
     if (leaves.isEmpty || dirs.tail.exists(d => !hasSegs(fs, d.live))) return 0
     val eligible = leaves.filter(_._1 < maxSegExclusive)
-    // fold-set selection on directory metadata: sizes (one content
-    // summary per seg dir, bounded by the cadence plus the geometric
-    // tier ladder) only when the tiered policy needs them
+    // fold-set selection on metadata (one content summary or one
+    // footer read per seg file, bounded by the cadence plus the
+    // geometric tier ladder), read only when the tiered policy needs it
+    def size(leaf: Path): Long =
+      if (byRows) footerRows(fs, Seq(leaf), Long.MaxValue).get
+      else fs.getContentSummary(leaf).getLength
     val foldIds =
       if (!tiered) eligible.map(_._1)
-      else select(eligible.map { case (id, p) => id -> fs.getContentSummary(p).getLength })
+      else select(eligible.map { case (id, p) => id -> size(p) })
     if (foldIds.isEmpty) return 0
     // the merged id must never collide with ANY existing segment —
     // surviving tiers included — nor with a future batch id (those are
@@ -340,28 +351,50 @@ private[graft] object SegmentTiers {
     val merged = math.min(-1L, leaves.map(_._1).min - 1L)
     val seg = F.col("seg").cast("long")
     val inFold = if (tiered) seg.isin(foldIds: _*) else seg < maxSegExclusive
+    val folded = foldIds.toSet
     dirs.foreach { d =>
       if (fs.exists(d.tmp)) fs.delete(d.tmp, true)
+      val known =
+        if (d.countUpTo <= 0L) None
+        else footerRows(fs, segLeaves(fs, d.live).collect {
+          case (id, p) if folded(id) => p }, d.countUpTo)
       d.write(spark.read.parquet(d.live.toString).where(inFold), merged,
-        d.tmp.toString)
+        d.tmp.toString, known)
     }
-    val folded = foldIds.toSet
     swap(fs, who, Some(marker),
       dirs.map(d => Move(d.live, d.old, Some(d.tmp), id => !folded(id))))
     dataFileCount(fs, dirs.head.live)
   }
 
+  /** The rows of the Parquet files under `leaves`, summed from their
+    * footers on the driver while the sum stays at most `upTo`; None
+    * past it. */
+  def footerRows(fs: FileSystem, leaves: Seq[Path], upTo: Long): Option[Long] = {
+    val conf = fs.getConf
+    val files = leaves.iterator.flatMap(dataFiles(fs, _))
+    var rows = 0L
+    while (rows <= upTo && files.hasNext) {
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(files.next(), conf))
+      try rows += in.getRecordCount finally in.close()
+    }
+    Some(rows).filter(_ <= upTo)
+  }
+
+  /** The files a Parquet read of `dir` lists (see [[dataFileCount]]). */
+  private def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    fs.listStatus(dir).iterator.flatMap { st =>
+      val name = st.getPath.getName
+      if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) Iterator.empty
+      else if (st.isDirectory) dataFiles(fs, st.getPath)
+      else Iterator(st)
+    }
+
   /** The files a Parquet read of `dir` lists, counted on the driver:
     * every file below it with no path component, below `dir`, that
     * Spark's file index hides (a `_` name without `=`, such as
     * `_SUCCESS`, or a `.` name, such as a checksum). */
-  def dataFileCount(fs: FileSystem, dir: Path): Int =
-    fs.listStatus(dir).iterator.map { st =>
-      val name = st.getPath.getName
-      if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) 0
-      else if (st.isDirectory) dataFileCount(fs, st.getPath)
-      else 1
-    }.sum
+  def dataFileCount(fs: FileSystem, dir: Path): Int = dataFiles(fs, dir).size
 
   /** The one staged anti-join takedown over `path`'s `dirs` (name,
     * partition columns): each readable dir — seg leaves for a

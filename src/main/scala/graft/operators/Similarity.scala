@@ -2890,16 +2890,18 @@ object Similarity {
         // segment task re-emits a file per touched cluster and the
         // "compaction" can leave the file count unchanged. Salted
         // within cluster (guide §2.5): a hot list's fold otherwise
-        // serializes behind one task.
-        (cur, merged, tmp) =>
+        // serializes behind one task. The row bound comes from the
+        // folded files' Parquet footers, so no count job runs.
+        (cur, merged, tmp, rows) =>
           SegmentTiers.saltedRepartition(
               cur.select("id", "vec", "cluster"), "cluster", Seq("id"),
-              targetFileRows.toLong)
+              targetFileRows.toLong, knownRows = rows)
             .withColumn("seg", F.lit(merged))
             .write.mode("overwrite")
             .option("maxRecordsPerFile", targetFileRows.toLong)
             .partitionBy("seg", "cluster")
-            .parquet(tmp))),
+            .parquet(tmp),
+        targetFileRows.toLong)),
       maxSegExclusive, tiered)
 
   /** Remove vectors from a PERSISTED IVF layout in place — the

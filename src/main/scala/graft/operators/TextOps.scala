@@ -1,6 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, and document
@@ -29,6 +35,23 @@ object TextOps {
     text.substring(b, e).split("\\s+", -1)
   }
 
+  /** Spark's `lower` under the default (UTF8_BINARY) collation, without
+    * its first-use cost: Spark's own `lower` initializes
+    * `CollationAwareUTF8String`, whose static initializer title-cases
+    * all 1,114,112 code points (2–3 s inside a fresh JVM's first
+    * query). Same result: full-ASCII text lowercases byte-wise, other
+    * text through ICU when `spark.sql.icu.caseMappings.enabled` is set
+    * and through the JVM's mapping when it is not — Spark's two
+    * branches. */
+  def lower(text: Column): Column =
+    Shim.column(LowerText(Shim.expression(text.cast("string"))))
+
+  private[graft] def lowerOf(s: UTF8String, icu: Boolean): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else if (icu)
+      UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString))
+    else s.toLowerCase
+
   /** Per-document token/char statistics.
     * Output: (doc_id, n_tokens, n_chars, n_chars_nospace,
     * avg_token_len, bpe_est) where bpe_est is the standard ~4
@@ -52,7 +75,7 @@ object TextOps {
     */
   def textQuality(docs: DataFrame): DataFrame = {
     val len = F.length(F.col("text")).cast("double")
-    val vowels = F.length(F.regexp_replace(F.lower(F.col("text")), "[^aeiou]", ""))
+    val vowels = F.length(F.regexp_replace(lower(F.col("text")), "[^aeiou]", ""))
     val spaces = F.length(F.col("text")) -
       F.length(F.regexp_replace(F.col("text"), "\\s", ""))
     val nTok = F.size(tokens(F.col("text"))).cast("double")
@@ -69,7 +92,7 @@ object TextOps {
     * whitespace-collapsed text — the exact-dedup key.
     */
   def fingerprint(text: Column): Column =
-    F.md5(F.lower(F.regexp_replace(F.trim(text), "\\s+", " ")))
+    F.md5(lower(F.regexp_replace(F.trim(text), "\\s+", " ")))
 
   /** BPE-style pre-tokenization count: runs of letters, runs of
     * digits, or single non-alphanumeric glyphs — the GPT-2 pretoken
@@ -90,7 +113,7 @@ object TextOps {
       minVowelRatio: Double = 0.2): DataFrame = {
     val t = tokens(F.col("text"))
     val noSpace = F.length(F.regexp_replace(F.col("text"), "\\s", ""))
-    val vowels = F.length(F.regexp_replace(F.lower(F.col("text")), "[^aeiou]", ""))
+    val vowels = F.length(F.regexp_replace(lower(F.col("text")), "[^aeiou]", ""))
     docs
       .where(F.size(t) >= minTokens)
       .where(noSpace.cast("double") / F.size(t) <= maxAvgTokenLen)
@@ -376,7 +399,7 @@ object TextOps {
     val nEllipsisEnd = cnt(F.size(
       F.filter(lines, l => F.rtrim(l).rlike("\\.\\.\\.$"))))
     val nAlpha = cnt(F.size(F.filter(toks, t => t.rlike("[A-Za-z]"))))
-    val toksLower = F.transform(toks, t => F.lower(t))
+    val toksLower = F.transform(toks, t => lower(t))
     val nStop = cnt(F.size(F.filter(
       F.typedLit(GopherStopwords), w => F.array_contains(toksLower, w))))
     val nSymbols = cnt(F.regexp_count(F.col("text"), F.lit("#"))) +
@@ -428,7 +451,7 @@ object TextOps {
     val kept = F.filter(lines, l =>
       F.rtrim(l).rlike("[.!?\"]$") &&
         F.size(F.split(F.trim(l), "\\s+")) >= minLineWords &&
-        !F.lower(l).rlike("javascript"))
+        !lower(l).rlike("javascript"))
     val textClean = F.array_join(kept, "\n")
     val nSentences =
       F.coalesce(F.regexp_count(textClean, F.lit("[.!?]")), F.lit(0L))
@@ -439,7 +462,7 @@ object TextOps {
       F.size(lines).cast("long").as("n_lines"),
       F.size(kept).cast("long").as("n_lines_kept"),
       nSentences.as("n_sentences"),
-      F.lower(raw).rlike("lorem ipsum").as("has_lorem"),
+      lower(raw).rlike("lorem ipsum").as("has_lorem"),
       raw.rlike("\\{").as("has_brace"))
       .withColumn("passes",
         !F.col("has_lorem") && !F.col("has_brace") &&
@@ -1431,4 +1454,25 @@ object TextOps {
       .when(F.array_contains(t, "的"), "zh")
       .otherwise("unk")
   }
+}
+
+/** [[TextOps.lower]] as a Catalyst expression, compiled into the
+  * generated code as a static call. The ICU flag is read when the
+  * expression is first evaluated or compiled, as Spark's `Lower`
+  * reads it. */
+private[graft] final case class LowerText(child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "graft_lower"
+
+  private lazy val icu = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override protected def nullSafeEval(text: Any): Any =
+    TextOps.lowerOf(text.asInstanceOf[UTF8String], icu)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"graft.operators.TextOps$$.MODULE$$.lowerOf($t, $icu)")
+
+  override protected def withNewChildInternal(c: Expression): LowerText =
+    copy(child = c)
 }

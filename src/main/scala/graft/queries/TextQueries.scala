@@ -863,7 +863,7 @@ private[graft] object TextQueries {
       val nt = F.size(TextOps.tokens(txt))
       val nsp = F.length(F.regexp_replace(txt, "\\s", "")).cast("double")
       val vow = F.length(
-        F.regexp_replace(F.lower(txt), "[^aeiou]", "")).cast("double")
+        F.regexp_replace(TextOps.lower(txt), "[^aeiou]", "")).cast("double")
       val lines = F.split(txt, "\n")
       val dupLine = F.lit(1.0) -
         F.size(F.array_distinct(lines)).cast("double") / F.size(lines)

@@ -14,13 +14,15 @@ import scala.collection.mutable
   * ([[StreamingOps.minhashGateBatch]], [[StreamingOps.embedGateBatch]]).
   *
   * A micro-batch within [[graft.core.DriverLocal.Bound]] is read by one
-  * job and decided on the driver: per-document values come from the
-  * same Column expressions the distributed path runs, folded at
-  * planning time over a `LocalRelation`; signatures and probe rows from
-  * the same per-row kernels; within-batch pairs are enumerated on the
-  * driver. Only the scans of stored state run as Spark jobs — the
-  * minhash gate's band scan (against the broadcast batch keys) and
-  * candidate-shingle scan, the embed gate's probed-lists scan (against
+  * job and decided on the driver: fingerprints and band keys come from
+  * the same Column expressions the distributed path runs, folded at
+  * planning time over a `LocalRelation`; signatures, shingle sets and
+  * probe rows from the same per-row kernels ([[Dedup.signed]], once per
+  * document); within-batch pairs are enumerated on the driver. Only the
+  * scans of stored state run as Spark jobs — the minhash gate's band
+  * scan (its slim band rows against the broadcast batch keys, returning
+  * distinct (doc, ref) pairs) and the scan of the candidate refs'
+  * stored (sig, sh) rows, the embed gate's probed-lists scan (against
   * the broadcast probe rows) — and what they return is finished on the
   * driver with the same expressions. The writes land the decided rows
   * through the distributed path's own writers, so partition values and
@@ -67,14 +69,19 @@ private[streaming] object GateLocal {
         .select(Dedup.bandHashes(F.col("sig"), numHashes, bands)))
       .map(_.getArray(0).toIntArray())
 
+  private val sigType = ArrayType(LongType, false)
+  private val shType = ArrayType(StringType, false)
+
   /** Driver-side [[StreamingOps.minhashGateBatch]] over the batch's
     * `rows` (its `schema` plus the long id [[read]] appends). Same
     * stages and rules as the distributed path: exact keepers (smallest
     * doc_id per fingerprint), within-batch near-dup losers (16 × 4
     * bands over 64 lanes, est floor 3/4·t, exact Jaccard ≥ t, the
     * larger id loses), then losers against the stored state (its own
-    * width and banding), then the writes. False, with nothing written,
-    * when a stage is over the bound. */
+    * width and banding), then the writes. Each exact keeper is signed
+    * and shingled once ([[Dedup.signed]]); the writer receives the
+    * decided (doc_id, sig, sh) rows. False, with nothing written, when
+    * a stage is over the bound. */
   def minhash(spark: SparkSession, rows: Array[InternalRow],
       schema: StructType, batchId: Long, indexPath: String,
       outPath: String, t: Double, state: Dedup.MinhashIndex,
@@ -82,10 +89,9 @@ private[streaming] object GateLocal {
     val len = state.shingleLen
     val batch = Shim.localFrame(spark,
       schema.add("__id", LongType, nullable = false), rows.toSeq)
-    // per document, batch order: id, fingerprint, text, shingle set
+    // per document, batch order: id, fingerprint, text
     val docs = DriverLocal.folded(batch.select(F.col("__id"),
-      TextOps.fingerprint(F.col("text")), F.col("text"),
-      Dedup.shingles(F.col("text"), len))).toArray
+      TextOps.fingerprint(F.col("text")), F.col("text"))).toArray
     val id = docs.map(_.getLong(0))
     // exact stage: the smallest id per fingerprint (null text is one
     // group, as under groupBy)
@@ -94,10 +100,10 @@ private[streaming] object GateLocal {
     val exact = docs.indices.filter(keeper).sortBy(id(_))
     // null text carries no signature (minhashSignatures' rule)
     val signed = exact.filter(i => !docs(i).isNullAt(2))
-    def signatures(width: Int, of: Seq[Int]): Map[Int, Array[Long]] =
-      of.map(i => i -> Dedup.signatureOf(
-        docs(i).getUTF8String(2).toString, len, width)).toMap
-    val sig64 = signatures(64, signed)
+    def text(i: Int) = docs(i).getUTF8String(2).toString
+    val kernel = signed.map(i => i -> Dedup.signed(text(i), len, 64)).toMap
+    val sig64 = kernel.map { case (i, k) => i -> k._1 }
+    val sh = kernel.map { case (i, k) => i -> Dedup.shArray(k._2) }
 
     // within-batch: pairs sharing a (band, key) bucket, smaller id first
     val within = graft.core.Debug.timed(s"mgate[$batchId] within-batch") {
@@ -106,13 +112,11 @@ private[streaming] object GateLocal {
       for ((_, d) <- signed.zipWithIndex; b <- 0 until 16)
         buckets.getOrElseUpdate((b, bh(d)(b)), mutable.ArrayBuffer.empty) += d
       val payload = signed.map(i => InternalRow(id(i),
-        sigArray(sig64(i)), docs(i).getArray(3))).toArray
+        sigArray(sig64(i)), sh(i))).toArray
       val pairSchema = StructType(Seq(
         StructField("doc_a", LongType), StructField("doc_b", LongType),
-        StructField("sig_a", ArrayType(LongType, false)),
-        StructField("sig_b", ArrayType(LongType, false)),
-        StructField("sh_a", ArrayType(StringType, false)),
-        StructField("sh_b", ArrayType(StringType, false))))
+        StructField("sig_a", sigType), StructField("sig_b", sigType),
+        StructField("sh_a", shType), StructField("sh_b", shType)))
       DriverLocal.pairs(spark, payload,
           buckets.valuesIterator.map(_.toArray).toSeq, pairSchema,
           (p: InternalRow, q: InternalRow) => InternalRow(p.getLong(0),
@@ -134,48 +138,50 @@ private[streaming] object GateLocal {
     // against the stored state, at its own width and banding
     val width = state.numHashes
     val withinSigned = within.filter(i => !docs(i).isNullAt(2))
-    val sigW = if (width == 64) sig64 else signatures(width, withinSigned)
+    val sigW = if (width == 64) sig64
+      else withinSigned.map(i => i -> Dedup.signed(text(i), len, width)._1).toMap
     val rejected = graft.core.Debug.timed(s"mgate[$batchId] against state") {
       val bh = bandHashesOf(spark, withinSigned.map(sigW), width, state.bands)
       val keys = for ((i, d) <- withinSigned.zipWithIndex;
           b <- 0 until state.bands)
-        yield InternalRow(b, bh(d)(b), id(i), sigArray(sigW(i)))
+        yield InternalRow(b, bh(d)(b), id(i))
       // ONE scan of the stored band rows against the broadcast keys:
-      // the distinct (doc, ref) pairs whose signature agreement passes
-      // the floor
+      // the distinct (doc, ref) pairs sharing a bucket
       val keyFrame = Shim.localFrame(spark, StructType(Seq(
         StructField("band", IntegerType), StructField("bh", IntegerType),
-        StructField("doc_id", LongType),
-        StructField("sig_a", ArrayType(LongType, false)))), keys)
+        StructField("doc_id", LongType))), keys)
       val cand =
         if (keys.isEmpty) Some(Array.empty[InternalRow])
         else DriverLocal.collect(state.bandRows
             .select(F.col("band"), F.col("bh"),
               // stored ids keep the indexed corpus's id type
-              F.col("doc_id").cast("long").as("ref_id"),
-              F.col("sig").as("sig_b"))
+              F.col("doc_id").cast("long").as("ref_id"))
             .join(F.broadcast(keyFrame), Seq("band", "bh"))
-            .where(Dedup.sigAgreement(F.col("sig_a"), F.col("sig_b"), width) >=
-              0.75 * t)
             .select("doc_id", "ref_id"), bound, distinct = true)
-      // ONE scan for the candidate refs' stored shingles, then the exact
-      // Jaccard of every candidate pair on the driver
+      // ONE scan for the candidate refs' stored signatures and
+      // shingles, then the est floor and the exact Jaccard of every
+      // candidate pair on the driver
       cand.map(_.map(r => (r.getLong(0), r.getLong(1))).distinct).flatMap {
         case c if c.isEmpty => Some(Set.empty[Long])
         case c => DriverLocal.collect(state.refShingles
               .where(F.col("doc_id").isin(c.map(_._2).distinct.toSeq: _*))
-              .select(F.col("doc_id").cast("long"), F.col("sh")), bound)
+              .select(F.col("doc_id").cast("long"), F.col("sig"), F.col("sh")),
+              bound)
             .map { storedRows =>
               val stored = storedRows.groupBy(_.getLong(0))
-              val sh = within.map(i => id(i) -> docs(i).getArray(3)).toMap
+              val of = withinSigned.map(i => id(i) -> i).toMap
               val pairs = for ((d, r) <- c.toSeq;
                   s <- stored.getOrElse(r, Array.empty[InternalRow]))
-                yield InternalRow(d, sh(d), s.getArray(1))
+                yield InternalRow(d, sigArray(sigW(of(d))), s.getArray(1),
+                  sh(of(d)), s.getArray(2))
               DriverLocal.folded(Shim.localFrame(spark, StructType(Seq(
                     StructField("doc_id", LongType),
-                    StructField("sh_a", ArrayType(StringType, false)),
-                    StructField("sh_b", ArrayType(StringType, false)))), pairs)
-                  .where(Dedup.exactJaccard(F.col("sh_a"), F.col("sh_b")) >= t)
+                    StructField("sig_a", sigType), StructField("sig_b", sigType),
+                    StructField("sh_a", shType), StructField("sh_b", shType))),
+                  pairs)
+                  .where(Dedup.sigAgreement(F.col("sig_a"), F.col("sig_b"),
+                      width) >= 0.75 * t &&
+                    Dedup.exactJaccard(F.col("sh_a"), F.col("sh_b")) >= t)
                   .select("doc_id"))
                 .map(_.getLong(0)).toSet
             }
@@ -191,13 +197,12 @@ private[streaming] object GateLocal {
       val survivors = Shim.localFrame(spark, batch.schema,
           rows.indices.filter(admitted).map(rows(_)))
         .select(("doc_id" +: cols.filter(_ != "doc_id")).map(F.col): _*)
-      val sigsS = Shim.localFrame(spark, StructType(Seq(
-          StructField("doc_id", LongType, nullable = false),
-          StructField("sig", ArrayType(LongType, false)))),
-        within.filter(i => admitted(i) && !docs(i).isNullAt(2))
-          .map(i => InternalRow(id(i), sigArray(sigW(i)))))
-      Dedup.minhashAppendSegmentFromSigs(survivors, sigsS, indexPath,
-        batchId, len, width, state.bands, Some(admitted.size.toLong))
+      val decided = Shim.localFrame(spark, Dedup.SignedSchema,
+        within.filter(admitted).map(i =>
+          if (docs(i).isNullAt(2)) InternalRow(id(i), null, null)
+          else InternalRow(id(i), sigArray(sigW(i)), sh(i))))
+      Dedup.minhashAppendSigned(decided, indexPath, batchId, width,
+        state.bands, Some(admitted.size.toLong))
       StreamingOps.writeGateOutput(survivors, batchId, outPath)
     }
     true

@@ -221,9 +221,12 @@ object StreamingOps {
     * persisted base index PLUS every earlier batch's survivors
     * ([[graft.operators.Dedup.minhashIndexLoadWithAppends]] ∪
     * [[graft.operators.Dedup.dedupAgainstIndex]]), and (3) its
-    * survivors' band rows + shingles land as an idempotent
-    * `seg=<batchId>` append segment beside the base layout while the
-    * surviving documents append to `outPath` the same way. Unlike
+    * survivors' band rows and (doc_id, sig, sh) rows land as an
+    * idempotent `seg=<batchId>` append segment beside the base layout
+    * while the surviving documents append to `outPath` the same way.
+    * The layout must be format 2
+    * ([[graft.operators.Dedup.minhashIndexSave]]); a format-1 layout is
+    * refused before the first batch writes. Unlike
     * [[nearDupAgainstCorpus]] (static reference, flags only), the gate
     * ADMITS and REMEMBERS: a duplicate arriving two days after its
     * original is still caught, across restarts, because the state is
@@ -246,11 +249,11 @@ object StreamingOps {
     * its query table) is read by one job and decided on the driver:
     * exact and within-batch near-dup stages on the driver's copy, then
     * one scan of the stored band rows against the broadcast batch keys
-    * and one scan of the candidate refs' stored shingles — about 8
-    * Spark jobs a batch with its writes, where the distributed stages
-    * ran ~47 (a job costs scheduling and planning, which dominates a
-    * micro-batch of a few hundred rows). A larger batch runs the
-    * distributed stages, after a read job that stops early (each of its
+    * and one scan of the candidate refs' stored signatures and
+    * shingles — about 8 Spark jobs a batch with its writes, where the
+    * distributed stages ran ~47 (a job costs scheduling and planning,
+    * which dominates a micro-batch of a few hundred rows). A larger
+    * batch runs the distributed stages, after a read job that stops early (each of its
     * tasks stops at its share of the bound) — as does a batch whose
     * within-batch stage has over `DriverLocal.MaxPairs` candidate pairs
     * or whose state scan returns more than the bound; those fall back
@@ -259,10 +262,10 @@ object StreamingOps {
     * 100 TB shape: per batch the stream side pays one signature pass
     * over its own rows; the state side contributes stored band rows to
     * the candidate equi-join (pruned by band on the saved layout) and
-    * stored shingles to the bounded verify — cost scales with the
-    * batch's candidate mass, not with corpus size, on either path: the
-    * driver path bounds what the driver holds by the batch, and a
-    * backfill replayed through the gate takes the distributed stages.
+    * stored signatures and shingles to the bounded verify — cost scales
+    * with the batch's candidate mass, not with corpus size, on either
+    * path: the driver path bounds what the driver holds by the batch,
+    * and a backfill replayed through the gate takes the distributed stages.
     * State on disk grows with admitted documents only (duplicates are
     * never appended).
     *
@@ -334,11 +337,12 @@ object StreamingOps {
       state: graft.operators.Dedup.MinhashIndex): Unit = {
     import graft.operators.Dedup
     // ONE signature pass per micro-batch, shared by the within-batch
-    // self-dedup, the against-state probe, and the append segment
-    // (signatures are a pure function of the document, so the shared
-    // frame is bit-identical to the three recomputes it replaces —
-    // which, with the exact-dedup fingerprint shuffle re-run per
-    // consumer, were the dominant per-batch CPU at the bench point).
+    // self-dedup and the against-state probe (signatures are a pure
+    // function of the document, so the shared frame is bit-identical
+    // to the recomputes it replaces — which, with the exact-dedup
+    // fingerprint shuffle re-run per consumer, were the dominant
+    // per-batch CPU at the bench point). The append segment signs and
+    // shingles the survivors in one kernel pass of its own.
     // Sharing requires the within-batch scheme's lane count (64, the
     // dedupCorpus contract) to equal the saved index's; any other
     // stored width falls back to the original per-stage passes with
@@ -381,18 +385,9 @@ object StreamingOps {
     // must not leak the three per-batch persisted frames across batch
     // retries in a long-running stream JVM
     try {
-      val nSurvivors = Some(survivorsCached.count())
-      if (shareSigs) {
-        // survivor signatures = the shared pass filtered to admitted ids
-        val sigsS = batchCaches(1).join(
-          survivorsCached.select("doc_id"), Seq("doc_id"), "left_semi")
-        Dedup.minhashAppendSegmentFromSigs(
-          survivorsCached, sigsS, indexPath, batchId,
-          state.shingleLen, state.numHashes, state.bands, nSurvivors)
-      } else
-        Dedup.minhashAppendSegment(
-          survivorsCached, indexPath, batchId,
-          state.shingleLen, state.numHashes, state.bands, nSurvivors)
+      Dedup.minhashAppendSegment(survivorsCached, indexPath, batchId,
+        state.shingleLen, state.numHashes, state.bands,
+        Some(survivorsCached.count()))
       writeGateOutput(survivorsCached, batchId, outPath)
     } finally {
       survivorsCached.unpersist(blocking = false)
@@ -1130,7 +1125,7 @@ object StreamingOps {
         new org.apache.hadoop.fs.Path(path),
         new org.apache.hadoop.fs.Path(path + "_tmp"),
         new org.apache.hadoop.fs.Path(path + "_old"),
-        (cur, merged, tmp) => fold(cur.drop("seg"))
+        (cur, merged, tmp, _) => fold(cur.drop("seg"))
           .withColumn("seg", F.lit(merged))
           .coalesce(1)
           .write.mode("overwrite").partitionBy("seg")

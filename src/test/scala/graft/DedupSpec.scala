@@ -31,6 +31,107 @@ class DedupSpec extends SparkSpec {
     assert(groups.forall(_.getLong(2) < 200L))
   }
 
+  /** The interpreted Column form of [[Dedup.shingles]] that the
+    * compiled kernel replaced: split once here, then once more per
+    * shingle inside the `transform` lambda. */
+  private def transformShingles(text: org.apache.spark.sql.Column, n: Int) = {
+    val t = graft.operators.TextOps.tokens(text)
+    F.array_distinct(
+      F.when(F.size(t) < n, F.array(F.concat_ws(" ", t)))
+        .otherwise(F.transform(
+          F.sequence(F.lit(0), F.size(t) - n),
+          idx => F.concat_ws(" ", F.slice(t, idx + 1, F.lit(n))))))
+  }
+
+  test("the compiled shingle kernel equals the array_distinct/transform expression") {
+    val s = spark
+    import s.implicits._
+    val edge = Seq[(Long, String)](
+      (1001L, ""), (1002L, "two words"), (1003L, "a b c a b c a b c a b"),
+      (1004L, "   spaces around  both ends   "),
+      (1005L, "\ttab lead\tand\nnew lines\n end\n"), (1006L, "one"),
+      (1007L, null), (1008L, "x x x x x x"), (1009L, " \t "))
+      .toDF("doc_id", "text").unionByName(docs)
+    for (n <- Seq(1, 3, 5)) {
+      val kernel = edge.select(F.col("doc_id"), Dedup.shingles(F.col("text"), n))
+      val column = edge.select(F.col("doc_id"), transformShingles(F.col("text"), n))
+      // once folded on the driver (a local frame), once compiled in a
+      // whole-stage plan (the frame behind a shuffle)
+      for (f <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+          identity, _.repartition(3))) {
+        def rows(df: org.apache.spark.sql.DataFrame) = f(df).collect()
+          .map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
+        assert(rows(kernel) == rows(column), s"shingles diverge at n = $n")
+      }
+    }
+    val nulls = edge.where(F.col("doc_id") === 1007L)
+      .select(Dedup.shingles(F.col("text"), 3)).collect()
+    assert(nulls.map(_.isNullAt(0)).toSeq == Seq(true), "null text gives null shingles")
+  }
+
+  test("an old-format layout loads for the batch faces; its writers refuse it") {
+    val s = spark
+    import s.implicits._
+    val reference = docs.where(F.col("doc_id") < 100)
+      .unionByName(Seq[(Long, String)]((999L, null)).toDF("doc_id", "text"))
+    val corpus = docs.where(F.col("doc_id") >= 100).unionByName(Seq(
+        (300L, "totally novel content about nothing seen before"),
+        (301L, "another unseen document with fresh words entirely"))
+      .toDF("doc_id", "text"))
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // format 1, as its writer left it: the whole signature in every
+    // band row, (doc_id, sh) shingles, no "format" in meta.json
+    val old = tmp("graft-mh-v1")
+    Dedup.bandKeys(Dedup.minhashSignatures(reference, 3, 64), 64, 16)
+      .select("band", "bh", "doc_id", "sig")
+      .write.partitionBy("band").parquet(s"$old/bands")
+    reference.select(F.col("doc_id"), transformShingles(F.col("text"), 3).as("sh"))
+      .write.parquet(s"$old/shingles")
+    graft.api.ArrowSpaceModel.writeSidecar(s, s"$old/meta.json",
+      """{"numHashes":64,"bands":16,"shingleLen":3}""")
+    val cur = tmp("graft-mh-v2")
+    val built = Dedup.minhashIndexBuild(reference)
+    Dedup.minhashIndexSave(built, cur)
+    Dedup.minhashIndexRelease(built)
+    assert(!s.read.parquet(s"$cur/bands").columns.contains("sig"))
+
+    def survivors(dir: String) =
+      Dedup.dedupAgainstIndex(corpus, Dedup.minhashIndexLoad(s, dir))
+        .collect().map(_.toString).sorted.toSeq
+    val want = survivors(cur)
+    assert(want.length == 2, want)
+    assert(survivors(old) == want, "the old layout dedups differently")
+    def state(idx: Dedup.MinhashIndex) =
+      (idx.bandRows.select("band", "bh", "doc_id").collect().map(_.toString)
+        .sorted.toSeq,
+        idx.refShingles.select("doc_id", "sig", "sh").collect().map(r =>
+          (r.getLong(0), Option(r.getSeq[Long](1)), Option(r.getSeq[String](2))))
+          .sortBy(_._1).toSeq)
+    assert(state(Dedup.minhashIndexLoadWithAppends(s, old)) ==
+      state(Dedup.minhashIndexLoad(s, cur)), "the old layout loads another state")
+
+    // every writer refuses it, naming the migration, and writes nothing
+    val out = tmp("graft-mh-v1-out")
+    def refused(body: => Any) = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("minhashIndexSave(minhashIndexLoad("), e.getMessage)
+    }
+    refused(graft.streaming.StreamingOps.minhashGateBatch(
+      corpus, 0L, old, out, 0.8))
+    refused(Dedup.minhashCompactAppends(s, old))
+    refused(Dedup.minhashLayoutRemove(s, old, Seq(3L).toDF("doc_id")))
+    assert(new java.io.File(old).list().filterNot(_.startsWith(".")).sorted.toSeq ==
+      Seq("bands", "meta.json", "shingles"), "a refused writer touched the layout")
+    assert(new java.io.File(out).list().isEmpty)
+    // the named migration gives the current layout
+    val migrated = tmp("graft-mh-mig")
+    Dedup.minhashIndexSave(Dedup.minhashIndexLoad(s, old), migrated)
+    assert(state(Dedup.minhashIndexLoad(s, migrated)) ==
+      state(Dedup.minhashIndexLoad(s, cur)))
+    graft.streaming.StreamingOps.minhashGateBatch(corpus, 0L, migrated, out, 0.8)
+    assert(s.read.parquet(out).count() == want.length)
+  }
+
   test("compiled minhash signatures are bit-identical to the Column formulation") {
     // texts with the trim/split edge cases the Scala replica must
     // honor: leading/trailing non-space whitespace (Spark trim strips
@@ -46,7 +147,7 @@ class DedupSpec extends SparkSpec {
     val all = docs.unionByName(edge)
     val fast = Dedup.minhashSignatures(all, 3, 64)
     val column = all
-      .select(F.col("doc_id").cast("long"), Dedup.shingles(F.col("text"), 3).as("sh"))
+      .select(F.col("doc_id").cast("long"), transformShingles(F.col("text"), 3).as("sh"))
       .withColumn("shh", F.transform(F.col("sh"), sh => F.xxhash64(sh)))
       .select(F.col("doc_id"), Dedup.minhashFromHashes(F.col("shh"), 64).as("sig"))
     val joined = fast.alias("f")

@@ -270,6 +270,37 @@ class GateParitySpec extends SparkSpec {
       s"$fallbackJobs jobs over the bound vs $localJobs within it")
   }
 
+  test("the minhash fold takes its row bound from the Parquet footers and runs no count job") {
+    val (base, batches) = minhashFixture
+    val index = tmp("graft-mfold-idx") + "/idx"
+    val built = Dedup.minhashIndexBuild(docFrame(base, "long"))
+    Dedup.minhashIndexSave(built, index)
+    Dedup.minhashIndexRelease(built)
+    val gated = copyDir(index)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.minhashGateBatch(docFrame(b, "long"), i.toLong, gated,
+        tmp("graft-mfold-out"), 0.8)
+    }
+    val (footers, counted) = (copyDir(gated), copyDir(gated))
+    val (n, footerJobs) = JobCount(spark.sparkContext)(
+      Dedup.minhashCompactAppends(spark, footers))
+    // the same fold with no bound at hand: the salted band write counts
+    // its rows per band first
+    val (m, countedJobs) = JobCount(spark.sparkContext)(
+      graft.operators.SegmentTiers.fold(spark, "counted fold",
+        graft.operators.SegmentTiers.swapMarker(s"$counted/bands"),
+        Dedup.minhashFoldDirs(spark, counted).map(_.copy(countUpTo = 0L)),
+        Long.MaxValue, tiered = false))
+    assert(n == m && n > 0)
+    assert(snapshot(footers, tmp("graft-mfold-none"), minhashDirs) ==
+      snapshot(counted, tmp("graft-mfold-none"), minhashDirs),
+      "the footer-bounded fold wrote other rows or files")
+    // the counted write's per-band count: its aggregation and the
+    // broadcast of the counts
+    assert(countedJobs - footerJobs == 2,
+      s"$footerJobs jobs with the footer bound, $countedJobs counted")
+  }
+
   // ---- jobs per batch ----------------------------------------------
 
   /** A 200-doc / 200-vector base and the second of two 51-row batches,
@@ -365,7 +396,7 @@ class GateParitySpec extends SparkSpec {
     val batch = fileBytes(StreamingOps.minhashGateBatch(
       mBatches(1).toDF("doc_id", "text"), 1L, mIndex, out, 0.8, distributed))
     // one decision's state reads over the same batch and state (the
-    // band scan, the band-0 signatures and the candidates' shingles);
+    // band scan and the candidates' stored signatures and shingles);
     // the whole batch, within-batch near-duplicates included, can only
     // raise the candidates, so the gate's own decision reads no more
     val once = fileBytes(Dedup.dedupAgainstIndex(

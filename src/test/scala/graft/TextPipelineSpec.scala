@@ -8,6 +8,27 @@ import org.apache.spark.sql.{functions => F}
   */
 class TextPipelineSpec extends SparkSpec {
 
+  test("TextOps.lower gives Spark's lower, ICU case mappings on and off") {
+    val s = spark
+    import s.implicits._
+    val texts = Seq("Plain ASCII Text", "İstanbul İİ", "ΟΔΟΣ ΣΟΦΟΣ Σ", "Straße STRASSE",
+      "MiXeD Ünïcödé ΣΑΣ 123 ǅ ǈ", "", null).toDF("text")
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val before = s.conf.getOption(key)
+    try for (icu <- Seq("true", "false")) {
+      s.conf.set(key, icu)
+      // once folded on the driver (a local frame), once compiled
+      for (f <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+          identity, _.repartition(2))) {
+        val got = f(texts).select(F.col("text"), F.lower(F.col("text")),
+            TextOps.lower(F.col("text"))).collect()
+        assert(got.length == 7)
+        got.foreach(r => assert(r.getString(1) == r.getString(2),
+          s"icu=$icu: ${r.getString(0)} -> ${r.getString(1)} vs ${r.getString(2)}"))
+      }
+    } finally before.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
   test("repetitionSignals: dup lines, dup tokens, top bigram share") {
     val s = spark
     import s.implicits._
