@@ -42,7 +42,7 @@ object Dedup {
       .agg(F.count("*").as("n_docs"), F.min("doc_id").as("keeper"))
 
   /** Word n-gram shingle set (distinct, first-occurrence order): the
-    * shingles of [[signed]], null for null text. */
+    * shingles [[signed]] signs ([[shingleSet]]), null for null text. */
   def shingles(text: Column, n: Int): Column =
     Shim.column(ShingleSet(Shim.expression(text.cast("string")), n))
 
@@ -84,14 +84,36 @@ object Dedup {
 
   /** The per-document kernel: one split of `text` ([[TextOps.tokensOf]],
     * the Column path's exact trim/split) gives its distinct
-    * `shingleLen`-word shingles, in first-occurrence order (the order
-    * `array_distinct` keeps), and their `numHashes` min-lanes. Text of
-    * fewer than `shingleLen` tokens is one shingle, its tokens joined.
-    * Run on the executors by [[minhashSignatures]], [[minhashSigned]]
-    * and [[shingles]], and on the driver by the streaming gates'
+    * `shingleLen`-word shingles ([[shingleSet]]) and their `numHashes`
+    * min-lanes. Run on the executors by [[minhashSignatures]] and
+    * [[minhashSigned]], and on the driver by the streaming gates'
     * bounded path, so every path signs a document with the same code. */
   private[graft] def signed(text: String, shingleLen: Int,
       numHashes: Int): (Array[Long], Array[UTF8String]) = {
+    val sh = shingleSet(text, shingleLen)
+    // inner xxhash64 state per shingle (string hash, then the long-lane
+    // rehash with the default seed) — shared by lanes
+    val inner = sh.map(u => XXH64.hashLong(XXH64.hashUTF8String(u, 42L), 42L))
+    val sig = new Array[Long](numHashes)
+    var j = 0
+    while (j < numHashes) {
+      var mn = Long.MaxValue
+      var i = 0
+      while (i < inner.length) {
+        val v = XXH64.hashInt(j, inner(i))
+        if (v < mn) mn = v
+        i += 1
+      }
+      sig(j) = mn
+      j += 1
+    }
+    (sig, sh)
+  }
+
+  /** The distinct `shingleLen`-word shingles of `text`, in
+    * first-occurrence order (the order `array_distinct` keeps). Text of
+    * fewer than `shingleLen` tokens is one shingle, its tokens joined. */
+  private def shingleSet(text: String, shingleLen: Int): Array[UTF8String] = {
     val toks = TextOps.tokensOf(text)
     val seen = new java.util.HashSet[UTF8String]
     val sh = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
@@ -115,29 +137,12 @@ object Dedup {
         i += 1
       }
     }
-    // inner xxhash64 state per shingle (string hash, then the long-lane
-    // rehash with the default seed) — shared by lanes
-    val inner = sh.iterator.map(u =>
-      XXH64.hashLong(XXH64.hashUTF8String(u, 42L), 42L)).toArray
-    val sig = new Array[Long](numHashes)
-    var j = 0
-    while (j < numHashes) {
-      var mn = Long.MaxValue
-      var i = 0
-      while (i < inner.length) {
-        val v = XXH64.hashInt(j, inner(i))
-        if (v < mn) mn = v
-        i += 1
-      }
-      sig(j) = mn
-      j += 1
-    }
-    (sig, sh.toArray)
+    sh.toArray
   }
 
-  /** [[signed]]'s shingles as an array column value. */
+  /** [[shingleSet]] as an array column value: [[shingles]]' kernel. */
   private[graft] def shingleData(text: UTF8String, n: Int): ArrayData =
-    shArray(signed(text.toString, n, 0)._2)
+    shArray(shingleSet(text.toString, n))
 
   private[graft] def shArray(sh: Array[UTF8String]): ArrayData =
     new GenericArrayData(sh.asInstanceOf[Array[Any]])
@@ -668,9 +673,9 @@ object Dedup {
     require(m.format == LayoutFormat,
       s"$who: $path is a format-${m.format} minhash layout (every band row " +
         "carries the whole signature), and writing to it would mix two " +
-        "formats in one layout. Migrate it first with " +
-        "minhashIndexSave(minhashIndexLoad(spark, oldPath), newPath) and " +
-        "point the writer at newPath.")
+        "formats in one layout. Migrate it first, append segments " +
+        "included, with minhashIndexSave(minhashIndexLoadWithAppends(" +
+        "spark, oldPath), newPath) and point the writer at newPath.")
     m
   }
 
@@ -936,28 +941,28 @@ object Dedup {
   private[graft] def minhashFoldDirs(
       spark: org.apache.spark.sql.SparkSession, path: String)
       : Seq[SegmentTiers.FoldDir] = {
-    def dir(name: String, countUpTo: Long)(
-        write: (DataFrame, Long, String, Option[Long]) => Unit) =
+    def dir(name: String)(
+        write: (DataFrame, Long, String, Long => Option[Long]) => Unit) =
       SegmentTiers.FoldDir(new org.apache.hadoop.fs.Path(s"$path/$name"),
         new org.apache.hadoop.fs.Path(s"$path/${name}_tmp"),
-        new org.apache.hadoop.fs.Path(s"$path/${name}_old"), write, countUpTo)
+        new org.apache.hadoop.fs.Path(s"$path/${name}_old"), write)
     Seq(
       // band-aligned shuffle so each band leaf gets one file — the same
       // reasoning as the IVF fold's cluster repartition. Salted within
       // band (guide §2.5): the band key space is only `bands` values
       // wide, so an unsalted fold of a big corpus runs on ≤ bands tasks
       // with each band's whole history behind one of them.
-      dir("bands_appends", bandFoldTargetRows) { (cur, merged, tmp, rows) =>
+      dir("bands_appends") { (cur, merged, tmp, rowsUpTo) =>
         SegmentTiers.saltedRepartition(
-            cur.select("band", "bh", "doc_id"), "band",
-            Seq("doc_id"), bandFoldTargetRows, knownRows = rows)
+            cur.select("band", "bh", "doc_id"), "band", Seq("doc_id"),
+            bandFoldTargetRows, knownRows = rowsUpTo(bandFoldTargetRows))
           .withColumn("seg", F.lit(merged))
           .write.mode("overwrite")
           .option("maxRecordsPerFile", bandFoldTargetRows)
           .partitionBy("seg", "band")
           .parquet(tmp)
       },
-      dir("shingles_appends", 0L) { (cur, merged, tmp, _) =>
+      dir("shingles_appends") { (cur, merged, tmp, _) =>
         cur.select("doc_id", "sig", "sh")
           .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
           .withColumn("seg", F.lit(merged))

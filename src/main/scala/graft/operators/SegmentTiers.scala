@@ -305,14 +305,14 @@ private[graft] object SegmentTiers {
 
   // ---- the fold and the takedown, built on swap -------------------
 
-  /** One dir of a [[fold]]: `write(rows, merged, tmp, known)` stages the
-    * rows of the folded segments (seg column kept) as segment `merged`.
-    * `known` is their row count from the folded files' Parquet footers
-    * when it is at most `countUpTo` (the driver stops reading footers
-    * past it), None otherwise or when `countUpTo` is 0. */
+  /** One dir of a [[fold]]: `write(rows, merged, tmp, rowsUpTo)` stages
+    * the rows of the folded segments (seg column kept) as segment
+    * `merged`. `rowsUpTo(n)` is their row count from the folded files'
+    * Parquet footers when it is at most `n`, None past it (the driver
+    * stops reading footers there); nothing is read unless it is called,
+    * so a salted write passes its own target rows. */
   final case class FoldDir(live: Path, tmp: Path, old: Path,
-      write: (DataFrame, Long, String, Option[Long]) => Unit,
-      countUpTo: Long = 0L)
+      write: (DataFrame, Long, String, Long => Option[Long]) => Unit)
 
   /** The one fold: rewrite the committed segments (`seg <
     * maxSegExclusive`) of every dir in `dirs` as ONE merged segment and
@@ -325,8 +325,9 @@ private[graft] object SegmentTiers {
     * dir's listing. [[select]] weighs a segment by its bytes in the
     * first dir, or by its rows there (from the Parquet footers) when
     * `byRows`: a layout whose files hold a few narrow rows each is
-    * mostly Parquet's per-file overhead by size. Returns the first dir's data-file count afterwards
-    * from a driver listing, [[dataFileCount]] (0 = nothing to fold). */
+    * mostly Parquet's per-file overhead by size. Returns the first
+    * dir's data-file count afterwards from a driver listing,
+    * [[dataFileCount]] (0 = nothing to fold). */
   def fold(spark: SparkSession, who: String, marker: Path,
       dirs: Seq[FoldDir], maxSegExclusive: Long, tiered: Boolean,
       byRows: Boolean = false): Int = {
@@ -354,12 +355,10 @@ private[graft] object SegmentTiers {
     val folded = foldIds.toSet
     dirs.foreach { d =>
       if (fs.exists(d.tmp)) fs.delete(d.tmp, true)
-      val known =
-        if (d.countUpTo <= 0L) None
-        else footerRows(fs, segLeaves(fs, d.live).collect {
-          case (id, p) if folded(id) => p }, d.countUpTo)
+      def rowsUpTo(n: Long) = footerRows(fs, segLeaves(fs, d.live).collect {
+        case (id, p) if folded(id) => p }, n)
       d.write(spark.read.parquet(d.live.toString).where(inFold), merged,
-        d.tmp.toString, known)
+        d.tmp.toString, rowsUpTo)
     }
     swap(fs, who, Some(marker),
       dirs.map(d => Move(d.live, d.old, Some(d.tmp), id => !folded(id))))

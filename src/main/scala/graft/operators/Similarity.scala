@@ -2892,16 +2892,16 @@ object Similarity {
         // within cluster (guide §2.5): a hot list's fold otherwise
         // serializes behind one task. The row bound comes from the
         // folded files' Parquet footers, so no count job runs.
-        (cur, merged, tmp, rows) =>
+        (cur, merged, tmp, rowsUpTo) =>
           SegmentTiers.saltedRepartition(
               cur.select("id", "vec", "cluster"), "cluster", Seq("id"),
-              targetFileRows.toLong, knownRows = rows)
+              targetFileRows.toLong,
+              knownRows = rowsUpTo(targetFileRows.toLong))
             .withColumn("seg", F.lit(merged))
             .write.mode("overwrite")
             .option("maxRecordsPerFile", targetFileRows.toLong)
             .partitionBy("seg", "cluster")
-            .parquet(tmp),
-        targetFileRows.toLong)),
+            .parquet(tmp))),
       maxSegExclusive, tiered)
 
   /** Remove vectors from a PERSISTED IVF layout in place — the

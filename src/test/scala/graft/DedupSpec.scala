@@ -89,47 +89,65 @@ class DedupSpec extends SparkSpec {
       .write.parquet(s"$old/shingles")
     graft.api.ArrowSpaceModel.writeSidecar(s, s"$old/meta.json",
       """{"numHashes":64,"bands":16,"shingleLen":3}""")
+    // one streamed format-1 segment, as the format-1 gate wrote it: a
+    // copy of a corpus document under a new id
+    val seg = Seq((500L, "totally novel content about nothing seen before"))
+      .toDF("doc_id", "text")
+    Dedup.bandKeys(Dedup.minhashSignatures(seg, 3, 64), 64, 16)
+      .select("band", "bh", "doc_id", "sig").withColumn("seg", F.lit(7L))
+      .write.partitionBy("seg", "band").parquet(s"$old/bands_appends")
+    seg.select(F.col("doc_id"), transformShingles(F.col("text"), 3).as("sh"))
+      .withColumn("seg", F.lit(7L))
+      .write.partitionBy("seg").parquet(s"$old/shingles_appends")
     val cur = tmp("graft-mh-v2")
     val built = Dedup.minhashIndexBuild(reference)
     Dedup.minhashIndexSave(built, cur)
     Dedup.minhashIndexRelease(built)
+    Dedup.minhashAppendSegment(seg, cur, 7L, 3, 64, 16)
     assert(!s.read.parquet(s"$cur/bands").columns.contains("sig"))
 
-    def survivors(dir: String) =
-      Dedup.dedupAgainstIndex(corpus, Dedup.minhashIndexLoad(s, dir))
-        .collect().map(_.toString).sorted.toSeq
-    val want = survivors(cur)
+    def survivors(idx: Dedup.MinhashIndex) =
+      Dedup.dedupAgainstIndex(corpus, idx).collect().map(_.toString).sorted.toSeq
+    val want = survivors(Dedup.minhashIndexLoad(s, cur))
     assert(want.length == 2, want)
-    assert(survivors(old) == want, "the old layout dedups differently")
+    assert(survivors(Dedup.minhashIndexLoad(s, old)) == want,
+      "the old layout dedups differently")
+    val wantAll = survivors(Dedup.minhashIndexLoadWithAppends(s, cur))
+    assert(wantAll.length == 1, wantAll)
+    assert(survivors(Dedup.minhashIndexLoadWithAppends(s, old)) == wantAll,
+      "the old layout's segment dedups differently")
     def state(idx: Dedup.MinhashIndex) =
       (idx.bandRows.select("band", "bh", "doc_id").collect().map(_.toString)
         .sorted.toSeq,
         idx.refShingles.select("doc_id", "sig", "sh").collect().map(r =>
           (r.getLong(0), Option(r.getSeq[Long](1)), Option(r.getSeq[String](2))))
           .sortBy(_._1).toSeq)
-    assert(state(Dedup.minhashIndexLoadWithAppends(s, old)) ==
-      state(Dedup.minhashIndexLoad(s, cur)), "the old layout loads another state")
+    val oldState = state(Dedup.minhashIndexLoadWithAppends(s, old))
+    assert(oldState == state(Dedup.minhashIndexLoadWithAppends(s, cur)),
+      "the old layout loads another state")
 
     // every writer refuses it, naming the migration, and writes nothing
     val out = tmp("graft-mh-v1-out")
     def refused(body: => Any) = {
       val e = intercept[IllegalArgumentException](body)
-      assert(e.getMessage.contains("minhashIndexSave(minhashIndexLoad("), e.getMessage)
+      assert(e.getMessage.contains("minhashIndexSave(minhashIndexLoadWithAppends("),
+        e.getMessage)
     }
     refused(graft.streaming.StreamingOps.minhashGateBatch(
-      corpus, 0L, old, out, 0.8))
+      corpus, 8L, old, out, 0.8))
     refused(Dedup.minhashCompactAppends(s, old))
     refused(Dedup.minhashLayoutRemove(s, old, Seq(3L).toDF("doc_id")))
     assert(new java.io.File(old).list().filterNot(_.startsWith(".")).sorted.toSeq ==
-      Seq("bands", "meta.json", "shingles"), "a refused writer touched the layout")
+      Seq("bands", "bands_appends", "meta.json", "shingles", "shingles_appends"),
+      "a refused writer touched the layout")
     assert(new java.io.File(out).list().isEmpty)
-    // the named migration gives the current layout
+    // the named migration gives the current layout, the segment's
+    // document included
     val migrated = tmp("graft-mh-mig")
-    Dedup.minhashIndexSave(Dedup.minhashIndexLoad(s, old), migrated)
-    assert(state(Dedup.minhashIndexLoad(s, migrated)) ==
-      state(Dedup.minhashIndexLoad(s, cur)))
-    graft.streaming.StreamingOps.minhashGateBatch(corpus, 0L, migrated, out, 0.8)
-    assert(s.read.parquet(out).count() == want.length)
+    Dedup.minhashIndexSave(Dedup.minhashIndexLoadWithAppends(s, old), migrated)
+    assert(state(Dedup.minhashIndexLoadWithAppends(s, migrated)) == oldState)
+    graft.streaming.StreamingOps.minhashGateBatch(corpus, 8L, migrated, out, 0.8)
+    assert(s.read.parquet(out).count() == wantAll.length)
   }
 
   test("compiled minhash signatures are bit-identical to the Column formulation") {
